@@ -815,21 +815,26 @@ def _min_label_components(pairs: DataFrame, max_rounds: int = 200) -> DataFrame:
     isn't VERIFIED within ``max_rounds`` — wrong labels must never
     return silently.
 
-    Edge lists at or below ``SPARK_GRAFT_LOCAL_CC_MAX`` rows are
-    labeled driver-side (one checkpoint + one collect + union-find —
-    the contraction loop's per-round Spark jobs were the slot's
-    dominant cost at fixture scale); larger graphs run the distributed
-    star contraction unchanged. Label equality between the two paths
-    is pytest-pinned (tests/test_llm_ops.py)."""
+    Integer-keyed edge lists at or below ``SPARK_GRAFT_LOCAL_CC_MAX``
+    rows are labeled driver-side (one checkpoint + one collect +
+    union-find — the contraction loop's per-round Spark jobs were the
+    slot's dominant cost at fixture scale); larger graphs, and keys of
+    any other dtype (the union-find compares ids as Python ints), run
+    the distributed star contraction unchanged. Label equality between
+    the two paths is pytest-pinned (tests/test_llm_ops.py)."""
+    from pyspark.sql import types as T
+
     # one checkpoint cuts the caller's (often expensive: shingle joins,
     # LSH verify) lineage ONCE, shared by whichever path runs
     pairs = pairs.localCheckpoint(eager=True)
-    if pairs.count() <= _LOCAL_CC_MAX:
+    integral = all(
+        isinstance(pairs.schema[c].dataType, T.IntegralType)
+        for c in ("doc_a", "doc_b")
+    )
+    if integral and pairs.count() <= _LOCAL_CC_MAX:
         pdf = pairs.select("doc_a", "doc_b").toPandas()
         if not pdf[["doc_a", "doc_b"]].isna().any().any():
             spark = pairs.sparkSession
-            from pyspark.sql import types as T
-
             dt = pairs.schema["doc_a"].dataType
             schema = T.StructType(
                 [

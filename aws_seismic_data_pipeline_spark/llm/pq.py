@@ -291,6 +291,11 @@ def sim_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "embedding")
         .collect()
     ]
+    if not queries:
+        raise ValueError(
+            "sim_topk_pq: the embeddings table has no query vectors "
+            "(vec_id < 10)"
+        )
     d = len(queries[0][1])
     C = train_codebooks(corpus, d)
     codes = encode_corpus(corpus, C).localCheckpoint(eager=True)

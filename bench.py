@@ -2,7 +2,11 @@
 
 Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
 /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE
-JSON line: {"metric", "value", "unit", "queries", "sf"}.
+JSON line: {"metric", "value", "unit", "queries", "trials", "sf"}, and
+appends the per-slot minimum wall times and Spark job/stage counts to
+bench_history.jsonl. A slot whose counts rose against the previous
+counted run at the same sf and core count is listed under
+"regressions".
 
 Execution is measured with the ``noop`` sink — full plan execution
 (scan → shuffle → agg) without driver-side collect overhead, i.e. the
@@ -629,10 +633,16 @@ def _bench_manifest_lifecycle(spark, sf_dir: str) -> dict[str, float]:
     return out
 
 
-def _emit(result: dict) -> None:
+#: Status-store counters the regression gate compares, per slot. They
+#: count plan work, not time, so they repeat exactly on any host with
+#: the same core count.
+GATED = ("jobs", "stages")
+
+
+def _emit(result: dict, name: str = "BENCH.json") -> None:
     """The bench contract line, plus a whole-file twin. The stdout JSON
     line stays the driver contract (printed verbatim, unchanged); it is
-    ALSO written atomically (tmp + rename) to BENCH.json because the
+    ALSO written atomically (tmp + rename) to ``name`` because the
     r14 driver capture truncated the ~10 KB line mid-stream
     (BENCH_r14.json parsed:null) and the r15 round lost its official
     round-over-round PERF table to that — a file the driver can read
@@ -640,7 +650,7 @@ def _emit(result: dict) -> None:
     line = json.dumps(result, separators=(",", ":"))
     print(line)
     try:
-        path = os.path.join(REPO_ROOT, "BENCH.json")
+        path = os.path.join(REPO_ROOT, name)
         tmp = path + ".tmp"
         with open(tmp, "w") as fh:
             fh.write(line + "\n")
@@ -649,15 +659,57 @@ def _emit(result: dict) -> None:
         pass  # stdout already carries the contract
 
 
+def load_history(path: str) -> list[dict]:
+    """Entries of a bench_history.jsonl file, oldest first."""
+    out = []
+    try:
+        with open(path) as fh:
+            for line in fh:
+                try:
+                    out.append(json.loads(line))
+                except ValueError:
+                    continue
+    except OSError:
+        pass
+    return out
+
+
+def previous_counts(history: list[dict], sf, cpus: int) -> dict | None:
+    """Per-slot counts of the newest entry at this sf and core count
+    that carries counters; entries from before counting are skipped."""
+    for rec in reversed(history):
+        if rec.get("sf") == sf and rec.get("cpus") == cpus and rec.get("counts"):
+            return rec["counts"]
+    return None
+
+
+def count_regressions(prior: dict, counts: dict) -> dict:
+    """Slots whose job or stage count rose against ``prior``, as
+    ``{slot: {counter: [before, after]}}``. Slots without a prior count
+    are new and pass."""
+    out = {}
+    for name, now in counts.items():
+        before = prior.get(name, {})
+        rose = {
+            k: [before[k], now[k]]
+            for k in GATED
+            if k in before and now[k] > before[k]
+        }
+        if rose:
+            out[name] = rose
+    return out
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     from aws_seismic_data_pipeline_spark.registry import load_all
     from aws_seismic_data_pipeline_spark.session import get_spark
+    from perfbench.harness import StatusCounters
 
     registry = load_all()
     spark = get_spark(app_name="bench")
-    steal_start = _cpu_steal_snapshot()
+    counter = StatusCounters(spark)
 
     # warm the page cache + JIT so per-query numbers reflect steady state
     for t in ("lineitem", "orders", "events"):
@@ -666,73 +718,49 @@ def main() -> None:
     # Best of TRIALS runs per query (default 5): first execution pays
     # codegen/JIT and Python-worker fork storms that are hostage to
     # co-tenant machine load; the minimum reflects the plan's
-    # steady-state cost, which is what scales to a cluster. The
-    # max-min spread per query is reported so a flagged "regression"
-    # whose spread dwarfs its delta can be read as host noise, not a
-    # plan change (the round-4 join trio burned a round on exactly
-    # that ambiguity with best-of-2).
+    # steady-state cost, which is what scales to a cluster. Each trial
+    # also counts the Spark jobs and stages it ran (status-store deltas,
+    # read outside the timed region); the per-slot minimum is the
+    # regression signal, since it does not move with host load.
     timings: dict[str, float] = {}
-    spreads: dict[str, float] = {}
+    counts: dict[str, dict[str, int]] = {}
 
-    def record(name: str, trial_times: list[float]) -> None:
-        timings[name] = round(min(trial_times), 3)
-        spreads[name] = round(max(trial_times) - min(trial_times), 3)
+    def counted(name: str, run, *args):
+        counter.mark()
+        out = run(*args)
+        got = counter.delta()
+        prev = counts.get(name)
+        counts[name] = {
+            k: got[k] if prev is None else min(prev[k], got[k]) for k in GATED
+        }
+        return out
 
-    def run_headline(name: str) -> list[float]:
-        spec = registry[name]
-        trial_times = []
-        for _ in range(TRIALS):
-            t0 = time.perf_counter()
-            df = spec.builder(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            trial_times.append(time.perf_counter() - t0)
-        return trial_times
+    def headline_trial(name: str) -> float:
+        t0 = time.perf_counter()
+        df = registry[name].builder(spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
+        return time.perf_counter() - t0
 
-    def run_phased(fn_name: str) -> dict[str, list[float]]:
+    for name in HEADLINE:
+        timings[name] = round(
+            min(counted(name, headline_trial, name) for _ in range(TRIALS)),
+            3,
+        )
+    for key, fn_name in PHASED.items():
         phase_trials: dict[str, list[float]] = {}
         for _ in range(TRIALS):
-            for phase, sec in globals()[fn_name](spark, sf_dir).items():
+            phases = counted(key, globals()[fn_name], spark, sf_dir)
+            for phase, sec in phases.items():
                 phase_trials.setdefault(phase, []).append(sec)
-        return phase_trials
-
-    phase_owner: dict[str, str] = {}
-    for name in HEADLINE:
-        record(name, run_headline(name))
-    for fn_name in PHASED.values():
-        for phase, trial_times in run_phased(fn_name).items():
-            phase_owner[phase] = fn_name
-            record(phase, trial_times)
-
-    # Spike quarantine (r14: a 68 s co-tenant spread sat inside a
-    # recorded min): re-trial any slot whose spread breaks the sanity
-    # bound — min merges (load only ever inflates a minimum), spread
-    # comes from the clean pass. A slot still loud after the re-trial
-    # refuses the whole entry below.
-    spiked = _spiked_slots(timings, spreads)
-    if spiked and TRIALS >= 2:
-        redo_fns = sorted(
-            {phase_owner[n] for n in spiked if n in phase_owner}
-        )
-        redone: dict[str, list[float]] = {}
-        for name in spiked:
-            if name not in phase_owner:
-                redone[name] = run_headline(name)
-        for fn_name in redo_fns:
-            redone.update(run_phased(fn_name))
-        for name in spiked:
-            trial_times = redone.get(name)
-            if not trial_times:
-                continue
-            old_min = timings[name]
-            record(name, trial_times)
-            timings[name] = min(old_min, timings[name])
+        for phase, trial_times in phase_trials.items():
+            timings[phase] = round(min(trial_times), 3)
 
     total = round(sum(timings.values()), 3)
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     # The stdout line must stay SMALL: the driver's capture truncated
-    # r5's ~4 KB line mid-stream (BENCH_r05.json parsed:null). Per-query
-    # spreads go to bench_history.jsonl only; stdout carries the totals,
-    # per-query minima, and any flagged regressions (~1.5 KB).
+    # r5's ~4 KB line mid-stream (BENCH_r05.json parsed:null). Per-slot
+    # counts go to bench_history.jsonl only; stdout carries the totals,
+    # per-query minima, and any count regressions.
     result = {
         "metric": "headline_total_runtime",
         "value": total,
@@ -741,580 +769,35 @@ def main() -> None:
         "trials": TRIALS,
         "sf": sf_val,
     }
-    # Cross-round regression tracking: compare each query against its
-    # BEST prior time at the same sf (bench_history.jsonl, appended per
-    # run) and surface slowdowns; tests/test_bench_history.py fails CI
-    # on them. Rounds run on different hosts/boots whose speed varies
-    # uniformly 1.5-2x, so the gate is HOST-NORMALIZED: the median
-    # now/best ratio across all queries estimates the host factor, and
-    # only queries regressing well beyond it (a plan-specific problem,
-    # not a slow machine) are flagged.
-    history_path = os.path.join(REPO_ROOT, "bench_history.jsonl")
     if TRIALS < 2:
         # single-trial runs are SMOKE runs: no min-of-N absorbs cold-JIT
-        # and first-scan noise, so their numbers are structurally slower
-        # than any real record — recording one would poison the
-        # best-prior regression gate (measured: a 1-trial smoke flagged
-        # six phantom ~2x "regressions" against min-of-3 priors)
+        # and first-scan work, so they are neither recorded nor allowed
+        # to overwrite the last real run's BENCH.json
         result["smoke"] = True
-        _emit(result)
+        _emit(result, "BENCH_smoke.json")
         spark.stop()
         return
+    # Regression gate: a slot whose job or stage count rose against the
+    # previous counted run at the same sf and core count is listed
+    # under "regressions"; tests/test_bench_history.py fails CI on the
+    # same comparison over the recorded history.
+    history_path = os.path.join(REPO_ROOT, "bench_history.jsonl")
     n_cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    best_prior = _best_prior(history_path, sf_val, n_cpus)
-    regressions, host_factor = _normalized_regressions(timings, best_prior)
-    result["host_factor"] = host_factor
-    steal_pct = _steal_pct(steal_start, _cpu_steal_snapshot())
-    if steal_pct is not None:
-        result["steal_pct"] = steal_pct
+    prior = previous_counts(load_history(history_path), sf_val, n_cpus)
+    regressions = count_regressions(prior or {}, counts)
     if regressions:
         result["regressions"] = regressions
-    still_spiked = _spiked_slots(timings, spreads)
-    if still_spiked:
-        # a slot stayed spike-poisoned through its re-trial: the box
-        # is being hit hard enough that even 10 trials never ran
-        # clean — refuse the entry as evidence, like a loaded run
-        result["not_recorded"] = (
-            f"slot spread > {SLOT_RELSPREAD_SANITY}x min after re-trial: "
-            f"{', '.join(still_spiked)}"
-        )
-        refused_entry = {
-            "ts": time.time(),
-            "sf": sf_val,
-            "queries": timings,
-            "spread": spreads,
-            "host_factor": host_factor,
-            "cpus": n_cpus,
-            "refused": True,
-            "spiked": still_spiked,
-        }
-        if steal_pct is not None:
-            refused_entry["steal_pct"] = steal_pct
-        with open(history_path, "a") as fh:
-            fh.write(json.dumps(refused_entry) + "\n")
-        _emit(result)
-        spark.stop()
-        return
-    rebase = None
-    if not _admissible(host_factor):
-        rebase = _boot_rebase_evidence(
-            history_path,
-            sf_val,
-            timings,
-            spreads,
-            host_factor,
-            own_steal=steal_pct,
-        )
-        if rebase is None:
-            # loaded-box run (or first run on a slower boot):
-            # inadmissible as gate evidence — print, and append as
-            # REFUSED EVIDENCE ONLY so the next quiet run on the same
-            # boot can prove persistence and record (see the
-            # BOOT_AGREE_* rationale)
-            result["not_recorded"] = (
-                f"host_factor {host_factor} > {HOST_FACTOR_RECORD_MAX}: "
-                "co-tenant load or first run on a slower boot; a second "
-                "agreeing quiet run records via boot rebase"
-            )
-            refused_entry = {
-                "ts": time.time(),
-                "sf": sf_val,
-                "queries": timings,
-                "spread": spreads,
-                "host_factor": host_factor,
-                "cpus": n_cpus,
-                "refused": True,
-            }
-            if steal_pct is not None:
-                refused_entry["steal_pct"] = steal_pct
-            with open(history_path, "a") as fh:
-                fh.write(json.dumps(refused_entry) + "\n")
-            _emit(result)
-            spark.stop()
-            return
-        result["boot_rebase"] = rebase
     entry = {
         "ts": time.time(),
         "sf": sf_val,
-        "queries": timings,
-        "spread": spreads,
-        "host_factor": host_factor,
         "cpus": n_cpus,
+        "counts": counts,
+        "queries": timings,
     }
-    if steal_pct is not None:
-        entry["steal_pct"] = steal_pct
-    if rebase is not None:
-        entry["boot_rebase"] = rebase
     with open(history_path, "a") as fh:
         fh.write(json.dumps(entry) + "\n")
     _emit(result)
     spark.stop()
-
-
-#: Sub-this-many-seconds queries are exempt from the TIMING gate. Was
-#: 0.2 s through r9; r10 measured the limit of the single-median host
-#: model on them: text_classifier_score's isolated 6-trial floor on the
-#: r10 host is 0.42 s vs 0.219 s best-prior host (1.9x host-specific on
-#: a CPU-bound Pandas-UDF query) while the run's MEDIAN factor was 1.26
-#: — a same-plan query red at any threshold the median can set. Launch
-#: overhead and Python-worker fork dominate sub-second timings in
-#: local[32], and they do not scale uniformly across hosts. Plan
-#: regressions on these queries are gated STRUCTURALLY instead
-#: (tests/test_plan_shapes.py, tests/test_plans.py — broadcast shape,
-#: exchange counts, single-partition bans), which is the right
-#: instrument at this magnitude; the timing gate keeps guarding every
-#: query whose runtime is dominated by the plan, not the launch.
-NOISE_FLOOR_SEC = 0.5
-
-
-#: Host-factor CALIBRATION SET (round-12 verdict item 2): the eight
-#: slots whose plans have never changed since round 1, present in every
-#: recorded run, above the 0.35 s floor, with the lowest cross-run
-#: coefficient of variation (0.19-0.53 over 64 runs). The host factor
-#: used to be the median now/best ratio over ALL slots — which SHIFTS
-#: as new slot families join the bench (a batch of maintenance-verb
-#: slots with different host sensitivity moves the median even when
-#: the machine did not change). A pinned never-changed set measures
-#: the MACHINE, not the slot mix. Fallback to the all-slot median when
-#: fewer than 4 calibration slots have priors (young history).
-CALIBRATION_SLOTS = (
-    "window_rank",
-    "analytics_local_supplier_volume",
-    "window_sessionize",
-    "analytics_shipping_priority",
-    "text_bigram_counts",
-    "dedup_simhash_pairs",
-    "join_broadcast",
-    "mm_decode_metadata",
-)
-
-#: Refuse to RECORD a history entry measured on a machine running
-#: >1.3x slower than the calibration slots' best prior: such a run is
-#: co-tenant-loaded (the builder's own workflow rule) and its minima
-#: poison both the best-prior table and the two-consecutive-runs gate
-#: (both r12 red-gate entries were recorded at host_factor 1.49/1.24).
-#: The run still PRINTS its result — it is just not admissible as
-#: regression-gate evidence.
-HOST_FACTOR_RECORD_MAX = 1.3
-
-#: BOOT-AWARE RECALIBRATION (round-13 verdict item 1). The guard above
-#: compares calibration slots to their ALL-TIME best prior, so a box
-#: whose hypervisor-level speed PERSISTENTLY degrades below 1/1.3 of
-#: its best-ever boot can never record again — the r13 wedge: four
-#: refusals at host_factor 1.58-2.61, including the judge's run on a
-#: fully idle machine (load 0.10, host_factor 1.71). "Slower boot" and
-#: "co-tenant load" are distinguishable: a slow boot is UNIFORM within
-#: a run (best-of-5 minima are tight) and PERSISTENT across runs
-#: (consecutive idle runs re-measure the same per-slot times); load is
-#: spiky within a run (large max-min trial spread) and transient
-#: across runs. So a refused run is appended to bench_history.jsonl as
-#: EVIDENCE ONLY (``"refused": true`` — skipped by the best-prior
-#: table and the CI gate), and the NEXT refused run is admitted as a
-#: documented boot rebase iff BOTH runs are internally quiet and their
-#: per-calibration-slot minima agree within tolerance. Admitted
-#: entries carry ``"boot_rebase"`` naming the evidence run; the
-#: host-factor normalization is untouched (per-query ratios still
-#: divide out the measured factor against the all-time-best boot), and
-#: slow-boot timings can never lower the best-prior table (min only).
-BOOT_AGREE_MEDIAN = 0.10  # median per-slot cross-run agreement bound
-BOOT_AGREE_SLOT = 0.20  # per-slot UPPER bound; all but one must satisfy
-#: Orthogonal quietness signals for boot-rebase admission (r14 ADVICE:
-#: a PERSISTENTLY steady co-tenant load has tight spreads and agreeing
-#: minima across two back-to-back runs, so the spread/agreement tests
-#: alone can self-admit an inflated host factor as a "boot"):
-#: (a) hypervisor CPU-steal measured across the run from /proc/stat —
-#:     a co-tenant VM shows as steal time even when loadavg is 0.1
-#:     (the r13 idle-box refusals); a genuinely slower boot steals
-#:     nothing. Entries lacking the field (pre-r15 history) pass — the
-#:     signal cannot be measured retroactively.
-#: (b) minimum wall-clock separation between the two agreeing
-#:     evidence runs — one burst session under constant load proves
-#:     persistence of the LOAD, not of the boot.
-BOOT_STEAL_PCT_MAX = 2.0
-BOOT_MIN_SEPARATION_SEC = 900.0
-
-#: A slot whose max-min trial spread exceeds this many times its own
-#: minimum inside ONE run is spike-poisoned: quiet-run relspreads sit
-#: at ~0.5-1.0 and even loaded refused runs measured <= 6x, while the
-#: r14 recorded entry's keyword_index_build carried a 68 s spread on a
-#: 5.71 s min (12x) — a co-tenant spike that hit all five trials and
-#: sat INSIDE a recorded minimum. Such slots are re-trialed once
-#: (TRIALS fresh trials; min merged, spread taken from the clean
-#: pass); a slot still above the bound refuses the whole entry (it is
-#: appended as refused evidence, like a loaded run).
-SLOT_RELSPREAD_SANITY = 8.0
-
-
-def _spiked_slots(
-    timings: dict[str, float], spreads: dict[str, float]
-) -> list[str]:
-    """Slots whose trial spread exceeds SLOT_RELSPREAD_SANITY x their
-    minimum (sub-noise-floor slots exempt: launch jitter dominates)."""
-    return sorted(
-        n
-        for n, t in timings.items()
-        if t >= NOISE_FLOOR_SEC
-        and spreads.get(n, 0.0) > SLOT_RELSPREAD_SANITY * t
-    )
-
-
-def _cpu_steal_snapshot() -> tuple[int, int] | None:
-    """(steal_ticks, total_ticks) from /proc/stat's aggregate cpu
-    line, or None where unavailable (non-Linux)."""
-    try:
-        with open("/proc/stat") as fh:
-            parts = fh.readline().split()
-        if parts and parts[0] == "cpu":
-            vals = [int(v) for v in parts[1:]]
-            steal = vals[7] if len(vals) > 7 else 0
-            return steal, sum(vals)
-    except (OSError, ValueError):
-        pass
-    return None
-
-
-def _steal_pct(
-    start: tuple[int, int] | None, end: tuple[int, int] | None
-) -> float | None:
-    """Percent of CPU time stolen by the hypervisor between two
-    snapshots; None when either snapshot is unavailable."""
-    if start is None or end is None:
-        return None
-    dsteal, dtotal = end[0] - start[0], end[1] - start[1]
-    if dtotal <= 0:
-        return None
-    return round(100.0 * dsteal / dtotal, 2)
-#: Median (max-min)/min over the 5 trials, per calibration slot. The
-#: r14 measurements on this box: its stable ~1.4x phase shows medians
-#: 0.81/0.82/0.99 across three runs spanning hours, while genuinely
-#: loaded runs (host_factor 1.86/2.06 with per-slot spreads up to 6x
-#: the minimum) measure 1.04/1.64 — 1.0 splits the two populations.
-BOOT_RELSPREAD_MAX = 1.0
-BOOT_HF_AGREE = 0.15  # the two runs' host factors must also agree
-BOOT_EVIDENCE_LOOKBACK = 5  # evidence entries scanned, newest first
-
-
-def _median_relspread(
-    timings: dict[str, float], spreads: dict[str, float]
-) -> float | None:
-    rels = sorted(
-        spreads[c] / timings[c]
-        for c in CALIBRATION_SLOTS
-        if timings.get(c) and spreads.get(c) is not None
-    )
-    return rels[len(rels) // 2] if rels else None
-
-
-def _boot_rebase_evidence(
-    history_path: str,
-    sf_val,
-    timings: dict[str, float],
-    spreads: dict[str, float],
-    host_factor: float,
-    *,
-    own_steal: float | None = None,
-    own_ts: float | None = None,
-) -> dict | None:
-    """Admit a host_factor-refused run as a PERSISTENT UNIFORM boot
-    slowdown, or return None (stay refused). Scans the last
-    BOOT_EVIDENCE_LOOKBACK same-sf evidence entries (``refused`` or
-    already ``boot_rebase``-admitted), newest first, skipping loud
-    ones — an interleaved co-tenant-loaded run must not reset the
-    chain two quiet runs establish. Admission against a candidate
-    requires: (a) BOTH runs internally quiet (median relative trial
-    spread over the calibration slots <= BOOT_RELSPREAD_MAX —
-    co-tenant spikes blow individual trials up, a slow boot slows all
-    five evenly); (b) per-slot minima agreement: median within
-    BOOT_AGREE_MEDIAN, and at most one slot SLOWER than the evidence
-    by more than BOOT_AGREE_SLOT — the bound is one-sided because
-    load only ever INFLATES a best-of-N minimum: a slot where this
-    run is faster proves the evidence run's floor was dirty, not this
-    one's (measured r14: two consecutive quiet runs agreed at median
-    1.003 with two slots 0.62x — spikes had hit all five of the older
-    run's trials on exactly those slots); (c) host factors within
-    BOOT_HF_AGREE. Additionally (r14 ADVICE — the spread/agreement
-    tests alone cannot distinguish a persistently STEADY co-tenant
-    load from a slower boot): (d) neither run may show hypervisor CPU
-    steal above BOOT_STEAL_PCT_MAX (entries without the field pass —
-    it cannot be measured retroactively), and (e) the two runs must be
-    separated by at least BOOT_MIN_SEPARATION_SEC of wall clock.
-    Returns the evidence record written into the admitted entry."""
-    if own_steal is not None and own_steal > BOOT_STEAL_PCT_MAX:
-        return None
-    if own_ts is None:
-        own_ts = time.time()
-    candidates: list[dict] = []
-    try:
-        with open(history_path) as fh:
-            for line in fh:
-                try:
-                    rec = json.loads(line)
-                except ValueError:
-                    continue
-                if rec.get("sf") != sf_val or rec.get("ts") in POISONED_RUNS:
-                    continue
-                if int(rec.get("cpus", 32)) != int(
-                    os.environ.get("SPARK_GRAFT_CPUS", "32")
-                ):
-                    continue  # boot agreement is per core count (r16)
-                if rec.get("refused") or rec.get("boot_rebase"):
-                    candidates.append(rec)
-    except OSError:
-        return None
-    own_rel = _median_relspread(timings, spreads)
-    if own_rel is None or own_rel > BOOT_RELSPREAD_MAX:
-        return None
-    for ev in reversed(candidates[-BOOT_EVIDENCE_LOOKBACK:]):
-        ev_rel = _median_relspread(
-            ev.get("queries", {}), ev.get("spread", {})
-        )
-        if ev_rel is not None and ev_rel > BOOT_RELSPREAD_MAX:
-            continue  # loud evidence: skip, keep scanning older
-        ev_steal = ev.get("steal_pct")
-        if ev_steal is not None and ev_steal > BOOT_STEAL_PCT_MAX:
-            continue  # stolen-CPU evidence: a loaded box, not a boot
-        ev_ts = ev.get("ts")
-        if ev_ts is not None and own_ts - ev_ts < BOOT_MIN_SEPARATION_SEC:
-            continue  # same-burst pair proves load persistence only
-        ev_q = ev.get("queries", {})
-        ratios = sorted(
-            timings[c] / ev_q[c]
-            for c in CALIBRATION_SLOTS
-            if timings.get(c) and ev_q.get(c)
-        )
-        if len(ratios) < 6:
-            continue
-        med = ratios[len(ratios) // 2]
-        if abs(med - 1.0) > BOOT_AGREE_MEDIAN:
-            continue
-        slower = sum(1 for v in ratios if v - 1.0 > BOOT_AGREE_SLOT)
-        if slower > 1:
-            continue
-        ev_hf = ev.get("host_factor")
-        if ev_hf and abs(host_factor / ev_hf - 1.0) > BOOT_HF_AGREE:
-            continue
-        return {
-            "factor": host_factor,
-            "evidence_ts": ev.get("ts"),
-            "median_agreement": round(med, 3),
-            "median_relspread": round(own_rel, 3),
-        }
-    return None
-
-#: History entries retro-adjudicated INADMISSIBLE as gate evidence and
-#: skipped by both the best-prior table and the gate's recent/prior
-#: split. Entries (exact ts stamps):
-#: - the two final r12 runs, RECORDED UNDER CO-TENANT LOAD at
-#:   host_factor 1.49 / 1.24 in violation of the quiet-box timing rule
-#:   (the r12 verdict's "What's wrong" #1 documents exactly this).
-#:   Their three flags were adjudicated: mm_image_phash and
-#:   agg_median_distributed host noise; scan_manifest_pruned_multi the
-#:   r12 claim-protocol constant — two Spark read+agg+collect jobs
-#:   inside every commit's snapshot allocation — fixed in r13 by the
-#:   driver-side pyarrow footer-stats read (commit.py _next_snapshot);
-#:   measured post-fix at raw 2.56 s on a calibration-measured ~2.6x
-#:   host (normalized ~1.0 vs the 1.286 s best prior, against 2.85 /
-#:   5.92 s raw in these two poisoned entries on a much faster host).
-#: The HOST_FACTOR_RECORD_MAX guard above prevents this class of entry
-#: from being recorded at all going forward; this list exists because
-#: these two predate the guard.
-POISONED_RUNS = {1786854354.8555055, 1786860546.5076127}
-
-
-def retro_admit_refused(history_path: str) -> list[dict]:
-    """One-shot documented retro-adjudication (the data-driven mirror
-    of POISONED_RUNS): re-evaluate every stored ``refused`` evidence
-    entry with the SAME admission predicate live runs use
-    (:func:`_boot_rebase_evidence`), against strictly OLDER evidence
-    only, and promote entries that satisfy it to recorded
-    ``boot_rebase`` entries (marked ``"retro": true``).
-
-    Why this exists: the two-quiet-runs-agree condition can be
-    SATISFIED BY entries that were refused before the predicate (or a
-    fix to it) landed — r14 measured runs 3 and 5 agreeing at median
-    1.003 with relspreads 0.81/0.82, but run 5 was refused because
-    the then-current scan compared only against the latest evidence
-    (the LOUD run 4); the lookback fix landed one commit later. The
-    timings are already the stored measurement; only the admission
-    decision is re-run. Returns the promoted entries."""
-    import tempfile
-
-    lines: list[str] = []
-    with open(history_path) as fh:
-        lines = fh.readlines()
-    promoted: list[dict] = []
-    out_lines: list[str] = []
-    prefix_path = None
-    with tempfile.NamedTemporaryFile(
-        "w", dir=os.path.dirname(os.path.abspath(history_path)),
-        suffix=".prefix", delete=False,
-    ) as pf:
-        prefix_path = pf.name
-    try:
-        for line in lines:
-            try:
-                rec = json.loads(line)
-            except ValueError:
-                out_lines.append(line)
-                continue
-            if rec.get("refused") and rec.get("ts") not in POISONED_RUNS:
-                # evidence visible to this entry = everything ALREADY
-                # written to the prefix file (strictly older lines,
-                # with earlier promotions applied, as a live run at
-                # that moment would have seen)
-                with open(prefix_path, "w") as pf:
-                    pf.writelines(out_lines)
-                got = _boot_rebase_evidence(
-                    prefix_path,
-                    rec.get("sf"),
-                    rec.get("queries", {}),
-                    rec.get("spread", {}),
-                    rec.get("host_factor", 0.0),
-                    own_steal=rec.get("steal_pct"),
-                    own_ts=rec.get("ts"),
-                )
-                if got is not None:
-                    rec.pop("refused", None)
-                    rec["boot_rebase"] = dict(got, retro=True)
-                    promoted.append(rec)
-                    out_lines.append(json.dumps(rec) + "\n")
-                    continue
-            out_lines.append(line)
-    finally:
-        try:
-            os.remove(prefix_path)
-        except OSError:
-            pass
-    if promoted:
-        tmp = history_path + ".retro_tmp"
-        with open(tmp, "w") as fh:
-            fh.writelines(out_lines)
-        os.replace(tmp, history_path)
-    return promoted
-
-
-def _admissible(host_factor: float) -> bool:
-    """Is a run recorded at this host factor admissible as
-    regression-gate evidence? (See HOST_FACTOR_RECORD_MAX.)"""
-    return host_factor <= HOST_FACTOR_RECORD_MAX
-
-
-def _normalized_regressions(
-    timings: dict[str, float], best_prior: dict[str, float]
-) -> tuple[dict, float]:
-    """Flag queries >1.5x slower than best prior AFTER dividing out the
-    host factor (median now/best ratio over the pinned CALIBRATION_SLOTS
-    when >=4 have priors, else over all comparable queries). Returns
-    (regressions, host_factor). Sub-NOISE_FLOOR_SEC queries are
-    noise-exempt (see the constant's rationale)."""
-    cal = sorted(
-        t / best_prior[name]
-        for name, t in timings.items()
-        if name in CALIBRATION_SLOTS
-        and name in best_prior
-        and best_prior[name] > 0
-        and t > 0.2
-    )
-    ratios = sorted(
-        t / best_prior[name]
-        for name, t in timings.items()
-        if name in best_prior and best_prior[name] > 0 and t > 0.2
-    )
-    if len(cal) >= 4:
-        ratios = cal
-    if not ratios:
-        return {}, 1.0
-    host_factor = round(max(1.0, ratios[len(ratios) // 2]), 3)
-    regressions = {
-        name: {
-            "now": t,
-            "best_prior": best_prior[name],
-            "normalized_ratio": round(t / (best_prior[name] * host_factor), 2),
-        }
-        for name, t in timings.items()
-        if name in best_prior
-        # launch-dominance is a property of the PLAN, so the exemption
-        # keys on the plan's best-known cost, not today's measurement:
-        # a slot whose quiet-host floor is sub-NOISE_FLOOR seconds is
-        # scheduling-latency-dominated no matter how much a slow boot
-        # inflates it (r13: a ~2.6x host pushed 0.29 s join_broadcast
-        # to 1.36 s — over the old t-based floor, still launch noise).
-        # Plan regressions on these slots are gated structurally
-        # (tests/test_plan_shapes.py), per the constant's rationale.
-        and best_prior[name] > NOISE_FLOOR_SEC
-        and t > 1.5 * host_factor * best_prior[name]
-    }
-    return regressions, host_factor
-
-
-#: Deliberate plan changes reset a query's regression baseline: history
-#: entries with ts < the reset are ignored when computing its best
-#: prior. This records an ALGORITHM swap, not a tuning miss — comparing
-#: the new plan against the retired one's quiet-host best would flag a
-#: trade that was made on purpose. Entries:
-#: - r9 replaced min-label connected components (rounds = graph
-#:   diameter; best-prior 1.956/3.579 s came from shallow fixture
-#:   graphs it favors) with large-star/small-star contraction
-#:   (O(log² n) rounds — the 100 TB-safe bound; same-host A/B: star
-#:   3.2 s vs min-label 5.0 s on the chain-bearing Jaccard graph). The
-#:   two component queries re-baseline at the first star-era run.
-#: - r10 replaced analytics_rfm's three UNPARTITIONED NTILE windows
-#:   (planned as Exchange SinglePartition + one-task WindowExec — the
-#:   whole customer frame through one core, the r9 verdict's
-#:   scale-killer; its 0.464 s best-prior is the price of NOT
-#:   distributing 15 k rows) with distributed_ntile_multi (range
-#:   exchange + fused per-partition counts + offset ranks; same-host
-#:   A/B: ~1.6 s distributed vs 0.46 s single-task at sf0.1 — the swap
-#:   buys the 10^8-row frame the old plan cannot survive;
-#:   tests/test_plan_shapes.py pins the SinglePartition ban). The reset
-#:   sits AFTER the first distributed landing's runs: that landing
-#:   derived ranks from two executions of one range exchange, and
-#:   Spark resamples boundaries per execution (measured 760/740 vs
-#:   783/717 on identical input) — its faster timings were timings of
-#:   an incorrect plan; the fixed form pins the layout with one
-#:   localCheckpoint, whose materialization is the honest extra cost.
-BASELINE_RESETS = {
-    "dedup_cluster_canonical": 1786770000.0,
-    "dedup_embedding_canonical": 1786770000.0,
-    "analytics_rfm": 1786796300.0,
-}
-
-
-def _best_prior(history_path: str, sf_val, n_cpus: int = 32) -> dict[str, float]:
-    """Per-slot best prior time at the same sf AND the same core count.
-    The regression gate compares like with like (r16): an 8-core run's
-    time recorded into history must not become the best-prior a 32-core
-    run is flagged against — worker-fork-heavy slots are legitimately
-    FASTER on fewer cores at fixture scale, so a cpu-blind minimum
-    manufactures phantom regressions. Entries recorded before the
-    ``cpus`` tag existed are assumed 32-core (every recorded pre-tag
-    entry was a local[32] driver/builder run except the r15 driver c8
-    run, whose per-slot minima the 32-core entries dominate)."""
-    best: dict[str, float] = {}
-    try:
-        with open(history_path) as fh:
-            for line in fh:
-                try:
-                    rec = json.loads(line)
-                except ValueError:
-                    continue
-                if rec.get("sf") != sf_val:
-                    continue
-                if int(rec.get("cpus", 32)) != n_cpus:
-                    continue
-                if rec.get("refused"):  # boot-rebase evidence only
-                    continue
-                ts = rec.get("ts", 0.0)
-                if ts in POISONED_RUNS:  # loaded-box entries (see const)
-                    continue
-                for name, t in rec.get("queries", {}).items():
-                    if ts < BASELINE_RESETS.get(name, 0.0):
-                        continue
-                    if isinstance(t, (int, float)):
-                        best[name] = min(best.get(name, float("inf")), float(t))
-    except OSError:
-        pass
-    return best
 
 
 if __name__ == "__main__":

@@ -14,39 +14,29 @@ from __future__ import annotations
 import os
 import sys
 import time
+from contextlib import contextmanager
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def _n_jobs(spark) -> int:
-    return spark.sparkContext._jsc.sc().statusStore().jobsList(None).size()
-
-
 class Phase:
+    """Times labelled phases and counts the Spark jobs each submits."""
+
     def __init__(self, spark):
-        self.spark = spark
+        from perfbench.harness import StatusCounters
+
+        self.counter = StatusCounters(spark)
         self.rows: list[tuple[str, float, int]] = []
 
+    @contextmanager
     def __call__(self, label):
-        return _Timer(self, label)
-
-
-class _Timer:
-    def __init__(self, ph, label):
-        self.ph, self.label = ph, label
-
-    def __enter__(self):
-        self.t0 = time.perf_counter()
-        self.j0 = _n_jobs(self.ph.spark)
-        return self
-
-    def __exit__(self, *exc):
-        dt = time.perf_counter() - self.t0
-        dj = _n_jobs(self.ph.spark) - self.j0
-        self.ph.rows.append((self.label, dt, dj))
-        return False
+        self.counter.mark()
+        t0 = time.perf_counter()
+        yield
+        dt = time.perf_counter() - t0
+        self.rows.append((label, dt, self.counter.delta()["jobs"]))
 
 
 def profile_plan_change_data_feed(spark, ph):

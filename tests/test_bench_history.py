@@ -1,19 +1,14 @@
-"""Bench regression gate: the latest bench runs must not be >1.5x slower
-than the best prior run on any headline query at the same scale factor
-(round-1 verdict item 9), AFTER dividing out the host factor — rounds
-run on different hosts/boots whose speed varies uniformly 1.5-2x, so
-the median now/best ratio estimates machine speed and only
-plan-specific regressions beyond it fail. Sub-0.2 s queries are exempt
-— at that scale the measurement is mostly fixed overhead noise.
+"""Bench regression gate on exact work counters.
 
-The gate compares the ELEMENT-WISE BEST of the last two same-sf runs
-against the best prior (round-8 verdict item 1): the host factor is a
-single median, so NON-uniform co-tenant load — one query's window hit
-by a spike while the rest of the run was quiet — can redden HEAD on a
-run whose plan did not change (measured: keyword_index_build 3.33 s
-under a 1.56x-load window vs 1.07 s one run earlier, same commit). A
-genuine plan regression reproduces across consecutive runs; a one-run
-noise spike does not survive the min."""
+bench.py records, per slot, the minimum number of Spark jobs and stages
+over its trials. Those counts come from the status store, not a clock,
+so two runs of the same code at the same sf and core count repeat them
+exactly, whatever else the host is doing. The gate fails when the
+newest counted entry in bench_history.jsonl ran more jobs or stages on
+any slot than the previous counted entry at the same sf and core count.
+A deliberate increase is accepted by recording a fresh entry after it.
+Entries written before counting began carry no counts and are skipped.
+"""
 
 from __future__ import annotations
 
@@ -23,411 +18,62 @@ import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-from bench import (  # noqa: E402
-    BASELINE_RESETS,
-    CALIBRATION_SLOTS,
-    HOST_FACTOR_RECORD_MAX,
-    POISONED_RUNS,
-    _admissible,
-    _normalized_regressions,
-)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+from bench import count_regressions, load_history, previous_counts  # noqa: E402
 
-HISTORY = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                       "bench_history.jsonl")
+HISTORY = os.path.join(ROOT, "bench_history.jsonl")
 
 
-def _entries():
-    if not os.path.exists(HISTORY):
-        return []
-    out = []
-    with open(HISTORY) as fh:
-        for line in fh:
-            try:
-                rec = json.loads(line)
-            except ValueError:
-                continue
-            # retro-adjudicated loaded-box entries are not gate
-            # evidence (bench.POISONED_RUNS documents each), and
-            # neither are boot-rebase EVIDENCE appends (refused runs
-            # persisted only so the next run can prove persistence)
-            if rec.get("ts") in POISONED_RUNS or rec.get("refused"):
-                continue
-            out.append(rec)
-    return out
+def _latest_regressions(path: str) -> dict | None:
+    """Count regressions of the newest counted entry against the
+    previous one at its sf and core count; None when there is no such
+    pair yet."""
+    counted = [e for e in load_history(path) if e.get("counts")]
+    if not counted:
+        return None
+    latest = counted[-1]
+    prior = previous_counts(counted[:-1], latest["sf"], latest["cpus"])
+    if prior is None:
+        return None
+    missing = sorted(set(prior) - set(latest["counts"]))
+    assert not missing, f"slots dropped from the count gate: {missing}"
+    return count_regressions(prior, latest["counts"])
 
 
 def test_latest_bench_within_regression_budget():
-    entries = _entries()
-    if len(entries) < 2:
-        pytest.skip("fewer than two bench runs recorded")
-    latest = entries[-1]
-    # like-for-like only: same sf AND same core count (r16 — a recorded
-    # 8-core scaling run must not gate against 32-core priors or vice
-    # versa; worker-fork-heavy slots legitimately differ across core
-    # counts at fixture scale). Pre-tag entries are assumed 32-core,
-    # matching bench.py's _best_prior.
-    same_sf = [
-        e
-        for e in entries
-        if e.get("sf") == latest.get("sf")
-        and int(e.get("cpus", 32)) == int(latest.get("cpus", 32))
-    ]
-    recent, prior = same_sf[-2:], same_sf[:-2]
-    if not prior and len(same_sf) == 2:
-        # young history: with exactly two runs there is no "last two vs
-        # prior" split — fall back to latest-vs-first so short histories
-        # still get a (noisier) gate instead of none
-        recent, prior = same_sf[-1:], same_sf[:-1]
-    if not prior:
-        pytest.skip("no prior run at this sf")
-    best = {}
-    for e in prior:
-        for name, t in e.get("queries", {}).items():
-            # deliberate plan changes re-baseline (see bench.py's
-            # BASELINE_RESETS rationale)
-            if e.get("ts", 0.0) < BASELINE_RESETS.get(name, 0.0):
-                continue
-            if isinstance(t, (int, float)):
-                best[name] = min(best.get(name, float("inf")), float(t))
-    # element-wise best of the last two runs: a regression must
-    # REPRODUCE to fail the gate (see module docstring)
-    current: dict = {}
-    spread: dict = {}
-    for e in recent:
-        for name, t in e.get("queries", {}).items():
-            if isinstance(t, (int, float)):
-                current[name] = min(current.get(name, float("inf")), float(t))
-        for name, s in (e.get("spread") or {}).items():
-            if isinstance(s, (int, float)):
-                spread[name] = max(spread.get(name, 0.0), float(s))
-    bad, host_factor = _normalized_regressions(current, best)
-    # Measurement-resolution floor (r16): a best-of-N minimum whose own
-    # recorded trial SPREAD exceeds the normalized delta cannot certify
-    # that delta — worker-fork-heavy slots carry 1-1.5 s spreads at
-    # sub-3 s minima and oscillate across boots (r14/r15 verdicts
-    # adjudicated exactly this family as machine noise). A real plan
-    # regression moves the minimum by far more than the trial spread;
-    # those still fail.
-    bad = {
-        name: info
-        for name, info in bad.items()
-        if (info["now"] - info["best_prior"] * host_factor)
-        >= spread.get(name, 0.0)
+    bad = _latest_regressions(HISTORY)
+    if bad is None:
+        pytest.skip("fewer than two counted bench runs at one sf and core count")
+    assert not bad, f"Spark job/stage counts rose: {bad}"
+
+
+def test_planted_extra_shuffle_fails_gate(tmp_path):
+    """One extra shuffle in one slot (one more job, one more stage)
+    fails the gate; identical counts pass; entries without counts, or
+    at another core count, are not compared against."""
+    counts = {
+        "join_inner_equi": {"jobs": 3, "stages": 4},
+        "window_rank": {"jobs": 2, "stages": 3},
     }
-    assert not bad, (
-        f">1.5x host-normalized slowdowns vs best prior "
-        f"(host_factor={host_factor}): {bad}"
-    )
+    planted = dict(counts, window_rank={"jobs": 3, "stages": 4})
+    old = {"ts": 1.0, "sf": 0.1, "queries": {"window_rank": 1.0}}
 
+    def gate(*entries):
+        path = tmp_path / "history.jsonl"
+        path.write_text("".join(json.dumps(e) + "\n" for e in entries))
+        return _latest_regressions(str(path))
 
-def test_normalized_regressions_math():
-    """A uniform 2x host slowdown is absorbed; a plan-specific 4x on top
-    of it is flagged."""
-    best = {"a": 1.0, "b": 1.0, "c": 1.0, "d": 1.0}
-    uniform = {"a": 2.0, "b": 2.0, "c": 2.1, "d": 1.9}
-    bad, hf = _normalized_regressions(uniform, best)
-    assert not bad and 1.9 <= hf <= 2.1
-    spiked = {"a": 2.0, "b": 2.0, "c": 2.0, "d": 8.0}
-    bad, hf = _normalized_regressions(spiked, best)
-    assert set(bad) == {"d"} and bad["d"]["normalized_ratio"] > 1.5
-    # no priors -> no flags, neutral factor
-    bad, hf = _normalized_regressions({"x": 5.0}, {})
-    assert not bad and hf == 1.0
+    def entry(cpus, c):
+        return {"sf": 0.1, "cpus": cpus, "counts": c}
 
-
-def test_host_factor_from_pinned_calibration_set():
-    """Round-12 verdict item 2: the host factor comes from the pinned
-    never-changed CALIBRATION_SLOTS when >=4 have priors — a batch of
-    NEW slot families running slow (plan problems, not machine speed)
-    must no longer drag the median up and mask themselves."""
-    cal = list(CALIBRATION_SLOTS[:4])
-    best = {n: 1.0 for n in cal} | {"new_a": 1.0, "new_b": 1.0,
-                                    "new_c": 1.0, "new_d": 1.0,
-                                    "new_e": 1.0}
-    # machine unchanged (calibration ~1x) but five new-family slots 2x:
-    # the old all-slot median would report hf~2 and absorb them all
-    timings = {n: 1.02 for n in cal} | {k: 2.0 for k in
-                                        ("new_a", "new_b", "new_c",
-                                         "new_d", "new_e")}
-    bad, hf = _normalized_regressions(timings, best)
-    assert hf < 1.1, f"calibration median ignored: hf={hf}"
-    assert set(bad) == {"new_a", "new_b", "new_c", "new_d", "new_e"}
-    # conversely a genuinely slow machine (calibration 2x) absorbs a
-    # uniform 2x everywhere
-    timings_slow = {n: 2.0 for n in best}
-    bad, hf = _normalized_regressions(timings_slow, best)
-    assert not bad and 1.9 <= hf <= 2.1
-    # <4 calibration slots with priors: falls back to all-slot median
-    few = {cal[0]: 1.0, "x": 1.0, "y": 1.0, "z": 1.0}
-    bad, hf = _normalized_regressions({cal[0]: 2.0, "x": 2.0, "y": 2.0,
-                                       "z": 2.0}, few)
-    assert not bad and 1.9 <= hf <= 2.1
-
-
-def test_loaded_box_runs_are_inadmissible():
-    """Runs measured at host_factor > HOST_FACTOR_RECORD_MAX are not
-    recorded into bench_history.jsonl (they poison the best-prior table
-    and the two-consecutive-runs gate — both r12 red-gate entries were
-    loaded-box runs)."""
-    assert _admissible(1.0)
-    assert _admissible(HOST_FACTOR_RECORD_MAX)
-    assert not _admissible(HOST_FACTOR_RECORD_MAX + 0.01)
-    assert not _admissible(1.49)
-
-
-def test_recorded_history_is_admissible():
-    """Every ALREADY-RECORDED sf0.1 entry after the guard's landing must
-    satisfy the admissibility bound — the guard is enforced at append
-    time, so this pins the invariant going forward (pre-guard entries
-    are grandfathered: they are the measured record of rounds 1-12).
-    Entries admitted above the bound must carry their documented
-    boot-rebase evidence (round-13 verdict item 1)."""
-    GUARD_LANDED_TS = 1786865300.0  # r13: entries after this obey it
-    for e in _entries():
-        if e.get("ts", 0.0) >= GUARD_LANDED_TS and "host_factor" in e:
-            assert _admissible(e["host_factor"]) or (
-                e.get("boot_rebase", {}).get("evidence_ts") is not None
-            ), e["ts"]
-
-
-def _write_history(path, entries):
-    with open(path, "w") as fh:
-        for e in entries:
-            fh.write(json.dumps(e) + "\n")
-
-
-def test_boot_rebase_admits_persistent_uniform_slowdown(tmp_path):
-    """Round-13 verdict item 1: a host_factor-refused run is admitted
-    iff a prior refused evidence run on the SAME boot agrees per
-    calibration slot (persistence) and the current run's trial spreads
-    are tight (quietness) — a permanently slower boot can record
-    again, while transient co-tenant load still cannot."""
-    from bench import _boot_rebase_evidence
-
-    cal = list(CALIBRATION_SLOTS)
-    hist = str(tmp_path / "h.jsonl")
-    # evidence: a refused run on the slow boot, ~1.6x uniform
-    ev_times = {c: 1.6 for c in cal}
-    _write_history(
-        hist,
-        [
-            {
-                "ts": 100.0,
-                "sf": 0.1,
-                "queries": ev_times,
-                "spread": {c: 0.3 for c in cal},
-                "host_factor": 1.6,
-                "refused": True,
-            }
-        ],
-    )
-    now = {c: 1.65 for c in cal}  # same boot: minima agree within ~3%
-    tight = {c: 0.4 for c in cal}  # relspread 0.24 — quiet
-    got = _boot_rebase_evidence(hist, 0.1, now, tight, 1.62)
-    assert got is not None and got["evidence_ts"] == 100.0
-    assert abs(got["median_agreement"] - 1.03) < 0.02
-
-    # spiky load: same minima but huge trial spreads -> refused
-    spiky = {c: 2.5 for c in cal}  # relspread ~1.5
-    assert _boot_rebase_evidence(hist, 0.1, now, spiky, 1.62) is None
-
-    # transient load: minima disagree with the evidence run -> refused
-    moved = {c: 1.65 * (1.5 if i % 2 else 0.8) for i, c in enumerate(cal)}
-    assert _boot_rebase_evidence(hist, 0.1, moved, tight, 1.62) is None
-
-    # host factors disagree (load on top of the slow boot) -> refused
-    assert _boot_rebase_evidence(hist, 0.1, now, tight, 2.2) is None
-
-    # no prior evidence at this sf -> refused (first run just records
-    # its evidence line)
-    assert _boot_rebase_evidence(hist, 1.0, now, tight, 1.62) is None
-
-    # one SLOWER outlier slot is tolerated (per-slot host sensitivity
-    # is non-uniform even idle — r13 judge measured 1.19-1.75x on a
-    # load-0.10 box); two are not
-    one_off = dict(now)
-    one_off[cal[0]] = 1.65 * 1.3
-    assert _boot_rebase_evidence(hist, 0.1, one_off, tight, 1.62) is not None
-    two_off = dict(one_off)
-    two_off[cal[1]] = 1.65 * 1.3
-    assert _boot_rebase_evidence(hist, 0.1, two_off, tight, 1.62) is None
-
-    # FASTER outliers are fine in any number: load only inflates a
-    # best-of-N minimum, so this run being faster indicts the EVIDENCE
-    # run's floor on those slots, not this run (measured r14: two
-    # quiet runs agreed at median 1.003 with two slots at 0.62x)
-    faster = dict(now)
-    faster[cal[0]] = 1.65 * 0.62
-    faster[cal[1]] = 1.65 * 0.63
-    assert _boot_rebase_evidence(hist, 0.1, faster, tight, 1.62) is not None
-
-    # an interleaved LOUD refused run must not reset the chain: the
-    # scan skips it and still matches the older quiet evidence
-    _write_history(
-        hist,
-        [
-            {
-                "ts": 100.0,
-                "sf": 0.1,
-                "queries": ev_times,
-                "spread": {c: 0.3 for c in cal},
-                "host_factor": 1.6,
-                "refused": True,
-            },
-            {
-                "ts": 150.0,
-                "sf": 0.1,
-                "queries": {c: 3.3 for c in cal},  # loaded minima
-                "spread": {c: 6.0 for c in cal},  # relspread ~1.8
-                "host_factor": 2.1,
-                "refused": True,
-            },
-        ],
-    )
-    got = _boot_rebase_evidence(hist, 0.1, now, tight, 1.62)
-    assert got is not None and got["evidence_ts"] == 100.0
-
-    # an already-ADMITTED boot_rebase entry is itself evidence: the
-    # third run on the same boot keeps recording
-    _write_history(
-        hist,
-        [
-            {
-                "ts": 200.0,
-                "sf": 0.1,
-                "queries": now,
-                "spread": tight,
-                "host_factor": 1.62,
-                "boot_rebase": {"factor": 1.62, "evidence_ts": 100.0},
-            }
-        ],
-    )
-    got = _boot_rebase_evidence(hist, 0.1, ev_times, tight, 1.58)
-    assert got is not None and got["evidence_ts"] == 200.0
-
-
-def test_retro_admit_refused_promotes_agreeing_quiet_pair(tmp_path):
-    """retro_admit_refused applies the SAME admission predicate to
-    stored refused entries against strictly-older evidence: in a
-    quiet / loud / quiet history where the second quiet run agrees
-    with the first, the second is promoted (marked retro) and the
-    loud one stays refused; re-running is idempotent."""
-    import json as _json
-
-    from bench import retro_admit_refused
-
-    cal = list(CALIBRATION_SLOTS)
-    hist = str(tmp_path / "h.jsonl")
-    quiet1 = {
-        "ts": 100.0, "sf": 0.1,
-        "queries": {c: 1.6 for c in cal},
-        "spread": {c: 0.4 for c in cal},
-        "host_factor": 1.6, "refused": True,
+    assert gate(old, entry(4, counts), entry(4, counts)) == {}
+    assert gate(old, entry(4, counts), entry(4, planted)) == {
+        "window_rank": {"jobs": [2, 3], "stages": [3, 4]}
     }
-    loud = {
-        "ts": 1500.0, "sf": 0.1,
-        "queries": {c: 3.2 for c in cal},
-        "spread": {c: 6.0 for c in cal},
-        "host_factor": 2.2, "refused": True,
-    }
-    quiet2 = {
-        "ts": 2000.0, "sf": 0.1,  # > BOOT_MIN_SEPARATION_SEC after quiet1
-        "queries": {c: 1.65 for c in cal},
-        "spread": {c: 0.45 for c in cal},
-        "host_factor": 1.62, "refused": True,
-    }
-    _write_history(hist, [quiet1, loud, quiet2])
-    promoted = retro_admit_refused(hist)
-    assert [p["ts"] for p in promoted] == [2000.0]
-    assert promoted[0]["boot_rebase"]["retro"] is True
-    assert promoted[0]["boot_rebase"]["evidence_ts"] == 100.0
-    recs = [_json.loads(l) for l in open(hist)]
-    assert [bool(r.get("refused")) for r in recs] == [True, True, False]
-    assert recs[2].get("boot_rebase", {}).get("retro") is True
-    # idempotent: nothing left to promote
-    assert retro_admit_refused(hist) == []
-    # the first quiet run (no older evidence) was NOT promoted
-    assert recs[0].get("boot_rebase") is None
-
-
-def test_boot_rebase_quietness_signals(tmp_path):
-    """r14 ADVICE: two tight-spread agreeing runs under a PERSISTENTLY
-    steady co-tenant load must not self-admit as a boot rebase. Two
-    orthogonal gates: measured hypervisor CPU steal above the bound
-    (either run) blocks admission, and so does a same-burst pair
-    (wall-clock separation below BOOT_MIN_SEPARATION_SEC). Entries
-    without a steal field (pre-r15 history) still pass the steal gate."""
-    import time as _time
-
-    from bench import (
-        BOOT_MIN_SEPARATION_SEC,
-        BOOT_STEAL_PCT_MAX,
-        _boot_rebase_evidence,
-    )
-
-    cal = list(CALIBRATION_SLOTS)
-    hist = str(tmp_path / "h.jsonl")
-    base_ev = {
-        "sf": 0.1,
-        "queries": {c: 1.6 for c in cal},
-        "spread": {c: 0.3 for c in cal},
-        "host_factor": 1.6,
-        "refused": True,
-    }
-    now = {c: 1.65 for c in cal}
-    tight = {c: 0.4 for c in cal}
-
-    # separation gate: evidence from the same burst is skipped
-    _write_history(hist, [dict(base_ev, ts=_time.time() - 60.0)])
-    assert _boot_rebase_evidence(hist, 0.1, now, tight, 1.62) is None
-    # ...but the same evidence, separated, admits
-    _write_history(
-        hist, [dict(base_ev, ts=_time.time() - BOOT_MIN_SEPARATION_SEC - 60)]
-    )
-    assert _boot_rebase_evidence(hist, 0.1, now, tight, 1.62) is not None
-
-    # own-run steal above the bound blocks admission outright
-    assert (
-        _boot_rebase_evidence(
-            hist, 0.1, now, tight, 1.62, own_steal=BOOT_STEAL_PCT_MAX + 1
-        )
-        is None
-    )
-    # clean own steal still admits
-    assert (
-        _boot_rebase_evidence(hist, 0.1, now, tight, 1.62, own_steal=0.3)
-        is not None
-    )
-
-    # stolen-CPU evidence entries are skipped; pre-r15 entries
-    # (no steal field) pass
-    _write_history(
-        hist,
-        [
-            dict(
-                base_ev,
-                ts=_time.time() - BOOT_MIN_SEPARATION_SEC - 60,
-                steal_pct=9.9,
-            )
-        ],
-    )
-    assert _boot_rebase_evidence(hist, 0.1, now, tight, 1.62) is None
-
-
-def test_spiked_slots_bound():
-    """Per-slot spike quarantine (r14: a 68 s trial spread sat inside
-    a recorded 5.71 s min): slots whose spread exceeds
-    SLOT_RELSPREAD_SANITY x their min are flagged; sub-noise-floor
-    slots are exempt (launch jitter dominates them)."""
-    from bench import NOISE_FLOOR_SEC, SLOT_RELSPREAD_SANITY, _spiked_slots
-
-    t = {"a": 5.71, "b": 2.0, "c": 0.2}
-    s = {
-        "a": 5.71 * SLOT_RELSPREAD_SANITY + 1,  # the r14 shape: spiked
-        "b": 2.0 * SLOT_RELSPREAD_SANITY - 0.1,  # loud but inside bound
-        "c": 0.2 * SLOT_RELSPREAD_SANITY + 5,  # sub-floor: exempt
-    }
-    assert t["c"] < NOISE_FLOOR_SEC
-    assert _spiked_slots(t, s) == ["a"]
-    assert _spiked_slots(t, {k: 0.1 for k in t}) == []
+    # a fresh entry after a deliberate increase is the new baseline
+    assert gate(entry(4, counts), entry(4, planted), entry(4, planted)) == {}
+    # no like-for-like prior: nothing to compare
+    assert gate(old, entry(32, counts), entry(4, planted)) is None
+    with pytest.raises(AssertionError, match="dropped"):
+        gate(entry(4, counts), entry(4, {"window_rank": counts["window_rank"]}))

@@ -462,6 +462,43 @@ def test_local_components_equal_star_contraction(spark, monkeypatch):
     assert local_df.columns == star_df.columns
 
 
+def test_non_integer_keys_take_star_contraction(spark, monkeypatch):
+    """The driver-side union-find compares ids as Python ints, so only
+    integer-keyed edge lists may take it: string keys (and fractional
+    doubles, which int() would merge) fall through to the distributed
+    star contraction, which labels each node with its component's
+    minimum key in the column's own ordering."""
+    from aws_seismic_data_pipeline_spark.llm import dedup as _dedup
+    from aws_seismic_data_pipeline_spark.llm.dedup import _min_label_components
+
+    calls = []
+    star = _dedup._star_components
+
+    def spy(pairs, max_rounds=200):
+        calls.append(pairs.schema["doc_a"].dataType.simpleString())
+        return star(pairs, max_rounds)
+
+    monkeypatch.setattr(_dedup, "_star_components", spy)
+    edges = [("b", "c"), ("c", "d"), ("x", "y"), ("y", "x"), ("q", "q")]
+    pairs = spark.createDataFrame(edges, "doc_a string, doc_b string")
+    labels = sorted(
+        (r.doc_id, r.component_id)
+        for r in _min_label_components(pairs).collect()
+    )
+    assert calls == ["string"]
+    assert labels == [
+        ("b", "b"), ("c", "b"), ("d", "b"), ("q", "q"), ("x", "x"), ("y", "x")
+    ]
+
+    frac = spark.createDataFrame([(1.5, 1.25)], "doc_a double, doc_b double")
+    got = sorted(
+        (r.doc_id, r.component_id)
+        for r in _min_label_components(frac).collect()
+    )
+    assert calls == ["string", "double"]
+    assert got == [(1.25, 1.25), (1.5, 1.25)]
+
+
 def test_star_components_path_graph_logarithmic_rounds(spark):
     """The round-count contract that motivated replacing min-label
     propagation with large-star/small-star contraction: a 256-node

@@ -284,3 +284,20 @@ def test_residual_encoding_cuts_quantization_error(spark):
         by_q.setdefault(r.query_id, set()).add(r.neighbor_id)
     hits = sum(len(truth[q] & by_q.get(q, set())) for q in range(20))
     assert hits / 100 >= 0.9, hits / 100
+
+
+def test_sim_topk_pq_rejects_empty_query_set(spark, tmp_path):
+    """An embeddings table with no query vectors (vec_id < 10) raises a
+    clear ValueError instead of an IndexError from inside the build."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    import pytest
+
+    from aws_seismic_data_pipeline_spark.llm.pq import sim_topk_pq
+
+    table = pq.read_table(f"{SF_DIR}/embeddings.parquet")
+    pq.write_table(
+        table.filter(pc.field("vec_id") >= 10), tmp_path / "embeddings.parquet"
+    )
+    with pytest.raises(ValueError, match="no query vectors"):
+        sim_topk_pq(spark, str(tmp_path))
