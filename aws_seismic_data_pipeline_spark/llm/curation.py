@@ -497,18 +497,24 @@ def _doc_grams(docs: DataFrame, n: int = DECON_NGRAM) -> DataFrame:
     its word-``n``-grams plus its benchmark-slice bucket — the shared
     front end of both decontamination plans, so the direct scan and
     the posting index can never tokenize differently."""
+    # over a projected ``toks`` column: split(text) inside the lambda
+    # would re-split the whole text per index (O(words²) per doc)
     gram_hashes = F.array_distinct(
         F.expr(
-            f"transform(sequence(1, size(split(text, ' ')) - {n - 1}),"
+            f"transform(sequence(1, size(toks) - {n - 1}),"
             " i -> cast(conv(substring(md5("
-            f"concat_ws(' ', slice(split(text, ' '), i, {n}))"
+            f"concat_ws(' ', slice(toks, i, {n}))"
             "), 1, 15), 16, 10) as bigint))"
         )
     )
-    return docs.filter(F.size(F.split("text", " ")) >= n).select(
-        "doc_id",
-        _md5_bucket("doc_id", 100).alias("bucket"),
-        gram_hashes.alias("gs"),
+    return (
+        docs.select("doc_id", F.split("text", " ").alias("toks"))
+        .filter(F.size("toks") >= n)
+        .select(
+            "doc_id",
+            _md5_bucket("doc_id", 100).alias("bucket"),
+            gram_hashes.alias("gs"),
+        )
     )
 
 
@@ -629,7 +635,10 @@ def build_gram_index(
         .select(
             "doc_id",
             F.size("gs").cast("long").alias("n_grams"),
-            F.explode("gs").alias("h"),
+            # gs is never empty; explode would infer a size(gs) > 0
+            # filter that is pushed below the projections with
+            # split(text) inlined into the shingle lambda
+            F.explode_outer("gs").alias("h"),
         )
         .localCheckpoint(eager=True)
     )
@@ -709,7 +718,7 @@ def text_decontaminate_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         bench = (
             grams.filter(F.col("bucket") < DECON_BENCH_PCT)
-            .select(F.explode("gs").alias("h"))
+            .select(F.explode_outer("gs").alias("h"))  # see build_gram_index
             .distinct()
         )
         return probe_gram_index(spark, index_dir, bench).localCheckpoint(
@@ -916,11 +925,13 @@ def curate_pretrain_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("keep"),
     )
     n = DECON_NGRAM
+    # over a projected ``toks`` column: split(text) inside the lambda
+    # would re-split the whole text per index (O(words²) per doc)
     gram_hashes = F.array_distinct(
         F.expr(
-            f"transform(sequence(1, size(split(text, ' ')) - {n - 1}),"
+            f"transform(sequence(1, size(toks) - {n - 1}),"
             " i -> cast(conv(substring(md5("
-            f"concat_ws(' ', slice(split(text, ' '), i, {n}))"
+            f"concat_ws(' ', slice(toks, i, {n}))"
             "), 1, 15), 16, 10) as bigint))"
         )
     )
@@ -928,7 +939,8 @@ def curate_pretrain_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # contaminated probe otherwise each run the full shingle pass
     # (the text_decontaminate fix, applied to the composition)
     grams = (
-        docs.filter(F.size(F.split("text", " ")) >= n)
+        docs.select("doc_id", "bucket", F.split("text", " ").alias("toks"))
+        .filter(F.size("toks") >= n)
         .select("doc_id", "bucket", gram_hashes.alias("gs"))
         .localCheckpoint(eager=True)
     )
@@ -1781,8 +1793,8 @@ def curate_release_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     ledger is |stages| + |shards| rows."""
     from aws_seismic_data_pipeline_spark.llm.dedup import (
         _LSH_VERIFY_TAU,
-        _MH_SHINGLE_EXPR,
         _mh_bands,
+        _mh_shingle_arrs,
         _mh_sig_cols,
         _min_label_components,
     )
@@ -1838,9 +1850,7 @@ def curate_release_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     s2 = s1.join(e_keep, "doc_id", "left_semi").localCheckpoint(eager=True)
 
     # stage 3: near-dup cluster-canonical over exact survivors
-    arrs = s2.filter(F.size(F.split("text", " ")) >= 3).select(
-        "doc_id", F.expr(_MH_SHINGLE_EXPR).alias("arr")
-    )
+    arrs = _mh_shingle_arrs(s2)
     bands = _mh_bands(arrs.select("doc_id", *_mh_sig_cols()))
     x, y = bands.alias("x"), bands.alias("y")
     cand = (

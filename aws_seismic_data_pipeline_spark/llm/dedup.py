@@ -96,23 +96,34 @@ NGRAM_JACCARD_EXACT_ORACLE = """
 
 def ngram_jaccard_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Uncapped word-3-gram Jaccard (semantics witness; see note above)."""
-    docs = spread(load_table(spark, sf_dir, "documents"), spark).filter(
-        F.size(F.split("text", " ")) >= 3
+    # tokens projected ONCE as a column the lambda slices: split(text)
+    # inside the lambda re-splits the whole text per index (O(words²)
+    # per doc). Non-nullable (a NULL text has < 3 tokens either way),
+    # so the pair filter infers no isnotnull(n_shingles), which would
+    # be pushed below the projections with split(text) inlined again
+    docs = (
+        spread(load_table(spark, sf_dir, "documents"), spark)
+        .select(
+            "doc_id",
+            F.split(F.coalesce("text", F.lit("")), " ").alias("toks"),
+        )
+        .filter(F.size("toks") >= 3)
     )
-    # slice(tokens, i, 3) keeps the 3-gram build O(n) per doc; writing
-    # element_at(split(text), i) inside the lambda re-splits the full
-    # text per index (O(n²)) — measured 20× slower at sf0.1.
     shingles = F.array_distinct(
         F.expr(
-            "transform(sequence(1, size(split(text, ' ')) - 2),"
-            " i -> concat_ws(' ', slice(split(text, ' '), i, 3)))"
+            "transform(sequence(1, size(toks) - 2),"
+            " i -> concat_ws(' ', slice(toks, i, 3)))"
         )
     )
     sized = docs.select(
         "doc_id", shingles.alias("shingles")
     ).withColumn("n_shingles", F.size("shingles"))
+    # explode_outer: every kept doc has a shingle, so it equals explode
+    # here — but it gets no inferred size(shingles) > 0 filter, which
+    # the optimizer would push below the projections and re-evaluate
+    # with split(text) inlined into the lambda (O(words²) again)
     exploded = sized.select(
-        "doc_id", "n_shingles", F.explode("shingles").alias("shingle")
+        "doc_id", "n_shingles", F.explode_outer("shingles").alias("shingle")
     )
     a = exploded.alias("a")
     b = exploded.alias("b")
@@ -245,13 +256,26 @@ def _mh_sig_cols() -> list:
 
 
 #: per-row word-3-gram → 60-bit int64 hash array (engine-portable md5
-#: prefix), the shingle stage shared by every MinHash operator
+#: prefix) over the projected ``toks`` column, the shingle stage shared
+#: by every MinHash operator (see :func:`_mh_shingle_arrs`)
 _MH_SHINGLE_EXPR = (
-    "array_distinct(transform(sequence(1, size(split(text, ' ')) - 2),"
+    "array_distinct(transform(sequence(1, size(toks) - 2),"
     " i -> cast(conv(substring(md5("
-    "concat_ws(' ', slice(split(text, ' '), i, 3))"
+    "concat_ws(' ', slice(toks, i, 3))"
     "), 1, 15), 16, 10) as bigint)))"
 )
+
+
+def _mh_shingle_arrs(docs: DataFrame) -> DataFrame:
+    """(doc_id, arr): :data:`_MH_SHINGLE_EXPR` over the docs with at
+    least 3 words. The tokens are projected as a column first, so the
+    shingle lambda slices one split array instead of re-splitting the
+    text per index (O(words²) per doc)."""
+    return (
+        docs.select("doc_id", F.split("text", " ").alias("toks"))
+        .filter(F.size("toks") >= 3)
+        .select("doc_id", F.expr(_MH_SHINGLE_EXPR).alias("arr"))
+    )
 
 
 def _mh_band_structs() -> list:
@@ -278,10 +302,7 @@ def _mh_signatures(docs: DataFrame) -> DataFrame:
     """(doc_id, s0..s11): 12 universal-hash MinHash signature components
     over distinct word-3-gram hashes — a pure per-row map, NO shuffle.
     Docs with <3 words carry no shingles and are excluded."""
-    arrs = docs.filter(F.size(F.split("text", " ")) >= 3).select(
-        "doc_id", F.expr(_MH_SHINGLE_EXPR).alias("arr")
-    )
-    return arrs.select("doc_id", *_mh_sig_cols())
+    return _mh_shingle_arrs(docs).select("doc_id", *_mh_sig_cols())
 
 
 def _mh_bands(sigs: DataFrame) -> DataFrame:
@@ -1183,14 +1204,17 @@ def _capped_shingle_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     containment — a pair with low Jaccard can still have total
     containment, so the similarity filters must sit on the consumers,
     not here)."""
-    docs = spread(load_table(spark, sf_dir, "documents"), spark).filter(
-        F.size(F.split("text", " ")) >= 3
+    docs = (
+        spread(load_table(spark, sf_dir, "documents"), spark)
+        .select("doc_id", F.split("text", " ").alias("toks"))
+        .filter(F.size("toks") >= 3)
     )
+    # over the projected tokens (see _mh_shingle_arrs)
     shingle_hashes = F.array_distinct(
         F.expr(
-            "transform(sequence(1, size(split(text, ' ')) - 2),"
+            "transform(sequence(1, size(toks) - 2),"
             " i -> cast(conv(substring(md5("
-            "concat_ws(' ', slice(split(text, ' '), i, 3))"
+            "concat_ws(' ', slice(toks, i, 3))"
             "), 1, 15), 16, 10) as bigint))"
         )
     )
@@ -1203,7 +1227,8 @@ def _capped_shingle_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     exploded = arrs.select(
         "doc_id",
         F.size("arr").alias("n_shingles"),
-        F.explode("arr").alias("h"),
+        # never empty here; see ngram_jaccard_exact for why not explode
+        F.explode_outer("arr").alias("h"),
     ).localCheckpoint(eager=True)
     # stop-shingle cap as a TINY broadcast anti-join (|stop-list| =
     # #shingles over the cap), not a window: no sort on h, and the
@@ -1774,10 +1799,9 @@ def dedup_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpointed (bounded by |candidate docs|); the banding pass
     recomputes the cheap per-row shingle expression instead of
     materializing a corpus-sized array frame in executor storage."""
-    docs = spread(load_table(spark, sf_dir, "documents"), spark).filter(
-        F.size(F.split("text", " ")) >= 3
+    arrs = _mh_shingle_arrs(
+        spread(load_table(spark, sf_dir, "documents"), spark)
     )
-    arrs = docs.select("doc_id", F.expr(_MH_SHINGLE_EXPR).alias("arr"))
     bands = _mh_bands(arrs.select("doc_id", *_mh_sig_cols()))
     x, y = bands.alias("x"), bands.alias("y")
     cand = (
@@ -2354,11 +2378,11 @@ def dedup_span_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_llm_ops.py."""
     docs = spread(load_table(spark, sf_dir, "documents"), spark)
     k = _SPAN_K
+    # over the projected tokens (see _mh_shingle_arrs)
     sh_arr = F.expr(
-        f"transform(sequence(1, greatest(size(split(text, ' ')) - {k - 1},"
-        " 0)),"
+        f"transform(sequence(1, greatest(size(toks) - {k - 1}, 0)),"
         f" i -> cast(conv(substring(md5(concat_ws(' ',"
-        f" slice(split(text, ' '), i, {k}))), 1, 15), 16, 10) as bigint))"
+        f" slice(toks, i, {k}))), 1, 15), 16, 10) as bigint))"
     )
     # NOT checkpointed (unlike dedup_span_strip): here the second
     # consumer is one broadcast semi-join that pipelines into the
@@ -2366,8 +2390,8 @@ def dedup_span_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # wash-to-negative in interleaved A/B (the r15 optimization
     # round's measure-first rule)
     shingled = docs.select(
-        "doc_id", F.posexplode(sh_arr).alias("pos", "h")
-    )
+        "doc_id", F.split("text", " ").alias("toks")
+    ).select("doc_id", F.posexplode(sh_arr).alias("pos", "h"))
     dup = (
         shingled.groupBy("h")
         .agg(F.count_distinct("doc_id").alias("nd"))
@@ -2464,18 +2488,20 @@ def dedup_span_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load_table(spark, sf_dir, "documents"), spark)
     k = _SPAN_K
     toks_arr = F.split(F.col("text"), " ")
+    # over the projected tokens (see _mh_shingle_arrs)
     sh_arr = F.expr(
-        f"transform(sequence(1, greatest(size(split(text, ' ')) - {k - 1},"
-        " 0)),"
+        f"transform(sequence(1, greatest(size(toks) - {k - 1}, 0)),"
         f" i -> cast(conv(substring(md5(concat_ws(' ',"
-        f" slice(split(text, ' '), i, {k}))), 1, 15), 16, 10) as bigint))"
+        f" slice(toks, i, {k}))), 1, 15), 16, 10) as bigint))"
     )
     # the md5-shingle posexplode is the expensive derivation and feeds
     # BOTH the dup aggregate and the covered join — materialize it once
     # (two full shingle passes in one plan otherwise; guide §1.2)
-    shingled = docs.select(
-        "doc_id", F.posexplode(sh_arr).alias("pos", "h")
-    ).localCheckpoint(eager=True)
+    shingled = (
+        docs.select("doc_id", toks_arr.alias("toks"))
+        .select("doc_id", F.posexplode(sh_arr).alias("pos", "h"))
+        .localCheckpoint(eager=True)
+    )
     dup = (
         shingled.groupBy("h")
         .agg(F.count_distinct("doc_id").alias("nd"))

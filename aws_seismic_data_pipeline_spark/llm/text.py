@@ -455,9 +455,13 @@ def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     DataFrame — shared by text_winnow_fingerprints (the fingerprint
     query) and dedup_winnow_pairs (the pair-decision query)."""
     toks = F.split(F.col("text"), " ")
+    # >= 6 tokens <=> >= 4 gram hashes (one window). The bound sits on
+    # the token column: a size(h) filter would be pushed below the
+    # projections with split(text) inlined into the hash lambda,
+    # re-splitting the text per index (O(words²) per doc)
     grams = (
         docs.select("doc_id", toks.alias("toks"))
-        .filter(F.size("toks") >= 3)
+        .filter(F.size("toks") >= 6)
         .select(
             "doc_id",
             F.expr(
@@ -468,19 +472,16 @@ def winnow_fingerprints(docs: DataFrame) -> DataFrame:
             ).alias("h"),
         )
     )
-    return (
-        grams.filter(F.size("h") >= 4)
-        .select(
-            "doc_id",
-            F.explode(
-                F.array_distinct(
-                    F.expr(
-                        "transform(sequence(1, size(h) - 3),"
-                        " j -> array_min(slice(h, j, 4)))"
-                    )
+    return grams.select(
+        "doc_id",
+        F.explode(
+            F.array_distinct(
+                F.expr(
+                    "transform(sequence(1, size(h) - 3),"
+                    " j -> array_min(slice(h, j, 4)))"
                 )
-            ).alias("fingerprint"),
-        )
+            )
+        ).alias("fingerprint"),
     )
 
 
@@ -1239,14 +1240,17 @@ def text_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load_table(spark, sf_dir, "documents"), spark)
     toks = F.split("text", " ")
     pairs = (
-        docs.filter(F.size(toks) >= 2)
+        # tokens projected once: split(text) inside the lambda would
+        # re-split the whole text per index (O(words²) per doc)
+        docs.select("doc_id", toks.alias("toks"))
+        .filter(F.size("toks") >= 2)
         .select(
             "doc_id",
             F.explode(
                 F.expr(
-                    "transform(sequence(1, size(split(text, ' ')) - 1),"
-                    " i -> struct(element_at(split(text, ' '), i) AS w1,"
-                    " element_at(split(text, ' '), i + 1) AS w2))"
+                    "transform(sequence(1, size(toks) - 1),"
+                    " i -> struct(element_at(toks, i) AS w1,"
+                    " element_at(toks, i + 1) AS w2))"
                 )
             ).alias("p"),
         )
@@ -1355,14 +1359,17 @@ def text_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load_table(spark, sf_dir, "documents"), spark)
     toks = F.split("text", " ")
     pairs = (
-        docs.filter(F.size(toks) >= 2)
+        # tokens projected once: split(text) inside the lambda would
+        # re-split the whole text per index (O(words²) per doc)
+        docs.select("doc_id", toks.alias("toks"))
+        .filter(F.size("toks") >= 2)
         .select(
             "doc_id",
             F.explode(
                 F.expr(
-                    "transform(sequence(1, size(split(text, ' ')) - 1),"
-                    " i -> struct(element_at(split(text, ' '), i) AS w1,"
-                    " element_at(split(text, ' '), i + 1) AS w2))"
+                    "transform(sequence(1, size(toks) - 1),"
+                    " i -> struct(element_at(toks, i) AS w1,"
+                    " element_at(toks, i + 1) AS w2))"
                 )
             ).alias("p"),
         )
@@ -1506,8 +1513,12 @@ def text_kneser_ney_trigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shared bigram tables), five join-backs on (wᵢ...) keys — the
     same join-back shape as the bigram model, shuffling model tables
     (vocab-sized) never the corpus twice."""
-    docs = spread(load_table(spark, sf_dir, "documents"), spark)
-    toks = "split(text, ' ')"
+    # tokens projected once as a column: split(text) inside the lambdas
+    # would re-split the whole text per index (O(words²) per doc)
+    docs = spread(load_table(spark, sf_dir, "documents"), spark).select(
+        "doc_id", F.split("text", " ").alias("toks")
+    )
+    toks = "toks"
     triples = (
         docs.filter(F.expr(f"size({toks})") >= 3)
         .select(
@@ -1723,8 +1734,12 @@ def text_kneser_ney_4gram(spark: SparkSession, sf_dir: str) -> DataFrame:
     once per count table, all model tables vocab-sized, derived by
     groupBy from the order above), seven join-backs on word keys —
     model tables shuffle, the corpus never shuffles twice."""
-    docs = spread(load_table(spark, sf_dir, "documents"), spark)
-    toks = "split(text, ' ')"
+    # tokens projected once as a column: split(text) inside the lambdas
+    # would re-split the whole text per index (O(words²) per doc)
+    docs = spread(load_table(spark, sf_dir, "documents"), spark).select(
+        "doc_id", F.split("text", " ").alias("toks")
+    )
+    toks = "toks"
     quads = (
         docs.filter(F.expr(f"size({toks})") >= 4)
         .select(

@@ -91,6 +91,83 @@ def _footer_stats_rows_local_multi(paths: list[str], columns):
         return None
 
 
+#: footer key under which Spark's parquet writer records the row schema
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _as_nullable(dt):
+    """Spark's ``DataType.asNullable``: every struct field, array
+    element and map value nullable — what a file-source relation makes
+    of any data schema, inferred or given."""
+    from pyspark.sql.types import ArrayType, MapType, StructField, StructType
+
+    if isinstance(dt, StructType):
+        return StructType(
+            [
+                StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType))
+    return dt
+
+
+def footer_schema(path: str):
+    """The Spark ``StructType`` one local data file's footer records
+    (Spark's row metadata, made nullable) — exactly what schema
+    inference derives from that footer, read with pyarrow on the
+    driver (the footer's KBs, no Spark job). None when the path is not
+    a plain local path, the footer carries no Spark row metadata
+    (files written by pyarrow or DuckDB: inference would convert the
+    parquet schema under session settings) or the read fails."""
+    import json
+    import urllib.parse
+
+    if urllib.parse.urlparse(path).scheme:
+        return None
+    try:
+        import pyarrow.parquet as pq
+        from pyspark.sql.types import StructType
+
+        raw = (pq.read_metadata(path).metadata or {}).get(_SPARK_ROW_METADATA)
+        if raw is None:
+            return None
+        return _as_nullable(StructType.fromJson(json.loads(raw)))
+    except Exception:
+        return None
+
+
+def read_data_files(
+    spark: SparkSession, paths: list[str], merge_schema: bool = False
+) -> DataFrame:
+    """``spark.read.parquet(*paths)`` over table data files with the
+    data schema PINNED from their footers instead of inferred. Spark's
+    inference runs a footer-reading job for every read (over one file
+    without ``mergeSchema``, over all of them with it); the table's
+    files already carry the answer.
+
+    Without ``merge_schema`` inference reads the FIRST path's footer,
+    so pinning that footer's schema is the same schema by construction.
+    With ``merge_schema`` the pin holds only when every file records
+    one schema — then the union is that schema; files of an evolved
+    table (ADD COLUMN, mergeSchema-on-MERGE, or files registered with
+    another schema) differ and keep the ``mergeSchema`` read, as does
+    any read :func:`footer_schema` cannot answer."""
+    schema = footer_schema(paths[0])
+    if merge_schema and schema is not None:
+        if any(footer_schema(p) != schema for p in paths[1:]):
+            schema = None
+    if schema is not None:
+        return spark.read.schema(schema).parquet(*paths)
+    reader = spark.read
+    if merge_schema:
+        reader = reader.option("mergeSchema", "true")
+    return reader.parquet(*paths)
+
+
 def _decode_input_file() -> F.Column:
     """``input_file_name()`` as a canonical local path: strip the
     ``file:`` scheme and decode the URI's %-escapes JVM-side, so paths

@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from aws_seismic_data_pipeline_spark.catalog import load_table, prepare
 from aws_seismic_data_pipeline_spark.registry import register
+from aws_seismic_data_pipeline_spark.sources.footers import read_data_files
 from aws_seismic_data_pipeline_spark.sources.table.deletes import (
     _live_delete_records,
 )
@@ -260,12 +261,10 @@ def table_changes(
                 frames.append(_tag(pre, _CT_DELETE, snap))
         if not adds and not removes:
             continue
-        # ONE mergeSchema read over the commit's touched files keeps
+        # ONE merged-schema read over the commit's touched files keeps
         # both diff sides on the identical unified schema; rows are
         # routed to their side by the file that carried them
-        both = spark.read.option("mergeSchema", "true").parquet(
-            *adds, *removes
-        )
+        both = read_data_files(spark, [*adds, *removes], merge_schema=True)
         path_col = _normalized_input_file()
         if adds and removes:
             old = _subtract_live_deletes(
@@ -323,7 +322,7 @@ def table_changes(
         if first_add is not None:
             try:
                 key_type = (
-                    spark.read.parquet(first_add)
+                    read_data_files(spark, [first_add])
                     .schema[key]
                     .dataType.simpleString()
                 )
@@ -399,7 +398,7 @@ def _delete_preimages(
         )
     if not candidates:
         return None
-    rows = spark.read.option("mergeSchema", "true").parquet(*candidates)
+    rows = read_data_files(spark, candidates, merge_schema=True)
     # subtract deletes already in force BEFORE this commit, then keep
     # exactly this commit's keys
     rows = _subtract_live_deletes(rows, man, key, snap - 1, lman=lman)

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from aws_seismic_data_pipeline_spark.catalog import load_table, prepare
 from aws_seismic_data_pipeline_spark.registry import register
+from aws_seismic_data_pipeline_spark.sources.footers import read_data_files
 from aws_seismic_data_pipeline_spark.sources.table.logstore import (
     manifest_data_dir as _mdd,
 )
@@ -201,10 +202,16 @@ def read_with_deletes(
     delete set from growing unboundedly."""
     from aws_seismic_data_pipeline_spark.sources.table import localman
 
-    data = manifest_pruned_scan(
-        spark, manifest_dir, column, -float("inf"), float("inf"), as_of=as_of
-    )
     lman = localman.load(manifest_dir)
+    data = manifest_pruned_scan(
+        spark,
+        manifest_dir,
+        column,
+        -float("inf"),
+        float("inf"),
+        as_of=as_of,
+        lman=lman,
+    )
     if lman is not None:
         # delete keys resolved DRIVER-SIDE (metadata-scale by contract);
         # a window with no live deletes skips the anti-join outright
@@ -376,10 +383,10 @@ def compact_equality_deletes(
     new_paths: list[str] = []
     if candidates:
         out_dir = os.path.dirname(candidates[0])
-        # mergeSchema: evolved columns present in SOME candidate files
+        # merge_schema: evolved columns present in SOME candidate files
         # must survive the rewrite (inference from a pre-evolution file
         # would silently drop them)
-        touched = spark.read.option("mergeSchema", "true").parquet(*candidates)
+        touched = read_data_files(spark, candidates, merge_schema=True)
         kept = touched.join(
             F.broadcast(dkeys),
             touched[column].cast("double") == dkeys["_k"],
@@ -396,7 +403,7 @@ def compact_equality_deletes(
             if (
                 _n
                 if _n is not None
-                else spark.read.parquet(part).limit(1).count()
+                else read_data_files(spark, [part]).limit(1).count()
             ) == 0:
                 continue  # a fully-deleted range: no file, no stats row
             dst = os.path.join(

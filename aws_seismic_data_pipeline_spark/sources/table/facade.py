@@ -23,6 +23,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from aws_seismic_data_pipeline_spark.sources.footers import read_data_files
 from aws_seismic_data_pipeline_spark.sources.table.logstore import (
     manifest_data_dir as _mdd,
 )
@@ -277,7 +278,7 @@ class GovernedTable:
         snapshot, manifest row, claim — is touched."""
         recheck = None
         if new_paths:
-            recheck = self._gate(self.spark.read.parquet(*new_paths))
+            recheck = self._gate(read_data_files(self.spark, new_paths))
         snap, _ = R.append_stats_manifest_retry(
             self.spark,
             new_paths,

@@ -17,7 +17,10 @@ from aws_seismic_data_pipeline_spark.registry import register
 from aws_seismic_data_pipeline_spark.sources.table.logstore import (
     manifest_data_dir as _mdd,
 )
-from aws_seismic_data_pipeline_spark.sources.footers import _RG_PRUNE_RANGE
+from aws_seismic_data_pipeline_spark.sources.footers import (
+    _RG_PRUNE_RANGE,
+    read_data_files,
+)
 from aws_seismic_data_pipeline_spark.sources.table.commit import (
     ConcurrentCommitError,
     _claimed_next_snapshot,
@@ -482,10 +485,10 @@ def commit_data_compaction(
     out_dir = os.path.dirname(sorted(paths)[0])
     snap = _claimed_next_snapshot(spark, manifest_dir)
     tmp = os.path.join(out_dir, f".compact_{snap}_stage")
-    # mergeSchema: after evolve_schema_add a mixed file set can carry the
-    # evolved column in SOME files; schema inference from a pre-evolution
-    # file would silently drop it from the rewritten output
-    spark.read.option("mergeSchema", "true").parquet(*paths).coalesce(
+    # merge_schema: after evolve_schema_add a mixed file set can carry
+    # the evolved column in SOME files; schema inference from a
+    # pre-evolution file would silently drop it from the rewritten output
+    read_data_files(spark, list(paths), merge_schema=True).coalesce(
         1
     ).write.mode("overwrite").parquet(tmp)
     part = _glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
@@ -956,7 +959,7 @@ def merge_through_manifest(
         else:
             by_dir = {os.path.dirname(intersecting[0]): intersecting}
         for out_dir, group in by_dir.items():
-            touched_g = spark.read.option("mergeSchema", "true").parquet(*group)
+            touched_g = read_data_files(spark, group, merge_schema=True)
             # ONE join serves both MATCHED clauses (r16 fusion — was a
             # del-keys anti-join THEN a d_upd left join, two broadcast
             # builds per partition group): left-join the full flagged
@@ -1002,7 +1005,7 @@ def merge_through_manifest(
                 new_paths.append(dst)
             _shutil.rmtree(tmp, ignore_errors=True)
         n_rewritten = len(new_paths)
-        touched_keys = spark.read.parquet(*intersecting).select(key)
+        touched_keys = read_data_files(spark, intersecting).select(key)
         # unmatched delete-clause rows do nothing (matched-only
         # semantics); the flag column never reaches a written file
         if stats_out is not None:
@@ -1100,7 +1103,9 @@ def merge_through_manifest(
         # footer-only row-count probe (a Spark job per part file before)
         _n = localman.parquet_num_rows(part)
         if (
-            _n if _n is not None else spark.read.parquet(part).limit(1).count()
+            _n
+            if _n is not None
+            else read_data_files(spark, [part]).limit(1).count()
         ) > 0:
             rel_dir = os.path.relpath(os.path.dirname(part), tmp)
             dst_dir = root if rel_dir == "." else os.path.join(root, rel_dir)
@@ -1342,7 +1347,7 @@ def merge_evolve_through_manifest(
         )
         if not sample:
             raise ValueError(f"empty stats manifest at {manifest_dir}")
-        physical = set(spark.read.parquet(sample[0].path).columns)
+        physical = set(read_data_files(spark, [sample[0].path]).columns)
         declared = {
             r.column_name
             for r in man.filter(F.col("op") == "schema_add")
@@ -2330,8 +2335,8 @@ def _zcluster_rewrite(
         # the extra segment carries no '=').
         dst = os.path.join(out_dir, f"{prefix}-{snap}")
         (
-            # mergeSchema: evolved columns must survive the rewrite
-            spark.read.option("mergeSchema", "true").parquet(*group)
+            # merge_schema: evolved columns must survive the rewrite
+            read_data_files(spark, group, merge_schema=True)
             .withColumn("_zkey", F.expr(zkey_sql))
             .repartitionByRange(n_out, "_zkey")
             .sortWithinPartitions("_zkey")

@@ -30,6 +30,7 @@ from aws_seismic_data_pipeline_spark.sources.footers import (
     _RG_PRUNE_RANGE,
     _decode_input_file,
     rangekey_write,
+    read_data_files,
     read_footer_stats_multi,
 )
 from aws_seismic_data_pipeline_spark.sources.table.commit import (
@@ -607,6 +608,7 @@ def manifest_pruned_scan(
     as_of: int | None = None,
     partition_filter: dict[str, str] | None = None,
     merge_schema: bool = False,
+    lman=None,
 ) -> DataFrame:
     """Answer a key-range query through the PERSISTED manifest: an
     agg+filter over the stats table computes which files can overlap
@@ -636,8 +638,17 @@ def manifest_pruned_scan(
     :mod:`.localman` — the pruning question is over kilobytes of local
     metadata and a Spark job chain per scan was the dominant cost of
     every governed verb (r15 profiling); the Spark path remains as the
-    fallback and only the surviving files' DATA scan is distributed."""
-    lman = localman.load(manifest_dir)
+    fallback and only the surviving files' DATA scan is distributed.
+    ``lman`` passes a manifest frame the caller already loaded
+    (:func:`localman.load`) instead of re-reading it.
+
+    The data schema is pinned from the surviving files' footers
+    (:func:`footers.read_data_files`), so opening them runs no
+    schema-inference job; ``merge_schema`` (post-evolution tables mix
+    physical schemas — pre-ADD files lack the new column) unions the
+    files' schemas instead whenever they disagree."""
+    if lman is None:
+        lman = localman.load(manifest_dir)
     if lman is not None:
         localman.check_floor(lman, as_of, manifest_dir)
         vis = localman.visible(lman, as_of)
@@ -645,18 +656,12 @@ def manifest_pruned_scan(
             vis, partition_filter, manifest_dir
         )
         matching = localman.matching_paths(vis, column, lo, hi)
-        if not matching:
-            any_paths = vis["path"].unique()
-            if len(any_paths) == 0:
-                raise ValueError(f"empty stats manifest at {manifest_dir}")
-            return spark.read.parquet(
-                sorted(any_paths)[0]
-            ).filter(F.lit(False))
-        reader = spark.read
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        return reader.parquet(*matching).filter(
-            F.col(column).between(lo, hi)
+        return _open_matching(
+            spark,
+            matching,
+            lambda: _any_path_pd(vis, manifest_dir),
+            {column: (lo, hi)},
+            merge_schema,
         )
     raw = spark.read.parquet(_mdd(manifest_dir))
     if as_of is not None:
@@ -697,20 +702,49 @@ def manifest_pruned_scan(
         .select("path")
         .collect()
     ]
+    return _open_matching(
+        spark,
+        matching,
+        lambda: _any_path(manifest, manifest_dir),
+        {column: (lo, hi)},
+        merge_schema,
+    )
+
+
+def _any_path_pd(vis, manifest_dir: str) -> str:
+    """One visible data file (localman frame), for an empty result's
+    schema; an empty manifest raises."""
+    any_paths = vis["path"].unique()
+    if len(any_paths) == 0:
+        raise ValueError(f"empty stats manifest at {manifest_dir}")
+    return sorted(any_paths)[0]
+
+
+def _any_path(manifest: DataFrame, manifest_dir: str) -> str:
+    """Spark-fallback twin of :func:`_any_path_pd`."""
+    any_path = manifest.select("path").limit(1).collect()
+    if not any_path:
+        raise ValueError(f"empty stats manifest at {manifest_dir}")
+    return any_path[0].path
+
+
+def _open_matching(
+    spark: SparkSession,
+    matching: list[str],
+    any_path,
+    predicates: dict[str, tuple[float, float]],
+    merge_schema: bool,
+) -> DataFrame:
+    """Open a pruned scan's surviving files with every residual
+    predicate pushed down. An empty list keeps the data schema: one
+    visible file (``any_path()``) is opened and filtered to nothing —
+    a footer read, no data pages."""
     if not matching:
-        # preserve the data schema on an empty result: open one manifest
-        # file lazily (schema-only footer read, no data pages)
-        any_path = manifest.select("path").limit(1).collect()
-        if not any_path:
-            raise ValueError(f"empty stats manifest at {manifest_dir}")
-        return spark.read.parquet(any_path[0].path).filter(F.lit(False))
-    reader = spark.read
-    if merge_schema:
-        # post-evolution tables mix physical schemas (pre-ADD files
-        # lack the new column); union them instead of sampling one
-        # file's footer for the schema
-        reader = reader.option("mergeSchema", "true")
-    return reader.parquet(*matching).filter(F.col(column).between(lo, hi))
+        return read_data_files(spark, [any_path()]).filter(F.lit(False))
+    out = read_data_files(spark, matching, merge_schema)
+    for column, (lo, hi) in predicates.items():
+        out = out.filter(F.col(column).between(lo, hi))
+    return out
 
 
 def manifest_pruned_scan_multi(
@@ -747,20 +781,13 @@ def manifest_pruned_scan_multi(
             vis, partition_filter, manifest_dir
         )
         matching = localman.surviving_paths_multi(vis, predicates)
-        if not matching:
-            any_paths = vis["path"].unique()
-            if len(any_paths) == 0:
-                raise ValueError(f"empty stats manifest at {manifest_dir}")
-            return spark.read.parquet(
-                sorted(any_paths)[0]
-            ).filter(F.lit(False))
-        reader = spark.read
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        out = reader.parquet(*matching)
-        for column, (lo, hi) in predicates.items():
-            out = out.filter(F.col(column).between(lo, hi))
-        return out
+        return _open_matching(
+            spark,
+            matching,
+            lambda: _any_path_pd(vis, manifest_dir),
+            predicates,
+            merge_schema,
+        )
     raw = spark.read.parquet(_mdd(manifest_dir))
     if as_of is not None:
         floor = _history_floor(raw)
@@ -800,18 +827,13 @@ def manifest_pruned_scan_multi(
         )
         survivors = survivors.join(eliminated, "path", "left_anti")
     matching = [r.path for r in survivors.collect()]
-    if not matching:
-        any_path = manifest.select("path").limit(1).collect()
-        if not any_path:
-            raise ValueError(f"empty stats manifest at {manifest_dir}")
-        return spark.read.parquet(any_path[0].path).filter(F.lit(False))
-    reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    out = reader.parquet(*matching)
-    for column, (lo, hi) in predicates.items():
-        out = out.filter(F.col(column).between(lo, hi))
-    return out
+    return _open_matching(
+        spark,
+        matching,
+        lambda: _any_path(manifest, manifest_dir),
+        predicates,
+        merge_schema,
+    )
 
 
 def manifest_pruned_scan_multi_rowgroup(
@@ -856,20 +878,13 @@ def manifest_pruned_scan_multi_rowgroup(
             vis, partition_filter, manifest_dir
         )
         matching = localman.surviving_paths_multi_rowgroup(vis, predicates)
-        if not matching:
-            any_paths = vis["path"].unique()
-            if len(any_paths) == 0:
-                raise ValueError(f"empty stats manifest at {manifest_dir}")
-            return spark.read.parquet(
-                sorted(any_paths)[0]
-            ).filter(F.lit(False))
-        reader = spark.read
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        out = reader.parquet(*matching)
-        for column, (lo, hi) in predicates.items():
-            out = out.filter(F.col(column).between(lo, hi))
-        return out
+        return _open_matching(
+            spark,
+            matching,
+            lambda: _any_path_pd(vis, manifest_dir),
+            predicates,
+            merge_schema,
+        )
     raw = spark.read.parquet(_mdd(manifest_dir))
     if as_of is not None:
         floor = _history_floor(raw)
@@ -894,18 +909,13 @@ def manifest_pruned_scan_multi_rowgroup(
         manifest.select("path").distinct().join(eliminated, "path", "left_anti")
     )
     matching = sorted(r.path for r in survivors.collect())
-    if not matching:
-        any_path = manifest.select("path").limit(1).collect()
-        if not any_path:
-            raise ValueError(f"empty stats manifest at {manifest_dir}")
-        return spark.read.parquet(any_path[0].path).filter(F.lit(False))
-    reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    out = reader.parquet(*matching)
-    for column, (lo, hi) in predicates.items():
-        out = out.filter(F.col(column).between(lo, hi))
-    return out
+    return _open_matching(
+        spark,
+        matching,
+        lambda: _any_path(manifest, manifest_dir),
+        predicates,
+        merge_schema,
+    )
 
 
 def _rowgroup_eliminated_paths(
@@ -1696,7 +1706,7 @@ def manifest_incremental_scan(
         paths = [r.path for r in added.collect()]
     if not paths:
         return spark.createDataFrame([], "doc_id long")
-    return spark.read.parquet(*paths)
+    return read_data_files(spark, paths)
 
 
 @register(
@@ -1821,7 +1831,7 @@ def manifest_count_range(
                 .to_dict()
             )
             in_range = (
-                spark.read.parquet(*scan_paths)
+                read_data_files(spark, scan_paths)
                 .filter(F.col(column).between(lo, hi))
                 .groupBy(_decode_input_file().alias("path"))
                 .agg(F.count(F.lit(1)).alias("n"))
@@ -1888,7 +1898,7 @@ def manifest_count_range(
             .collect()
         }
         in_range = (
-            spark.read.parquet(*scan_paths)
+            read_data_files(spark, scan_paths)
             .filter(F.col(column).between(lo, hi))
             .groupBy(_decode_input_file().alias("path"))
             .agg(F.count(F.lit(1)).alias("n"))

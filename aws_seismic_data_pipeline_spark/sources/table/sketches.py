@@ -15,6 +15,7 @@ from aws_seismic_data_pipeline_spark.registry import register
 from aws_seismic_data_pipeline_spark.sources.footers import (
     _decode_input_file,
     rangekey_write,
+    read_data_files,
     read_footer_stats_multi,
 )
 from aws_seismic_data_pipeline_spark.sources.table.commit import (
@@ -98,7 +99,7 @@ def write_kmv_sketch_manifest(
     if not paths:
         raise ValueError("write_kmv_sketch_manifest: empty path list")
     hashed = (
-        spark.read.parquet(*paths)
+        read_data_files(spark, paths)
         .select(
             _decode_input_file().alias("path"),
             F.col(column).cast("long").alias("key"),
@@ -291,7 +292,7 @@ def build_bloom_manifest(
     m_bits = max(1024, 1 << _math.ceil(_math.log2(bits_per_key * max_rows)))
     n_words = m_bits // 64
     rows = (
-        spark.read.parquet(*paths)
+        read_data_files(spark, paths)
         .select(
             _decode_input_file().alias("path"),
             F.col(column).alias("k"),
@@ -440,8 +441,8 @@ def bloom_pruned_scan(
         any_path = man.select("path").limit(1).collect()
         if not any_path:
             raise ValueError(f"empty bloom manifest at {bloom_dir}")
-        return spark.read.parquet(any_path[0].path).filter(F.lit(False))
-    return spark.read.parquet(*matching).filter(
+        return read_data_files(spark, [any_path[0].path]).filter(F.lit(False))
+    return read_data_files(spark, matching).filter(
         F.col(column).isin(list(keys))
     )
 

@@ -1386,3 +1386,200 @@ def test_vacuum_is_clone_aware(spark, tmp_path):
     n_del2, _ = t.vacuum(older_than_seconds=0)
     assert n_del2 == len(files_before)
     assert t.scan().count() == docs.count()  # current read intact
+
+
+# ---- schema pinned from the Parquet footer -------------------------------
+
+
+def _orders_table(spark, tmp_path, n_files=8):
+    orders = spark.read.parquet(f"{SF_DIR}/orders.parquet").select(
+        "o_orderkey", "o_orderstatus", "o_totalprice"
+    )
+    t = GovernedTable.create(
+        spark,
+        orders,
+        str(tmp_path / "data"),
+        str(tmp_path / "manifest"),
+        "o_orderkey",
+        n_files=n_files,
+    )
+    return orders, t
+
+
+def _assert_pins_equal_inference(spark, paths):
+    from aws_seismic_data_pipeline_spark.sources.footers import (
+        footer_schema,
+        read_data_files,
+    )
+
+    for p in paths:
+        assert footer_schema(p) == spark.read.parquet(p).schema, p
+    assert (
+        read_data_files(spark, paths).schema
+        == spark.read.parquet(*paths).schema
+    )
+    assert (
+        read_data_files(spark, paths, merge_schema=True).schema
+        == spark.read.option("mergeSchema", "true").parquet(*paths).schema
+    )
+
+
+def test_pinned_schema_equals_inferred_schema(spark, tmp_path):
+    """The footer-pinned data schema is exactly Spark's inferred one on
+    every file a governed verb writes: create, MERGE, OPTIMIZE, DELETE
+    compaction — and the change feed read over those commits keeps
+    its schema. Nested types pin nullable, as inference makes them."""
+    from aws_seismic_data_pipeline_spark.sources.footers import footer_schema
+
+    orders, t = _orders_table(spark, tmp_path)
+    _assert_pins_equal_inference(spark, t.visible_files())
+    s0 = t.scan().schema
+
+    delta = orders.filter(F.col("o_orderkey").between(100, 300)).select(
+        "o_orderkey",
+        F.lit("X").alias("o_orderstatus"),
+        (F.col("o_totalprice") + 1.0).alias("o_totalprice"),
+    )
+    snap_m, _, _ = t.merge(delta, ["o_orderstatus", "o_totalprice"])
+    _assert_pins_equal_inference(spark, t.visible_files())
+    t.optimize(target_bytes=64 * 1024 * 1024)
+    _assert_pins_equal_inference(spark, t.visible_files())
+    t.delete_keys([5, 7])
+    snap_dc, _, _, _ = t.compact_deletes()
+    files = t.visible_files()
+    _assert_pins_equal_inference(spark, files)
+    assert t.scan().schema == s0 == spark.read.parquet(*files).schema
+    assert t.scan_with_deletes().count() == orders.count() - 2
+
+    ch = t.changes(0, snap_dc)
+    assert ch.schema.fieldNames()[:3] == s0.fieldNames()
+    kinds = {r._change_type for r in ch.select("_change_type").collect()}
+    assert {"update_preimage", "update_postimage", "delete"} <= kinds
+    assert ch.filter(F.col("_commit_snapshot") == snap_m).count() == 2 * (
+        delta.count()
+    )
+
+    nested = spark.createDataFrame(
+        [(1, [1, 2], {"a": 1}, (1, "x"))],
+        "k long not null, a array<int>, m map<string,int>,"
+        " s struct<x: int not null, y: string>",
+    )
+    out = str(tmp_path / "nested")
+    nested.coalesce(1).write.parquet(out)
+    import glob as _glob
+
+    (f,) = _glob.glob(f"{out}/part-*.parquet")
+    assert footer_schema(f) == spark.read.parquet(f).schema
+
+
+def test_governed_scan_starts_no_spark_job(spark, tmp_path):
+    """Opening a pruned or delete-aware scan is driver metadata work
+    only: pruning reads the manifest with pyarrow and the data schema
+    comes from one footer, so no Spark job runs until the scan does."""
+    from perfbench.harness import StatusCounters
+
+    orders, t = _orders_table(spark, tmp_path)
+    t.delete_keys([5, 7])
+    counters = StatusCounters(spark)
+    band = t.scan(100, 300)
+    everything = t.scan_with_deletes()
+    assert counters.delta()["jobs"] == 0
+    assert band.count() == orders.filter(
+        F.col("o_orderkey").between(100, 300)
+    ).count()
+    assert everything.count() == orders.count() - 2
+
+
+def test_pyarrow_written_file_reads_through_fallback(spark, tmp_path):
+    """A table file written without Spark's row metadata (pyarrow,
+    DuckDB) cannot pin its schema; scans and the change feed fall back
+    to inference and still read it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from aws_seismic_data_pipeline_spark.sources.footers import (
+        footer_schema,
+        read_data_files,
+    )
+
+    orders, t = _orders_table(spark, tmp_path)
+    path = str(tmp_path / "data" / "from-pyarrow.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "o_orderkey": pa.array([9_000_001, 9_000_002], pa.int64()),
+                "o_orderstatus": ["P", "P"],
+                "o_totalprice": [1.5, 2.5],
+            }
+        ),
+        path,
+    )
+    assert footer_schema(path) is None
+    snap = t.append([path])
+    assert t.scan().count() == orders.count() + 2
+    got = t.scan(9_000_000, 9_100_000).orderBy("o_orderkey").collect()
+    assert [(r.o_orderkey, r.o_orderstatus) for r in got] == [
+        (9_000_001, "P"),
+        (9_000_002, "P"),
+    ]
+    assert t.changes(snap - 1, snap).count() == 2
+    # a merged read over files that disagree keeps the mergeSchema read
+    mixed = read_data_files(spark, [t.visible_files()[0], path], True)
+    assert mixed.count() == mixed.filter("o_orderkey > 0").count()
+
+
+def test_read_evolved_unchanged_around_add_column(spark, tmp_path):
+    """read_evolved below and above an ADD COLUMN, and after a MERGE
+    that lands files carrying the column, equals the mergeSchema read
+    over the same files plus the NULL backfill."""
+    from aws_seismic_data_pipeline_spark.sources.table.evolution import (
+        read_evolved,
+    )
+
+    orders, t = _orders_table(spark, tmp_path, n_files=4)
+    old_cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
+    snap_add = t.add_column("o_note", "string")
+    below = read_evolved(spark, t.manifest_dir, t.key, as_of=snap_add - 1)
+    above = read_evolved(spark, t.manifest_dir, t.key, as_of=snap_add)
+    assert below.columns == old_cols
+    assert above.columns == old_cols + ["o_note"]
+    assert below.count() == above.count() == orders.count()
+    assert above.filter(F.col("o_note").isNotNull()).count() == 0
+
+    delta = orders.filter(F.col("o_orderkey") <= 40).select(
+        "o_orderkey",
+        "o_orderstatus",
+        "o_totalprice",
+        F.lit("n").alias("o_note"),
+    )
+    snap_m, _, _ = t.merge(
+        delta, ["o_orderstatus", "o_totalprice", "o_note"]
+    )
+    evolved = read_evolved(spark, t.manifest_dir, t.key, as_of=snap_m)
+    merged = spark.read.option("mergeSchema", "true").parquet(
+        *t.visible_files(snap_m)
+    )
+    assert evolved.schema == merged.schema
+    assert sorted(evolved.collect()) == sorted(merged.collect())
+    assert evolved.filter(F.col("o_note") == "n").count() == delta.count()
+    # files of both eras, a pre-ADD file first: the merged read unions
+    # the schemas instead of pinning the first footer
+    from aws_seismic_data_pipeline_spark.sources.footers import (
+        footer_schema,
+        read_data_files,
+    )
+
+    eras = sorted(
+        t.visible_files(snap_m),
+        key=lambda f: "o_note" in footer_schema(f).fieldNames(),
+    )
+    assert "o_note" not in footer_schema(eras[0]).fieldNames()
+    assert (
+        read_data_files(spark, eras, merge_schema=True).schema
+        == spark.read.option("mergeSchema", "true").parquet(*eras).schema
+    )
+    still_below = read_evolved(
+        spark, t.manifest_dir, t.key, as_of=snap_add - 1
+    )
+    assert still_below.columns == old_cols
+    assert sorted(still_below.collect()) == sorted(below.collect())

@@ -1253,3 +1253,32 @@ def test_bpe_train_rounds_pinned(spark):
     )
     assert len({(r.lhs, r.rhs) for r in rows}) == BPE_TRAIN_ROUNDS
     assert all(r.pair_count > 0 for r in rows)
+
+
+def test_shingle_lambdas_slice_a_projected_token_column(spark):
+    """The word-shingle lambdas slice a token column projected once;
+    the optimizer must not inline ``split(text)`` back into the lambda
+    (CollapseProject would, for a column referenced only once), which
+    re-splits the whole text per index — O(words²) per document."""
+    from aws_seismic_data_pipeline_spark.llm.curation import _doc_grams
+    from aws_seismic_data_pipeline_spark.llm.dedup import (
+        _mh_shingle_arrs,
+        _mh_sig_cols,
+        ngram_jaccard_exact,
+    )
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    plans = [
+        _mh_shingle_arrs(docs).select("doc_id", *_mh_sig_cols()),
+        ngram_jaccard_exact(spark, SF_DIR),
+        _doc_grams(docs),
+    ]
+    for df in plans:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        bodies = [
+            line.split("lambdafunction", 1)[1]
+            for line in plan.splitlines()
+            if "lambdafunction" in line
+        ]
+        assert bodies, plan
+        assert not any("split(text" in b for b in bodies), plan

@@ -10,6 +10,7 @@ reviewed decision with a justification, not an accident."""
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 
@@ -154,3 +155,130 @@ def test_no_collect_into_loop_over_data():
         src = open(p).read()
         if re.search(r"for\s+\w+\s+in\s+[\w.]+\.collect\(\)", src):
             assert rel in COLLECT_ALLOWED, rel
+
+
+def _sql_strings(tree):
+    """Every string literal of a module, f-strings with their
+    placeholders rendered as ``{}``."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Constant) and isinstance(node.value, str):
+            yield node.lineno, node.value
+        elif isinstance(node, ast.JoinedStr):
+            yield node.lineno, "".join(
+                v.value if isinstance(v, ast.Constant) else "{}"
+                for v in node.values
+            )
+
+
+def _lambda_bodies(sql: str):
+    """The bodies of the ``x -> body`` lambdas in a SQL string: from
+    the arrow to the comma or closing parenthesis that ends the
+    lambda's argument slot."""
+    for m in re.finditer(r"->", sql):
+        depth, end = 0, len(sql)
+        for j in range(m.end(), len(sql)):
+            c = sql[j]
+            if c == "(":
+                depth += 1
+            elif c == ")":
+                depth -= 1
+            if depth < 0 or (c == "," and depth == 0):
+                end = j
+                break
+        yield sql[m.end() : end]
+
+
+def test_no_split_inside_sql_lambdas():
+    """A Spark ``split(text, ...)`` written inside a higher-order
+    function's lambda is re-evaluated per element — re-splitting the
+    whole text for every index is O(words²) per document. Project the
+    split array as a column and reference it in the lambda instead.
+    (DuckDB oracle SQL spells it ``string_split`` and is not matched.)"""
+    offenders = set()
+    for p in _py_files():
+        tree = ast.parse(open(p).read())
+        for lineno, sql in _sql_strings(tree):
+            if any(
+                re.search(r"(?<![\w])split\(\s*text\b", body)
+                for body in _lambda_bodies(sql)
+            ):
+                offenders.add(f"{_rel(p)}:{lineno}")
+    assert not offenders, sorted(offenders)
+
+
+#: sources/table/ reads that are not table DATA files, so they never
+#: go through ``footers.read_data_files`` — besides the manifest
+#: reads, which open ``_mdd(...)`` and are recognised by that call
+NON_DATA_READS = {
+    # sketch / bloom manifests: metadata tables of their own
+    ("sources/table/sketches.py", "sketch_merged_ndv"),
+    ("sources/table/sketches.py", "bloom_pruned_scan"),
+    # the stats-manifest introspection demo reads the manifest root
+    ("sources/table/manifest.py", "scan_manifest_stats"),
+    # row count of the rewritten manifest before the expire swap
+    ("sources/table/maintenance.py", "expire_manifest_history"),
+    # orphans are files the manifest does NOT govern; read with
+    # basePath so their partition values survive
+    ("sources/table/maintenance.py", "vacuum_orphans_report"),
+}
+
+
+def _parquet_reads(tree):
+    """(enclosing function, first argument) of every
+    ``<...>.read[Stream]...parquet(...)`` call in a module."""
+
+    def chain(node):
+        names = []
+        while isinstance(node, (ast.Attribute, ast.Call)):
+            if isinstance(node, ast.Attribute):
+                names.append(node.attr)
+                node = node.value
+            else:
+                node = node.func
+        return names
+
+    out = []
+
+    def visit(node, func):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            func = node.name
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "parquet"
+            and {"read", "readStream"} & set(chain(node.func.value))
+        ):
+            out.append((func, node.args[0] if node.args else None))
+        for child in ast.iter_child_nodes(node):
+            visit(child, func)
+
+    visit(tree, None)
+    return out
+
+
+def test_table_data_reads_pin_their_schema():
+    """Every read of governed-table data files goes through
+    ``footers.read_data_files``, which pins the data schema from the
+    files' footers instead of running Spark's schema inference per
+    read. Manifest reads (``_mdd(...)``) and the audited non-data
+    reads in NON_DATA_READS are exempt."""
+    offenders = []
+    for p in _py_files():
+        rel = _rel(p)
+        if not (
+            rel.startswith("sources/table/")
+            or rel == "streaming/cdf_consumer.py"
+        ):
+            continue
+        for func, arg in _parquet_reads(ast.parse(open(p).read())):
+            manifest_read = (
+                isinstance(arg, ast.Call)
+                and isinstance(arg.func, ast.Name)
+                and arg.func.id == "_mdd"
+            )
+            if not manifest_read and (rel, func) not in NON_DATA_READS:
+                offenders.append(f"{rel}:{func}")
+    assert not offenders, (
+        "bare data-file parquet read — use footers.read_data_files, or "
+        f"audit and extend NON_DATA_READS: {sorted(set(offenders))}"
+    )
