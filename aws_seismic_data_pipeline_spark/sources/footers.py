@@ -18,9 +18,14 @@ from pyspark.sql import functions as F
 from aws_seismic_data_pipeline_spark.catalog import load_table
 
 
-#: commit-scale ceiling for driver-side footer reads (see the gated
-#: branches in read_footer_stats/_multi); bulk builds stay distributed
-_FOOTER_LOCAL_MAX = int(os.environ.get("SPARK_GRAFT_LOCAL_COMMIT_MAX", "64"))
+#: commit-scale ceiling for the driver-side footer-stats path: a commit
+#: touching at most this many files reads their footers on the driver
+#: (KBs each, ~1 ms/file) instead of fanning a Spark stage out over
+#: them; bulk builds/backfills above it stay distributed. Shared by
+#: read_footer_stats/_multi here and the manifest-commit paths under
+#: ``sources/table/``. Overridable for deployments whose driver is far
+#: from storage.
+_LOCAL_COMMIT_MAX = int(os.environ.get("SPARK_GRAFT_LOCAL_COMMIT_MAX", "64"))
 
 
 def _footer_stats_rows_local(paths: list[str], column: str):
@@ -204,7 +209,7 @@ def read_footer_stats(
         "path string, file_name string, row_group long, n_rows long,"
         " min_val long, max_val long"
     )
-    if len(paths) <= _FOOTER_LOCAL_MAX:
+    if len(paths) <= _LOCAL_COMMIT_MAX:
         # commit-scale file list: read the footer KBs on the driver
         # (~1 ms/file) instead of fanning a mapInPandas stage over
         # them (~100 ms Python-worker fork per task at local[32]) —
@@ -302,7 +307,7 @@ def read_footer_stats_multi(
         "path string, file_name string, row_group long, column_name string,"
         " n_rows long, min_val double, max_val double"
     )
-    if len(paths) <= _FOOTER_LOCAL_MAX:
+    if len(paths) <= _LOCAL_COMMIT_MAX:
         # commit-scale list: driver-side footer read (see
         # read_footer_stats); distributed fan-out below is the bulk path
         local = _footer_stats_rows_local_multi(sorted(paths), cols)

@@ -14,7 +14,10 @@ from pyspark.sql import functions as F
 
 from aws_seismic_data_pipeline_spark.catalog import load_table, prepare
 from aws_seismic_data_pipeline_spark.registry import register
-from aws_seismic_data_pipeline_spark.sources.footers import read_data_files
+from aws_seismic_data_pipeline_spark.sources.footers import (
+    _LOCAL_COMMIT_MAX,
+    read_data_files,
+)
 from aws_seismic_data_pipeline_spark.sources.table.logstore import (
     manifest_data_dir as _mdd,
 )
@@ -417,7 +420,6 @@ def compact_equality_deletes(
     # visible before the rewrites (reads would stop subtracting while
     # the deleted rows are still on disk)
     from aws_seismic_data_pipeline_spark.sources.table.manifest import (
-        _LOCAL_COMMIT_MAX,
         _tombstone_rows_pd,
     )
 

@@ -18,6 +18,7 @@ from aws_seismic_data_pipeline_spark.sources.table.logstore import (
     manifest_data_dir as _mdd,
 )
 from aws_seismic_data_pipeline_spark.sources.footers import (
+    _LOCAL_COMMIT_MAX,
     _RG_PRUNE_RANGE,
     read_data_files,
 )
@@ -37,7 +38,6 @@ from aws_seismic_data_pipeline_spark.sources.table.logstore import (
 )
 from aws_seismic_data_pipeline_spark.sources.table import localman
 from aws_seismic_data_pipeline_spark.sources.table.manifest import (
-    _LOCAL_COMMIT_MAX,
     _MANIFEST_COLS,
     _PART_PRUNE_RANGE,
     _stats_add_rows,

@@ -27,6 +27,7 @@ from aws_seismic_data_pipeline_spark.sources.table.logstore import (
     manifest_data_dir as _mdd,
 )
 from aws_seismic_data_pipeline_spark.sources.footers import (
+    _LOCAL_COMMIT_MAX,
     _RG_PRUNE_RANGE,
     _decode_input_file,
     rangekey_write,
@@ -42,14 +43,6 @@ from aws_seismic_data_pipeline_spark.sources.table import localman
 
 #: leaf columns the demo manifests carry stats for
 _MANIFEST_COLS = ("o_orderkey", "o_custkey")
-
-
-#: commit-scale ceiling for the driver-side footer-stats path: a commit
-#: touching at most this many files reads their footers on the driver
-#: (KBs each, ~1 ms/file) instead of fanning a Spark stage out over
-#: them; bulk builds/backfills above it stay distributed. Overridable
-#: for deployments whose driver is far from storage.
-_LOCAL_COMMIT_MAX = int(os.environ.get("SPARK_GRAFT_LOCAL_COMMIT_MAX", "64"))
 
 
 #: price band for the float-stats pruning demo (~central slice of

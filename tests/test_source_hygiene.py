@@ -61,8 +61,8 @@ COLLECT_ALLOWED = {
     "sources/table/facade.py",
     "streaming/jobs.py",
     "streaming/scheduled.py",
-    # r15: tip 1-row agg + group-cardinality-scale window deltas (the
-    # 100 TB shape MERGEs the delta instead — module docstring)
+    # r15: group-cardinality-scale window deltas (the 100 TB shape
+    # MERGEs the delta instead — module docstring)
     "streaming/cdf_consumer.py",
 }
 
