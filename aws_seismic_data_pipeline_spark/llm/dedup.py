@@ -786,9 +786,9 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: contraction round (measured: the star loop was ~20 of
 #: dedup_embedding_canonical's 31 jobs at sf0.1). Above the bound the
 #: distributed star contraction runs unchanged — at 100 TB with a
-#: pathological edge volume that is the correct engine. Env-overridable
-#: (tests force both paths and pin label equality).
-_LOCAL_CC_MAX = int(os.environ.get("SPARK_GRAFT_LOCAL_CC_MAX", "1000000"))
+#: pathological edge volume that is the correct engine (tests patch
+#: the constant to force both paths and pin label equality).
+_LOCAL_CC_MAX = 1_000_000
 
 
 def _local_union_find(pdf) -> "object":

@@ -23,9 +23,8 @@ from aws_seismic_data_pipeline_spark.catalog import load_table
 #: (KBs each, ~1 ms/file) instead of fanning a Spark stage out over
 #: them; bulk builds/backfills above it stay distributed. Shared by
 #: read_footer_stats/_multi here and the manifest-commit paths under
-#: ``sources/table/``. Overridable for deployments whose driver is far
-#: from storage.
-_LOCAL_COMMIT_MAX = int(os.environ.get("SPARK_GRAFT_LOCAL_COMMIT_MAX", "64"))
+#: ``sources/table/``.
+_LOCAL_COMMIT_MAX = 64
 
 
 def _footer_stats_rows_local(paths: list[str], column: str):

@@ -1017,7 +1017,6 @@ from aws_seismic_data_pipeline_spark.sources.table.manifest import (  # noqa: E4
     _MANIFEST_PRICE_RANGE,
     _MANIFEST_SCHEMA,
     _PART_PRUNE_RANGE,
-    _history_floor,
     _partition_values_col,
     _stats_add_rows,
     _tombstone_rows,
@@ -1056,7 +1055,6 @@ from aws_seismic_data_pipeline_spark.sources.table.evolution import (  # noqa: E
 )
 from aws_seismic_data_pipeline_spark.sources.table.deletes import (  # noqa: E402,F401
     _EQ_DELETE_IDS,
-    _live_delete_records,
     compact_equality_deletes,
     equality_delete,
     plan_delete_compaction,

@@ -46,7 +46,7 @@ from aws_seismic_data_pipeline_spark.catalog import load_table, prepare
 from aws_seismic_data_pipeline_spark.registry import register
 from aws_seismic_data_pipeline_spark.sources.footers import read_data_files
 from aws_seismic_data_pipeline_spark.sources.table.deletes import (
-    _live_delete_records,
+    subtract_live_deletes,
 )
 from aws_seismic_data_pipeline_spark.sources.table.logstore import (
     manifest_data_dir as _mdd,
@@ -72,37 +72,6 @@ def _normalized_input_file() -> "F.Column":
     path URIs never encode space as '+')."""
     posix = F.regexp_replace(F.input_file_name(), "^file:/+", "/")
     return F.url_decode(F.regexp_replace(posix, r"\+", "%2B"))
-
-
-def _subtract_live_deletes(
-    df: DataFrame, man, key: str, as_of: int, lman=None
-) -> DataFrame:
-    """Rows of ``df`` minus the equality-delete keys in force at
-    ``as_of`` (broadcast anti-join; the delete set is metadata-scale)
-    — the 'visible state' both diff sides must be expressed in, or a
-    delete-materializing compaction would re-report rows the
-    delete_eq commit already fed. With a localman frame (``lman``)
-    the key set resolves DRIVER-SIDE and an empty set skips the
-    anti-join outright; ``man`` (Spark) is the fallback."""
-    if lman is not None:
-        keys = localman.live_delete_keys(lman, key, as_of)
-        if not keys:
-            return df
-        spark = df.sparkSession
-        dels = spark.createDataFrame(
-            [(k,) for k in keys], "__del_key double"
-        )
-    else:
-        dels = (
-            _live_delete_records(man, key, as_of)
-            .select(F.col("min_val").alias("__del_key"))
-            .distinct()
-        )
-    return df.join(
-        F.broadcast(dels),
-        df[key].cast("double") == dels["__del_key"],
-        "left_anti",
-    )
 
 
 def _tag(df: DataFrame, change_type: str, snap: int) -> DataFrame:
@@ -206,40 +175,31 @@ def table_changes(
         raise ValueError(
             f"table_changes: to={to_snapshot} < from={from_snapshot}"
         )
-    # the commit inventory is metadata-scale: resolve it DRIVER-SIDE
-    # via localman (Spark fallback) — every per-commit question below
-    # (delete candidacy, live-delete subtraction) reuses the same frame
+    # the commit inventory is commit-scale and resolves driver-side;
+    # the loaded frame (None above the localman gate) also serves the
+    # file-scale delete candidacy and the live-delete subtraction below.
+    # Every diff side is expressed in the visible state at its snapshot
+    # — minus the deletes in force there — or a delete-materializing
+    # compaction would re-report rows the delete_eq commit already fed
     lman = localman.load(manifest_dir)
-    if lman is not None:
-        man = None
-        w = lman[
-            (lman["snapshot_id"] > int(from_snapshot))
-            & (lman["snapshot_id"] <= int(to_snapshot))
-            & lman["op"].isin(("add", "remove", "delete_eq"))
-        ]
-        inv = [
-            (int(r["snapshot_id"]), r["op"], r["path"], r["column_name"],
-             r["min_val"])
-            for _i, r in w.iterrows()
-        ]
-    else:
-        man = spark.read.parquet(_mdd(manifest_dir))
-        inv = [
-            (int(r.snapshot_id), r.op, r.path, r.column_name, r.min_val)
-            for r in man.filter(
-                (F.col("snapshot_id") > int(from_snapshot))
-                & (F.col("snapshot_id") <= int(to_snapshot))
-                & F.col("op").isin("add", "remove", "delete_eq")
-            )
-            .select("snapshot_id", "op", "path", "column_name", "min_val")
-            .collect()  # commit inventory: metadata-scale
-        ]
+    inv = localman.commit_rows(
+        manifest_dir,
+        ("add", "remove", "delete_eq"),
+        ("snapshot_id", "op", "path", "column_name", "min_val"),
+        lman,
+        after=from_snapshot,
+        upto=to_snapshot,
+    ).itertuples(index=False)
+
+    def visible_rows(df: DataFrame, as_of: int) -> DataFrame:
+        return subtract_live_deletes(df, manifest_dir, key, as_of, lman)
+
     import pandas as _pd
 
     per_snap: dict[int, dict[str, list]] = {}
     for snap_id, op, path, column_name, min_val in inv:
         slot = per_snap.setdefault(
-            snap_id, {"add": [], "remove": [], "delete_eq": []}
+            int(snap_id), {"add": [], "remove": [], "delete_eq": []}
         )
         if op == "delete_eq":
             if column_name == key and min_val is not None and not (
@@ -255,7 +215,7 @@ def table_changes(
         dels = sorted(set(per_snap[snap]["delete_eq"]))
         if dels:
             pre = _delete_preimages(
-                spark, man, manifest_dir, key, dels, snap, lman=lman
+                spark, manifest_dir, key, dels, snap, lman=lman
             )
             if pre is not None:  # no-op delete: zero feed rows (Delta)
                 frames.append(_tag(pre, _CT_DELETE, snap))
@@ -267,21 +227,13 @@ def table_changes(
         both = read_data_files(spark, [*adds, *removes], merge_schema=True)
         path_col = _normalized_input_file()
         if adds and removes:
-            old = _subtract_live_deletes(
-                both.filter(path_col.isin(removes)), man, key, snap - 1,
-                lman=lman,
-            )
-            new = _subtract_live_deletes(
-                both.filter(path_col.isin(adds)), man, key, snap, lman=lman
-            )
+            old = visible_rows(both.filter(path_col.isin(removes)), snap - 1)
+            new = visible_rows(both.filter(path_col.isin(adds)), snap)
             frames.append(_diff_changes(old, new, key, snap))
         elif adds:  # pure append commit: every row is an insert
             frames.append(
                 _tag(
-                    _subtract_live_deletes(
-                        both.filter(path_col.isin(adds)), man, key, snap,
-                        lman=lman,
-                    ),
+                    visible_rows(both.filter(path_col.isin(adds)), snap),
                     _CT_INSERT,
                     snap,
                 )
@@ -289,12 +241,8 @@ def table_changes(
         else:  # remove-only commit (retention delete): rows vanish
             frames.append(
                 _tag(
-                    _subtract_live_deletes(
-                        both.filter(path_col.isin(removes)),
-                        man,
-                        key,
-                        snap - 1,
-                        lman=lman,
+                    visible_rows(
+                        both.filter(path_col.isin(removes)), snap - 1
                     ),
                     _CT_DELETE,
                     snap,
@@ -306,19 +254,10 @@ def table_changes(
         # with one that did) — read it from any committed data file's
         # footer; double only for a table that never had a file
         key_type = "double"
-        if lman is not None:
-            add_paths = sorted(
-                lman.loc[lman["op"] == "add", "path"].unique()
-            )
-            first_add = add_paths[0] if add_paths else None
-        else:
-            paths = (
-                man.filter(F.col("op") == "add")
-                .select("path")
-                .limit(1)
-                .collect()
-            )
-            first_add = paths[0].path if paths else None
+        first = localman.commit_rows(
+            manifest_dir, ("add",), ("path",), lman, limit=1
+        )["path"]
+        first_add = first.iloc[0] if len(first) else None
         if first_add is not None:
             try:
                 key_type = (
@@ -339,7 +278,6 @@ def table_changes(
 
 def _delete_preimages(
     spark: SparkSession,
-    man,
     manifest_dir: str,
     key: str,
     del_keys: list[float],
@@ -371,7 +309,7 @@ def _delete_preimages(
         )
     else:
         per_file = (
-            _visible_stats(man, snap - 1)
+            _visible_stats(spark.read.parquet(_mdd(manifest_dir)), snap - 1)
             .filter(F.col("column_name") == key)
             .groupBy("path")
             .agg(
@@ -401,7 +339,7 @@ def _delete_preimages(
     rows = read_data_files(spark, candidates, merge_schema=True)
     # subtract deletes already in force BEFORE this commit, then keep
     # exactly this commit's keys
-    rows = _subtract_live_deletes(rows, man, key, snap - 1, lman=lman)
+    rows = subtract_live_deletes(rows, manifest_dir, key, snap - 1, lman)
     return rows.join(
         F.broadcast(keys_df),
         rows[key].cast("double") == keys_df["_k"],

@@ -11,12 +11,14 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 
 def _next_snapshot(spark: SparkSession, manifest_dir: str) -> int:
     """Next snapshot id: max(snapshot_id) over the KB-scale manifest,
-    0 if the manifest does not exist yet.
+    0 when the manifest's data directory is absent or holds no parquet
+    file yet. Any other failure to read it RAISES: a truncated or
+    corrupt manifest file must never make a writer claim an id that
+    already has committed rows.
 
     Read DRIVER-SIDE with pyarrow, not as a Spark job: this runs
     (twice) inside EVERY commit's claim path, and a Spark
@@ -26,48 +28,37 @@ def _next_snapshot(spark: SparkSession, manifest_dir: str) -> int:
     visible on every manifest-committing bench slot. pyarrow reads
     only the parquet footers' row-group statistics (no data pages)
     and falls back to per-fragment column reads only for footers
-    without stats; the Spark path remains as the fallback for any
-    layout pyarrow cannot address. ``_``/``.``-prefixed entries (the
-    ``_commits`` token tree) are excluded by pyarrow's default
-    ``ignore_prefixes`` — the same hidden-file convention Spark's own
-    listing applies."""
+    without stats. ``_``/``.``-prefixed entries (the ``_commits``
+    token tree) are excluded by pyarrow's default ``ignore_prefixes``
+    — the same hidden-file convention Spark's own listing applies."""
+    import pyarrow.dataset as _pads
+
     from aws_seismic_data_pipeline_spark.sources.table.logstore import (
         manifest_data_dir as _mdd,
     )
 
-    try:
-        import pyarrow.dataset as _pads
-
-        dataset = _pads.dataset(_mdd(manifest_dir), format="parquet")
-        cur = None
-        for frag in dataset.get_fragments():
-            frag_max = None
-            try:
-                for rg in frag.row_groups:
-                    st = (rg.statistics or {}).get("snapshot_id")
-                    mx = st.get("max") if st else None
-                    if mx is None:  # footer without stats: read column
-                        raise KeyError
-                    if frag_max is None or mx > frag_max:
-                        frag_max = mx
-            except Exception:
-                col = frag.to_table(columns=["snapshot_id"]).column(0)
-                vals = [v for v in col.to_pylist() if v is not None]
-                frag_max = max(vals) if vals else None
-            if frag_max is not None and (cur is None or frag_max > cur):
-                cur = frag_max
-        return (int(cur) if cur is not None else -1) + 1
-    except Exception:
-        pass
-    try:
-        cur = (
-            spark.read.parquet(_mdd(manifest_dir))
-            .agg(F.max("snapshot_id"))
-            .collect()[0][0]
-        )
-        return (cur if cur is not None else -1) + 1
-    except Exception:
+    data_dir = _mdd(manifest_dir)
+    if not os.path.isdir(data_dir):
         return 0
+    dataset = _pads.dataset(data_dir, format="parquet")
+    cur = None
+    for frag in dataset.get_fragments():
+        frag_max = None
+        try:
+            for rg in frag.row_groups:
+                st = (rg.statistics or {}).get("snapshot_id")
+                mx = st.get("max") if st else None
+                if mx is None:  # footer without stats: read column
+                    raise KeyError
+                if frag_max is None or mx > frag_max:
+                    frag_max = mx
+        except Exception:
+            col = frag.to_table(columns=["snapshot_id"]).column(0)
+            vals = [v for v in col.to_pylist() if v is not None]
+            frag_max = max(vals) if vals else None
+        if frag_max is not None and (cur is None or frag_max > cur):
+            cur = frag_max
+    return (int(cur) if cur is not None else -1) + 1
 
 
 class ConcurrentCommitError(RuntimeError):

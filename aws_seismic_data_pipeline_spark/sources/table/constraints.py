@@ -37,9 +37,7 @@ from aws_seismic_data_pipeline_spark.sources.table.commit import (
     release_claim,
     verify_claim,
 )
-from aws_seismic_data_pipeline_spark.sources.table.logstore import (
-    manifest_data_dir as _mdd,
-)
+from aws_seismic_data_pipeline_spark.sources.table import localman
 
 
 class ConstraintViolationError(ValueError):
@@ -49,55 +47,30 @@ class ConstraintViolationError(ValueError):
 
 
 def active_constraints(
-    spark: SparkSession, manifest_dir: str, as_of: int | None = None
+    spark: SparkSession,
+    manifest_dir: str,
+    as_of: int | None = None,
+    man=None,
 ) -> list[tuple[str, str, str]]:
     """The table's live constraints at ``as_of``: [(name, kind, expr)]
     — 'constraint_add' declarations not superseded by a later
     'constraint_drop' of the same name.
 
-    Read DRIVER-SIDE with pyarrow (Spark fallback): this runs inside
-    EVERY gated append/merge, and a Spark job to answer a question
-    about kilobytes of local metadata is exactly the per-commit
-    constant the r12 bench regression taught us to avoid
-    (``commit._next_snapshot`` has the same shape and rationale)."""
-    records: list[tuple[int, str, str, dict]] = []
-    try:
-        import pyarrow.dataset as _pads
-
-        dataset = _pads.dataset(_mdd(manifest_dir), format="parquet")
-        tbl = dataset.to_table(
-            columns=["snapshot_id", "op", "column_name", "partition_values"],
-            filter=(
-                _pads.field("op").isin(
-                    ["constraint_add", "constraint_drop"]
-                )
-            ),
-        )
-        for rec in tbl.to_pylist():
-            pv = dict(rec["partition_values"] or {})
-            records.append(
-                (int(rec["snapshot_id"]), rec["op"], rec["column_name"], pv)
-            )
-    except Exception:
-        man = spark.read.parquet(_mdd(manifest_dir))
-        rows = man.filter(
-            F.col("op").isin("constraint_add", "constraint_drop")
-        )
-        for r in rows.select(
-            "snapshot_id", "op", "column_name", "partition_values"
-        ).collect():
-            records.append(
-                (
-                    int(r.snapshot_id),
-                    r.op,
-                    r.column_name,
-                    dict(r.partition_values or {}),
-                )
-            )
+    Read DRIVER-SIDE (:func:`localman.commit_rows`; ``man`` passes a
+    manifest frame the verb already loaded): this runs inside EVERY
+    gated append/merge, and a Spark job to answer a question about
+    kilobytes of local metadata is exactly the per-commit constant the
+    r12 bench regression taught us to avoid."""
+    rows = localman.commit_rows(
+        manifest_dir,
+        ("constraint_add", "constraint_drop"),
+        ("snapshot_id", "op", "column_name", "partition_values"),
+        man,
+        upto=as_of,
+    )
     state: dict[str, tuple[int, str, str]] = {}
-    for snap, op, name, pv in records:
-        if as_of is not None and snap > as_of:
-            continue
+    for snap, op, name, pv in rows.itertuples(index=False):
+        snap, pv = int(snap), pv or {}
         prev = state.get(name)
         if prev is not None and prev[0] >= snap:
             continue
@@ -163,6 +136,14 @@ def _commit_constraint_row(
     op: str,
     pv: dict[str, str],
 ) -> None:
+    """One declaration row plus its commit_ts marker as ONE metadata
+    commit (a driver-side parquet file; Spark write as fallback)."""
+    import pandas as _pd
+
+    from aws_seismic_data_pipeline_spark.sources.table.manifest import (
+        commit_manifest_rows,
+    )
+
     fixed = {
         "path": "",
         "file_name": "",
@@ -171,29 +152,9 @@ def _commit_constraint_row(
         "op": op,
         "partition_values": pv,
     }
-    from aws_seismic_data_pipeline_spark.sources.table.manifest import (
-        _commit_ts_fixed,
+    commit_manifest_rows(
+        spark, manifest_dir, [_pd.DataFrame([fixed])], snapshot_id=snap
     )
-
-    ts_row = _commit_ts_fixed(snap)
-    # metadata-only commit: one driver-side parquet write via localman
-    # (Spark createDataFrame+write job as fallback)
-    import pandas as _pd
-
-    from aws_seismic_data_pipeline_spark.sources.table import localman
-
-    if localman.write_rows(
-        manifest_dir, _pd.DataFrame([fixed, ts_row])
-    ):
-        return
-    man_schema = spark.read.parquet(_mdd(manifest_dir)).schema
-    spark.createDataFrame(
-        [
-            tuple(fixed.get(f.name) for f in man_schema),
-            tuple(ts_row.get(f.name) for f in man_schema),
-        ],
-        man_schema,
-    ).write.mode("append").parquet(_mdd(manifest_dir))
 
 
 def add_check_constraint(

@@ -18,6 +18,7 @@ from aws_seismic_data_pipeline_spark.sources.footers import (
     _LOCAL_COMMIT_MAX,
     read_data_files,
 )
+from aws_seismic_data_pipeline_spark.sources.table import localman
 from aws_seismic_data_pipeline_spark.sources.table.logstore import (
     manifest_data_dir as _mdd,
 )
@@ -144,8 +145,6 @@ def equality_delete(
     ts = _commit_ts_fixed(int(snapshot_id))
     ts["row_group"], ts["n_rows"] = -1, 0
     ts["partition_values"] = None  # pandas path: match the delete rows
-    from aws_seismic_data_pipeline_spark.sources.table import localman
-
     pdf = localman.concat_rows(
         [pdf, _pd.DataFrame([{k: ts.get(k) for k in pdf.columns}])]
     )
@@ -162,28 +161,30 @@ def equality_delete(
     return int(snapshot_id)
 
 
-def _live_delete_records(
-    manifest: DataFrame, column: str, as_of: int | None
+def subtract_live_deletes(
+    df: DataFrame,
+    manifest_dir: str,
+    column: str,
+    as_of: int | None,
+    man=None,
 ) -> DataFrame:
-    """The equality-delete records STILL IN FORCE at ``as_of``:
-    'delete_eq' rows for ``column`` at snapshots <= the pin, minus
-    those retired by a later-or-equal 'delete_retire' record (whose
-    min_val carries the retired-through snapshot ceiling). Pinned
-    reads between a delete and its compaction still subtract; reads at
-    or above the compaction see the physically-rewritten files and an
-    empty live-delete set."""
-    if as_of is not None:
-        manifest = manifest.filter(F.col("snapshot_id") <= as_of)
-    scoped = manifest.filter(F.col("column_name") == column)
-    ceiling = (
-        scoped.filter(F.col("op") == "delete_retire")
-        .agg(F.max("min_val"))
-        .collect()[0][0]
+    """Rows of ``df`` minus the equality-delete keys still in force at
+    ``as_of`` (:func:`localman.live_delete_keys`). The key set is
+    metadata-scale and resolves driver-side, then BROADCASTS — at
+    100 TB the subtraction costs one map-side hash probe per row, no
+    shuffle of data; an empty set skips the anti-join outright.
+    ``man`` passes a manifest frame the caller already loaded."""
+    keys = localman.live_delete_keys(manifest_dir, column, as_of, man)
+    if not keys:
+        return df
+    dels = df.sparkSession.createDataFrame(
+        [(k,) for k in keys], "__del_key double"
     )
-    dels = scoped.filter(F.col("op") == "delete_eq")
-    if ceiling is not None:
-        dels = dels.filter(F.col("snapshot_id") > int(ceiling))
-    return dels
+    return df.join(
+        F.broadcast(dels),
+        df[column].cast("double") == dels["__del_key"],
+        "left_anti",
+    )
 
 
 def read_with_deletes(
@@ -196,15 +197,11 @@ def read_with_deletes(
     the files visible at ``as_of`` (full key range through
     ``manifest_pruned_scan``), then anti-join the delete keys recorded
     at or below the pin and not yet retired
-    (``_live_delete_records``). The delete set is metadata-scale and
-    BROADCASTS — at 100 TB the subtraction costs one map-side hash
-    probe per row, no shuffle of data. An as-of below the delete
+    (:func:`subtract_live_deletes`). An as-of below the delete
     snapshot resurrects the rows (history is never rewritten);
     ``compact_equality_deletes`` is the maintenance step that
     physically drops the rows, retires the records, and keeps the
     delete set from growing unboundedly."""
-    from aws_seismic_data_pipeline_spark.sources.table import localman
-
     lman = localman.load(manifest_dir)
     data = manifest_pruned_scan(
         spark,
@@ -215,27 +212,7 @@ def read_with_deletes(
         as_of=as_of,
         lman=lman,
     )
-    if lman is not None:
-        # delete keys resolved DRIVER-SIDE (metadata-scale by contract);
-        # a window with no live deletes skips the anti-join outright
-        keys = localman.live_delete_keys(lman, column, as_of)
-        if not keys:
-            return data
-        dels = spark.createDataFrame(
-            [(k,) for k in keys], "__del_key double"
-        )
-    else:
-        manifest = spark.read.parquet(_mdd(manifest_dir))
-        dels = (
-            _live_delete_records(manifest, column, as_of)
-            .select(F.col("min_val").alias("__del_key"))
-            .distinct()
-        )
-    return data.join(
-        F.broadcast(dels),
-        data[column].cast("double") == dels["__del_key"],
-        "left_anti",
-    )
+    return subtract_live_deletes(data, manifest_dir, column, as_of, lman)
 
 
 @register(
@@ -312,42 +289,26 @@ def compact_equality_deletes(
     import glob as _glob
     import shutil as _shutil
 
-    from aws_seismic_data_pipeline_spark.sources.table import localman
-
-    # the ENTIRE compaction plan (live records, ceiling, tracked
-    # columns, candidate files) is metadata-scale and resolves
-    # driver-side via localman — delete keys are driver-resident by
-    # the targeted-delete contract; Spark path = fallback
+    # the live records and their ceiling are commit-scale (localman);
+    # the tracked columns and candidate files are file-scale: driver-side
+    # under the localman gate, a Spark metadata pass above it
     lman = localman.load(manifest_dir)
+    live_pd = localman.live_delete_records(manifest_dir, column, None, lman)
+    n_live = len(live_pd)
+    if n_live == 0:
+        raise ValueError(
+            f"compact_equality_deletes: no live delete records for "
+            f"{column} in {manifest_dir}"
+        )
+    ceiling = int(live_pd["snapshot_id"].max())
+    keys = sorted(float(k) for k in live_pd["min_val"].dropna().unique())
+    dkeys = spark.createDataFrame([(k,) for k in keys], "_k double")
     if lman is not None:
-        live_pd = localman.live_delete_records(lman, column, None)
-        n_live = len(live_pd)
-        if n_live == 0:
-            raise ValueError(
-                f"compact_equality_deletes: no live delete records for "
-                f"{column} in {manifest_dir}"
-            )
-        ceiling = int(live_pd["snapshot_id"].max())
-        keys = sorted(float(k) for k in live_pd["min_val"].dropna().unique())
-        dkeys = spark.createDataFrame([(k,) for k in keys], "_k double")
         vis_pd = localman.visible(lman, None)
         tracked = tuple(sorted(vis_pd["column_name"].unique()))
         candidates = localman.candidate_paths_for_keys(vis_pd, column, keys)
     else:
-        manifest = spark.read.parquet(_mdd(manifest_dir))
-        live = _live_delete_records(manifest, column, None).localCheckpoint(
-            eager=True
-        )
-        n_live = live.count()
-        if n_live == 0:
-            raise ValueError(
-                f"compact_equality_deletes: no live delete records for "
-                f"{column} in {manifest_dir}"
-            )
-        ceiling = live.agg(F.max("snapshot_id")).collect()[0][0]
-        dkeys = live.select(F.col("min_val").alias("_k")).distinct()
-
-        visible = _visible_stats(manifest, None)
+        visible = _visible_stats(spark.read.parquet(_mdd(manifest_dir)), None)
         # rewritten files must keep the TABLE's full tracked-stats column
         # set, not just the delete column — appending (column,) alone would
         # leave the rewrites invisible to scans probing any other tracked
@@ -454,14 +415,9 @@ def compact_equality_deletes(
         "snapshot_id": int(snap),
         "op": "delete_retire",
     }
-    import pandas as _pd2
+    import pandas as _pd
 
-    if all(isinstance(f, _pd2.DataFrame) for f in frames):
-        frames.append(_pd2.DataFrame([fixed]))
-    else:
-        schema = spark.read.parquet(_mdd(manifest_dir)).schema
-        row = tuple(fixed.get(f.name) for f in schema)
-        frames.append(spark.createDataFrame([row], schema))
+    frames.append(_pd.DataFrame([fixed]))
     verify_claim(manifest_dir, snap)
     commit_manifest_rows(spark, manifest_dir, frames, snapshot_id=snap)
     return snap, len(candidates), len(new_paths), int(n_live)

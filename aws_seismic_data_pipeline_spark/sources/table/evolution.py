@@ -21,9 +21,10 @@ from aws_seismic_data_pipeline_spark.sources.table.commit import (
     _claimed_next_snapshot,
     verify_claim,
 )
+from aws_seismic_data_pipeline_spark.sources.table import localman
 from aws_seismic_data_pipeline_spark.sources.table.manifest import (
-    _commit_ts_rows,
     append_stats_manifest,
+    commit_manifest_rows,
     manifest_pruned_scan,
     write_stats_manifest,
 )
@@ -64,74 +65,31 @@ def evolve_schema_add(
 
     snap = _claimed_next_snapshot(spark, manifest_dir)
     try:
-        # metadata-only commit: validated and landed DRIVER-SIDE via
-        # localman (one parquet file, no Spark job); Spark fallback
-        pdf = schema_add_rows_pd(manifest_dir, {column: sql_type}, snap)
-        rows = (
-            schema_add_rows(spark, manifest_dir, {column: sql_type}, snap)
-            if pdf is None
-            else None
-        )
+        pdf = schema_add_rows(manifest_dir, {column: sql_type}, snap)
     except BaseException:
         # nothing committed at the id: release the lease so the raise
         # (re-declaration) doesn't block the NEXT writer for stale_after
         release_claim(manifest_dir, snap)
         raise
     verify_claim(manifest_dir, snap)  # lease still ours at commit time
-    if pdf is not None:
-        if _commit_metadata_rows_local(manifest_dir, pdf, snap):
-            return snap
-        rows = schema_add_rows(spark, manifest_dir, {column: sql_type}, snap)
-    rows.unionByName(
-        _commit_ts_rows(spark, rows.schema, snap), allowMissingColumns=True
-    ).write.mode("append").parquet(_mdd(manifest_dir))
+    # metadata-only commit: one driver-side parquet file (Spark fallback)
+    commit_manifest_rows(spark, manifest_dir, [pdf], snapshot_id=snap)
     return snap
 
 
-def _commit_metadata_rows_local(manifest_dir: str, pdf, snap: int) -> bool:
-    """Land ``pdf`` (declaration rows) plus the commit_ts marker as ONE
-    driver-side parquet file — the localman twin of the evolution
-    verbs' union+append write. False → caller runs the Spark path."""
-    import pandas as _pd
-
-    from aws_seismic_data_pipeline_spark.sources.table import localman
-    from aws_seismic_data_pipeline_spark.sources.table.manifest import (
-        _commit_ts_fixed,
-    )
-
-    out = localman.concat_rows(
-        [pdf, _pd.DataFrame([_commit_ts_fixed(int(snap))])]
-    )
-    return localman.write_rows(manifest_dir, out)
-
-
-def _declared_names_pd(lman) -> set:
-    """The names a schema_add may not reuse (adds, rename sources AND
-    targets, dropped names) from a localman manifest frame — the
-    pandas twin of :func:`schema_add_rows`'s validation read."""
-    declared = set()
-    ops = lman[lman["op"].isin(("schema_add", "schema_rename", "schema_drop"))]
-    for _idx, r in ops.iterrows():
-        declared.add(r["column_name"])
-        if r["op"] == "schema_rename":
-            declared.add((r["partition_values"] or {}).get("to"))
-    return declared
-
-
-def schema_add_rows_pd(
+def schema_add_rows(
     manifest_dir: str, columns: dict[str, str], snapshot_id: int
 ):
-    """Driver-side twin of :func:`schema_add_rows`: same validation,
-    same raise, rows as a pandas frame for a localman single-file
-    commit. None when the manifest cannot be read locally."""
-    from aws_seismic_data_pipeline_spark.sources.table import localman
-
-    lman = localman.load(manifest_dir)
-    if lman is None:
-        return None
+    """UNCOMMITTED 'schema_add' declaration rows (a pandas frame) —
+    compound verbs (``merge_evolve_through_manifest``) union these with
+    their data adds/tombstones and commit everything in ONE append, so
+    the column declaration and the files that first carry it become
+    visible at the SAME snapshot (Delta's mergeSchema-on-MERGE
+    atomicity). Raises on a re-declaration of any name the schema
+    history already used (:func:`localman.declared_names`)."""
     import pandas as _pd
 
-    dupes = sorted(set(columns) & _declared_names_pd(lman))
+    dupes = sorted(set(columns) & localman.declared_names(manifest_dir))
     if dupes:
         raise ValueError(
             f"column(s) {dupes} are already declared (or were renamed/"
@@ -152,134 +110,10 @@ def schema_add_rows_pd(
     return _pd.DataFrame(rows)
 
 
-def schema_add_rows(
-    spark: SparkSession,
-    manifest_dir: str,
-    columns: dict[str, str],
-    snapshot_id: int,
-) -> DataFrame:
-    """UNCOMMITTED 'schema_add' declaration rows — compound verbs
-    (``merge_evolve_through_manifest``) union these with their data
-    adds/tombstones and commit everything in ONE append, so the column
-    declaration and the files that first carry it become visible at the
-    SAME snapshot (Delta's mergeSchema-on-MERGE atomicity). Raises on a
-    re-declaration, same as :func:`evolve_schema_add`."""
-    man = spark.read.parquet(_mdd(manifest_dir))
-    declared = set()
-    for r in man.filter(
-        F.col("op").isin("schema_add", "schema_rename", "schema_drop")
-    ).select("op", "column_name", "partition_values").collect():
-        declared.add(r.column_name)  # adds, rename sources, DROPPED names
-        if r.op == "schema_rename":
-            declared.add((r.partition_values or {}).get("to"))
-    dupes = sorted(set(columns) & declared)
-    if dupes:
-        raise ValueError(
-            f"column(s) {dupes} are already declared (or were renamed/"
-            f"dropped — re-using such a name would resurface old files' "
-            f"values) at {manifest_dir}"
-        )
-    schema = man.schema
-    rows = []
-    for column, sql_type in sorted(columns.items()):
-        fixed = {
-            "path": "",
-            "file_name": "",
-            "column_name": column,
-            "snapshot_id": int(snapshot_id),
-            "op": "schema_add",
-            "partition_values": {"type": str(sql_type)},
-        }
-        rows.append(tuple(fixed.get(f.name) for f in schema))
-    return spark.createDataFrame(rows, schema)
-
-
-def _schema_ops_pd(lman, as_of: int | None) -> list:
-    """Pandas twin of :func:`_schema_ops` over a localman frame —
-    identical tuples, identical order."""
-    ops = lman[
-        lman["op"].isin(("schema_add", "schema_rename", "schema_drop"))
-    ]
-    if as_of is not None:
-        ops = ops[ops["snapshot_id"] <= as_of]
-    out = []
-    for _i, r in ops.iterrows():
-        pv = r["partition_values"] or {}
-        arg = pv.get("type") if r["op"] == "schema_add" else pv.get("to")
-        out.append((int(r["snapshot_id"]), r["op"], r["column_name"], arg))
-    out.sort(key=lambda t: (t[0], t[1], t[2]))
-    return out
-
-
-def _effective_columns_pd(lman, ensure: tuple[str, ...] = ()) -> set[str]:
-    """Pandas twin of :func:`_effective_columns`: the same newest-64
-    footer walk (pyarrow, driver-side) ordered off the localman frame
-    instead of a Spark sort+iterate."""
-    import pyarrow.parquet as _pq
-
-    from aws_seismic_data_pipeline_spark.sources.table import localman
-
-    ops = _schema_ops_pd(lman, None)
-
-    def _apply(phys: set[str]) -> set[str]:
-        cols = set(phys)
-        for _snap, op, name, arg in ops:
-            if op == "schema_add":
-                cols.add(name)
-            elif op == "schema_rename":
-                if name in cols:
-                    cols.discard(name)
-                    cols.add(arg)
-            elif op == "schema_drop":
-                cols.discard(name)
-        return cols
-
-    ordered = (
-        localman.visible(lman, None)[["path", "snapshot_id"]]
-        .drop_duplicates()
-        .sort_values(
-            ["snapshot_id", "path"], ascending=[False, True]
-        )
-    )
-    phys: set[str] = set()
-    want = set(ensure)
-    for i, (_idx, r) in enumerate(ordered.iterrows()):
-        try:
-            phys.update(_pq.read_schema(r["path"]).names)
-        except Exception:
-            continue
-        if i + 1 >= 64 and (not want or want <= _apply(phys)):
-            break
-    return _apply(phys)
-
-
-def _schema_ops(man: DataFrame, as_of: int | None) -> list:
-    """The table's schema-change history visible at ``as_of``, in
-    commit order: [(snapshot_id, op, column_name, arg)] where arg is
-    the SQL type for 'schema_add', the new name for 'schema_rename',
-    None for 'schema_drop'. Applying these IN ORDER to the physical
-    column space yields the effective schema — the name-mapping walk
-    Iceberg does through field ids, replayed through the commit log."""
-    ops = man.filter(
-        F.col("op").isin("schema_add", "schema_rename", "schema_drop")
-    )
-    if as_of is not None:
-        ops = ops.filter(F.col("snapshot_id") <= as_of)
-    out = []
-    for r in ops.select(
-        "snapshot_id", "op", "column_name", "partition_values"
-    ).collect():
-        pv = r.partition_values or {}
-        arg = pv.get("type") if r.op == "schema_add" else pv.get("to")
-        out.append((int(r.snapshot_id), r.op, r.column_name, arg))
-    out.sort(key=lambda t: (t[0], t[1], t[2]))
-    return out
-
-
 def _effective_columns(
     spark: SparkSession,
     manifest_dir: str,
-    man: DataFrame,
+    lman,
     ensure: tuple[str, ...] = (),
 ) -> set[str]:
     """Best-effort effective column set at the CURRENT snapshot:
@@ -289,7 +123,9 @@ def _effective_columns(
     newest 64 files, then keeps walking OLDER footers only while a
     name in ``ensure`` is still unresolved — a physical column that
     lives only in never-rewritten pre-evolution files must not be
-    falsely reported missing on a wide/old table. Used only to
+    falsely reported missing on a wide/old table. The file order comes
+    from the localman frame ``lman``, or from a Spark sort over the
+    manifest above the localman gate (``lman`` None). Used only to
     validate rename/drop targets loudly."""
     import pyarrow.parquet as _pq
 
@@ -297,7 +133,7 @@ def _effective_columns(
         _visible_stats,
     )
 
-    ops = _schema_ops(man, None)
+    ops = localman.schema_ops(manifest_dir, None, lman)
 
     def _apply(phys: set[str]) -> set[str]:
         cols = set(phys)
@@ -312,17 +148,30 @@ def _effective_columns(
                 cols.discard(name)
         return cols
 
-    ordered = (
-        _visible_stats(man, None)
-        .select("path", "snapshot_id")
-        .distinct()
-        .orderBy(F.col("snapshot_id").desc(), "path")
-    )
+    if lman is not None:
+        ordered = (
+            localman.visible(lman, None)[["path", "snapshot_id"]]
+            .drop_duplicates()
+            .sort_values(["snapshot_id", "path"], ascending=[False, True])[
+                "path"
+            ]
+        )
+    else:
+        ordered = (
+            r.path
+            for r in _visible_stats(
+                spark.read.parquet(_mdd(manifest_dir)), None
+            )
+            .select("path", "snapshot_id")
+            .distinct()
+            .orderBy(F.col("snapshot_id").desc(), "path")
+            .toLocalIterator()
+        )
     phys: set[str] = set()
     want = set(ensure)
-    for i, r in enumerate(ordered.toLocalIterator()):
+    for i, path in enumerate(ordered):
         try:
-            phys.update(_pq.read_schema(r.path).names)
+            phys.update(_pq.read_schema(path).names)
         except Exception:
             continue
         if i + 1 >= 64 and (not want or want <= _apply(phys)):
@@ -357,18 +206,12 @@ def evolve_schema_rename(
         active_constraints,
     )
 
-    from aws_seismic_data_pipeline_spark.sources.table import localman
-
     snap = _claimed_next_snapshot(spark, manifest_dir)
     try:
         lman = localman.load(manifest_dir)
-        if lman is not None:  # driver-side validation (Spark fallback)
-            effective = _effective_columns_pd(lman, ensure=(old,))
-        else:
-            man = spark.read.parquet(_mdd(manifest_dir))
-            effective = _effective_columns(
-                spark, manifest_dir, man, ensure=(old,)
-            )
+        effective = _effective_columns(
+            spark, manifest_dir, lman, ensure=(old,)
+        )
         if old not in effective:
             raise ValueError(
                 f"rename: column {old!r} does not exist at {manifest_dir} "
@@ -396,7 +239,9 @@ def evolve_schema_rename(
                     expr,
                 ),
             )
-            for cname, kind, expr in active_constraints(spark, manifest_dir)
+            for cname, kind, expr in active_constraints(
+                spark, manifest_dir, man=lman
+            )
             if pat.search(expr)
         ]
         dicts = [
@@ -426,15 +271,9 @@ def evolve_schema_rename(
     verify_claim(manifest_dir, snap)  # lease still ours at commit time
     import pandas as _pd
 
-    if _commit_metadata_rows_local(manifest_dir, _pd.DataFrame(dicts), snap):
-        return snap
-    schema = spark.read.parquet(_mdd(manifest_dir)).schema
-    rows = spark.createDataFrame(
-        [tuple(d.get(f.name) for f in schema) for d in dicts], schema
+    commit_manifest_rows(
+        spark, manifest_dir, [_pd.DataFrame(dicts)], snapshot_id=snap
     )
-    rows.unionByName(
-        _commit_ts_rows(spark, rows.schema, snap), allowMissingColumns=True
-    ).write.mode("append").parquet(_mdd(manifest_dir))
     return snap
 
 
@@ -459,18 +298,12 @@ def evolve_schema_drop(
         active_constraints,
     )
 
-    from aws_seismic_data_pipeline_spark.sources.table import localman
-
     snap = _claimed_next_snapshot(spark, manifest_dir)
     try:
         lman = localman.load(manifest_dir)
-        if lman is not None:  # driver-side validation (Spark fallback)
-            effective = _effective_columns_pd(lman, ensure=(column,))
-        else:
-            man = spark.read.parquet(_mdd(manifest_dir))
-            effective = _effective_columns(
-                spark, manifest_dir, man, ensure=(column,)
-            )
+        effective = _effective_columns(
+            spark, manifest_dir, lman, ensure=(column,)
+        )
         if column not in effective:
             raise ValueError(
                 f"drop: column {column!r} does not exist at {manifest_dir} "
@@ -479,7 +312,9 @@ def evolve_schema_drop(
         pat = _ident_pattern(column)
         referencing = sorted(
             cname
-            for cname, _kind, expr in active_constraints(spark, manifest_dir)
+            for cname, _kind, expr in active_constraints(
+                spark, manifest_dir, man=lman
+            )
             if pat.search(expr)
         )
         if referencing:
@@ -503,15 +338,9 @@ def evolve_schema_drop(
     verify_claim(manifest_dir, snap)  # lease still ours at commit time
     import pandas as _pd
 
-    if _commit_metadata_rows_local(manifest_dir, _pd.DataFrame([fixed]), snap):
-        return snap
-    schema = spark.read.parquet(_mdd(manifest_dir)).schema
-    rows = spark.createDataFrame(
-        [tuple(fixed.get(f.name) for f in schema)], schema
+    commit_manifest_rows(
+        spark, manifest_dir, [_pd.DataFrame([fixed])], snapshot_id=snap
     )
-    rows.unionByName(
-        _commit_ts_rows(spark, rows.schema, snap), allowMissingColumns=True
-    ).write.mode("append").parquet(_mdd(manifest_dir))
     return snap
 
 
@@ -529,13 +358,8 @@ def read_evolved(
     neither the declaration nor any post-commit file, so the OLD schema
     emerges exactly — schema history is as time-travelable as data
     history. Metadata-only cost on top of the pruned scan."""
-    from aws_seismic_data_pipeline_spark.sources.table import localman
-
     lman = localman.load(manifest_dir)
-    if lman is not None:  # driver-side schema-history read
-        ops = _schema_ops_pd(lman, as_of)
-    else:
-        ops = _schema_ops(spark.read.parquet(_mdd(manifest_dir)), as_of)
+    ops = localman.schema_ops(manifest_dir, as_of, lman)
     df = manifest_pruned_scan(
         spark,
         manifest_dir,
@@ -544,6 +368,7 @@ def read_evolved(
         float("inf"),
         as_of=as_of,
         merge_schema=True,
+        lman=lman,
     )
     # replay the schema-change history in COMMIT ORDER on top of the
     # physical union — each op transforms the name space the next op

@@ -29,6 +29,7 @@ from aws_seismic_data_pipeline_spark.sources.table.logstore import (
 )
 
 from aws_seismic_data_pipeline_spark.sources.table import _verbs as R
+from aws_seismic_data_pipeline_spark.sources.table import localman
 
 
 class GovernedTable:
@@ -144,7 +145,7 @@ class GovernedTable:
         snapshot committed at or before ``ts`` — Delta/Iceberg
         timestamp-travel semantics; raises below the earliest
         surviving commit (expired history fails loudly)."""
-        return R.snapshot_for_timestamp(self.spark, self.manifest_dir, ts)
+        return localman.snapshot_for_timestamp(self.manifest_dir, ts)
 
     def scan_at_timestamp(self, ts: float) -> DataFrame:
         """Full scan (minus live deletes) AS OF TIMESTAMP ``ts``."""
@@ -543,8 +544,6 @@ class GovernedTable:
     def visible_files(self, as_of: int | None = None) -> list[str]:
         """The file list a scan at ``as_of`` would consider —
         driver-side via localman (Spark fallback)."""
-        from aws_seismic_data_pipeline_spark.sources.table import localman
-
         lman = localman.load(self.manifest_dir)
         if lman is not None:
             return sorted(localman.visible(lman, as_of)["path"].unique())

@@ -1,4 +1,4 @@
-"""Driver-side pyarrow fast path over the KB-scale stats manifest.
+"""Driver-side pyarrow reads and writes of the KB-scale stats manifest.
 
 Every governed-table verb answers planning questions (visible files,
 pruned path lists, delete keys, commit timestamps) from the manifest —
@@ -6,18 +6,28 @@ kilobytes of local metadata. Routing each of those questions through a
 Spark job costs a full job-submission round trip (~100 ms of scheduler
 latency at local[32], and 30+ tiny tasks per job over the manifest's
 many small files); a governed MERGE chained ~30 such jobs, a SQL MERGE
-~43 (measured, r15 profiling). This module mirrors the exact Spark
-semantics of each metadata computation in pandas on the driver —
-``commit._next_snapshot`` and ``constraints.active_constraints``
-established the pattern and the rationale — so the Spark jobs that
-remain on a verb are only the ones that touch DATA.
+~43 (measured, r15 profiling). This module answers them in pandas on
+the driver, so the Spark jobs that remain on a verb are only the ones
+that touch DATA. The questions come in two sizes:
 
-Contract: every helper returns ``None`` on ANY failure and the caller
-falls back to the original Spark path, so layouts pyarrow cannot
-address (exotic stores, foreign schemas) keep working. Nothing is
-cached: each call re-reads the manifest directory, exactly like the
-``spark.read.parquet`` call it replaces (concurrent-writer semantics
-are read-point-for-read-point identical).
+- COMMIT-SCALE questions read only rows whose count grows with the
+  number of commits, not files: the expire floor, commit clocks, live
+  equality-delete keys, the schema-op history, declared names, the
+  constraint records, an incremental window's file list. Each has ONE
+  implementation here, fed by :func:`commit_rows` — a filter of the
+  manifest frame the verb already loaded, otherwise one filtered,
+  column-projected pyarrow read. There is no Spark twin: a manifest
+  pyarrow cannot read RAISES (every commit already depends on the
+  manifest being locally addressable — the logstore's mkdir/rename and
+  ``commit._next_snapshot``).
+- FILE-SCALE questions (visibility, pruning candidacy, row counts)
+  run over :func:`load`'s whole-manifest frame, which returns ``None``
+  above ``_LOCAL_MAN_MAX`` rows or when pyarrow cannot read the
+  manifest; the caller then runs its distributed Spark path.
+
+Nothing is cached: each call re-reads the manifest directory, exactly
+like the ``spark.read.parquet`` call it replaces (concurrent-writer
+semantics are read-point-for-read-point identical).
 
 The write half lands METADATA-ONLY commit rows (tombstones, equality
 deletes, constraint/schema declarations, commit_ts markers, and
@@ -83,19 +93,19 @@ _COLS = (
 #: materializes the WHOLE manifest on the driver, and the manifest is
 #: rows = files × row-groups × stat-columns — fine at the ~10^5 rows a
 #: 100 TB table's metadata occupies, catastrophic at 10^7-file
-#: pathologies. Above the bound every caller falls back to its
-#: original distributed Spark path. The count comes from parquet
-#: FOOTER metadata (``pyarrow.dataset.count_rows`` with no filter reads
+#: pathologies. Above the bound every file-scale caller falls back to
+#: its distributed Spark path. The count comes from parquet FOOTER
+#: metadata (``pyarrow.dataset.count_rows`` with no filter reads
 #: row-group counts only, never data pages), so the gate itself costs
 #: one footer read per manifest file.
-_LOCAL_MAN_MAX = int(os.environ.get("SPARK_GRAFT_LOCAL_MAN_MAX", "2000000"))
+_LOCAL_MAN_MAX = 2_000_000
 
 
 def load(manifest_dir: str):
     """The manifest as a pandas DataFrame (``partition_values`` as
     dicts, exactly the values Spark's collect() returns), or None when
     pyarrow cannot read it (caller falls back to Spark) OR when the
-    manifest exceeds ``SPARK_GRAFT_LOCAL_MAN_MAX`` rows (driver-heap
+    manifest exceeds ``_LOCAL_MAN_MAX`` rows (driver-heap
     guard: the Spark fallback is the correct engine for a manifest
     that large). Hidden ``_``/``.`` entries (the ``_commits`` token
     tree) are excluded by pyarrow's default ignore_prefixes, matching
@@ -106,15 +116,20 @@ def load(manifest_dir: str):
         ds = pads.dataset(_mdd(manifest_dir), format="parquet")
         if ds.count_rows() > _LOCAL_MAN_MAX:
             return None
-        tbl = ds.to_table()
-        pdf = tbl.to_pandas()
-        if "partition_values" in pdf.columns:
-            pdf["partition_values"] = pdf["partition_values"].map(
-                lambda v: dict(v) if v is not None else None
-            )
-        return pdf
+        return _frame(ds.to_table())
     except Exception:
         return None
+
+
+def _frame(tbl):
+    """An arrow manifest table as pandas, ``partition_values`` as dicts
+    (exactly the values Spark's collect() returns)."""
+    pdf = tbl.to_pandas()
+    if "partition_values" in pdf.columns:
+        pdf["partition_values"] = pdf["partition_values"].map(
+            lambda v: dict(v) if v is not None else None
+        )
+    return pdf
 
 
 def visible(man, as_of: int | None):
@@ -127,28 +142,6 @@ def visible(man, as_of: int | None):
     if removed:
         out = out[~out["path"].isin(removed)]
     return out
-
-
-def history_floor(man) -> int | None:
-    """Pandas twin of ``manifest._history_floor``."""
-    v = man.loc[man["op"] == "expire", "min_val"]
-    if len(v) == 0 or v.isna().all():
-        return None
-    return int(v.max())
-
-
-def check_floor(man, as_of: int | None, manifest_dir: str) -> None:
-    """Raise exactly like the Spark scan paths when ``as_of`` is below
-    the expire floor."""
-    if as_of is None:
-        return
-    floor = history_floor(man)
-    if floor is not None and as_of < floor:
-        raise ValueError(
-            f"as_of={as_of} is below the expire floor {floor} — "
-            f"history at {manifest_dir} was expired; pinned reads "
-            "below the floor cannot be reconstructed"
-        )
 
 
 def apply_partition_filter(man, partition_filter, manifest_dir: str):
@@ -267,47 +260,6 @@ def row_count(man, as_of: int | None) -> int:
     return int(n) if pd.notna(n) else 0
 
 
-def snapshot_for_timestamp(man, manifest_dir: str, ts: float) -> int:
-    """Pandas twin of ``manifest.snapshot_for_timestamp`` — identical
-    values and identical error text."""
-    rows = man[man["op"] == "commit_ts"][["snapshot_id", "min_val"]]
-    if rows.empty:
-        raise ValueError(
-            f"no commit timestamps recorded at {manifest_dir} — the table "
-            "predates timestamp stamping; pin by snapshot id instead"
-        )
-    eligible = rows.loc[rows["min_val"] <= float(ts), "snapshot_id"]
-    if eligible.empty:
-        raise ValueError(
-            f"timestamp {ts} precedes the earliest recorded commit at "
-            f"{manifest_dir} (earliest surviving commit_ts: "
-            f"{rows['min_val'].min()}) — the history may have been "
-            "expired"
-        )
-    return int(eligible.max())
-
-
-def live_delete_records(man, column: str, as_of: int | None):
-    """Pandas twin of ``deletes._live_delete_records``: the delete_eq
-    ROWS still in force at ``as_of`` (above the last delete_retire
-    ceiling), as a frame — consumers take counts / key sets off it."""
-    if as_of is not None:
-        man = man[man["snapshot_id"] <= as_of]
-    scoped = man[man["column_name"] == column]
-    retire = scoped.loc[scoped["op"] == "delete_retire", "min_val"]
-    ceiling = None if retire.empty or retire.isna().all() else retire.max()
-    dels = scoped[scoped["op"] == "delete_eq"]
-    if ceiling is not None:
-        dels = dels[dels["snapshot_id"] > int(ceiling)]
-    return dels
-
-
-def live_delete_keys(man, column: str, as_of: int | None) -> list[float]:
-    """The DISTINCT delete-key doubles still in force at ``as_of``."""
-    keys = live_delete_records(man, column, as_of)["min_val"].dropna().unique()
-    return sorted(float(k) for k in keys)
-
-
 def candidate_paths_for_keys(vis, column: str, keys) -> list[str]:
     """Files whose ``column`` stats range can contain ANY of ``keys``
     (stats-less files conservatively included) — the pure-Python twin
@@ -326,6 +278,167 @@ def candidate_paths_for_keys(vis, column: str, keys) -> list[str]:
         if i < len(ks) and ks[i] <= float(row["fmax"]):
             out.append(path)
     return sorted(out)
+
+
+# --------------------------------------------------------------------
+# commit-scale questions: one implementation each, no Spark twin
+# --------------------------------------------------------------------
+
+def commit_rows(
+    manifest_dir: str,
+    ops,
+    columns,
+    man=None,
+    after: int | None = None,
+    upto: int | None = None,
+    column: str | None = None,
+    limit: int | None = None,
+):
+    """The manifest rows whose ``op`` is one of ``ops``, projected to
+    ``columns`` — the single input of every commit-scale question.
+    Optional filters: snapshot window (``after``, ``upto``], one
+    ``column_name``, and the first ``limit`` rows. With ``man`` (the
+    frame a verb already loaded) this is a pandas filter, so the hot
+    path never reads the manifest twice; otherwise it is ONE filtered,
+    column-projected pyarrow read that returns only the matching rows
+    (never the whole manifest). Raises when pyarrow cannot read the
+    manifest."""
+    ops, columns = list(ops), list(columns)
+    if man is not None:
+        keep = man["op"].isin(ops)
+        if after is not None:
+            keep &= man["snapshot_id"] > after
+        if upto is not None:
+            keep &= man["snapshot_id"] <= upto
+        if column is not None:
+            keep &= man["column_name"] == column
+        out = man.loc[keep, columns]
+        return out if limit is None else out.head(limit)
+    import pyarrow.dataset as pads
+
+    where = pads.field("op").isin(ops)
+    if after is not None:
+        where &= pads.field("snapshot_id") > after
+    if upto is not None:
+        where &= pads.field("snapshot_id") <= upto
+    if column is not None:
+        where &= pads.field("column_name") == column
+    ds = pads.dataset(_mdd(manifest_dir), format="parquet")
+    if limit is None:
+        return _frame(ds.to_table(columns=columns, filter=where))
+    return _frame(ds.head(limit, columns=columns, filter=where))
+
+
+def check_floor(manifest_dir: str, as_of: int | None, man=None) -> None:
+    """Raise when ``as_of`` is below the expire floor recorded by
+    ``expire_manifest_history``: expired history must fail loudly,
+    never reconstruct partially."""
+    if as_of is None:
+        return
+    floors = commit_rows(manifest_dir, ("expire",), ("min_val",), man)
+    floors = floors["min_val"].dropna()
+    if len(floors) and as_of < floors.max():
+        raise ValueError(
+            f"as_of={as_of} is below the expire floor {int(floors.max())} — "
+            f"history at {manifest_dir} was expired; pinned reads "
+            "below the floor cannot be reconstructed"
+        )
+
+
+def snapshot_for_timestamp(manifest_dir: str, ts: float, man=None) -> int:
+    """Resolve ``AS OF TIMESTAMP`` to a snapshot id: the NEWEST
+    snapshot whose commit wall-clock (its commit_ts marker) is <=
+    ``ts`` (Delta/Iceberg semantics — the table state a reader at that
+    instant saw). Raises when ``ts`` precedes every recorded commit —
+    including when the matching history was EXPIRED (commit_ts markers
+    below the floor are dropped with it, so a pre-floor timestamp
+    fails loudly exactly like a pre-floor snapshot pin)."""
+    rows = commit_rows(
+        manifest_dir, ("commit_ts",), ("snapshot_id", "min_val"), man
+    )
+    if rows.empty:
+        raise ValueError(
+            f"no commit timestamps recorded at {manifest_dir} — the table "
+            "predates timestamp stamping; pin by snapshot id instead"
+        )
+    eligible = rows.loc[rows["min_val"] <= float(ts), "snapshot_id"]
+    if eligible.empty:
+        raise ValueError(
+            f"timestamp {ts} precedes the earliest recorded commit at "
+            f"{manifest_dir} (earliest surviving commit_ts: "
+            f"{rows['min_val'].min()}) — the history may have been "
+            "expired"
+        )
+    return int(eligible.max())
+
+
+def live_delete_records(
+    manifest_dir: str, column: str, as_of: int | None, man=None
+):
+    """The equality-delete records STILL IN FORCE at ``as_of``:
+    'delete_eq' rows for ``column`` at snapshots <= the pin, minus
+    those retired by a 'delete_retire' record (whose min_val carries
+    the retired-through snapshot ceiling). Pinned reads between a
+    delete and its compaction still subtract; reads at or above the
+    compaction see the physically-rewritten files and an empty set.
+    A frame — consumers take counts / key sets off it."""
+    scoped = commit_rows(
+        manifest_dir,
+        ("delete_eq", "delete_retire"),
+        ("snapshot_id", "op", "min_val"),
+        man,
+        upto=as_of,
+        column=column,
+    )
+    retire = scoped.loc[scoped["op"] == "delete_retire", "min_val"]
+    ceiling = None if retire.empty or retire.isna().all() else retire.max()
+    dels = scoped[scoped["op"] == "delete_eq"]
+    if ceiling is not None:
+        dels = dels[dels["snapshot_id"] > int(ceiling)]
+    return dels
+
+
+def live_delete_keys(
+    manifest_dir: str, column: str, as_of: int | None, man=None
+) -> list[float]:
+    """The DISTINCT delete-key doubles still in force at ``as_of``."""
+    keys = live_delete_records(manifest_dir, column, as_of, man)["min_val"]
+    return sorted(float(k) for k in keys.dropna().unique())
+
+
+def schema_ops(manifest_dir: str, as_of: int | None, man=None) -> list:
+    """The table's schema-change history visible at ``as_of``, in
+    commit order: [(snapshot_id, op, column_name, arg)] where arg is
+    the SQL type for 'schema_add', the new name for 'schema_rename',
+    None for 'schema_drop'. Applying these IN ORDER to the physical
+    column space yields the effective schema — the name-mapping walk
+    Iceberg does through field ids, replayed through the commit log."""
+    rows = commit_rows(
+        manifest_dir,
+        ("schema_add", "schema_rename", "schema_drop"),
+        ("snapshot_id", "op", "column_name", "partition_values"),
+        man,
+        upto=as_of,
+    )
+    out = []
+    for snap, op, name, pv in rows.itertuples(index=False):
+        pv = pv or {}
+        arg = pv.get("type") if op == "schema_add" else pv.get("to")
+        out.append((int(snap), op, name, arg))
+    out.sort(key=lambda t: (t[0], t[1], t[2]))
+    return out
+
+
+def declared_names(manifest_dir: str, man=None) -> set:
+    """The names a schema_add may not reuse: adds, rename sources AND
+    targets, and dropped names (re-using one would resurface old
+    files' values)."""
+    out = set()
+    for _snap, op, name, arg in schema_ops(manifest_dir, None, man):
+        out.add(name)
+        if op == "schema_rename":
+            out.add(arg)
+    return out
 
 
 def concat_rows(frames):

@@ -30,9 +30,6 @@ from aws_seismic_data_pipeline_spark.sources.table.commit import (
     release_claim,
     verify_claim,
 )
-from aws_seismic_data_pipeline_spark.sources.table.deletes import (
-    _live_delete_records,
-)
 from aws_seismic_data_pipeline_spark.sources.table.logstore import (
     log_store_for,
 )
@@ -56,9 +53,7 @@ from aws_seismic_data_pipeline_spark.sources.table.manifest import (
 #: many visible files the scattered-file selection runs in pandas on
 #: the driver; above it the per-file rectangle widths stay a
 #: distributed frame (a 10⁷-file table must not become a driver dict).
-_LOCAL_SELECT_MAX = int(
-    os.environ.get("SPARK_GRAFT_LOCAL_SELECT_MAX", "100000")
-)
+_LOCAL_SELECT_MAX = 100_000
 
 
 def merge_with_conflict_retry(
@@ -1319,12 +1314,11 @@ def merge_evolve_through_manifest(
     evolved_columns)."""
     from aws_seismic_data_pipeline_spark.sources.table.evolution import (
         schema_add_rows,
-        schema_add_rows_pd,
     )
 
-    # the evolved-column decision (sample file's physical schema +
-    # declared adds) is metadata-scale: driver-side via localman, with
-    # the Spark read as fallback
+    # the evolved-column decision: a sample file's physical schema
+    # (file-scale listing: driver-side under the localman gate, Spark
+    # above it) plus the declared adds (commit-scale, driver-side)
     lman = localman.load(manifest_dir)
     physical = None
     if lman is not None:
@@ -1337,24 +1331,21 @@ def merge_evolve_through_manifest(
             physical = set(_pq.read_schema(vis_paths[0]).names)
         except Exception:
             physical = None
-        declared = set(
-            lman.loc[lman["op"] == "schema_add", "column_name"].unique()
-        )
     if physical is None:
-        man = spark.read.parquet(_mdd(manifest_dir))
         sample = (
-            _visible_stats(man, None).select("path").limit(1).collect()
+            _visible_stats(spark.read.parquet(_mdd(manifest_dir)), None)
+            .select("path")
+            .limit(1)
+            .collect()
         )
         if not sample:
             raise ValueError(f"empty stats manifest at {manifest_dir}")
         physical = set(read_data_files(spark, [sample[0].path]).columns)
-        declared = {
-            r.column_name
-            for r in man.filter(F.col("op") == "schema_add")
-            .select("column_name")
-            .distinct()
-            .collect()
-        }
+    declared = set(
+        localman.commit_rows(
+            manifest_dir, ("schema_add",), ("column_name",), lman
+        )["column_name"]
+    )
     dtypes = dict(delta.dtypes)
     evolved = {
         c: dtypes[c]
@@ -1365,12 +1356,7 @@ def merge_evolve_through_manifest(
     try:
         extra = None
         if evolved:
-            extra_pdf = schema_add_rows_pd(manifest_dir, evolved, snap)
-            extra = [
-                extra_pdf
-                if extra_pdf is not None
-                else schema_add_rows(spark, manifest_dir, evolved, snap)
-            ]
+            extra = [schema_add_rows(manifest_dir, evolved, snap)]
         s, n_int, n_rw = merge_through_manifest(
             spark,
             manifest_dir,
@@ -1861,10 +1847,10 @@ def expire_manifest_history(
                 removed_below, "path", "left_anti"
             )
             # retire ceilings are PER COLUMN, mirroring
-            # _live_delete_records' scoping: a retire marker for column
-            # A must never expire column B's still-live delete records
-            # (that would silently resurrect B's deleted rows on every
-            # post-expire read)
+            # localman.live_delete_records' scoping: a retire marker for
+            # column A must never expire column B's still-live delete
+            # records (that would silently resurrect B's deleted rows on
+            # every post-expire read)
             ceilings = (
                 old.filter(F.col("op") == "delete_retire")
                 .groupBy("column_name")

@@ -284,7 +284,7 @@ def _commit_ts_fixed(snapshot_id: int, ts: float | None = None) -> dict:
     min_val/max_val slots exactly like tombstone retention clocks)
     stamped at snapshot ``snapshot_id``. One marker rides inside every
     commit's single write job, giving the snapshot axis a time axis —
-    ``snapshot_for_timestamp`` resolves ``AS OF TIMESTAMP`` reads
+    ``localman.snapshot_for_timestamp`` resolves ``AS OF TIMESTAMP`` reads
     (the form users actually type) through these rows. Delta resolves
     timestamps from log-file mtimes; an explicit row survives manifest
     rewrites (expire) that mtimes do not."""
@@ -314,43 +314,6 @@ def _commit_ts_rows(
     return spark.createDataFrame(
         [tuple(fixed.get(f.name) for f in schema)], schema
     )
-
-
-def snapshot_for_timestamp(
-    spark: SparkSession, manifest_dir: str, ts: float
-) -> int:
-    """Resolve ``AS OF TIMESTAMP`` to a snapshot id: the NEWEST
-    snapshot whose commit wall-clock is <= ``ts`` (Delta/Iceberg
-    semantics — the table state a reader at that instant saw). Raises
-    when ``ts`` precedes every recorded commit — including when the
-    matching history was EXPIRED (commit_ts markers below the floor
-    are dropped with it, so a pre-floor timestamp fails loudly exactly
-    like a pre-floor snapshot pin). KB-scale manifest read — resolved
-    DRIVER-SIDE through :mod:`.localman` (Spark fallback), the
-    ``commit._next_snapshot`` rationale."""
-    lman = localman.load(manifest_dir)
-    if lman is not None:
-        return localman.snapshot_for_timestamp(lman, manifest_dir, ts)
-    man = spark.read.parquet(_mdd(manifest_dir))
-    rows = (
-        man.filter(F.col("op") == "commit_ts")
-        .select("snapshot_id", "min_val")
-        .collect()
-    )
-    if not rows:
-        raise ValueError(
-            f"no commit timestamps recorded at {manifest_dir} — the table "
-            "predates timestamp stamping; pin by snapshot id instead"
-        )
-    eligible = [int(r.snapshot_id) for r in rows if r.min_val <= float(ts)]
-    if not eligible:
-        raise ValueError(
-            f"timestamp {ts} precedes the earliest recorded commit at "
-            f"{manifest_dir} (earliest surviving commit_ts: "
-            f"{min(r.min_val for r in rows)}) — the history may have been "
-            "expired"
-        )
-    return max(eligible)
 
 
 def commit_manifest_rows(
@@ -642,8 +605,8 @@ def manifest_pruned_scan(
     files' schemas instead whenever they disagree."""
     if lman is None:
         lman = localman.load(manifest_dir)
+    localman.check_floor(manifest_dir, as_of, lman)
     if lman is not None:
-        localman.check_floor(lman, as_of, manifest_dir)
         vis = localman.visible(lman, as_of)
         vis = localman.apply_partition_filter(
             vis, partition_filter, manifest_dir
@@ -656,16 +619,7 @@ def manifest_pruned_scan(
             {column: (lo, hi)},
             merge_schema,
         )
-    raw = spark.read.parquet(_mdd(manifest_dir))
-    if as_of is not None:
-        floor = _history_floor(raw)
-        if floor is not None and as_of < floor:
-            raise ValueError(
-                f"as_of={as_of} is below the expire floor {floor} — "
-                f"history at {manifest_dir} was expired; pinned reads "
-                "below the floor cannot be reconstructed"
-            )
-    manifest = _visible_stats(raw, as_of)
+    manifest = _visible_stats(spark.read.parquet(_mdd(manifest_dir)), as_of)
     if partition_filter:
         if "partition_values" not in manifest.columns:
             raise ValueError(
@@ -767,8 +721,8 @@ def manifest_pruned_scan_multi(
     if not predicates:
         raise ValueError("manifest_pruned_scan_multi: empty predicate map")
     lman = localman.load(manifest_dir)
+    localman.check_floor(manifest_dir, as_of, lman)
     if lman is not None:  # driver-side metadata pass (see pruned_scan)
-        localman.check_floor(lman, as_of, manifest_dir)
         vis = localman.visible(lman, as_of)
         vis = localman.apply_partition_filter(
             vis, partition_filter, manifest_dir
@@ -781,16 +735,7 @@ def manifest_pruned_scan_multi(
             predicates,
             merge_schema,
         )
-    raw = spark.read.parquet(_mdd(manifest_dir))
-    if as_of is not None:
-        floor = _history_floor(raw)
-        if floor is not None and as_of < floor:
-            raise ValueError(
-                f"as_of={as_of} is below the expire floor {floor} — "
-                f"history at {manifest_dir} was expired; pinned reads "
-                "below the floor cannot be reconstructed"
-            )
-    manifest = _visible_stats(raw, as_of)
+    manifest = _visible_stats(spark.read.parquet(_mdd(manifest_dir)), as_of)
     if partition_filter:
         if "partition_values" not in manifest.columns:
             raise ValueError(
@@ -864,8 +809,8 @@ def manifest_pruned_scan_multi_rowgroup(
             "manifest_pruned_scan_multi_rowgroup: empty predicate map"
         )
     lman = localman.load(manifest_dir)
+    localman.check_floor(manifest_dir, as_of, lman)
     if lman is not None:  # driver-side metadata pass (see pruned_scan)
-        localman.check_floor(lman, as_of, manifest_dir)
         vis = localman.visible(lman, as_of)
         vis = localman.apply_partition_filter(
             vis, partition_filter, manifest_dir
@@ -878,16 +823,7 @@ def manifest_pruned_scan_multi_rowgroup(
             predicates,
             merge_schema,
         )
-    raw = spark.read.parquet(_mdd(manifest_dir))
-    if as_of is not None:
-        floor = _history_floor(raw)
-        if floor is not None and as_of < floor:
-            raise ValueError(
-                f"as_of={as_of} is below the expire floor {floor} — "
-                f"history at {manifest_dir} was expired; pinned reads "
-                "below the floor cannot be reconstructed"
-            )
-    manifest = _visible_stats(raw, as_of)
+    manifest = _visible_stats(spark.read.parquet(_mdd(manifest_dir)), as_of)
     if partition_filter:
         if "partition_values" not in manifest.columns:
             raise ValueError(
@@ -1668,35 +1604,19 @@ def manifest_incremental_scan(
         raise ValueError(
             f"incremental scan: to={to_snapshot} < from={from_snapshot}"
         )
-    lman = localman.load(manifest_dir)
-    if lman is not None:  # driver-side interval listing (see pruned_scan)
-        w = lman[
-            (lman["snapshot_id"] > from_snapshot)
-            & (lman["snapshot_id"] <= to_snapshot)
-        ]
-        maintenance = set(w.loc[w["op"] == "remove", "snapshot_id"])
-        adds = w[w["op"] == "add"]
-        paths = sorted(
-            adds.loc[~adds["snapshot_id"].isin(maintenance), "path"].unique()
-        )
-    else:
-        m = spark.read.parquet(_mdd(manifest_dir))
-        window_rows = m.filter(
-            (F.col("snapshot_id") > from_snapshot)
-            & (F.col("snapshot_id") <= to_snapshot)
-        )
-        maintenance = (
-            window_rows.filter(F.col("op") == "remove")
-            .select("snapshot_id")
-            .distinct()
-        )
-        added = (
-            window_rows.filter(F.col("op") == "add")
-            .join(maintenance, "snapshot_id", "left_anti")
-            .select("path")
-            .distinct()
-        )
-        paths = [r.path for r in added.collect()]
+    # the window's add/remove rows, read driver-side in one filtered pass
+    w = localman.commit_rows(
+        manifest_dir,
+        ("add", "remove"),
+        ("snapshot_id", "op", "path"),
+        after=from_snapshot,
+        upto=to_snapshot,
+    )
+    maintenance = set(w.loc[w["op"] == "remove", "snapshot_id"])
+    adds = w[w["op"] == "add"]
+    paths = sorted(
+        adds.loc[~adds["snapshot_id"].isin(maintenance), "path"].unique()
+    )
     if not paths:
         return spark.createDataFrame([], "doc_id long")
     return read_data_files(spark, paths)
@@ -1763,17 +1683,6 @@ def scan_manifest_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-
-
-def _history_floor(manifest: DataFrame) -> int | None:
-    """The expire floor recorded in the manifest (None if history has
-    never been expired)."""
-    v = (
-        manifest.filter(F.col("op") == "expire")
-        .agg(F.max("min_val"))
-        .collect()[0][0]
-    )
-    return None if v is None else int(v)
 
 
 def manifest_count_range(
@@ -1984,9 +1893,9 @@ def scan_manifest_count_only(spark: SparkSession, sf_dir: str) -> DataFrame:
 def plan_time_travel_timestamp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AS OF TIMESTAMP time travel end to end (round-12 verdict item
     6): every commit stamps its wall-clock as a commit_ts marker row
-    inside the SAME write job; ``snapshot_for_timestamp`` resolves a
-    timestamp to the newest snapshot committed at or before it. The
-    scenario creates the table (snapshot 0), appends a batch
+    inside the SAME write job; ``localman.snapshot_for_timestamp``
+    resolves a timestamp to the newest snapshot committed at or before
+    it. The scenario creates the table (snapshot 0), appends a batch
     (snapshot 1), reads the two recorded commit clocks BACK OFF THE
     MANIFEST, and pins: a read at snapshot 0's exact clock sees only
     the original files; a read at snapshot 1's clock sees both. The
@@ -2027,22 +1936,13 @@ def plan_time_travel_timestamp(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.replace(part, late_path)
         table.append([late_path])
         # the recorded commit clocks, read back off the manifest
-        # (driver-side; Spark fallback)
-        lman = localman.load(mpath)
-        if lman is not None:
-            marks = lman[lman["op"] == "commit_ts"]
-            clocks = {
-                int(s): float(v)
-                for s, v in zip(marks["snapshot_id"], marks["min_val"])
-            }
-        else:
-            clocks = {
-                int(r.snapshot_id): r.min_val
-                for r in spark.read.parquet(_mdd(mpath))
-                .filter(F.col("op") == "commit_ts")
-                .select("snapshot_id", "min_val")
-                .collect()
-            }
+        marks = localman.commit_rows(
+            mpath, ("commit_ts",), ("snapshot_id", "min_val")
+        )
+        clocks = {
+            int(snap): float(ts)
+            for snap, ts in zip(marks["snapshot_id"], marks["min_val"])
+        }
         out = []
         for pin, snap in ((0, 0), (1, 1)):
             agg = (

@@ -1726,8 +1726,8 @@ def test_delete_compaction_retires_records_and_preserves_history(
     subset of files, and rewriting lost no surviving row."""
     import glob
 
+    from aws_seismic_data_pipeline_spark.sources.table import localman
     from aws_seismic_data_pipeline_spark.sources.table.deletes import (
-        _live_delete_records,
         compact_equality_deletes,
         equality_delete,
         read_with_deletes,
@@ -1768,13 +1768,14 @@ def test_delete_compaction_retires_records_and_preserves_history(
     # w2/w3: at/after compaction — physically gone, plain scan agrees
     assert ids(manifest_pruned_scan(spark, mpath, "doc_id", -1, 2**62)) == live_ids
     assert ids(read_with_deletes(spark, mpath, "doc_id")) == live_ids
-    # the live-delete set is EMPTY after retirement
-    assert (
-        _live_delete_records(
-            spark.read.parquet(_mdd(mpath)), "doc_id", None
-        ).count()
-        == 0
-    )
+    # the live-delete set is EMPTY after retirement, and the records
+    # still subtract for a pin between the delete and the compaction
+    assert localman.live_delete_keys(mpath, "doc_id", None) == []
+    assert localman.live_delete_keys(mpath, "doc_id", del_snap) == [
+        3.0,
+        100.0,
+        203.0,
+    ]
     # and the dead keys are absent from the rewritten bytes themselves
     current_files = sorted(
         set(

@@ -1,8 +1,9 @@
-"""Equivalence pins for the driver-side manifest fast path
-(``sources/table/localman``): every pandas twin must return exactly
-what the Spark computation it replaces returns, and pyarrow-written
-manifest files must interoperate with Spark-written ones in one
-directory (both engines, both write orders)."""
+"""Pins for the driver-side manifest reads (``sources/table/localman``):
+every file-scale pandas twin must return exactly what the Spark
+computation it replaces returns — with the localman gate open and
+closed — the commit-scale questions must answer without a Spark job,
+and pyarrow-written manifest files must interoperate with Spark-written
+ones in one directory (both engines, both write orders)."""
 
 from __future__ import annotations
 
@@ -22,7 +23,6 @@ from aws_seismic_data_pipeline_spark.sources.table.manifest import (
     _visible_stats,
     append_stats_manifest,
     manifest_row_count,
-    snapshot_for_timestamp,
     write_stats_manifest,
 )
 
@@ -87,8 +87,8 @@ def test_load_matches_spark_collect(spark, staged):
 
 def test_load_gate_routes_to_spark(spark, staged, monkeypatch):
     """r15 verdict item 1: ``load()`` must refuse manifests larger
-    than SPARK_GRAFT_LOCAL_MAN_MAX rows (driver-heap guard) so callers
-    fall back to the distributed Spark path — with identical results."""
+    than ``_LOCAL_MAN_MAX`` rows (driver-heap guard) so callers fall
+    back to the distributed Spark path — with identical results."""
     _data, mpath = staged
     want = manifest_row_count(spark, mpath)  # fast path (gate open)
     monkeypatch.setattr(localman, "_LOCAL_MAN_MAX", 0)
@@ -160,40 +160,233 @@ def test_row_count_matches(spark, staged):
 
 
 def test_snapshot_for_timestamp_matches(spark, staged):
+    """Each commit's own clock resolves to that commit; a clock past
+    the newest commit resolves to the tip; one before the first raises.
+    The loaded frame and the filtered pyarrow read agree."""
     _data, mpath = staged
     man = localman.load(mpath)
-    marks = sorted(
-        man.loc[man["op"] == "commit_ts", "min_val"].tolist()
-    )
-    for ts in [marks[0], marks[-1], marks[-1] + 100]:
-        assert localman.snapshot_for_timestamp(
-            man, mpath, ts
-        ) == snapshot_for_timestamp(spark, mpath, ts)
-    with pytest.raises(ValueError):
-        localman.snapshot_for_timestamp(man, mpath, marks[0] - 1)
+    marks = man[man["op"] == "commit_ts"]
+    clocks = dict(zip(marks["snapshot_id"].astype(int), marks["min_val"]))
+    assert sorted(clocks)[:4] == [0, 1, 2, 3]
+    for snap in (0, 1, 2, 3):
+        for frame in (man, None):
+            assert (
+                localman.snapshot_for_timestamp(mpath, clocks[snap], frame)
+                == snap
+            )
+    tip = max(clocks)
+    assert localman.snapshot_for_timestamp(mpath, clocks[tip] + 100) == tip
+    with pytest.raises(ValueError, match="precedes the earliest"):
+        localman.snapshot_for_timestamp(mpath, min(clocks.values()) - 1)
 
 
 def test_live_delete_keys(spark, staged):
+    """The equality delete at snapshot 3 is in force from 3 on and
+    invisible below it, through both inputs of the helper."""
     _data, mpath = staged
+    man = localman.load(mpath)
+    for frame in (man, None):
+        assert localman.live_delete_keys(mpath, "doc_id", None, frame) == [
+            11.0,
+            22.0,
+            33.0,
+        ]
+        assert localman.live_delete_keys(mpath, "doc_id", 3, frame) == [
+            11.0,
+            22.0,
+            33.0,
+        ]
+        # below the delete snapshot: no keys in force
+        assert localman.live_delete_keys(mpath, "doc_id", 2, frame) == []
+        assert localman.live_delete_keys(mpath, "n_chars", None, frame) == []
+
+
+def _read_side_answers(spark, data_dir, mpath):
+    """Every read-side verb's answer over the staged table, as plain
+    values."""
+    from aws_seismic_data_pipeline_spark.sources.table.cdf import (
+        table_changes,
+    )
     from aws_seismic_data_pipeline_spark.sources.table.deletes import (
-        _live_delete_records,
+        read_with_deletes,
+    )
+    from aws_seismic_data_pipeline_spark.sources.table.evolution import (
+        read_evolved,
+    )
+    from aws_seismic_data_pipeline_spark.sources.table.facade import (
+        GovernedTable,
+    )
+    from aws_seismic_data_pipeline_spark.sources.table.manifest import (
+        describe_history,
+        manifest_count_range,
+        manifest_incremental_scan,
+        manifest_pruned_scan,
+        manifest_pruned_scan_multi,
+        manifest_pruned_scan_multi_rowgroup,
     )
 
-    man = localman.load(mpath)
-    got = localman.live_delete_keys(man, "doc_id", None)
-    want = sorted(
-        set(
-            r.min_val
-            for r in _live_delete_records(
-                spark.read.parquet(_mdd(mpath)), "doc_id", None
-            )
-            .select("min_val")
-            .collect()
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    table = GovernedTable(spark, data_dir, mpath, "doc_id")
+    box = {"doc_id": (0.0, 50.0)}
+    out = {}
+    for as_of in (None, 0, 1, 2):
+        out[("pruned", as_of)] = rows(
+            manifest_pruned_scan(spark, mpath, "doc_id", 0, 100, as_of=as_of)
         )
+        out[("multi", as_of)] = rows(
+            manifest_pruned_scan_multi(spark, mpath, box, as_of=as_of)
+        )
+        out[("multi_rowgroup", as_of)] = rows(
+            manifest_pruned_scan_multi_rowgroup(spark, mpath, box, as_of=as_of)
+        )
+        out[("row_count", as_of)] = manifest_row_count(spark, mpath, as_of)
+        out[("count_range", as_of)] = manifest_count_range(
+            spark, mpath, "doc_id", 0, 100, as_of=as_of
+        )
+        out[("visible_files", as_of)] = table.visible_files(as_of)
+    for as_of in (None, 2):
+        out[("with_deletes", as_of)] = rows(
+            read_with_deletes(spark, mpath, "doc_id", as_of=as_of)
+        )
+        out[("evolved", as_of)] = rows(
+            read_evolved(spark, mpath, "doc_id", as_of=as_of)
+        )
+    out["history"] = rows(describe_history(spark, mpath))
+    out["incremental"] = rows(manifest_incremental_scan(spark, mpath, 0, 3))
+    out["changes"] = rows(table_changes(spark, mpath, "doc_id", 0, 3))
+    return out
+
+
+def test_read_side_verbs_agree_with_gate_closed(spark, staged, monkeypatch):
+    """Closing the localman gate routes every file-scale question to
+    its Spark twin — the path a manifest over ``_LOCAL_MAN_MAX`` rows
+    takes — and every read-side verb must still give the same answer."""
+    data_dir, mpath = staged
+    want = _read_side_answers(spark, data_dir, mpath)
+    assert want[("row_count", None)] > 0
+    assert want[("pruned", None)] and want["changes"]
+    monkeypatch.setattr(localman, "_LOCAL_MAN_MAX", 0)
+    assert localman.load(mpath) is None
+    got = _read_side_answers(spark, data_dir, mpath)
+    assert got.keys() == want.keys()
+    for k in want:
+        assert got[k] == want[k], k
+
+
+def test_commit_scale_questions_start_no_spark_job(
+    spark, staged, monkeypatch
+):
+    """With the gate closed, the commit-scale questions still answer
+    from one filtered pyarrow read each — no Spark job."""
+    from perfbench.harness import StatusCounters
+
+    from aws_seismic_data_pipeline_spark.sources.table.commit import (
+        _next_snapshot,
     )
-    assert got == want == [11.0, 22.0, 33.0]
-    # below the delete snapshot: no keys in force
-    assert localman.live_delete_keys(man, "doc_id", 1) == []
+    from aws_seismic_data_pipeline_spark.sources.table.constraints import (
+        active_constraints,
+    )
+    from aws_seismic_data_pipeline_spark.sources.table.manifest import (
+        manifest_incremental_scan,
+    )
+
+    _data, mpath = staged
+    monkeypatch.setattr(localman, "_LOCAL_MAN_MAX", 0)
+    counters = StatusCounters(spark)
+    clock = localman.commit_rows(mpath, ("commit_ts",), ("min_val",))
+    assert localman.snapshot_for_timestamp(mpath, clock["min_val"].max()) >= 3
+    localman.check_floor(mpath, 0)  # never expired: any pin is readable
+    assert localman.live_delete_keys(mpath, "doc_id", None) == [
+        11.0,
+        22.0,
+        33.0,
+    ]
+    assert localman.schema_ops(mpath, None) == []
+    assert localman.declared_names(mpath) == set()
+    assert active_constraints(spark, mpath) == []
+    assert _next_snapshot(spark, mpath) >= 4
+    manifest_incremental_scan(spark, mpath, 0, 3)  # planned, not run
+    assert counters.delta()["jobs"] == 0
+
+
+def test_expire_floor_raises_with_gate_closed(
+    spark, staged, tmp_path, monkeypatch
+):
+    """Above the localman gate the pruned scans still refuse a pin
+    below the expire floor — the check reads only the expire rows."""
+    from aws_seismic_data_pipeline_spark.sources.table.maintenance import (
+        expire_manifest_history,
+    )
+    from aws_seismic_data_pipeline_spark.sources.table.manifest import (
+        manifest_pruned_scan,
+        manifest_pruned_scan_multi,
+        manifest_pruned_scan_multi_rowgroup,
+        remove_from_manifest,
+    )
+
+    data_dir, _m = staged
+    mpath = str(tmp_path / "manifest")
+    files = sorted(glob.glob(os.path.join(data_dir, "*.parquet")))
+    write_stats_manifest(spark, files, mpath, ("doc_id",))
+    append_stats_manifest(spark, files[:1], mpath, ("doc_id",))
+    remove_from_manifest(spark, mpath, files[1:2])
+    expire_manifest_history(spark, mpath, 2)
+    monkeypatch.setattr(localman, "_LOCAL_MAN_MAX", 0)
+    box = {"doc_id": (0.0, 1e9)}
+    scans = (
+        lambda as_of: manifest_pruned_scan(
+            spark, mpath, "doc_id", 0, 1e9, as_of=as_of
+        ),
+        lambda as_of: manifest_pruned_scan_multi(
+            spark, mpath, box, as_of=as_of
+        ),
+        lambda as_of: manifest_pruned_scan_multi_rowgroup(
+            spark, mpath, box, as_of=as_of
+        ),
+    )
+    for scan in scans:
+        with pytest.raises(ValueError, match="below the expire floor 2"):
+            scan(1)
+        scan(2)  # at the floor: readable
+
+
+def test_next_snapshot_absent_empty_and_corrupt(spark, staged, tmp_path):
+    """An absent or still-empty manifest starts at snapshot 0; an
+    unreadable manifest file raises instead — claiming 0 there would
+    stamp new rows onto an id that already has committed history."""
+    import shutil
+
+    from aws_seismic_data_pipeline_spark.sources.table.commit import (
+        _claimed_next_snapshot,
+        _next_snapshot,
+    )
+    from aws_seismic_data_pipeline_spark.sources.table.manifest import (
+        remove_from_manifest,
+    )
+
+    data_dir, _m = staged
+    assert _next_snapshot(spark, str(tmp_path / "absent")) == 0
+    empty = tmp_path / "empty"
+    (empty / "_commits").mkdir(parents=True)
+    assert _next_snapshot(spark, str(empty)) == 0
+
+    mpath = str(tmp_path / "manifest")
+    files = sorted(glob.glob(os.path.join(data_dir, "*.parquet")))
+    write_stats_manifest(spark, files, mpath, ("doc_id",))
+    append_stats_manifest(spark, files[:1], mpath, ("doc_id",))
+    remove_from_manifest(spark, mpath, files[1:2])
+    assert _next_snapshot(spark, mpath) == 3
+    shutil.rmtree(os.path.join(mpath, "_commits"))  # a stale token tree
+    victim = sorted(glob.glob(os.path.join(_mdd(mpath), "*.parquet")))[0]
+    with open(victim, "r+b") as fh:
+        fh.truncate(os.path.getsize(victim) // 2)
+    with pytest.raises(Exception):
+        _next_snapshot(spark, mpath)
+    with pytest.raises(Exception):
+        _claimed_next_snapshot(spark, mpath)
+    assert not os.path.exists(os.path.join(mpath, "_commits", "0"))
 
 
 def test_write_rows_interop(spark, staged):

@@ -49,12 +49,10 @@ COLLECT_ALLOWED = {
     "plans/validate.py",
     "sources/readers.py",
     "sources/footers.py",  # r11 split: footer-stats listing frames
-    "sources/table/commit.py",  # snapshot max() 1-row agg
-    "sources/table/constraints.py",  # |constraints|-row pyarrow-fallback read + 1-row gate agg
-    "sources/table/cdf.py",  # commit inventory + candidate path frames
+    "sources/table/constraints.py",  # 1-row gate agg
+    "sources/table/cdf.py",  # delete-candidate path frames + key type
     "sources/table/sqlface.py",  # fixture delete keys + 1-row commit clock
     "sources/table/manifest.py",  # metadata-scale path/stats frames
-    "sources/table/evolution.py",
     "sources/table/deletes.py",
     "sources/table/maintenance.py",
     "sources/table/sketches.py",
@@ -281,4 +279,61 @@ def test_table_data_reads_pin_their_schema():
     assert not offenders, (
         "bare data-file parquet read — use footers.read_data_files, or "
         f"audit and extend NON_DATA_READS: {sorted(set(offenders))}"
+    )
+
+
+#: (module, function) pairs allowed to read the stats manifest through
+#: Spark (``spark.read.parquet(_mdd(...))``). Each is a FILE-SCALE
+#: question's Spark twin above the localman gate, a Spark write
+#: fallback's schema read, or a distributed manifest rewrite. A
+#: commit-scale question (expire floor, commit clocks, live delete
+#: keys, schema history, constraints, incremental window, CDF
+#: inventory) reads through ``localman.commit_rows`` instead, so a new
+#: Spark manifest read fails here until someone audits its scale.
+SPARK_MANIFEST_READS = {
+    ("sources/table/cdf.py", "_delete_preimages"),
+    ("sources/table/deletes.py", "compact_equality_deletes"),
+    ("sources/table/evolution.py", "_effective_columns"),
+    ("sources/table/facade.py", "visible_files"),
+    ("sources/table/maintenance.py", "_union_tracked_paths"),
+    ("sources/table/maintenance.py", "vacuum_orphans"),
+    ("sources/table/maintenance.py", "commit_data_compaction"),
+    ("sources/table/maintenance.py", "clone_manifest"),
+    ("sources/table/maintenance.py", "rollback_manifest"),
+    ("sources/table/maintenance.py", "merge_through_manifest"),
+    ("sources/table/maintenance.py", "merge_evolve_through_manifest"),
+    ("sources/table/maintenance.py", "expire_manifest_history"),
+    ("sources/table/maintenance.py", "_optimize_curve"),
+    ("sources/table/maintenance.py", "_optimize_curve_incremental"),
+    ("sources/table/maintenance.py", "optimize_table"),
+    ("sources/table/manifest.py", "commit_manifest_rows"),
+    ("sources/table/manifest.py", "_tombstone_rows"),
+    ("sources/table/manifest.py", "manifest_row_count"),
+    ("sources/table/manifest.py", "manifest_pruned_scan"),
+    ("sources/table/manifest.py", "manifest_pruned_scan_multi"),
+    ("sources/table/manifest.py", "manifest_pruned_scan_multi_rowgroup"),
+    ("sources/table/manifest.py", "rowgroup_prune_report"),
+    ("sources/table/manifest.py", "manifest_count_range"),
+    ("sources/table/manifest.py", "describe_history"),
+}
+
+
+def test_spark_manifest_reads_are_allowlisted():
+    found = set()
+    for p in _py_files():
+        for func, arg in _parquet_reads(ast.parse(open(p).read())):
+            if (
+                isinstance(arg, ast.Call)
+                and isinstance(arg.func, ast.Name)
+                and arg.func.id == "_mdd"
+            ):
+                found.add((_rel(p), func))
+    assert found <= SPARK_MANIFEST_READS, (
+        "new Spark read of the stats manifest — answer a commit-scale "
+        "question from localman.commit_rows, or audit the site and "
+        f"extend SPARK_MANIFEST_READS: {sorted(found - SPARK_MANIFEST_READS)}"
+    )
+    assert SPARK_MANIFEST_READS <= found, (
+        "allowlisted Spark manifest read no longer exists — drop it: "
+        f"{sorted(SPARK_MANIFEST_READS - found)}"
     )
