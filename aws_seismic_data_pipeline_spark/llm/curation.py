@@ -772,53 +772,95 @@ def curate_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     verdict AND the named list of failed rules so downstream recipes
     can audit WHY a document was dropped, not just that it was.
 
-    Scale shape: explode → two-level aggregation (doc_id, word) then
-    (doc_id) — both partial-aggregate map-side, shuffling only
-    fixed-width keys and counts; the verdict is pure projection. One
-    corpus scan, no joins, no Python. All ratio columns are single
-    divisions of exact integers, so cross-engine hashes are exact."""
+    Scale shape: one per-row projection over each document's split
+    tokens (:func:`quality_gate`; the top-word count is a run-length
+    scan of the sorted tokens) — one corpus scan, no explode, no
+    shuffle beyond ``spread``, no joins, no Python. All ratio columns
+    are single divisions of exact integers, so cross-engine hashes are
+    exact."""
     return quality_gate(spread(load_table(spark, sf_dir, "documents"), spark))
+
+
+def _gate_stats(toks: F.Column) -> dict[str, F.Column]:
+    """The gate's per-document word statistics over the document's
+    space-split tokens, as row-local expressions: word count, distinct
+    words, the largest single-word count (one run-length scan of the
+    sorted tokens, O(n log n)) and total characters."""
+
+    def step(acc, word):
+        run = F.when(word == acc["w"], acc["run"] + 1).otherwise(
+            F.lit(1).cast("long")
+        )
+        return F.struct(
+            word.alias("w"),
+            run.alias("run"),
+            F.greatest(acc["best"], run).alias("best"),
+        )
+
+    zero = F.lit(0).cast("long")
+    max_c = F.aggregate(
+        F.array_sort(toks),
+        F.struct(
+            F.lit(None).cast("string").alias("w"),
+            zero.alias("run"),
+            zero.alias("best"),
+        ),
+        step,
+        lambda acc: acc["best"],
+    )
+    return {
+        "n_words": F.size(toks).cast("long"),
+        "n_distinct": F.size(F.array_distinct(toks)).cast("long"),
+        "max_c": max_c,
+        "total_chars": F.length(F.array_join(toks, "")).cast("long"),
+    }
+
+
+def _gate_verdict(stats: dict[str, F.Column]) -> dict[str, F.Column]:
+    """The Gopher/C4 rule stack over :func:`_gate_stats`: the two ratios,
+    the keep verdict and the named failed rules."""
+    n = stats["n_words"]
+    dr = stats["n_distinct"].cast("double") / n
+    tf = stats["max_c"].cast("double") / n
+    return {
+        "distinct_ratio": dr,
+        "top_word_frac": tf,
+        "keep": (n >= GATE_MIN_WORDS)
+        & (dr >= GATE_MIN_DISTINCT_RATIO)
+        & (tf <= GATE_MAX_TOP_WORD_FRAC),
+        "failed_rules": F.concat_ws(
+            ",",
+            F.when(n < GATE_MIN_WORDS, F.lit("short")),
+            F.when(dr < GATE_MIN_DISTINCT_RATIO, F.lit("low_diversity")),
+            F.when(tf > GATE_MAX_TOP_WORD_FRAC, F.lit("repetitive")),
+        ),
+    }
 
 
 def quality_gate(docs: DataFrame) -> DataFrame:
     """The gate body over an explicit (doc_id, text) frame — shared by
-    the batch query above and the streaming deployment
-    (``streaming/jobs.py: stream_quality_gate``), so the rule stack
-    lives in exactly one place."""
-    per_word = (
-        docs.select("doc_id", F.explode(F.split("text", " ")).alias("word"))
-        .groupBy("doc_id", "word")
-        .agg(F.count(F.lit(1)).alias("c"))
+    the batch query above, the streaming deployment
+    (``streaming/jobs.py: stream_quality_gate``) and the release
+    pipeline, so the rule stack lives in exactly one place. Every
+    statistic is a function of one document, so the gate is a pure
+    per-row projection: no explode, no shuffle."""
+    stats = _gate_stats(F.col("toks"))
+    m = (
+        docs.filter(F.col("text").isNotNull())
+        .select("doc_id", F.split("text", " ").alias("toks"))
+        .select("doc_id", *[c.alias(name) for name, c in stats.items()])
     )
-    m = per_word.groupBy("doc_id").agg(
-        F.sum("c").alias("n_words"),
-        F.count(F.lit(1)).alias("n_distinct"),
-        F.max("c").alias("max_c"),
-        F.sum(F.length("word") * F.col("c")).alias("total_chars"),
-    )
-    dr = F.col("n_distinct").cast("double") / F.col("n_words")
-    tf = F.col("max_c").cast("double") / F.col("n_words")
-    keep = (
-        (F.col("n_words") >= GATE_MIN_WORDS)
-        & (dr >= GATE_MIN_DISTINCT_RATIO)
-        & (tf <= GATE_MAX_TOP_WORD_FRAC)
-    )
-    failed = F.concat_ws(
-        ",",
-        F.when(F.col("n_words") < GATE_MIN_WORDS, F.lit("short")),
-        F.when(dr < GATE_MIN_DISTINCT_RATIO, F.lit("low_diversity")),
-        F.when(tf > GATE_MAX_TOP_WORD_FRAC, F.lit("repetitive")),
-    )
+    verdict = _gate_verdict({name: F.col(name) for name in stats})
     return m.select(
         "doc_id",
         "n_words",
-        dr.alias("distinct_ratio"),
-        tf.alias("top_word_frac"),
+        verdict["distinct_ratio"].alias("distinct_ratio"),
+        verdict["top_word_frac"].alias("top_word_frac"),
         (F.col("total_chars").cast("double") / F.col("n_words")).alias(
             "mean_word_len"
         ),
-        keep.alias("keep"),
-        failed.alias("failed_rules"),
+        verdict["keep"].alias("keep"),
+        verdict["failed_rules"].alias("failed_rules"),
     )
 
 
@@ -911,19 +953,7 @@ def curate_pretrain_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load_table(spark, sf_dir, "documents"), spark).withColumn(
         "bucket", _md5_bucket("doc_id", 100)
     )
-    per_word = (
-        docs.select("doc_id", F.explode(F.split("text", " ")).alias("word"))
-        .groupBy("doc_id", "word")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    gate = per_word.groupBy("doc_id").agg(
-        F.sum("c").alias("n_words"),
-        (
-            (F.sum("c") >= GATE_MIN_WORDS)
-            & (F.count(F.lit(1)).cast("double") / F.sum("c") >= GATE_MIN_DISTINCT_RATIO)
-            & (F.max("c").cast("double") / F.sum("c") <= GATE_MAX_TOP_WORD_FRAC)
-        ).alias("keep"),
-    )
+    gate = _gate_stats(F.split("text", " "))
     n = DECON_NGRAM
     # over a projected ``toks`` column: split(text) inside the lambda
     # would re-split the whole text per index (O(words²) per doc)
@@ -959,8 +989,8 @@ def curate_pretrain_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     keepers = docs.groupBy("text").agg(F.min("doc_id").alias("doc_id")).select("doc_id")
     train = (
         docs.filter(F.col("bucket") >= DECON_BENCH_PCT)
-        .join(gate, "doc_id")
-        .filter(F.col("keep"))
+        .filter(_gate_verdict(gate)["keep"])
+        .select("doc_id", gate["n_words"].alias("n_words"))
         .join(keepers, "doc_id", "left_semi")
         .join(contaminated, "doc_id", "left_anti")
     )
@@ -1783,31 +1813,37 @@ def curate_release_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``sample_stratified_seeded``, ``shard_assign_hash``); this pins
     the COMPOSITION.
 
-    Scale shape: the union of its parts, ordered cheapest-first so
-    each stage shrinks the next stage's input — URL keys are metadata
-    (map-side agg), exact dedup is one content-hash agg, the LSH
-    stage runs over the already-deduped survivor set (candidate-
-    bounded verification, O(log² n) component rounds), the gate is
-    one word-explode agg over near-dup survivors only, sampling and
-    sharding are stateless md5 arithmetic. No stage widens data; the
-    ledger is |stages| + |shards| rows."""
+    Scale shape: every stage is evaluated ONCE, as a per-document
+    survivor flag ``k1..k5``, so the ledger counts flags and re-derives
+    no stage. Stages 1 and 2 are two windows (min doc_id per canonical
+    URL, then per text among URL survivors) whose hash exchanges also
+    spread the single-split fixture scan; their flag frame is
+    checkpointed with the text kept on exact survivors only. Stage 3 is
+    :func:`_lsh_verified_pairs` over the exact survivors — ONE
+    checkpointed shingle/signature pass read by both band sides and the
+    verify join — then the verified components (driver union-find up
+    to ``_LOCAL_CC_MAX`` edges, star contraction above), left-joined
+    back. Stage 4 is the per-row rule stack of :func:`quality_gate` on
+    near-dup survivors; stage 5 and the shards are md5 arithmetic on
+    doc_id/lang, so neither needs a join. The flags land in one
+    checkpointed (doc_id, n_words, k1..k5) frame; the ledger is one
+    conditional aggregation over it, exploded into the stage rows, plus
+    one shard groupBy over the ``k5`` rows. A null flag (a left join
+    that found no match) counts as dropped.
+
+    The storage trade: the shingle checkpoint holds one int64 array
+    per exact survivor, of the order of the survivor text the flag
+    checkpoint already holds. Checkpointing signatures only and
+    re-shingling just the candidate docs saves that storage, but its
+    semi-joins cost more stages than the second shingle pass they
+    avoid."""
     from aws_seismic_data_pipeline_spark.llm.dedup import (
         _LSH_VERIFY_TAU,
-        _mh_bands,
-        _mh_shingle_arrs,
-        _mh_sig_cols,
+        _lsh_verified_pairs,
         _min_label_components,
     )
 
-    docs = spread(load_table(spark, sf_dir, "documents"), spark)
-    base = docs.select(
-        "doc_id",
-        "lang",
-        "source",
-        "text",
-        F.size(F.split("text", " ")).cast("long").alias("n_words"),
-    )
-
+    docs = load_table(spark, sf_dir, "documents")
     # stage 1: URL-canonical (same synthesized-URL + canonicalization
     # rules as dedup_url_canonical)
     url = F.concat(
@@ -1835,87 +1871,49 @@ def curate_release_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "/$",
         "",
     )
-    u_keep = (
-        base.select("doc_id", curl.alias("curl"))
-        .groupBy("curl")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
+    doc_id = F.col("doc_id")
+    k1 = doc_id == F.min("doc_id").over(Window.partitionBy("curl"))
+    # stage 2: exact-text dedup among URL survivors
+    k2 = F.col("k1") & (
+        doc_id
+        == F.min(F.when(F.col("k1"), doc_id)).over(Window.partitionBy("text"))
     )
-    s1 = base.join(u_keep, "doc_id", "left_semi")
-
-    # stage 2: exact-text dedup over URL survivors
-    e_keep = s1.groupBy("text").agg(F.min("doc_id").alias("doc_id")).select(
-        "doc_id"
+    flags = (
+        docs.select(
+            "doc_id",
+            "lang",
+            "text",
+            F.size(F.split("text", " ")).cast("long").alias("n_words"),
+            curl.alias("curl"),
+        )
+        .withColumn("k1", k1)
+        .withColumn("k2", k2)
+        .select(
+            "doc_id",
+            "lang",
+            "n_words",
+            "k1",
+            "k2",
+            F.when(F.col("k2"), F.col("text")).alias("text"),
+        )
+        .localCheckpoint(eager=True)
     )
-    s2 = s1.join(e_keep, "doc_id", "left_semi").localCheckpoint(eager=True)
 
     # stage 3: near-dup cluster-canonical over exact survivors
-    arrs = _mh_shingle_arrs(s2)
-    bands = _mh_bands(arrs.select("doc_id", *_mh_sig_cols()))
-    x, y = bands.alias("x"), bands.alias("y")
-    cand = (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bkey") == F.col("y.bkey"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(
-            F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-    ids = (
-        cand.select(F.col("doc_a").alias("doc_id"))
-        .unionAll(cand.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    cand_arrs = arrs.join(ids, "doc_id", "leftsemi").localCheckpoint(
-        eager=True
-    )
-    a = cand_arrs.select(
-        F.col("doc_id").alias("doc_a"), F.col("arr").alias("arr_a")
-    )
-    b = cand_arrs.select(
-        F.col("doc_id").alias("doc_b"), F.col("arr").alias("arr_b")
-    )
-    n_common = F.size(F.array_intersect("arr_a", "arr_b"))
-    jac = n_common.cast("double") / (
-        F.size("arr_a") + F.size("arr_b") - n_common
-    )
     edges = (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .filter(jac >= _LSH_VERIFY_TAU)
+        _lsh_verified_pairs(flags.filter("k2"))
+        .filter(F.col("jaccard") >= _LSH_VERIFY_TAU)
         .select("doc_a", "doc_b")
     )
-    comp = _min_label_components(edges)
-    dropped = comp.filter(F.col("doc_id") != F.col("component_id")).select(
-        "doc_id"
+    dropped = (
+        _min_label_components(edges)
+        .filter(F.col("doc_id") != F.col("component_id"))
+        .select("doc_id", F.lit(True).alias("near_dup"))
     )
-    s3 = s2.join(dropped, "doc_id", "left_anti").localCheckpoint(eager=True)
-
-    # stage 4: Gopher quality gate over near-dup survivors
-    pw = (
-        s3.select("doc_id", F.explode(F.split("text", " ")).alias("word"))
-        .groupBy("doc_id", "word")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    gate = pw.groupBy("doc_id").agg(
-        (
-            (F.sum("c") >= GATE_MIN_WORDS)
-            & (
-                F.count(F.lit(1)).cast("double") / F.sum("c")
-                >= GATE_MIN_DISTINCT_RATIO
-            )
-            & (
-                F.max("c").cast("double") / F.sum("c")
-                <= GATE_MAX_TOP_WORD_FRAC
-            )
-        ).alias("keep")
-    )
-    s4 = s3.join(gate.filter(F.col("keep")).select("doc_id"), "doc_id", "left_semi")
-
+    k3 = F.col("k2") & F.col("near_dup").isNull()
+    # stage 4: Gopher quality gate, evaluated on near-dup survivors only
+    gate = _gate_verdict(_gate_stats(F.split("text", " ")))["keep"]
+    k4 = k3 & gate
     # stage 5: deterministic per-language stratified sample
     sample_bucket = (
         F.expr(
@@ -1927,26 +1925,46 @@ def curate_release_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     rate = F.when(
         F.col("lang") == "en", F.lit(RELEASE_SAMPLE_EN_PCT)
     ).otherwise(F.lit(RELEASE_SAMPLE_OTHER_PCT))
-    s5 = s4.filter(sample_bucket < rate).localCheckpoint(eager=True)
-
-    def acct(df: DataFrame, stage: str) -> DataFrame:
-        return df.agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.coalesce(F.sum("n_words"), F.lit(0)).cast("long").alias(
-                "n_tokens"
-            ),
-        ).select(F.lit(stage).alias("stage"), "n_docs", "n_tokens")
-
-    ledger = (
-        acct(base, "0_base")
-        .unionByName(acct(s1, "1_url_canonical"))
-        .unionByName(acct(s2, "2_exact"))
-        .unionByName(acct(s3, "3_near_dup"))
-        .unionByName(acct(s4, "4_quality"))
-        .unionByName(acct(s5, "5_sample"))
+    flags = (
+        flags.join(dropped, "doc_id", "left")
+        .select(
+            "doc_id",
+            "n_words",
+            "k1",
+            "k2",
+            k3.alias("k3"),
+            k4.alias("k4"),
+            (k4 & (sample_bucket < rate)).alias("k5"),
+        )
+        .localCheckpoint(eager=True)
     )
+
+    stages = [
+        ("0_base", F.lit(True)),
+        ("1_url_canonical", F.col("k1")),
+        ("2_exact", F.col("k2")),
+        ("3_near_dup", F.col("k3")),
+        ("4_quality", F.col("k4")),
+        ("5_sample", F.col("k5")),
+    ]
+    totals = flags.agg(
+        *[
+            F.struct(
+                F.lit(stage).alias("stage"),
+                F.count(F.when(keep, F.lit(1))).cast("long").alias("n_docs"),
+                F.coalesce(F.sum(F.when(keep, F.col("n_words"))), F.lit(0))
+                .cast("long")
+                .alias("n_tokens"),
+            ).alias(stage)
+            for stage, keep in stages
+        ]
+    )
+    ledger = totals.select(
+        F.explode(F.array(*[stage for stage, _ in stages])).alias("row")
+    ).select("row.*")
     shards = (
-        s5.select(
+        flags.filter("k5")
+        .select(
             F.concat(
                 F.lit("shard_"),
                 F.lpad(

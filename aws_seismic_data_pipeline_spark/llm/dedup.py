@@ -313,6 +313,28 @@ def _mh_bands(sigs: DataFrame) -> DataFrame:
     ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.bkey").alias("bkey"))
 
 
+def _mh_candidates(sigs: DataFrame) -> DataFrame:
+    """(doc_a < doc_b) distinct candidate pairs: the banded self-join
+    of a (doc_id, s0..s11) frame — docs sharing at least one band key.
+    Both join sides read ``sigs``: the self-join gets no exchange
+    reuse, so an unmaterialized ``sigs`` is computed once per side —
+    callers that read the signatures again checkpoint them first."""
+    bands = _mh_bands(sigs)
+    x, y = bands.alias("x"), bands.alias("y")
+    return (
+        x.join(
+            y,
+            (F.col("x.band") == F.col("y.band"))
+            & (F.col("x.bkey") == F.col("y.bkey"))
+            & (F.col("x.doc_id") < F.col("y.doc_id")),
+        )
+        .select(
+            F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b")
+        )
+        .distinct()
+    )
+
+
 _MINHASH_BANDED_ORACLE = f"""
     WITH t AS (
         SELECT doc_id,
@@ -1687,21 +1709,7 @@ def dedup_keep_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     verdict is pure projection + a doc-keyed agg. No new shuffle class
     beyond the banded pipeline."""
     docs = spread(load_table(spark, sf_dir, "documents"), spark)
-    sigs = _mh_signatures(docs).localCheckpoint(eager=True)
-    bands = _mh_bands(sigs)
-    x, y = bands.alias("x"), bands.alias("y")
-    cand = (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bkey") == F.col("y.bkey"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(
-            F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
+    cand = _mh_candidates(_mh_signatures(docs).localCheckpoint(eager=True))
     toks = F.split("text", " ")
     q = docs.select(
         "doc_id",
@@ -1777,6 +1785,45 @@ _LSH_VERIFIED_ORACLE = f"""
 """
 
 
+def _lsh_verified_pairs(docs: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, n_common, jaccard) for every banded-MinHash
+    candidate pair of a (doc_id, text) frame, scored with the EXACT
+    Jaccard of the two distinct word-3-gram hash sets — the one
+    candidate-then-verify implementation (``dedup_lsh_verified``,
+    ``dedup_cluster_canonical`` and ``curate_release_pipeline`` all
+    read it).
+
+    Each document's shingle array and its 12 signature components are
+    computed ONCE, into one checkpointed (doc_id, arr, s0..s11) frame:
+    both sides of the band self-join and both sides of the verify join
+    read it. The shingle pass is the expensive per-row work (one md5 per
+    word-3-gram), so no consumer re-evaluates it. The checkpoint is corpus-sized (one int64 array per doc, of
+    the order of the text itself). Each verify-join side reads it once;
+    at corpus scale that is one array shuffle per side."""
+    sigs = (
+        _mh_shingle_arrs(docs)
+        .select("doc_id", "arr", *_mh_sig_cols())
+        .localCheckpoint(eager=True)
+    )
+    a = sigs.select(F.col("doc_id").alias("doc_a"), F.col("arr").alias("arr_a"))
+    b = sigs.select(F.col("doc_id").alias("doc_b"), F.col("arr").alias("arr_b"))
+    n_common = F.size(F.array_intersect("arr_a", "arr_b"))
+    jaccard = n_common.cast("double") / (
+        F.size("arr_a") + F.size("arr_b") - n_common
+    )
+    return (
+        _mh_candidates(sigs)
+        .join(a, "doc_a")
+        .join(b, "doc_b")
+        .select(
+            "doc_a",
+            "doc_b",
+            n_common.cast("long").alias("n_common"),
+            jaccard.alias("jaccard"),
+        )
+    )
+
+
 @register("dedup_lsh_verified", oracle=_LSH_VERIFIED_ORACLE, tags=("llm", "dedup"))
 def dedup_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PRODUCTION two-phase near-dup pipeline: banded-MinHash LSH
@@ -1787,58 +1834,18 @@ def dedup_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the missing step between ``dedup_minhash_banded`` (candidates +
     12-hash estimate) and a defensible dedup verdict.
 
-    Scale shape: candidate generation is the shared LSH bucket join
-    (linear in corpus + bucket overlap); verification first SEMI-joins
-    the per-doc shingle-hash arrays down to candidate members only —
-    the array shuffle is bounded by |candidate docs|, never corpus-
-    sized — then joins the two (candidate-scale) sides by doc key.
-    Exact intersection runs as a per-row array_intersect on int64
-    hashes: no explode, no second shuffle class.
-
-    Storage shape: ONLY the candidate-semi-joined arrays are
-    checkpointed (bounded by |candidate docs|); the banding pass
-    recomputes the cheap per-row shingle expression instead of
-    materializing a corpus-sized array frame in executor storage."""
-    arrs = _mh_shingle_arrs(
+    Scale shape (:func:`_lsh_verified_pairs`): one shingle/signature
+    pass over the corpus, checkpointed; candidate generation is the
+    LSH bucket self-join over it (linear in corpus + bucket overlap);
+    verification joins the candidate pairs to the checkpointed arrays
+    by doc key. Exact intersection runs as a per-row array_intersect
+    on int64 hashes: no explode, no second shuffle class. The shingle
+    pass is not cheap (one md5 per word-3-gram), so it runs once and is
+    stored rather than re-evaluated per join side."""
+    pairs = _lsh_verified_pairs(
         spread(load_table(spark, sf_dir, "documents"), spark)
     )
-    bands = _mh_bands(arrs.select("doc_id", *_mh_sig_cols()))
-    x, y = bands.alias("x"), bands.alias("y")
-    cand = (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bkey") == F.col("y.bkey"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    ids = (
-        cand.select(F.col("doc_a").alias("doc_id"))
-        .unionAll(cand.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    # candidate-scale, not corpus-scale: checkpoint so the a/b double
-    # use below doesn't recompute the semi-join + shingle expr twice
-    cand_arrs = arrs.join(ids, "doc_id", "leftsemi").localCheckpoint(eager=True)
-    a = cand_arrs.select(F.col("doc_id").alias("doc_a"), F.col("arr").alias("arr_a"))
-    b = cand_arrs.select(F.col("doc_id").alias("doc_b"), F.col("arr").alias("arr_b"))
-    n_common = F.size(F.array_intersect("arr_a", "arr_b"))
-    jaccard = n_common.cast("double") / (
-        F.size("arr_a") + F.size("arr_b") - n_common
-    )
-    return (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            n_common.cast("long").alias("n_common"),
-            jaccard.alias("jaccard"),
-            (jaccard >= _LSH_VERIFY_TAU).alias("is_dup"),
-        )
-    )
+    return pairs.withColumn("is_dup", F.col("jaccard") >= _LSH_VERIFY_TAU)
 
 
 _CLUSTER_CANONICAL_ORACLE = f"""
@@ -2010,18 +2017,7 @@ def curate_dedup_rate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.sum("c") - F.count(F.lit(1))) / F.sum("c").cast("double")
         ).alias("exact_dup_rate"),
     )
-    bands = _mh_bands(_mh_signatures(docs))
-    x, y = bands.alias("x"), bands.alias("y")
-    cand = (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bkey") == F.col("y.bkey"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = _mh_candidates(_mh_signatures(docs))
     members = cand.select(F.col("doc_a").alias("doc_id")).unionAll(
         cand.select(F.col("doc_b").alias("doc_id"))
     )

@@ -614,7 +614,7 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow batch over one staged file => deterministic => the
     batch query's SQL oracle applies verbatim.
 
-    Scale shape: the gate is explode + two map-side aggs per batch —
+    Scale shape: the gate is a per-row projection of each batch —
     batch-sized work, no static side at all, so the stream needs no
     state store and no watermark; per-batch cost is O(batch tokens)."""
     from aws_seismic_data_pipeline_spark.catalog import scratch_cleanup

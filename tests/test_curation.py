@@ -420,3 +420,176 @@ def test_weighted_reservoir_biases_toward_long_docs(spark):
             pop_mean = sum(pop[lang]) / len(pop[lang])
             heavier += samp_mean > pop_mean
     assert heavier >= 1  # at sf0.001 only en clears the 2K bar
+
+
+# --- curate_release_pipeline: survivor flags on degenerate corpora ------
+
+def _release_ledger(spark, sf_dir) -> dict:
+    from aws_seismic_data_pipeline_spark.llm.curation import (
+        curate_release_pipeline,
+    )
+
+    rows = curate_release_pipeline(spark, sf_dir).collect()
+    ledger = {r.stage: (r.n_docs, r.n_tokens) for r in rows}
+    assert len(ledger) == len(rows)  # one row per stage and per shard
+    return ledger
+
+
+def _md5_int(s: str) -> int:
+    import hashlib
+
+    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+
+
+def _expected_tail(survivors: dict) -> dict:
+    """The sample row and shard rows for the given stage-4 survivors
+    {doc_id: (lang, n_words)}: the md5 arithmetic the release applies
+    after the quality gate, recomputed on the driver."""
+    from aws_seismic_data_pipeline_spark.llm.curation import (
+        RELEASE_SAMPLE_EN_PCT,
+        RELEASE_SAMPLE_OTHER_PCT,
+        RELEASE_SHARDS,
+    )
+
+    kept = {
+        d: n
+        for d, (lang, n) in survivors.items()
+        if _md5_int(f"{d}:rel") % 100
+        < (RELEASE_SAMPLE_EN_PCT if lang == "en" else RELEASE_SAMPLE_OTHER_PCT)
+    }
+    out = {"5_sample": (len(kept), sum(kept.values()))}
+    for d, n in kept.items():
+        key = "shard_%02d" % (_md5_int(str(d)) % RELEASE_SHARDS)
+        docs, toks = out.get(key, (0, 0))
+        out[key] = (docs + 1, toks + n)
+    return out
+
+
+def _unique_text(doc_id: int, n: int = 25) -> str:
+    return " ".join(f"d{doc_id}w{j}" for j in range(n))
+
+
+def test_release_ledger_without_lsh_candidates(spark, tmp_path):
+    """No two exact survivors share a band key, so the verified edge
+    list is empty and stage 3 keeps every exact survivor. Doc 141's
+    canonical URL equals doc 1's (doc_id % 140) and doc 7 repeats doc
+    2's text, so stages 1 and 2 each drop one document."""
+    from aws_seismic_data_pipeline_spark.llm.dedup import dedup_lsh_verified
+
+    langs = {1: "en", 2: "de", 3: "en", 4: "fr", 5: "en", 6: "zh"}
+    rows = [(d, _unique_text(d), lang) for d, lang in langs.items()]
+    rows += [(7, _unique_text(2), "en"), (141, _unique_text(141), "en")]
+    d = _mini_corpus(spark, tmp_path, rows)
+    # the only banded candidate is the exact pair stage 2 removes first
+    pairs = dedup_lsh_verified(spark, d).collect()
+    assert [(r.doc_a, r.doc_b) for r in pairs] == [(2, 7)]
+    want = {
+        "0_base": (8, 200),
+        "1_url_canonical": (7, 175),
+        "2_exact": (6, 150),
+        "3_near_dup": (6, 150),
+        "4_quality": (6, 150),
+    }
+    want.update(_expected_tail({i: (lang, 25) for i, lang in langs.items()}))
+    assert _release_ledger(spark, d) == want
+
+
+def test_release_ledger_when_no_document_passes_the_gate(spark, tmp_path):
+    """Every document repeats one word 10 times in 25 (top-word share
+    0.4 > GATE_MAX_TOP_WORD_FRAC), so stages 4 and 5 are empty: their
+    rows stay, with zero docs and zero tokens, and no shard row is
+    emitted. Doc 5 is doc 4 with its last word replaced, a verified
+    near duplicate that stage 3 drops."""
+
+    def text(d: int) -> str:
+        return " ".join([f"d{d}w0"] * 10 + [f"d{d}w{j}" for j in range(1, 16)])
+
+    rows = [(d, text(d), "en") for d in (1, 2, 3, 4)]
+    rows.append((5, text(4).rsplit(" ", 1)[0] + " other", "de"))
+    d = _mini_corpus(spark, tmp_path, rows)
+    assert _release_ledger(spark, d) == {
+        "0_base": (5, 125),
+        "1_url_canonical": (5, 125),
+        "2_exact": (5, 125),
+        "3_near_dup": (4, 100),
+        "4_quality": (0, 0),
+        "5_sample": (0, 0),
+    }
+
+
+def test_release_ledger_when_every_document_is_under_three_words(
+    spark, tmp_path
+):
+    """No document has a word 3-gram, so the shingle frame is empty;
+    every document is also too short for the gate. Doc 4 repeats doc
+    2's text."""
+    rows = [
+        (1, "alpha beta", "en"),
+        (2, "gamma", "de"),
+        (3, "delta epsilon", "en"),
+        (4, "gamma", "fr"),
+    ]
+    d = _mini_corpus(spark, tmp_path, rows)
+    assert _release_ledger(spark, d) == {
+        "0_base": (4, 6),
+        "1_url_canonical": (4, 6),
+        "2_exact": (3, 5),
+        "3_near_dup": (3, 5),
+        "4_quality": (0, 0),
+        "5_sample": (0, 0),
+    }
+
+
+def test_release_ledger_with_components_gate_closed(
+    spark, tmp_path, monkeypatch
+):
+    """Production-scale edge lists take the distributed star
+    contraction instead of the driver union-find: with the gate closed
+    the ledger must be row-identical. The perfbench corpus plants near
+    duplicates, so stage 3 really drops documents here."""
+    from perfbench import gen
+
+    from aws_seismic_data_pipeline_spark.llm import dedup as _dedup
+    from aws_seismic_data_pipeline_spark.llm.curation import (
+        curate_release_pipeline,
+    )
+
+    sf_dir = str(tmp_path / "sf")
+    corpus, _ = gen.curation_corpus(2, 300, 10)
+    gen.write_tables(corpus, sf_dir)
+    gate_open = sorted(curate_release_pipeline(spark, sf_dir).collect())
+    by_stage = {r.stage: r.n_docs for r in gate_open}
+    assert by_stage["3_near_dup"] < by_stage["2_exact"]
+
+    star_calls = []
+    star = _dedup._star_components
+
+    def counted_star(*args, **kwargs):
+        star_calls.append(1)
+        return star(*args, **kwargs)
+
+    monkeypatch.setattr(_dedup, "_LOCAL_CC_MAX", 0)
+    monkeypatch.setattr(_dedup, "_star_components", counted_star)
+    gate_closed = sorted(curate_release_pipeline(spark, sf_dir).collect())
+    assert star_calls
+    assert gate_closed == gate_open
+
+
+#: Spark jobs of one release (status store): the same at local[2],
+#: local[4] and local[8], and at sf0.001, sf0.01 and the perfbench corpus
+RELEASE_JOBS = 17
+
+
+def test_release_evaluates_each_stage_once(spark):
+    """Job-count pin of the release: each stage is evaluated once. A
+    second shingle pass, a re-derived stage or a per-stage ledger
+    branch each add jobs."""
+    from perfbench.harness import StatusCounters
+
+    from aws_seismic_data_pipeline_spark.llm.curation import (
+        curate_release_pipeline,
+    )
+
+    counters = StatusCounters(spark)
+    curate_release_pipeline(spark, SF_DIR).collect()
+    assert counters.delta()["jobs"] <= RELEASE_JOBS
