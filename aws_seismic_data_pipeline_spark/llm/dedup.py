@@ -858,8 +858,9 @@ def _min_label_components(pairs: DataFrame, max_rounds: int = 200) -> DataFrame:
     isn't VERIFIED within ``max_rounds`` — wrong labels must never
     return silently.
 
-    Integer-keyed edge lists at or below ``SPARK_GRAFT_LOCAL_CC_MAX``
-    rows are labeled driver-side (one checkpoint + one collect +
+    Integer-keyed edge lists at or below ``_LOCAL_CC_MAX`` rows are
+    labeled driver-side (one checkpoint + one collect bounded at
+    ``_LOCAL_CC_MAX + 1`` rows, whose length is the size check +
     union-find — the contraction loop's per-round Spark jobs were the
     slot's dominant cost at fixture scale); larger graphs, and keys of
     any other dtype (the union-find compares ids as Python ints), run
@@ -874,9 +875,15 @@ def _min_label_components(pairs: DataFrame, max_rounds: int = 200) -> DataFrame:
         isinstance(pairs.schema[c].dataType, T.IntegralType)
         for c in ("doc_a", "doc_b")
     )
-    if integral and pairs.count() <= _LOCAL_CC_MAX:
-        pdf = pairs.select("doc_a", "doc_b").toPandas()
-        if not pdf[["doc_a", "doc_b"]].isna().any().any():
+    if integral:
+        import pandas as pd
+
+        # collect() of a limit takes rows partition by partition; a
+        # limited toPandas() would first shuffle every edge to one task
+        edges = pairs.select("doc_a", "doc_b")
+        rows = edges.limit(_LOCAL_CC_MAX + 1).collect()
+        pdf = pd.DataFrame(rows, columns=["doc_a", "doc_b"])
+        if len(pdf) <= _LOCAL_CC_MAX and not pdf.isna().any().any():
             spark = pairs.sparkSession
             dt = pairs.schema["doc_a"].dataType
             schema = T.StructType(

@@ -21,24 +21,60 @@ from aws_seismic_data_pipeline_spark.catalog import load_table
 #: commit-scale ceiling for the driver-side footer-stats path: a commit
 #: touching at most this many files reads their footers on the driver
 #: (KBs each, ~1 ms/file) instead of fanning a Spark stage out over
-#: them; bulk builds/backfills above it stay distributed. Shared by
-#: read_footer_stats/_multi here and the manifest-commit paths under
-#: ``sources/table/``.
+#: them; bulk builds/backfills above it stay distributed. Read only
+#: through :func:`commit_scale`, so patching this one binding moves
+#: every footer read and manifest commit between the two paths.
 _LOCAL_COMMIT_MAX = 64
 
+#: the columns of one footer-stats row (:func:`footer_rows`)
+FOOTER_COLS = (
+    "path",
+    "file_name",
+    "row_group",
+    "column_name",
+    "n_rows",
+    "min_val",
+    "max_val",
+)
 
-def _footer_stats_rows_local(paths: list[str], column: str):
-    """Driver-side twin of :func:`read_footer_stats`'s task body —
-    identical tuples (long min/max), or None on any failure."""
+
+def commit_scale(paths) -> bool:
+    """Whether a file list is small enough to read its footers on the
+    driver rather than in a distributed stage."""
+    return len(paths) <= _LOCAL_COMMIT_MAX
+
+
+def _num(v):
+    """A footer statistic as a float. Non-numeric stats (string/binary
+    columns) become NULL: consumers already treat NULL min/max
+    conservatively, and row-count users (bloom sizing) only need
+    n_rows."""
     try:
-        import pyarrow.parquet as pq
+        return float(v)
+    except (TypeError, ValueError):
+        return None
 
-        rows = []
-        for p in paths:
-            md = pq.ParquetFile(p).metadata
-            col_idx = md.schema.names.index(column)
-            for rg in range(md.num_row_groups):
-                col = md.row_group(rg).column(col_idx)
+
+def footer_rows(paths, columns, cast=_num) -> list[tuple]:
+    """The footer-stats rows of local parquet files: one
+    :data:`FOOTER_COLS` tuple per (file, row group, column), min/max
+    passed through ``cast``. One pyarrow footer read per file serves
+    every requested column; data pages are never read. Row groups
+    written without statistics yield NULL min/max. This is the one row
+    function: it runs on the driver for a commit-scale list and inside
+    each task of :func:`fan_out`. Raises when a footer cannot be
+    read."""
+    import pyarrow.parquet as pq
+
+    rows = []
+    for p in paths:
+        md = pq.ParquetFile(p).metadata
+        names = md.schema.names
+        idx = {c: names.index(c) for c in columns}
+        for rg in range(md.num_row_groups):
+            group = md.row_group(rg)
+            for c in columns:
+                col = group.column(idx[c])
                 st = col.statistics
                 has = st is not None and st.has_min_max
                 rows.append(
@@ -46,53 +82,38 @@ def _footer_stats_rows_local(paths: list[str], column: str):
                         p,
                         os.path.basename(p),
                         rg,
+                        c,
                         col.num_values,
-                        int(st.min) if has else None,
-                        int(st.max) if has else None,
+                        cast(st.min) if has else None,
+                        cast(st.max) if has else None,
                     )
                 )
-        return rows
-    except Exception:
-        return None
+    return rows
 
 
-def _footer_stats_rows_local_multi(paths: list[str], columns):
-    """Driver-side twin of :func:`read_footer_stats_multi`'s task body
-    — identical tuples (double min/max, non-numeric stats NULL), or
-    None on any failure."""
-    try:
-        import pyarrow.parquet as pq
+def fan_out(
+    spark: SparkSession, paths: list[str], task_rows, schema
+) -> DataFrame:
+    """The distributed footer read: the sorted file list spread over at
+    most 32 ``mapInPandas`` tasks, each turning its paths into a pandas
+    frame with ``task_rows(paths)`` (built on :func:`footer_rows`). At
+    100 TB with millions of files this is manifest-building, not a
+    scan: each task reads only its files' footer KBs."""
+    import pandas as _pd
 
-        def _num(v):
-            try:
-                return float(v)
-            except (TypeError, ValueError):
-                return None
+    # pandas input -> one Arrow batch; the tuple-list form pickles
+    # through a Python-RDD pipeline (~5 s of overhead per call)
+    files = spark.createDataFrame(
+        _pd.DataFrame({"path": sorted(paths)}), "path string"
+    ).repartition(min(len(paths), 32))
 
-        rows = []
-        for p in paths:
-            md = pq.ParquetFile(p).metadata
-            names = md.schema.names
-            idx = {c: names.index(c) for c in columns}
-            for rg in range(md.num_row_groups):
-                for c in columns:
-                    col = md.row_group(rg).column(idx[c])
-                    st = col.statistics
-                    has = st is not None and st.has_min_max
-                    rows.append(
-                        (
-                            p,
-                            os.path.basename(p),
-                            rg,
-                            c,
-                            col.num_values,
-                            _num(st.min) if has else None,
-                            _num(st.max) if has else None,
-                        )
-                    )
-        return rows
-    except Exception:
-        return None
+    def read_footers(batches):
+        for pdf in batches:
+            out = task_rows(list(pdf["path"]))
+            if len(out):
+                yield out
+
+    return files.mapInPandas(read_footers, schema)
 
 
 #: footer key under which Spark's parquet writer records the row schema
@@ -185,81 +206,50 @@ def _decode_input_file() -> F.Column:
 
 
 
+def _footer_stats_frame(
+    spark: SparkSession, paths: list[str], columns, stat_type: str
+) -> DataFrame:
+    """:func:`footer_rows` as a Spark frame with min/max of
+    ``stat_type`` ("long" or "double"): a local relation for a
+    commit-scale list (no Spark stage), else :func:`fan_out`."""
+    import pandas as _pd
+
+    cast = int if stat_type == "long" else _num
+    schema = (
+        "path string, file_name string, row_group long, column_name string,"
+        f" n_rows long, min_val {stat_type}, max_val {stat_type}"
+    )
+    if commit_scale(paths):
+        return spark.createDataFrame(
+            footer_rows(sorted(paths), columns, cast), schema
+        )
+
+    def task_rows(ps):
+        out = _pd.DataFrame(
+            footer_rows(ps, columns, cast), columns=FOOTER_COLS
+        )
+        if stat_type == "long":
+            out = out.astype({"min_val": "Int64", "max_val": "Int64"})
+        return out
+
+    return fan_out(spark, paths, task_rows, schema)
+
+
 def read_footer_stats(
     spark: SparkSession, paths: list[str], column: str
 ) -> DataFrame:
-    """Distributed parquet-footer stats collector: fan the file list
-    out over ``mapInPandas`` (each task reads only its files' footer
-    KBs with pyarrow) and return one row per (file, row group) with
-    the integer ``column``'s min/max/num_values. Row groups written
-    without statistics yield NULL min/max (consumers must treat them
-    conservatively — an unknown range can match anything). The data
-    pages are never read — at 100 TB with millions of files this is
-    manifest-building, not a scan. Shared by ``scan_rowgroup_stats``
-    (introspection) and ``rowgroup_pruned_scan`` (the data-skipping
-    decision itself)."""
-    import os as _os
-
-    import pandas as _pd
-
+    """Parquet-footer stats of one integer ``column``: one row per
+    (file, row group) with its min/max (long) and num_values. Row
+    groups written without statistics yield NULL min/max (consumers
+    must treat them conservatively — an unknown range can match
+    anything). The data pages are never read. Shared by
+    ``scan_rowgroup_stats`` (introspection) and ``rowgroup_pruned_scan``
+    (the data-skipping decision itself)."""
     if not paths:
         raise ValueError("read_footer_stats: empty path list")
-    out_schema = (
-        "path string, file_name string, row_group long, n_rows long,"
-        " min_val long, max_val long"
+    return _footer_stats_frame(spark, paths, (column,), "long").drop(
+        "column_name"
     )
-    if len(paths) <= _LOCAL_COMMIT_MAX:
-        # commit-scale file list: read the footer KBs on the driver
-        # (~1 ms/file) instead of fanning a mapInPandas stage over
-        # them (~100 ms Python-worker fork per task at local[32]) —
-        # identical rows as a local relation; any failure falls back
-        # to the distributed read below
-        local = _footer_stats_rows_local(sorted(paths), column)
-        if local is not None:
-            return spark.createDataFrame(local, out_schema)
-    # pandas input -> one Arrow batch; the tuple-list form pickles
-    # through a Python-RDD pipeline (~5 s of overhead per call)
-    files = spark.createDataFrame(
-        _pd.DataFrame({"path": sorted(paths)}), "path string"
-    ).repartition(min(len(paths), 32))
-
-    def read_footers(batches):
-        import pyarrow.parquet as pq
-
-        for pdf in batches:
-            rows = []
-            for p in pdf["path"]:
-                md = pq.ParquetFile(p).metadata
-                names = md.schema.names
-                col_idx = names.index(column)
-                for rg in range(md.num_row_groups):
-                    col = md.row_group(rg).column(col_idx)
-                    st = col.statistics
-                    has = st is not None and st.has_min_max
-                    rows.append(
-                        (
-                            p,
-                            _os.path.basename(p),
-                            rg,
-                            col.num_values,
-                            int(st.min) if has else None,
-                            int(st.max) if has else None,
-                        )
-                    )
-            if rows:
-                yield _pd.DataFrame(
-                    rows,
-                    columns=[
-                        "path",
-                        "file_name",
-                        "row_group",
-                        "n_rows",
-                        "min_val",
-                        "max_val",
-                    ],
-                ).astype({"min_val": "Int64", "max_val": "Int64"})
-
-    return files.mapInPandas(read_footers, out_schema)
 
 
 def rangekey_write(spark: SparkSession, sf_dir: str, path: str) -> None:
@@ -286,83 +276,15 @@ def read_footer_stats_multi(
     """Multi-column footer-stats collector: ONE pyarrow footer read per
     file yields min/max/num_values for EVERY requested leaf column —
     the same metadata object carries them all, so a manifest over N
-    predicate columns costs exactly the same footer I/O as one column
-    (the r7 ``read_footer_stats`` re-listed per column). Output is the
-    manifest's physical schema, keyed (path, row_group, column_name);
-    min/max are stored as double (exact for integers below 2^53 —
-    every fixture and TPC-H key range — and natively right for float
-    measure columns). Stats-less row groups yield NULL min/max and
-    must be treated conservatively by consumers."""
-    import os as _os
-
-    import pandas as _pd
-
+    predicate columns costs exactly the same footer I/O as one column.
+    Output is the manifest's physical schema, keyed (path, row_group,
+    column_name); min/max are stored as double (exact for integers
+    below 2^53 — every fixture and TPC-H key range — and natively right
+    for float measure columns). Stats-less row groups and non-numeric
+    stats yield NULL min/max and must be treated conservatively by
+    consumers."""
     if not paths:
         raise ValueError("read_footer_stats_multi: empty path list")
     if not columns:
         raise ValueError("read_footer_stats_multi: no columns requested")
-    cols = tuple(columns)
-    out_schema = (
-        "path string, file_name string, row_group long, column_name string,"
-        " n_rows long, min_val double, max_val double"
-    )
-    if len(paths) <= _LOCAL_COMMIT_MAX:
-        # commit-scale list: driver-side footer read (see
-        # read_footer_stats); distributed fan-out below is the bulk path
-        local = _footer_stats_rows_local_multi(sorted(paths), cols)
-        if local is not None:
-            return spark.createDataFrame(local, out_schema)
-    # pandas input -> one Arrow batch (see read_footer_stats)
-    files = spark.createDataFrame(
-        _pd.DataFrame({"path": sorted(paths)}), "path string"
-    ).repartition(min(len(paths), 32))
-
-    def read_footers(batches):
-        import pyarrow.parquet as pq
-
-        def _num(v):
-            # non-numeric stats (string/binary columns) become NULL —
-            # consumers already treat NULL min/max conservatively, and
-            # row-count users (bloom sizing) only need n_rows
-            try:
-                return float(v)
-            except (TypeError, ValueError):
-                return None
-
-        for pdf in batches:
-            rows = []
-            for p in pdf["path"]:
-                md = pq.ParquetFile(p).metadata
-                names = md.schema.names
-                idx = {c: names.index(c) for c in cols}
-                for rg in range(md.num_row_groups):
-                    for c in cols:
-                        col = md.row_group(rg).column(idx[c])
-                        st = col.statistics
-                        has = st is not None and st.has_min_max
-                        rows.append(
-                            (
-                                p,
-                                _os.path.basename(p),
-                                rg,
-                                c,
-                                col.num_values,
-                                _num(st.min) if has else None,
-                                _num(st.max) if has else None,
-                            )
-                        )
-            if rows:
-                yield _pd.DataFrame(
-                    rows,
-                    columns=[
-                        "path",
-                        "file_name",
-                        "row_group",
-                        "column_name",
-                        "n_rows",
-                        "min_val",
-                        "max_val",
-                    ],
-                )
-
-    return files.mapInPandas(read_footers, out_schema)
+    return _footer_stats_frame(spark, paths, tuple(columns), "double")

@@ -1015,11 +1015,7 @@ from aws_seismic_data_pipeline_spark.sources.table.commit import (  # noqa: E402
 from aws_seismic_data_pipeline_spark.sources.table.manifest import (  # noqa: E402,F401
     _MANIFEST_COLS,
     _MANIFEST_PRICE_RANGE,
-    _MANIFEST_SCHEMA,
     _PART_PRUNE_RANGE,
-    _partition_values_col,
-    _stats_add_rows,
-    _tombstone_rows,
     _visible_stats,
     append_stats_manifest,
     append_stats_manifest_retry,

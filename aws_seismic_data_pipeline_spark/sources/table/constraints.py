@@ -137,7 +137,7 @@ def _commit_constraint_row(
     pv: dict[str, str],
 ) -> None:
     """One declaration row plus its commit_ts marker as ONE metadata
-    commit (a driver-side parquet file; Spark write as fallback)."""
+    commit (one driver-side parquet file)."""
     import pandas as _pd
 
     from aws_seismic_data_pipeline_spark.sources.table.manifest import (
@@ -153,7 +153,7 @@ def _commit_constraint_row(
         "partition_values": pv,
     }
     commit_manifest_rows(
-        spark, manifest_dir, [_pd.DataFrame([fixed])], snapshot_id=snap
+        manifest_dir, [_pd.DataFrame([fixed])], snapshot_id=snap
     )
 
 

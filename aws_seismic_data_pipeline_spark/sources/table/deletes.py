@@ -14,10 +14,7 @@ from pyspark.sql import functions as F
 
 from aws_seismic_data_pipeline_spark.catalog import load_table, prepare
 from aws_seismic_data_pipeline_spark.registry import register
-from aws_seismic_data_pipeline_spark.sources.footers import (
-    _LOCAL_COMMIT_MAX,
-    read_data_files,
-)
+from aws_seismic_data_pipeline_spark.sources.footers import read_data_files
 from aws_seismic_data_pipeline_spark.sources.table import localman
 from aws_seismic_data_pipeline_spark.sources.table.logstore import (
     manifest_data_dir as _mdd,
@@ -27,11 +24,8 @@ from aws_seismic_data_pipeline_spark.sources.table.commit import (
     verify_claim,
 )
 from aws_seismic_data_pipeline_spark.sources.table.manifest import (
-    _MANIFEST_SCHEMA,
-    _stats_add_rows,
-    _tombstone_rows,
     _visible_stats,
-    commit_manifest_rows,
+    commit_files,
     manifest_pruned_scan,
     remove_from_manifest,
     write_stats_manifest,
@@ -148,16 +142,11 @@ def equality_delete(
     pdf = localman.concat_rows(
         [pdf, _pd.DataFrame([{k: ts.get(k) for k in pdf.columns}])]
     )
-    # metadata-only commit: one driver-side parquet write via localman
-    # (no Spark job); the Spark write below is the fallback. Both write
-    # through the generation resolver: on a post-expire manifest the
-    # live parquet is <manifest>/gen-N — a root write would make these
-    # delete records invisible to every read
-    if localman.write_rows(manifest_dir, pdf):
-        return int(snapshot_id)
-    spark.createDataFrame(pdf, _MANIFEST_SCHEMA).write.mode("append").parquet(
-        _mdd(manifest_dir)
-    )
+    # metadata-only commit: one driver-side parquet file (no Spark
+    # job), written through the generation resolver: on a post-expire
+    # manifest the live parquet is <manifest>/gen-N — a root write
+    # would make these delete records invisible to every read
+    localman.write_rows(manifest_dir, pdf)
     return int(snapshot_id)
 
 
@@ -363,12 +352,7 @@ def compact_equality_deletes(
         for i, part in enumerate(
             sorted(_glob.glob(os.path.join(tmp, "part-*.parquet")))
         ):
-            _n = localman.parquet_num_rows(part)
-            if (
-                _n
-                if _n is not None
-                else read_data_files(spark, [part]).limit(1).count()
-            ) == 0:
+            if localman.parquet_num_rows(part) == 0:
                 continue  # a fully-deleted range: no file, no stats row
             dst = os.path.join(
                 out_dir, f"delcompact-{snap}-{i:05d}.parquet"
@@ -376,33 +360,6 @@ def compact_equality_deletes(
             _shutil.move(part, dst)
             new_paths.append(dst)
         _shutil.rmtree(tmp, ignore_errors=True)
-    # add(rewritten) + remove(candidates) + the retire marker commit as
-    # ONE append: the retire record in particular must never become
-    # visible before the rewrites (reads would stop subtracting while
-    # the deleted rows are still on disk)
-    from aws_seismic_data_pipeline_spark.sources.table.manifest import (
-        _tombstone_rows_pd,
-    )
-
-    frames = []
-    if new_paths:
-        add_pdf = (
-            localman.footer_stats_rows(new_paths, tracked, snap)
-            if len(new_paths) <= _LOCAL_COMMIT_MAX
-            else None
-        )
-        frames.append(
-            add_pdf
-            if add_pdf is not None
-            else _stats_add_rows(spark, new_paths, tracked, snap)
-        )
-    if candidates:
-        tomb_pdf = _tombstone_rows_pd(manifest_dir, candidates, snap)
-        frames.append(
-            tomb_pdf
-            if tomb_pdf is not None
-            else _tombstone_rows(spark, manifest_dir, candidates, snap)
-        )
     # retire the records THROUGH the ceiling at the same snapshot: a
     # pinned read in (ceiling, snap) still subtracts; at >= snap the
     # live set is empty and reads stop paying for history
@@ -417,9 +374,20 @@ def compact_equality_deletes(
     }
     import pandas as _pd
 
-    frames.append(_pd.DataFrame([fixed]))
     verify_claim(manifest_dir, snap)
-    commit_manifest_rows(spark, manifest_dir, frames, snapshot_id=snap)
+    # add(rewritten) + remove(candidates) + the retire marker commit as
+    # ONE manifest file: the retire record in particular must never
+    # become visible before the rewrites (reads would stop subtracting
+    # while the deleted rows are still on disk)
+    commit_files(
+        spark,
+        manifest_dir,
+        snap,
+        adds=new_paths,
+        columns=tracked,
+        removes=candidates,
+        extra=[_pd.DataFrame([fixed])],
+    )
     return snap, len(candidates), len(new_paths), int(n_live)
 
 

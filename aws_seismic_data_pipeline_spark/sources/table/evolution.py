@@ -72,8 +72,8 @@ def evolve_schema_add(
         release_claim(manifest_dir, snap)
         raise
     verify_claim(manifest_dir, snap)  # lease still ours at commit time
-    # metadata-only commit: one driver-side parquet file (Spark fallback)
-    commit_manifest_rows(spark, manifest_dir, [pdf], snapshot_id=snap)
+    # metadata-only commit: one driver-side parquet file
+    commit_manifest_rows(manifest_dir, [pdf], snapshot_id=snap)
     return snap
 
 
@@ -272,7 +272,7 @@ def evolve_schema_rename(
     import pandas as _pd
 
     commit_manifest_rows(
-        spark, manifest_dir, [_pd.DataFrame(dicts)], snapshot_id=snap
+        manifest_dir, [_pd.DataFrame(dicts)], snapshot_id=snap
     )
     return snap
 
@@ -339,7 +339,7 @@ def evolve_schema_drop(
     import pandas as _pd
 
     commit_manifest_rows(
-        spark, manifest_dir, [_pd.DataFrame([fixed])], snapshot_id=snap
+        manifest_dir, [_pd.DataFrame([fixed])], snapshot_id=snap
     )
     return snap
 

@@ -22,20 +22,20 @@ that touch DATA. The questions come in two sizes:
   ``commit._next_snapshot``).
 - FILE-SCALE questions (visibility, pruning candidacy, row counts)
   run over :func:`load`'s whole-manifest frame, which returns ``None``
-  above ``_LOCAL_MAN_MAX`` rows or when pyarrow cannot read the
-  manifest; the caller then runs its distributed Spark path.
+  above ``_LOCAL_MAN_MAX`` rows; the caller then runs its distributed
+  Spark path. A manifest pyarrow cannot read raises here too.
 
 Nothing is cached: each call re-reads the manifest directory, exactly
 like the ``spark.read.parquet`` call it replaces (concurrent-writer
 semantics are read-point-for-read-point identical).
 
-The write half lands METADATA-ONLY commit rows (tombstones, equality
-deletes, constraint/schema declarations, commit_ts markers, and
-small-batch footer-stats adds) as ONE pyarrow parquet file appended to
-the manifest directory — bit-compatible with Spark-written files
-(schema equality and mixed-directory reads in both engines are
-pytest-pinned in tests/test_localman.py) — instead of a Spark
-createDataFrame + write job per commit.
+The write half is the ONLY writer of manifest commits: every commit
+(adds, tombstones, equality deletes, constraint/schema declarations,
+commit_ts markers) is composed as pandas rows and published as ONE
+parquet file by one ``os.replace`` (:func:`write_rows`), readable by
+Spark and pyarrow alike (mixed-directory reads in both engines are
+pytest-pinned in tests/test_localman.py). A write that fails raises;
+there is no Spark write behind it.
 """
 
 from __future__ import annotations
@@ -49,8 +49,8 @@ from aws_seismic_data_pipeline_spark.sources.table.logstore import (
     manifest_data_dir as _mdd,
 )
 
-#: the manifest's canonical arrow schema — equals what Spark writes for
-#: manifest._MANIFEST_SCHEMA (pinned by tests/test_localman.py)
+#: the manifest's canonical arrow schema — what a fresh manifest is
+#: written with, and the distributed bulk build's output schema
 def _arrow_manifest_schema():
     import pyarrow as pa
 
@@ -104,21 +104,18 @@ _LOCAL_MAN_MAX = 2_000_000
 def load(manifest_dir: str):
     """The manifest as a pandas DataFrame (``partition_values`` as
     dicts, exactly the values Spark's collect() returns), or None when
-    pyarrow cannot read it (caller falls back to Spark) OR when the
-    manifest exceeds ``_LOCAL_MAN_MAX`` rows (driver-heap
-    guard: the Spark fallback is the correct engine for a manifest
-    that large). Hidden ``_``/``.`` entries (the ``_commits`` token
-    tree) are excluded by pyarrow's default ignore_prefixes, matching
+    the manifest exceeds ``_LOCAL_MAN_MAX`` rows (driver-heap guard:
+    the caller's distributed Spark path is the correct engine for a
+    manifest that large). Raises when pyarrow cannot read the
+    manifest. Hidden ``_``/``.`` entries (the ``_commits`` token tree)
+    are excluded by pyarrow's default ignore_prefixes, matching
     Spark's listing."""
-    try:
-        import pyarrow.dataset as pads
+    import pyarrow.dataset as pads
 
-        ds = pads.dataset(_mdd(manifest_dir), format="parquet")
-        if ds.count_rows() > _LOCAL_MAN_MAX:
-            return None
-        return _frame(ds.to_table())
-    except Exception:
+    ds = pads.dataset(_mdd(manifest_dir), format="parquet")
+    if ds.count_rows() > _LOCAL_MAN_MAX:
         return None
+    return _frame(ds.to_table())
 
 
 def _frame(tbl):
@@ -481,78 +478,86 @@ def _existing_schema(manifest_dir: str):
     return None
 
 
-def write_rows(manifest_dir: str, pdf, overwrite: bool = False) -> bool:
-    """Land metadata rows as ONE parquet file in the manifest dir —
-    the driver-side twin of ``frame.write.mode("append").parquet``.
-    ``pdf`` is a pandas frame whose columns are a subset of the
-    manifest schema (missing columns NULL-filled, exactly like
-    ``unionByName(allowMissingColumns=True)``). Returns False on any
-    failure; the caller must then run the Spark path."""
-    try:
-        import pandas as pd
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+def write_rows(manifest_dir: str, pdf, overwrite: bool = False) -> None:
+    """Publish metadata rows as ONE parquet file in the manifest dir
+    (written hidden, then one ``os.replace``) — every manifest commit
+    lands through here. ``pdf`` is a pandas frame whose columns are a
+    subset of the manifest schema (missing columns NULL-filled, like
+    ``unionByName(allowMissingColumns=True)``). Rows are cast to the
+    schema already on disk with every field nullable, which is what a
+    Spark append writes: a tombstone leaves a bloom manifest's
+    ``m_bits`` NULL where Spark's build declared it non-nullable.
+    Raises on any failure."""
+    import pandas as pd
+    import pyarrow as pa
 
-        schema = None if overwrite else _existing_schema(manifest_dir)
-        if schema is None:
-            schema = _arrow_manifest_schema()
-        cols = {}
-        for field in schema:
-            name = field.name
-            if name in pdf.columns:
-                cols[name] = pdf[name]
-            else:
-                cols[name] = pd.Series([None] * len(pdf), dtype="object")
-        aligned = pd.DataFrame(cols)
-        tbl = pa.Table.from_pandas(
-            aligned, schema=schema, preserve_index=False
-        )
-        d = _mdd(manifest_dir)
-        if overwrite:
-            import shutil
-
-            # mirror Spark's overwrite: replace the directory contents
-            shutil.rmtree(d, ignore_errors=True)
-        os.makedirs(d, exist_ok=True)
-        name = f"local-{uuid.uuid4().hex}.parquet"
-        tmp = os.path.join(d, f".{name}.tmp")
-        pq.write_table(tbl, tmp)
-        os.replace(tmp, os.path.join(d, name))
-        return True
-    except Exception:
-        return False
-
-
-def clone_manifest_local(src_manifest: str, dst_manifest: str) -> bool:
-    """Driver-side twin of ``clone_manifest``'s metadata copy: read the
-    source manifest (through the generation resolver) with pyarrow and
-    land it as one parquet file at the clone root. False → Spark
-    fallback."""
-    try:
+    schema = None if overwrite else _existing_schema(manifest_dir)
+    if schema is None:
+        schema = _arrow_manifest_schema()
+    schema = pa.schema([f.with_nullable(True) for f in schema])
+    cols = {}
+    for field in schema:
+        name = field.name
+        if name in pdf.columns:
+            cols[name] = pdf[name]
+        else:
+            cols[name] = pd.Series([None] * len(pdf), dtype="object")
+    aligned = pd.DataFrame(cols)
+    tbl = pa.Table.from_pandas(aligned, schema=schema, preserve_index=False)
+    d = _mdd(manifest_dir)
+    if overwrite:
         import shutil
 
-        import pyarrow.dataset as pads
-        import pyarrow.parquet as pq
+        # mirror Spark's overwrite: replace the directory contents
+        shutil.rmtree(d, ignore_errors=True)
+    _publish(tbl, d)
 
-        tbl = pads.dataset(_mdd(src_manifest), format="parquet").to_table()
-        shutil.rmtree(dst_manifest, ignore_errors=True)
-        os.makedirs(dst_manifest, exist_ok=True)
-        name = f"local-{uuid.uuid4().hex}.parquet"
-        tmp = os.path.join(dst_manifest, f".{name}.tmp")
-        pq.write_table(tbl, tmp)
-        os.replace(tmp, os.path.join(dst_manifest, name))
-        return True
-    except Exception:
-        return False
+
+def _publish(tbl, d: str) -> None:
+    """Write an arrow table as one hidden parquet file in ``d`` and
+    publish it with one ``os.replace``."""
+    import pyarrow.parquet as pq
+
+    os.makedirs(d, exist_ok=True)
+    name = f"local-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(d, f".{name}.tmp")
+    pq.write_table(tbl, tmp)
+    os.replace(tmp, os.path.join(d, name))
+
+
+def clone_manifest_local(src_manifest: str, dst_manifest: str) -> None:
+    """``clone_manifest``'s metadata copy: read the source manifest
+    (through the generation resolver) with pyarrow and land it as one
+    parquet file at the clone root. Raises on any failure."""
+    import shutil
+
+    import pyarrow.dataset as pads
+
+    tbl = pads.dataset(_mdd(src_manifest), format="parquet").to_table()
+    shutil.rmtree(dst_manifest, ignore_errors=True)
+    _publish(tbl, dst_manifest)
 
 
 def partition_values_py(path: str, partition_by) -> dict | None:
-    """Python twin of ``manifest._partition_values_col`` for ONE path:
-    each requested partition column's value parsed from the row's
-    Hive-style ``col=value/`` path segment, percent-DECODED with the
-    same '+'-preserving, invalid-escape-falls-back-raw semantics as
-    the Spark expression. None when the table is unpartitioned; empty
-    entries (no segment) are omitted."""
+    """The manifest's ``partition_values`` map for one data file: each
+    requested partition column's value parsed from the path's
+    Hive-style ``col=value/`` segment (``lang=en/``) — the reference
+    pipeline's ``YYYYMMDD/`` key prefix generalized to named
+    key=value dirs. Entries exist ONLY where the
+    segment is present, so a file not laid out by a requested column
+    carries no entry and every partition filter treats it
+    conservatively (scanned, never silently dropped). None when the
+    table is unpartitioned.
+
+    Spark percent-escapes reserved characters ('%', '=', ':', ...) in
+    Hive partition dir names, so the captured segment is DECODED before
+    it is stored — a partition filter compares LOGICAL values, and
+    ``{'col': 'a=b'}`` must match the on-disk ``col=a%3Db`` segment.
+    '+' is kept as is (file URIs never encode a space that way); a
+    segment that is not valid percent-encoding (hand-made dir with a
+    bare '%') keeps its raw form instead of failing the commit. The
+    column name is regex-escaped so a name containing metacharacters
+    cannot corrupt the pattern."""
     if not partition_by:
         return None
     out = {}
@@ -577,58 +582,31 @@ def footer_stats_rows(
     snapshot_id: int,
     partition_by=(),
 ):
-    """Driver-side twin of ``footers.read_footer_stats_multi`` plus the
-    snapshot/op/partition_values stamping of ``_stats_add_rows`` — one
-    pyarrow footer read per file, identical row values (min/max as
-    float, non-numeric stats as NULL). Returns a pandas frame, or None
-    on any failure. Callers size-gate: this is for commit-scale file
-    lists (a daily delta's handful), never a bulk build."""
-    try:
-        import pandas as pd
-        import pyarrow.parquet as pq
+    """The manifest 'add' rows of data files: ``footers.footer_rows``
+    (min/max as float, non-numeric stats NULL) stamped with the
+    snapshot, the op and each file's partition values, as a pandas
+    frame. Runs on the driver for a commit-scale file list and inside
+    each task of the distributed bulk build. Raises when a footer
+    cannot be read."""
+    import pandas as pd
 
-        def _num(v):
-            try:
-                return float(v)
-            except (TypeError, ValueError):
-                return None
+    from aws_seismic_data_pipeline_spark.sources.footers import (
+        FOOTER_COLS,
+        footer_rows,
+    )
 
-        cols = tuple(columns)
-        rows = []
-        for p in sorted(paths):
-            md = pq.ParquetFile(p).metadata
-            names = md.schema.names
-            idx = {c: names.index(c) for c in cols}
-            pv = partition_values_py(p, tuple(partition_by))
-            for rg in range(md.num_row_groups):
-                for c in cols:
-                    col = md.row_group(rg).column(idx[c])
-                    st = col.statistics
-                    has = st is not None and st.has_min_max
-                    rows.append(
-                        (
-                            p,
-                            os.path.basename(p),
-                            rg,
-                            c,
-                            col.num_values,
-                            _num(st.min) if has else None,
-                            _num(st.max) if has else None,
-                            int(snapshot_id),
-                            "add",
-                            pv,
-                        )
-                    )
-        return pd.DataFrame(rows, columns=list(_COLS))
-    except Exception:
-        return None
+    out = pd.DataFrame(
+        footer_rows(sorted(paths), tuple(columns)), columns=FOOTER_COLS
+    )
+    out["snapshot_id"] = int(snapshot_id)
+    out["op"] = "add"
+    pv = {p: partition_values_py(p, tuple(partition_by)) for p in paths}
+    out["partition_values"] = [pv[p] for p in out["path"]]
+    return out
 
 
-def parquet_num_rows(path: str) -> int | None:
-    """Footer-only row count of one parquet file (None on failure)."""
-    try:
-        import pyarrow.parquet as pq
+def parquet_num_rows(path: str) -> int:
+    """Footer-only row count of one parquet file."""
+    import pyarrow.parquet as pq
 
-        return int(pq.ParquetFile(path).metadata.num_rows)
-    except Exception:
-        return None
+    return int(pq.ParquetFile(path).metadata.num_rows)

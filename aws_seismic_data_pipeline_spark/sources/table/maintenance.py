@@ -18,7 +18,6 @@ from aws_seismic_data_pipeline_spark.sources.table.logstore import (
     manifest_data_dir as _mdd,
 )
 from aws_seismic_data_pipeline_spark.sources.footers import (
-    _LOCAL_COMMIT_MAX,
     _RG_PRUNE_RANGE,
     read_data_files,
 )
@@ -37,12 +36,9 @@ from aws_seismic_data_pipeline_spark.sources.table import localman
 from aws_seismic_data_pipeline_spark.sources.table.manifest import (
     _MANIFEST_COLS,
     _PART_PRUNE_RANGE,
-    _stats_add_rows,
-    _tombstone_rows,
-    _tombstone_rows_pd,
     _visible_stats,
     append_stats_manifest,
-    commit_manifest_rows,
+    commit_files,
     manifest_pruned_scan,
     remove_from_manifest,
     write_stats_manifest,
@@ -170,7 +166,8 @@ def _union_tracked_paths_local(
 ) -> set[str] | None:
     """Driver-side twin of :func:`_union_tracked_paths` (the union of
     visible paths across live manifests) as a plain set; None when any
-    member manifest cannot be read locally (caller falls back)."""
+    member manifest is above the localman gate (caller runs the Spark
+    union)."""
     members = (
         [manifest_dir, *sibling_manifests]
         if sibling_manifests is not None
@@ -493,24 +490,14 @@ def commit_data_compaction(
     # add(compacted) + remove(fragments) commit as ONE append — a reader
     # between two appends would double-count (or lose) the fragment rows
     verify_claim(manifest_dir, snap)
-    add_pdf = localman.footer_stats_rows(
-        [new_path], columns, snap, partition_by=partition_by
-    )
-    tomb_pdf = _tombstone_rows_pd(manifest_dir, paths, snap)
-    commit_manifest_rows(
+    commit_files(
         spark,
         manifest_dir,
-        [
-            add_pdf
-            if add_pdf is not None
-            else _stats_add_rows(
-                spark, [new_path], columns, snap, partition_by
-            ),
-            tomb_pdf
-            if tomb_pdf is not None
-            else _tombstone_rows(spark, manifest_dir, paths, snap),
-        ],
-        snapshot_id=snap,
+        snap,
+        adds=[new_path],
+        columns=columns,
+        removes=paths,
+        partition_by=partition_by,
     )
     return new_path, snap
 
@@ -595,10 +582,8 @@ def clone_manifest(
     ``gen-*`` directories plus the grace-retained stale flat parquet,
     and a raw root read would snapshot stale or duplicated rows
     (resurrecting expired history in the clone)."""
-    # KB-scale metadata copy: driver-side via pyarrow (Spark fallback)
-    if not localman.clone_manifest_local(src_manifest, dst_manifest):
-        df = spark.read.parquet(_mdd(src_manifest))
-        df.coalesce(1).write.mode("overwrite").parquet(dst_manifest)
+    # KB-scale metadata copy: one driver-side pyarrow read and write
+    localman.clone_manifest_local(src_manifest, dst_manifest)
     register_sibling_manifests(src_manifest, dst_manifest)
 
 
@@ -775,7 +760,7 @@ def merge_through_manifest(
     insert_files: int = 1,
     snapshot_id: int | None = None,
     partition_by: tuple[str, ...] = (),
-    extra_commit_frames: list[DataFrame] | None = None,
+    extra_commit_frames: list | None = None,
     pre_commit=None,
     delete_where: str | None = None,
     stats_out: dict | None = None,
@@ -1096,12 +1081,7 @@ def merge_through_manifest(
         )
     ):
         # footer-only row-count probe (a Spark job per part file before)
-        _n = localman.parquet_num_rows(part)
-        if (
-            _n
-            if _n is not None
-            else read_data_files(spark, [part]).limit(1).count()
-        ) > 0:
+        if localman.parquet_num_rows(part) > 0:
             rel_dir = os.path.relpath(os.path.dirname(part), tmp)
             dst_dir = root if rel_dir == "." else os.path.join(root, rel_dir)
             os.makedirs(dst_dir, exist_ok=True)
@@ -1113,32 +1093,6 @@ def merge_through_manifest(
     _shutil.rmtree(tmp, ignore_errors=True)
     if not new_paths and not intersecting:
         raise ValueError("merge_through_manifest: empty delta — nothing to do")
-    # adds + removes land in ONE append (commit_manifest_rows): a
-    # concurrent loser re-planning mid-commit must never see the
-    # rewritten files alongside the still-untombstoned originals
-    frames = list(extra_commit_frames or [])
-    if new_paths:
-        add_pdf = (
-            localman.footer_stats_rows(
-                new_paths, tracked, snap, partition_by=partition_by
-            )
-            if len(new_paths) <= _LOCAL_COMMIT_MAX
-            else None
-        )
-        frames.append(
-            add_pdf
-            if add_pdf is not None
-            else _stats_add_rows(
-                spark, new_paths, tracked, snap, partition_by=partition_by
-            )
-        )
-    if intersecting:
-        tomb_pdf = _tombstone_rows_pd(manifest_dir, intersecting, snap)
-        frames.append(
-            tomb_pdf
-            if tomb_pdf is not None
-            else _tombstone_rows(spark, manifest_dir, intersecting, snap)
-        )
     verify_claim(manifest_dir, snap)
     if pre_commit is not None:
         # the facade's post-claim constraint re-check seam (see
@@ -1160,7 +1114,19 @@ def merge_through_manifest(
                 except OSError:
                     pass
             raise
-    commit_manifest_rows(spark, manifest_dir, frames, snapshot_id=snap)
+    # adds + removes land in ONE manifest file: a concurrent loser
+    # re-planning mid-commit must never see the rewritten files
+    # alongside the still-untombstoned originals
+    commit_files(
+        spark,
+        manifest_dir,
+        snap,
+        adds=new_paths,
+        columns=tracked,
+        removes=intersecting,
+        partition_by=partition_by,
+        extra=extra_commit_frames or (),
+    )
     return snap, len(intersecting), n_rewritten
 
 
@@ -1304,7 +1270,7 @@ def merge_evolve_through_manifest(
     in the SAME commit, so there is no snapshot at which the new column
     is declared but its first values are missing (or vice versa). The
     declaration rows ride in ``merge_through_manifest``'s single
-    ``commit_manifest_rows`` append; rewritten intersecting files carry
+    manifest commit (``commit_files``); rewritten intersecting files carry
     the new column (NULL on unmatched base rows), untouched files are
     NULL-backfilled by :func:`evolution.read_evolved` at scan time, and
     an as-of read BELOW the snapshot sees the old schema AND the old
@@ -2220,28 +2186,14 @@ def _optimize_curve(
         prefix,
     )
     verify_claim(manifest_dir, snap)
-    add_pdf = (
-        localman.footer_stats_rows(
-            new_paths, tracked, snap, partition_by=partition_by
-        )
-        if len(new_paths) <= _LOCAL_COMMIT_MAX
-        else None
-    )
-    tomb_pdf = _tombstone_rows_pd(manifest_dir, visible, snap)
-    commit_manifest_rows(
+    commit_files(
         spark,
         manifest_dir,
-        [
-            add_pdf
-            if add_pdf is not None
-            else _stats_add_rows(
-                spark, new_paths, tracked, snap, partition_by=partition_by
-            ),
-            tomb_pdf
-            if tomb_pdf is not None
-            else _tombstone_rows(spark, manifest_dir, visible, snap),
-        ],
-        snapshot_id=snap,
+        snap,
+        adds=new_paths,
+        columns=tracked,
+        removes=visible,
+        partition_by=partition_by,
     )
     return snap, len(visible), len(new_paths)
 
@@ -2575,28 +2527,14 @@ def _optimize_curve_incremental(
         prefix,
     )
     verify_claim(manifest_dir, snap)
-    add_pdf = (
-        localman.footer_stats_rows(
-            new_paths, tracked, snap, partition_by=partition_by
-        )
-        if len(new_paths) <= _LOCAL_COMMIT_MAX
-        else None
-    )
-    tomb_pdf = _tombstone_rows_pd(manifest_dir, scattered, snap)
-    commit_manifest_rows(
+    commit_files(
         spark,
         manifest_dir,
-        [
-            add_pdf
-            if add_pdf is not None
-            else _stats_add_rows(
-                spark, new_paths, tracked, snap, partition_by=partition_by
-            ),
-            tomb_pdf
-            if tomb_pdf is not None
-            else _tombstone_rows(spark, manifest_dir, scattered, snap),
-        ],
-        snapshot_id=snap,
+        snap,
+        adds=new_paths,
+        columns=tracked,
+        removes=scattered,
+        partition_by=partition_by,
     )
     return snap, len(scattered), len(new_paths), n_untouched
 

@@ -27,12 +27,12 @@ from aws_seismic_data_pipeline_spark.sources.table.logstore import (
     manifest_data_dir as _mdd,
 )
 from aws_seismic_data_pipeline_spark.sources.footers import (
-    _LOCAL_COMMIT_MAX,
     _RG_PRUNE_RANGE,
     _decode_input_file,
+    commit_scale,
+    fan_out,
     rangekey_write,
     read_data_files,
-    read_footer_stats_multi,
 )
 from aws_seismic_data_pipeline_spark.sources.table.commit import (
     _claimed_next_snapshot,
@@ -56,41 +56,11 @@ _PART_PRUNE_RANGE = (50, 199)
 
 
 
-def _partition_values_col(partition_by: tuple[str, ...]) -> F.Column:
-    """The manifest's ``partition_values`` map for a stats row: each
-    requested partition column's value parsed from the row's Hive-style
-    path segment (``lang=en/``) — the reference's ``YYYYMMDD/`` prefix
-    layout (``/root/reference/app.py:449-456``) generalized to named
-    key=value dirs. Entries exist ONLY where the segment is present, so
-    a file not laid out by a requested column carries no entry and every
-    partition filter treats it conservatively (scanned, never silently
-    dropped). NULL map when the table is unpartitioned.
+def _manifest_struct():
+    """The manifest schema as a Spark ``StructType``."""
+    from pyspark.sql.pandas.types import from_arrow_schema
 
-    Spark percent-escapes reserved characters ('%', '=', ':', ...) in
-    Hive partition dir names, so the captured segment is DECODED before
-    it is stored — a partition filter compares LOGICAL values, and
-    ``{'col': 'a=b'}`` must match the on-disk ``col=a%3Db`` segment.
-    Decode mirrors ``_decode_input_file`` ('+' pre-escaped so
-    ``url_decode`` never turns it into a space); a segment that is not
-    valid percent-encoding (hand-made dir with a bare '%') falls back
-    to its raw form instead of failing the scan. The column name is
-    regex-escaped so a name containing metacharacters cannot corrupt
-    the pattern."""
-    import re as _re
-
-    if not partition_by:
-        return F.lit(None).cast("map<string,string>")
-    pairs = []
-    for pcol in partition_by:
-        seg = F.regexp_extract(
-            F.col("path"), f"(?:^|/){_re.escape(pcol)}=([^/]+)/", 1
-        )
-        decoded = F.coalesce(
-            F.try_url_decode(F.regexp_replace(seg, r"\+", "%2B")), seg
-        )
-        pairs.append(F.lit(pcol))
-        pairs.append(decoded)
-    return F.map_filter(F.create_map(*pairs), lambda _k, v: v != "")
+    return from_arrow_schema(localman._arrow_manifest_schema())
 
 
 def write_stats_manifest(
@@ -102,51 +72,44 @@ def write_stats_manifest(
 ) -> None:
     """Materialize the footer-stats manifest as a parquet TABLE beside
     the data — the artifact a table format keeps so planning never
-    re-lists or re-opens data-file footers. Built distributed
-    (``read_footer_stats_multi``); |manifest| = |files| × row groups ×
-    columns rows of fixed-width metadata, ~KBs per thousand files. The
-    write inherits the footer-read fan-out, capped at 32 tasks, so a
-    build adds at most 32 manifest files regardless of table size
-    (a trailing ``coalesce(1)`` would serialize the footer read into
-    one task — measured 7× slower — for a single-file nicety
-    ``catalog.compact_parquet_dir`` can restore offline if thousands
-    of appends ever accumulate). Every row carries ``snapshot_id`` = 0;
-    appends stamp successive ids, giving the manifest a version axis
+    re-lists or re-opens data-file footers. |manifest| = |files| × row
+    groups × columns rows of fixed-width metadata, ~KBs per thousand
+    files. Every row carries ``snapshot_id`` = 0, plus snapshot 0's
+    wall-clock marker (see :func:`_commit_ts_fixed`); appends stamp
+    successive ids, giving the manifest a version axis
     (``manifest_pruned_scan(as_of=...)`` time-travels on it).
-    ``partition_by`` records Hive-style partition values per row (see
-    ``_partition_values_col``) for combined partition+stats pruning.
+    ``partition_by`` records Hive partition values per row (see
+    ``localman.partition_values_py``) for combined partition+stats
+    pruning.
 
-    SIZE-ADAPTIVE: a build over at most ``_LOCAL_COMMIT_MAX`` files
-    runs DRIVER-SIDE (one pyarrow footer read per file, one parquet
-    write — :mod:`.localman`; identical rows, pytest-pinned) because
-    fanning a handful of footer KBs over a Spark stage costs ~2 s of
-    scheduler+worker overhead; a bulk build keeps the distributed
-    fan-out — at 100 TB the file list is the thing that scales."""
-    if len(paths) <= _LOCAL_COMMIT_MAX:
-        pdf = localman.footer_stats_rows(
-            paths, columns, 0, partition_by=partition_by
+    SIZE-ADAPTIVE: a build over a commit-scale file list
+    (``footers.commit_scale``) reads the footers on the driver and
+    lands as ONE file through :func:`localman.write_rows`, which
+    raises on failure. A bulk build is the one commit whose rows scale
+    with the table, so it stays distributed: the footer read fans out
+    over at most 32 tasks (``footers.fan_out``, each task stamping its
+    own rows) and Spark writes their output, so the build adds at most
+    32 manifest files regardless of table size (a trailing
+    ``coalesce(1)`` would serialize the footer read into one task —
+    measured 7× slower)."""
+    import pandas as _pd
+
+    def stamp(ps):
+        return localman.footer_stats_rows(ps, columns, 0, partition_by)
+
+    if commit_scale(paths):
+        pdf = localman.concat_rows(
+            [stamp(sorted(paths)), _pd.DataFrame([_commit_ts_fixed(0)])]
         )
-        if pdf is not None:
-            import pandas as _pd
-
-            ts = _commit_ts_fixed(0)
-            pdf = localman.concat_rows(
-                [pdf, _pd.DataFrame([{k: ts.get(k) for k in pdf.columns}])]
-            )
-            if localman.write_rows(manifest_dir, pdf, overwrite=True):
-                return
-    rows = (
-        read_footer_stats_multi(spark, paths, columns)
-        .withColumn("snapshot_id", F.lit(0).cast("int"))
-        .withColumn("op", F.lit("add"))
-        .withColumn("partition_values", _partition_values_col(partition_by))
+        localman.write_rows(manifest_dir, pdf, overwrite=True)
+        return
+    schema = _manifest_struct()
+    marker = spark.createDataFrame(
+        [tuple(_commit_ts_fixed(0).get(f.name) for f in schema)], schema
     )
-    # snapshot 0's wall-clock marker rides in the same write (see
-    # _commit_ts_fixed) — the schema comes from the build itself, the
-    # manifest does not exist yet
-    rows.unionByName(
-        _commit_ts_rows(spark, rows.schema, 0), allowMissingColumns=True
-    ).write.mode("overwrite").parquet(_mdd(manifest_dir))
+    fan_out(spark, paths, stamp, schema).unionByName(marker).write.mode(
+        "overwrite"
+    ).parquet(_mdd(manifest_dir))
 
 
 def append_stats_manifest(
@@ -191,28 +154,14 @@ def append_stats_manifest(
             if claimed_here:  # nothing committed at the id
                 release_claim(manifest_dir, int(snapshot_id))
             raise
-    if len(new_paths) <= _LOCAL_COMMIT_MAX:
-        # commit-scale append: driver-side footer stats + one local
-        # parquet write (see write_stats_manifest) — Spark fallback below
-        pdf = localman.footer_stats_rows(
-            new_paths, columns, int(snapshot_id), partition_by=partition_by
-        )
-        if pdf is not None:
-            import pandas as _pd
-
-            ts = _commit_ts_fixed(int(snapshot_id))
-            pdf = localman.concat_rows(
-                [pdf, _pd.DataFrame([{k: ts.get(k) for k in pdf.columns}])]
-            )
-            if localman.write_rows(manifest_dir, pdf):
-                return int(snapshot_id)
-    rows = _stats_add_rows(
-        spark, new_paths, columns, int(snapshot_id), partition_by
+    commit_files(
+        spark,
+        manifest_dir,
+        int(snapshot_id),
+        adds=new_paths,
+        columns=columns,
+        partition_by=partition_by,
     )
-    rows.unionByName(
-        _commit_ts_rows(spark, rows.schema, int(snapshot_id)),
-        allowMissingColumns=True,
-    ).write.mode("append").parquet(_mdd(manifest_dir))
     return int(snapshot_id)
 
 
@@ -259,22 +208,53 @@ def append_stats_manifest_retry(
     raise AssertionError("unreachable")  # pragma: no cover
 
 
-def _stats_add_rows(
+def _add_rows(
     spark: SparkSession,
-    new_paths: list[str],
+    paths: list[str],
     columns: tuple[str, ...],
     snapshot_id: int,
     partition_by: tuple[str, ...] = (),
-) -> DataFrame:
-    """The 'add' stats rows for new data files as an UNCOMMITTED frame —
-    compound verbs (merge, compaction) union these with their tombstones
-    and commit everything in ONE append, so a concurrent re-planner can
-    never observe adds without the matching removes (half a commit)."""
-    return (
-        read_footer_stats_multi(spark, new_paths, columns)
-        .withColumn("snapshot_id", F.lit(int(snapshot_id)).cast("int"))
-        .withColumn("op", F.lit("add"))
-        .withColumn("partition_values", _partition_values_col(partition_by))
+):
+    """The 'add' stats rows of new data files as a driver-resident
+    pandas frame (``localman.footer_stats_rows``): read on the driver
+    for a commit-scale file list, else fanned out and collected —
+    sized by the commit, not the table."""
+
+    def stamp(ps):
+        return localman.footer_stats_rows(
+            ps, columns, snapshot_id, partition_by
+        )
+
+    if commit_scale(paths):
+        return stamp(sorted(paths))
+    return fan_out(spark, paths, stamp, _manifest_struct()).toPandas()
+
+
+def commit_files(
+    spark: SparkSession,
+    manifest_dir: str,
+    snapshot_id: int,
+    adds: list[str] = (),
+    columns: tuple[str, ...] = _MANIFEST_COLS,
+    removes: list[str] = (),
+    partition_by: tuple[str, ...] = (),
+    extra: list = (),
+) -> None:
+    """Commit 'add' rows for new data files, 'remove' tombstones for
+    the files they replace and any ``extra`` metadata frames as ONE
+    manifest file at ``snapshot_id`` (:func:`commit_manifest_rows`) —
+    the single commit of append, remove, compaction, MERGE, OPTIMIZE
+    and delete compaction. A concurrent re-planner can never observe
+    adds without the matching removes (half a commit)."""
+    frames = []
+    if adds:
+        frames.append(
+            _add_rows(spark, adds, columns, snapshot_id, partition_by)
+        )
+    if removes:
+        frames.append(_tombstone_rows_pd(manifest_dir, removes, snapshot_id))
+    commit_manifest_rows(
+        manifest_dir, frames + list(extra), snapshot_id=snapshot_id
     )
 
 
@@ -299,99 +279,34 @@ def _commit_ts_fixed(snapshot_id: int, ts: float | None = None) -> dict:
         "max_val": t,
         "snapshot_id": int(snapshot_id),
         "op": "commit_ts",
-        # empty, not None: partitioned manifests declare the map
-        # non-nullable
+        # an empty map: the marker belongs to no partition
         "partition_values": {},
     }
 
 
-def _commit_ts_rows(
-    spark: SparkSession, schema, snapshot_id: int
-) -> DataFrame:
-    """A 1-row commit_ts marker frame shaped by the target manifest's
-    own schema (never forks it)."""
-    fixed = _commit_ts_fixed(snapshot_id)
-    return spark.createDataFrame(
-        [tuple(fixed.get(f.name) for f in schema)], schema
-    )
-
-
 def commit_manifest_rows(
-    spark: SparkSession,
     manifest_dir: str,
-    frames: list[DataFrame],
+    frames: list,
     snapshot_id: int | None = None,
 ) -> None:
-    """Commit several metadata row groups (adds + tombstones + markers)
-    as ONE Spark write job — the atomicity half of the optimistic-
-    concurrency contract. Two separate appends leave a window where a
-    concurrent ``merge_with_conflict_retry`` loser re-plans against the
-    adds WITHOUT the removes (or vice versa), double-counting the
-    rewritten rows and baking the duplication into its own rewrite;
-    one job commits all files in a single FileOutputCommitter commit.
-    Frames are aligned by name (missing columns NULL-filled) and cast
-    to the target manifest's schema so the append never forks it.
-    ``snapshot_id`` (when the caller passes its claimed id) rides a
-    commit_ts wall-clock marker inside the SAME write.
-
-    Frames may be PANDAS frames (driver-resident metadata — footer
-    stats, tombstones, declarations): when every frame is pandas the
-    whole commit lands as ONE driver-side parquet write
-    (:func:`localman.write_rows` — still a single atomic file, the
-    same one-append contract), skipping the Spark job entirely; any
-    Spark frame in the list, or a failed local write, falls back to
-    the original single Spark write with pandas frames converted."""
+    """Commit several pandas metadata frames (adds + tombstones +
+    markers) as ONE manifest file (:func:`localman.write_rows`: one
+    parquet file, one ``os.replace``) — the atomicity half of the
+    optimistic-concurrency contract. Two separate appends leave a
+    window where a concurrent ``merge_with_conflict_retry`` loser
+    re-plans against the adds WITHOUT the removes (or vice versa),
+    double-counting the rewritten rows and baking the duplication into
+    its own rewrite. Frames are aligned by name (missing columns
+    NULL-filled) and cast to the target manifest's schema so the
+    append never forks it. ``snapshot_id`` (when the caller passes its
+    claimed id) rides a commit_ts wall-clock marker inside the SAME
+    file. A failed write raises; nothing else writes the commit."""
     import pandas as _pd
 
-    if frames and all(isinstance(f, _pd.DataFrame) for f in frames):
-        out = localman.concat_rows(frames)
-        if snapshot_id is not None:
-            out = localman.concat_rows(
-                [out, _pd.DataFrame([_commit_ts_fixed(int(snapshot_id))])]
-            )
-        if localman.write_rows(manifest_dir, out):
-            return
-    frames = [
-        _pd_frame_to_spark(spark, f) if isinstance(f, _pd.DataFrame) else f
-        for f in frames
-    ]
-    out = frames[0]
-    for fdf in frames[1:]:
-        out = out.unionByName(fdf, allowMissingColumns=True)
     if snapshot_id is not None:
-        out = out.unionByName(
-            _commit_ts_rows(
-                spark,
-                spark.read.parquet(_mdd(manifest_dir)).schema,
-                int(snapshot_id),
-            ),
-            allowMissingColumns=True,
-        )
-    out.write.mode("append").parquet(_mdd(manifest_dir))
-
-
-_MANIFEST_SCHEMA = (
-    "path string, file_name string, row_group long, column_name string,"
-    " n_rows long, min_val double, max_val double, snapshot_id int,"
-    " op string, partition_values map<string,string>"
-)
-
-
-def _pd_frame_to_spark(spark: SparkSession, pdf) -> DataFrame:
-    """A pandas metadata frame as a Spark frame for the fallback write
-    path: canonical manifest columns get the canonical schema (NaN →
-    NULL); anything else lets Spark infer."""
-    clean = pdf.astype(object).where(pdf.notna(), None)
-    canonical = [
-        "path", "file_name", "row_group", "column_name", "n_rows",
-        "min_val", "max_val", "snapshot_id", "op", "partition_values",
-    ]
-    if set(clean.columns) <= set(canonical):
-        for c in canonical:
-            if c not in clean.columns:
-                clean[c] = None
-        return spark.createDataFrame(clean[canonical], _MANIFEST_SCHEMA)
-    return spark.createDataFrame(clean)
+        marker = _pd.DataFrame([_commit_ts_fixed(int(snapshot_id))])
+        frames = [*frames, marker]
+    localman.write_rows(manifest_dir, localman.concat_rows(frames))
 
 
 def remove_from_manifest(
@@ -426,70 +341,23 @@ def remove_from_manifest(
     if snapshot_id is None:
         snapshot_id = _claimed_next_snapshot(spark, manifest_dir)
     verify_claim(manifest_dir, int(snapshot_id))
-    pdf = _tombstone_rows_pd(manifest_dir, paths, int(snapshot_id))
-    if pdf is not None:
-        import pandas as _pd
-
-        ts = _commit_ts_fixed(int(snapshot_id))
-        pdf = localman.concat_rows(
-            [pdf, _pd.DataFrame([{k: ts.get(k) for k in pdf.columns}])]
-        )
-        if localman.write_rows(manifest_dir, pdf):
-            return int(snapshot_id)
-    rows = _tombstone_rows(spark, manifest_dir, paths, int(snapshot_id))
-    rows.unionByName(
-        _commit_ts_rows(spark, rows.schema, int(snapshot_id)),
-        allowMissingColumns=True,
-    ).write.mode("append").parquet(_mdd(manifest_dir))
+    commit_files(spark, manifest_dir, int(snapshot_id), removes=paths)
     return int(snapshot_id)
-
-
-def _tombstone_rows(
-    spark: SparkSession,
-    manifest_dir: str,
-    paths: list[str],
-    snapshot_id: int,
-) -> DataFrame:
-    """REMOVE tombstone rows (see :func:`remove_from_manifest`) as an
-    UNCOMMITTED frame, for single-append compound commits."""
-    import os as _os
-    import time as _time
-
-    schema = spark.read.parquet(_mdd(manifest_dir)).schema
-    now = float(_time.time())
-    has_stats_slots = {"min_val", "max_val"} <= {f.name for f in schema}
-    fixed = {
-        "path": lambda p: p,
-        "file_name": lambda p: _os.path.basename(p),
-        "column_name": lambda p: "__remove__",
-        "snapshot_id": lambda p: int(snapshot_id),
-        "op": lambda p: "remove",
-    }
-    if has_stats_slots:
-        fixed["min_val"] = lambda p: now
-        fixed["max_val"] = lambda p: now
-    rows = [
-        tuple(
-            fixed[f.name](p) if f.name in fixed else None for f in schema
-        )
-        for p in sorted(paths)
-    ]
-    return spark.createDataFrame(rows, schema)
 
 
 def _tombstone_rows_pd(
     manifest_dir: str, paths: list[str], snapshot_id: int
 ):
-    """Driver-side twin of :func:`_tombstone_rows` — rows shaped by the
-    TARGET manifest's on-disk schema (read from a footer, no Spark
-    job), returned as pandas for a :func:`localman.write_rows` commit.
-    None when the schema cannot be read (caller falls back)."""
+    """REMOVE tombstone rows (see :func:`remove_from_manifest`) as an
+    uncommitted pandas frame, shaped by the TARGET manifest's on-disk
+    schema (read from a footer, no Spark job). Raises when the
+    manifest has no readable file."""
     import os as _os
     import time as _time
 
     schema = localman._existing_schema(manifest_dir)
     if schema is None:
-        return None
+        raise ValueError(f"no readable manifest file at {manifest_dir}")
     import pandas as _pd
 
     names = list(schema.names)

@@ -942,7 +942,25 @@ def test_bloom_manifest_string_keys_and_tombstones(spark, tmp_path):
         .collect()[0]
         .p
     )
+    # the tombstone leaves m_bits/bloom NULL although Spark's build
+    # declared m_bits non-nullable: it still lands as ONE driver-written
+    # file that Spark and pyarrow both read back
+    import pyarrow.dataset as pads
+
+    def manifest_files():
+        return glob.glob(os.path.join(_mdd(bdir), "*.parquet"))
+
+    n_before = spark.read.parquet(bdir).count()
+    files_before = len(manifest_files())
     remove_from_manifest(spark, bdir, [victim])
+    assert len(manifest_files()) == files_before + 1
+    # the tombstone plus its commit_ts marker
+    assert spark.read.parquet(bdir).count() == n_before + 2
+    tomb = pads.dataset(_mdd(bdir), format="parquet").to_table(
+        filter=pads.field("op") == "remove"
+    )
+    assert tomb.column("path").to_pylist() == [victim]
+    assert tomb.column("m_bits").to_pylist() == [None]
     after = bloom_pruned_scan(spark, bdir, "uid", ["user-1234", "user-9"])
     vals = sorted(r.uid for r in after.collect())
     assert "user-9" not in vals

@@ -384,6 +384,8 @@ def test_next_snapshot_absent_empty_and_corrupt(spark, staged, tmp_path):
         fh.truncate(os.path.getsize(victim) // 2)
     with pytest.raises(Exception):
         _next_snapshot(spark, mpath)
+    with pytest.raises(Exception):  # a pyarrow failure raises, not None
+        localman.load(mpath)
     with pytest.raises(Exception):
         _claimed_next_snapshot(spark, mpath)
     assert not os.path.exists(os.path.join(mpath, "_commits", "0"))
@@ -422,7 +424,7 @@ def test_write_rows_interop(spark, staged):
             },
         ]
     )
-    assert localman.write_rows(mpath, pdf)
+    localman.write_rows(mpath, pdf)
     after = spark.read.parquet(_mdd(mpath))
     assert after.schema == before.schema
     assert after.count() == n_before + 2
@@ -443,23 +445,22 @@ def test_write_rows_interop(spark, staged):
     assert len(man) == n_before + 2
 
 
-def test_footer_stats_rows_match_distributed(spark, staged):
+def test_footer_stats_rows_match_distributed(spark, staged, monkeypatch):
+    """The driver-side add rows equal the distributed footer read's."""
     data_dir, _m = staged
-    from aws_seismic_data_pipeline_spark.sources.footers import (
-        read_footer_stats_multi,
-    )
+    from aws_seismic_data_pipeline_spark.sources import footers
 
     files = sorted(glob.glob(os.path.join(data_dir, "*.parquet")))
+    monkeypatch.setattr(footers, "_LOCAL_COMMIT_MAX", 0)
     want = sorted(
         tuple(r)
-        for r in read_footer_stats_multi(
+        for r in footers.read_footer_stats_multi(
             spark, files, ("doc_id", "n_chars")
         ).collect()
     )
     got_pdf = localman.footer_stats_rows(
         files, ("doc_id", "n_chars"), 7
     )
-    assert got_pdf is not None
     got = sorted(
         (p, fn, int(rg), c, int(n), mn, mx)
         for p, fn, rg, c, n, mn, mx in zip(
@@ -477,30 +478,24 @@ def test_footer_stats_rows_match_distributed(spark, staged):
     assert set(got_pdf["op"]) == {"add"}
 
 
-def test_partition_values_py_matches_spark(spark, tmp_path):
-    """The python partition_values twin must equal the Spark column
-    expression on Hive layouts, including percent-encoded values."""
-    from aws_seismic_data_pipeline_spark.sources.table.manifest import (
-        _partition_values_col,
-    )
-
-    paths = [
-        "/t/lang=en/part-0.parquet",
-        "/t/lang=fr/sub/part-1.parquet",  # no trailing-slash match on sub
-        "/t/other=1/part-2.parquet",
-        "/t/lang=a%3Db/part-3.parquet",
-        "/t/lang=sp+ace/part-4.parquet",
-        "/t/lang=bad%zz/part-5.parquet",
-        "/t/part-6.parquet",
-    ]
-    sdf = spark.createDataFrame(
-        [(p,) for p in paths], "path string"
-    ).withColumn("pv", _partition_values_col(("lang",)))
-    want = {r.path: dict(r.pv or {}) for r in sdf.collect()}
-    got = {
-        p: (localman.partition_values_py(p, ("lang",)) or {}) for p in paths
+def test_partition_values_py_matches_spark():
+    """partition_values on Hive layouts: the decoded value of each
+    ``col=value/`` segment, '+' kept, an invalid escape kept raw, no
+    entry where the segment is missing — the values Spark's
+    ``try_url_decode`` expression gave when it stamped them."""
+    want = {
+        "/t/lang=en/part-0.parquet": {"lang": "en"},
+        # no trailing-slash match on sub
+        "/t/lang=fr/sub/part-1.parquet": {"lang": "fr"},
+        "/t/other=1/part-2.parquet": {},
+        "/t/lang=a%3Db/part-3.parquet": {"lang": "a=b"},
+        "/t/lang=sp+ace/part-4.parquet": {"lang": "sp+ace"},
+        "/t/lang=bad%zz/part-5.parquet": {"lang": "bad%zz"},
+        "/t/part-6.parquet": {},
     }
+    got = {p: localman.partition_values_py(p, ("lang",)) for p in want}
     assert got == want
+    assert localman.partition_values_py("/t/lang=en/x.parquet", ()) is None
 
 
 def test_multi_and_rowgroup_survivors(spark, staged):
@@ -522,3 +517,158 @@ def test_multi_and_rowgroup_survivors(spark, staged):
     )
     want = sorted(r.path for r in survivors.collect())
     assert got == want
+
+
+def _commit_sequence(spark, template, root):
+    """Copy the table under ``template`` to ``root`` and run every
+    compound commit on it: build, append, MERGE, OPTIMIZE, data
+    compaction, equality delete and its compaction. Returns the final
+    manifest rows (paths relative to ``root``, the wall clocks of
+    commit_ts and remove rows blanked) and the number of manifest
+    files each commit added."""
+    import shutil
+
+    from aws_seismic_data_pipeline_spark.sources.table.deletes import (
+        compact_equality_deletes,
+        equality_delete,
+    )
+    from aws_seismic_data_pipeline_spark.sources.table.maintenance import (
+        commit_data_compaction,
+        merge_through_manifest,
+        optimize_zorder,
+    )
+
+    shutil.copytree(template, root)
+    data_dir, mpath = os.path.join(root, "data"), os.path.join(root, "m")
+    part = ("lang",)
+    cols = ("doc_id", "n_chars")
+    files = sorted(glob.glob(os.path.join(data_dir, "lang=*", "*.parquet")))
+    write_stats_manifest(spark, files, mpath, cols, partition_by=part)
+
+    def manifest_files():
+        return len(glob.glob(os.path.join(_mdd(mpath), "*.parquet")))
+
+    added = {}
+
+    def commit(name, verb):
+        before = manifest_files()
+        verb()
+        added[name] = manifest_files() - before
+
+    docs = spark.read.parquet(data_dir)
+    commit(
+        "append",
+        lambda: append_stats_manifest(
+            spark,
+            [os.path.join(data_dir, "lang=en", "appended-00000.parquet")],
+            mpath,
+            cols,
+            partition_by=part,
+        ),
+    )
+    delta = docs.filter(F.col("doc_id") % 5 == 0).withColumn(
+        "n_chars", F.col("n_chars") + 1
+    )
+    inserts = docs.filter(F.col("doc_id") % 50 == 1).withColumn(
+        "doc_id", F.col("doc_id") + F.lit(2000000)
+    )
+    commit(
+        "merge",
+        lambda: merge_through_manifest(
+            spark,
+            mpath,
+            delta.unionByName(inserts),
+            "doc_id",
+            ["n_chars"],
+            partition_by=part,
+        ),
+    )
+    commit(
+        "optimize",
+        lambda: optimize_zorder(
+            spark, mpath, "doc_id", "n_chars", n_files=2, partition_by=part
+        ),
+    )
+    vis = localman.visible(localman.load(mpath), None)
+    en = sorted(p for p in vis["path"].unique() if "/lang=en/" in p)
+    commit(
+        "compaction",
+        lambda: commit_data_compaction(spark, mpath, en, partition_by=part),
+    )
+    commit("delete", lambda: equality_delete(spark, mpath, "doc_id", [15, 40]))
+    commit(
+        "delete_compaction",
+        lambda: compact_equality_deletes(spark, mpath, "doc_id"),
+    )
+
+    import re
+
+    # OPTIMIZE keeps Spark's part-file names, which carry a random uuid
+    uuid = re.compile(r"-[0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12}")
+
+    def norm(v):
+        if isinstance(v, dict):
+            return tuple(sorted(v.items()))
+        if v is None or (isinstance(v, float) and v != v):
+            return None
+        if isinstance(v, str):
+            return uuid.sub("", v.replace(root, "<root>"))
+        return float(v)
+
+    man = localman.load(mpath)
+    rows = []
+    for rec in man[list(localman._COLS)].to_dict("records"):
+        if rec["op"] in ("commit_ts", "remove"):
+            rec["min_val"] = rec["max_val"] = None
+        rows.append(tuple(norm(rec[c]) for c in localman._COLS))
+    return sorted(rows, key=repr), added
+
+
+def test_commits_agree_with_commit_gate_closed(spark, tmp_path, monkeypatch):
+    """Closing the commit gate (``footers._LOCAL_COMMIT_MAX`` = 0, the
+    one binding every footer read and commit consults) sends each
+    footer read to the distributed fan-out — the path a commit over
+    more than 64 files takes. Every compound commit must still land
+    the gate-open manifest rows, as exactly ONE manifest file."""
+    from aws_seismic_data_pipeline_spark.sources import footers
+
+    template = str(tmp_path / "template")
+    data_dir = os.path.join(template, "data")
+    docs = load_table(spark, SF_DIR, "documents").select(
+        "doc_id", "lang", "n_chars"
+    )
+    docs.repartition(2).write.partitionBy("lang").parquet(data_dir)
+    extra = docs.filter(F.col("doc_id") % 13 == 0).select(
+        (F.col("doc_id") + F.lit(1000000)).alias("doc_id"), "n_chars"
+    )
+    stage = os.path.join(template, "stage")
+    extra.coalesce(1).write.parquet(stage)
+    os.replace(
+        sorted(glob.glob(os.path.join(stage, "part-*.parquet")))[0],
+        os.path.join(data_dir, "lang=en", "appended-00000.parquet"),
+    )
+    # range exchanges sample their bounds with a per-RDD seed; sampling
+    # every row keeps the two runs' rewritten files identical
+    key = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "1000000")
+    try:
+        want, want_added = _commit_sequence(
+            spark, template, str(tmp_path / "open")
+        )
+        monkeypatch.setattr(footers, "_LOCAL_COMMIT_MAX", 0)
+        got, got_added = _commit_sequence(
+            spark, template, str(tmp_path / "closed")
+        )
+    finally:
+        spark.conf.set(key, prior)
+    assert {op for *_, op, _pv in want} >= {"add", "remove", "delete_eq"}
+    assert got == want
+    assert want_added == got_added == {
+        "append": 1,
+        "merge": 1,
+        "optimize": 1,
+        "compaction": 1,
+        "delete": 1,
+        "delete_compaction": 1,
+    }

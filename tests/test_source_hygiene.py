@@ -284,8 +284,8 @@ def test_table_data_reads_pin_their_schema():
 
 #: (module, function) pairs allowed to read the stats manifest through
 #: Spark (``spark.read.parquet(_mdd(...))``). Each is a FILE-SCALE
-#: question's Spark twin above the localman gate, a Spark write
-#: fallback's schema read, or a distributed manifest rewrite. A
+#: question's Spark twin above the localman gate, or a distributed
+#: manifest rewrite. A
 #: commit-scale question (expire floor, commit clocks, live delete
 #: keys, schema history, constraints, incremental window, CDF
 #: inventory) reads through ``localman.commit_rows`` instead, so a new
@@ -298,7 +298,6 @@ SPARK_MANIFEST_READS = {
     ("sources/table/maintenance.py", "_union_tracked_paths"),
     ("sources/table/maintenance.py", "vacuum_orphans"),
     ("sources/table/maintenance.py", "commit_data_compaction"),
-    ("sources/table/maintenance.py", "clone_manifest"),
     ("sources/table/maintenance.py", "rollback_manifest"),
     ("sources/table/maintenance.py", "merge_through_manifest"),
     ("sources/table/maintenance.py", "merge_evolve_through_manifest"),
@@ -306,8 +305,6 @@ SPARK_MANIFEST_READS = {
     ("sources/table/maintenance.py", "_optimize_curve"),
     ("sources/table/maintenance.py", "_optimize_curve_incremental"),
     ("sources/table/maintenance.py", "optimize_table"),
-    ("sources/table/manifest.py", "commit_manifest_rows"),
-    ("sources/table/manifest.py", "_tombstone_rows"),
     ("sources/table/manifest.py", "manifest_row_count"),
     ("sources/table/manifest.py", "manifest_pruned_scan"),
     ("sources/table/manifest.py", "manifest_pruned_scan_multi"),
@@ -336,4 +333,73 @@ def test_spark_manifest_reads_are_allowlisted():
     assert SPARK_MANIFEST_READS <= found, (
         "allowlisted Spark manifest read no longer exists — drop it: "
         f"{sorted(SPARK_MANIFEST_READS - found)}"
+    )
+
+
+def _spark_manifest_writes(tree):
+    """(enclosing function) of every ``<...>.write...parquet(target)``
+    call whose target is a manifest: ``_mdd(...)``, a name containing
+    "manifest", or a local name assigned from an expression that
+    mentions either."""
+
+    def mentions_manifest(node):
+        return any(
+            isinstance(n, ast.Name) and ("manifest" in n.id or n.id == "_mdd")
+            for n in ast.walk(node)
+        )
+
+    out = []
+    for fn in ast.walk(tree):
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        assigned = {}
+        for node in ast.walk(fn):
+            if isinstance(node, ast.Assign):
+                for t in node.targets:
+                    if isinstance(t, ast.Name):
+                        assigned.setdefault(t.id, []).append(node.value)
+        for node in ast.walk(fn):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "parquet"
+                and node.args
+                and "write" in ast.unparse(node.func.value)
+            ):
+                continue
+            target = node.args[0]
+            sources = [target]
+            if isinstance(target, ast.Name):
+                sources += assigned.get(target.id, [])
+            if any(mentions_manifest(src) for src in sources):
+                out.append(fn.name)
+    return out
+
+
+#: (module, function) pairs allowed to write a stats manifest through
+#: Spark. Every other manifest commit is composed as pandas rows and
+#: published as one file by ``localman.write_rows``. Only the writers
+#: whose rows scale with the TABLE stay distributed: the bulk build
+#: over more than ``footers._LOCAL_COMMIT_MAX`` files and expire's
+#: rewrite above the localman gate.
+SPARK_MANIFEST_WRITES = {
+    ("sources/table/manifest.py", "write_stats_manifest"),
+    ("sources/table/maintenance.py", "expire_manifest_history"),
+}
+
+
+def test_spark_manifest_writes_are_allowlisted():
+    found = set()
+    for p in _py_files():
+        for func in _spark_manifest_writes(ast.parse(open(p).read())):
+            found.add((_rel(p), func))
+    assert found <= SPARK_MANIFEST_WRITES, (
+        "new Spark write into a manifest — commit pandas rows through "
+        "localman.write_rows (manifest.commit_manifest_rows), or audit "
+        "the site and extend SPARK_MANIFEST_WRITES: "
+        f"{sorted(found - SPARK_MANIFEST_WRITES)}"
+    )
+    assert SPARK_MANIFEST_WRITES <= found, (
+        "allowlisted Spark manifest write no longer exists — drop it: "
+        f"{sorted(SPARK_MANIFEST_WRITES - found)}"
     )
