@@ -133,13 +133,15 @@ def spread_dense(
 
     Vectorized kernels (BLAS matmul, argmax) chew through megabytes per
     millisecond; the per-task cost is the Python worker fork + Arrow
-    round trip (~100 ms). Spreading a sub-MB embedding table across all
-    cores therefore pays 32 forks per pass to parallelize microseconds
-    of math — measured 6.3 s → 2.6 s on the 5-pass IVF build at sf0.1
-    by sizing tasks at ~256 KB of parquet instead. Inputs big enough to
-    want ≥ cores tasks keep the scan layout (``spread`` gate): at real
-    scale the scan yields thousands of splits and this function never
-    reduces them."""
+    round trip (a warm one-task mapInPandas job over 500 rows takes
+    0.18-0.30 s with workers forked from the preloaded daemon, a plain
+    SQL job 0.12-0.18 s, at local[2]). Spreading a sub-MB embedding
+    table across all cores therefore pays 32 forks per pass to
+    parallelize microseconds of math — measured 6.3 s → 2.6 s on the
+    5-pass IVF build at sf0.1 by sizing tasks at ~256 KB of parquet
+    instead. Inputs big enough to want ≥ cores tasks keep the scan
+    layout (``spread`` gate): at real scale the scan yields thousands
+    of splits and this function never reduces them."""
     want = spark.sparkContext.defaultParallelism
     try:
         size = os.path.getsize(os.path.join(sf_dir, f"{table}.parquet"))

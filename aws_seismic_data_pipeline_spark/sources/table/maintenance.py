@@ -1637,82 +1637,80 @@ def plan_merge_three_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _expire_rewrite_local(
     manifest_dir: str, lman, e: int, marker_fixed: dict, tmp: str
-) -> int | None:
+) -> int:
     """Driver-side twin of the expire rewrite: compute the kept rows in
     pandas (same visibility / retire-ceiling / declared-schema rules as
     the Spark plan below) and land them + the expire marker as one
-    pyarrow parquet file in ``tmp``. Returns rows_after, or None on any
-    failure (caller runs the Spark rewrite)."""
-    try:
-        import pandas as _pd
-        import pyarrow as _pa
-        import pyarrow.parquet as _pq
+    pyarrow parquet file in ``tmp``. Returns rows_after. A pyarrow
+    failure raises: the Spark rewrite is the path for manifests above
+    ``localman._LOCAL_MAN_MAX``, not a retry for a failed local one."""
+    import pandas as _pd
+    import pyarrow as _pa
+    import pyarrow.parquet as _pq
 
-        old = lman[lman["snapshot_id"] < e]
-        removed_below = set(old.loc[old["op"] == "remove", "path"])
-        adds = old[old["op"] == "add"]
-        keep_old_adds = (
-            adds[~adds["path"].isin(removed_below)] if removed_below else adds
-        )
-        ceilings = (
-            old[old["op"] == "delete_retire"]
-            .groupby("column_name")["min_val"]
-            .max()
-            .to_dict()
-        )
-        dels = old[old["op"] == "delete_eq"]
+    old = lman[lman["snapshot_id"] < e]
+    removed_below = set(old.loc[old["op"] == "remove", "path"])
+    adds = old[old["op"] == "add"]
+    keep_old_adds = (
+        adds[~adds["path"].isin(removed_below)] if removed_below else adds
+    )
+    ceilings = (
+        old[old["op"] == "delete_retire"]
+        .groupby("column_name")["min_val"]
+        .max()
+        .to_dict()
+    )
+    dels = old[old["op"] == "delete_eq"]
 
-        def _live(row) -> bool:
-            c = ceilings.get(row["column_name"])
-            return c is None or _pd.isna(c) or row["snapshot_id"] > c
+    def _live(row) -> bool:
+        c = ceilings.get(row["column_name"])
+        return c is None or _pd.isna(c) or row["snapshot_id"] > c
 
-        live_old_deletes = (
-            dels[dels.apply(_live, axis=1)] if len(dels) else dels
-        )
-        keep = localman.concat_rows(
-            [
-                lman[lman["snapshot_id"] >= e],
-                keep_old_adds,
-                live_old_deletes,
-                old[
-                    old["op"].isin(
-                        (
-                            "delete_retire",
-                            "expire",
-                            "schema_add",
-                            "schema_rename",
-                            "schema_drop",
-                            "constraint_add",
-                            "constraint_drop",
-                        )
+    live_old_deletes = (
+        dels[dels.apply(_live, axis=1)] if len(dels) else dels
+    )
+    keep = localman.concat_rows(
+        [
+            lman[lman["snapshot_id"] >= e],
+            keep_old_adds,
+            live_old_deletes,
+            old[
+                old["op"].isin(
+                    (
+                        "delete_retire",
+                        "expire",
+                        "schema_add",
+                        "schema_rename",
+                        "schema_drop",
+                        "constraint_add",
+                        "constraint_drop",
                     )
-                ],
-                _pd.DataFrame([marker_fixed]),
-            ]
-        )
-        schema = localman._existing_schema(manifest_dir)
-        if schema is None:
-            return None
-        cols = {}
-        for field in schema:
-            if field.name in keep.columns:
-                cols[field.name] = keep[field.name]
-            else:
-                cols[field.name] = _pd.Series(
-                    [None] * len(keep), dtype="object"
                 )
-        tbl = _pa.Table.from_pandas(
-            _pd.DataFrame(cols), schema=schema, preserve_index=False
-        )
-        os.makedirs(tmp, exist_ok=True)
-        import uuid as _uuid
+            ],
+            _pd.DataFrame([marker_fixed]),
+        ]
+    )
+    schema = localman._existing_schema(manifest_dir)
+    if schema is None:
+        raise RuntimeError(f"no readable manifest file under {manifest_dir}")
+    cols = {}
+    for field in schema:
+        if field.name in keep.columns:
+            cols[field.name] = keep[field.name]
+        else:
+            cols[field.name] = _pd.Series(
+                [None] * len(keep), dtype="object"
+            )
+    tbl = _pa.Table.from_pandas(
+        _pd.DataFrame(cols), schema=schema, preserve_index=False
+    )
+    os.makedirs(tmp, exist_ok=True)
+    import uuid as _uuid
 
-        _pq.write_table(
-            tbl, os.path.join(tmp, f"local-{_uuid.uuid4().hex}.parquet")
-        )
-        return len(keep)
-    except Exception:
-        return None
+    _pq.write_table(
+        tbl, os.path.join(tmp, f"local-{_uuid.uuid4().hex}.parquet")
+    )
+    return len(keep)
 
 
 def expire_manifest_history(
@@ -1754,9 +1752,9 @@ def expire_manifest_history(
     recover_interrupted_expire(manifest_dir)
     e = int(expire_below)
     # the whole rewrite is metadata-scale: resolved DRIVER-SIDE via
-    # localman when possible (Spark read+rewrite as fallback)
+    # localman; the Spark read+rewrite runs only for a manifest above
+    # localman._LOCAL_MAN_MAX rows
     lman = localman.load(manifest_dir)
-    man = None
     if lman is not None:
         cur_max = (
             int(lman["snapshot_id"].max()) if len(lman) else None
@@ -1797,14 +1795,11 @@ def expire_manifest_history(
         }
         tmp = manifest_dir + ".expiring"
         _shutil.rmtree(tmp, ignore_errors=True)
-        rows_after = None
         if lman is not None:
             rows_after = _expire_rewrite_local(
                 manifest_dir, lman, e, marker_fixed, tmp
             )
-        if rows_after is None:
-            if man is None:
-                man = spark.read.parquet(_mdd(manifest_dir))
+        else:
             old = man.filter(F.col("snapshot_id") < e)
             removed_below = (
                 old.filter(F.col("op") == "remove").select("path").distinct()

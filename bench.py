@@ -635,8 +635,9 @@ def _bench_manifest_lifecycle(spark, sf_dir: str) -> dict[str, float]:
 
 #: Status-store counters the regression gate compares, per slot. They
 #: count plan work, not time, so they repeat exactly on any host with
-#: the same core count.
-GATED = ("jobs", "stages")
+#: the same core count. ``python_tasks`` counts the tasks of stages
+#: with a Python operator: one Python-worker fork each.
+GATED = ("jobs", "stages", "python_tasks")
 
 
 def _emit(result: dict, name: str = "BENCH.json") -> None:
@@ -684,9 +685,10 @@ def previous_counts(history: list[dict], sf, cpus: int) -> dict | None:
 
 
 def count_regressions(prior: dict, counts: dict) -> dict:
-    """Slots whose job or stage count rose against ``prior``, as
+    """Slots whose ``GATED`` count rose against ``prior``, as
     ``{slot: {counter: [before, after]}}``. Slots without a prior count
-    are new and pass."""
+    are new and pass; a counter the prior entry did not record is not
+    compared."""
     out = {}
     for name, now in counts.items():
         before = prior.get(name, {})
@@ -719,9 +721,10 @@ def main() -> None:
     # codegen/JIT and Python-worker fork storms that are hostage to
     # co-tenant machine load; the minimum reflects the plan's
     # steady-state cost, which is what scales to a cluster. Each trial
-    # also counts the Spark jobs and stages it ran (status-store deltas,
-    # read outside the timed region); the per-slot minimum is the
-    # regression signal, since it does not move with host load.
+    # also counts the Spark jobs, stages and Python tasks it ran
+    # (status-store deltas, read outside the timed region); the
+    # per-slot minimum is the regression signal, since it does not
+    # move with host load.
     timings: dict[str, float] = {}
     counts: dict[str, dict[str, int]] = {}
 
@@ -777,7 +780,7 @@ def main() -> None:
         _emit(result, "BENCH_smoke.json")
         spark.stop()
         return
-    # Regression gate: a slot whose job or stage count rose against the
+    # Regression gate: a slot whose GATED count rose against the
     # previous counted run at the same sf and core count is listed
     # under "regressions"; tests/test_bench_history.py fails CI on the
     # same comparison over the recorded history.

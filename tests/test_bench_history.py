@@ -1,11 +1,12 @@
 """Bench regression gate on exact work counters.
 
-bench.py records, per slot, the minimum number of Spark jobs and stages
-over its trials. Those counts come from the status store, not a clock,
-so two runs of the same code at the same sf and core count repeat them
-exactly, whatever else the host is doing. The gate fails when the
-newest counted entry in bench_history.jsonl ran more jobs or stages on
-any slot than the previous counted entry at the same sf and core count.
+bench.py records, per slot, the minimum number of Spark jobs, stages
+and Python-worker tasks over its trials. Those counts come from the
+status store, not a clock, so two runs of the same code at the same sf
+and core count repeat them exactly, whatever else the host is doing.
+The gate fails when the newest counted entry in bench_history.jsonl
+ran more of any of them on any slot than the previous counted entry at
+the same sf and core count.
 A deliberate increase is accepted by recording a fresh entry after it.
 Entries written before counting began carry no counts and are skipped.
 """
@@ -45,18 +46,24 @@ def test_latest_bench_within_regression_budget():
     bad = _latest_regressions(HISTORY)
     if bad is None:
         pytest.skip("fewer than two counted bench runs at one sf and core count")
-    assert not bad, f"Spark job/stage counts rose: {bad}"
+    assert not bad, f"Spark job/stage/Python-task counts rose: {bad}"
 
 
 def test_planted_extra_shuffle_fails_gate(tmp_path):
     """One extra shuffle in one slot (one more job, one more stage)
-    fails the gate; identical counts pass; entries without counts, or
-    at another core count, are not compared against."""
+    fails the gate, and so does one extra Python task; identical counts
+    pass; entries without counts, or at another core count, are not
+    compared against."""
     counts = {
-        "join_inner_equi": {"jobs": 3, "stages": 4},
-        "window_rank": {"jobs": 2, "stages": 3},
+        "join_inner_equi": {"jobs": 3, "stages": 4, "python_tasks": 0},
+        "window_rank": {"jobs": 2, "stages": 3, "python_tasks": 2},
     }
-    planted = dict(counts, window_rank={"jobs": 3, "stages": 4})
+    planted = dict(
+        counts, window_rank={"jobs": 3, "stages": 4, "python_tasks": 2}
+    )
+    forked = dict(
+        counts, join_inner_equi={"jobs": 3, "stages": 4, "python_tasks": 1}
+    )
     old = {"ts": 1.0, "sf": 0.1, "queries": {"window_rank": 1.0}}
 
     def gate(*entries):
@@ -70,6 +77,9 @@ def test_planted_extra_shuffle_fails_gate(tmp_path):
     assert gate(old, entry(4, counts), entry(4, counts)) == {}
     assert gate(old, entry(4, counts), entry(4, planted)) == {
         "window_rank": {"jobs": [2, 3], "stages": [3, 4]}
+    }
+    assert gate(entry(4, counts), entry(4, forked)) == {
+        "join_inner_equi": {"python_tasks": [0, 1]}
     }
     # a fresh entry after a deliberate increase is the new baseline
     assert gate(entry(4, counts), entry(4, planted), entry(4, planted)) == {}

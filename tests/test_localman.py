@@ -352,6 +352,83 @@ def test_expire_floor_raises_with_gate_closed(
         scan(2)  # at the floor: readable
 
 
+def test_expire_local_rewrite_failure_raises_and_releases_lease(
+    spark, staged, tmp_path, monkeypatch
+):
+    """Below the localman gate a failed pyarrow rewrite raises instead
+    of silently rerunning the expire in Spark; the manifest is left as
+    it was and the swap-guard lease is released, so the next commit
+    lands."""
+    import pyarrow.parquet as pq
+
+    from aws_seismic_data_pipeline_spark.sources.table.maintenance import (
+        expire_manifest_history,
+    )
+    from aws_seismic_data_pipeline_spark.sources.table.manifest import (
+        remove_from_manifest,
+    )
+
+    data_dir, _m = staged
+    mpath = str(tmp_path / "manifest")
+    files = sorted(glob.glob(os.path.join(data_dir, "*.parquet")))
+    write_stats_manifest(spark, files, mpath, ("doc_id",))
+    append_stats_manifest(spark, files[:1], mpath, ("doc_id",))
+    remove_from_manifest(spark, mpath, files[1:2])
+
+    def rows():
+        return sorted(map(repr, localman.load(mpath).to_dict("records")))
+
+    before = rows()
+
+    def planted(*_a, **_k):
+        raise OSError("planted pyarrow write failure")
+
+    with monkeypatch.context() as m:
+        m.setattr(pq, "write_table", planted)
+        with pytest.raises(OSError, match="planted"):
+            expire_manifest_history(spark, mpath, 2)
+    assert rows() == before
+    append_stats_manifest(spark, files[2:3], mpath, ("doc_id",))
+    assert int(localman.load(mpath)["snapshot_id"].max()) == 3
+
+
+def test_expire_agrees_with_gate_closed(spark, staged, tmp_path, monkeypatch):
+    """Above the localman gate the expire runs as a Spark rewrite, the
+    only path a manifest that large takes; it must keep exactly the
+    rows the driver-side rewrite keeps."""
+    from aws_seismic_data_pipeline_spark.sources.table.maintenance import (
+        expire_manifest_history,
+    )
+    from aws_seismic_data_pipeline_spark.sources.table.manifest import (
+        remove_from_manifest,
+    )
+
+    data_dir, _m = staged
+    files = sorted(glob.glob(os.path.join(data_dir, "*.parquet")))
+
+    def expired(name, gate):
+        mpath = str(tmp_path / name)
+        write_stats_manifest(spark, files, mpath, ("doc_id",))
+        append_stats_manifest(spark, files[:1], mpath, ("doc_id",))
+        remove_from_manifest(spark, mpath, files[1:2])
+        append_stats_manifest(spark, files[2:3], mpath, ("doc_id",))
+        with monkeypatch.context() as m:
+            m.setattr(localman, "_LOCAL_MAN_MAX", gate)
+            counts = expire_manifest_history(spark, mpath, 3)
+        out = []
+        for rec in localman.load(mpath)[list(localman._COLS)].to_dict(
+            "records"
+        ):
+            if rec["op"] in ("commit_ts", "remove"):  # wall clocks
+                rec["min_val"] = rec["max_val"] = None
+            out.append(repr(rec))
+        return counts, sorted(out)
+
+    want = expired("open", localman._LOCAL_MAN_MAX)
+    assert expired("closed", 0) == want
+    assert want[0][1] < want[0][0]
+
+
 def test_next_snapshot_absent_empty_and_corrupt(spark, staged, tmp_path):
     """An absent or still-empty manifest starts at snapshot 0; an
     unreadable manifest file raises instead — claiming 0 there would
