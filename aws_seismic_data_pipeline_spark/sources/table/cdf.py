@@ -48,9 +48,6 @@ from aws_seismic_data_pipeline_spark.sources.footers import read_data_files
 from aws_seismic_data_pipeline_spark.sources.table.deletes import (
     subtract_live_deletes,
 )
-from aws_seismic_data_pipeline_spark.sources.table.logstore import (
-    manifest_data_dir as _mdd,
-)
 from aws_seismic_data_pipeline_spark.sources.table import localman
 
 #: change-type tags, Delta CDF vocabulary
@@ -294,46 +291,20 @@ def _delete_preimages(
     from the table, or outside every file's stats range) produces
     zero feed rows, exactly Delta's CDF behavior; raising here would
     permanently wedge every window covering the commit."""
-    from aws_seismic_data_pipeline_spark.sources.table.manifest import (
-        _visible_stats,
-    )
-
     keys_df = spark.createDataFrame(
         [(float(v),) for v in del_keys], "_k double"
     )
-    if lman is not None:
-        # candidacy resolved DRIVER-SIDE: delete keys and per-file
-        # stats are both metadata-scale (see localman)
-        candidates = localman.candidate_paths_for_keys(
-            localman.visible(lman, snap - 1), key, del_keys
-        )
-    else:
-        per_file = (
-            _visible_stats(spark.read.parquet(_mdd(manifest_dir)), snap - 1)
-            .filter(F.col("column_name") == key)
-            .groupBy("path")
-            .agg(
-                F.min("min_val").alias("fmin"),
-                F.max("max_val").alias("fmax"),
-                F.sum(
-                    F.when(F.col("min_val").isNull(), 1).otherwise(0)
-                ).alias("n_statless"),
+
+    def fn(m):
+        return localman.path_frame(
+            localman.candidate_paths_for_keys(
+                localman.visible(m, snap - 1), key, del_keys
             )
         )
-        candidates = sorted(
-            r.path
-            for r in keys_df.join(
-                F.broadcast(per_file),
-                (F.col("n_statless") > 0)
-                | (
-                    (F.col("_k") >= F.col("fmin"))
-                    & (F.col("_k") <= F.col("fmax"))
-                ),
-            )
-            .select("path")
-            .distinct()
-            .collect()
-        )
+
+    candidates = sorted(
+        localman.answer(spark, manifest_dir, fn, "path string", lman)["path"]
+    )
     if not candidates:
         return None
     rows = read_data_files(spark, candidates, merge_schema=True)

@@ -16,15 +16,11 @@ from aws_seismic_data_pipeline_spark.catalog import load_table, prepare
 from aws_seismic_data_pipeline_spark.registry import register
 from aws_seismic_data_pipeline_spark.sources.footers import read_data_files
 from aws_seismic_data_pipeline_spark.sources.table import localman
-from aws_seismic_data_pipeline_spark.sources.table.logstore import (
-    manifest_data_dir as _mdd,
-)
 from aws_seismic_data_pipeline_spark.sources.table.commit import (
     _claimed_next_snapshot,
     verify_claim,
 )
 from aws_seismic_data_pipeline_spark.sources.table.manifest import (
-    _visible_stats,
     commit_files,
     manifest_pruned_scan,
     remove_from_manifest,
@@ -109,9 +105,9 @@ def equality_delete(
     per deleted key (op='delete_eq', the key carried in min_val==
     max_val), stamped at the next snapshot. Cost is |values| rows of
     metadata however many data files the keys' rows touch — the point
-    of the shape. ``_visible_stats`` ignores non-'add' ops, so delete
-    records never perturb stats pruning; only ``read_with_deletes``
-    consumes them. Returns the snapshot id written."""
+    of the shape. Visibility (``localman.visible``) ignores non-'add'
+    ops, so delete records never perturb stats pruning; only
+    ``read_with_deletes`` consumes them. Returns the snapshot id written."""
     import pandas as _pd
 
     if not values:
@@ -278,9 +274,8 @@ def compact_equality_deletes(
     import glob as _glob
     import shutil as _shutil
 
-    # the live records and their ceiling are commit-scale (localman);
-    # the tracked columns and candidate files are file-scale: driver-side
-    # under the localman gate, a Spark metadata pass above it
+    # the live records and their ceiling are commit-scale; the tracked
+    # columns and candidate files are file-scale (localman.answer)
     lman = localman.load(manifest_dir)
     live_pd = localman.live_delete_records(manifest_dir, column, None, lman)
     n_live = len(live_pd)
@@ -292,46 +287,22 @@ def compact_equality_deletes(
     ceiling = int(live_pd["snapshot_id"].max())
     keys = sorted(float(k) for k in live_pd["min_val"].dropna().unique())
     dkeys = spark.createDataFrame([(k,) for k in keys], "_k double")
-    if lman is not None:
-        vis_pd = localman.visible(lman, None)
-        tracked = tuple(sorted(vis_pd["column_name"].unique()))
-        candidates = localman.candidate_paths_for_keys(vis_pd, column, keys)
-    else:
-        visible = _visible_stats(spark.read.parquet(_mdd(manifest_dir)), None)
-        # rewritten files must keep the TABLE's full tracked-stats column
-        # set, not just the delete column — appending (column,) alone would
-        # leave the rewrites invisible to scans probing any other tracked
-        # column (manifest_pruned_scan lists a file only via its stats rows)
-        tracked = tuple(
-            sorted(
-                r.column_name
-                for r in visible.select("column_name").distinct().collect()
+    # rewritten files must keep the TABLE's full tracked-stats column
+    # set, not just the delete column — appending (column,) alone would
+    # leave the rewrites invisible to scans probing any other tracked
+    # column (manifest_pruned_scan lists a file only via its stats rows)
+    tracked = tuple(sorted(localman.column_bounds(spark, manifest_dir, lman)))
+
+    def fn(m):
+        return localman.path_frame(
+            localman.candidate_paths_for_keys(
+                localman.visible(m, None), column, keys
             )
         )
-        per_file = (
-            visible.filter(F.col("column_name") == column)
-            .groupBy("path")
-            .agg(
-                F.min("min_val").alias("fmin"),
-                F.max("max_val").alias("fmax"),
-                F.sum(
-                    F.when(F.col("min_val").isNull(), 1).otherwise(0)
-                ).alias("n_statless"),
-            )
-        )
-        # same broadcast orientation as merge_through_manifest: stats side
-        # (metadata-scale) broadcasts, the key set stays distributed
-        candidates = sorted(
-            r.path
-            for r in dkeys.join(
-                F.broadcast(per_file),
-                (F.col("n_statless") > 0)
-                | ((F.col("_k") >= F.col("fmin")) & (F.col("_k") <= F.col("fmax"))),
-            )
-            .select("path")
-            .distinct()
-            .collect()
-        )
+
+    candidates = sorted(
+        localman.answer(spark, manifest_dir, fn, "path string", lman)["path"]
+    )
     snap = _claimed_next_snapshot(spark, manifest_dir)
     new_paths: list[str] = []
     if candidates:

@@ -14,9 +14,6 @@ from pyspark.sql import functions as F
 
 from aws_seismic_data_pipeline_spark.catalog import load_table, prepare
 from aws_seismic_data_pipeline_spark.registry import register
-from aws_seismic_data_pipeline_spark.sources.table.logstore import (
-    manifest_data_dir as _mdd,
-)
 from aws_seismic_data_pipeline_spark.sources.table.commit import (
     _claimed_next_snapshot,
     verify_claim,
@@ -123,15 +120,13 @@ def _effective_columns(
     newest 64 files, then keeps walking OLDER footers only while a
     name in ``ensure`` is still unresolved — a physical column that
     lives only in never-rewritten pre-evolution files must not be
-    falsely reported missing on a wide/old table. The file order comes
-    from the localman frame ``lman``, or from a Spark sort over the
-    manifest above the localman gate (``lman`` None). Used only to
-    validate rename/drop targets loudly."""
+    falsely reported missing on a wide/old table. The file order
+    (newest snapshot first, then path) comes from
+    :func:`localman.answer`: each partition returns its newest 64
+    visible files, and only when those leave a name unresolved does a
+    second pass return every visible file. Used only to validate
+    rename/drop targets loudly."""
     import pyarrow.parquet as _pq
-
-    from aws_seismic_data_pipeline_spark.sources.table.manifest import (
-        _visible_stats,
-    )
 
     ops = localman.schema_ops(manifest_dir, None, lman)
 
@@ -148,34 +143,35 @@ def _effective_columns(
                 cols.discard(name)
         return cols
 
-    if lman is not None:
-        ordered = (
-            localman.visible(lman, None)[["path", "snapshot_id"]]
-            .drop_duplicates()
-            .sort_values(["snapshot_id", "path"], ascending=[False, True])[
-                "path"
-            ]
-        )
-    else:
-        ordered = (
-            r.path
-            for r in _visible_stats(
-                spark.read.parquet(_mdd(manifest_dir)), None
+    def newest(limit):
+        def fn(m):
+            v = localman.visible(m, None)[["path", "snapshot_id"]]
+            v = v.drop_duplicates().sort_values(
+                ["snapshot_id", "path"], ascending=[False, True]
             )
-            .select("path", "snapshot_id")
-            .distinct()
-            .orderBy(F.col("snapshot_id").desc(), "path")
-            .toLocalIterator()
-        )
+            return v if limit is None else v.head(limit)
+
+        out = localman.answer(
+            spark, manifest_dir, fn, "path string, snapshot_id int", lman
+        ).sort_values(["snapshot_id", "path"], ascending=[False, True])
+        return list(out["path"] if limit is None else out["path"][:limit])
+
     phys: set[str] = set()
     want = set(ensure)
-    for i, path in enumerate(ordered):
-        try:
-            phys.update(_pq.read_schema(path).names)
-        except Exception:
-            continue
-        if i + 1 >= 64 and (not want or want <= _apply(phys)):
-            break
+
+    def read(paths, stop: bool) -> None:
+        for path in paths:
+            try:
+                phys.update(_pq.read_schema(path).names)
+            except Exception:
+                continue
+            if stop and want <= _apply(phys):
+                return
+
+    sample = newest(64)
+    read(sample, stop=False)
+    if len(sample) == 64 and not want <= _apply(phys):
+        read(newest(None)[64:], stop=True)
     return _apply(phys)
 
 

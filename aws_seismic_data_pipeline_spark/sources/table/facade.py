@@ -24,9 +24,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from aws_seismic_data_pipeline_spark.sources.footers import read_data_files
-from aws_seismic_data_pipeline_spark.sources.table.logstore import (
-    manifest_data_dir as _mdd,
-)
 
 from aws_seismic_data_pipeline_spark.sources.table import _verbs as R
 from aws_seismic_data_pipeline_spark.sources.table import localman
@@ -542,17 +539,6 @@ class GovernedTable:
         return R.describe_history(self.spark, self.manifest_dir)
 
     def visible_files(self, as_of: int | None = None) -> list[str]:
-        """The file list a scan at ``as_of`` would consider —
-        driver-side via localman (Spark fallback)."""
-        lman = localman.load(self.manifest_dir)
-        if lman is not None:
-            return sorted(localman.visible(lman, as_of)["path"].unique())
-        return sorted(
-            r.path
-            for r in R._visible_stats(
-                self.spark.read.parquet(_mdd(self.manifest_dir)), as_of
-            )
-            .select("path")
-            .distinct()
-            .collect()
-        )
+        """The file list a scan at ``as_of`` would consider
+        (:func:`localman.visible_paths`)."""
+        return localman.visible_paths(self.spark, self.manifest_dir, as_of)

@@ -20,10 +20,16 @@ that touch DATA. The questions come in two sizes:
   pyarrow cannot read RAISES (every commit already depends on the
   manifest being locally addressable — the logstore's mkdir/rename and
   ``commit._next_snapshot``).
-- FILE-SCALE questions (visibility, pruning candidacy, row counts)
-  run over :func:`load`'s whole-manifest frame, which returns ``None``
-  above ``_LOCAL_MAN_MAX`` rows; the caller then runs its distributed
-  Spark path. A manifest pyarrow cannot read raises here too.
+- FILE-SCALE questions (visibility, pruning candidacy, row counts,
+  per-file stats, history) each have ONE pandas function of manifest
+  rows, and :func:`answer` decides where it runs: on :func:`load`'s
+  whole-manifest frame (or the verb's own) up to ``_LOCAL_MAN_MAX``
+  rows, otherwise in Spark tasks that each hold every row of their
+  paths (``repartition("path")`` + ``mapInPandas``). A path's add and
+  remove rows always meet in one task, so a per-path answer is the
+  same in any partition; aggregate questions return per-partition
+  partials that the caller combines, on the driver as well (one
+  partial there). A manifest pyarrow cannot read raises here too.
 
 Nothing is cached: each call re-reads the manifest directory, exactly
 like the ``spark.read.parquet`` call it replaces (concurrent-writer
@@ -93,8 +99,8 @@ _COLS = (
 #: materializes the WHOLE manifest on the driver, and the manifest is
 #: rows = files × row-groups × stat-columns — fine at the ~10^5 rows a
 #: 100 TB table's metadata occupies, catastrophic at 10^7-file
-#: pathologies. Above the bound every file-scale caller falls back to
-#: its distributed Spark path. The count comes from parquet FOOTER
+#: pathologies. Above the bound :func:`answer` runs each file-scale
+#: question in Spark tasks instead. The count comes from parquet FOOTER
 #: metadata (``pyarrow.dataset.count_rows`` with no filter reads
 #: row-group counts only, never data pages), so the gate itself costs
 #: one footer read per manifest file.
@@ -105,9 +111,9 @@ def load(manifest_dir: str):
     """The manifest as a pandas DataFrame (``partition_values`` as
     dicts, exactly the values Spark's collect() returns), or None when
     the manifest exceeds ``_LOCAL_MAN_MAX`` rows (driver-heap guard:
-    the caller's distributed Spark path is the correct engine for a
-    manifest that large). Raises when pyarrow cannot read the
-    manifest. Hidden ``_``/``.`` entries (the ``_commits`` token tree)
+    :func:`answer` then runs the question in Spark tasks). Raises when
+    pyarrow cannot read the manifest. Hidden ``_``/``.`` entries (the
+    ``_commits`` token tree)
     are excluded by pyarrow's default ignore_prefixes, matching
     Spark's listing."""
     import pyarrow.dataset as pads
@@ -129,9 +135,66 @@ def _frame(tbl):
     return pdf
 
 
+def frame(manifest_dir: str, man=None):
+    """The manifest frame a verb hands to its questions: ``man`` when
+    the caller already holds one, else :func:`load`'s."""
+    return load(manifest_dir) if man is None else man
+
+
+def placed(manifest_dir: str, on_driver, on_cluster, man=None):
+    """The one size gate of file-scale manifest work: ``on_driver(man)``
+    over the manifest frame (``man``, else :func:`load`'s) when it fits
+    under ``_LOCAL_MAN_MAX`` rows, else ``on_cluster()``."""
+    man = frame(manifest_dir, man)
+    return on_cluster() if man is None else on_driver(man)
+
+
+def answer(spark, manifest_dir: str, fn, schema: str, man=None):
+    """Answer a file-scale question: ``fn`` maps manifest rows to a
+    pandas frame of ``schema`` (a DDL string) and must depend only on
+    each path's own rows. Below the gate it runs on the whole frame;
+    above it, in path-partitioned Spark tasks (:func:`_on_cluster`).
+    Returns pandas."""
+    return placed(
+        manifest_dir,
+        fn,
+        lambda: _on_cluster(spark, manifest_dir, fn, schema),
+        man,
+    )
+
+
+def _on_cluster(spark, manifest_dir: str, fn, schema: str):
+    """``fn`` over one Spark read of the manifest (schema pinned from
+    the on-disk arrow schema, so no inference job), hash-partitioned by
+    path so each task holds every row of its paths; the per-partition
+    frames come back as one pandas frame."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    arrow = _existing_schema(manifest_dir)
+    if arrow is None:
+        raise ValueError(f"no readable manifest file at {manifest_dir}")
+
+    def per_partition(batches):
+        import pandas as pd
+
+        frames = list(batches)
+        if not frames:
+            yield fn(_frame(arrow.empty_table()))
+        else:
+            yield fn(pd.concat(frames, ignore_index=True))
+
+    return (
+        spark.read.schema(from_arrow_schema(arrow))
+        .parquet(_mdd(manifest_dir))
+        .repartition("path")
+        .mapInPandas(per_partition, schema)
+        .toPandas()
+    )
+
+
 def visible(man, as_of: int | None):
-    """Pandas twin of ``manifest._visible_stats``: 'add' rows whose
-    path has no 'remove' tombstone at or below the pin."""
+    """'add' rows whose path has no 'remove' tombstone at or below the
+    pin."""
     if as_of is not None:
         man = man[man["snapshot_id"] <= as_of]
     removed = set(man.loc[man["op"] == "remove", "path"])
@@ -142,7 +205,7 @@ def visible(man, as_of: int | None):
 
 
 def apply_partition_filter(man, partition_filter, manifest_dir: str):
-    """Pandas twin of the scans' partition_values filter: a row
+    """The scans' partition_values filter: a row
     survives when its recorded entry for each filtered column is
     missing/NULL (conservative) or equals the requested value."""
     if not partition_filter:
@@ -181,7 +244,7 @@ def per_file_stats(vis, column: str):
 def matching_paths(
     vis, column: str, lo: float, hi: float
 ) -> list[str]:
-    """Pandas twin of ``manifest_pruned_scan``'s matching-path list: a
+    """``manifest_pruned_scan``'s matching-path list: a
     file matches when it has any stats-less row group for ``column`` or
     its [fmin, fmax] overlaps [lo, hi]. (NaN comparisons are False,
     exactly like SQL NULL semantics here — an all-NULL file is caught
@@ -192,7 +255,7 @@ def matching_paths(
 
 
 def surviving_paths_multi(vis, predicates) -> list[str]:
-    """Pandas twin of ``manifest_pruned_scan_multi``: elimination, not
+    """``manifest_pruned_scan_multi``'s survivors: elimination, not
     selection — a file is dropped for column c only if it HAS stats for
     c and every row-group range misses [lo, hi]."""
     survivors = set(vis["path"].unique())
@@ -207,18 +270,26 @@ def surviving_paths_multi(vis, predicates) -> list[str]:
 
 
 def surviving_paths_multi_rowgroup(vis, predicates) -> list[str]:
-    """Pandas twin of ``manifest_pruned_scan_multi_rowgroup``: the
+    """``manifest_pruned_scan_multi_rowgroup``'s survivors: the
     conjunction evaluated per (file, row group) — a file survives only
     if SOME single row group can satisfy EVERY predicate at once; row
     groups missing stats for a column pass that column; files with no
     stats rows at all survive outright."""
+    rg_ok = rowgroup_ok(vis, predicates)
+    survivors = set(vis["path"].unique())
+    if rg_ok.empty:
+        return sorted(survivors)
+    per_path_any = rg_ok.groupby(level=0, sort=False).any()
+    # a file with no stats rows for any predicate column survives
+    return sorted(survivors - set(per_path_any[~per_path_any].index))
+
+
+def rowgroup_ok(vis, predicates):
+    """Per (path, row_group) holding stats rows for a predicate column:
+    True when the row group can satisfy EVERY predicate at once."""
     import pandas as pd
 
-    survivors = set(vis["path"].unique())
-    cols = list(predicates)
-    sub = vis[vis["column_name"].isin(cols)]
-    if sub.empty:
-        return sorted(survivors)
+    sub = vis[vis["column_name"].isin(list(predicates))]
     ok = pd.Series(True, index=sub.index)
     for column, (lo, hi) in predicates.items():
         is_col = sub["column_name"] == column
@@ -230,20 +301,14 @@ def surviving_paths_multi_rowgroup(vis, predicates) -> list[str]:
             | (sub["min_val"].notna() & (sub["min_val"] > hi))
         )
         ok &= ~miss
-    # per (path, row_group): the group satisfies every predicate when
-    # none of its per-column rows missed
-    rg_ok = ok.groupby(
-        [sub["path"], sub["row_group"]], sort=False
-    ).all()
-    per_path_any = rg_ok.groupby(level=0, sort=False).any()
-    eliminated = set(per_path_any[~per_path_any].index)
-    # a file absent from sub entirely has no stats rows for any
-    # predicate column and survives (it is in survivors already)
-    return sorted(survivors - eliminated)
+    # the group satisfies every predicate when none of its per-column
+    # rows missed
+    return ok.groupby([sub["path"], sub["row_group"]], sort=False).all()
 
 
 def row_count(man, as_of: int | None) -> int:
-    """Pandas twin of ``manifest_row_count``."""
+    """Rows of the files visible at ``as_of``: each (path, row_group)'s
+    ``n_rows`` (repeated across its per-column stats rows) once."""
     vis = visible(man, as_of)
     if vis.empty:
         return 0
@@ -259,10 +324,9 @@ def row_count(man, as_of: int | None) -> int:
 
 def candidate_paths_for_keys(vis, column: str, keys) -> list[str]:
     """Files whose ``column`` stats range can contain ANY of ``keys``
-    (stats-less files conservatively included) — the pure-Python twin
-    of the delete/merge candidacy broadcast join, valid when the key
-    set is already driver-resident (delete records are metadata-scale
-    by contract)."""
+    (stats-less files conservatively included) — the delete
+    candidacy, valid when the key set is driver-resident (delete
+    records are metadata-scale by contract)."""
     import bisect
 
     ks = sorted(float(k) for k in keys)
@@ -275,6 +339,68 @@ def candidate_paths_for_keys(vis, column: str, keys) -> list[str]:
         if i < len(ks) and ks[i] <= float(row["fmax"]):
             out.append(path)
     return sorted(out)
+
+
+def path_frame(paths):
+    """A one-column ``path string`` answer frame."""
+    import pandas as pd
+
+    return pd.DataFrame({"path": pd.Series(list(paths), dtype=object)})
+
+
+def visible_paths(
+    spark, manifest_dir: str, as_of: int | None, man=None
+) -> list[str]:
+    """The sorted paths of the files visible at ``as_of``."""
+
+    def fn(m):
+        return path_frame(visible(m, as_of)["path"].unique())
+
+    out = answer(spark, manifest_dir, fn, "path string", man)
+    return sorted(out["path"])
+
+
+def first_visible_path(
+    spark, manifest_dir: str, as_of: int | None, man=None
+) -> str:
+    """The smallest visible path at ``as_of`` — the schema file of an
+    empty result. Raises on a manifest with no visible file."""
+
+    def fn(m):
+        paths = visible(m, as_of)["path"]
+        return path_frame([paths.min()] if len(paths) else [])
+
+    paths = answer(spark, manifest_dir, fn, "path string", man)["path"]
+    if paths.empty:
+        raise ValueError(f"empty stats manifest at {manifest_dir}")
+    return paths.min()
+
+
+def column_bounds(spark, manifest_dir: str, man=None) -> dict:
+    """{column: (min of min_val, max of max_val)} over the visible stats
+    rows at the tip — the tracked column set and the global range of
+    each (None where a column has no stats)."""
+
+    def fn(m):
+        return (
+            visible(m, None)
+            .groupby("column_name")
+            .agg(lo=("min_val", "min"), hi=("max_val", "max"))
+            .reset_index()
+        )
+
+    out = answer(
+        spark,
+        manifest_dir,
+        fn,
+        "column_name string, lo double, hi double",
+        man,
+    )
+    g = out.groupby("column_name").agg(lo=("lo", "min"), hi=("hi", "max"))
+    return {
+        c: tuple(None if v != v else float(v) for v in (r.lo, r.hi))
+        for c, r in g.iterrows()
+    }
 
 
 # --------------------------------------------------------------------

@@ -36,20 +36,12 @@ from aws_seismic_data_pipeline_spark.sources.table import localman
 from aws_seismic_data_pipeline_spark.sources.table.manifest import (
     _MANIFEST_COLS,
     _PART_PRUNE_RANGE,
-    _visible_stats,
     append_stats_manifest,
     commit_files,
     manifest_pruned_scan,
     remove_from_manifest,
     write_stats_manifest,
 )
-
-
-#: driver-side selection ceiling for incremental OPTIMIZE: below this
-#: many visible files the scattered-file selection runs in pandas on
-#: the driver; above it the per-file rectangle widths stay a
-#: distributed frame (a 10⁷-file table must not become a driver dict).
-_LOCAL_SELECT_MAX = 100_000
 
 
 def merge_with_conflict_retry(
@@ -161,50 +153,61 @@ def live_manifests(manifest_dir: str) -> list[str]:
     return out
 
 
-def _union_tracked_paths_local(
-    manifest_dir: str, sibling_manifests: list[str] | None
-) -> set[str] | None:
-    """Driver-side twin of :func:`_union_tracked_paths` (the union of
-    visible paths across live manifests) as a plain set; None when any
-    member manifest is above the localman gate (caller runs the Spark
-    union)."""
-    members = (
-        [manifest_dir, *sibling_manifests]
-        if sibling_manifests is not None
-        else live_manifests(manifest_dir)
-    )
-    out: set[str] = set()
-    for m in dict.fromkeys(os.path.abspath(m) for m in members):
-        lman = localman.load(m)
-        if lman is None:
-            return None
-        out |= set(localman.visible(lman, None)["path"].unique())
-    return out
-
-
-def _union_tracked_paths(
+def _orphans(
     spark: SparkSession,
+    data_dir: str,
     manifest_dir: str,
     sibling_manifests: list[str] | None,
-) -> DataFrame:
-    """Distinct VISIBLE paths across the union of live manifests —
-    ``clone_manifest``'s vacuum-safety contract enforced: a file
-    referenced only by a live clone is NOT reclaimable. Explicit
-    ``sibling_manifests`` overrides the registry (callers that manage
-    their own catalog of catalogs)."""
+    verb: str,
+) -> tuple[list[str], dict[str, float]]:
+    """The vacuum verbs' one orphan question: the parquet files under
+    ``data_dir`` that no LIVE manifest shows as visible —
+    ``clone_manifest``'s vacuum-safety contract: a file referenced only
+    by a live clone is NOT reclaimable; explicit ``sibling_manifests``
+    overrides the registry — plus, per listed path tombstoned in
+    ``manifest_dir``, its newest tombstone clock. Each manifest answers
+    through :func:`localman.answer` with only rows of LISTED paths, so
+    no more than the driver-resident listing comes back."""
+    import glob as _glob
+
+    import pandas as _pd
+
+    all_files = sorted(
+        _glob.glob(os.path.join(data_dir, "**", "*.parquet"), recursive=True)
+    )
+    if not all_files:
+        raise ValueError(f"{verb}: no files under {data_dir}")
+    listed = set(all_files)
+
+    def fn(m):
+        # a listed path is visible (NULL clock) or tombstoned (its clock)
+        m = m[m["path"].isin(listed)]
+        seen = localman.visible(m, None)["path"].unique()
+        gone = m[m["op"] == "remove"].groupby("path")["min_val"].max().dropna()
+        return _pd.DataFrame(
+            {
+                "path": _pd.Series([*seen, *gone.index], dtype=object),
+                "removed_at": _pd.Series(
+                    [float("nan")] * len(seen) + list(gone), dtype="float64"
+                ),
+            }
+        )
+
     members = (
         [manifest_dir, *sibling_manifests]
         if sibling_manifests is not None
         else live_manifests(manifest_dir)
     )
-    frames = [
-        _visible_stats(spark.read.parquet(_mdd(m)), None).select("path")
-        for m in dict.fromkeys(os.path.abspath(m) for m in members)
-    ]
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out.distinct()
+    tracked: set[str] = set()
+    clocks: dict[str, float] = {}
+    for i, m in enumerate(dict.fromkeys(os.path.abspath(m) for m in members)):
+        out = localman.answer(spark, m, fn, "path string, removed_at double")
+        seen = out["removed_at"].isna()
+        tracked |= set(out.loc[seen, "path"])
+        if i == 0:  # the manifest being vacuumed
+            gone = out[~seen]
+            clocks = dict(zip(gone["path"], gone["removed_at"]))
+    return [p for p in all_files if p not in tracked], clocks
 
 
 def vacuum_orphans_report(
@@ -233,32 +236,16 @@ def vacuum_orphans_report(
     in a live clone is NOT an orphan. Pass ``sibling_manifests`` to
     override the registry; a deleted clone directory drops out of the
     union automatically."""
-    import glob as _glob
-
-    import pandas as _pd
-
-    all_files = sorted(
-        _glob.glob(os.path.join(data_dir, "**", "*.parquet"), recursive=True)
-    )
-    if not all_files:
-        raise ValueError(f"vacuum_orphans_report: no files under {data_dir}")
     # VISIBLE paths only (unioned across live sibling manifests): a
     # file tombstoned EVERYWHERE (compaction input, retention delete)
-    # is exactly what vacuum exists to reclaim. Both sides are
-    # metadata-scale, so the anti-join runs DRIVER-SIDE via localman
-    # (Spark fallback).
-    tracked_set = _union_tracked_paths_local(manifest_dir, sibling_manifests)
-    if tracked_set is not None:
-        orphans = [p for p in all_files if p not in tracked_set]
-    else:
-        listing = spark.createDataFrame(
-            _pd.DataFrame({"path": all_files}), "path string"
-        )
-        tracked = _union_tracked_paths(spark, manifest_dir, sibling_manifests)
-        orphans = [
-            r.path
-            for r in listing.join(tracked, "path", "left_anti").collect()
-        ]
+    # is exactly what vacuum exists to reclaim
+    orphans, _clocks = _orphans(
+        spark,
+        data_dir,
+        manifest_dir,
+        sibling_manifests,
+        "vacuum_orphans_report",
+    )
     if not orphans:
         return (
             spark.read.option("basePath", data_dir)
@@ -300,45 +287,11 @@ def vacuum_orphans(
 
     Clone-aware like :func:`vacuum_orphans_report`: a file any live
     sibling manifest still sees is never deleted."""
-    import glob as _glob
     import time as _time
 
-    all_files = sorted(
-        _glob.glob(os.path.join(data_dir, "**", "*.parquet"), recursive=True)
+    orphans, tombstoned_at = _orphans(
+        spark, data_dir, manifest_dir, sibling_manifests, "vacuum_orphans"
     )
-    if not all_files:
-        raise ValueError(f"vacuum_orphans: no files under {data_dir}")
-    import pandas as _pd
-
-    # orphan resolution + tombstone clocks are metadata-scale:
-    # driver-side via localman (Spark fallback)
-    tracked_set = _union_tracked_paths_local(manifest_dir, sibling_manifests)
-    lman = localman.load(manifest_dir)
-    if tracked_set is not None and lman is not None:
-        orphans = [p for p in all_files if p not in tracked_set]
-        rem = lman[lman["op"] == "remove"]
-        tmax = rem.groupby("path")["min_val"].max()
-        tombstoned_at = {
-            pth: float(t) for pth, t in tmax.items() if _pd.notna(t)
-        }
-    else:
-        listing = spark.createDataFrame(
-            _pd.DataFrame({"path": all_files}), "path string"
-        )
-        manifest = spark.read.parquet(_mdd(manifest_dir))
-        tracked = _union_tracked_paths(spark, manifest_dir, sibling_manifests)
-        orphans = [
-            r.path
-            for r in listing.join(tracked, "path", "left_anti").collect()
-        ]
-        tombstoned_at = {
-            r.path: r.t
-            for r in manifest.filter(F.col("op") == "remove")
-            .groupBy("path")
-            .agg(F.max("min_val").alias("t"))
-            .collect()
-            if r.t is not None
-        }
     cutoff = _time.time() - float(older_than_seconds)
     n_deleted = 0
     reclaimed = 0
@@ -454,25 +407,21 @@ def commit_data_compaction(
     if not paths:
         raise ValueError("commit_data_compaction: empty path list")
     if columns is None:
-        lman = localman.load(manifest_dir)
-        if lman is not None:  # driver-side tracked-column read
-            tracked = sorted(
-                lman.loc[
-                    (lman["op"] == "add") & lman["path"].isin(list(paths)),
-                    "column_name",
-                ].unique()
+        import pandas as _pd
+
+        def fn(m):
+            adds = m[(m["op"] == "add") & m["path"].isin(list(paths))]
+            return _pd.DataFrame(
+                {"column_name": adds["column_name"].unique()}, dtype=object
             )
-        else:
-            tracked = sorted(
-                r.column_name
-                for r in spark.read.parquet(_mdd(manifest_dir))
-                .filter(
-                    (F.col("op") == "add") & F.col("path").isin(list(paths))
-                )
-                .select("column_name")
-                .distinct()
-                .collect()
+
+        tracked = sorted(
+            set(
+                localman.answer(
+                    spark, manifest_dir, fn, "column_name string"
+                )["column_name"]
             )
+        )
         columns = tuple(tracked) or _MANIFEST_COLS
     out_dir = os.path.dirname(sorted(paths)[0])
     snap = _claimed_next_snapshot(spark, manifest_dir)
@@ -662,20 +611,10 @@ def rollback_manifest(
     rollback across such maintenance raises instead of silently
     restoring a state with missing files."""
     lman = localman.load(manifest_dir)
-    if lman is not None:  # driver-side path sets (see localman)
-        target = set(localman.visible(lman, to_snapshot)["path"].unique())
-        current = set(localman.visible(lman, None)["path"].unique())
-    else:
-        m = spark.read.parquet(_mdd(manifest_dir))
-        target = {
-            r.path
-            for r in _visible_stats(m, to_snapshot)
-            .select("path").distinct().collect()
-        }
-        current = {
-            r.path
-            for r in _visible_stats(m, None).select("path").distinct().collect()
-        }
+    target, current = (
+        set(localman.visible_paths(spark, manifest_dir, pin, lman))
+        for pin in (to_snapshot, None)
+    )
     missing = sorted(target - current)
     if missing:
         raise ValueError(
@@ -826,50 +765,33 @@ def merge_through_manifest(
                 "rows can land in their Hive partition dirs"
             )
     # planning metadata (tracked columns, per-file key stats, the
-    # empty-delta sample path) resolves DRIVER-SIDE via localman —
-    # the per-merge Spark-job chain over KB manifests was the dominant
-    # cost of every merge slot (r15 profiling); Spark path = fallback
+    # empty-delta sample path) is file-scale: localman.answer, on the
+    # driver under the gate (the per-merge Spark-job chain over KB
+    # manifests was the dominant cost of every merge slot, r15
+    # profiling), in path-partitioned tasks above it.
+    # Preserve every tracked stats column present in the rewritten
+    # schema (key, *cols) — appending key-only stats would hide the
+    # rewrites from scans probing the other tracked columns
     lman = localman.load(manifest_dir)
-    if lman is not None:
-        vis_pd = localman.visible(lman, None)
-        manifest = None
-        tracked = tuple(
-            sorted(set(vis_pd["column_name"].unique()) & {key, *cols})
-        ) or (key,)
-        pf = localman.per_file_stats(vis_pd, key).reset_index()
-        pf = pf.astype(object).where(pf.notna(), None)
-        per_file = F.broadcast(
-            spark.createDataFrame(
-                pf[["path", "fmin", "fmax", "n_statless"]],
-                "path string, fmin double, fmax double, n_statless long",
-            )
-        )
-    else:
-        vis_pd = None
-        manifest = _visible_stats(
-            spark.read.parquet(_mdd(manifest_dir)), None
-        )
-        # preserve every tracked stats column present in the rewritten
-        # schema (key, *cols) — appending key-only stats would hide the
-        # rewrites from scans probing the other tracked columns
-        tracked = tuple(
-            sorted(
-                r.column_name
-                for r in manifest.select("column_name").distinct().collect()
-                if r.column_name in {key, *cols}
-            )
-        ) or (key,)
-        per_file = (
-            manifest.filter(F.col("column_name") == key)
-            .groupBy("path")
-            .agg(
-                F.min("min_val").alias("fmin"),
-                F.max("max_val").alias("fmax"),
-                F.sum(
-                    F.when(F.col("min_val").isNull(), 1).otherwise(0)
-                ).alias("n_statless"),
-            )
-        )
+    bounds = localman.column_bounds(spark, manifest_dir, lman)
+    tracked = tuple(sorted(set(bounds) & {key, *cols})) or (key,)
+
+    def fn(m):
+        vis = localman.visible(m, None)
+        return localman.per_file_stats(vis, key).reset_index()
+
+    pf = localman.answer(
+        spark,
+        manifest_dir,
+        fn,
+        "path string, fmin double, fmax double, n_statless long",
+        lman,
+    )
+    pf = pf.astype(object).where(pf.notna(), None)
+    per_file = spark.createDataFrame(
+        pf[["path", "fmin", "fmax", "n_statless"]],
+        "path string, fmin double, fmax double, n_statless long",
+    )
     sel = [key, *cols] + [c for c in partition_by if c not in (key, *cols)]
     # the matched-delete clause flag rides the checkpointed delta; it
     # is dropped from every written file below
@@ -1013,16 +935,9 @@ def merge_through_manifest(
         sample_path = intersecting[0]
     else:
         # no file can contain any delta key: the whole delta inserts
-        if vis_pd is not None:
-            sample_paths = sorted(vis_pd["path"].unique())
-            if not sample_paths:
-                raise ValueError(f"empty stats manifest at {manifest_dir}")
-            sample_path = sample_paths[0]
-        else:
-            any_path = manifest.select("path").limit(1).collect()
-            if not any_path:
-                raise ValueError(f"empty stats manifest at {manifest_dir}")
-            sample_path = any_path[0].path
+        sample_path = localman.first_visible_path(
+            spark, manifest_dir, None, lman
+        )
         touched_keys = None
         dj = None
         inserts = d.filter(~F.col("_mtm_del")).drop("_mtm_del")
@@ -1282,31 +1197,14 @@ def merge_evolve_through_manifest(
         schema_add_rows,
     )
 
-    # the evolved-column decision: a sample file's physical schema
-    # (file-scale listing: driver-side under the localman gate, Spark
-    # above it) plus the declared adds (commit-scale, driver-side)
-    lman = localman.load(manifest_dir)
-    physical = None
-    if lman is not None:
-        vis_paths = sorted(localman.visible(lman, None)["path"].unique())
-        if not vis_paths:
-            raise ValueError(f"empty stats manifest at {manifest_dir}")
-        try:
-            import pyarrow.parquet as _pq
+    # the evolved-column decision: the physical schema of the first
+    # visible file (a footer read that raises on failure) plus the
+    # declared adds (commit-scale)
+    import pyarrow.parquet as _pq
 
-            physical = set(_pq.read_schema(vis_paths[0]).names)
-        except Exception:
-            physical = None
-    if physical is None:
-        sample = (
-            _visible_stats(spark.read.parquet(_mdd(manifest_dir)), None)
-            .select("path")
-            .limit(1)
-            .collect()
-        )
-        if not sample:
-            raise ValueError(f"empty stats manifest at {manifest_dir}")
-        physical = set(read_data_files(spark, [sample[0].path]).columns)
+    lman = localman.load(manifest_dir)
+    sample = localman.first_visible_path(spark, manifest_dir, None, lman)
+    physical = set(_pq.read_schema(sample).names)
     declared = set(
         localman.commit_rows(
             manifest_dir, ("schema_add",), ("column_name",), lman
@@ -1638,9 +1536,9 @@ def plan_merge_three_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _expire_rewrite_local(
     manifest_dir: str, lman, e: int, marker_fixed: dict, tmp: str
 ) -> int:
-    """Driver-side twin of the expire rewrite: compute the kept rows in
+    """The expire rewrite on the driver: compute the kept rows in
     pandas (same visibility / retire-ceiling / declared-schema rules as
-    the Spark plan below) and land them + the expire marker as one
+    :func:`_expire_rewrite_spark`) and land them + the expire marker as one
     pyarrow parquet file in ``tmp``. Returns rows_after. A pyarrow
     failure raises: the Spark rewrite is the path for manifests above
     ``localman._LOCAL_MAN_MAX``, not a retry for a failed local one."""
@@ -1713,6 +1611,80 @@ def _expire_rewrite_local(
     return len(keep)
 
 
+def _expire_rewrite_spark(
+    spark: SparkSession,
+    manifest_dir: str,
+    e: int,
+    marker_fixed: dict,
+    new_manifest: str,
+) -> int:
+    """The expire rewrite for a manifest above
+    ``localman._LOCAL_MAN_MAX`` rows: the same keep rules as
+    :func:`_expire_rewrite_local` as one Spark read and rewrite into
+    ``new_manifest``. Returns rows_after."""
+    man = spark.read.parquet(_mdd(manifest_dir))
+    old = man.filter(F.col("snapshot_id") < e)
+    removed_below = (
+        old.filter(F.col("op") == "remove").select("path").distinct()
+    )
+    keep_old_adds = old.filter(F.col("op") == "add").join(
+        removed_below, "path", "left_anti"
+    )
+    # retire ceilings are PER COLUMN, mirroring
+    # localman.live_delete_records' scoping: a retire marker for
+    # column A must never expire column B's still-live delete
+    # records (that would silently resurrect B's deleted rows on
+    # every post-expire read)
+    ceilings = (
+        old.filter(F.col("op") == "delete_retire")
+        .groupBy("column_name")
+        .agg(F.max("min_val").alias("__ceiling"))
+    )
+    live_old_deletes = (
+        old.filter(F.col("op") == "delete_eq")
+        .join(F.broadcast(ceilings), "column_name", "left")
+        .filter(
+            F.col("__ceiling").isNull()
+            | (F.col("snapshot_id") > F.col("__ceiling"))
+        )
+        .drop("__ceiling")
+    )
+    keep = (
+        man.filter(F.col("snapshot_id") >= e)
+        .unionByName(keep_old_adds)
+        .unionByName(live_old_deletes)
+        # schema_add/rename/drop rows are the table's DECLARED
+        # SCHEMA — a committed schema change must survive any
+        # expiry or post-expire reads lose the NULL-backfill /
+        # name re-map / column tombstone (and a re-declaration
+        # stops raising)
+        .unionByName(
+            old.filter(
+                F.col("op").isin(
+                    "delete_retire",
+                    "expire",
+                    "schema_add",
+                    "schema_rename",
+                    "schema_drop",
+                    "constraint_add",
+                    "constraint_drop",
+                )
+            )
+        )
+    )
+    schema = man.schema
+    marker = spark.createDataFrame(
+        [tuple(marker_fixed.get(f.name) for f in schema)], schema
+    )
+    # the marker lands as its own appended file, NOT unioned
+    # into the rewrite plan: a LocalRelation branch under the
+    # coalesced union measured 4x the whole write (10.5 s vs
+    # 2.4 + 0.9 at sf0.1)
+    keep.coalesce(1).write.parquet(new_manifest)
+    marker.write.mode("append").parquet(new_manifest)
+    return spark.read.parquet(new_manifest).count()
+
+
 def expire_manifest_history(
     spark: SparkSession, manifest_dir: str, expire_below: int
 ) -> tuple[int, int]:
@@ -1751,24 +1723,25 @@ def expire_manifest_history(
 
     recover_interrupted_expire(manifest_dir)
     e = int(expire_below)
-    # the whole rewrite is metadata-scale: resolved DRIVER-SIDE via
-    # localman; the Spark read+rewrite runs only for a manifest above
-    # localman._LOCAL_MAN_MAX rows
+    # the expire floor's inputs are a file-scale aggregate (each
+    # partition's tip and row count, combined by max and sum); the
+    # rewrite itself scales with the table, so above the localman gate
+    # it is a Spark rewrite, not a question
+    import pandas as _pd
+
     lman = localman.load(manifest_dir)
-    if lman is not None:
-        cur_max = (
-            int(lman["snapshot_id"].max()) if len(lman) else None
+
+    def fn(m):
+        return _pd.DataFrame(
+            {"tip": [float(m["snapshot_id"].max())], "n": [len(m)]}
         )
-        rows_before = len(lman)
-    else:
-        man = spark.read.parquet(_mdd(manifest_dir))
-        # one agg answers both driver-side questions — separate actions
-        # each cost a full (tiny) job under load
-        stats = man.agg(
-            F.max("snapshot_id").alias("cur_max"),
-            F.count(F.lit(1)).alias("n_rows"),
-        ).collect()[0]
-        cur_max, rows_before = stats.cur_max, stats.n_rows
+
+    stats = localman.answer(
+        spark, manifest_dir, fn, "tip double, n long", lman
+    )
+    tip = stats["tip"].max()
+    cur_max = None if _pd.isna(tip) else int(tip)
+    rows_before = int(stats["n"].sum())
     if cur_max is None or e > cur_max:
         raise ValueError(
             f"expire_below={e} exceeds max snapshot {cur_max} — refusing "
@@ -1795,71 +1768,16 @@ def expire_manifest_history(
         }
         tmp = manifest_dir + ".expiring"
         _shutil.rmtree(tmp, ignore_errors=True)
-        if lman is not None:
-            rows_after = _expire_rewrite_local(
-                manifest_dir, lman, e, marker_fixed, tmp
-            )
-        else:
-            old = man.filter(F.col("snapshot_id") < e)
-            removed_below = (
-                old.filter(F.col("op") == "remove").select("path").distinct()
-            )
-            keep_old_adds = old.filter(F.col("op") == "add").join(
-                removed_below, "path", "left_anti"
-            )
-            # retire ceilings are PER COLUMN, mirroring
-            # localman.live_delete_records' scoping: a retire marker for
-            # column A must never expire column B's still-live delete
-            # records (that would silently resurrect B's deleted rows on
-            # every post-expire read)
-            ceilings = (
-                old.filter(F.col("op") == "delete_retire")
-                .groupBy("column_name")
-                .agg(F.max("min_val").alias("__ceiling"))
-            )
-            live_old_deletes = (
-                old.filter(F.col("op") == "delete_eq")
-                .join(F.broadcast(ceilings), "column_name", "left")
-                .filter(
-                    F.col("__ceiling").isNull()
-                    | (F.col("snapshot_id") > F.col("__ceiling"))
-                )
-                .drop("__ceiling")
-            )
-            keep = (
-                man.filter(F.col("snapshot_id") >= e)
-                .unionByName(keep_old_adds)
-                .unionByName(live_old_deletes)
-                # schema_add/rename/drop rows are the table's DECLARED
-                # SCHEMA — a committed schema change must survive any
-                # expiry or post-expire reads lose the NULL-backfill /
-                # name re-map / column tombstone (and a re-declaration
-                # stops raising)
-                .unionByName(
-                    old.filter(
-                        F.col("op").isin(
-                            "delete_retire",
-                            "expire",
-                            "schema_add",
-                            "schema_rename",
-                            "schema_drop",
-                            "constraint_add",
-                            "constraint_drop",
-                        )
-                    )
-                )
-            )
-            schema = man.schema
-            marker = spark.createDataFrame(
-                [tuple(marker_fixed.get(f.name) for f in schema)], schema
-            )
-            # the marker lands as its own appended file, NOT unioned
-            # into the rewrite plan: a LocalRelation branch under the
-            # coalesced union measured 4x the whole write (10.5 s vs
-            # 2.4 + 0.9 at sf0.1)
-            keep.coalesce(1).write.parquet(tmp)
-            marker.write.mode("append").parquet(tmp)
-            rows_after = spark.read.parquet(tmp).count()
+        rows_after = localman.placed(
+            manifest_dir,
+            lambda man: _expire_rewrite_local(
+                manifest_dir, man, e, marker_fixed, tmp
+            ),
+            lambda: _expire_rewrite_spark(
+                spark, manifest_dir, e, marker_fixed, tmp
+            ),
+            lman,
+        )
         aside = manifest_dir + ".expired_old"
         _shutil.rmtree(aside, ignore_errors=True)
         store = log_store_for(manifest_dir)
@@ -2114,44 +2032,12 @@ def _optimize_curve(
     from the manifest's global stats, cluster the visible files along
     ``curve_sql([bucket_sql, ...])`` via :func:`_zcluster_rewrite`,
     and commit add+remove at one snapshot. Planning metadata (visible
-    files, tracked columns, global stats bounds) resolves DRIVER-SIDE
-    via localman (Spark fallback)."""
-    import pandas as _pd
-
+    files, tracked columns, global stats bounds) is file-scale
+    (:func:`localman.visible_paths`, :func:`localman.column_bounds`)."""
     lman = localman.load(manifest_dir)
-    if lman is not None:
-        vis_pd = localman.visible(lman, None)
-        visible = sorted(vis_pd["path"].unique())
-        tracked = tuple(sorted(vis_pd["column_name"].unique()))
-        sub = vis_pd[vis_pd["column_name"].isin(list(cols))]
-        bounds = {}
-        for cname, g in sub.groupby("column_name"):
-            lo = g["min_val"].min()
-            hi = g["max_val"].max()
-            bounds[cname] = (
-                None if _pd.isna(lo) else float(lo),
-                None if _pd.isna(hi) else float(hi),
-            )
-    else:
-        manifest = _visible_stats(
-            spark.read.parquet(_mdd(manifest_dir)), None
-        )
-        visible = sorted(
-            r.path for r in manifest.select("path").distinct().collect()
-        )
-        tracked = tuple(
-            sorted(
-                r.column_name
-                for r in manifest.select("column_name").distinct().collect()
-            )
-        )
-        bounds = {
-            r.column_name: (r.lo, r.hi)
-            for r in manifest.filter(F.col("column_name").isin(list(cols)))
-            .groupBy("column_name")
-            .agg(F.min("min_val").alias("lo"), F.max("max_val").alias("hi"))
-            .collect()
-        }
+    visible = localman.visible_paths(spark, manifest_dir, None, lman)
+    bounds = localman.column_bounds(spark, manifest_dir, lman)
+    tracked = tuple(sorted(bounds))
     if not visible:
         raise ValueError(
             f"optimize_{prefix}: no visible files in {manifest_dir}"
@@ -2390,115 +2276,53 @@ def _optimize_curve_incremental(
     """Shared incremental-OPTIMIZE body (see the public wrappers for
     semantics): metadata-only selection of scattered files, curve
     rewrite of only the tail, one atomic add+remove commit. The
-    selection metadata resolves DRIVER-SIDE via localman below the
-    ``_LOCAL_SELECT_MAX``-files bound (at 10⁷ files the per-file
-    rectangle widths must stay a distributed frame — the Spark branch);
-    identical selection, pytest-pinned by the registered queries."""
+    selection is two file-scale passes (:func:`localman.answer`): the
+    global bounds (:func:`localman.column_bounds`), then per partition
+    the scattered paths plus its count of selection members — never
+    the per-file rectangles."""
     import pandas as _pd
 
     lman = localman.load(manifest_dir)
-    vis_pd = localman.visible(lman, None) if lman is not None else None
-    if vis_pd is not None and vis_pd["path"].nunique() <= _LOCAL_SELECT_MAX:
-        tracked = tuple(sorted(vis_pd["column_name"].unique()))
-        sub = vis_pd[vis_pd["column_name"].isin((x_col, y_col))]
+    glo = localman.column_bounds(spark, manifest_dir, lman)
+    tracked = tuple(sorted(glo))
+    for c in (x_col, y_col):
+        if c not in glo or glo[c][0] is None:
+            raise ValueError(
+                f"optimize_{prefix}: no stats for {c!r} in {manifest_dir}"
+            )
+    spans = {c: max(glo[c][1] - glo[c][0], 1e-12) for c in (x_col, y_col)}
+
+    def fn(m):
+        # only paths with stats rows for either clustering column are
+        # selection members; a path missing stats for a dimension is
+        # conservatively full-width (1.0)
+        vis = localman.visible(m, None)
         pf = (
-            sub.groupby(["path", "column_name"])
+            vis[vis["column_name"].isin((x_col, y_col))]
+            .groupby(["path", "column_name"])
             .agg(lo=("min_val", "min"), hi=("max_val", "max"))
             .reset_index()
         )
-        glo = {}
-        for cname, g in pf.groupby("column_name"):
-            lo = g["lo"].min()
-            hi = g["hi"].max()
-            glo[cname] = (
-                None if _pd.isna(lo) else float(lo),
-                None if _pd.isna(hi) else float(hi),
-            )
-        for c in (x_col, y_col):
-            if c not in glo or glo[c][0] is None:
-                raise ValueError(
-                    f"optimize_{prefix}: no stats for {c!r} in {manifest_dir}"
-                )
-        spans = {
-            c: max(glo[c][1] - glo[c][0], 1e-12) for c in (x_col, y_col)
-        }
-        widths: dict[str, dict[str, float]] = {}
-        for _i, r in pf.iterrows():
-            w = (
-                1.0
-                if _pd.isna(r["lo"]) or _pd.isna(r["hi"])
-                else (r["hi"] - r["lo"]) / spans[r["column_name"]]
-            )
-            widths.setdefault(r["path"], {})[r["column_name"]] = w
-        # only paths with stats rows for either clustering column are
-        # selection members — mirrors the Spark branch's per_file base
-        all_paths = sorted(pf["path"].unique())
-        scattered = sorted(
-            p
-            for p in all_paths
-            if widths.get(p, {}).get(x_col, 1.0) > coverage_threshold
-            and widths.get(p, {}).get(y_col, 1.0) > coverage_threshold
+        pf["w"] = (pf["hi"] - pf["lo"]) / pf["column_name"].map(spans)
+        w = (
+            pf.pivot(index="path", columns="column_name", values="w")
+            .reindex(columns=[x_col, y_col])
+            .fillna(1.0)
         )
-        n_untouched = len(all_paths) - len(scattered)
-    else:
-        manifest = _visible_stats(
-            spark.read.parquet(_mdd(manifest_dir)), None
+        wide = w > coverage_threshold
+        hit = list(w.index[wide[x_col] & wide[y_col]])
+        return _pd.DataFrame(
+            {
+                "path": _pd.Series([*hit, None], dtype=object),
+                "n_files": [0] * len(hit) + [len(w)],
+            }
         )
-        tracked = tuple(
-            sorted(
-                r.column_name
-                for r in manifest.select("column_name").distinct().collect()
-            )
-        )
-        # per-file rectangles AND global bounds for both dims, one
-        # metadata agg
-        per_file = (
-            manifest.filter(F.col("column_name").isin(x_col, y_col))
-            .groupBy("path", "column_name")
-            .agg(F.min("min_val").alias("lo"), F.max("max_val").alias("hi"))
-        ).localCheckpoint(eager=True)  # feeds two tiny aggs — plan once
-        # global bounds: |columns| rows to the driver, never |files|
-        glo = {
-            r.column_name: (r.glo, r.ghi)
-            for r in per_file.groupBy("column_name")
-            .agg(F.min("lo").alias("glo"), F.max("hi").alias("ghi"))
-            .collect()
-        }
-        for c in (x_col, y_col):
-            if c not in glo or glo[c][0] is None:
-                raise ValueError(
-                    f"optimize_{prefix}: no stats for {c!r} in {manifest_dir}"
-                )
-        spans = {
-            c: max(glo[c][1] - glo[c][0], 1e-12) for c in (x_col, y_col)
-        }
-        # per-file rectangle widths stay a DataFrame (at 10⁷ files the
-        # selection must not be a driver dict); a path missing stats
-        # for a dimension is conservatively full-width (NULL -> 1.0).
-        # ONE job returns the total file count plus ONLY the scattered
-        # path list.
-        def _w(col: str) -> F.Column:
-            return F.max(
-                F.when(
-                    F.col("column_name") == col,
-                    (F.col("hi") - F.col("lo")) / F.lit(spans[col]),
-                )
-            )
 
-        sel = per_file.groupBy("path").agg(
-            _w(x_col).alias("_wx"), _w(y_col).alias("_wy")
-        )
-        is_scattered = (
-            F.coalesce(F.col("_wx"), F.lit(1.0)) > F.lit(coverage_threshold)
-        ) & (F.coalesce(F.col("_wy"), F.lit(1.0)) > F.lit(coverage_threshold))
-        agg = sel.agg(
-            F.count(F.lit(1)).alias("n_files"),
-            F.sort_array(
-                F.collect_list(F.when(is_scattered, F.col("path")))
-            ).alias("scattered"),
-        ).collect()[0]
-        scattered = list(agg.scattered)
-        n_untouched = agg.n_files - len(scattered)
+    out = localman.answer(
+        spark, manifest_dir, fn, "path string, n_files long", lman
+    )
+    scattered = sorted(out["path"].dropna())
+    n_untouched = int(out["n_files"].sum()) - len(scattered)
     if not scattered:
         raise ValueError(
             f"optimize_{prefix}: every visible file is already "
@@ -2885,19 +2709,7 @@ def optimize_table(
     n_files_after)."""
     import itertools as _it
 
-    lman = localman.load(manifest_dir)
-    if lman is not None:  # driver-side visible listing (Spark fallback)
-        visible = sorted(localman.visible(lman, None)["path"].unique())
-    else:
-        visible = sorted(
-            r.path
-            for r in _visible_stats(
-                spark.read.parquet(_mdd(manifest_dir)), None
-            )
-            .select("path")
-            .distinct()
-            .collect()
-        )
+    visible = localman.visible_paths(spark, manifest_dir, None)
     n_before = len(visible)
     bins: list[list[str]] = []
     for _dirname, group_iter in _it.groupby(visible, key=os.path.dirname):

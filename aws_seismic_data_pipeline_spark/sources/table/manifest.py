@@ -407,20 +407,54 @@ def manifest_row_count(
     second pass over the fact table. Seed: the reference treats its
     paginated listing as the statistic itself
     (``/root/reference/upload_to_rfs.py:16-35``); the manifest keeps
-    the same answer one metadata agg away — computed DRIVER-SIDE via
-    :mod:`.localman` (Spark fallback)."""
-    lman = localman.load(manifest_dir)
-    if lman is not None:
-        return localman.row_count(lman, as_of)
-    visible = _visible_stats(spark.read.parquet(_mdd(manifest_dir)), as_of)
-    n = (
-        visible.groupBy("path", "row_group")
-        .agg(F.max("n_rows").alias("n"))
-        .agg(F.sum("n").alias("total"))
-        .collect()[0]
-        .total
+    the same answer one metadata agg away (:func:`localman.answer`;
+    each partition's count is a partial, summed here)."""
+    import pandas as _pd
+
+    def fn(m):
+        return _pd.DataFrame({"n": [localman.row_count(m, as_of)]})
+
+    return int(localman.answer(spark, manifest_dir, fn, "n long")["n"].sum())
+
+
+def _pruned_scan(
+    spark: SparkSession,
+    manifest_dir: str,
+    survivors,
+    predicates: dict[str, tuple[float, float]],
+    as_of: int | None,
+    partition_filter: dict[str, str] | None,
+    merge_schema: bool,
+    lman=None,
+) -> DataFrame:
+    """The pruned scans' shared body: floor check, then
+    ``survivors(vis)`` — the surviving paths of the visible,
+    partition-filtered stats rows — answered through
+    :func:`localman.answer`, and the surviving files opened with every
+    residual predicate pushed down. Only the surviving paths reach the
+    driver. An empty result keeps the data schema from the smallest
+    visible file, chosen BEFORE the partition filter (a filter that
+    matches nothing still has a table schema)."""
+    lman = localman.frame(manifest_dir, lman)
+    localman.check_floor(manifest_dir, as_of, lman)
+
+    def fn(m):
+        vis = localman.visible(m, as_of)
+        vis = localman.apply_partition_filter(
+            vis, partition_filter, manifest_dir
+        )
+        return localman.path_frame(survivors(vis))
+
+    matching = sorted(
+        localman.answer(spark, manifest_dir, fn, "path string", lman)["path"]
     )
-    return int(n) if n is not None else 0
+    if not matching:
+        sample = localman.first_visible_path(spark, manifest_dir, as_of, lman)
+        return read_data_files(spark, [sample]).filter(F.lit(False))
+    out = read_data_files(spark, matching, merge_schema)
+    for column, (lo, hi) in predicates.items():
+        out = out.filter(F.col(column).between(lo, hi))
+    return out
 
 
 def manifest_pruned_scan(
@@ -458,108 +492,28 @@ def manifest_pruned_scan(
     always sound over mixed/legacy manifests.
 
     The metadata decision (floor check, visibility, partition filter,
-    per-file stats aggregate, matching list) runs DRIVER-SIDE via
-    :mod:`.localman` — the pruning question is over kilobytes of local
-    metadata and a Spark job chain per scan was the dominant cost of
-    every governed verb (r15 profiling); the Spark path remains as the
-    fallback and only the surviving files' DATA scan is distributed.
-    ``lman`` passes a manifest frame the caller already loaded
-    (:func:`localman.load`) instead of re-reading it.
+    per-file stats aggregate, matching list) is one pandas function of
+    the manifest rows (:func:`localman.answer`: on the driver under the
+    localman gate, in path-partitioned tasks above it); only the
+    surviving files' DATA scan is distributed. ``lman`` passes a
+    manifest frame the caller already loaded (:func:`localman.load`)
+    instead of re-reading it.
 
     The data schema is pinned from the surviving files' footers
     (:func:`footers.read_data_files`), so opening them runs no
     schema-inference job; ``merge_schema`` (post-evolution tables mix
     physical schemas — pre-ADD files lack the new column) unions the
     files' schemas instead whenever they disagree."""
-    if lman is None:
-        lman = localman.load(manifest_dir)
-    localman.check_floor(manifest_dir, as_of, lman)
-    if lman is not None:
-        vis = localman.visible(lman, as_of)
-        vis = localman.apply_partition_filter(
-            vis, partition_filter, manifest_dir
-        )
-        matching = localman.matching_paths(vis, column, lo, hi)
-        return _open_matching(
-            spark,
-            matching,
-            lambda: _any_path_pd(vis, manifest_dir),
-            {column: (lo, hi)},
-            merge_schema,
-        )
-    manifest = _visible_stats(spark.read.parquet(_mdd(manifest_dir)), as_of)
-    if partition_filter:
-        if "partition_values" not in manifest.columns:
-            raise ValueError(
-                f"manifest at {manifest_dir} records no partition values "
-                "— rebuild it with write_stats_manifest(partition_by=...)"
-            )
-        for k, v in partition_filter.items():
-            entry = F.col("partition_values").getItem(k)
-            manifest = manifest.filter(entry.isNull() | (entry == str(v)))
-    per_file = (
-        manifest.filter(F.col("column_name") == column)
-        .groupBy("path")
-        .agg(
-            F.min("min_val").alias("fmin"),
-            F.max("max_val").alias("fmax"),
-            F.sum(
-                F.when(F.col("min_val").isNull(), 1).otherwise(0)
-            ).alias("n_statless"),
-        )
-    )
-    matching = [
-        r.path
-        for r in per_file.filter(
-            (F.col("n_statless") > 0)
-            | ((F.col("fmax") >= lo) & (F.col("fmin") <= hi))
-        )
-        .select("path")
-        .collect()
-    ]
-    return _open_matching(
+    return _pruned_scan(
         spark,
-        matching,
-        lambda: _any_path(manifest, manifest_dir),
+        manifest_dir,
+        lambda vis: localman.matching_paths(vis, column, lo, hi),
         {column: (lo, hi)},
+        as_of,
+        partition_filter,
         merge_schema,
+        lman,
     )
-
-
-def _any_path_pd(vis, manifest_dir: str) -> str:
-    """One visible data file (localman frame), for an empty result's
-    schema; an empty manifest raises."""
-    any_paths = vis["path"].unique()
-    if len(any_paths) == 0:
-        raise ValueError(f"empty stats manifest at {manifest_dir}")
-    return sorted(any_paths)[0]
-
-
-def _any_path(manifest: DataFrame, manifest_dir: str) -> str:
-    """Spark-fallback twin of :func:`_any_path_pd`."""
-    any_path = manifest.select("path").limit(1).collect()
-    if not any_path:
-        raise ValueError(f"empty stats manifest at {manifest_dir}")
-    return any_path[0].path
-
-
-def _open_matching(
-    spark: SparkSession,
-    matching: list[str],
-    any_path,
-    predicates: dict[str, tuple[float, float]],
-    merge_schema: bool,
-) -> DataFrame:
-    """Open a pruned scan's surviving files with every residual
-    predicate pushed down. An empty list keeps the data schema: one
-    visible file (``any_path()``) is opened and filtered to nothing —
-    a footer read, no data pages."""
-    if not matching:
-        return read_data_files(spark, [any_path()]).filter(F.lit(False))
-    out = read_data_files(spark, matching, merge_schema)
-    for column, (lo, hi) in predicates.items():
-        out = out.filter(F.col(column).between(lo, hi))
-    return out
 
 
 def manifest_pruned_scan_multi(
@@ -588,56 +542,13 @@ def manifest_pruned_scan_multi(
     (``/root/reference/app.py:449-456``: date prefix + station)."""
     if not predicates:
         raise ValueError("manifest_pruned_scan_multi: empty predicate map")
-    lman = localman.load(manifest_dir)
-    localman.check_floor(manifest_dir, as_of, lman)
-    if lman is not None:  # driver-side metadata pass (see pruned_scan)
-        vis = localman.visible(lman, as_of)
-        vis = localman.apply_partition_filter(
-            vis, partition_filter, manifest_dir
-        )
-        matching = localman.surviving_paths_multi(vis, predicates)
-        return _open_matching(
-            spark,
-            matching,
-            lambda: _any_path_pd(vis, manifest_dir),
-            predicates,
-            merge_schema,
-        )
-    manifest = _visible_stats(spark.read.parquet(_mdd(manifest_dir)), as_of)
-    if partition_filter:
-        if "partition_values" not in manifest.columns:
-            raise ValueError(
-                f"manifest at {manifest_dir} records no partition values "
-                "— rebuild it with write_stats_manifest(partition_by=...)"
-            )
-        for k, v in partition_filter.items():
-            entry = F.col("partition_values").getItem(k)
-            manifest = manifest.filter(entry.isNull() | (entry == str(v)))
-    survivors = manifest.select("path").distinct()
-    for column, (lo, hi) in predicates.items():
-        eliminated = (
-            manifest.filter(F.col("column_name") == column)
-            .groupBy("path")
-            .agg(
-                F.min("min_val").alias("fmin"),
-                F.max("max_val").alias("fmax"),
-                F.sum(
-                    F.when(F.col("min_val").isNull(), 1).otherwise(0)
-                ).alias("n_statless"),
-            )
-            .filter(
-                (F.col("n_statless") == 0)
-                & ((F.col("fmax") < lo) | (F.col("fmin") > hi))
-            )
-            .select("path")
-        )
-        survivors = survivors.join(eliminated, "path", "left_anti")
-    matching = [r.path for r in survivors.collect()]
-    return _open_matching(
+    return _pruned_scan(
         spark,
-        matching,
-        lambda: _any_path(manifest, manifest_dir),
+        manifest_dir,
+        lambda vis: localman.surviving_paths_multi(vis, predicates),
         predicates,
+        as_of,
+        partition_filter,
         merge_schema,
     )
 
@@ -676,82 +587,14 @@ def manifest_pruned_scan_multi_rowgroup(
         raise ValueError(
             "manifest_pruned_scan_multi_rowgroup: empty predicate map"
         )
-    lman = localman.load(manifest_dir)
-    localman.check_floor(manifest_dir, as_of, lman)
-    if lman is not None:  # driver-side metadata pass (see pruned_scan)
-        vis = localman.visible(lman, as_of)
-        vis = localman.apply_partition_filter(
-            vis, partition_filter, manifest_dir
-        )
-        matching = localman.surviving_paths_multi_rowgroup(vis, predicates)
-        return _open_matching(
-            spark,
-            matching,
-            lambda: _any_path_pd(vis, manifest_dir),
-            predicates,
-            merge_schema,
-        )
-    manifest = _visible_stats(spark.read.parquet(_mdd(manifest_dir)), as_of)
-    if partition_filter:
-        if "partition_values" not in manifest.columns:
-            raise ValueError(
-                f"manifest at {manifest_dir} records no partition values "
-                "— rebuild it with write_stats_manifest(partition_by=...)"
-            )
-        for k, v in partition_filter.items():
-            entry = F.col("partition_values").getItem(k)
-            manifest = manifest.filter(entry.isNull() | (entry == str(v)))
-    eliminated = _rowgroup_eliminated_paths(manifest, predicates)
-    survivors = (
-        manifest.select("path").distinct().join(eliminated, "path", "left_anti")
-    )
-    matching = sorted(r.path for r in survivors.collect())
-    return _open_matching(
+    return _pruned_scan(
         spark,
-        matching,
-        lambda: _any_path(manifest, manifest_dir),
+        manifest_dir,
+        lambda vis: localman.surviving_paths_multi_rowgroup(vis, predicates),
         predicates,
+        as_of,
+        partition_filter,
         merge_schema,
-    )
-
-
-def _rowgroup_eliminated_paths(
-    manifest: DataFrame, predicates: dict[str, tuple[float, float]]
-) -> DataFrame:
-    """Paths where NO row group can satisfy every predicate at once —
-    the row-group-granular elimination set. One groupBy over the
-    (metadata-scale) stats rows; NULL ranges (stats-less row group, or
-    a column the row group never tracked) conservatively pass."""
-    rg_ok = None
-    aggs = []
-    for i, (column, (lo, hi)) in enumerate(sorted(predicates.items())):
-        aggs.append(
-            F.max(
-                F.when(F.col("column_name") == column, F.col("min_val"))
-            ).alias(f"_min{i}")
-        )
-        aggs.append(
-            F.max(
-                F.when(F.col("column_name") == column, F.col("max_val"))
-            ).alias(f"_max{i}")
-        )
-    per_rg = (
-        manifest.filter(F.col("column_name").isin(list(predicates)))
-        .groupBy("path", "row_group")
-        .agg(*aggs)
-    )
-    for i, (_column, (lo, hi)) in enumerate(sorted(predicates.items())):
-        ok_i = F.coalesce(
-            (F.col(f"_max{i}") >= lo) & (F.col(f"_min{i}") <= hi),
-            F.lit(True),
-        )
-        rg_ok = ok_i if rg_ok is None else (rg_ok & ok_i)
-    return (
-        per_rg.withColumn("_rg_ok", rg_ok)
-        .groupBy("path")
-        .agg(F.max(F.col("_rg_ok").cast("int")).alias("_any_ok"))
-        .filter(F.col("_any_ok") == 0)
-        .select("path")
     )
 
 
@@ -766,72 +609,33 @@ def rowgroup_prune_report(
     files_file_level (survivors of the per-file conjunction),
     files_rowgroup_level (survivors of the per-row-group conjunction;
     always <=), rowgroups_matching (row groups satisfying every
-    predicate at once)."""
-    manifest = _visible_stats(spark.read.parquet(_mdd(manifest_dir)), None)
-    files_total = manifest.select("path").distinct().count()
-    rowgroups_total = (
-        manifest.select("path", "row_group").distinct().count()
+    predicate at once). Every count is per path, so each partition's
+    counts are partials, summed here."""
+    import pandas as _pd
+
+    keys = (
+        "files_total",
+        "rowgroups_total",
+        "files_file_level",
+        "files_rowgroup_level",
+        "rowgroups_matching",
     )
-    # file-level: replicate manifest_pruned_scan_multi's elimination
-    survivors = manifest.select("path").distinct()
-    for column, (lo, hi) in predicates.items():
-        eliminated = (
-            manifest.filter(F.col("column_name") == column)
-            .groupBy("path")
-            .agg(
-                F.min("min_val").alias("fmin"),
-                F.max("max_val").alias("fmax"),
-                F.sum(
-                    F.when(F.col("min_val").isNull(), 1).otherwise(0)
-                ).alias("n_statless"),
-            )
-            .filter(
-                (F.col("n_statless") == 0)
-                & ((F.col("fmax") < lo) | (F.col("fmin") > hi))
-            )
-            .select("path")
+
+    def fn(m):
+        vis = localman.visible(m, None)
+        counts = (
+            vis["path"].nunique(),
+            len(vis[["path", "row_group"]].drop_duplicates()),
+            len(localman.surviving_paths_multi(vis, predicates)),
+            len(localman.surviving_paths_multi_rowgroup(vis, predicates)),
+            int(localman.rowgroup_ok(vis, predicates).sum()),
         )
-        survivors = survivors.join(eliminated, "path", "left_anti")
-    files_file_level = survivors.count()
-    rg_eliminated = _rowgroup_eliminated_paths(manifest, predicates)
-    files_rowgroup_level = (
-        manifest.select("path")
-        .distinct()
-        .join(rg_eliminated, "path", "left_anti")
-        .count()
+        return _pd.DataFrame([counts], columns=keys)
+
+    out = localman.answer(
+        spark, manifest_dir, fn, ", ".join(f"{k} long" for k in keys)
     )
-    # matching row groups: the per-rg conjunction holds
-    aggs, rg_ok = [], None
-    for i, (column, (lo, hi)) in enumerate(sorted(predicates.items())):
-        aggs.append(
-            F.max(
-                F.when(F.col("column_name") == column, F.col("min_val"))
-            ).alias(f"_min{i}")
-        )
-        aggs.append(
-            F.max(
-                F.when(F.col("column_name") == column, F.col("max_val"))
-            ).alias(f"_max{i}")
-        )
-    per_rg = (
-        manifest.filter(F.col("column_name").isin(list(predicates)))
-        .groupBy("path", "row_group")
-        .agg(*aggs)
-    )
-    for i, (_column, (lo, hi)) in enumerate(sorted(predicates.items())):
-        ok_i = F.coalesce(
-            (F.col(f"_max{i}") >= lo) & (F.col(f"_min{i}") <= hi),
-            F.lit(True),
-        )
-        rg_ok = ok_i if rg_ok is None else (rg_ok & ok_i)
-    rowgroups_matching = per_rg.filter(rg_ok).count()
-    return {
-        "files_total": files_total,
-        "rowgroups_total": rowgroups_total,
-        "files_file_level": files_file_level,
-        "files_rowgroup_level": files_rowgroup_level,
-        "rowgroups_matching": rowgroups_matching,
-    }
+    return {k: int(out[k].sum()) for k in keys}
 
 
 #: the multi-predicate demo rectangle over (o_orderkey % 256,
@@ -1573,100 +1377,48 @@ def manifest_count_range(
     (n_total, n_from_metadata, n_files_scanned).
 
     The row-group CLASSIFICATION (inside / partial / statless) is a
-    question about the KB-scale stats table and runs DRIVER-SIDE via
-    :mod:`.localman` (Spark fallback); only the boundary files'
-    residual count is a Spark scan."""
-    lman = localman.load(manifest_dir)
-    if lman is not None:
-        vis = localman.visible(lman, as_of)
+    per-path question about the KB-scale stats table
+    (:func:`localman.answer`): each partition returns its scanned paths
+    with their wholly-inside row counts, plus one NULL-path row carrying
+    its metadata count; only the boundary files' residual count is a
+    Spark scan."""
+    import pandas as _pd
+
+    def fn(m):
+        vis = localman.visible(m, as_of)
         sub = vis[vis["column_name"] == column]
         statless = sub["min_val"].isna()
-        inside = (
-            ~statless & (sub["min_val"] >= lo) & (sub["max_val"] <= hi)
+        inside = ~statless & (sub["min_val"] >= lo) & (sub["max_val"] <= hi)
+        partial = ~statless & ~inside & (sub["max_val"] >= lo) & (
+            sub["min_val"] <= hi
         )
-        partial = (
-            ~statless
-            & ~inside
-            & (sub["max_val"] >= lo)
-            & (sub["min_val"] <= hi)
+        scan = sub.loc[partial | statless, "path"].unique()
+        n_inside = (
+            sub.loc[inside & sub["path"].isin(scan)]
+            .groupby("path")["n_rows"]
+            .sum()
         )
-        n_meta = int(sub.loc[inside, "n_rows"].sum())
-        scan_paths = sorted(sub.loc[partial | statless, "path"].unique())
-        n_scanned = 0
-        if scan_paths:
-            per_file_inside = (
-                sub.loc[inside & sub["path"].isin(scan_paths)]
-                .groupby("path")["n_rows"]
-                .sum()
-                .to_dict()
-            )
-            in_range = (
-                read_data_files(spark, scan_paths)
-                .filter(F.col(column).between(lo, hi))
-                .groupBy(_decode_input_file().alias("path"))
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            )
-            known = set(scan_paths)
-            for r in in_range:
-                if r.path not in known:
-                    raise ValueError(
-                        f"manifest_count_range: scanned file {r.path!r} "
-                        "did not resolve to a manifest path — count "
-                        "would be wrong"
-                    )
-                n_scanned += int(r.n) - int(per_file_inside.get(r.path, 0))
-        return n_meta + n_scanned, n_meta, len(scan_paths)
-    manifest = _visible_stats(spark.read.parquet(_mdd(manifest_dir)), as_of).filter(
-        F.col("column_name") == column
+        return _pd.DataFrame(
+            {
+                "path": [*scan, None],
+                "n_inside": [
+                    *(int(n_inside.get(p, 0)) for p in scan),
+                    int(sub.loc[inside, "n_rows"].sum()),
+                ],
+            }
+        )
+
+    out = localman.answer(
+        spark, manifest_dir, fn, "path string, n_inside long"
     )
-    rg = manifest.select(
-        "path",
-        "row_group",
-        "n_rows",
-        "min_val",
-        "max_val",
-        F.when(
-            F.col("min_val").isNull(), F.lit("statless")
-        )
-        .when(
-            (F.col("min_val") >= lo) & (F.col("max_val") <= hi),
-            F.lit("inside"),
-        )
-        .when(
-            (F.col("max_val") >= lo) & (F.col("min_val") <= hi),
-            F.lit("partial"),
-        )
-        .otherwise(F.lit("outside"))
-        .alias("cls"),
-    )
-    agg = rg.groupBy().pivot(
-        "cls", ["inside", "partial", "statless", "outside"]
-    ).sum("n_rows").collect()[0]
-    n_meta = int(agg["inside"] or 0)
-    scan_paths = sorted(
-        r.path
-        for r in rg.filter(F.col("cls").isin("partial", "statless"))
-        .select("path")
-        .distinct()
-        .collect()
-    )
+    per_file = out[out["path"].notna()]
+    n_meta = int(out.loc[out["path"].isna(), "n_inside"].sum())
+    per_file_inside = dict(zip(per_file["path"], per_file["n_inside"]))
+    scan_paths = sorted(per_file_inside)
     n_scanned = 0
     if scan_paths:
-        # exclude the wholly-inside row groups of scanned files: count
-        # only rows in the range but NOT in an inside-rowgroup... a row
-        # group is the unit, so instead count the file's in-range rows
-        # and subtract its inside-rowgroup metadata counts (already in
-        # n_meta) — equivalent and expressible without rowgroup access
-        per_file_inside = {
-            r.path: r.m
-            for r in rg.filter(
-                (F.col("cls") == "inside") & F.col("path").isin(scan_paths)
-            )
-            .groupBy("path")
-            .agg(F.sum("n_rows").alias("m"))
-            .collect()
-        }
+        # count each scanned file's in-range rows and subtract its
+        # inside-rowgroup metadata counts (already in n_meta)
         in_range = (
             read_data_files(spark, scan_paths)
             .filter(F.col(column).between(lo, hi))
@@ -1678,14 +1430,13 @@ def manifest_count_range(
         # containing spaces/%-chars would miss the manifest path map and
         # double-count inside-rowgroups — decode, and refuse to return a
         # silently-wrong count if any scanned path still fails to resolve
-        known = set(scan_paths)
         for r in in_range:
-            if r.path not in known:
+            if r.path not in per_file_inside:
                 raise ValueError(
                     f"manifest_count_range: scanned file {r.path!r} did "
                     "not resolve to a manifest path — count would be wrong"
                 )
-            n_scanned += int(r.n) - int(per_file_inside.get(r.path, 0))
+            n_scanned += int(r.n) - int(per_file_inside[r.path])
     return n_meta + n_scanned, n_meta, len(scan_paths)
 
 
@@ -1836,105 +1587,77 @@ def describe_history(spark: SparkSession, manifest_dir: str) -> DataFrame:
     per snapshot with the operation kinds committed there, files
     added/removed, rows added, and the commit wall-clock (from the
     commit_ts marker; NULL for commits that predate timestamp
-    stamping). Entirely metadata-scale: a handful of KB-manifest
-    aggregates, zero data pages — the audit surface an operator reads
-    before rolling back or pinning a training run. Computed
-    DRIVER-SIDE via :mod:`.localman` (the result is |snapshots| rows
-    of local metadata; the Spark 4-way join below re-executed on every
-    action that touched the history view — r15 profiling); identical
-    values, pinned by the registered query's oracle."""
-    lman = localman.load(manifest_dir)
-    if lman is not None:
-        import pandas as _pd
+    stamping). Entirely metadata-scale: one grouping of the manifest
+    rows by snapshot, zero data pages — the audit surface an operator
+    reads before rolling back or pinning a training run. Each
+    partition's per-snapshot partial (:func:`localman.answer`; a path
+    lives in one partition, so its files and rows count once) is
+    combined here: op kinds by set union, counts by sum, the clock by
+    max. Values pinned by the registered query's oracle."""
+    import pandas as _pd
 
-        rows = []
-        for snap in sorted(int(s) for s in lman["snapshot_id"].unique()):
-            sub = lman[lman["snapshot_id"] == snap]
-            non_ts = sub[sub["op"] != "commit_ts"]
-            ops = ",".join(sorted(non_ts["op"].unique()))
-            add = sub[sub["op"] == "add"]
-            addu = add[["path", "row_group", "n_rows"]].drop_duplicates()
-            n_files_added = int(addu["path"].nunique())
-            n_rows_added = int(addu["n_rows"].sum()) if len(addu) else 0
-            n_files_removed = int(
-                sub.loc[sub["op"] == "remove", "path"].nunique()
-            )
-            n_del = int((non_ts["op"] == "delete_eq").sum())
-            tsv = sub.loc[sub["op"] == "commit_ts", "min_val"]
-            commit_ts = (
-                float(tsv.max())
-                if len(tsv) and not tsv.isna().all()
-                else None
-            )
-            rows.append(
-                (snap, ops, n_files_added, n_files_removed,
-                 n_rows_added, n_del, commit_ts)
-            )
-        return spark.createDataFrame(
-            rows,
-            "snapshot_id long, ops string, n_files_added long,"
-            " n_files_removed long, n_rows_added long,"
-            " n_delete_records long, commit_ts double",
+    cols = (
+        "snapshot_id",
+        "ops",
+        "n_files_added",
+        "n_files_removed",
+        "n_rows_added",
+        "n_delete_records",
+        "commit_ts",
+    )
+    schema = (
+        "snapshot_id long, ops string, n_files_added long,"
+        " n_files_removed long, n_rows_added long,"
+        " n_delete_records long, commit_ts double"
+    )
+
+    counts = list(cols[2:6])
+
+    def fn(m):
+        op, snap = m["op"], m["snapshot_id"]
+        # per-column stats rows repeat (path, row_group, n_rows): dedupe
+        # before summing or every file counts |columns| times
+        adds = (
+            m.loc[op == "add", ["snapshot_id", "path", "row_group", "n_rows"]]
+            .drop_duplicates()
+            .groupby("snapshot_id")
         )
-    man = spark.read.parquet(_mdd(manifest_dir))
-    adds = (
-        man.filter(F.col("op") == "add")
-        # per-column stats rows repeat (path, row_group, n_rows):
-        # dedupe before summing or every file counts |columns| times
-        .select("snapshot_id", "path", "row_group", "n_rows")
-        .distinct()
-        .groupBy("snapshot_id")
-        .agg(
-            F.countDistinct("path").cast("long").alias("n_files_added"),
-            F.sum("n_rows").cast("long").alias("n_rows_added"),
+        out = _pd.DataFrame(
+            index=_pd.Index(snap.unique(), name="snapshot_id")
+        ).assign(
+            ops=m[op != "commit_ts"]
+            .groupby("snapshot_id")["op"]
+            .agg(lambda o: ",".join(sorted(set(o)))),
+            n_files_added=adds["path"].nunique(),
+            n_files_removed=m[op == "remove"]
+            .groupby("snapshot_id")["path"]
+            .nunique(),
+            n_rows_added=adds["n_rows"].sum(),
+            n_delete_records=(op == "delete_eq").groupby(snap).sum(),
+            commit_ts=m[op == "commit_ts"]
+            .groupby("snapshot_id")["min_val"]
+            .max(),
         )
+        out[counts] = out[counts].fillna(0).astype("int64")
+        return out.fillna({"ops": ""}).reset_index()[list(cols)]
+
+    g = localman.answer(spark, manifest_dir, fn, schema).groupby(
+        "snapshot_id"
     )
-    removes = (
-        man.filter(F.col("op") == "remove")
-        .groupBy("snapshot_id")
-        .agg(F.countDistinct("path").cast("long").alias("n_files_removed"))
+    ops = g["ops"].agg(
+        lambda o: ",".join(sorted({k for v in o for k in v.split(",") if k}))
     )
-    ts = (
-        man.filter(F.col("op") == "commit_ts")
-        .groupBy("snapshot_id")
-        .agg(F.max("min_val").alias("commit_ts"))
-    )
-    ops = (
-        man.filter(F.col("op") != "commit_ts")
-        .groupBy("snapshot_id")
-        .agg(
-            F.array_join(F.array_sort(F.collect_set("op")), ",").alias("ops"),
-            F.sum(
-                F.when(F.col("op") == "delete_eq", 1).otherwise(0)
-            ).cast("long").alias("n_delete_records"),
+    summed, clock = g[counts].sum(), g["commit_ts"].max()
+    rows = [
+        (
+            int(s),
+            ops[s],
+            *(int(v) for v in summed.loc[s]),
+            None if _pd.isna(clock[s]) else float(clock[s]),
         )
-    )
-    return (
-        man.select("snapshot_id")
-        .distinct()
-        .join(ops, "snapshot_id", "left")
-        .join(adds, "snapshot_id", "left")
-        .join(removes, "snapshot_id", "left")
-        .join(ts, "snapshot_id", "left")
-        .select(
-            F.col("snapshot_id").cast("long").alias("snapshot_id"),
-            F.coalesce("ops", F.lit("")).alias("ops"),
-            F.coalesce("n_files_added", F.lit(0)).cast("long").alias(
-                "n_files_added"
-            ),
-            F.coalesce("n_files_removed", F.lit(0)).cast("long").alias(
-                "n_files_removed"
-            ),
-            F.coalesce("n_rows_added", F.lit(0)).cast("long").alias(
-                "n_rows_added"
-            ),
-            F.coalesce("n_delete_records", F.lit(0)).cast("long").alias(
-                "n_delete_records"
-            ),
-            "commit_ts",
-        )
-        .orderBy("snapshot_id")
-    )
+        for s in sorted(g.groups)
+    ]
+    return spark.createDataFrame(rows, schema)
 
 
 @register(

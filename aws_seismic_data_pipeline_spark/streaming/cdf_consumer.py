@@ -116,8 +116,8 @@ class CdfConsumer:
         """One tick: poll the committed tip and, if it moved past the
         consumed tip, apply the window ``(last_consumed, tip]``; returns
         the number of non-empty windows this consumer has applied."""
-        # committed tip off the manifest footers (driver-side pyarrow,
-        # Spark fallback inside _next_snapshot — max(snapshot_id))
+        # committed tip off the manifest footers (driver-side pyarrow
+        # inside _next_snapshot — max(snapshot_id))
         tip = _next_snapshot(self.spark, self.manifest_dir) - 1
         last = self._last
         if tip <= last:

@@ -575,12 +575,36 @@ def test_partition_values_py_matches_spark():
     assert localman.partition_values_py("/t/lang=en/x.parquet", ()) is None
 
 
-def test_multi_and_rowgroup_survivors(spark, staged):
-    _data, mpath = staged
-    from aws_seismic_data_pipeline_spark.sources.table.manifest import (
-        _rowgroup_eliminated_paths,
+def _rowgroup_eliminated_paths(manifest, predicates):
+    """Spark reference for row-group elimination: paths where NO row
+    group can satisfy every predicate at once (one groupBy over the
+    stats rows; NULL ranges conservatively pass)."""
+    aggs = []
+    for i, (column, _rng) in enumerate(sorted(predicates.items())):
+        is_col = F.col("column_name") == column
+        aggs.append(F.max(F.when(is_col, F.col("min_val"))).alias(f"_min{i}"))
+        aggs.append(F.max(F.when(is_col, F.col("max_val"))).alias(f"_max{i}"))
+    per_rg = (
+        manifest.filter(F.col("column_name").isin(list(predicates)))
+        .groupBy("path", "row_group")
+        .agg(*aggs)
+    )
+    rg_ok = F.lit(True)
+    for i, (_column, (lo, hi)) in enumerate(sorted(predicates.items())):
+        rg_ok = rg_ok & F.coalesce(
+            (F.col(f"_max{i}") >= lo) & (F.col(f"_min{i}") <= hi), F.lit(True)
+        )
+    return (
+        per_rg.withColumn("_rg_ok", rg_ok)
+        .groupBy("path")
+        .agg(F.max(F.col("_rg_ok").cast("int")).alias("_any_ok"))
+        .filter(F.col("_any_ok") == 0)
+        .select("path")
     )
 
+
+def test_multi_and_rowgroup_survivors(spark, staged):
+    _data, mpath = staged
     man = localman.load(mpath)
     vis = localman.visible(man, None)
     preds = {"doc_id": (0.0, 50.0)}
@@ -594,6 +618,15 @@ def test_multi_and_rowgroup_survivors(spark, staged):
     )
     want = sorted(r.path for r in survivors.collect())
     assert got == want
+
+
+def _read_manifest(mpath):
+    """The whole manifest through pyarrow, whatever the localman gate."""
+    import pyarrow.dataset as pads
+
+    return localman._frame(
+        pads.dataset(_mdd(mpath), format="parquet").to_table()
+    )
 
 
 def _commit_sequence(spark, template, root):
@@ -666,7 +699,7 @@ def _commit_sequence(spark, template, root):
             spark, mpath, "doc_id", "n_chars", n_files=2, partition_by=part
         ),
     )
-    vis = localman.visible(localman.load(mpath), None)
+    vis = localman.visible(_read_manifest(mpath), None)
     en = sorted(p for p in vis["path"].unique() if "/lang=en/" in p)
     commit(
         "compaction",
@@ -692,7 +725,7 @@ def _commit_sequence(spark, template, root):
             return uuid.sub("", v.replace(root, "<root>"))
         return float(v)
 
-    man = localman.load(mpath)
+    man = _read_manifest(mpath)
     rows = []
     for rec in man[list(localman._COLS)].to_dict("records"):
         if rec["op"] in ("commit_ts", "remove"):
@@ -705,8 +738,11 @@ def test_commits_agree_with_commit_gate_closed(spark, tmp_path, monkeypatch):
     """Closing the commit gate (``footers._LOCAL_COMMIT_MAX`` = 0, the
     one binding every footer read and commit consults) sends each
     footer read to the distributed fan-out — the path a commit over
-    more than 64 files takes. Every compound commit must still land
-    the gate-open manifest rows, as exactly ONE manifest file."""
+    more than 64 files takes. Closing the manifest gate
+    (``localman._LOCAL_MAN_MAX`` = 0) sends each verb's planning to
+    ``localman.answer``'s Spark placement. Either way every compound
+    commit must still land the gate-open manifest rows, as exactly ONE
+    manifest file."""
     from aws_seismic_data_pipeline_spark.sources import footers
 
     template = str(tmp_path / "template")
@@ -733,6 +769,13 @@ def test_commits_agree_with_commit_gate_closed(spark, tmp_path, monkeypatch):
         want, want_added = _commit_sequence(
             spark, template, str(tmp_path / "open")
         )
+        with monkeypatch.context() as m:
+            # the manifest gate closed: every write verb's planning runs
+            # in localman.answer's path-partitioned Spark tasks
+            m.setattr(localman, "_LOCAL_MAN_MAX", 0)
+            planned, planned_added = _commit_sequence(
+                spark, template, str(tmp_path / "man_closed")
+            )
         monkeypatch.setattr(footers, "_LOCAL_COMMIT_MAX", 0)
         got, got_added = _commit_sequence(
             spark, template, str(tmp_path / "closed")
@@ -741,7 +784,8 @@ def test_commits_agree_with_commit_gate_closed(spark, tmp_path, monkeypatch):
         spark.conf.set(key, prior)
     assert {op for *_, op, _pv in want} >= {"add", "remove", "delete_eq"}
     assert got == want
-    assert want_added == got_added == {
+    assert planned == want
+    assert want_added == got_added == planned_added == {
         "append": 1,
         "merge": 1,
         "optimize": 1,
@@ -749,3 +793,174 @@ def test_commits_agree_with_commit_gate_closed(spark, tmp_path, monkeypatch):
         "delete": 1,
         "delete_compaction": 1,
     }
+
+
+def _write_side_sequence(spark, template, root):
+    """Copy the table under ``template`` to ``root`` and run the write
+    verbs whose planning is file-scale: append twice, rollback past the
+    second append, vacuum report, incremental z-order OPTIMIZE, MERGE
+    with schema evolution and bin-pack OPTIMIZE. Returns each verb's
+    answer and the final manifest rows, paths relative to ``root``,
+    wall clocks blanked."""
+    import re
+    import shutil
+
+    from aws_seismic_data_pipeline_spark.sources.table.maintenance import (
+        merge_evolve_through_manifest,
+        optimize_table,
+        optimize_zorder_incremental,
+        rollback_manifest,
+        vacuum_orphans_report,
+    )
+
+    shutil.copytree(template, root)
+    data_dir, mpath = os.path.join(root, "data"), os.path.join(root, "m")
+    cols = ("doc_id", "n_chars")
+    base = sorted(glob.glob(os.path.join(data_dir, "part-*.parquet")))
+    write_stats_manifest(spark, base, mpath, cols)
+    late = sorted(glob.glob(os.path.join(data_dir, "late-*.parquet")))
+    append_stats_manifest(spark, late[:1], mpath, cols)
+    append_stats_manifest(spark, late[1:], mpath, cols)
+    uuid = re.compile(r"-[0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12}")
+
+    def norm(v):
+        if isinstance(v, dict):
+            return tuple(sorted(v.items()))
+        if isinstance(v, (list, tuple)):
+            return tuple(norm(x) for x in v)
+        if v is None or (isinstance(v, float) and v != v):
+            return None
+        if isinstance(v, str):
+            return uuid.sub("", v.replace(root, "<root>"))
+        return float(v)
+
+    out = {"rollback": rollback_manifest(spark, mpath, 1)}
+    report = vacuum_orphans_report(spark, data_dir, mpath)
+    out["vacuum"] = sorted(tuple(r) for r in report.collect())
+    out["zorder_incremental"] = optimize_zorder_incremental(
+        spark, mpath, "doc_id", "n_chars", n_files=1
+    )
+    docs = spark.read.parquet(*base)
+    delta = docs.filter(F.col("doc_id") % 4 == 0).select(
+        "doc_id",
+        (F.col("n_chars") + 1).alias("n_chars"),
+        F.lit("x").alias("tag"),
+    )
+    out["merge_evolve"] = merge_evolve_through_manifest(
+        spark, mpath, delta, "doc_id", ["n_chars", "tag"]
+    )
+    out["optimize"] = optimize_table(spark, mpath, 1 << 30)
+    rows = []
+    for rec in _read_manifest(mpath)[list(localman._COLS)].to_dict("records"):
+        if rec["op"] in ("commit_ts", "remove"):
+            rec["min_val"] = rec["max_val"] = None
+        rows.append(tuple(norm(rec[c]) for c in localman._COLS))
+    return {k: norm(v) for k, v in out.items()}, sorted(rows, key=repr)
+
+
+def test_write_side_planning_agrees_with_gate_closed(
+    spark, tmp_path, monkeypatch
+):
+    """With the manifest gate closed, rollback, the vacuum report,
+    incremental OPTIMIZE, MERGE with schema evolution and bin-pack
+    OPTIMIZE plan through ``localman.answer``'s Spark placement and must
+    give the gate-open answers and manifest rows."""
+    template = str(tmp_path / "template")
+    data_dir = os.path.join(template, "data")
+    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "n_chars")
+    docs.repartitionByRange(4, "doc_id").write.parquet(data_dir)
+    # late-0 spans the whole key range (the scattered tail incremental
+    # OPTIMIZE rewrites); late-1 lands above it and is rolled back
+    for i, shift in enumerate((0, 1000000)):
+        stage = os.path.join(template, f"stage{i}")
+        docs.filter(F.col("doc_id") % 7 == i).withColumn(
+            "doc_id", F.col("doc_id") + F.lit(shift)
+        ).coalesce(1).write.parquet(stage)
+        os.replace(
+            sorted(glob.glob(os.path.join(stage, "part-*.parquet")))[0],
+            os.path.join(data_dir, f"late-{i}.parquet"),
+        )
+    key = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "1000000")
+    try:
+        want = _write_side_sequence(spark, template, str(tmp_path / "open"))
+        monkeypatch.setattr(localman, "_LOCAL_MAN_MAX", 0)
+        got = _write_side_sequence(spark, template, str(tmp_path / "closed"))
+    finally:
+        spark.conf.set(key, prior)
+    answers = want[0]
+    assert answers["rollback"] == 3.0
+    assert len(answers["vacuum"]) > 0
+    assert answers["zorder_incremental"][1] == 1.0  # the scattered append
+    assert answers["merge_evolve"][3] == ("tag",)
+    assert got == want
+
+
+def test_merge_evolve_schema_read_failure_raises(
+    spark, staged, tmp_path, monkeypatch
+):
+    """The evolved-column decision reads the first visible file's
+    footer; a failed read raises and commits nothing, instead of
+    sampling another file through Spark."""
+    import pyarrow.parquet as pq
+
+    from aws_seismic_data_pipeline_spark.sources.table.maintenance import (
+        merge_evolve_through_manifest,
+    )
+
+    data_dir, _m = staged
+    mpath = str(tmp_path / "manifest")
+    files = sorted(glob.glob(os.path.join(data_dir, "*.parquet")))
+    write_stats_manifest(spark, files, mpath, ("doc_id",))
+    before = sorted(map(repr, _read_manifest(mpath).to_dict("records")))
+    delta = spark.read.parquet(files[0]).select(
+        "doc_id", F.lit(1).alias("extra")
+    )
+
+    def planted(*_a, **_k):
+        raise OSError("planted footer read failure")
+
+    monkeypatch.setattr(pq, "read_schema", planted)
+    with pytest.raises(OSError, match="planted"):
+        merge_evolve_through_manifest(spark, mpath, delta, "doc_id", ["extra"])
+    monkeypatch.undo()
+    after = sorted(map(repr, _read_manifest(mpath).to_dict("records")))
+    assert after == before
+
+
+@pytest.mark.parametrize("gate", ["open", "closed"])
+def test_unmatched_partition_filter_scans_return_no_rows(
+    spark, tmp_path, monkeypatch, gate
+):
+    """A partition filter that matches no file gives an empty scan with
+    the table's columns: the empty result's schema file comes from the
+    visible files before the partition filter."""
+    from aws_seismic_data_pipeline_spark.sources.table.facade import (
+        GovernedTable,
+    )
+
+    docs = load_table(spark, SF_DIR, "documents").select(
+        "doc_id", "lang", "n_chars"
+    )
+    table = GovernedTable.create(
+        spark,
+        docs,
+        str(tmp_path / "data"),
+        str(tmp_path / "m"),
+        "doc_id",
+        n_files=2,
+        partition_by=("lang",),
+    )
+    columns = table.scan().columns
+    if gate == "closed":
+        monkeypatch.setattr(localman, "_LOCAL_MAN_MAX", 0)
+    none = {"lang": "xx"}
+    box = {"doc_id": (float("-inf"), float("inf"))}
+    for df in (
+        table.scan(partition_filter=none),
+        table.scan_multi(box, partition_filter=none),
+        table.scan_multi_rowgroup(box, partition_filter=none),
+    ):
+        assert df.columns == columns
+        assert df.count() == 0

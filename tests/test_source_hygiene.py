@@ -214,7 +214,7 @@ NON_DATA_READS = {
     # the stats-manifest introspection demo reads the manifest root
     ("sources/table/manifest.py", "scan_manifest_stats"),
     # row count of the rewritten manifest before the expire swap
-    ("sources/table/maintenance.py", "expire_manifest_history"),
+    ("sources/table/maintenance.py", "_expire_rewrite_spark"),
     # orphans are files the manifest does NOT govern; read with
     # basePath so their partition values survive
     ("sources/table/maintenance.py", "vacuum_orphans_report"),
@@ -283,35 +283,17 @@ def test_table_data_reads_pin_their_schema():
 
 
 #: (module, function) pairs allowed to read the stats manifest through
-#: Spark (``spark.read.parquet(_mdd(...))``). Each is a FILE-SCALE
-#: question's Spark twin above the localman gate, or a distributed
-#: manifest rewrite. A
-#: commit-scale question (expire floor, commit clocks, live delete
-#: keys, schema history, constraints, incremental window, CDF
-#: inventory) reads through ``localman.commit_rows`` instead, so a new
+#: Spark (``spark.read.parquet(_mdd(...))``): the Spark placement of
+#: ``localman.answer``, which runs every file-scale question above the
+#: localman gate, and expire's rewrite above it, which scales with the
+#: table. A commit-scale question (expire floor, commit clocks, live
+#: delete keys, schema history, constraints, incremental window, CDF
+#: inventory) reads through ``localman.commit_rows``, and a file-scale
+#: one is a pandas function passed to ``localman.answer``, so a new
 #: Spark manifest read fails here until someone audits its scale.
 SPARK_MANIFEST_READS = {
-    ("sources/table/cdf.py", "_delete_preimages"),
-    ("sources/table/deletes.py", "compact_equality_deletes"),
-    ("sources/table/evolution.py", "_effective_columns"),
-    ("sources/table/facade.py", "visible_files"),
-    ("sources/table/maintenance.py", "_union_tracked_paths"),
-    ("sources/table/maintenance.py", "vacuum_orphans"),
-    ("sources/table/maintenance.py", "commit_data_compaction"),
-    ("sources/table/maintenance.py", "rollback_manifest"),
-    ("sources/table/maintenance.py", "merge_through_manifest"),
-    ("sources/table/maintenance.py", "merge_evolve_through_manifest"),
-    ("sources/table/maintenance.py", "expire_manifest_history"),
-    ("sources/table/maintenance.py", "_optimize_curve"),
-    ("sources/table/maintenance.py", "_optimize_curve_incremental"),
-    ("sources/table/maintenance.py", "optimize_table"),
-    ("sources/table/manifest.py", "manifest_row_count"),
-    ("sources/table/manifest.py", "manifest_pruned_scan"),
-    ("sources/table/manifest.py", "manifest_pruned_scan_multi"),
-    ("sources/table/manifest.py", "manifest_pruned_scan_multi_rowgroup"),
-    ("sources/table/manifest.py", "rowgroup_prune_report"),
-    ("sources/table/manifest.py", "manifest_count_range"),
-    ("sources/table/manifest.py", "describe_history"),
+    ("sources/table/localman.py", "_on_cluster"),
+    ("sources/table/maintenance.py", "_expire_rewrite_spark"),
 }
 
 
@@ -384,7 +366,7 @@ def _spark_manifest_writes(tree):
 #: rewrite above the localman gate.
 SPARK_MANIFEST_WRITES = {
     ("sources/table/manifest.py", "write_stats_manifest"),
-    ("sources/table/maintenance.py", "expire_manifest_history"),
+    ("sources/table/maintenance.py", "_expire_rewrite_spark"),
 }
 
 
@@ -403,3 +385,43 @@ def test_spark_manifest_writes_are_allowlisted():
         "allowlisted Spark manifest write no longer exists — drop it: "
         f"{sorted(SPARK_MANIFEST_WRITES - found)}"
     )
+
+
+def _gate_branches(tree):
+    """Line numbers of every ``x is None`` / ``x is not None`` test on a
+    manifest frame: a name bound from ``localman.load(...)``,
+    ``localman.frame(...)`` or named ``lman``."""
+    frames = {"lman"}
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Assign)
+            and isinstance(node.value, ast.Call)
+            and ast.unparse(node.value.func)
+            in ("localman.load", "localman.frame")
+        ):
+            frames |= {t.id for t in node.targets if isinstance(t, ast.Name)}
+    return [
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Compare)
+        and isinstance(node.left, ast.Name)
+        and node.left.id in frames
+        and isinstance(node.ops[0], (ast.Is, ast.IsNot))
+        and isinstance(node.comparators[0], ast.Constant)
+        and node.comparators[0].value is None
+    ]
+
+
+def test_no_manifest_gate_branch_outside_localman():
+    """The localman gate is decided in ONE place (``localman.placed``):
+    a verb that tests its manifest frame against None is growing a
+    driver/Spark twin again — pass the question to
+    ``localman.answer`` instead."""
+    offenders = []
+    for p in _py_files():
+        rel = _rel(p)
+        if rel == "sources/table/localman.py":
+            continue
+        for lineno in _gate_branches(ast.parse(open(p).read())):
+            offenders.append(f"{rel}:{lineno}")
+    assert not offenders, offenders
