@@ -7,27 +7,35 @@ of a table that also MERGES and DELETES needs the Delta CDF contract:
 one row per changed row per commit, tagged ``insert`` /
 ``update_preimage`` / ``update_postimage`` / ``delete``. There are no
 stored change files — the feed is DERIVED relationally from what the
-commits already record:
+commits already record, in two stages:
 
-- a CoW merge / compaction / retention commit is an add+tombstone
-  pair: the change rows are the DIFF of the removed files' visible
-  rows against the added files' visible rows, keyed on the table key
-  (a compaction moves rows without changing them, so its diff is
-  empty — maintenance commits produce no feed rows, exactly Delta's
-  behavior, without needing an operation tag to special-case them);
-- an equality-delete commit records its keys in metadata: the change
-  rows are the deleted keys' rows as visible at the PARENT snapshot;
-- "visible" on both sides subtracts the delete records in force at
-  that side's snapshot, so a later compaction that physically drops
-  already-reported deleted rows does not re-report them.
+1. :func:`signed_rows` reads every commit side in the window as ONE
+   union of signed rows tagged with the commit's snapshot: the rows of
+   the files a commit removed, visible at its parent, at ``_w = -1``;
+   the rows of the files it added, visible at itself, at ``_w = +1``;
+   an equality-delete commit's preimages (the deleted keys' rows as
+   visible at the PARENT snapshot) at ``_w = -1``. "Visible" subtracts
+   the delete records in force at that side's snapshot, so a later
+   compaction that physically drops already-reported deleted rows does
+   not re-report them.
+2. :func:`table_changes` pairs the -1 and +1 rows with ONE full-outer
+   join on (commit, table key) for the whole window: a +1-only key is
+   an insert, a -1-only key a delete, a changed row an update pre+post
+   pair, an identical row nothing (a compaction moves rows without
+   changing them, so it feeds nothing — Delta's behavior, without an
+   operation tag to special-case it).
+
+An additive consumer (``streaming/cdf_consumer.py``) needs only stage
+1: a row a commit rewrote unchanged contributes +1 and -1, which
+cancel, so summing ``_w`` needs no join at all.
 
 Scale shape: cost is O(bytes rewritten in the window + delete-candidate
 files), never O(table) — candidacy for delete preimages is decided on
 the manifest's footer stats (the ``merge_through_manifest`` pattern),
-the per-commit file lists are metadata-scale, and each commit's diff
-is one full-outer join on the key over only that commit's touched
-files. Readable while the underlying files exist (same contract as
-time travel; VACUUM forfeits the window it reclaims).
+the per-commit file lists are metadata-scale, and the window's one
+pairing join runs over only the files its commits touched. Readable
+while the underlying files exist (same contract as time travel;
+VACUUM forfeits the window it reclaims).
 
 Seed: the reference's migration rescans the FULL listing to learn what
 changed (``/root/reference/upload_to_rfs.py:16-35``) — this is the
@@ -57,99 +65,76 @@ _CT_UPDATE_PRE = "update_preimage"
 _CT_UPDATE_POST = "update_postimage"
 
 
-def _normalized_input_file() -> "F.Column":
-    """`input_file_name()` as the POSIX path the manifest records
-    (local URIs arrive as file:/... or file:///...). The URI is
-    percent-encoded (a space in a data path arrives as %20) while the
-    manifest stores raw POSIX paths, so the name must be URL-DECODED
-    before the isin() routing or the file's rows silently match
-    neither diff side and vanish from the feed. A literal '+' is kept
-    literal (escaped to %2B first — Spark's url_decode applies
-    form-encoding semantics where a bare '+' would decode to space;
-    path URIs never encode space as '+')."""
-    posix = F.regexp_replace(F.input_file_name(), "^file:/+", "/")
-    return F.url_decode(F.regexp_replace(posix, r"\+", "%2B"))
-
-
-def _tag(df: DataFrame, change_type: str, snap: int) -> DataFrame:
-    return df.withColumn("_change_type", F.lit(change_type)).withColumn(
-        "_commit_snapshot", F.lit(int(snap)).cast("long")
+def signed_rows(
+    spark: SparkSession,
+    manifest_dir: str,
+    key: str,
+    lo: int,
+    hi: int,
+    columns=None,
+) -> DataFrame | None:
+    """Every commit side in the HALF-OPEN window (lo, hi] as ONE union
+    frame tagged ``_commit_snapshot`` (long) and ``_w`` (int): rows of
+    the files a commit removed, visible as of its parent, and its
+    equality-delete preimages at -1; rows of the files it added,
+    visible as of itself, at +1. ``columns`` (which must hold ``key``)
+    projects every side, so the scans read nothing else; None keeps
+    every column, NULL-filling a column some side's files lack. Returns
+    None when no commit in the window touched a row. Both window edges
+    behave as-of-style: lo=N excludes N's own commit, hi=N includes it."""
+    lo, hi = int(lo), int(hi)
+    if hi < lo:
+        raise ValueError(f"change-feed window: to={hi} < from={lo}")
+    # the commit inventory is commit-scale and resolves driver-side;
+    # the loaded frame (None above the localman gate) also serves the
+    # file-scale delete candidacy and the live-delete subtraction below
+    lman = localman.load(manifest_dir)
+    inv = localman.commit_rows(
+        manifest_dir,
+        ("add", "remove", "delete_eq"),
+        ("snapshot_id", "op", "path", "column_name", "min_val"),
+        lman,
+        after=lo,
+        upto=hi,
     )
+    dels = inv[(inv["op"] == "delete_eq") & (inv["column_name"] == key)]
+    dels = dels.dropna(subset=["min_val"])
+    files = inv[inv["op"] != "delete_eq"]
 
-
-def _diff_changes(
-    old: DataFrame, new: DataFrame, key: str, snap: int
-) -> DataFrame:
-    """Row-level diff of one commit's removed-file rows (``old``)
-    against its added-file rows (``new``), keyed on the (unique —
-    the MERGE precondition) table key: new-only keys are inserts,
-    old-only keys deletes, changed rows an update pre+post pair,
-    identical rows nothing. One full-outer join, one pass; the
-    update pair materializes via an exploded 0/1/2-element struct
-    array so no side is scanned twice."""
-    cols = [
-        c
-        for c in dict.fromkeys([*old.columns, *new.columns])
-        if c != key
-    ]
-    for c in cols:  # align mixed schemas (evolution): NULL-backfill
-        if c not in old.columns:
-            old = old.withColumn(c, F.lit(None))
-        if c not in new.columns:
-            new = new.withColumn(c, F.lit(None))
-    o, n = old.alias("o"), new.alias("n")
-    j = o.join(n, F.col(f"o.{key}") == F.col(f"n.{key}"), "full_outer")
-    same = reduce(
-        lambda a, b: a & b,
-        [F.col(f"o.{c}").eqNullSafe(F.col(f"n.{c}")) for c in cols],
-        F.lit(True),
-    )
-    payload_o = F.struct(
-        *[F.col(f"o.{c}").alias(c) for c in (key, *cols)]
-    )
-    payload_n = F.struct(
-        *[F.col(f"n.{c}").alias(c) for c in (key, *cols)]
-    )
-
-    def _entry(ct: str, payload) -> "F.Column":
-        return F.struct(
-            F.lit(ct).alias("_ct"), payload.alias("_row")
+    def side(df: DataFrame, w: int, snap: int) -> DataFrame:
+        if columns is not None:
+            df = df.select(*[c for c in columns if c in df.columns])
+        return df.select(
+            "*",
+            F.lit(w).alias("_w"),
+            F.lit(snap).cast("long").alias("_commit_snapshot"),
         )
 
-    exploded = (
-        j.select(
-            F.when(F.col(f"o.{key}").isNull(), F.lit(_CT_INSERT))
-            .when(F.col(f"n.{key}").isNull(), F.lit(_CT_DELETE))
-            .when(~same, F.lit("update"))
-            .otherwise(F.lit("none"))
-            .alias("_cls"),
-            payload_o.alias("_o"),
-            payload_n.alias("_n"),
-        )
-        .filter(F.col("_cls") != "none")
-        .select(
-            F.explode(
-                F.when(
-                    F.col("_cls") == "update",
-                    F.array(
-                        _entry(_CT_UPDATE_PRE, F.col("_o")),
-                        _entry(_CT_UPDATE_POST, F.col("_n")),
-                    ),
-                )
-                .when(
-                    F.col("_cls") == _CT_INSERT,
-                    F.array(_entry(_CT_INSERT, F.col("_n"))),
-                )
-                .otherwise(F.array(_entry(_CT_DELETE, F.col("_o"))))
-            ).alias("_e")
-        )
-        .select(
-            "_e._row.*",
-            F.col("_e._ct").alias("_change_type"),
-        )
-        .withColumn("_commit_snapshot", F.lit(int(snap)).cast("long"))
+    def visible(paths, as_of: int) -> DataFrame:
+        rows = read_data_files(spark, sorted(set(paths)), merge_schema=True)
+        return subtract_live_deletes(rows, manifest_dir, key, as_of, lman)
+
+    frames: list[DataFrame] = []
+    for snap in sorted({int(s) for s in inv["snapshot_id"]}):
+        keys = sorted(set(dels.loc[dels["snapshot_id"] == snap, "min_val"]))
+        if keys:
+            pre = _delete_preimages(
+                spark, manifest_dir, key, [float(k) for k in keys], snap, lman
+            )
+            if pre is not None:  # no-op delete: zero feed rows (Delta)
+                frames.append(side(pre, -1, snap))
+        at = files[files["snapshot_id"] == snap]
+        removes = list(at.loc[at["op"] == "remove", "path"])
+        adds = list(at.loc[at["op"] == "add", "path"])
+        if removes:
+            frames.append(side(visible(removes, snap - 1), -1, snap))
+        if adds:
+            frames.append(side(visible(adds, snap), 1, snap))
+    if not frames:
+        return None
+    return reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
     )
-    return exploded
 
 
 def table_changes(
@@ -164,112 +149,74 @@ def table_changes(
     ``_change_type`` (insert / update_preimage / update_postimage /
     delete) and ``_commit_snapshot``. Derived — see the module
     docstring; no change files are stored. Requires the key unique per
-    row within touched files (the MERGE precondition). Both window
-    edges behave as-of-style: from=N excludes N's own changes,
-    to=N includes them."""
-    from_snapshot, to_snapshot = int(from_snapshot), int(to_snapshot)
-    if to_snapshot < from_snapshot:
-        raise ValueError(
-            f"table_changes: to={to_snapshot} < from={from_snapshot}"
-        )
-    # the commit inventory is commit-scale and resolves driver-side;
-    # the loaded frame (None above the localman gate) also serves the
-    # file-scale delete candidacy and the live-delete subtraction below.
-    # Every diff side is expressed in the visible state at its snapshot
-    # — minus the deletes in force there — or a delete-materializing
-    # compaction would re-report rows the delete_eq commit already fed
-    lman = localman.load(manifest_dir)
-    inv = localman.commit_rows(
-        manifest_dir,
-        ("add", "remove", "delete_eq"),
-        ("snapshot_id", "op", "path", "column_name", "min_val"),
-        lman,
-        after=from_snapshot,
-        upto=to_snapshot,
-    ).itertuples(index=False)
+    row within touched files (the MERGE precondition). The window's
+    :func:`signed_rows` are paired by ONE full-outer join on
+    (``_commit_snapshot``, key); the update pair materializes via an
+    exploded 1- or 2-element struct array so no side is scanned twice,
+    and an unchanged pair explodes to nothing."""
+    signed = signed_rows(spark, manifest_dir, key, from_snapshot, to_snapshot)
+    if signed is None:
+        return _empty_changes(spark, manifest_dir, key)
+    data = [c for c in signed.columns if c not in ("_w", "_commit_snapshot")]
+    o = signed.filter(F.col("_w") < 0).alias("o")
+    n = signed.filter(F.col("_w") > 0).alias("n")
+    j = o.join(
+        n,
+        (F.col("o._commit_snapshot") == F.col("n._commit_snapshot"))
+        & (F.col(f"o.{key}") == F.col(f"n.{key}")),
+        "full_outer",
+    )
+    same = reduce(
+        lambda a, b: a & b,
+        [F.col(f"o.{c}").eqNullSafe(F.col(f"n.{c}")) for c in data if c != key],
+        F.lit(True),
+    )
 
-    def visible_rows(df: DataFrame, as_of: int) -> DataFrame:
-        return subtract_live_deletes(df, manifest_dir, key, as_of, lman)
+    def entry(ct: str, s: str) -> "F.Column":
+        image = F.struct(*[F.col(f"{s}.{c}").alias(c) for c in data])
+        return F.struct(F.lit(ct).alias("_ct"), image.alias("_row"))
 
-    import pandas as _pd
+    # NULL (an unchanged row) explodes to no row
+    changes = (
+        F.when(F.col("o._w").isNull(), F.array(entry(_CT_INSERT, "n")))
+        .when(F.col("n._w").isNull(), F.array(entry(_CT_DELETE, "o")))
+        .when(
+            ~same,
+            F.array(entry(_CT_UPDATE_PRE, "o"), entry(_CT_UPDATE_POST, "n")),
+        )
+    )
+    return j.select(
+        F.explode(changes).alias("_e"),
+        F.coalesce(
+            F.col("o._commit_snapshot"), F.col("n._commit_snapshot")
+        ).alias("_commit_snapshot"),
+    ).select(
+        "_e._row.*",
+        F.col("_e._ct").alias("_change_type"),
+        "_commit_snapshot",
+    )
 
-    per_snap: dict[int, dict[str, list]] = {}
-    for snap_id, op, path, column_name, min_val in inv:
-        slot = per_snap.setdefault(
-            int(snap_id), {"add": [], "remove": [], "delete_eq": []}
-        )
-        if op == "delete_eq":
-            if column_name == key and min_val is not None and not (
-                isinstance(min_val, float) and _pd.isna(min_val)
-            ):
-                slot["delete_eq"].append(float(min_val))
-        else:
-            slot[op].append(path)
-    frames: list[DataFrame] = []
-    for snap in sorted(per_snap):
-        adds = sorted(set(per_snap[snap]["add"]))
-        removes = sorted(set(per_snap[snap]["remove"]))
-        dels = sorted(set(per_snap[snap]["delete_eq"]))
-        if dels:
-            pre = _delete_preimages(
-                spark, manifest_dir, key, dels, snap, lman=lman
+
+def _empty_changes(
+    spark: SparkSession, manifest_dir: str, key: str
+) -> DataFrame:
+    """A window without changes: zero rows, with the key's REAL type
+    (a window that happened to contain no changes must union /
+    schema-match with one that did) — read from any committed data
+    file's footer; double only for a table that never had a file."""
+    key_type = "double"
+    first = localman.commit_rows(manifest_dir, ("add",), ("path",), limit=1)
+    if len(first):
+        try:
+            key_type = (
+                read_data_files(spark, [first["path"].iloc[0]])
+                .schema[key]
+                .dataType.simpleString()
             )
-            if pre is not None:  # no-op delete: zero feed rows (Delta)
-                frames.append(_tag(pre, _CT_DELETE, snap))
-        if not adds and not removes:
-            continue
-        # ONE merged-schema read over the commit's touched files keeps
-        # both diff sides on the identical unified schema; rows are
-        # routed to their side by the file that carried them
-        both = read_data_files(spark, [*adds, *removes], merge_schema=True)
-        path_col = _normalized_input_file()
-        if adds and removes:
-            old = visible_rows(both.filter(path_col.isin(removes)), snap - 1)
-            new = visible_rows(both.filter(path_col.isin(adds)), snap)
-            frames.append(_diff_changes(old, new, key, snap))
-        elif adds:  # pure append commit: every row is an insert
-            frames.append(
-                _tag(
-                    visible_rows(both.filter(path_col.isin(adds)), snap),
-                    _CT_INSERT,
-                    snap,
-                )
-            )
-        else:  # remove-only commit (retention delete): rows vanish
-            frames.append(
-                _tag(
-                    visible_rows(
-                        both.filter(path_col.isin(removes)), snap - 1
-                    ),
-                    _CT_DELETE,
-                    snap,
-                )
-            )
-    if not frames:
-        # the empty frame must carry the key's REAL type (a window
-        # that happened to contain no changes must union/schema-match
-        # with one that did) — read it from any committed data file's
-        # footer; double only for a table that never had a file
-        key_type = "double"
-        first = localman.commit_rows(
-            manifest_dir, ("add",), ("path",), lman, limit=1
-        )["path"]
-        first_add = first.iloc[0] if len(first) else None
-        if first_add is not None:
-            try:
-                key_type = (
-                    read_data_files(spark, [first_add])
-                    .schema[key]
-                    .dataType.simpleString()
-                )
-            except Exception:
-                pass  # evolved-away key: the double fallback stands
-        return spark.createDataFrame(
-            [],
-            f"{key} {key_type}, _change_type string, _commit_snapshot long",
-        )
-    return reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
+        except Exception:
+            pass  # evolved-away key: the double fallback stands
+    return spark.createDataFrame(
+        [], f"{key} {key_type}, _change_type string, _commit_snapshot long"
     )
 
 

@@ -582,9 +582,10 @@ def concat_rows(frames):
 # --------------------------------------------------------------------
 
 def _existing_schema(manifest_dir: str):
-    """The arrow schema of one live manifest file (None when the
-    manifest is empty/absent) — new rows are cast to EXACTLY the schema
-    already on disk so an append can never fork it."""
+    """The arrow schema of the first live manifest file — new rows are
+    cast to EXACTLY the schema already on disk so an append can never
+    fork it. None only when the manifest is empty or absent; a footer
+    that cannot be read raises."""
     import pyarrow.parquet as pq
 
     d = _mdd(manifest_dir)
@@ -596,12 +597,9 @@ def _existing_schema(manifest_dir: str):
         )
     except OSError:
         return None
-    for n in names:
-        try:
-            return pq.read_schema(os.path.join(d, n)).remove_metadata()
-        except Exception:
-            continue
-    return None
+    if not names:
+        return None
+    return pq.read_schema(os.path.join(d, names[0])).remove_metadata()
 
 
 def write_rows(manifest_dir: str, pdf, overwrite: bool = False) -> None:

@@ -253,11 +253,10 @@ def test_cdf_empty_window_schema_matches_nonempty(spark, cdf_table):
 
 
 def test_cdf_survives_percent_encoded_data_paths(spark, tmp_path):
-    """input_file_name() returns a percent-encoded URI; the manifest
-    stores raw POSIX paths. A data dir with a space (or other encoded
-    character) must still route every row to its diff side — before
-    the url_decode fix such rows matched neither isin() filter and
-    silently vanished from the feed (r14 ADVICE)."""
+    """A data dir whose path a URI must percent-encode (a space, a
+    '+') still feeds every change: each commit side is read from the
+    raw POSIX paths the manifest records (r14 ADVICE: rows routed by a
+    URI-form file name once vanished from the feed)."""
     from aws_seismic_data_pipeline_spark.sources.table.facade import (
         GovernedTable,
     )
@@ -418,3 +417,127 @@ def test_cdf_reachable_from_sql_text(spark, cdf_table):
         "insert": c["ins"],
         "delete": c["del"],
     }
+
+
+def _tip(t) -> int:
+    return max(int(r.snapshot_id) for r in t.history().collect())
+
+
+def test_cdf_window_pairs_with_one_join(spark, tmp_path):
+    """A window holding two rewrite commits (a MERGE, then a compaction
+    of every visible file) plans exactly ONE join — the pairing join on
+    (commit, key) — however many commits it spans, and still feeds
+    only the merge's changes."""
+    import re
+
+    from aws_seismic_data_pipeline_spark.sources.table.facade import (
+        GovernedTable,
+    )
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
+        "doc_id", "lang", "n_chars"
+    )
+    t = GovernedTable.create(
+        spark, docs, str(tmp_path / "d"), str(tmp_path / "m"), "doc_id",
+        n_files=3,
+    )
+    upd = docs.filter(F.col("doc_id") % 7 == 0).withColumn(
+        "n_chars", F.col("n_chars") + F.lit(1)
+    )
+    t.merge(upd, ["lang", "n_chars"])
+    _path, snap = t.compact_files(t.visible_files())
+    assert snap == 2
+    ch = t.changes(0, snap)
+    plan = ch._jdf.queryExecution().optimizedPlan().toString()
+    assert len(re.findall(r"\bJoin\b", plan)) == 1, plan
+    n = upd.count()
+    assert _changes_by_type(ch) == {
+        "update_preimage": n,
+        "update_postimage": n,
+    }
+
+
+def test_cdf_window_split_invariance_seismic_shape(spark, tmp_path):
+    """The seismic_daily day: a MERGE at k adds a file that the
+    OPTIMIZE at k+1 removes again, and an equality delete lands in the
+    same window. The feed over the whole window is exactly the union
+    of its single-commit windows. A consumer that then drains a
+    compaction-only window (the delete materialized) records no
+    window, and its state stays equal to the batch recompute."""
+    from aws_seismic_data_pipeline_spark.sources.table.facade import (
+        GovernedTable,
+    )
+    from aws_seismic_data_pipeline_spark.streaming.cdf_consumer import (
+        CdfConsumer,
+    )
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
+        "doc_id", "lang", "n_chars"
+    )
+    t = GovernedTable.create(
+        spark, docs, str(tmp_path / "d"), str(tmp_path / "m"), "doc_id",
+        n_files=3,
+    )
+    c = CdfConsumer(
+        spark, t.manifest_dir, "doc_id", "lang", "n_chars",
+        base_dir=str(tmp_path / "state"),
+    )
+    assert c.drain() == 1
+    lo = _tip(t)
+
+    before = set(t.visible_files())
+    upd = docs.filter(F.col("doc_id") % 5 == 0).withColumn(
+        "n_chars", F.col("n_chars") + F.lit(3)
+    )
+    ins = docs.filter(F.col("doc_id") % 9 == 0).withColumn(
+        "doc_id", F.col("doc_id") + F.lit(500000)
+    )
+    t.merge(upd.unionByName(ins), ["lang", "n_chars"])
+    merged = set(t.visible_files())
+    t.optimize()
+    optimized = set(t.visible_files())
+    assert (merged - before) - optimized, "OPTIMIZE kept the MERGE's files"
+    t.delete_keys(
+        [r.doc_id for r in docs.filter(F.col("doc_id") % 4 == 1).collect()]
+    )
+    hi = _tip(t)
+    assert hi - lo == 3
+
+    def rows(df):
+        cols = ["_commit_snapshot", "_change_type", "doc_id", "lang", "n_chars"]
+        return sorted(tuple(r) for r in df.select(*cols).collect())
+
+    whole = rows(t.changes(lo, hi))
+    split = sorted(
+        r for s in range(lo + 1, hi + 1) for r in rows(t.changes(s - 1, s))
+    )
+    assert whole == split
+    assert {r[1] for r in whole} == {
+        "insert",
+        "update_preimage",
+        "update_postimage",
+        "delete",
+    }
+
+    def batch():
+        return {
+            (r.lang, r.n_docs, r.sum_chars)
+            for r in t.scan_with_deletes()
+            .groupBy("lang")
+            .agg(
+                F.count(F.lit(1)).alias("n_docs"),
+                F.sum("n_chars").cast("long").alias("sum_chars"),
+            )
+            .collect()
+        }
+
+    def state():
+        return {(r.lang, r.n_docs, r.sum_chars) for r in c.state().collect()}
+
+    assert c.drain() == 2
+    assert state() == batch()
+    t.compact_deletes()
+    assert c.drain() == 2
+    assert c._last == _tip(t) == hi + 1
+    assert state() == batch()
+    c.cleanup()

@@ -929,6 +929,45 @@ def test_merge_evolve_schema_read_failure_raises(
     assert after == before
 
 
+def test_manifest_schema_read_failure_surfaces_from_commits(
+    spark, staged, tmp_path, monkeypatch
+):
+    """A commit shapes its rows by the manifest's on-disk schema; when
+    that footer read fails, the read's own error surfaces — neither
+    "no readable manifest file" nor a silent cast to the canonical
+    schema — and nothing is committed."""
+    import pyarrow.parquet as pq
+
+    from aws_seismic_data_pipeline_spark.sources.table.deletes import (
+        equality_delete,
+    )
+    from aws_seismic_data_pipeline_spark.sources.table.manifest import (
+        remove_from_manifest,
+    )
+
+    data_dir, _m = staged
+    files = sorted(glob.glob(os.path.join(data_dir, "*.parquet")))
+
+    def planted(*_a, **_k):
+        raise OSError("planted manifest schema read failure")
+
+    # one manifest per verb: a failed commit keeps its claimed snapshot
+    verbs = {
+        "remove": lambda m: remove_from_manifest(spark, m, files[:1]),
+        "delete": lambda m: equality_delete(spark, m, "doc_id", [11]),
+    }
+    for name, commit in verbs.items():
+        mpath = str(tmp_path / name)
+        write_stats_manifest(spark, files, mpath, ("doc_id",))
+        before = sorted(map(repr, _read_manifest(mpath).to_dict("records")))
+        with monkeypatch.context() as m:
+            m.setattr(pq, "read_schema", planted)
+            with pytest.raises(OSError, match="planted"):
+                commit(mpath)
+        after = sorted(map(repr, _read_manifest(mpath).to_dict("records")))
+        assert after == before, name
+
+
 @pytest.mark.parametrize("gate", ["open", "closed"])
 def test_unmatched_partition_filter_scans_return_no_rows(
     spark, tmp_path, monkeypatch, gate

@@ -425,3 +425,16 @@ def test_no_manifest_gate_branch_outside_localman():
         for lineno in _gate_branches(ast.parse(open(p).read())):
             offenders.append(f"{rel}:{lineno}")
     assert not offenders, offenders
+
+
+def test_input_file_decoder_is_single():
+    """``input_file_name()`` arrives as a percent-encoded URI, and the
+    one decoder to the plain path a manifest records is
+    ``footers._decode_input_file``. A hand-rolled second copy of it
+    elsewhere fails here: import the decoder instead."""
+    found = {
+        _rel(p)
+        for p in _py_files()
+        if re.search(r"regexp_replace\(\s*F\.input_file_name\(", open(p).read())
+    }
+    assert found == {"sources/footers.py"}, sorted(found)

@@ -831,3 +831,66 @@ def test_cdf_consumer_idle_tick_starts_no_spark_job(spark, tmp_path):
     assert counters.delta()["jobs"] == 0
     assert sorted(p.name for p in base.iterdir()) == ["_consumer_state.json"]
     c.cleanup()
+
+
+def test_cdf_consumer_drain_sums_signed_rows(spark, tmp_path):
+    """A drain over a MERGE + compaction window sums the window's
+    signed rows: at most 2 Spark jobs, and its scans read only the
+    key, group and value columns — never the wide ``text`` column the
+    table also carries."""
+    import re
+
+    from perfbench.harness import StatusCounters
+
+    from aws_seismic_data_pipeline_spark.sources.table.facade import (
+        GovernedTable,
+    )
+    from aws_seismic_data_pipeline_spark.streaming.cdf_consumer import (
+        CdfConsumer,
+    )
+
+    docs = (
+        spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        .select("doc_id", "lang", "n_chars", "text")
+        .filter(F.col("doc_id") < 300)
+    )
+    t = GovernedTable.create(
+        spark, docs, str(tmp_path / "d"), str(tmp_path / "m"), "doc_id",
+        n_files=3,
+    )
+    c = CdfConsumer(
+        spark, t.manifest_dir, "doc_id", "lang", "n_chars",
+        base_dir=str(tmp_path / "state"),
+    )
+    assert c.drain() == 1
+    upd = docs.filter(F.col("doc_id") % 3 == 0).withColumn(
+        "n_chars", F.col("n_chars") + F.lit(7)
+    )
+    t.merge(upd, ["lang", "n_chars", "text"])
+    _path, snap = t.compact_files(t.visible_files())
+
+    plan = c._delta(0, snap)._jdf.queryExecution().executedPlan().toString()
+    schemas = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
+    assert schemas, plan
+    for s in schemas:
+        assert {f.split(":")[0] for f in s.split(",")} <= {
+            "doc_id",
+            "lang",
+            "n_chars",
+        }, s
+
+    counters = StatusCounters(spark)
+    assert c.drain() == 2
+    assert counters.delta()["jobs"] <= 2
+    want = {
+        (r.lang, r.n_docs, r.sum_chars)
+        for r in t.scan_with_deletes()
+        .groupBy("lang")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("n_chars").cast("long").alias("sum_chars"),
+        )
+        .collect()
+    }
+    assert {(r.lang, r.n_docs, r.sum_chars) for r in c.state().collect()} == want
+    c.cleanup()
