@@ -996,103 +996,3 @@ def sink_dynamic_partition_overwrite(
         .cast("long")
         .alias("n_replaced"),
     )
-
-
-# --------------------------------------------------------------------------
-# Round-11 split: the table-format engine moved to sources/table/ and the
-# footer readers to sources/footers.py. These re-exports keep every
-# existing `from ...sources.readers import X` working for ONE round;
-# new code should import from the split modules directly.
-# --------------------------------------------------------------------------
-from aws_seismic_data_pipeline_spark.sources.table.commit import (  # noqa: E402,F401
-    ConcurrentCommitError,
-    _CLAIM_OWNERS,
-    _claimed_next_snapshot,
-    _next_snapshot,
-    claim_commit,
-    verify_claim,
-)
-from aws_seismic_data_pipeline_spark.sources.table.manifest import (  # noqa: E402,F401
-    _MANIFEST_COLS,
-    _MANIFEST_PRICE_RANGE,
-    _PART_PRUNE_RANGE,
-    _visible_stats,
-    append_stats_manifest,
-    append_stats_manifest_retry,
-    commit_manifest_rows,
-    manifest_count_range,
-    manifest_incremental_scan,
-    manifest_pruned_scan,
-    manifest_pruned_scan_multi,
-    manifest_row_count,
-    remove_from_manifest,
-    scan_manifest_asof,
-    scan_manifest_count_only,
-    scan_manifest_incremental,
-    scan_manifest_partition_evolution,
-    scan_manifest_partitioned,
-    scan_manifest_pruned,
-    scan_manifest_pruned_double,
-    scan_manifest_stats,
-    write_stats_manifest,
-)
-from aws_seismic_data_pipeline_spark.sources.table.cdf import (  # noqa: E402,F401
-    plan_change_data_feed,
-    table_changes,
-)
-from aws_seismic_data_pipeline_spark.sources.table.sqlface import (  # noqa: E402,F401
-    governed_sql,
-    sql_governed_time_travel,
-)
-from aws_seismic_data_pipeline_spark.sources.table.evolution import (  # noqa: E402,F401
-    evolve_schema_add,
-    plan_schema_evolve,
-    read_evolved,
-)
-from aws_seismic_data_pipeline_spark.sources.table.deletes import (  # noqa: E402,F401
-    _EQ_DELETE_IDS,
-    compact_equality_deletes,
-    equality_delete,
-    plan_delete_compaction,
-    plan_equality_delete,
-    plan_retention_delete,
-    read_with_deletes,
-)
-from aws_seismic_data_pipeline_spark.sources.table.maintenance import (  # noqa: E402,F401
-    clone_manifest,
-    commit_data_compaction,
-    expire_manifest_history,
-    merge_through_manifest,
-    merge_with_conflict_retry,
-    optimize_table,
-    optimize_zorder,
-    optimize_zorder_incremental,
-    plan_expire_snapshots,
-    plan_manifest_compact_commit,
-    plan_manifest_merge,
-    plan_manifest_rollback,
-    plan_shallow_clone,
-    plan_vacuum_orphans,
-    rollback_manifest,
-    vacuum_orphans,
-    vacuum_orphans_report,
-)
-from aws_seismic_data_pipeline_spark.sources.table.sketches import (  # noqa: E402,F401
-    _BLOOM_A,
-    _BLOOM_B,
-    _BLOOM_BPK,
-    _BLOOM_LOOKUP_KEYS,
-    _BLOOM_MANIFEST_SCHEMA,
-    _BLOOM_P,
-    _SKETCH_K,
-    _SKETCH_SCALE,
-    _bloom_key_sql,
-    _bloom_pos_sql,
-    append_bloom_manifest,
-    bloom_pruned_scan,
-    build_bloom_manifest,
-    scan_manifest_bloom,
-    scan_manifest_sketch_ndv,
-    sketch_merged_ndv,
-    write_kmv_sketch_manifest,
-)

@@ -1,6 +1,11 @@
-"""Optimistic-concurrency commit primitives for the manifest-governed
-table: snapshot allocation, CAS claim tokens, lease verification.
-Split out of ``sources/readers.py`` in round 11.
+"""Optimistic-concurrency commits for the manifest-governed table.
+The whole protocol lives in one object, :class:`Transaction`: it
+claims the next snapshot id (a CAS token, :func:`claim_commit`),
+records the data files its verb stages, checks its lease and
+publishes one manifest file, and on any exit without a publish
+releases its own token and deletes what it staged. Every committing
+verb runs inside one; :func:`with_conflict_retry` re-runs a verb in a
+fresh one after a lost race.
 
 Seed: the reference's two manual triggers can race with no guard
 (``/root/reference/app.py:641-653``); this is the missing protocol.
@@ -9,6 +14,8 @@ Seed: the reference's two manual triggers can race with no guard
 from __future__ import annotations
 
 import os
+import shutil
+import time
 
 from pyspark.sql import SparkSession
 
@@ -174,43 +181,55 @@ def claim_commit(
 
 
 #: this process's live claims: (abs manifest dir, snapshot id) -> owner
-#: uuid written into the token dir. verify_claim compares the on-disk
-#: owner file against this registry at commit time.
+#: uuid written into the token dir. A Transaction takes its own owner
+#: from here right after its claim and drops the entry when it ends.
 _CLAIM_OWNERS: dict[tuple[str, int], str] = {}
 
 
-def release_claim(manifest_dir: str, snapshot_id: int) -> None:
-    """Release a claim that was taken purely as a MUTUAL-EXCLUSION lease
-    (no rows were committed at the id) so the id becomes claimable
-    again — ``expire_manifest_history`` guards its manifest swap this
-    way. Committing verbs never release: their token is the commit's
-    durable marker until expire prunes the at-or-below-tip tokens."""
+def release_claim(
+    manifest_dir: str, snapshot_id: int, owner: str | None = None
+) -> None:
+    """Release a claim at which no rows were committed, so the id
+    becomes claimable again — what :class:`Transaction` does when it
+    ends without a publish. With ``owner`` the token is deleted only
+    while its on-disk owner is still ``owner``: a claimant whose token
+    was taken over as stale must never delete the new owner's token
+    (the new owner would then commit with no token left, and a third
+    writer could claim the same id). Without ``owner`` the token is
+    deleted unconditionally (operator recovery). A published commit's
+    token stays as its durable marker until expire prunes the
+    at-or-below-tip tokens."""
     from aws_seismic_data_pipeline_spark.sources.table.logstore import (
         log_store_for,
     )
 
+    store = log_store_for(manifest_dir)
+    token = os.path.join(manifest_dir, "_commits", str(int(snapshot_id)))
+    if owner is not None and store.read_token_owner(token) != owner:
+        return
     _CLAIM_OWNERS.pop((os.path.abspath(manifest_dir), int(snapshot_id)), None)
-    log_store_for(manifest_dir).delete_token(
-        os.path.join(manifest_dir, "_commits", str(int(snapshot_id)))
-    )
+    store.delete_token(token)
 
 
-def verify_claim(manifest_dir: str, snapshot_id: int) -> None:
+def verify_claim(
+    manifest_dir: str, snapshot_id: int, owner: str | None = None
+) -> None:
     """Re-validate token ownership IMMEDIATELY before committing rows at
     ``snapshot_id`` — the commit-time half of the lease protocol. A slow
     writer whose token was taken over (``claim_commit`` stale recovery)
     finds someone else's uuid — or no token — where its own used to be,
     and must raise rather than commit: without this check two writers'
-    rows silently interleave under one snapshot id. A snapshot this
-    process never claimed (explicit ``snapshot_id=`` passthrough from a
-    caller that claimed in another process, or pre-claim-era tests
-    stamping id 0 fixtures) is not re-validated — the registry only
-    knows this process's leases."""
+    rows silently interleave under one snapshot id. ``owner`` is the
+    uuid the claim wrote (a :class:`Transaction` passes its own);
+    without it the process registry's record is used, and an id this
+    process never claimed is not re-validated."""
     from aws_seismic_data_pipeline_spark.sources.table.logstore import (
         log_store_for,
     )
 
-    ours = _CLAIM_OWNERS.get((os.path.abspath(manifest_dir), int(snapshot_id)))
+    ours = owner or _CLAIM_OWNERS.get(
+        (os.path.abspath(manifest_dir), int(snapshot_id))
+    )
     if ours is None:
         return
     on_disk = log_store_for(manifest_dir).read_token_owner(
@@ -225,12 +244,190 @@ def verify_claim(manifest_dir: str, snapshot_id: int) -> None:
         )
 
 
-def _claimed_next_snapshot(spark: SparkSession, manifest_dir: str) -> int:
-    """Allocate AND reserve the next snapshot id: every committing verb
-    routes through this instead of a bare max()+1, so two writers can
-    never stamp rows with the SAME id — the id-collision half of the
-    optimistic-concurrency contract (the other half, re-planning after
-    a lost race, is the caller's job: plain verbs fail loudly with
-    ConcurrentCommitError; ``merge_with_conflict_retry`` re-plans)."""
-    parent = _next_snapshot(spark, manifest_dir) - 1
-    return claim_commit(spark, manifest_dir, parent)
+class Transaction:
+    """One optimistic commit on the manifest at ``manifest_dir`` — the
+    Delta Lake transaction shape: claim snapshot tip+1 on entry, stage
+    data files, publish ONE manifest file at the claimed id.
+
+    - Entering claims the id (:func:`claim_commit`; ``parent`` pins the
+      snapshot the claim must follow, else the committed tip) and keeps
+      ``snapshot_id`` and the owner uuid this claim wrote.
+    - :meth:`stage` runs a Spark write and records its stage dir and
+      every data file it lands.
+    - :meth:`commit` (or :meth:`publish` for a verb that writes its
+      own rows) checks the lease against this transaction's own
+      owner, runs ``pre_commit`` and publishes once.
+    - Leaving the ``with`` block without a publish — on a raise, or
+      when the verb committed nothing — releases the token and deletes
+      everything staged, but only while the token is still this
+      transaction's: after a stale takeover both belong to the new
+      owner, whose outputs carry the same snapshot id in their names.
+      After a publish the token stays as the commit's marker."""
+
+    def __init__(
+        self, spark: SparkSession, manifest_dir: str, parent: int | None = None
+    ):
+        self.spark = spark
+        self.manifest_dir = manifest_dir
+        self.snapshot_id: int | None = None
+        self._parent = parent
+        self._owner: str | None = None
+        self._staged: list[str] = []
+        self._published = False
+
+    def __enter__(self) -> "Transaction":
+        parent = self._parent
+        if parent is None:
+            parent = _next_snapshot(self.spark, self.manifest_dir) - 1
+        self.snapshot_id = claim_commit(self.spark, self.manifest_dir, parent)
+        self._owner = _CLAIM_OWNERS[
+            (os.path.abspath(self.manifest_dir), self.snapshot_id)
+        ]
+        return self
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        from aws_seismic_data_pipeline_spark.sources.table.logstore import (
+            log_store_for,
+        )
+
+        key = (os.path.abspath(self.manifest_dir), self.snapshot_id)
+        if _CLAIM_OWNERS.get(key) == self._owner:
+            _CLAIM_OWNERS.pop(key)
+        if self._published:
+            return
+        token = os.path.join(
+            self.manifest_dir, "_commits", str(self.snapshot_id)
+        )
+        if log_store_for(self.manifest_dir).read_token_owner(token) != (
+            self._owner
+        ):
+            return
+        # staged files go before the token: once it is released another
+        # writer may claim the id and stage files of the same names
+        for path in reversed(self._staged):
+            if os.path.isdir(path):
+                shutil.rmtree(path, ignore_errors=True)
+            elif os.path.exists(path):
+                os.remove(path)
+        release_claim(self.manifest_dir, self.snapshot_id, self._owner)
+
+    def stage(
+        self, write, out_dir: str, name=None, skip_empty: bool = False
+    ) -> list[str]:
+        """Run ``write(dir)`` — a Spark parquet write — and return the
+        data files it landed, in path order, each recorded for deletion
+        if the transaction ends unpublished. With ``name`` the write
+        goes to a hidden stage dir under ``out_dir`` and the i-th part
+        file moves to ``name(i)`` in the same sub-directory of
+        ``out_dir`` (the Hive partition dirs of a ``partitionBy``
+        write); ``skip_empty`` leaves out part files with no rows.
+        Without ``name``, ``out_dir`` itself is the output dir,
+        recorded whole, and its part files stay where Spark wrote
+        them."""
+        import glob as _glob
+
+        from aws_seismic_data_pipeline_spark.sources.table import localman
+
+        tmp = out_dir
+        if name is not None:
+            tmp = os.path.join(
+                out_dir, f".{self.snapshot_id}_stage{len(self._staged)}"
+            )
+        self._staged.append(tmp)
+        write(tmp)
+        parts = sorted(
+            _glob.glob(
+                os.path.join(tmp, "**", "part-*.parquet"), recursive=True
+            )
+        )
+        if name is None:
+            return parts
+        landed = []
+        for i, part in enumerate(parts):
+            if skip_empty and localman.parquet_num_rows(part) == 0:
+                continue
+            rel = os.path.relpath(os.path.dirname(part), tmp)
+            dst = os.path.normpath(os.path.join(out_dir, rel, name(i)))
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            shutil.move(part, dst)
+            self._staged.append(dst)
+            landed.append(dst)
+        shutil.rmtree(tmp, ignore_errors=True)
+        return landed
+
+    def publish(self, write, pre_commit=None) -> int:
+        """Check the lease, run ``pre_commit(snapshot_id)`` (the
+        facade's in-transaction constraint re-check), then run
+        ``write(snapshot_id)``, the single publish. Returns the id."""
+        verify_claim(self.manifest_dir, self.snapshot_id, self._owner)
+        if pre_commit is not None:
+            pre_commit(self.snapshot_id)
+        write(self.snapshot_id)
+        self._published = True
+        return self.snapshot_id
+
+    def commit(
+        self,
+        adds=(),
+        removes=(),
+        extra=(),
+        columns=None,
+        partition_by=(),
+        pre_commit=None,
+    ) -> int:
+        """Publish ``adds`` (their footer stats over ``columns``),
+        ``removes`` tombstones and ``extra`` metadata frames as ONE
+        manifest file at the claimed id (``manifest.commit_files``).
+        Returns the id."""
+        from aws_seismic_data_pipeline_spark.sources.table.manifest import (
+            _MANIFEST_COLS,
+            commit_files,
+        )
+
+        return self.publish(
+            lambda snap: commit_files(
+                self.spark,
+                self.manifest_dir,
+                snap,
+                adds=adds,
+                columns=columns or _MANIFEST_COLS,
+                removes=removes,
+                partition_by=partition_by,
+                extra=extra,
+            ),
+            pre_commit,
+        )
+
+
+def joined(spark: SparkSession, manifest_dir: str, txn=None):
+    """``txn`` when the caller already holds one (the caller's own
+    ``with`` block then owns its publish and abort), else a fresh
+    :class:`Transaction`."""
+    import contextlib
+
+    if txn is not None:
+        return contextlib.nullcontext(txn)
+    return Transaction(spark, manifest_dir)
+
+
+def with_conflict_retry(
+    spark: SparkSession, manifest_dir: str, body, max_retries: int
+):
+    """Run ``body(txn)`` in a fresh :class:`Transaction` and return
+    ``(its result, n_retries)``. A lost race (ConcurrentCommitError,
+    at the claim or at the lease check) backs off
+    ``min(0.05 * 2**attempt, 1.0)`` s and re-runs ``body`` against the
+    new tip — it must re-plan from the table's current state; the
+    outcome is the serial order of the commits. Bounded: the last
+    loss raises."""
+    for attempt in range(int(max_retries) + 1):
+        try:
+            with Transaction(spark, manifest_dir) as txn:
+                return body(txn), attempt
+        except ConcurrentCommitError:
+            if attempt == max_retries:
+                raise
+            # a lost race against a LIVE writer needs its rows to land
+            # before the re-plan can see them
+            time.sleep(min(0.05 * (2**attempt), 1.0))
+    raise AssertionError("unreachable")  # pragma: no cover

@@ -33,9 +33,7 @@ from pyspark.sql import functions as F
 from aws_seismic_data_pipeline_spark.catalog import load_table, prepare
 from aws_seismic_data_pipeline_spark.registry import register
 from aws_seismic_data_pipeline_spark.sources.table.commit import (
-    _claimed_next_snapshot,
-    release_claim,
-    verify_claim,
+    Transaction,
 )
 from aws_seismic_data_pipeline_spark.sources.table import localman
 
@@ -128,32 +126,21 @@ def enforce_constraints(
         )
 
 
-def _commit_constraint_row(
-    spark: SparkSession,
-    manifest_dir: str,
-    snap: int,
-    name: str,
-    op: str,
-    pv: dict[str, str],
-) -> None:
-    """One declaration row plus its commit_ts marker as ONE metadata
-    commit (one driver-side parquet file)."""
+def _constraint_row(snap: int, name: str, op: str, pv: dict[str, str]):
+    """One uncommitted declaration row (a pandas frame) at ``snap``."""
     import pandas as _pd
 
-    from aws_seismic_data_pipeline_spark.sources.table.manifest import (
-        commit_manifest_rows,
-    )
-
-    fixed = {
-        "path": "",
-        "file_name": "",
-        "column_name": name,
-        "snapshot_id": int(snap),
-        "op": op,
-        "partition_values": pv,
-    }
-    commit_manifest_rows(
-        manifest_dir, [_pd.DataFrame([fixed])], snapshot_id=snap
+    return _pd.DataFrame(
+        [
+            {
+                "path": "",
+                "file_name": "",
+                "column_name": name,
+                "snapshot_id": int(snap),
+                "op": op,
+                "partition_values": pv,
+            }
+        ]
     )
 
 
@@ -170,9 +157,12 @@ def add_check_constraint(
     read), it is validated first — Delta's ALTER TABLE ADD CONSTRAINT
     contract: you cannot declare a constraint the table already
     violates. Raises on a duplicate live name; a failed validation
-    releases the claim (no leaked lease). Returns the snapshot id."""
-    snap = _claimed_next_snapshot(spark, manifest_dir)
-    try:
+    releases the claim (no leaked lease). The validation is a
+    full-table aggregate that can outlive ``stale_after`` at scale:
+    the commit then fails its lease check, and the abort leaves the
+    token of the writer that took it over in place. Returns the
+    snapshot id."""
+    with Transaction(spark, manifest_dir) as txn:
         live = {n for n, _k, _e in active_constraints(spark, manifest_dir)}
         if name in live:
             raise ValueError(
@@ -182,23 +172,13 @@ def add_check_constraint(
             enforce_constraints(
                 spark, manifest_dir, existing, [(name, "check", expr)]
             )
-    except BaseException:
-        release_claim(manifest_dir, snap)  # nothing committed at the id
-        raise
-    # the existing= validation above is a full-table aggregate that can
-    # outlive stale_after at scale — re-validate the lease IMMEDIATELY
-    # before committing (two-writers-interleave guard; outside the
-    # release block: a revoked token belongs to the new owner now)
-    verify_claim(manifest_dir, snap)
-    _commit_constraint_row(
-        spark,
-        manifest_dir,
-        snap,
-        name,
-        "constraint_add",
-        {"kind": "check", "expr": str(expr)},
-    )
-    return snap
+        row = _constraint_row(
+            txn.snapshot_id,
+            name,
+            "constraint_add",
+            {"kind": "check", "expr": str(expr)},
+        )
+        return txn.commit(extra=[row])
 
 
 def add_not_null_constraint(
@@ -222,22 +202,15 @@ def drop_constraint(spark: SparkSession, manifest_dir: str, name: str) -> int:
     """Retire a constraint as a metadata commit; raises on an unknown
     name (a silent no-op would leave the caller believing the gate is
     gone). Returns the snapshot id."""
-    snap = _claimed_next_snapshot(spark, manifest_dir)
-    try:
+    with Transaction(spark, manifest_dir) as txn:
         live = {n for n, _k, _e in active_constraints(spark, manifest_dir)}
         if name not in live:
             raise ValueError(
                 f"constraint {name!r} does not exist at {manifest_dir} "
                 f"(live: {sorted(live)})"
             )
-    except BaseException:
-        release_claim(manifest_dir, snap)
-        raise
-    verify_claim(manifest_dir, snap)  # lease still ours at commit time
-    _commit_constraint_row(
-        spark, manifest_dir, snap, name, "constraint_drop", {}
-    )
-    return snap
+        row = _constraint_row(txn.snapshot_id, name, "constraint_drop", {})
+        return txn.commit(extra=[row])
 
 
 @register(

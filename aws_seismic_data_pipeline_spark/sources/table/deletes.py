@@ -17,11 +17,10 @@ from aws_seismic_data_pipeline_spark.registry import register
 from aws_seismic_data_pipeline_spark.sources.footers import read_data_files
 from aws_seismic_data_pipeline_spark.sources.table import localman
 from aws_seismic_data_pipeline_spark.sources.table.commit import (
-    _claimed_next_snapshot,
-    verify_claim,
+    Transaction,
+    joined,
 )
 from aws_seismic_data_pipeline_spark.sources.table.manifest import (
-    commit_files,
     manifest_pruned_scan,
     remove_from_manifest,
     write_stats_manifest,
@@ -99,51 +98,39 @@ def equality_delete(
     manifest_dir: str,
     column: str,
     values: list,
-    snapshot_id: int | None = None,
+    txn=None,
 ) -> int:
     """Append EQUALITY-DELETE records to the manifest: one metadata row
     per deleted key (op='delete_eq', the key carried in min_val==
-    max_val), stamped at the next snapshot. Cost is |values| rows of
-    metadata however many data files the keys' rows touch — the point
-    of the shape. Visibility (``localman.visible``) ignores non-'add'
-    ops, so delete records never perturb stats pruning; only
-    ``read_with_deletes`` consumes them. Returns the snapshot id written."""
+    max_val), committed in ``txn`` (else a transaction of its own).
+    Cost is |values| rows of metadata however many data files the
+    keys' rows touch — the point of the shape. Visibility
+    (``localman.visible``) ignores non-'add' ops, so delete records
+    never perturb stats pruning; only ``read_with_deletes`` consumes
+    them. Returns the snapshot id written."""
     import pandas as _pd
 
     if not values:
         raise ValueError("equality_delete: empty value list")
-    if snapshot_id is None:
-        snapshot_id = _claimed_next_snapshot(spark, manifest_dir)
-    pdf = _pd.DataFrame(
-        {
-            "path": "",
-            "file_name": "",
-            "row_group": -1,
-            "column_name": column,
-            "n_rows": 0,
-            "min_val": [float(v) for v in sorted(values)],
-            "max_val": [float(v) for v in sorted(values)],
-            "snapshot_id": int(snapshot_id),
-            "op": "delete_eq",
-            "partition_values": None,
-        }
-    )
-    from aws_seismic_data_pipeline_spark.sources.table.manifest import (
-        _commit_ts_fixed,
-    )
-
-    ts = _commit_ts_fixed(int(snapshot_id))
-    ts["row_group"], ts["n_rows"] = -1, 0
-    ts["partition_values"] = None  # pandas path: match the delete rows
-    pdf = localman.concat_rows(
-        [pdf, _pd.DataFrame([{k: ts.get(k) for k in pdf.columns}])]
-    )
-    # metadata-only commit: one driver-side parquet file (no Spark
-    # job), written through the generation resolver: on a post-expire
-    # manifest the live parquet is <manifest>/gen-N — a root write
-    # would make these delete records invisible to every read
-    localman.write_rows(manifest_dir, pdf)
-    return int(snapshot_id)
+    with joined(spark, manifest_dir, txn) as txn:
+        keys = [float(v) for v in sorted(values)]
+        pdf = _pd.DataFrame(
+            {
+                "path": "",
+                "file_name": "",
+                "row_group": -1,
+                "column_name": column,
+                "n_rows": 0,
+                "min_val": keys,
+                "max_val": keys,
+                "snapshot_id": int(txn.snapshot_id),
+                "op": "delete_eq",
+                "partition_values": None,
+            }
+        )
+        # metadata-only commit: one driver-side parquet file (no Spark
+        # job) with the commit's wall-clock marker
+        return txn.commit(extra=[pdf])
 
 
 def subtract_live_deletes(
@@ -271,8 +258,7 @@ def compact_equality_deletes(
     the rows. Cost is O(candidate files + delete records), independent
     of table size. Returns (snapshot_id, n_candidates, n_rewritten,
     n_deletes_retired)."""
-    import glob as _glob
-    import shutil as _shutil
+    import pandas as _pd
 
     # the live records and their ceiling are commit-scale; the tracked
     # columns and candidate files are file-scale (localman.answer)
@@ -303,62 +289,51 @@ def compact_equality_deletes(
     candidates = sorted(
         localman.answer(spark, manifest_dir, fn, "path string", lman)["path"]
     )
-    snap = _claimed_next_snapshot(spark, manifest_dir)
-    new_paths: list[str] = []
-    if candidates:
-        out_dir = os.path.dirname(candidates[0])
-        # merge_schema: evolved columns present in SOME candidate files
-        # must survive the rewrite (inference from a pre-evolution file
-        # would silently drop them)
-        touched = read_data_files(spark, candidates, merge_schema=True)
-        kept = touched.join(
-            F.broadcast(dkeys),
-            touched[column].cast("double") == dkeys["_k"],
-            "left_anti",
-        )
-        tmp = os.path.join(out_dir, f".delcompact_{snap}_stage")
-        kept.repartitionByRange(len(candidates), column).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        for i, part in enumerate(
-            sorted(_glob.glob(os.path.join(tmp, "part-*.parquet")))
-        ):
-            if localman.parquet_num_rows(part) == 0:
-                continue  # a fully-deleted range: no file, no stats row
-            dst = os.path.join(
-                out_dir, f"delcompact-{snap}-{i:05d}.parquet"
+    with Transaction(spark, manifest_dir) as txn:
+        snap = txn.snapshot_id
+        new_paths: list[str] = []
+        if candidates:
+            out_dir = os.path.dirname(candidates[0])
+            # merge_schema: evolved columns present in SOME candidate
+            # files must survive the rewrite (inference from a
+            # pre-evolution file would silently drop them)
+            touched = read_data_files(spark, candidates, merge_schema=True)
+            kept = touched.join(
+                F.broadcast(dkeys),
+                touched[column].cast("double") == dkeys["_k"],
+                "left_anti",
             )
-            _shutil.move(part, dst)
-            new_paths.append(dst)
-        _shutil.rmtree(tmp, ignore_errors=True)
-    # retire the records THROUGH the ceiling at the same snapshot: a
-    # pinned read in (ceiling, snap) still subtracts; at >= snap the
-    # live set is empty and reads stop paying for history
-    fixed = {
-        "path": "",
-        "file_name": "",
-        "column_name": column,
-        "min_val": float(int(ceiling)),
-        "max_val": float(int(ceiling)),
-        "snapshot_id": int(snap),
-        "op": "delete_retire",
-    }
-    import pandas as _pd
-
-    verify_claim(manifest_dir, snap)
-    # add(rewritten) + remove(candidates) + the retire marker commit as
-    # ONE manifest file: the retire record in particular must never
-    # become visible before the rewrites (reads would stop subtracting
-    # while the deleted rows are still on disk)
-    commit_files(
-        spark,
-        manifest_dir,
-        snap,
-        adds=new_paths,
-        columns=tracked,
-        removes=candidates,
-        extra=[_pd.DataFrame([fixed])],
-    )
+            # a fully-deleted range: no file, no stats row
+            new_paths = txn.stage(
+                lambda tmp: kept.repartitionByRange(len(candidates), column)
+                .write.mode("overwrite")
+                .parquet(tmp),
+                out_dir,
+                lambda i: f"delcompact-{snap}-{i:05d}.parquet",
+                skip_empty=True,
+            )
+        # retire the records THROUGH the ceiling at the same snapshot: a
+        # pinned read in (ceiling, snap) still subtracts; at >= snap the
+        # live set is empty and reads stop paying for history
+        fixed = {
+            "path": "",
+            "file_name": "",
+            "column_name": column,
+            "min_val": float(int(ceiling)),
+            "max_val": float(int(ceiling)),
+            "snapshot_id": int(snap),
+            "op": "delete_retire",
+        }
+        # add(rewritten) + remove(candidates) + the retire marker commit
+        # as ONE manifest file: the retire record in particular must
+        # never become visible before the rewrites (reads would stop
+        # subtracting while the deleted rows are still on disk)
+        txn.commit(
+            adds=new_paths,
+            columns=tracked,
+            removes=candidates,
+            extra=[_pd.DataFrame([fixed])],
+        )
     return snap, len(candidates), len(new_paths), int(n_live)
 
 

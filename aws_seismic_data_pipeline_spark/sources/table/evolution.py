@@ -15,13 +15,11 @@ from pyspark.sql import functions as F
 from aws_seismic_data_pipeline_spark.catalog import load_table, prepare
 from aws_seismic_data_pipeline_spark.registry import register
 from aws_seismic_data_pipeline_spark.sources.table.commit import (
-    _claimed_next_snapshot,
-    verify_claim,
+    Transaction,
 )
 from aws_seismic_data_pipeline_spark.sources.table import localman
 from aws_seismic_data_pipeline_spark.sources.table.manifest import (
     append_stats_manifest,
-    commit_manifest_rows,
     manifest_pruned_scan,
     write_stats_manifest,
 )
@@ -56,22 +54,12 @@ def evolve_schema_add(
     COMMITTED: an as-of read below this snapshot sees the old schema,
     at/above sees the new, exactly like any other table mutation).
     Returns the snapshot id written."""
-    from aws_seismic_data_pipeline_spark.sources.table.commit import (
-        release_claim,
-    )
-
-    snap = _claimed_next_snapshot(spark, manifest_dir)
-    try:
-        pdf = schema_add_rows(manifest_dir, {column: sql_type}, snap)
-    except BaseException:
-        # nothing committed at the id: release the lease so the raise
-        # (re-declaration) doesn't block the NEXT writer for stale_after
-        release_claim(manifest_dir, snap)
-        raise
-    verify_claim(manifest_dir, snap)  # lease still ours at commit time
-    # metadata-only commit: one driver-side parquet file
-    commit_manifest_rows(manifest_dir, [pdf], snapshot_id=snap)
-    return snap
+    with Transaction(spark, manifest_dir) as txn:
+        pdf = schema_add_rows(
+            manifest_dir, {column: sql_type}, txn.snapshot_id
+        )
+        # metadata-only commit: one driver-side parquet file
+        return txn.commit(extra=[pdf])
 
 
 def schema_add_rows(
@@ -195,15 +183,14 @@ def evolve_schema_rename(
     remap every subsequent gated write would fail analysis on the
     stale name, wedging the table unwritable). Returns the snapshot
     id written."""
-    from aws_seismic_data_pipeline_spark.sources.table.commit import (
-        release_claim,
-    )
+    import pandas as _pd
+
     from aws_seismic_data_pipeline_spark.sources.table.constraints import (
         active_constraints,
     )
 
-    snap = _claimed_next_snapshot(spark, manifest_dir)
-    try:
+    with Transaction(spark, manifest_dir) as txn:
+        snap = txn.snapshot_id
         lman = localman.load(manifest_dir)
         effective = _effective_columns(
             spark, manifest_dir, lman, ensure=(old,)
@@ -261,16 +248,7 @@ def evolve_schema_rename(
                     "partition_values": {"kind": kind, "expr": expr},
                 }
             )
-    except BaseException:
-        release_claim(manifest_dir, snap)  # nothing committed at the id
-        raise
-    verify_claim(manifest_dir, snap)  # lease still ours at commit time
-    import pandas as _pd
-
-    commit_manifest_rows(
-        manifest_dir, [_pd.DataFrame(dicts)], snapshot_id=snap
-    )
-    return snap
+        return txn.commit(extra=[_pd.DataFrame(dicts)])
 
 
 def evolve_schema_drop(
@@ -287,15 +265,13 @@ def evolve_schema_drop(
     drop): committing it would wedge every subsequent gated write on
     an unresolvable name — drop the constraint first. Returns the
     snapshot id written."""
-    from aws_seismic_data_pipeline_spark.sources.table.commit import (
-        release_claim,
-    )
+    import pandas as _pd
+
     from aws_seismic_data_pipeline_spark.sources.table.constraints import (
         active_constraints,
     )
 
-    snap = _claimed_next_snapshot(spark, manifest_dir)
-    try:
+    with Transaction(spark, manifest_dir) as txn:
         lman = localman.load(manifest_dir)
         effective = _effective_columns(
             spark, manifest_dir, lman, ensure=(column,)
@@ -324,20 +300,11 @@ def evolve_schema_drop(
             "path": "",
             "file_name": "",
             "column_name": column,
-            "snapshot_id": int(snap),
+            "snapshot_id": int(txn.snapshot_id),
             "op": "schema_drop",
             "partition_values": {},
         }
-    except BaseException:
-        release_claim(manifest_dir, snap)  # nothing committed at the id
-        raise
-    verify_claim(manifest_dir, snap)  # lease still ours at commit time
-    import pandas as _pd
-
-    commit_manifest_rows(
-        manifest_dir, [_pd.DataFrame([fixed])], snapshot_id=snap
-    )
-    return snap
+        return txn.commit(extra=[_pd.DataFrame([fixed])])
 
 
 def read_evolved(

@@ -74,7 +74,7 @@ class GovernedTable:
         files and build the stats manifest over them (snapshot 0).
         ``partition_by`` lands Hive-partitioned dirs whose values the
         manifest records for combined partition+stats pruning
-        (:func:`readers.manifest_pruned_scan` ``partition_filter``).
+        (:func:`manifest.manifest_pruned_scan` ``partition_filter``).
         ``log_store`` selects the commit-atomicity substrate for this
         table's manifest (POSIX default; ``ObjectStoreLogStore`` for
         bucket-honest semantics — table/logstore.py)."""

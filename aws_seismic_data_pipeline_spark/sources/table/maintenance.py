@@ -22,12 +22,9 @@ from aws_seismic_data_pipeline_spark.sources.footers import (
     read_data_files,
 )
 from aws_seismic_data_pipeline_spark.sources.table.commit import (
-    ConcurrentCommitError,
-    _claimed_next_snapshot,
-    _next_snapshot,
-    claim_commit,
-    release_claim,
-    verify_claim,
+    Transaction,
+    joined,
+    with_conflict_retry,
 )
 from aws_seismic_data_pipeline_spark.sources.table.logstore import (
     log_store_for,
@@ -37,7 +34,6 @@ from aws_seismic_data_pipeline_spark.sources.table.manifest import (
     _MANIFEST_COLS,
     _PART_PRUNE_RANGE,
     append_stats_manifest,
-    commit_files,
     manifest_pruned_scan,
     remove_from_manifest,
     write_stats_manifest,
@@ -55,54 +51,32 @@ def merge_with_conflict_retry(
     partition_by: tuple[str, ...] = (),
     pre_commit=None,
 ) -> tuple[int, int, int, int]:
-    """MERGE under optimistic concurrency: plan against the current
-    snapshot, CAS-claim the next id (:func:`claim_commit`), and commit;
-    on a lost race, RE-PLAN from scratch — candidacy, the rewrite set,
-    and matched-vs-insert classification are all recomputed against the
-    winner's committed state, so the outcome is the SERIAL order of the
-    commits (what Delta calls write serializability), never a lost
-    update. Bounded retries: livelock under pathological contention
-    fails loudly rather than spinning. Returns
-    (snapshot_id, n_intersecting, n_rewritten, n_retries)."""
-    for attempt in range(int(max_retries) + 1):
-        parent = _next_snapshot(spark, manifest_dir) - 1
-        try:
-            snap = claim_commit(spark, manifest_dir, parent)
-        except ConcurrentCommitError:
-            if attempt == max_retries:
-                raise
-            import time as _time
-
-            # back off before re-planning: a lost race against a LIVE
-            # writer needs its rows to land before the re-plan can see
-            # them; spinning would exhaust retries in microseconds
-            _time.sleep(min(0.05 * (2 ** attempt), 1.0))
-            continue  # table advanced: loop re-reads and re-plans
-        try:
-            s, n_int, n_rw = merge_through_manifest(
-                spark,
-                manifest_dir,
-                delta,
-                key,
-                cols,
-                insert_files=insert_files,
-                snapshot_id=snap,
-                partition_by=partition_by,
-                pre_commit=pre_commit,
-            )
-        except ConcurrentCommitError:
-            raise  # token already taken over — it is the NEW owner's now
-        except BaseException:
-            # WE claimed this id and the merge aborted before its
-            # commit (validation raise, pre_commit rejection) — release
-            # the lease so the failure doesn't block the next writer
-            # for stale_after
-            release_claim(manifest_dir, snap)
-            raise
-        return s, n_int, n_rw, attempt
-    raise ConcurrentCommitError(  # pragma: no cover - loop always returns
-        f"merge at {manifest_dir} lost {max_retries + 1} commit races"
+    """MERGE under optimistic concurrency: claim the next id and plan
+    against the snapshot it follows, then commit; on a lost race, RE-PLAN
+    from scratch in a fresh transaction (:func:`commit.with_conflict_retry`)
+    — candidacy, the rewrite set, and matched-vs-insert classification
+    are all recomputed against the winner's committed state, so the
+    outcome is the SERIAL order of the commits (what Delta calls write
+    serializability), never a lost update. Bounded retries: livelock
+    under pathological contention fails loudly rather than spinning.
+    Returns (snapshot_id, n_intersecting, n_rewritten, n_retries)."""
+    (s, n_int, n_rw), attempt = with_conflict_retry(
+        spark,
+        manifest_dir,
+        lambda txn: merge_through_manifest(
+            spark,
+            manifest_dir,
+            delta,
+            key,
+            cols,
+            insert_files=insert_files,
+            txn=txn,
+            partition_by=partition_by,
+            pre_commit=pre_commit,
+        ),
+        max_retries,
     )
+    return s, n_int, n_rw, attempt
 
 
 def _sibling_registry_path(manifest_dir: str) -> str:
@@ -401,9 +375,6 @@ def commit_data_compaction(
     columns (the merge/delete-compaction fix, applied here too);
     ``partition_by`` re-records Hive partition values. Returns
     (new_path, snapshot_id)."""
-    import glob as _glob
-    import shutil as _shutil
-
     if not paths:
         raise ValueError("commit_data_compaction: empty path list")
     if columns is None:
@@ -424,30 +395,28 @@ def commit_data_compaction(
         )
         columns = tuple(tracked) or _MANIFEST_COLS
     out_dir = os.path.dirname(sorted(paths)[0])
-    snap = _claimed_next_snapshot(spark, manifest_dir)
-    tmp = os.path.join(out_dir, f".compact_{snap}_stage")
-    # merge_schema: after evolve_schema_add a mixed file set can carry
-    # the evolved column in SOME files; schema inference from a
-    # pre-evolution file would silently drop it from the rewritten output
-    read_data_files(spark, list(paths), merge_schema=True).coalesce(
-        1
-    ).write.mode("overwrite").parquet(tmp)
-    part = _glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-    new_path = os.path.join(out_dir, f"compacted-{snap}.parquet")
-    _shutil.move(part, new_path)
-    _shutil.rmtree(tmp, ignore_errors=True)
-    # add(compacted) + remove(fragments) commit as ONE append — a reader
-    # between two appends would double-count (or lose) the fragment rows
-    verify_claim(manifest_dir, snap)
-    commit_files(
-        spark,
-        manifest_dir,
-        snap,
-        adds=[new_path],
-        columns=columns,
-        removes=paths,
-        partition_by=partition_by,
-    )
+    with Transaction(spark, manifest_dir) as txn:
+        snap = txn.snapshot_id
+        # merge_schema: after evolve_schema_add a mixed file set can
+        # carry the evolved column in SOME files; schema inference from
+        # a pre-evolution file would silently drop it from the output
+        (new_path,) = txn.stage(
+            lambda d: read_data_files(spark, list(paths), merge_schema=True)
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(d),
+            out_dir,
+            lambda _i: f"compacted-{snap}.parquet",
+        )
+        # add(compacted) + remove(fragments) commit as ONE append — a
+        # reader between two appends would double-count (or lose) the
+        # fragment rows
+        txn.commit(
+            adds=[new_path],
+            columns=columns,
+            removes=paths,
+            partition_by=partition_by,
+        )
     return new_path, snap
 
 
@@ -697,7 +666,7 @@ def merge_through_manifest(
     key: str,
     cols: list[str],
     insert_files: int = 1,
-    snapshot_id: int | None = None,
+    txn=None,
     partition_by: tuple[str, ...] = (),
     extra_commit_frames: list | None = None,
     pre_commit=None,
@@ -751,10 +720,12 @@ def merge_through_manifest(
     committed stats rows re-record partition values, and INSERT rows
     land Hive-partitioned under the table root — so the delta must
     carry the partition columns. Updates never move a row between
-    partitions (partition columns are not updatable ``cols``)."""
+    partitions (partition columns are not updatable ``cols``).
+
+    The commit runs in ``txn`` — the caller's
+    :class:`commit.Transaction`, whose snapshot the plan then reads —
+    else in a transaction of its own, claimed once the plan is made."""
     import collections as _collections
-    import glob as _glob
-    import shutil as _shutil
 
     if partition_by:
         missing = [c for c in partition_by if c not in delta.columns]
@@ -843,205 +814,161 @@ def merge_through_manifest(
             "key (dedup the delta first)"
         )
     intersecting = sorted(r.path for r in hit_rows if r.path is not None)
-    snap = (
-        int(snapshot_id)
-        if snapshot_id is not None
-        else _claimed_next_snapshot(spark, manifest_dir)
-    )
-    new_paths: list[str] = []
-    n_rewritten = 0
-    if intersecting:
-        # partitioned: rewrite per partition dir so every row lands back
-        # in the dir carrying its (path-only) partition value;
-        # unpartitioned: one group, the pre-existing single-dir shape
-        if partition_by:
-            by_dir: dict[str, list[str]] = _collections.defaultdict(list)
-            for p in intersecting:
-                by_dir[os.path.dirname(p)].append(p)
-        else:
-            by_dir = {os.path.dirname(intersecting[0]): intersecting}
-        for out_dir, group in by_dir.items():
-            touched_g = read_data_files(spark, group, merge_schema=True)
-            # ONE join serves both MATCHED clauses (r16 fusion — was a
-            # del-keys anti-join THEN a d_upd left join, two broadcast
-            # builds per partition group): left-join the full flagged
-            # delta; a matched row whose delta row carries _mtm_del
-            # vanishes (WHEN MATCHED ... THEN DELETE), sound because
-            # the dup check above guarantees at most one delta row per
-            # key. Unmatched base rows coalesce to their own values
-            # (_mtm_del null -> kept).
-            joined = touched_g.alias("b").join(
-                d.alias("u"),
-                F.col(f"b.{key}") == F.col(f"u.{key}"),
-                "left",
-            )
-            if delete_where:
-                joined = joined.filter(
-                    ~F.coalesce(F.col("u._mtm_del"), F.lit(False))
+    with joined(spark, manifest_dir, txn) as txn:
+        snap = txn.snapshot_id
+        new_paths: list[str] = []
+        n_rewritten = 0
+        if intersecting:
+            # partitioned: rewrite per partition dir so every row lands
+            # back in the dir carrying its (path-only) partition value;
+            # unpartitioned: one group, the pre-existing single-dir shape
+            if partition_by:
+                by_dir: dict[str, list[str]] = _collections.defaultdict(list)
+                for p in intersecting:
+                    by_dir[os.path.dirname(p)].append(p)
+            else:
+                by_dir = {os.path.dirname(intersecting[0]): intersecting}
+            for out_dir, group in by_dir.items():
+                touched_g = read_data_files(spark, group, merge_schema=True)
+                # ONE join serves both MATCHED clauses (r16 fusion — was
+                # a del-keys anti-join THEN a d_upd left join, two
+                # broadcast builds per partition group): left-join the
+                # full flagged delta; a matched row whose delta row
+                # carries _mtm_del vanishes (WHEN MATCHED ... THEN
+                # DELETE), sound because the dup check above guarantees
+                # at most one delta row per key. Unmatched base rows
+                # coalesce to their own values (_mtm_del null -> kept).
+                joined_g = touched_g.alias("b").join(
+                    d.alias("u"),
+                    F.col(f"b.{key}") == F.col(f"u.{key}"),
+                    "left",
                 )
-            rewritten = joined.select(
-                F.col(f"b.{key}").alias(key),
-                *[
-                    # a col the base files don't physically carry
-                    # (schema evolution: declared, or arriving with
-                    # THIS delta) is delta-only — unmatched base
-                    # rows get NULL, the mergeSchema-on-MERGE
-                    # semantics Delta ships
-                    F.coalesce(F.col(f"u.{c}"), F.col(f"b.{c}")).alias(c)
-                    if c in touched_g.columns
-                    else F.col(f"u.{c}").alias(c)
-                    for c in cols
-                ],
-            )
-            tmp = os.path.join(out_dir, f".merge_{snap}_stage")
-            (
-                rewritten.repartitionByRange(len(group), key)
-                .write.mode("overwrite")
-                .parquet(tmp)
-            )
-            for i, part in enumerate(
-                sorted(_glob.glob(os.path.join(tmp, "part-*.parquet")))
-            ):
-                dst = os.path.join(out_dir, f"merged-{snap}-{i:05d}.parquet")
-                _shutil.move(part, dst)
-                new_paths.append(dst)
-            _shutil.rmtree(tmp, ignore_errors=True)
-        n_rewritten = len(new_paths)
-        touched_keys = read_data_files(spark, intersecting).select(key)
-        # unmatched delete-clause rows do nothing (matched-only
-        # semantics); the flag column never reaches a written file
-        if stats_out is not None:
-            # ONE scan of the intersecting files serves BOTH the insert
-            # anti-join and the per-clause accounting (r16 fusion: the
-            # accounting agg used to re-read the same parquet): mark
-            # each delta row matched/unmatched once, checkpoint the
-            # delta-sized marks, and let inserts + the accounting agg
-            # both read them.
-            dj = d.join(
-                touched_keys.distinct().withColumn("_m", F.lit(1)),
-                key,
-                "left",
-            ).localCheckpoint(eager=True)
-            inserts = dj.filter(
-                F.col("_m").isNull() & ~F.col("_mtm_del")
-            ).drop("_m", "_mtm_del")
+                if delete_where:
+                    joined_g = joined_g.filter(
+                        ~F.coalesce(F.col("u._mtm_del"), F.lit(False))
+                    )
+                rewritten = joined_g.select(
+                    F.col(f"b.{key}").alias(key),
+                    *[
+                        # a col the base files don't physically carry
+                        # (schema evolution: declared, or arriving with
+                        # THIS delta) is delta-only — unmatched base
+                        # rows get NULL, the mergeSchema-on-MERGE
+                        # semantics Delta ships
+                        F.coalesce(F.col(f"u.{c}"), F.col(f"b.{c}")).alias(c)
+                        if c in touched_g.columns
+                        else F.col(f"u.{c}").alias(c)
+                        for c in cols
+                    ],
+                )
+                new_paths += txn.stage(
+                    lambda tmp: rewritten.repartitionByRange(len(group), key)
+                    .write.mode("overwrite")
+                    .parquet(tmp),
+                    out_dir,
+                    lambda i: f"merged-{snap}-{i:05d}.parquet",
+                )
+            n_rewritten = len(new_paths)
+            touched_keys = read_data_files(spark, intersecting).select(key)
+            # unmatched delete-clause rows do nothing (matched-only
+            # semantics); the flag column never reaches a written file
+            if stats_out is not None:
+                # ONE scan of the intersecting files serves BOTH the
+                # insert anti-join and the per-clause accounting (r16
+                # fusion: the accounting agg used to re-read the same
+                # parquet): mark each delta row matched/unmatched once,
+                # checkpoint the delta-sized marks, and let inserts +
+                # the accounting agg both read them.
+                dj = d.join(
+                    touched_keys.distinct().withColumn("_m", F.lit(1)),
+                    key,
+                    "left",
+                ).localCheckpoint(eager=True)
+                inserts = dj.filter(
+                    F.col("_m").isNull() & ~F.col("_mtm_del")
+                ).drop("_m", "_mtm_del")
+            else:
+                dj = None
+                inserts = (
+                    d.filter(~F.col("_mtm_del"))
+                    .join(touched_keys, key, "left_anti")
+                    .drop("_mtm_del")
+                )
+            sample_path = intersecting[0]
         else:
+            # no file can contain any delta key: the whole delta inserts
+            sample_path = localman.first_visible_path(
+                spark, manifest_dir, None, lman
+            )
             dj = None
-            inserts = (
-                d.filter(~F.col("_mtm_del"))
-                .join(touched_keys, key, "left_anti")
-                .drop("_mtm_del")
+            inserts = d.filter(~F.col("_mtm_del")).drop("_mtm_del")
+        if stats_out is not None:
+            # per-clause row accounting (Delta's operationMetrics): one
+            # delta-sized agg over the checkpointed match marks (shared
+            # with the insert anti-join above — no second scan of the
+            # intersecting files)
+            if dj is None:
+                dj = d.withColumn("_m", F.lit(None).cast("int"))
+            acc = dj.agg(
+                F.sum(
+                    F.when(F.col("_m").isNotNull() & F.col("_mtm_del"), 1)
+                    .otherwise(0)
+                ).alias("deleted"),
+                F.sum(
+                    F.when(F.col("_m").isNotNull() & ~F.col("_mtm_del"), 1)
+                    .otherwise(0)
+                ).alias("updated"),
+                F.sum(
+                    F.when(F.col("_m").isNull() & ~F.col("_mtm_del"), 1)
+                    .otherwise(0)
+                ).alias("inserted"),
+            ).collect()[0]
+            stats_out.update(
+                updated=int(acc.updated or 0),
+                inserted=int(acc.inserted or 0),
+                deleted=int(acc.deleted or 0),
             )
-        sample_path = intersecting[0]
-    else:
-        # no file can contain any delta key: the whole delta inserts
-        sample_path = localman.first_visible_path(
-            spark, manifest_dir, None, lman
+        root = _strip_partition_dirs(os.path.dirname(sample_path), partition_by)
+        # insert_files=1 suits the common daily-delta ≪ table case; a
+        # bulk backfill passes more and each becomes its own
+        # range-clustered, independently-pruned manifest row
+        ins = (
+            inserts.coalesce(1)
+            if insert_files <= 1
+            else inserts.repartitionByRange(insert_files, key)
         )
-        touched_keys = None
-        dj = None
-        inserts = d.filter(~F.col("_mtm_del")).drop("_mtm_del")
-    if stats_out is not None:
-        # per-clause row accounting (Delta's operationMetrics): one
-        # delta-sized agg over the checkpointed match marks (shared
-        # with the insert anti-join above — no second scan of the
-        # intersecting files)
-        if dj is not None:
-            joined = dj
-        else:
-            joined = d.withColumn("_m", F.lit(None).cast("int"))
-        acc = joined.agg(
-            F.sum(
-                F.when(F.col("_m").isNotNull() & F.col("_mtm_del"), 1)
-                .otherwise(0)
-            ).alias("deleted"),
-            F.sum(
-                F.when(F.col("_m").isNotNull() & ~F.col("_mtm_del"), 1)
-                .otherwise(0)
-            ).alias("updated"),
-            F.sum(
-                F.when(F.col("_m").isNull() & ~F.col("_mtm_del"), 1)
-                .otherwise(0)
-            ).alias("inserted"),
-        ).collect()[0]
-        stats_out.update(
-            updated=int(acc.updated or 0),
-            inserted=int(acc.inserted or 0),
-            deleted=int(acc.deleted or 0),
+        writer = ins.write.mode("overwrite")
+        if partition_by:
+            # inserts land Hive-partitioned: partitionBy strips the
+            # partition columns from the files, matching the table layout
+            writer = writer.partitionBy(*partition_by)
+        # parquet writes a (schema-only) file even for an empty frame;
+        # an empty insert file would add a stats-less row the pruner
+        # must conservatively open forever — commit only parts with rows
+        new_paths += txn.stage(
+            writer.parquet,
+            root,
+            lambda i: f"merged-{snap}-inserts-{i:05d}.parquet",
+            skip_empty=True,
         )
-    root = _strip_partition_dirs(os.path.dirname(sample_path), partition_by)
-    tmp = os.path.join(root, f".merge_{snap}_ins_stage")
-    # insert_files=1 suits the common daily-delta ≪ table case; a bulk
-    # backfill passes more and each becomes its own range-clustered,
-    # independently-pruned manifest row
-    ins = (
-        inserts.coalesce(1)
-        if insert_files <= 1
-        else inserts.repartitionByRange(insert_files, key)
-    )
-    writer = ins.write.mode("overwrite")
-    if partition_by:
-        # inserts land Hive-partitioned: partitionBy strips the
-        # partition columns from the files, matching the table layout
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(tmp)
-    # parquet writes a (schema-only) file even for an empty frame; an
-    # empty insert file would add a stats-less row the pruner must
-    # conservatively open forever — commit only parts that have rows
-    for i, part in enumerate(
-        sorted(
-            _glob.glob(
-                os.path.join(tmp, "**", "part-*.parquet"), recursive=True
+        if not new_paths and not intersecting:
+            raise ValueError(
+                "merge_through_manifest: empty delta — nothing to do"
             )
+        # adds + removes land in ONE manifest file: a concurrent loser
+        # re-planning mid-commit must never see the rewritten files
+        # alongside the still-untombstoned originals. pre_commit is the
+        # facade's in-transaction constraint re-check (see
+        # append_stats_manifest): a raise aborts before the manifest
+        # write and the transaction deletes the staged files
+        txn.commit(
+            adds=new_paths,
+            columns=tracked,
+            removes=intersecting,
+            partition_by=partition_by,
+            extra=extra_commit_frames or (),
+            pre_commit=pre_commit,
         )
-    ):
-        # footer-only row-count probe (a Spark job per part file before)
-        if localman.parquet_num_rows(part) > 0:
-            rel_dir = os.path.relpath(os.path.dirname(part), tmp)
-            dst_dir = root if rel_dir == "." else os.path.join(root, rel_dir)
-            os.makedirs(dst_dir, exist_ok=True)
-            ins_path = os.path.join(
-                dst_dir, f"merged-{snap}-inserts-{i:05d}.parquet"
-            )
-            _shutil.move(part, ins_path)
-            new_paths.append(ins_path)
-    _shutil.rmtree(tmp, ignore_errors=True)
-    if not new_paths and not intersecting:
-        raise ValueError("merge_through_manifest: empty delta — nothing to do")
-    verify_claim(manifest_dir, snap)
-    if pre_commit is not None:
-        # the facade's post-claim constraint re-check seam (see
-        # append_stats_manifest): a raise here aborts BEFORE the
-        # manifest write — staged rewrite files become unreferenced
-        # orphans (vacuum-reclaimable), nothing is visible to readers
-        try:
-            pre_commit(snap)
-        except BaseException:
-            if snapshot_id is None:  # we claimed: nothing committed
-                from aws_seismic_data_pipeline_spark.sources.table.commit import (
-                    release_claim,
-                )
-
-                release_claim(manifest_dir, snap)
-            for p in new_paths:  # best-effort orphan cleanup
-                try:
-                    os.remove(p)
-                except OSError:
-                    pass
-            raise
-    # adds + removes land in ONE manifest file: a concurrent loser
-    # re-planning mid-commit must never see the rewritten files
-    # alongside the still-untombstoned originals
-    commit_files(
-        spark,
-        manifest_dir,
-        snap,
-        adds=new_paths,
-        columns=tracked,
-        removes=intersecting,
-        partition_by=partition_by,
-        extra=extra_commit_frames or (),
-    )
     return snap, len(intersecting), n_rewritten
 
 
@@ -1216,11 +1143,10 @@ def merge_evolve_through_manifest(
         for c in cols
         if c not in physical and c not in declared
     }
-    snap = _claimed_next_snapshot(spark, manifest_dir)
-    try:
+    with Transaction(spark, manifest_dir) as txn:
         extra = None
         if evolved:
-            extra = [schema_add_rows(manifest_dir, evolved, snap)]
+            extra = [schema_add_rows(manifest_dir, evolved, txn.snapshot_id)]
         s, n_int, n_rw = merge_through_manifest(
             spark,
             manifest_dir,
@@ -1228,16 +1154,11 @@ def merge_evolve_through_manifest(
             key,
             cols,
             insert_files=insert_files,
-            snapshot_id=snap,
+            txn=txn,
             partition_by=partition_by,
             extra_commit_frames=extra,
             pre_commit=pre_commit,
         )
-    except ConcurrentCommitError:
-        raise  # token taken over — it is the new owner's now
-    except BaseException:
-        release_claim(manifest_dir, snap)  # nothing committed at the id
-        raise
     return s, n_int, n_rw, sorted(evolved)
 
 
@@ -1753,10 +1674,10 @@ def expire_manifest_history(
     # race the bare swap had — rows committed at cur_max+1 between the
     # stats read above and the swap would have been silently dropped
     # from the rewritten manifest; now either that writer's claim or
-    # this one fails loudly. Released in the finally; a crashed expire
-    # blocks writers only until the token goes stale (claim takeover).
-    guard = claim_commit(spark, manifest_dir, int(cur_max))
-    try:
+    # this one fails loudly. The transaction never publishes, so its
+    # exit releases the lease; a crashed expire blocks writers only
+    # until the token goes stale (claim takeover).
+    with Transaction(spark, manifest_dir, parent=int(cur_max)):
         marker_fixed = {
             "path": "",
             "file_name": "",
@@ -1813,8 +1734,6 @@ def expire_manifest_history(
             if not live:
                 store.delete_token(os.path.join(live_commits, name))
         _shutil.rmtree(aside, ignore_errors=True)
-    finally:
-        release_claim(manifest_dir, guard)
     return rows_before, rows_after
 
 
@@ -2057,25 +1976,21 @@ def _optimize_curve(
             " 0.0), 255.0) AS INT)"
         )
 
-    snap = _claimed_next_snapshot(spark, manifest_dir)
-    new_paths = _zcluster_rewrite(
-        spark,
-        visible,
-        curve_sql([_bucket(c) for c in cols]),
-        int(n_files),
-        snap,
-        prefix,
-    )
-    verify_claim(manifest_dir, snap)
-    commit_files(
-        spark,
-        manifest_dir,
-        snap,
-        adds=new_paths,
-        columns=tracked,
-        removes=visible,
-        partition_by=partition_by,
-    )
+    with Transaction(spark, manifest_dir) as txn:
+        new_paths = _zcluster_rewrite(
+            spark,
+            visible,
+            curve_sql([_bucket(c) for c in cols]),
+            int(n_files),
+            txn,
+            prefix,
+        )
+        snap = txn.commit(
+            adds=new_paths,
+            columns=tracked,
+            removes=visible,
+            partition_by=partition_by,
+        )
     return snap, len(visible), len(new_paths)
 
 
@@ -2084,7 +1999,7 @@ def _zcluster_rewrite(
     paths: list[str],
     zkey_sql: str,
     n_files: int,
-    snap: int,
+    txn,
     prefix: str,
 ) -> list[str]:
     """Rewrite ``paths`` Morton-clustered, PER PARTITION DIRECTORY —
@@ -2095,7 +2010,8 @@ def _zcluster_rewrite(
     partition-filtered scan (the same identity rule ``optimize_table``
     bins under). File counts split proportionally, min 1 per dir.
     Returns the new paths (landed directly at their final location
-    under ``<dir>/<prefix>-<snap>/``; commit is the caller's).
+    under ``<dir>/<prefix>-<snap>/``, each dir recorded by the caller's
+    transaction ``txn``, which commits them).
 
     Per-dir rewrites are submitted from a BOUNDED THREAD POOL — Spark's
     scheduler runs jobs from multiple threads concurrently, so OPTIMIZE
@@ -2105,7 +2021,6 @@ def _zcluster_rewrite(
     fails the whole verb before anything commits."""
     import collections as _collections
     import concurrent.futures as _futures
-    import glob as _glob
     import re as _re
 
     # Group with a defaultdict, NOT itertools.groupby over path-sorted
@@ -2152,18 +2067,17 @@ def _zcluster_rewrite(
         # like any other write-then-commit orphan. Partition-value
         # parsing is unaffected (key=value segments stay in the path;
         # the extra segment carries no '=').
-        dst = os.path.join(out_dir, f"{prefix}-{snap}")
-        (
+        return txn.stage(
             # merge_schema: evolved columns must survive the rewrite
-            read_data_files(spark, group, merge_schema=True)
+            lambda dst: read_data_files(spark, group, merge_schema=True)
             .withColumn("_zkey", F.expr(zkey_sql))
             .repartitionByRange(n_out, "_zkey")
             .sortWithinPartitions("_zkey")
             .drop("_zkey")
             .write.mode("overwrite")
-            .parquet(dst)
+            .parquet(dst),
+            os.path.join(out_dir, f"{prefix}-{txn.snapshot_id}"),
         )
-        return sorted(_glob.glob(os.path.join(dst, "part-*.parquet")))
 
     items = sorted(by_dir.items())
     if len(items) == 1:  # skip pool overhead for the common single dir
@@ -2336,25 +2250,21 @@ def _optimize_curve_incremental(
             f"{spans[col]!r}, 0.0), 255.0) AS INT)"
         )
 
-    snap = _claimed_next_snapshot(spark, manifest_dir)
-    new_paths = _zcluster_rewrite(
-        spark,
-        scattered,
-        curve_sql(_bucket(x_col), _bucket(y_col)),
-        int(n_files),
-        snap,
-        prefix,
-    )
-    verify_claim(manifest_dir, snap)
-    commit_files(
-        spark,
-        manifest_dir,
-        snap,
-        adds=new_paths,
-        columns=tracked,
-        removes=scattered,
-        partition_by=partition_by,
-    )
+    with Transaction(spark, manifest_dir) as txn:
+        new_paths = _zcluster_rewrite(
+            spark,
+            scattered,
+            curve_sql(_bucket(x_col), _bucket(y_col)),
+            int(n_files),
+            txn,
+            prefix,
+        )
+        snap = txn.commit(
+            adds=new_paths,
+            columns=tracked,
+            removes=scattered,
+            partition_by=partition_by,
+        )
     return snap, len(scattered), len(new_paths), n_untouched
 
 

@@ -35,8 +35,8 @@ from aws_seismic_data_pipeline_spark.sources.footers import (
     read_data_files,
 )
 from aws_seismic_data_pipeline_spark.sources.table.commit import (
-    _claimed_next_snapshot,
-    verify_claim,
+    joined,
+    with_conflict_retry,
 )
 from aws_seismic_data_pipeline_spark.sources.table import localman
 
@@ -117,7 +117,7 @@ def append_stats_manifest(
     new_paths: list[str],
     manifest_dir: str,
     columns: tuple[str, ...] = _MANIFEST_COLS,
-    snapshot_id: int | None = None,
+    txn=None,
     partition_by: tuple[str, ...] = (),
     pre_commit=None,
 ) -> int:
@@ -126,43 +126,25 @@ def append_stats_manifest(
     their stats rows — cost is new-batch-sized, mirroring
     ``llm/ivf.py: append_to_index`` / ``llm/dedup.py:
     promote_to_corpus``. Appended == rebuilt is pytest-pinned in
-    tests/test_catalog_scale.py. Each append is stamped with the next
-    ``snapshot_id`` — CAS-RESERVED via ``_claimed_next_snapshot``
-    unless the caller passes one, so concurrent writers can never
-    stamp the same id — and the manifest keeps its whole version
+    tests/test_catalog_scale.py. Each append commits in ``txn`` — the
+    caller's :class:`commit.Transaction`, else one of its own that
+    claims the next snapshot id, so concurrent writers can never stamp
+    the same id — and the manifest keeps its whole version
     history — an as-of read (``manifest_pruned_scan(as_of=N)``) sees
     exactly the files visible at snapshot N, the table-format
     time-travel contract. ``pre_commit(snapshot_id)``, when given, runs
-    INSIDE the claim, immediately before the manifest write — the seam
-    the facade's constraint gate uses to re-validate against
+    INSIDE the transaction, immediately before the manifest write — the
+    seam the facade's constraint gate uses to re-validate against
     declarations that landed between its pre-claim read and this
     commit (Delta enforces inside the transaction); a raise aborts the
-    commit and releases a claim taken in this call. Returns the id
-    written."""
-    from aws_seismic_data_pipeline_spark.sources.table.commit import (
-        release_claim,
-    )
-
-    claimed_here = snapshot_id is None
-    if snapshot_id is None:
-        snapshot_id = _claimed_next_snapshot(spark, manifest_dir)
-    verify_claim(manifest_dir, int(snapshot_id))
-    if pre_commit is not None:
-        try:
-            pre_commit(int(snapshot_id))
-        except BaseException:
-            if claimed_here:  # nothing committed at the id
-                release_claim(manifest_dir, int(snapshot_id))
-            raise
-    commit_files(
-        spark,
-        manifest_dir,
-        int(snapshot_id),
-        adds=new_paths,
-        columns=columns,
-        partition_by=partition_by,
-    )
-    return int(snapshot_id)
+    commit. Returns the id written."""
+    with joined(spark, manifest_dir, txn) as txn:
+        return txn.commit(
+            adds=new_paths,
+            columns=columns,
+            partition_by=partition_by,
+            pre_commit=pre_commit,
+        )
 
 
 def append_stats_manifest_retry(
@@ -175,7 +157,8 @@ def append_stats_manifest_retry(
     pre_commit=None,
 ) -> tuple[int, int]:
     """APPEND under optimistic concurrency: claim, commit, and on a
-    lost CAS race back off and re-claim the NEXT id. Unlike MERGE
+    lost CAS race back off and re-claim the NEXT id
+    (:func:`commit.with_conflict_retry`). Unlike MERGE
     (``merge_with_conflict_retry``), an append needs no re-planning —
     the new files' stats don't depend on table state — so the retry is
     just a fresh claim; the outcome is the serial order of commits.
@@ -184,28 +167,20 @@ def append_stats_manifest_retry(
     reference's two-manual-triggers race (``/root/reference/
     app.py:641-653``, SURVEY §3.2: no concurrency guard) closed.
     Returns (snapshot_id, n_retries); bounded retries fail loudly."""
-    import time as _time
-
-    from aws_seismic_data_pipeline_spark.sources.table.commit import (
-        ConcurrentCommitError,
+    return with_conflict_retry(
+        spark,
+        manifest_dir,
+        lambda txn: append_stats_manifest(
+            spark,
+            new_paths,
+            manifest_dir,
+            columns,
+            txn=txn,
+            partition_by=partition_by,
+            pre_commit=pre_commit,
+        ),
+        max_retries,
     )
-
-    for attempt in range(int(max_retries) + 1):
-        try:
-            snap = append_stats_manifest(
-                spark,
-                new_paths,
-                manifest_dir,
-                columns,
-                partition_by=partition_by,
-                pre_commit=pre_commit,
-            )
-            return snap, attempt
-        except ConcurrentCommitError:
-            if attempt == max_retries:
-                raise
-            _time.sleep(min(0.05 * (2**attempt), 1.0))
-    raise AssertionError("unreachable")  # pragma: no cover
 
 
 def _add_rows(
@@ -313,13 +288,14 @@ def remove_from_manifest(
     spark: SparkSession,
     manifest_dir: str,
     paths: list[str],
-    snapshot_id: int | None = None,
+    txn=None,
 ) -> int:
     """Append REMOVE tombstones for data files the table no longer
     contains (compaction inputs, retention deletes): one metadata row
-    per path, stamped with the next snapshot id. From that snapshot on
-    the paths are invisible to ``manifest_pruned_scan`` and count as
-    reclaimable for ``vacuum_orphans_report``; as-of reads BELOW the
+    per path, committed in ``txn`` (else a transaction of its own).
+    From that snapshot on the paths are invisible to
+    ``manifest_pruned_scan`` and count as reclaimable for
+    ``vacuum_orphans_report``; as-of reads BELOW the
     tombstone snapshot still see them — history is never rewritten,
     which is what makes pinned training runs reproducible across later
     maintenance. (Re-adding a previously removed path is not supported;
@@ -338,11 +314,8 @@ def remove_from_manifest(
     when it was created."""
     if not paths:
         raise ValueError("remove_from_manifest: empty path list")
-    if snapshot_id is None:
-        snapshot_id = _claimed_next_snapshot(spark, manifest_dir)
-    verify_claim(manifest_dir, int(snapshot_id))
-    commit_files(spark, manifest_dir, int(snapshot_id), removes=paths)
-    return int(snapshot_id)
+    with joined(spark, manifest_dir, txn) as txn:
+        return txn.commit(removes=paths)
 
 
 def _tombstone_rows_pd(

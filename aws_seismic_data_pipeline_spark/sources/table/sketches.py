@@ -18,9 +18,7 @@ from aws_seismic_data_pipeline_spark.sources.footers import (
     read_data_files,
     read_footer_stats_multi,
 )
-from aws_seismic_data_pipeline_spark.sources.table.commit import (
-    _claimed_next_snapshot,
-)
+from aws_seismic_data_pipeline_spark.sources.table.commit import joined
 from aws_seismic_data_pipeline_spark.sources.table.manifest import (
     _visible_stats,
 )
@@ -365,7 +363,7 @@ def append_bloom_manifest(
     bloom_dir: str,
     column: str,
     bits_per_key: int = _BLOOM_BPK,
-    snapshot_id: int | None = None,
+    txn=None,
 ) -> int:
     """Incremental bloom-manifest maintenance: filter ONLY the newly
     landed files and append their rows — ingest-batch cost, mirroring
@@ -373,19 +371,21 @@ def append_bloom_manifest(
     new files' footer counts (each row carries m_bits, so probes mix
     generations freely). Tombstones via ``remove_from_manifest`` and
     time travel via the shared snapshot axis both apply unchanged.
-    Returns the snapshot id written."""
-    if snapshot_id is None:
-        snapshot_id = _claimed_next_snapshot(spark, bloom_dir)
-    build_bloom_manifest(
-        spark,
-        new_paths,
-        bloom_dir,
-        column,
-        bits_per_key=bits_per_key,
-        mode="append",
-        snapshot_id=int(snapshot_id),
-    )
-    return int(snapshot_id)
+    The Spark append is the publish of ``txn`` (else a transaction of
+    its own on ``bloom_dir``), run after its lease check. Returns the
+    snapshot id written."""
+    with joined(spark, bloom_dir, txn) as txn:
+        return txn.publish(
+            lambda snap: build_bloom_manifest(
+                spark,
+                new_paths,
+                bloom_dir,
+                column,
+                bits_per_key=bits_per_key,
+                mode="append",
+                snapshot_id=snap,
+            )
+        )
 
 
 def bloom_pruned_scan(

@@ -2712,20 +2712,20 @@ def test_revoked_claim_refuses_to_commit(spark, tmp_path):
     mpath = str(tmp_path / "manifest")
     R.write_stats_manifest(spark, files[:1], mpath, ("doc_id",))
     # writer A claims snapshot 1 and stalls mid-commit
-    assert R.claim_commit(spark, mpath, 0) == 1
-    owner_a = R._CLAIM_OWNERS[(os.path.abspath(mpath), 1)]
-    token = os.path.join(mpath, "_commits", "1")
-    old = time.time() - 1000
-    os.utime(token, (old, old))
-    # writer B (another process in production; simulated here) takes
-    # over the stale token and holds the fresh claim
-    assert R.claim_commit(spark, mpath, 0, stale_after=300.0) == 1
-    # restore A's process-local lease record: A still BELIEVES it owns 1
-    R._CLAIM_OWNERS[(os.path.abspath(mpath), 1)] = owner_a
     with _pytest.raises(R.ConcurrentCommitError, match="revoked"):
-        R.append_stats_manifest(
-            spark, files[1:], mpath, ("doc_id",), snapshot_id=1
-        )
+        with R.Transaction(spark, mpath) as txn_a:
+            assert txn_a.snapshot_id == 1
+            token = os.path.join(mpath, "_commits", "1")
+            old = time.time() - 1000
+            os.utime(token, (old, old))
+            # writer B (another process in production; simulated here)
+            # takes over the stale token and holds the fresh claim
+            assert R.claim_commit(spark, mpath, 0, stale_after=300.0) == 1
+            R.append_stats_manifest(
+                spark, files[1:], mpath, ("doc_id",), txn=txn_a
+            )
+    # A's abort left B's token in place
+    assert os.path.isdir(token)
     # the aside dir left by the takeover is prunable metadata, not a claim
     asides = [
         n
@@ -3217,6 +3217,9 @@ def test_zcluster_rewrite_mixed_dir_and_subdir_loses_no_rows(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
+    from aws_seismic_data_pipeline_spark.sources.table.commit import (
+        Transaction,
+    )
     from aws_seismic_data_pipeline_spark.sources.table.maintenance import (
         _zcluster_rewrite,
     )
@@ -3246,31 +3249,34 @@ def test_zcluster_rewrite_mixed_dir_and_subdir_loses_no_rows(spark, tmp_path):
         _one(str(tmp_path / "s2"), _os.path.join(late, "mid-0.parquet")),
         _one(str(tmp_path / "s3"), _os.path.join(root, "zzz-0.parquet")),
     ]
-    new_paths = _zcluster_rewrite(
-        spark,
-        paths,
-        "CAST(k % 256 AS INT)",
-        n_files=3,
-        snap=7,
-        prefix="zorder",
-    )
-    # no rows lost, no rows duplicated
-    got = spark.read.parquet(*new_paths)
-    assert got.count() == 300
-    assert got.select(F.sum("k")).first()[0] == sum(range(300))
-    # partition identity: root rows stayed under root, late rows under
-    # late/ — the rewrite lands in a per-snapshot curve subdir of its
-    # OWN partition dir (driver-light staging, r13)
-    by_dir = {_os.path.dirname(p) for p in new_paths}
-    assert by_dir == {
-        _os.path.join(root, "zorder-7"),
-        _os.path.join(late, "zorder-7"),
-    }
-    late_rows = spark.read.parquet(
-        *[p for p in new_paths if p.startswith(late + _os.sep)]
-    )
-    assert late_rows.count() == 100
-    assert late_rows.agg(F.min("k"), F.max("k")).first() == (100, 199)
+    # the rewrite stages into the transaction holding snapshot 7 (its
+    # exit, unpublished, deletes the staged dirs)
+    with Transaction(spark, str(tmp_path / "m"), parent=6) as txn:
+        new_paths = _zcluster_rewrite(
+            spark,
+            paths,
+            "CAST(k % 256 AS INT)",
+            n_files=3,
+            txn=txn,
+            prefix="zorder",
+        )
+        # no rows lost, no rows duplicated
+        got = spark.read.parquet(*new_paths)
+        assert got.count() == 300
+        assert got.select(F.sum("k")).first()[0] == sum(range(300))
+        # partition identity: root rows stayed under root, late rows
+        # under late/ — the rewrite lands in a per-snapshot curve subdir
+        # of its OWN partition dir (driver-light staging, r13)
+        by_dir = {_os.path.dirname(p) for p in new_paths}
+        assert by_dir == {
+            _os.path.join(root, "zorder-7"),
+            _os.path.join(late, "zorder-7"),
+        }
+        late_rows = spark.read.parquet(
+            *[p for p in new_paths if p.startswith(late + _os.sep)]
+        )
+        assert late_rows.count() == 100
+        assert late_rows.agg(F.min("k"), F.max("k")).first() == (100, 199)
 
 
 def test_maintenance_rewrites_preserve_evolved_columns(spark, tmp_path):

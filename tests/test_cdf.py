@@ -293,7 +293,7 @@ def test_cdf_under_concurrent_merge_retry(spark, tmp_path):
         table_changes,
     )
     from aws_seismic_data_pipeline_spark.sources.table.commit import (
-        claim_commit,
+        Transaction,
     )
     from aws_seismic_data_pipeline_spark.sources.table.deletes import (
         read_with_deletes,
@@ -331,10 +331,6 @@ def test_cdf_under_concurrent_merge_retry(spark, tmp_path):
     n_b_upd = docs.filter(F.col("doc_id") % 10 == 4).count()
     n_b_ins = 3
 
-    # writer A claims snapshot 1 and holds it in flight; writer B
-    # starts concurrently, loses the claim, and replays
-    snap_claimed = claim_commit(spark, mpath, 0)
-    assert snap_claimed == 1
     b_result: dict = {}
 
     def writer_b() -> None:
@@ -344,12 +340,16 @@ def test_cdf_under_concurrent_merge_retry(spark, tmp_path):
         )
 
     tb = threading.Thread(target=writer_b)
-    tb.start()
-    _time.sleep(0.3)  # let B lose at least one claim to A's token
-    merge_through_manifest(
-        spark, mpath, delta_a, "doc_id", ["lang", "n_chars"],
-        snapshot_id=snap_claimed,
-    )
+    # writer A claims snapshot 1 and holds it in flight; writer B
+    # starts concurrently, loses the claim, and replays
+    with Transaction(spark, mpath) as txn_a:
+        assert txn_a.snapshot_id == 1
+        tb.start()
+        _time.sleep(0.3)  # let B lose at least one claim to A's token
+        merge_through_manifest(
+            spark, mpath, delta_a, "doc_id", ["lang", "n_chars"],
+            txn=txn_a,
+        )
     tb.join(timeout=300)
     assert "out" in b_result, "writer B never committed"
     snap_b, _ni, _nr, retries_b = b_result["out"]

@@ -436,7 +436,7 @@ def test_next_snapshot_absent_empty_and_corrupt(spark, staged, tmp_path):
     import shutil
 
     from aws_seismic_data_pipeline_spark.sources.table.commit import (
-        _claimed_next_snapshot,
+        Transaction,
         _next_snapshot,
     )
     from aws_seismic_data_pipeline_spark.sources.table.manifest import (
@@ -464,7 +464,8 @@ def test_next_snapshot_absent_empty_and_corrupt(spark, staged, tmp_path):
     with pytest.raises(Exception):  # a pyarrow failure raises, not None
         localman.load(mpath)
     with pytest.raises(Exception):
-        _claimed_next_snapshot(spark, mpath)
+        with Transaction(spark, mpath):
+            pass
     assert not os.path.exists(os.path.join(mpath, "_commits", "0"))
 
 

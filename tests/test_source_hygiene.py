@@ -438,3 +438,28 @@ def test_input_file_decoder_is_single():
         if re.search(r"regexp_replace\(\s*F\.input_file_name\(", open(p).read())
     }
     assert found == {"sources/footers.py"}, sorted(found)
+
+
+#: the optimistic-commit protocol's primitives: only
+#: ``commit.Transaction`` (and its retry loop) may call them
+CLAIM_PRIMITIVES = {"claim_commit", "verify_claim", "release_claim"}
+
+
+def test_commit_protocol_lives_in_transaction():
+    """Claim, lease check and release belong to ``commit.Transaction``.
+    A verb that calls one itself is growing a second copy of the
+    protocol and of its abort path; run the verb in a transaction
+    instead. Imports (the ``_verbs`` re-exports) are not calls."""
+    offenders = []
+    for p in _py_files():
+        rel = _rel(p)
+        if rel == "sources/table/commit.py":
+            continue
+        for node in ast.walk(ast.parse(open(p).read())):
+            if not isinstance(node, ast.Call):
+                continue
+            func = node.func
+            name = getattr(func, "id", None) or getattr(func, "attr", None)
+            if name in CLAIM_PRIMITIVES:
+                offenders.append(f"{rel}:{node.lineno} {name}")
+    assert not offenders, offenders
