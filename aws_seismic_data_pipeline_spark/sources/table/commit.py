@@ -80,6 +80,7 @@ def claim_commit(
     manifest_dir: str,
     parent: int,
     stale_after: float = 300.0,
+    owner: str | None = None,
 ) -> int:
     """Optimistic-concurrency COMPARE-AND-SWAP on the snapshot axis:
     atomically claim snapshot ``parent + 1`` by creating the commit
@@ -93,7 +94,8 @@ def claim_commit(
     underscore keeps the token tree invisible to Spark's parquet
     listing of the manifest itself.
 
-    Each claim records an owner uuid with its token. A stale takeover
+    Each claim records ``owner`` with its token (a :class:`Transaction`
+    passes its own uuid; default a fresh one). A stale takeover
     (token older than ``stale_after`` with no committed rows) revokes
     the token ATOMICALLY — only one takeover-er can win — and claims
     fresh, so the original claimant's ownership is revoked rather than
@@ -143,10 +145,9 @@ def claim_commit(
             "concurrent writer — re-validate against the current table "
             "state and retry"
         )
-    owner = _uuid.uuid4().hex
+    owner = owner or _uuid.uuid4().hex
     for attempt in (0, 1):
         if store.try_create_token(token, owner):
-            _CLAIM_OWNERS[(os.path.abspath(manifest_dir), snap)] = owner
             return snap
         committed_max = _next_snapshot(spark, manifest_dir) - 1
         if snap <= committed_max:
@@ -180,62 +181,40 @@ def claim_commit(
     )
 
 
-#: this process's live claims: (abs manifest dir, snapshot id) -> owner
-#: uuid written into the token dir. A Transaction takes its own owner
-#: from here right after its claim and drops the entry when it ends.
-_CLAIM_OWNERS: dict[tuple[str, int], str] = {}
-
-
-def release_claim(
-    manifest_dir: str, snapshot_id: int, owner: str | None = None
-) -> None:
+def release_claim(manifest_dir: str, snapshot_id: int, owner: str) -> None:
     """Release a claim at which no rows were committed, so the id
     becomes claimable again — what :class:`Transaction` does when it
-    ends without a publish. With ``owner`` the token is deleted only
-    while its on-disk owner is still ``owner``: a claimant whose token
-    was taken over as stale must never delete the new owner's token
-    (the new owner would then commit with no token left, and a third
-    writer could claim the same id). Without ``owner`` the token is
-    deleted unconditionally (operator recovery). A published commit's
-    token stays as its durable marker until expire prunes the
-    at-or-below-tip tokens."""
+    ends without a publish. The token is deleted only while its
+    on-disk owner is still ``owner``: a claimant whose token was taken
+    over as stale must never delete the new owner's token (the new
+    owner would then commit with no token left, and a third writer
+    could claim the same id). A published commit's token stays as its
+    durable marker until expire prunes the at-or-below-tip tokens."""
     from aws_seismic_data_pipeline_spark.sources.table.logstore import (
         log_store_for,
     )
 
     store = log_store_for(manifest_dir)
     token = os.path.join(manifest_dir, "_commits", str(int(snapshot_id)))
-    if owner is not None and store.read_token_owner(token) != owner:
-        return
-    _CLAIM_OWNERS.pop((os.path.abspath(manifest_dir), int(snapshot_id)), None)
-    store.delete_token(token)
+    if store.read_token_owner(token) == owner:
+        store.delete_token(token)
 
 
-def verify_claim(
-    manifest_dir: str, snapshot_id: int, owner: str | None = None
-) -> None:
+def verify_claim(manifest_dir: str, snapshot_id: int, owner: str) -> None:
     """Re-validate token ownership IMMEDIATELY before committing rows at
     ``snapshot_id`` — the commit-time half of the lease protocol. A slow
     writer whose token was taken over (``claim_commit`` stale recovery)
-    finds someone else's uuid — or no token — where its own used to be,
-    and must raise rather than commit: without this check two writers'
-    rows silently interleave under one snapshot id. ``owner`` is the
-    uuid the claim wrote (a :class:`Transaction` passes its own);
-    without it the process registry's record is used, and an id this
-    process never claimed is not re-validated."""
+    finds someone else's uuid — or no token — where its own ``owner``
+    used to be, and must raise rather than commit: without this check
+    two writers' rows silently interleave under one snapshot id."""
     from aws_seismic_data_pipeline_spark.sources.table.logstore import (
         log_store_for,
     )
 
-    ours = owner or _CLAIM_OWNERS.get(
-        (os.path.abspath(manifest_dir), int(snapshot_id))
-    )
-    if ours is None:
-        return
     on_disk = log_store_for(manifest_dir).read_token_owner(
         os.path.join(manifest_dir, "_commits", str(int(snapshot_id)))
     )
-    if on_disk != ours:
+    if on_disk != owner:
         raise ConcurrentCommitError(
             f"snapshot {snapshot_id} at {manifest_dir}: this writer's "
             "claim was revoked (token taken over as stale while the "
@@ -249,9 +228,15 @@ class Transaction:
     Delta Lake transaction shape: claim snapshot tip+1 on entry, stage
     data files, publish ONE manifest file at the claimed id.
 
-    - Entering claims the id (:func:`claim_commit`; ``parent`` pins the
-      snapshot the claim must follow, else the committed tip) and keeps
-      ``snapshot_id`` and the owner uuid this claim wrote.
+    - Constructing it reads the snapshot it commits on top of:
+      ``parent``, else the committed tip at that moment. A verb that
+      plans before it claims builds the transaction BEFORE it reads
+      the manifest for its plan, and enters it afterwards.
+    - Entering claims ``parent + 1`` (:func:`claim_commit`) under this
+      transaction's own owner uuid and keeps it as ``snapshot_id``. A
+      writer that committed in between makes the claim raise
+      :class:`ConcurrentCommitError`, so a stale plan is never
+      published.
     - :meth:`stage` runs a Spark write and records its stage dir and
       every data file it lands.
     - :meth:`commit` (or :meth:`publish` for a verb that writes its
@@ -267,22 +252,22 @@ class Transaction:
     def __init__(
         self, spark: SparkSession, manifest_dir: str, parent: int | None = None
     ):
+        import uuid as _uuid
+
         self.spark = spark
         self.manifest_dir = manifest_dir
         self.snapshot_id: int | None = None
-        self._parent = parent
-        self._owner: str | None = None
+        if parent is None:
+            parent = _next_snapshot(spark, manifest_dir) - 1
+        self._parent = int(parent)
+        self._owner = _uuid.uuid4().hex
         self._staged: list[str] = []
         self._published = False
 
     def __enter__(self) -> "Transaction":
-        parent = self._parent
-        if parent is None:
-            parent = _next_snapshot(self.spark, self.manifest_dir) - 1
-        self.snapshot_id = claim_commit(self.spark, self.manifest_dir, parent)
-        self._owner = _CLAIM_OWNERS[
-            (os.path.abspath(self.manifest_dir), self.snapshot_id)
-        ]
+        self.snapshot_id = claim_commit(
+            self.spark, self.manifest_dir, self._parent, owner=self._owner
+        )
         return self
 
     def __exit__(self, exc_type, exc, tb) -> None:
@@ -290,9 +275,6 @@ class Transaction:
             log_store_for,
         )
 
-        key = (os.path.abspath(self.manifest_dir), self.snapshot_id)
-        if _CLAIM_OWNERS.get(key) == self._owner:
-            _CLAIM_OWNERS.pop(key)
         if self._published:
             return
         token = os.path.join(
@@ -402,7 +384,8 @@ class Transaction:
 def joined(spark: SparkSession, manifest_dir: str, txn=None):
     """``txn`` when the caller already holds one (the caller's own
     ``with`` block then owns its publish and abort), else a fresh
-    :class:`Transaction`."""
+    :class:`Transaction` on the current tip — built before a plan
+    reads the manifest, it makes a stale plan fail its claim."""
     import contextlib
 
     if txn is not None:

@@ -18,7 +18,6 @@ from aws_seismic_data_pipeline_spark.sources.footers import read_data_files
 from aws_seismic_data_pipeline_spark.sources.table import localman
 from aws_seismic_data_pipeline_spark.sources.table.commit import (
     Transaction,
-    joined,
 )
 from aws_seismic_data_pipeline_spark.sources.table.manifest import (
     manifest_pruned_scan,
@@ -98,11 +97,10 @@ def equality_delete(
     manifest_dir: str,
     column: str,
     values: list,
-    txn=None,
 ) -> int:
     """Append EQUALITY-DELETE records to the manifest: one metadata row
     per deleted key (op='delete_eq', the key carried in min_val==
-    max_val), committed in ``txn`` (else a transaction of its own).
+    max_val), committed in one :class:`commit.Transaction`.
     Cost is |values| rows of metadata however many data files the
     keys' rows touch — the point of the shape. Visibility
     (``localman.visible``) ignores non-'add' ops, so delete records
@@ -112,7 +110,7 @@ def equality_delete(
 
     if not values:
         raise ValueError("equality_delete: empty value list")
-    with joined(spark, manifest_dir, txn) as txn:
+    with Transaction(spark, manifest_dir) as txn:
         keys = [float(v) for v in sorted(values)]
         pdf = _pd.DataFrame(
             {
@@ -261,7 +259,9 @@ def compact_equality_deletes(
     import pandas as _pd
 
     # the live records and their ceiling are commit-scale; the tracked
-    # columns and candidate files are file-scale (localman.answer)
+    # columns and candidate files are file-scale (localman.answer) —
+    # all read at the snapshot the transaction commits on top of
+    txn = Transaction(spark, manifest_dir)
     lman = localman.load(manifest_dir)
     live_pd = localman.live_delete_records(manifest_dir, column, None, lman)
     n_live = len(live_pd)
@@ -289,7 +289,7 @@ def compact_equality_deletes(
     candidates = sorted(
         localman.answer(spark, manifest_dir, fn, "path string", lman)["path"]
     )
-    with Transaction(spark, manifest_dir) as txn:
+    with txn:
         snap = txn.snapshot_id
         new_paths: list[str] = []
         if candidates:

@@ -218,7 +218,7 @@ class GovernedTable:
     def _gate(self, batch: DataFrame):
         """Write-time constraint gate: one map-side aggregate over the
         batch against the table's live CHECK/NOT NULL declarations;
-        raises ConstraintViolationError BEFORE any claim or commit.
+        raises ConstraintViolationError before anything is committed.
         Returns a ``pre_commit(snapshot_id)`` closure the committing
         verb runs INSIDE its claim: it re-resolves the (driver-side,
         KB-scale) constraint metadata and, when a declaration landed
@@ -285,6 +285,38 @@ class GovernedTable:
             partition_by=self.partition_by,
             max_retries=max_retries,
             pre_commit=recheck,
+        )
+        return snap
+
+    def insert(self, rows: DataFrame, max_retries: int = 5) -> int:
+        """Land ``rows`` as new data files in the table's data dir and
+        append them at one snapshot (SQL INSERT). The files are staged
+        in the append's own transaction and gated there, so a batch
+        that violates a constraint, or a commit that fails, leaves no
+        file behind; a lost race re-stages in a fresh transaction."""
+        import uuid
+
+        tag = uuid.uuid4().hex[:12]
+
+        def body(txn):
+            paths = txn.stage(
+                lambda d: rows.write.mode("overwrite").parquet(d),
+                self.data_dir,
+                lambda i: f"sqlins-{tag}-{i:05d}.parquet",
+            )
+            if paths:
+                self._gate(read_data_files(self.spark, paths))
+            return R.append_stats_manifest(
+                self.spark,
+                paths,
+                self.manifest_dir,
+                (self.key,),
+                txn=txn,
+                partition_by=self.partition_by,
+            )
+
+        snap, _ = R.with_conflict_retry(
+            self.spark, self.manifest_dir, body, max_retries
         )
         return snap
 

@@ -356,6 +356,7 @@ def commit_data_compaction(
     paths: list[str],
     columns: tuple[str, ...] | None = None,
     partition_by: tuple[str, ...] = (),
+    txn=None,
 ) -> tuple[str, int]:
     """DATA-file compaction committed THROUGH the manifest — the
     missing half of ``catalog.compact_parquet_dir`` for
@@ -373,10 +374,13 @@ def commit_data_compaction(
     set the FRAGMENTS had in the manifest — a narrower append would
     hide the compacted file from scans probing the other tracked
     columns (the merge/delete-compaction fix, applied here too);
-    ``partition_by`` re-records Hive partition values. Returns
-    (new_path, snapshot_id)."""
+    ``partition_by`` re-records Hive partition values. The commit
+    runs in ``txn`` — the caller's :class:`commit.Transaction`, built
+    before the caller chose ``paths`` — else in one built before the
+    tracked columns are read. Returns (new_path, snapshot_id)."""
     if not paths:
         raise ValueError("commit_data_compaction: empty path list")
+    txn_ctx = joined(spark, manifest_dir, txn)
     if columns is None:
         import pandas as _pd
 
@@ -395,7 +399,7 @@ def commit_data_compaction(
         )
         columns = tuple(tracked) or _MANIFEST_COLS
     out_dir = os.path.dirname(sorted(paths)[0])
-    with Transaction(spark, manifest_dir) as txn:
+    with txn_ctx as txn:
         snap = txn.snapshot_id
         # merge_schema: after evolve_schema_add a mixed file set can
         # carry the evolved column in SOME files; schema inference from
@@ -579,6 +583,7 @@ def rollback_manifest(
     the target and now (a compaction input) cannot be resurrected — a
     rollback across such maintenance raises instead of silently
     restoring a state with missing files."""
+    txn = Transaction(spark, manifest_dir)
     lman = localman.load(manifest_dir)
     target, current = (
         set(localman.visible_paths(spark, manifest_dir, pin, lman))
@@ -593,7 +598,8 @@ def rollback_manifest(
     to_hide = sorted(current - target)
     if not to_hide:
         return to_snapshot  # already at (or before) the target state
-    return remove_from_manifest(spark, manifest_dir, to_hide)
+    with txn:
+        return txn.commit(removes=to_hide)
 
 
 @register(
@@ -724,7 +730,9 @@ def merge_through_manifest(
 
     The commit runs in ``txn`` — the caller's
     :class:`commit.Transaction`, whose snapshot the plan then reads —
-    else in a transaction of its own, claimed once the plan is made."""
+    else in a transaction of its own, built before the plan reads the
+    manifest and claimed once the plan is made (a commit that lands in
+    between fails the claim instead of publishing a stale rewrite)."""
     import collections as _collections
 
     if partition_by:
@@ -743,6 +751,7 @@ def merge_through_manifest(
     # Preserve every tracked stats column present in the rewritten
     # schema (key, *cols) — appending key-only stats would hide the
     # rewrites from scans probing the other tracked columns
+    txn_ctx = joined(spark, manifest_dir, txn)
     lman = localman.load(manifest_dir)
     bounds = localman.column_bounds(spark, manifest_dir, lman)
     tracked = tuple(sorted(set(bounds) & {key, *cols})) or (key,)
@@ -814,7 +823,7 @@ def merge_through_manifest(
             "key (dedup the delta first)"
         )
     intersecting = sorted(r.path for r in hit_rows if r.path is not None)
-    with joined(spark, manifest_dir, txn) as txn:
+    with txn_ctx as txn:
         snap = txn.snapshot_id
         new_paths: list[str] = []
         n_rewritten = 0
@@ -1129,6 +1138,7 @@ def merge_evolve_through_manifest(
     # declared adds (commit-scale)
     import pyarrow.parquet as _pq
 
+    txn = Transaction(spark, manifest_dir)
     lman = localman.load(manifest_dir)
     sample = localman.first_visible_path(spark, manifest_dir, None, lman)
     physical = set(_pq.read_schema(sample).names)
@@ -1143,7 +1153,7 @@ def merge_evolve_through_manifest(
         for c in cols
         if c not in physical and c not in declared
     }
-    with Transaction(spark, manifest_dir) as txn:
+    with txn:
         extra = None
         if evolved:
             extra = [schema_add_rows(manifest_dir, evolved, txn.snapshot_id)]
@@ -1952,7 +1962,9 @@ def _optimize_curve(
     ``curve_sql([bucket_sql, ...])`` via :func:`_zcluster_rewrite`,
     and commit add+remove at one snapshot. Planning metadata (visible
     files, tracked columns, global stats bounds) is file-scale
-    (:func:`localman.visible_paths`, :func:`localman.column_bounds`)."""
+    (:func:`localman.visible_paths`, :func:`localman.column_bounds`),
+    read at the snapshot the transaction commits on top of."""
+    txn = Transaction(spark, manifest_dir)
     lman = localman.load(manifest_dir)
     visible = localman.visible_paths(spark, manifest_dir, None, lman)
     bounds = localman.column_bounds(spark, manifest_dir, lman)
@@ -1976,7 +1988,7 @@ def _optimize_curve(
             " 0.0), 255.0) AS INT)"
         )
 
-    with Transaction(spark, manifest_dir) as txn:
+    with txn:
         new_paths = _zcluster_rewrite(
             spark,
             visible,
@@ -2193,9 +2205,11 @@ def _optimize_curve_incremental(
     selection is two file-scale passes (:func:`localman.answer`): the
     global bounds (:func:`localman.column_bounds`), then per partition
     the scattered paths plus its count of selection members — never
-    the per-file rectangles."""
+    the per-file rectangles. Both read the snapshot the transaction
+    commits on top of."""
     import pandas as _pd
 
+    txn = Transaction(spark, manifest_dir)
     lman = localman.load(manifest_dir)
     glo = localman.column_bounds(spark, manifest_dir, lman)
     tracked = tuple(sorted(glo))
@@ -2250,7 +2264,7 @@ def _optimize_curve_incremental(
             f"{spans[col]!r}, 0.0), 255.0) AS INT)"
         )
 
-    with Transaction(spark, manifest_dir) as txn:
+    with txn:
         new_paths = _zcluster_rewrite(
             spark,
             scattered,
@@ -2615,10 +2629,13 @@ def optimize_table(
     derived like ``merge_through_manifest``'s — a key-only append
     would hide compacted files from scans probing other columns.
     Sizes come from driver-side stat of the visible path list
-    (metadata-scale). Returns (n_bins_compacted, n_files_before,
-    n_files_after)."""
+    (metadata-scale). The bins are planned on one snapshot and commit
+    at the ids after it, in order: a commit by another writer in
+    between fails the next bin's claim. Returns (n_bins_compacted,
+    n_files_before, n_files_after)."""
     import itertools as _it
 
+    nxt = Transaction(spark, manifest_dir)
     visible = localman.visible_paths(spark, manifest_dir, None)
     n_before = len(visible)
     bins: list[list[str]] = []
@@ -2636,12 +2653,15 @@ def optimize_table(
     compacted = 0
     for group in bins:
         if len(group) > 1:
-            commit_data_compaction(
-                spark,
-                manifest_dir,
-                group,
-                partition_by=partition_by,
-            )
+            with nxt as txn:
+                commit_data_compaction(
+                    spark,
+                    manifest_dir,
+                    group,
+                    partition_by=partition_by,
+                    txn=txn,
+                )
+            nxt = Transaction(spark, manifest_dir, parent=txn.snapshot_id)
             compacted += 1
     n_after = n_before - sum(len(g) - 1 for g in bins if len(g) > 1)
     return compacted, n_before, n_after

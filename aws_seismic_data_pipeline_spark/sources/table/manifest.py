@@ -35,6 +35,7 @@ from aws_seismic_data_pipeline_spark.sources.footers import (
     read_data_files,
 )
 from aws_seismic_data_pipeline_spark.sources.table.commit import (
+    Transaction,
     joined,
     with_conflict_retry,
 )
@@ -288,11 +289,10 @@ def remove_from_manifest(
     spark: SparkSession,
     manifest_dir: str,
     paths: list[str],
-    txn=None,
 ) -> int:
     """Append REMOVE tombstones for data files the table no longer
     contains (compaction inputs, retention deletes): one metadata row
-    per path, committed in ``txn`` (else a transaction of its own).
+    per path, committed in one :class:`commit.Transaction`.
     From that snapshot on the paths are invisible to
     ``manifest_pruned_scan`` and count as reclaimable for
     ``vacuum_orphans_report``; as-of reads BELOW the
@@ -314,7 +314,7 @@ def remove_from_manifest(
     when it was created."""
     if not paths:
         raise ValueError("remove_from_manifest: empty path list")
-    with joined(spark, manifest_dir, txn) as txn:
+    with Transaction(spark, manifest_dir) as txn:
         return txn.commit(removes=paths)
 
 

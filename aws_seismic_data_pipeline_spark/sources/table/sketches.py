@@ -18,7 +18,7 @@ from aws_seismic_data_pipeline_spark.sources.footers import (
     read_data_files,
     read_footer_stats_multi,
 )
-from aws_seismic_data_pipeline_spark.sources.table.commit import joined
+from aws_seismic_data_pipeline_spark.sources.table.commit import Transaction
 from aws_seismic_data_pipeline_spark.sources.table.manifest import (
     _visible_stats,
 )
@@ -363,7 +363,6 @@ def append_bloom_manifest(
     bloom_dir: str,
     column: str,
     bits_per_key: int = _BLOOM_BPK,
-    txn=None,
 ) -> int:
     """Incremental bloom-manifest maintenance: filter ONLY the newly
     landed files and append their rows — ingest-batch cost, mirroring
@@ -371,10 +370,10 @@ def append_bloom_manifest(
     new files' footer counts (each row carries m_bits, so probes mix
     generations freely). Tombstones via ``remove_from_manifest`` and
     time travel via the shared snapshot axis both apply unchanged.
-    The Spark append is the publish of ``txn`` (else a transaction of
-    its own on ``bloom_dir``), run after its lease check. Returns the
-    snapshot id written."""
-    with joined(spark, bloom_dir, txn) as txn:
+    The Spark append is the publish of a :class:`commit.Transaction`
+    on ``bloom_dir``, run after its lease check. Returns the snapshot
+    id written."""
+    with Transaction(spark, bloom_dir) as txn:
         return txn.publish(
             lambda snap: build_bloom_manifest(
                 spark,

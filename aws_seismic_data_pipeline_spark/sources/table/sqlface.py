@@ -105,30 +105,6 @@ def _aligned_to_table(table, rows: DataFrame) -> DataFrame:
     )
 
 
-def _stage_insert(table, rows: DataFrame) -> list[str]:
-    """Land ``rows`` as parquet files in the table's data dir (unique
-    prefix per call), returning the paths for ``table.append`` — the
-    same land-then-register shape every ingest path uses, so the
-    gated commit sees real files with real footers."""
-    import glob as _glob
-    import uuid as _uuid
-
-    tag = _uuid.uuid4().hex[:12]
-    stage = os.path.join(table.data_dir, f".sql_insert_{tag}")
-    rows.write.mode("overwrite").parquet(stage)
-    out = []
-    for i, part in enumerate(
-        sorted(_glob.glob(os.path.join(stage, "part-*.parquet")))
-    ):
-        dst = os.path.join(table.data_dir, f"sqlins-{tag}-{i:05d}.parquet")
-        os.replace(part, dst)
-        out.append(dst)
-    import shutil as _shutil
-
-    _shutil.rmtree(stage, ignore_errors=True)
-    return out
-
-
 #: MERGE grammar (the Delta/Iceberg three-clause shape, restricted to
 #: what the facade's CoW merge expresses): ON must equate the table
 #: key, UPDATE must be copy-over assignments (col = s.col), INSERT
@@ -163,10 +139,10 @@ def governed_sql_write(
     - ``INSERT INTO <name> [(cols)] SELECT ...|VALUES ...`` — the
       source query runs with ``<name>`` registered as the CURRENT
       read view (self-referential inserts read the pre-commit world),
-      rows are aligned to the table schema (order + dtypes), staged
-      as parquet in the data dir, and committed via ``table.append``
-      — constraint-gated: a violating batch raises and commits
-      nothing.
+      rows are aligned to the table schema (order + dtypes) and
+      committed via ``table.insert`` — staged as parquet in the data
+      dir inside the append's transaction and constraint-gated: a
+      violating batch raises, commits nothing and leaves no file.
     - ``DELETE FROM <name> [WHERE <pred>]`` — the predicate runs over
       the current visible world to resolve the doomed keys, which
       land as one equality-delete commit (metadata only). The
@@ -213,7 +189,7 @@ def governed_sql_write(
                     f"but source produces {len(rows.columns)}"
                 )
             rows = rows.toDF(*cols)
-        return table.append(_stage_insert(table, _aligned_to_table(table, rows)))
+        return table.insert(_aligned_to_table(table, rows))
 
     m = re.match(
         rf"^DELETE\s+FROM\s+{re.escape(name)}"

@@ -2807,10 +2807,10 @@ def test_expire_refuses_under_inflight_writer_and_recovers_crash(
     R.append_stats_manifest(spark, files[3:4], mpath, ("doc_id",))  # snap 2
 
     # (a) in-flight writer at tip+1 blocks expire
-    assert R.claim_commit(spark, mpath, 2) == 3
+    assert R.claim_commit(spark, mpath, 2, owner="inflight") == 3
     with _pytest.raises(R.ConcurrentCommitError, match="in-flight"):
         R.expire_manifest_history(spark, mpath, expire_below=2)
-    R.release_claim(mpath, 3)
+    R.release_claim(mpath, 3, "inflight")
 
     # (b) swap window: manifest dir absent -> retryable error, no mkdir
     aside = mpath + ".expired_old"

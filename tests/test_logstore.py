@@ -66,7 +66,7 @@ def test_cas_one_winner(spark, governed, store_kind):
     """Two claims of the same snapshot id: exactly one wins, the loser
     raises in-flight — on either substrate."""
     mpath, _docs = governed
-    assert R.claim_commit(spark, mpath, 0) == 1
+    assert R.claim_commit(spark, mpath, 0, owner="owner-a") == 1
     with pytest.raises(R.ConcurrentCommitError, match="in-flight"):
         R.claim_commit(spark, mpath, 0, stale_after=3600.0)
     token = os.path.join(mpath, "_commits", "1")
@@ -77,9 +77,12 @@ def test_cas_one_winner(spark, governed, store_kind):
         assert os.path.isfile(token)
     else:
         assert os.path.isdir(token)
-    assert store.read_token_owner(token)
+    assert store.read_token_owner(token) == "owner-a"
+    # a release by anyone but the owner leaves the lease in place
+    R.release_claim(mpath, 1, "owner-b")
+    assert store.read_token_owner(token) == "owner-a"
     # released leases are re-claimable
-    R.release_claim(mpath, 1)
+    R.release_claim(mpath, 1, "owner-a")
     assert R.claim_commit(spark, mpath, 0) == 1
 
 
@@ -89,16 +92,18 @@ def test_stale_takeover_revokes_old_owner(spark, governed):
     commit-time verify_claim fails loudly instead of interleaving two
     writers' rows under one id."""
     mpath, _docs = governed
-    assert R.claim_commit(spark, mpath, 0) == 1
-    owner_a = R._CLAIM_OWNERS[(os.path.abspath(mpath), 1)]
+    assert R.claim_commit(spark, mpath, 0, owner="owner-a") == 1
+    R.verify_claim(mpath, 1, "owner-a")
     time.sleep(0.15)
     # second claimant: the 0.1s stale window lets it take over
-    assert R.claim_commit(spark, mpath, 0, stale_after=0.1) == 1
-    # restore A's process-local lease record — A is a separate process
-    # in production and still BELIEVES it owns snapshot 1
-    R._CLAIM_OWNERS[(os.path.abspath(mpath), 1)] = owner_a
+    assert (
+        R.claim_commit(spark, mpath, 0, stale_after=0.1, owner="owner-b")
+        == 1
+    )
+    # A still BELIEVES it owns snapshot 1; its commit-time check fails
     with pytest.raises(R.ConcurrentCommitError, match="revoked"):
-        R.verify_claim(mpath, 1)
+        R.verify_claim(mpath, 1, "owner-a")
+    R.verify_claim(mpath, 1, "owner-b")
     # the revoked token went ASIDE (auditable), not deleted
     asides = [
         n
@@ -317,7 +322,7 @@ def test_generation_pointer_expiry(spark, tmp_path, store_kind):
         assert flat_parquet, "creation writes flat until the first expire"
 
         # in-flight lease above the guard + a reader loop DURING expire
-        assert R.claim_commit(spark, mpath, 3) == 4
+        assert R.claim_commit(spark, mpath, 3, owner="inflight") == 4
         errors: list = []
         stop = threading.Event()
 
@@ -365,7 +370,7 @@ def test_generation_pointer_expiry(spark, tmp_path, store_kind):
         # second expire: skips the burnt number, prunes the partial gen,
         # the pre-pointer flat objects, and everything older than the
         # superseded generation
-        R.release_claim(mpath, 4)
+        R.release_claim(mpath, 4, "inflight")
         R.expire_manifest_history(spark, mpath, expire_below=2)
         gen3 = manifest_data_dir(mpath)
         assert gen3 == os.path.join(mpath, "gen-00000003")

@@ -614,11 +614,11 @@ def test_concurrent_stream_ingest_serializable_commits(
     # fails as if a concurrent writer won the token
     real_claim = C.claim_commit
     calls = {"n": 0}
-    def racing_claim(spark_, manifest_dir, parent, stale_after=300.0):
+    def racing_claim(spark_, manifest_dir, parent, stale_after=300.0, owner=None):
         calls["n"] += 1
         if calls["n"] == 2:
             raise C.ConcurrentCommitError("injected lost race (test)")
-        return real_claim(spark_, manifest_dir, parent, stale_after)
+        return real_claim(spark_, manifest_dir, parent, stale_after, owner)
     monkeypatch.setattr(C, "claim_commit", racing_claim)
 
     committed = {"a": [], "b": []}

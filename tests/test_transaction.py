@@ -2,8 +2,10 @@
 every committing verb that fails after its claim and before its publish
 must leave the table as it found it — the claim released, so the next
 commit lands at once at the same snapshot id, and no staged data file
-left beside the table — and a claimant whose token was taken over must
-never release the new owner's token."""
+left beside the table; a verb that plans before it claims must fail
+its claim when another writer committed after its plan read the
+manifest; and a claimant whose token was taken over must never release
+the new owner's token."""
 
 from __future__ import annotations
 
@@ -15,7 +17,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from aws_seismic_data_pipeline_spark.sources.table import _verbs as R
-from aws_seismic_data_pipeline_spark.sources.table import localman, sketches
+from aws_seismic_data_pipeline_spark.sources.table import (
+    commit,
+    localman,
+    sketches,
+)
+from aws_seismic_data_pipeline_spark.sources.table.facade import GovernedTable
+from aws_seismic_data_pipeline_spark.sources.table.sqlface import (
+    governed_sql_write,
+)
 from .conftest import SF_DIR
 
 COLS = ("doc_id", "n_chars")
@@ -60,6 +70,17 @@ class _Table:
             for f in names
             if f.endswith(".parquet") and os.path.join(d, f) not in referenced
         )
+
+
+def _sql_insert(spark, t, n_chars: str = "n_chars"):
+    table = GovernedTable(spark, t.data_dir, t.mpath, "doc_id")
+    return lambda: governed_sql_write(
+        spark,
+        table,
+        "INSERT INTO t SELECT doc_id + 90000 AS doc_id, lang, "
+        f"{n_chars} AS n_chars FROM t WHERE doc_id < 5",
+        name="t",
+    )
 
 
 def _merge(spark, t, verb):
@@ -132,6 +153,7 @@ CASES = {
         R.add_check_constraint(s, t.mpath, "pos", "n_chars >= 0"),
         lambda: R.drop_constraint(s, t.mpath, "pos"),
     )[1],
+    "sql_insert": _sql_insert,
     "append_bloom_manifest": lambda s, t: (
         R.build_bloom_manifest(s, t.files, t.bloom_dir, "doc_id"),
         lambda: R.append_bloom_manifest(s, t.batch, t.bloom_dir, "doc_id"),
@@ -169,6 +191,63 @@ def test_failed_commit_releases_claim_and_staged_files(
     assert t.unreferenced() == []
     run()  # would raise ConcurrentCommitError on a leaked claim
     assert R._next_snapshot(spark, mdir) - 1 == planned
+
+
+def test_sql_insert_rejected_by_gate_leaves_no_file(spark, tmp_path):
+    """A SQL INSERT that violates a constraint raises inside its
+    transaction: nothing is committed and its staged files are gone."""
+    t = _Table(spark, tmp_path)
+    R.add_check_constraint(spark, t.mpath, "pos", "n_chars > 0")
+    with pytest.raises(R.ConstraintViolationError, match="pos"):
+        _sql_insert(spark, t, n_chars="CAST(-5 AS BIGINT)")()
+    assert R._next_snapshot(spark, t.mpath) == 2
+    assert t.unreferenced() == []
+
+
+#: verbs that read the manifest for their plan before they claim
+PLAN_THEN_CLAIM = (
+    "commit_data_compaction",
+    "compact_equality_deletes",
+    "merge_evolve_through_manifest",
+    "merge_through_manifest",
+    "optimize_table",
+    "optimize_zorder",
+    "optimize_hilbert_incremental",
+    "rollback",
+)
+
+
+@pytest.mark.parametrize("verb", PLAN_THEN_CLAIM)
+def test_commit_after_the_plan_fails_the_claim(
+    spark, tmp_path, monkeypatch, verb
+):
+    """Writer B's MERGE commits after writer A's verb planned and just
+    before A claims. A's claim must raise instead of publishing a plan
+    made on the snapshot B replaced (a rewrite of files B already
+    rewrote shows every key B touched twice): B's commit is the only
+    one, no key is duplicated, and A left no file behind."""
+    t = _Table(spark, tmp_path)
+    run = CASES[verb](spark, t)
+    planned = R._next_snapshot(spark, t.mpath)
+    real = commit.Transaction.__enter__
+
+    def racing(txn):
+        monkeypatch.setattr(commit.Transaction, "__enter__", real)
+        _merge(spark, t, R.merge_through_manifest)()
+        return real(txn)
+
+    monkeypatch.setattr(commit.Transaction, "__enter__", racing)
+    with pytest.raises(R.ConcurrentCommitError):
+        run()
+    assert R._next_snapshot(spark, t.mpath) == planned + 1
+    dup = (
+        R.read_with_deletes(spark, t.mpath, "doc_id")
+        .groupBy("doc_id")
+        .count()
+        .filter("count > 1")
+    )
+    assert dup.count() == 0
+    assert t.unreferenced() == []
 
 
 def test_aborted_claimant_keeps_the_takeover_token(spark, tmp_path):
