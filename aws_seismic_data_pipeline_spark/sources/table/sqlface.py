@@ -29,7 +29,6 @@ atomic gated commit.
 
 from __future__ import annotations
 
-import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession
@@ -329,8 +328,6 @@ def sql_governed_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-append at v0, pre-delete at ts1, post-delete current, 3
     history rows. Closes the last query-surface gap: time travel,
     history, and deletes were Python-facade-only."""
-    import glob as _glob
-
     from aws_seismic_data_pipeline_spark.catalog import (
         scratch_cleanup,
         scratch_path,
@@ -352,12 +349,7 @@ def sql_governed_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         extra = docs.filter(F.col("doc_id") % 13 == 0).withColumn(
             "doc_id", F.col("doc_id") + F.lit(700000)
         )
-        stage = os.path.join(data_dir, ".append_stage")
-        extra.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = sorted(_glob.glob(os.path.join(stage, "part-*.parquet")))[0]
-        new_path = os.path.join(data_dir, "appended-00000.parquet")
-        os.replace(part, new_path)
-        snap1 = t.append([new_path])
+        snap1 = t.insert(extra.coalesce(1))
         del_keys = [
             r.doc_id
             for r in docs.filter(F.col("doc_id") % 11 == 0)
