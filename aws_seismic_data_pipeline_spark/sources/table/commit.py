@@ -1,11 +1,15 @@
 """Optimistic-concurrency commits for the manifest-governed table.
 The whole protocol lives in one object, :class:`Transaction`: it
-claims the next snapshot id (a CAS token, :func:`claim_commit`),
-records the data files its verb stages, checks its lease and
-publishes one manifest file, and on any exit without a publish
-releases its own token and deletes what it staged. Every committing
-verb runs inside one; :func:`with_conflict_retry` re-runs a verb in a
-fresh one after a lost race.
+loads the manifest frame once, which fixes its parent snapshot and
+the id it will publish; its verb plans from that frame and stages
+data files under names only this transaction can produce
+(``<prefix>-<snapshot id>-<tag>``); at publish time it claims the id
+(a CAS token, :func:`claim_commit`), checks its lease and writes one
+manifest file, so the token is held only for that write. On any exit
+without a publish it deletes what it staged and releases a token it
+still owns. Every committing verb runs inside one;
+:func:`with_conflict_retry` re-runs a verb in a fresh one after a
+lost race.
 
 Seed: the reference's two manual triggers can race with no guard
 (``/root/reference/app.py:641-653``); this is the missing protocol.
@@ -28,7 +32,7 @@ def _next_snapshot(spark: SparkSession, manifest_dir: str) -> int:
     already has committed rows.
 
     Read DRIVER-SIDE with pyarrow, not as a Spark job: this runs
-    (twice) inside EVERY commit's claim path, and a Spark
+    inside EVERY commit's claim (the tip check), and a Spark
     read+agg+collect costs a full job-submission round trip (~100 ms
     of scheduler latency) to answer a question about kilobytes of
     local metadata — the r12 claim-protocol work made that constant
@@ -99,10 +103,11 @@ def claim_commit(
     (token older than ``stale_after`` with no committed rows) revokes
     the token ATOMICALLY — only one takeover-er can win — and claims
     fresh, so the original claimant's ownership is revoked rather than
-    silently shared: if that claimant was merely SLOW (a >5-min
-    compaction, not a crash), its commit-time :func:`verify_claim`
-    check fails loudly instead of interleaving two writers' rows under
-    one snapshot id.
+    silently shared: if that claimant was merely SLOW (its publish
+    stalled past the lease, not a crash), its commit-time
+    :func:`verify_claim` check fails loudly instead of interleaving
+    two writers' rows under one snapshot id. A transaction claims only
+    at publish time, so a takeover matters after a crash.
 
     Every primitive routes through the manifest's :mod:`.logstore`
     (POSIX mkdir/rename by default; the simulated object store swaps in
@@ -225,73 +230,81 @@ def verify_claim(manifest_dir: str, snapshot_id: int, owner: str) -> None:
 
 class Transaction:
     """One optimistic commit on the manifest at ``manifest_dir`` — the
-    Delta Lake transaction shape: claim snapshot tip+1 on entry, stage
-    data files, publish ONE manifest file at the claimed id.
+    Delta Lake transaction shape: read one snapshot, write data files
+    under names no other writer can produce, and make only the final
+    conditional put of the log record atomic.
 
-    - Constructing it reads the snapshot it commits on top of:
-      ``parent``, else the committed tip at that moment. A verb that
-      plans before it claims builds the transaction BEFORE it reads
-      the manifest for its plan, and enters it afterwards.
-    - Entering claims ``parent + 1`` (:func:`claim_commit`) under this
-      transaction's own owner uuid and keeps it as ``snapshot_id``. A
-      writer that committed in between makes the claim raise
-      :class:`ConcurrentCommitError`, so a stale plan is never
-      published.
-    - :meth:`stage` runs a Spark write and records its stage dir and
-      every data file it lands.
-    - :meth:`commit` (or :meth:`publish` for a verb that writes its
-      own rows) checks the lease against this transaction's own
-      owner, runs ``pre_commit`` and publishes once.
+    - Building it loads the manifest frame once (``man``;
+      :func:`localman.load`, None above the localman gate or before
+      the table's first commit). Its tip is ``parent``, so
+      ``snapshot_id`` = parent + 1 is known from the start. A
+      committing verb plans from ``man`` and reads the manifest no
+      other way.
+    - :meth:`stage` runs a Spark write and records its hidden stage
+      dir (``.<tag>_stage<n>``) and every data file it lands. Staged
+      files are named by :meth:`name`: ``<prefix>-<snapshot_id>-<tag>``,
+      ``tag`` being this transaction's own uuid prefix.
+    - :meth:`publish` (:meth:`commit` for adds, removes and metadata
+      rows) claims ``snapshot_id`` (:func:`claim_commit`) under this
+      transaction's owner uuid, checks the lease and writes once, so
+      the token is held only for the manifest write. A writer that
+      committed after ``man`` was loaded makes the claim raise
+      :class:`ConcurrentCommitError`: a stale plan never publishes.
     - Leaving the ``with`` block without a publish — on a raise, or
-      when the verb committed nothing — releases the token and deletes
-      everything staged, but only while the token is still this
-      transaction's: after a stale takeover both belong to the new
-      owner, whose outputs carry the same snapshot id in their names.
-      After a publish the token stays as the commit's marker."""
+      when the verb committed nothing — deletes everything staged (no
+      other writer can own those names) and releases the token only
+      if this transaction claimed one that is still its own. After a
+      publish the token stays as the commit's marker."""
 
-    def __init__(
-        self, spark: SparkSession, manifest_dir: str, parent: int | None = None
-    ):
+    def __init__(self, spark: SparkSession, manifest_dir: str):
         import uuid as _uuid
+
+        from aws_seismic_data_pipeline_spark.sources.table import localman
+        from aws_seismic_data_pipeline_spark.sources.table.logstore import (
+            manifest_data_dir as _mdd,
+        )
 
         self.spark = spark
         self.manifest_dir = manifest_dir
-        self.snapshot_id: int | None = None
-        if parent is None:
-            parent = _next_snapshot(spark, manifest_dir) - 1
-        self._parent = int(parent)
+        self.man = None
+        if os.path.isdir(_mdd(manifest_dir)):
+            self.man = localman.load(manifest_dir)
+        self.parent = (
+            _next_snapshot(spark, manifest_dir) - 1
+            if self.man is None
+            else localman.tip(self.man)
+        )
+        self.snapshot_id = self.parent + 1
         self._owner = _uuid.uuid4().hex
+        self.tag = self._owner[:12]
         self._staged: list[str] = []
+        self._claimed = False
         self._published = False
 
     def __enter__(self) -> "Transaction":
-        self.snapshot_id = claim_commit(
-            self.spark, self.manifest_dir, self._parent, owner=self._owner
-        )
         return self
 
     def __exit__(self, exc_type, exc, tb) -> None:
-        from aws_seismic_data_pipeline_spark.sources.table.logstore import (
-            log_store_for,
-        )
-
         if self._published:
             return
-        token = os.path.join(
-            self.manifest_dir, "_commits", str(self.snapshot_id)
-        )
-        if log_store_for(self.manifest_dir).read_token_owner(token) != (
-            self._owner
-        ):
-            return
-        # staged files go before the token: once it is released another
-        # writer may claim the id and stage files of the same names
         for path in reversed(self._staged):
             if os.path.isdir(path):
                 shutil.rmtree(path, ignore_errors=True)
             elif os.path.exists(path):
                 os.remove(path)
-        release_claim(self.manifest_dir, self.snapshot_id, self._owner)
+        if self._claimed:
+            release_claim(self.manifest_dir, self.snapshot_id, self._owner)
+
+    def name(self, prefix: str) -> str:
+        """``<prefix>-<snapshot_id>-<tag>``: a staged name no other
+        writer can produce, ordered by snapshot id first."""
+        return f"{prefix}-{self.snapshot_id}-{self.tag}"
+
+    def track(self, path: str) -> str:
+        """Record ``path`` for deletion if the transaction ends
+        unpublished; returns it."""
+        self._staged.append(path)
+        return path
 
     def stage(
         self, write, out_dir: str, name=None, skip_empty: bool = False
@@ -313,10 +326,9 @@ class Transaction:
         tmp = out_dir
         if name is not None:
             tmp = os.path.join(
-                out_dir, f".{self.snapshot_id}_stage{len(self._staged)}"
+                out_dir, f".{self.tag}_stage{len(self._staged)}"
             )
-        self._staged.append(tmp)
-        write(tmp)
+        write(self.track(tmp))
         parts = sorted(
             _glob.glob(
                 os.path.join(tmp, "**", "part-*.parquet"), recursive=True
@@ -331,35 +343,36 @@ class Transaction:
             rel = os.path.relpath(os.path.dirname(part), tmp)
             dst = os.path.normpath(os.path.join(out_dir, rel, name(i)))
             os.makedirs(os.path.dirname(dst), exist_ok=True)
-            shutil.move(part, dst)
-            self._staged.append(dst)
+            shutil.move(part, self.track(dst))
             landed.append(dst)
         shutil.rmtree(tmp, ignore_errors=True)
         return landed
 
-    def publish(self, write, pre_commit=None) -> int:
-        """Check the lease, run ``pre_commit(snapshot_id)`` (the
-        facade's in-transaction constraint re-check), then run
-        ``write(snapshot_id)``, the single publish. Returns the id."""
+    def claim(self) -> None:
+        """Claim ``snapshot_id`` on top of ``parent`` and check the
+        lease. :meth:`publish` runs it right before its write; a verb
+        that must exclude writers without publishing (expire's swap)
+        runs it alone, and its exit releases the token."""
+        claim_commit(
+            self.spark, self.manifest_dir, self.parent, owner=self._owner
+        )
+        self._claimed = True
         verify_claim(self.manifest_dir, self.snapshot_id, self._owner)
-        if pre_commit is not None:
-            pre_commit(self.snapshot_id)
+
+    def publish(self, write) -> int:
+        """Claim, then run ``write(snapshot_id)``, the single publish.
+        Returns the id."""
+        self.claim()
         write(self.snapshot_id)
         self._published = True
         return self.snapshot_id
 
     def commit(
-        self,
-        adds=(),
-        removes=(),
-        extra=(),
-        columns=None,
-        partition_by=(),
-        pre_commit=None,
+        self, adds=(), removes=(), extra=(), columns=None, partition_by=()
     ) -> int:
         """Publish ``adds`` (their footer stats over ``columns``),
         ``removes`` tombstones and ``extra`` metadata frames as ONE
-        manifest file at the claimed id (``manifest.commit_files``).
+        manifest file at ``snapshot_id`` (``manifest.commit_files``).
         Returns the id."""
         from aws_seismic_data_pipeline_spark.sources.table.manifest import (
             _MANIFEST_COLS,
@@ -376,37 +389,20 @@ class Transaction:
                 removes=removes,
                 partition_by=partition_by,
                 extra=extra,
-            ),
-            pre_commit,
+            )
         )
 
 
-def joined(spark: SparkSession, manifest_dir: str, txn=None):
-    """``txn`` when the caller already holds one (the caller's own
-    ``with`` block then owns its publish and abort), else a fresh
-    :class:`Transaction` on the current tip — built before a plan
-    reads the manifest, it makes a stale plan fail its claim."""
-    import contextlib
-
-    if txn is not None:
-        return contextlib.nullcontext(txn)
-    return Transaction(spark, manifest_dir)
-
-
-def with_conflict_retry(
-    spark: SparkSession, manifest_dir: str, body, max_retries: int
-):
-    """Run ``body(txn)`` in a fresh :class:`Transaction` and return
-    ``(its result, n_retries)``. A lost race (ConcurrentCommitError,
-    at the claim or at the lease check) backs off
-    ``min(0.05 * 2**attempt, 1.0)`` s and re-runs ``body`` against the
-    new tip — it must re-plan from the table's current state; the
-    outcome is the serial order of the commits. Bounded: the last
-    loss raises."""
+def with_conflict_retry(run, max_retries: int = 3):
+    """Call ``run()`` — one attempt of a verb in a :class:`Transaction`
+    of its own — and return ``(its result, n_retries)``. A lost race
+    (ConcurrentCommitError, at the claim or at the lease check) backs
+    off ``min(0.05 * 2**attempt, 1.0)`` s and calls ``run`` again: its
+    fresh transaction re-plans from the new frame, so the outcome is
+    the serial order of the commits. Bounded: the last loss raises."""
     for attempt in range(int(max_retries) + 1):
         try:
-            with Transaction(spark, manifest_dir) as txn:
-                return body(txn), attempt
+            return run(), attempt
         except ConcurrentCommitError:
             if attempt == max_retries:
                 raise

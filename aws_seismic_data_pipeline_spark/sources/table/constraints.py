@@ -157,13 +157,16 @@ def add_check_constraint(
     read), it is validated first — Delta's ALTER TABLE ADD CONSTRAINT
     contract: you cannot declare a constraint the table already
     violates. Raises on a duplicate live name; a failed validation
-    releases the claim (no leaked lease). The validation is a
-    full-table aggregate that can outlive ``stale_after`` at scale:
-    the commit then fails its lease check, and the abort leaves the
-    token of the writer that took it over in place. Returns the
-    snapshot id."""
+    stages nothing and claims nothing. The validation is a full-table
+    aggregate that runs before the claim: a commit that lands during
+    it fails the claim. Returns the snapshot id."""
     with Transaction(spark, manifest_dir) as txn:
-        live = {n for n, _k, _e in active_constraints(spark, manifest_dir)}
+        live = {
+            n
+            for n, _k, _e in active_constraints(
+                spark, manifest_dir, man=txn.man
+            )
+        }
         if name in live:
             raise ValueError(
                 f"constraint {name!r} already exists at {manifest_dir}"
@@ -203,7 +206,12 @@ def drop_constraint(spark: SparkSession, manifest_dir: str, name: str) -> int:
     name (a silent no-op would leave the caller believing the gate is
     gone). Returns the snapshot id."""
     with Transaction(spark, manifest_dir) as txn:
-        live = {n for n, _k, _e in active_constraints(spark, manifest_dir)}
+        live = {
+            n
+            for n, _k, _e in active_constraints(
+                spark, manifest_dir, man=txn.man
+            )
+        }
         if name not in live:
             raise ValueError(
                 f"constraint {name!r} does not exist at {manifest_dir} "

@@ -260,37 +260,42 @@ def compact_equality_deletes(
 
     # the live records and their ceiling are commit-scale; the tracked
     # columns and candidate files are file-scale (localman.answer) —
-    # all read at the snapshot the transaction commits on top of
-    txn = Transaction(spark, manifest_dir)
-    lman = localman.load(manifest_dir)
-    live_pd = localman.live_delete_records(manifest_dir, column, None, lman)
-    n_live = len(live_pd)
-    if n_live == 0:
-        raise ValueError(
-            f"compact_equality_deletes: no live delete records for "
-            f"{column} in {manifest_dir}"
+    # all read from the frame of the transaction the commit runs in
+    with Transaction(spark, manifest_dir) as txn:
+        lman = txn.man
+        live_pd = localman.live_delete_records(
+            manifest_dir, column, None, lman
         )
-    ceiling = int(live_pd["snapshot_id"].max())
-    keys = sorted(float(k) for k in live_pd["min_val"].dropna().unique())
-    dkeys = spark.createDataFrame([(k,) for k in keys], "_k double")
-    # rewritten files must keep the TABLE's full tracked-stats column
-    # set, not just the delete column — appending (column,) alone would
-    # leave the rewrites invisible to scans probing any other tracked
-    # column (manifest_pruned_scan lists a file only via its stats rows)
-    tracked = tuple(sorted(localman.column_bounds(spark, manifest_dir, lman)))
-
-    def fn(m):
-        return localman.path_frame(
-            localman.candidate_paths_for_keys(
-                localman.visible(m, None), column, keys
+        n_live = len(live_pd)
+        if n_live == 0:
+            raise ValueError(
+                f"compact_equality_deletes: no live delete records for "
+                f"{column} in {manifest_dir}"
             )
+        ceiling = int(live_pd["snapshot_id"].max())
+        keys = sorted(float(k) for k in live_pd["min_val"].dropna().unique())
+        dkeys = spark.createDataFrame([(k,) for k in keys], "_k double")
+        # rewritten files must keep the TABLE's full tracked-stats
+        # column set, not just the delete column — appending (column,)
+        # alone would leave the rewrites invisible to scans probing any
+        # other tracked column (manifest_pruned_scan lists a file only
+        # via its stats rows)
+        tracked = tuple(
+            sorted(localman.column_bounds(spark, manifest_dir, lman))
         )
 
-    candidates = sorted(
-        localman.answer(spark, manifest_dir, fn, "path string", lman)["path"]
-    )
-    with txn:
-        snap = txn.snapshot_id
+        def fn(m):
+            return localman.path_frame(
+                localman.candidate_paths_for_keys(
+                    localman.visible(m, None), column, keys
+                )
+            )
+
+        candidates = sorted(
+            localman.answer(spark, manifest_dir, fn, "path string", lman)[
+                "path"
+            ]
+        )
         new_paths: list[str] = []
         if candidates:
             out_dir = os.path.dirname(candidates[0])
@@ -309,7 +314,7 @@ def compact_equality_deletes(
                 .write.mode("overwrite")
                 .parquet(tmp),
                 out_dir,
-                lambda i: f"delcompact-{snap}-{i:05d}.parquet",
+                lambda i: f"{txn.name('delcompact')}-{i:05d}.parquet",
                 skip_empty=True,
             )
         # retire the records THROUGH the ceiling at the same snapshot: a
@@ -321,14 +326,14 @@ def compact_equality_deletes(
             "column_name": column,
             "min_val": float(int(ceiling)),
             "max_val": float(int(ceiling)),
-            "snapshot_id": int(snap),
+            "snapshot_id": int(txn.snapshot_id),
             "op": "delete_retire",
         }
         # add(rewritten) + remove(candidates) + the retire marker commit
         # as ONE manifest file: the retire record in particular must
         # never become visible before the rewrites (reads would stop
         # subtracting while the deleted rows are still on disk)
-        txn.commit(
+        snap = txn.commit(
             adds=new_paths,
             columns=tracked,
             removes=candidates,

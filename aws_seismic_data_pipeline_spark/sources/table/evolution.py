@@ -55,38 +55,35 @@ def evolve_schema_add(
     at/above sees the new, exactly like any other table mutation).
     Returns the snapshot id written."""
     with Transaction(spark, manifest_dir) as txn:
-        pdf = schema_add_rows(
-            manifest_dir, {column: sql_type}, txn.snapshot_id
-        )
         # metadata-only commit: one driver-side parquet file
-        return txn.commit(extra=[pdf])
+        return txn.commit(extra=[schema_add_rows(txn, {column: sql_type})])
 
 
-def schema_add_rows(
-    manifest_dir: str, columns: dict[str, str], snapshot_id: int
-):
-    """UNCOMMITTED 'schema_add' declaration rows (a pandas frame) —
-    compound verbs (``merge_evolve_through_manifest``) union these with
-    their data adds/tombstones and commit everything in ONE append, so
-    the column declaration and the files that first carry it become
-    visible at the SAME snapshot (Delta's mergeSchema-on-MERGE
-    atomicity). Raises on a re-declaration of any name the schema
-    history already used (:func:`localman.declared_names`)."""
+def schema_add_rows(txn, columns: dict[str, str]):
+    """UNCOMMITTED 'schema_add' declaration rows (a pandas frame) at
+    ``txn``'s snapshot — compound verbs
+    (``merge_evolve_through_manifest``) union these with their data
+    adds/tombstones and commit everything in ONE append, so the column
+    declaration and the files that first carry it become visible at
+    the SAME snapshot (Delta's mergeSchema-on-MERGE atomicity). Raises
+    on a re-declaration of any name the schema history in ``txn.man``
+    already used (:func:`localman.declared_names`)."""
     import pandas as _pd
 
-    dupes = sorted(set(columns) & localman.declared_names(manifest_dir))
+    declared = localman.declared_names(txn.manifest_dir, txn.man)
+    dupes = sorted(set(columns) & declared)
     if dupes:
         raise ValueError(
             f"column(s) {dupes} are already declared (or were renamed/"
             f"dropped — re-using such a name would resurface old files' "
-            f"values) at {manifest_dir}"
+            f"values) at {txn.manifest_dir}"
         )
     rows = [
         {
             "path": "",
             "file_name": "",
             "column_name": column,
-            "snapshot_id": int(snapshot_id),
+            "snapshot_id": int(txn.snapshot_id),
             "op": "schema_add",
             "partition_values": {"type": str(sql_type)},
         }
@@ -190,8 +187,7 @@ def evolve_schema_rename(
     )
 
     with Transaction(spark, manifest_dir) as txn:
-        snap = txn.snapshot_id
-        lman = localman.load(manifest_dir)
+        snap, lman = txn.snapshot_id, txn.man
         effective = _effective_columns(
             spark, manifest_dir, lman, ensure=(old,)
         )
@@ -272,7 +268,7 @@ def evolve_schema_drop(
     )
 
     with Transaction(spark, manifest_dir) as txn:
-        lman = localman.load(manifest_dir)
+        lman = txn.man
         effective = _effective_columns(
             spark, manifest_dir, lman, ensure=(column,)
         )

@@ -3,9 +3,10 @@ table verbs (the DeltaTable / Iceberg Table analog).
 
 Every verb is implemented (and individually driver-hash-checked /
 pytest-pinned) in the split table-format modules
-(:mod:`..table.manifest` / ``commit`` / ``deletes`` / ``maintenance`` /
-``sketches`` / ``evolution``, aggregated by :mod:`._verbs`); this
-module only binds them to one (data_dir, manifest_dir, key) triple so
+(:mod:`..table.manifest` / ``commit`` / ``constraints`` / ``deletes``
+/ ``maintenance`` / ``sketches`` / ``evolution`` / ``cdf`` /
+``sqlface``), which this module calls directly; it only binds them
+to one (data_dir, manifest_dir, key) triple so
 a user migrating from the reference's loose S3-prefix conventions
 (`/root/reference/app.py:449-463` — a date-keyed prefix IS its table)
 holds one object with the full lifecycle: scan (stats-pruned,
@@ -13,7 +14,11 @@ multi-column, as-of, incremental), metadata row counts, retrying
 append, copy-on-write merge, row-level delete + its compaction, file
 compaction, OPTIMIZE ZORDER, vacuum, clone, rollback, and history
 expiry. No new dataflow lives here — thin delegation only, pinned by
-the end-to-end scenario test (tests/test_governed_table.py).
+the end-to-end scenario test (tests/test_governed_table.py). The one
+policy it adds: every committing verb that plans from the table's
+state re-plans in a fresh transaction after a lost race, and the
+write gate checks a batch against the constraints in the frame of
+the transaction that commits it.
 """
 
 from __future__ import annotations
@@ -25,8 +30,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from aws_seismic_data_pipeline_spark.sources.footers import read_data_files
 
-from aws_seismic_data_pipeline_spark.sources.table import _verbs as R
-from aws_seismic_data_pipeline_spark.sources.table import localman
+from aws_seismic_data_pipeline_spark.sources.table import (
+    cdf,
+    commit,
+    constraints,
+    deletes,
+    evolution,
+    localman,
+    maintenance,
+    manifest,
+    sketches,
+    sqlface,
+)
 
 
 class GovernedTable:
@@ -85,7 +100,7 @@ class GovernedTable:
         files = sorted(
             glob.glob(os.path.join(data_dir, "**", "*.parquet"), recursive=True)
         )
-        R.write_stats_manifest(
+        manifest.write_stats_manifest(
             spark, files, manifest_dir, (key,), partition_by=partition_by
         )
         return cls(
@@ -103,7 +118,7 @@ class GovernedTable:
         """Stats-pruned key-range scan; ``as_of`` time-travels;
         ``partition_filter`` combines partition pruning with stats
         pruning in the same metadata pass."""
-        return R.manifest_pruned_scan(
+        return manifest.manifest_pruned_scan(
             self.spark,
             self.manifest_dir,
             self.key,
@@ -123,7 +138,7 @@ class GovernedTable:
         band prunes in one metadata pass, composed with partition
         pruning and time travel — the three-axis skipping real tables
         need (key band + second column + partition values)."""
-        return R.manifest_pruned_scan_multi(
+        return manifest.manifest_pruned_scan_multi(
             self.spark,
             self.manifest_dir,
             predicates,
@@ -133,7 +148,7 @@ class GovernedTable:
 
     def scan_with_deletes(self, as_of: int | None = None) -> DataFrame:
         """Full scan minus live equality deletes."""
-        return R.read_with_deletes(
+        return deletes.read_with_deletes(
             self.spark, self.manifest_dir, self.key, as_of=as_of
         )
 
@@ -150,7 +165,7 @@ class GovernedTable:
 
     def incremental(self, from_snapshot: int, to_snapshot: int) -> DataFrame:
         """CDC read: rows whose files arrived in (from, to]."""
-        return R.manifest_incremental_scan(
+        return manifest.manifest_incremental_scan(
             self.spark, self.manifest_dir, from_snapshot, to_snapshot
         )
 
@@ -167,7 +182,7 @@ class GovernedTable:
         ``timestamps`` pin extra ``<name>_<suffix>`` views (VERSION /
         TIMESTAMP AS OF); ``args`` bind as :named parameters. See
         table/sqlface.py."""
-        return R.governed_sql(
+        return sqlface.governed_sql(
             self.spark,
             self,
             text,
@@ -182,7 +197,7 @@ class GovernedTable:
         update_postimage / delete rows the commits in (from, to] made,
         derived from the manifest's add+tombstone pairs and delete
         records (Delta's ``table_changes`` — see table/cdf.py)."""
-        return R.table_changes(
+        return cdf.table_changes(
             self.spark, self.manifest_dir, self.key, from_snapshot, to_snapshot
         )
 
@@ -191,19 +206,19 @@ class GovernedTable:
         — feed it to the distributed global-order primitives' ``n_rows``
         so ranking/NTILE over a governed scan never pays a sizing
         count() pass over the fact table."""
-        return R.manifest_row_count(self.spark, self.manifest_dir, as_of=as_of)
+        return manifest.manifest_row_count(self.spark, self.manifest_dir, as_of=as_of)
 
     def count_range(self, lo: float, hi: float, as_of: int | None = None):
         """COUNT(key BETWEEN lo AND hi) answered mostly from metadata.
         Returns (n_total, n_from_metadata, n_files_scanned)."""
-        return R.manifest_count_range(
+        return manifest.manifest_count_range(
             self.spark, self.manifest_dir, self.key, lo, hi, as_of=as_of
         )
 
     def build_ndv_sketch(self, sketch_dir: str, column: str) -> None:
         """Persist per-file KMV NDV sketches for ``column`` (Puffin
         blobs); estimate with :meth:`ndv_estimate`."""
-        R.write_kmv_sketch_manifest(
+        sketches.write_kmv_sketch_manifest(
             self.spark, self.visible_files(), sketch_dir, column
         )
 
@@ -212,35 +227,31 @@ class GovernedTable:
     ) -> DataFrame:
         """Approximate distinct count from merged per-file sketches —
         zero data pages, over any pruned file subset."""
-        return R.sketch_merged_ndv(self.spark, sketch_dir, paths=paths)
+        return sketches.sketch_merged_ndv(self.spark, sketch_dir, paths=paths)
 
     # ---- write side ----------------------------------------------------
-    def _gate(self, batch: DataFrame):
+    def _gate(self, txn, batch: DataFrame) -> None:
         """Write-time constraint gate: one map-side aggregate over the
-        batch against the table's live CHECK/NOT NULL declarations;
-        raises ConstraintViolationError before anything is committed.
-        Returns a ``pre_commit(snapshot_id)`` closure the committing
-        verb runs INSIDE its claim: it re-resolves the (driver-side,
-        KB-scale) constraint metadata and, when a declaration landed
-        between this gate read and the commit, enforces exactly the
-        NEW constraints on the batch — so every batch is gated by the
-        constraint set live at ITS commit, not at its planning read
-        (Delta enforces inside the transaction)."""
-        gated = R.active_constraints(self.spark, self.manifest_dir)
-        R.enforce_constraints(self.spark, self.manifest_dir, batch, gated)
+        batch against the CHECK/NOT NULL declarations live in
+        ``txn.man``; raises ConstraintViolationError before anything is
+        published. A declaration that lands after the frame load moves
+        the tip, so the claim fails and the retry gates again from the
+        new frame — every batch is gated by the constraint set live at
+        ITS commit (Delta enforces inside the transaction)."""
+        live = constraints.active_constraints(
+            self.spark, self.manifest_dir, man=txn.man
+        )
+        constraints.enforce_constraints(
+            self.spark, self.manifest_dir, batch, live
+        )
 
-        def _recheck(_snap: int) -> None:
-            fresh = [
-                c
-                for c in R.active_constraints(self.spark, self.manifest_dir)
-                if c not in gated
-            ]
-            if fresh:
-                R.enforce_constraints(
-                    self.spark, self.manifest_dir, batch, fresh
-                )
-
-        return _recheck
+    def _gated(self, batch: DataFrame | None, body):
+        """One gated attempt: ``body(txn)`` in a fresh transaction, once
+        ``batch`` (None: nothing to gate) passes :meth:`_gate`."""
+        with commit.Transaction(self.spark, self.manifest_dir) as txn:
+            if batch is not None:
+                self._gate(txn, batch)
+            return body(txn)
 
     def add_constraint(
         self, name: str, expr: str, validate_existing: bool = True
@@ -249,24 +260,24 @@ class GovernedTable:
         ``validate_existing`` (default) first proves the CURRENT table
         satisfies it — Delta's ALTER TABLE ADD CONSTRAINT contract."""
         existing = self.scan_with_deletes() if validate_existing else None
-        return R.add_check_constraint(
+        return constraints.add_check_constraint(
             self.spark, self.manifest_dir, name, expr, existing=existing
         )
 
     def add_not_null(self, column: str, validate_existing: bool = True) -> int:
         """NOT NULL on ``column`` (enforced as CHECK col IS NOT NULL)."""
         existing = self.scan_with_deletes() if validate_existing else None
-        return R.add_not_null_constraint(
+        return constraints.add_not_null_constraint(
             self.spark, self.manifest_dir, column, existing=existing
         )
 
     def drop_constraint(self, name: str) -> int:
         """Retire a constraint (metadata commit; unknown name raises)."""
-        return R.drop_constraint(self.spark, self.manifest_dir, name)
+        return constraints.drop_constraint(self.spark, self.manifest_dir, name)
 
     def constraints(self) -> list[tuple[str, str, str]]:
         """Live [(name, kind, expr)] declarations."""
-        return R.active_constraints(self.spark, self.manifest_dir)
+        return constraints.active_constraints(self.spark, self.manifest_dir)
 
     def append(self, new_paths: list[str], max_retries: int = 5) -> int:
         """Register already-landed files at the next snapshot, retrying
@@ -274,17 +285,17 @@ class GovernedTable:
         ``manifest.append_stats_manifest_retry``). Gated by the
         table's constraints: a violating batch raises and nothing —
         snapshot, manifest row, claim — is touched."""
-        recheck = None
-        if new_paths:
-            recheck = self._gate(read_data_files(self.spark, new_paths))
-        snap, _ = R.append_stats_manifest_retry(
-            self.spark,
-            new_paths,
-            self.manifest_dir,
-            (self.key,),
-            partition_by=self.partition_by,
-            max_retries=max_retries,
-            pre_commit=recheck,
+        batch = read_data_files(self.spark, new_paths) if new_paths else None
+        snap, _ = commit.with_conflict_retry(
+            lambda: self._gated(
+                batch,
+                lambda txn: txn.commit(
+                    adds=new_paths,
+                    columns=(self.key,),
+                    partition_by=self.partition_by,
+                ),
+            ),
+            max_retries,
         )
         return snap
 
@@ -294,30 +305,23 @@ class GovernedTable:
         in the append's own transaction and gated there, so a batch
         that violates a constraint, or a commit that fails, leaves no
         file behind; a lost race re-stages in a fresh transaction."""
-        import uuid
 
-        tag = uuid.uuid4().hex[:12]
+        def run():
+            with commit.Transaction(self.spark, self.manifest_dir) as txn:
+                paths = txn.stage(
+                    lambda d: rows.write.mode("overwrite").parquet(d),
+                    self.data_dir,
+                    lambda i: f"{txn.name('sqlins')}-{i:05d}.parquet",
+                )
+                if paths:
+                    self._gate(txn, read_data_files(self.spark, paths))
+                return txn.commit(
+                    adds=paths,
+                    columns=(self.key,),
+                    partition_by=self.partition_by,
+                )
 
-        def body(txn):
-            paths = txn.stage(
-                lambda d: rows.write.mode("overwrite").parquet(d),
-                self.data_dir,
-                lambda i: f"sqlins-{tag}-{i:05d}.parquet",
-            )
-            if paths:
-                self._gate(read_data_files(self.spark, paths))
-            return R.append_stats_manifest(
-                self.spark,
-                paths,
-                self.manifest_dir,
-                (self.key,),
-                txn=txn,
-                partition_by=self.partition_by,
-            )
-
-        snap, _ = R.with_conflict_retry(
-            self.spark, self.manifest_dir, body, max_retries
-        )
+        snap, _ = commit.with_conflict_retry(run, max_retries)
         return snap
 
     def optimize_zorder(self, x_col: str, y_col: str, n_files: int = 16):
@@ -326,40 +330,46 @@ class GovernedTable:
         table's own partition_by is threaded so the rewritten files'
         stats rows keep their partition values (a bare rewrite would
         turn every later partition filter conservative)."""
-        return R.optimize_zorder(
-            self.spark,
-            self.manifest_dir,
-            x_col,
-            y_col,
-            n_files=n_files,
-            partition_by=self.partition_by,
-        )
+        return commit.with_conflict_retry(
+            lambda: maintenance.optimize_zorder(
+                self.spark,
+                self.manifest_dir,
+                x_col,
+                y_col,
+                n_files=n_files,
+                partition_by=self.partition_by,
+            )
+        )[0]
 
     def optimize_zorder_by(self, cols: list[str], n_files: int = 16):
         """k-dimensional OPTIMIZE ZORDER BY: cluster on the n-way
         Morton interleave of any column list (Delta's multi-column
         form); partition_by threaded like every maintenance verb."""
-        return R.optimize_zorder_n(
-            self.spark,
-            self.manifest_dir,
-            cols,
-            n_files=n_files,
-            partition_by=self.partition_by,
-        )
+        return commit.with_conflict_retry(
+            lambda: maintenance.optimize_zorder_n(
+                self.spark,
+                self.manifest_dir,
+                cols,
+                n_files=n_files,
+                partition_by=self.partition_by,
+            )
+        )[0]
 
     def optimize_hilbert(self, x_col: str, y_col: str, n_files: int = 16):
         """Rewrite the table Hilbert-clustered on two columns at one
         snapshot — equal pruning power to :meth:`optimize_zorder`,
         better run contiguity (fewer byte ranges per rectangle); the
         table's partition_by is threaded like every maintenance verb."""
-        return R.optimize_hilbert(
-            self.spark,
-            self.manifest_dir,
-            x_col,
-            y_col,
-            n_files=n_files,
-            partition_by=self.partition_by,
-        )
+        return commit.with_conflict_retry(
+            lambda: maintenance.optimize_hilbert(
+                self.spark,
+                self.manifest_dir,
+                x_col,
+                y_col,
+                n_files=n_files,
+                partition_by=self.partition_by,
+            )
+        )[0]
 
     def scan_multi_rowgroup(
         self,
@@ -371,7 +381,7 @@ class GovernedTable:
         opened only if some single row group can satisfy every
         predicate at once — strictly fewer files than
         :meth:`scan_multi` on concat-compacted layouts."""
-        return R.manifest_pruned_scan_multi_rowgroup(
+        return manifest.manifest_pruned_scan_multi_rowgroup(
             self.spark,
             self.manifest_dir,
             predicates,
@@ -384,37 +394,26 @@ class GovernedTable:
     ):
         """MERGE with schema evolution in ONE snapshot: delta columns
         the table has never seen are declared and merged atomically
-        (Delta's mergeSchema-on-MERGE). Returns (snapshot,
-        intersecting, rewritten, evolved_columns)."""
-        recheck = self._gate(delta)
-        return R.merge_evolve_through_manifest(
-            self.spark,
-            self.manifest_dir,
-            delta,
-            self.key,
-            cols,
-            insert_files=insert_files,
-            partition_by=self.partition_by,
-            pre_commit=recheck,
-        )
+        (Delta's mergeSchema-on-MERGE). Gated and retried like
+        :meth:`merge`. Returns (snapshot, intersecting, rewritten,
+        evolved_columns)."""
+        return commit.with_conflict_retry(
+            lambda: self._gated(
+                delta,
+                lambda txn: maintenance.merge_evolve_in(
+                    txn, delta, self.key, cols, insert_files, self.partition_by
+                ),
+            )
+        )[0]
 
     def merge(self, delta: DataFrame, cols: list[str], insert_files: int = 1):
         """Copy-on-write MERGE: returns (snapshot, intersecting,
         rewritten). On a partitioned table the table's own partition_by
         is threaded: rewrites stay inside their partition dirs, inserts
         land Hive-partitioned (the delta must carry the partition
-        columns), and the committed stats rows keep partition values."""
-        recheck = self._gate(delta)
-        return R.merge_through_manifest(
-            self.spark,
-            self.manifest_dir,
-            delta,
-            self.key,
-            cols,
-            insert_files=insert_files,
-            partition_by=self.partition_by,
-            pre_commit=recheck,
-        )
+        columns), and the committed stats rows keep partition values.
+        A lost race re-plans (see :meth:`merge_concurrent`)."""
+        return self._merge(delta, delta, cols, insert_files)[0]
 
     def merge_with_delete(
         self,
@@ -433,17 +432,12 @@ class GovernedTable:
         writes = delta.filter(
             ~F.coalesce(F.expr(delete_where), F.lit(False))
         )
-        recheck = self._gate(writes)
         stats: dict = {}
-        snap, n_int, n_rw = R.merge_through_manifest(
-            self.spark,
-            self.manifest_dir,
+        (snap, n_int, n_rw), _ = self._merge(
             delta,
-            self.key,
+            writes,
             cols,
-            insert_files=insert_files,
-            partition_by=self.partition_by,
-            pre_commit=recheck,
+            insert_files,
             delete_where=delete_where,
             stats_out=stats,
         )
@@ -452,84 +446,115 @@ class GovernedTable:
     def merge_concurrent(
         self, delta: DataFrame, cols: list[str], max_retries: int = 3
     ):
-        """Copy-on-write MERGE under optimistic concurrency: CAS-claims
-        the commit snapshot and re-plans on a lost race. Returns
-        (snapshot, intersecting, rewritten, n_retries). partition_by is
-        threaded exactly as in :meth:`merge`."""
-        recheck = self._gate(delta)
-        return R.merge_with_conflict_retry(
-            self.spark,
-            self.manifest_dir,
-            delta,
-            self.key,
-            cols,
-            max_retries=max_retries,
-            partition_by=self.partition_by,
-            pre_commit=recheck,
+        """Copy-on-write MERGE under optimistic concurrency: plans from
+        its transaction's frame, claims at publish and re-plans on a
+        lost race. Returns (snapshot, intersecting, rewritten,
+        n_retries). partition_by is threaded exactly as in
+        :meth:`merge`."""
+        out, n_retries = self._merge(delta, delta, cols, 1, max_retries)
+        return (*out, n_retries)
+
+    def _merge(
+        self,
+        delta: DataFrame,
+        writes: DataFrame,
+        cols: list[str],
+        insert_files: int,
+        max_retries: int = 3,
+        **clauses,
+    ):
+        """The one MERGE path: gate ``writes`` and merge ``delta`` in a
+        fresh transaction per attempt. Returns ((snapshot,
+        intersecting, rewritten), n_retries)."""
+        return commit.with_conflict_retry(
+            lambda: self._gated(
+                writes,
+                lambda txn: maintenance.merge_in(
+                    txn,
+                    delta,
+                    self.key,
+                    cols,
+                    insert_files,
+                    self.partition_by,
+                    **clauses,
+                ),
+            ),
+            max_retries,
         )
 
     def add_column(self, column: str, sql_type: str) -> int:
         """ADD COLUMN as a metadata commit (NULL-backfilled at scan for
         pre-commit files); time-traveled via the snapshot axis."""
-        return R.evolve_schema_add(self.spark, self.manifest_dir, column, sql_type)
+        return evolution.evolve_schema_add(self.spark, self.manifest_dir, column, sql_type)
 
     def rename_column(self, old: str, new: str) -> int:
         """RENAME COLUMN as a metadata commit — zero data rewritten;
         pre-commit files are re-mapped at scan time (Iceberg
         column-mapping replayed from the commit log)."""
-        return R.evolve_schema_rename(self.spark, self.manifest_dir, old, new)
+        return evolution.evolve_schema_rename(self.spark, self.manifest_dir, old, new)
 
     def drop_column(self, column: str) -> int:
         """DROP COLUMN as a metadata commit — tombstoned, not
         rewritten; as-of reads below the commit still see it."""
-        return R.evolve_schema_drop(self.spark, self.manifest_dir, column)
+        return evolution.evolve_schema_drop(self.spark, self.manifest_dir, column)
 
     def scan_evolved(self, as_of: int | None = None) -> DataFrame:
         """Full scan under the evolved schema visible at ``as_of``."""
-        return R.read_evolved(self.spark, self.manifest_dir, self.key, as_of=as_of)
+        return evolution.read_evolved(self.spark, self.manifest_dir, self.key, as_of=as_of)
 
     def delete_keys(self, values: list) -> int:
         """Row-level equality delete (metadata only)."""
-        return R.equality_delete(self.spark, self.manifest_dir, self.key, values)
+        return deletes.equality_delete(self.spark, self.manifest_dir, self.key, values)
 
     # ---- maintenance ---------------------------------------------------
     def compact_deletes(self):
-        """Physically apply live deletes and retire their records."""
-        return R.compact_equality_deletes(self.spark, self.manifest_dir, self.key)
+        """Physically apply live deletes and retire their records;
+        a lost race re-plans."""
+        return commit.with_conflict_retry(
+            lambda: deletes.compact_equality_deletes(
+                self.spark, self.manifest_dir, self.key
+            )
+        )[0]
 
     def compact_files(self, paths: list[str]):
         """Merge fragment files; add+tombstone at one snapshot. Pass
         fragments from ONE partition dir at a time (optimize() already
         bins per dir); the table's partition_by is threaded so the
-        compacted file's stats keep their partition values."""
-        return R.commit_data_compaction(
-            self.spark,
-            self.manifest_dir,
-            paths,
-            (self.key,),
-            partition_by=self.partition_by,
-        )
+        compacted file's stats keep their partition values. A path no
+        longer visible raises ValueError; a lost race retries."""
+        return commit.with_conflict_retry(
+            lambda: maintenance.commit_data_compaction(
+                self.spark,
+                self.manifest_dir,
+                paths,
+                (self.key,),
+                partition_by=self.partition_by,
+            )
+        )[0]
 
     def optimize(self, target_bytes: int = 128 * 1024 * 1024):
         """Bin-pack every visible file to the target size WITHIN its
         partition dir and commit each multi-file bin (Delta OPTIMIZE).
-        Returns (n_bins_compacted, n_files_before, n_files_after)."""
-        return R.optimize_table(
-            self.spark,
-            self.manifest_dir,
-            target_bytes,
-            partition_by=self.partition_by,
-        )
+        A lost race re-plans from the new frame. Returns
+        (n_bins_compacted, n_files_before, n_files_after)."""
+        return commit.with_conflict_retry(
+            lambda: maintenance.optimize_table(
+                self.spark,
+                self.manifest_dir,
+                target_bytes,
+                partition_by=self.partition_by,
+            )
+        )[0]
 
     def vacuum_report(self) -> DataFrame:
         """Files on disk but untracked — reclaimable storage."""
-        return R.vacuum_orphans_report(self.spark, self.data_dir, self.manifest_dir)
+        return maintenance.vacuum_orphans_report(self.spark, self.data_dir, self.manifest_dir)
 
     def vacuum(self, older_than_seconds: float = 7 * 24 * 3600):
         """Delete untracked files older than the retention window
         (forfeits as-of reads older than it — Delta's VACUUM trade).
         Returns (n_deleted, bytes_reclaimed)."""
-        return R.vacuum_orphans(
+        return maintenance.vacuum_orphans(
             self.spark,
             self.data_dir,
             self.manifest_dir,
@@ -545,7 +570,7 @@ class GovernedTable:
             log_store_for,
         )
 
-        R.clone_manifest(self.spark, self.manifest_dir, dst_manifest)
+        maintenance.clone_manifest(self.spark, self.manifest_dir, dst_manifest)
         return GovernedTable(
             self.spark,
             self.data_dir,
@@ -557,18 +582,18 @@ class GovernedTable:
 
     def rollback(self, to_snapshot: int) -> int:
         """History-preserving rollback-as-new-commit."""
-        return R.rollback_manifest(self.spark, self.manifest_dir, to_snapshot)
+        return maintenance.rollback_manifest(self.spark, self.manifest_dir, to_snapshot)
 
     def expire(self, below: int):
         """Drop history below ``below``; pinned reads under it raise."""
-        return R.expire_manifest_history(self.spark, self.manifest_dir, below)
+        return maintenance.expire_manifest_history(self.spark, self.manifest_dir, below)
 
     def history(self) -> DataFrame:
         """DESCRIBE HISTORY: per snapshot the op kinds, files added /
         removed, rows added, delete records landed, and the commit
         wall-clock marker — straight off the manifest
         (metadata-scale)."""
-        return R.describe_history(self.spark, self.manifest_dir)
+        return manifest.describe_history(self.spark, self.manifest_dir)
 
     def visible_files(self, as_of: int | None = None) -> list[str]:
         """The file list a scan at ``as_of`` would consider

@@ -192,6 +192,14 @@ def _on_cluster(spark, manifest_dir: str, fn, schema: str):
     )
 
 
+def tip(man) -> int:
+    """The newest snapshot id in a manifest frame, -1 when it holds
+    none."""
+    if "snapshot_id" not in man.columns or man.empty:
+        return -1
+    return int(man["snapshot_id"].max())
+
+
 def visible(man, as_of: int | None):
     """'add' rows whose path has no 'remove' tombstone at or below the
     pin."""

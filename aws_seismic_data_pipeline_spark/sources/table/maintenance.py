@@ -22,8 +22,8 @@ from aws_seismic_data_pipeline_spark.sources.footers import (
     read_data_files,
 )
 from aws_seismic_data_pipeline_spark.sources.table.commit import (
+    ConcurrentCommitError,
     Transaction,
-    joined,
     with_conflict_retry,
 )
 from aws_seismic_data_pipeline_spark.sources.table.logstore import (
@@ -49,30 +49,25 @@ def merge_with_conflict_retry(
     insert_files: int = 1,
     max_retries: int = 3,
     partition_by: tuple[str, ...] = (),
-    pre_commit=None,
 ) -> tuple[int, int, int, int]:
-    """MERGE under optimistic concurrency: claim the next id and plan
-    against the snapshot it follows, then commit; on a lost race, RE-PLAN
-    from scratch in a fresh transaction (:func:`commit.with_conflict_retry`)
-    — candidacy, the rewrite set, and matched-vs-insert classification
+    """MERGE under optimistic concurrency: plan from the transaction's
+    frame and claim at publish; on a lost race, RE-PLAN from scratch
+    in a fresh transaction (:func:`commit.with_conflict_retry`) —
+    candidacy, the rewrite set, and matched-vs-insert classification
     are all recomputed against the winner's committed state, so the
     outcome is the SERIAL order of the commits (what Delta calls write
     serializability), never a lost update. Bounded retries: livelock
     under pathological contention fails loudly rather than spinning.
     Returns (snapshot_id, n_intersecting, n_rewritten, n_retries)."""
     (s, n_int, n_rw), attempt = with_conflict_retry(
-        spark,
-        manifest_dir,
-        lambda txn: merge_through_manifest(
+        lambda: merge_through_manifest(
             spark,
             manifest_dir,
             delta,
             key,
             cols,
             insert_files=insert_files,
-            txn=txn,
             partition_by=partition_by,
-            pre_commit=pre_commit,
         ),
         max_retries,
     )
@@ -356,7 +351,6 @@ def commit_data_compaction(
     paths: list[str],
     columns: tuple[str, ...] | None = None,
     partition_by: tuple[str, ...] = (),
-    txn=None,
 ) -> tuple[str, int]:
     """DATA-file compaction committed THROUGH the manifest — the
     missing half of ``catalog.compact_parquet_dir`` for
@@ -374,53 +368,69 @@ def commit_data_compaction(
     set the FRAGMENTS had in the manifest — a narrower append would
     hide the compacted file from scans probing the other tracked
     columns (the merge/delete-compaction fix, applied here too);
-    ``partition_by`` re-records Hive partition values. The commit
-    runs in ``txn`` — the caller's :class:`commit.Transaction`, built
-    before the caller chose ``paths`` — else in one built before the
-    tracked columns are read. Returns (new_path, snapshot_id)."""
+    ``partition_by`` re-records Hive partition values. Raises
+    ValueError when a fragment is not visible at the snapshot the
+    commit follows (an out-of-date path list would re-add rows the
+    table no longer holds). Returns (new_path, snapshot_id)."""
+    with Transaction(spark, manifest_dir) as txn:
+        return _compact(txn, paths, columns, partition_by)
+
+
+def _compact(
+    txn: Transaction,
+    paths: list[str],
+    columns: tuple[str, ...] | None = None,
+    partition_by: tuple[str, ...] = (),
+) -> tuple[str, int]:
+    """:func:`commit_data_compaction`'s body, planned from ``txn.man``
+    and committed in ``txn``."""
+    import pandas as _pd
+
     if not paths:
         raise ValueError("commit_data_compaction: empty path list")
-    txn_ctx = joined(spark, manifest_dir, txn)
+    spark = txn.spark
+
+    def fn(m):
+        adds = localman.visible(m, None)
+        adds = adds[adds["path"].isin(list(paths))]
+        return _pd.DataFrame(
+            {
+                "path": adds["path"].astype(object),
+                "column_name": adds["column_name"].astype(object),
+            }
+        ).drop_duplicates()
+
+    vis = localman.answer(
+        spark, txn.manifest_dir, fn, "path string, column_name string", txn.man
+    )
+    gone = sorted(set(paths) - set(vis["path"]))
+    if gone:
+        raise ValueError(
+            "commit_data_compaction: input path(s) not visible at snapshot "
+            f"{txn.parent} of {txn.manifest_dir}: {gone}"
+        )
     if columns is None:
-        import pandas as _pd
-
-        def fn(m):
-            adds = m[(m["op"] == "add") & m["path"].isin(list(paths))]
-            return _pd.DataFrame(
-                {"column_name": adds["column_name"].unique()}, dtype=object
-            )
-
-        tracked = sorted(
-            set(
-                localman.answer(
-                    spark, manifest_dir, fn, "column_name string"
-                )["column_name"]
-            )
-        )
-        columns = tuple(tracked) or _MANIFEST_COLS
-    out_dir = os.path.dirname(sorted(paths)[0])
-    with txn_ctx as txn:
-        snap = txn.snapshot_id
-        # merge_schema: after evolve_schema_add a mixed file set can
-        # carry the evolved column in SOME files; schema inference from
-        # a pre-evolution file would silently drop it from the output
-        (new_path,) = txn.stage(
-            lambda d: read_data_files(spark, list(paths), merge_schema=True)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(d),
-            out_dir,
-            lambda _i: f"compacted-{snap}.parquet",
-        )
-        # add(compacted) + remove(fragments) commit as ONE append — a
-        # reader between two appends would double-count (or lose) the
-        # fragment rows
-        txn.commit(
-            adds=[new_path],
-            columns=columns,
-            removes=paths,
-            partition_by=partition_by,
-        )
+        columns = tuple(sorted(set(vis["column_name"]))) or _MANIFEST_COLS
+    # merge_schema: after evolve_schema_add a mixed file set can
+    # carry the evolved column in SOME files; schema inference from
+    # a pre-evolution file would silently drop it from the output
+    (new_path,) = txn.stage(
+        lambda d: read_data_files(spark, list(paths), merge_schema=True)
+        .coalesce(1)
+        .write.mode("overwrite")
+        .parquet(d),
+        os.path.dirname(sorted(paths)[0]),
+        lambda _i: f"{txn.name('compacted')}.parquet",
+    )
+    # add(compacted) + remove(fragments) commit as ONE append — a
+    # reader between two appends would double-count (or lose) the
+    # fragment rows
+    snap = txn.commit(
+        adds=[new_path],
+        columns=columns,
+        removes=paths,
+        partition_by=partition_by,
+    )
     return new_path, snap
 
 
@@ -583,22 +593,20 @@ def rollback_manifest(
     the target and now (a compaction input) cannot be resurrected — a
     rollback across such maintenance raises instead of silently
     restoring a state with missing files."""
-    txn = Transaction(spark, manifest_dir)
-    lman = localman.load(manifest_dir)
-    target, current = (
-        set(localman.visible_paths(spark, manifest_dir, pin, lman))
-        for pin in (to_snapshot, None)
-    )
-    missing = sorted(target - current)
-    if missing:
-        raise ValueError(
-            "rollback would need to resurrect files removed since the "
-            f"target snapshot (unsupported): {missing[:3]}..."
+    with Transaction(spark, manifest_dir) as txn:
+        target, current = (
+            set(localman.visible_paths(spark, manifest_dir, pin, txn.man))
+            for pin in (to_snapshot, None)
         )
-    to_hide = sorted(current - target)
-    if not to_hide:
-        return to_snapshot  # already at (or before) the target state
-    with txn:
+        missing = sorted(target - current)
+        if missing:
+            raise ValueError(
+                "rollback would need to resurrect files removed since the "
+                f"target snapshot (unsupported): {missing[:3]}..."
+            )
+        to_hide = sorted(current - target)
+        if not to_hide:
+            return to_snapshot  # already at (or before) the target state
         return txn.commit(removes=to_hide)
 
 
@@ -672,10 +680,7 @@ def merge_through_manifest(
     key: str,
     cols: list[str],
     insert_files: int = 1,
-    txn=None,
     partition_by: tuple[str, ...] = (),
-    extra_commit_frames: list | None = None,
-    pre_commit=None,
     delete_where: str | None = None,
     stats_out: dict | None = None,
 ) -> tuple[int, int, int]:
@@ -728,12 +733,39 @@ def merge_through_manifest(
     carry the partition columns. Updates never move a row between
     partitions (partition columns are not updatable ``cols``).
 
-    The commit runs in ``txn`` — the caller's
-    :class:`commit.Transaction`, whose snapshot the plan then reads —
-    else in a transaction of its own, built before the plan reads the
-    manifest and claimed once the plan is made (a commit that lands in
-    between fails the claim instead of publishing a stale rewrite)."""
+    The plan reads the frame of the MERGE's own transaction, which
+    claims only at publish: a commit that lands in between fails the
+    claim instead of publishing a stale rewrite."""
+    with Transaction(spark, manifest_dir) as txn:
+        return merge_in(
+            txn,
+            delta,
+            key,
+            cols,
+            insert_files,
+            partition_by,
+            delete_where=delete_where,
+            stats_out=stats_out,
+        )
+
+
+def merge_in(
+    txn: Transaction,
+    delta: DataFrame,
+    key: str,
+    cols: list[str],
+    insert_files: int = 1,
+    partition_by: tuple[str, ...] = (),
+    extra_commit_frames: list | None = None,
+    delete_where: str | None = None,
+    stats_out: dict | None = None,
+) -> tuple[int, int, int]:
+    """:func:`merge_through_manifest`'s body, planned from ``txn.man``
+    and committed in ``txn``; ``extra_commit_frames`` ride in the same
+    manifest file."""
     import collections as _collections
+
+    spark, manifest_dir, lman = txn.spark, txn.manifest_dir, txn.man
 
     if partition_by:
         missing = [c for c in partition_by if c not in delta.columns]
@@ -751,8 +783,6 @@ def merge_through_manifest(
     # Preserve every tracked stats column present in the rewritten
     # schema (key, *cols) — appending key-only stats would hide the
     # rewrites from scans probing the other tracked columns
-    txn_ctx = joined(spark, manifest_dir, txn)
-    lman = localman.load(manifest_dir)
     bounds = localman.column_bounds(spark, manifest_dir, lman)
     tracked = tuple(sorted(set(bounds) & {key, *cols})) or (key,)
 
@@ -823,161 +853,155 @@ def merge_through_manifest(
             "key (dedup the delta first)"
         )
     intersecting = sorted(r.path for r in hit_rows if r.path is not None)
-    with txn_ctx as txn:
-        snap = txn.snapshot_id
-        new_paths: list[str] = []
-        n_rewritten = 0
-        if intersecting:
-            # partitioned: rewrite per partition dir so every row lands
-            # back in the dir carrying its (path-only) partition value;
-            # unpartitioned: one group, the pre-existing single-dir shape
-            if partition_by:
-                by_dir: dict[str, list[str]] = _collections.defaultdict(list)
-                for p in intersecting:
-                    by_dir[os.path.dirname(p)].append(p)
-            else:
-                by_dir = {os.path.dirname(intersecting[0]): intersecting}
-            for out_dir, group in by_dir.items():
-                touched_g = read_data_files(spark, group, merge_schema=True)
-                # ONE join serves both MATCHED clauses (r16 fusion — was
-                # a del-keys anti-join THEN a d_upd left join, two
-                # broadcast builds per partition group): left-join the
-                # full flagged delta; a matched row whose delta row
-                # carries _mtm_del vanishes (WHEN MATCHED ... THEN
-                # DELETE), sound because the dup check above guarantees
-                # at most one delta row per key. Unmatched base rows
-                # coalesce to their own values (_mtm_del null -> kept).
-                joined_g = touched_g.alias("b").join(
-                    d.alias("u"),
-                    F.col(f"b.{key}") == F.col(f"u.{key}"),
-                    "left",
-                )
-                if delete_where:
-                    joined_g = joined_g.filter(
-                        ~F.coalesce(F.col("u._mtm_del"), F.lit(False))
-                    )
-                rewritten = joined_g.select(
-                    F.col(f"b.{key}").alias(key),
-                    *[
-                        # a col the base files don't physically carry
-                        # (schema evolution: declared, or arriving with
-                        # THIS delta) is delta-only — unmatched base
-                        # rows get NULL, the mergeSchema-on-MERGE
-                        # semantics Delta ships
-                        F.coalesce(F.col(f"u.{c}"), F.col(f"b.{c}")).alias(c)
-                        if c in touched_g.columns
-                        else F.col(f"u.{c}").alias(c)
-                        for c in cols
-                    ],
-                )
-                new_paths += txn.stage(
-                    lambda tmp: rewritten.repartitionByRange(len(group), key)
-                    .write.mode("overwrite")
-                    .parquet(tmp),
-                    out_dir,
-                    lambda i: f"merged-{snap}-{i:05d}.parquet",
-                )
-            n_rewritten = len(new_paths)
-            touched_keys = read_data_files(spark, intersecting).select(key)
-            # unmatched delete-clause rows do nothing (matched-only
-            # semantics); the flag column never reaches a written file
-            if stats_out is not None:
-                # ONE scan of the intersecting files serves BOTH the
-                # insert anti-join and the per-clause accounting (r16
-                # fusion: the accounting agg used to re-read the same
-                # parquet): mark each delta row matched/unmatched once,
-                # checkpoint the delta-sized marks, and let inserts +
-                # the accounting agg both read them.
-                dj = d.join(
-                    touched_keys.distinct().withColumn("_m", F.lit(1)),
-                    key,
-                    "left",
-                ).localCheckpoint(eager=True)
-                inserts = dj.filter(
-                    F.col("_m").isNull() & ~F.col("_mtm_del")
-                ).drop("_m", "_mtm_del")
-            else:
-                dj = None
-                inserts = (
-                    d.filter(~F.col("_mtm_del"))
-                    .join(touched_keys, key, "left_anti")
-                    .drop("_mtm_del")
-                )
-            sample_path = intersecting[0]
-        else:
-            # no file can contain any delta key: the whole delta inserts
-            sample_path = localman.first_visible_path(
-                spark, manifest_dir, None, lman
-            )
-            dj = None
-            inserts = d.filter(~F.col("_mtm_del")).drop("_mtm_del")
-        if stats_out is not None:
-            # per-clause row accounting (Delta's operationMetrics): one
-            # delta-sized agg over the checkpointed match marks (shared
-            # with the insert anti-join above — no second scan of the
-            # intersecting files)
-            if dj is None:
-                dj = d.withColumn("_m", F.lit(None).cast("int"))
-            acc = dj.agg(
-                F.sum(
-                    F.when(F.col("_m").isNotNull() & F.col("_mtm_del"), 1)
-                    .otherwise(0)
-                ).alias("deleted"),
-                F.sum(
-                    F.when(F.col("_m").isNotNull() & ~F.col("_mtm_del"), 1)
-                    .otherwise(0)
-                ).alias("updated"),
-                F.sum(
-                    F.when(F.col("_m").isNull() & ~F.col("_mtm_del"), 1)
-                    .otherwise(0)
-                ).alias("inserted"),
-            ).collect()[0]
-            stats_out.update(
-                updated=int(acc.updated or 0),
-                inserted=int(acc.inserted or 0),
-                deleted=int(acc.deleted or 0),
-            )
-        root = _strip_partition_dirs(os.path.dirname(sample_path), partition_by)
-        # insert_files=1 suits the common daily-delta ≪ table case; a
-        # bulk backfill passes more and each becomes its own
-        # range-clustered, independently-pruned manifest row
-        ins = (
-            inserts.coalesce(1)
-            if insert_files <= 1
-            else inserts.repartitionByRange(insert_files, key)
-        )
-        writer = ins.write.mode("overwrite")
+    new_paths: list[str] = []
+    n_rewritten = 0
+    if intersecting:
+        # partitioned: rewrite per partition dir so every row lands
+        # back in the dir carrying its (path-only) partition value;
+        # unpartitioned: one group, the pre-existing single-dir shape
         if partition_by:
-            # inserts land Hive-partitioned: partitionBy strips the
-            # partition columns from the files, matching the table layout
-            writer = writer.partitionBy(*partition_by)
-        # parquet writes a (schema-only) file even for an empty frame;
-        # an empty insert file would add a stats-less row the pruner
-        # must conservatively open forever — commit only parts with rows
-        new_paths += txn.stage(
-            writer.parquet,
-            root,
-            lambda i: f"merged-{snap}-inserts-{i:05d}.parquet",
-            skip_empty=True,
-        )
-        if not new_paths and not intersecting:
-            raise ValueError(
-                "merge_through_manifest: empty delta — nothing to do"
+            by_dir: dict[str, list[str]] = _collections.defaultdict(list)
+            for p in intersecting:
+                by_dir[os.path.dirname(p)].append(p)
+        else:
+            by_dir = {os.path.dirname(intersecting[0]): intersecting}
+        for out_dir, group in by_dir.items():
+            touched_g = read_data_files(spark, group, merge_schema=True)
+            # ONE join serves both MATCHED clauses (r16 fusion — was
+            # a del-keys anti-join THEN a d_upd left join, two
+            # broadcast builds per partition group): left-join the
+            # full flagged delta; a matched row whose delta row
+            # carries _mtm_del vanishes (WHEN MATCHED ... THEN
+            # DELETE), sound because the dup check above guarantees
+            # at most one delta row per key. Unmatched base rows
+            # coalesce to their own values (_mtm_del null -> kept).
+            joined_g = touched_g.alias("b").join(
+                d.alias("u"),
+                F.col(f"b.{key}") == F.col(f"u.{key}"),
+                "left",
             )
-        # adds + removes land in ONE manifest file: a concurrent loser
-        # re-planning mid-commit must never see the rewritten files
-        # alongside the still-untombstoned originals. pre_commit is the
-        # facade's in-transaction constraint re-check (see
-        # append_stats_manifest): a raise aborts before the manifest
-        # write and the transaction deletes the staged files
-        txn.commit(
-            adds=new_paths,
-            columns=tracked,
-            removes=intersecting,
-            partition_by=partition_by,
-            extra=extra_commit_frames or (),
-            pre_commit=pre_commit,
+            if delete_where:
+                joined_g = joined_g.filter(
+                    ~F.coalesce(F.col("u._mtm_del"), F.lit(False))
+                )
+            rewritten = joined_g.select(
+                F.col(f"b.{key}").alias(key),
+                *[
+                    # a col the base files don't physically carry
+                    # (schema evolution: declared, or arriving with
+                    # THIS delta) is delta-only — unmatched base
+                    # rows get NULL, the mergeSchema-on-MERGE
+                    # semantics Delta ships
+                    F.coalesce(F.col(f"u.{c}"), F.col(f"b.{c}")).alias(c)
+                    if c in touched_g.columns
+                    else F.col(f"u.{c}").alias(c)
+                    for c in cols
+                ],
+            )
+            new_paths += txn.stage(
+                lambda tmp: rewritten.repartitionByRange(len(group), key)
+                .write.mode("overwrite")
+                .parquet(tmp),
+                out_dir,
+                lambda i: f"{txn.name('merged')}-{i:05d}.parquet",
+            )
+        n_rewritten = len(new_paths)
+        touched_keys = read_data_files(spark, intersecting).select(key)
+        # unmatched delete-clause rows do nothing (matched-only
+        # semantics); the flag column never reaches a written file
+        if stats_out is not None:
+            # ONE scan of the intersecting files serves BOTH the
+            # insert anti-join and the per-clause accounting (r16
+            # fusion: the accounting agg used to re-read the same
+            # parquet): mark each delta row matched/unmatched once,
+            # checkpoint the delta-sized marks, and let inserts +
+            # the accounting agg both read them.
+            dj = d.join(
+                touched_keys.distinct().withColumn("_m", F.lit(1)),
+                key,
+                "left",
+            ).localCheckpoint(eager=True)
+            inserts = dj.filter(
+                F.col("_m").isNull() & ~F.col("_mtm_del")
+            ).drop("_m", "_mtm_del")
+        else:
+            dj = None
+            inserts = (
+                d.filter(~F.col("_mtm_del"))
+                .join(touched_keys, key, "left_anti")
+                .drop("_mtm_del")
+            )
+        sample_path = intersecting[0]
+    else:
+        # no file can contain any delta key: the whole delta inserts
+        sample_path = localman.first_visible_path(
+            spark, manifest_dir, None, lman
         )
+        dj = None
+        inserts = d.filter(~F.col("_mtm_del")).drop("_mtm_del")
+    if stats_out is not None:
+        # per-clause row accounting (Delta's operationMetrics): one
+        # delta-sized agg over the checkpointed match marks (shared
+        # with the insert anti-join above — no second scan of the
+        # intersecting files)
+        if dj is None:
+            dj = d.withColumn("_m", F.lit(None).cast("int"))
+        acc = dj.agg(
+            F.sum(
+                F.when(F.col("_m").isNotNull() & F.col("_mtm_del"), 1)
+                .otherwise(0)
+            ).alias("deleted"),
+            F.sum(
+                F.when(F.col("_m").isNotNull() & ~F.col("_mtm_del"), 1)
+                .otherwise(0)
+            ).alias("updated"),
+            F.sum(
+                F.when(F.col("_m").isNull() & ~F.col("_mtm_del"), 1)
+                .otherwise(0)
+            ).alias("inserted"),
+        ).collect()[0]
+        stats_out.update(
+            updated=int(acc.updated or 0),
+            inserted=int(acc.inserted or 0),
+            deleted=int(acc.deleted or 0),
+        )
+    root = _strip_partition_dirs(os.path.dirname(sample_path), partition_by)
+    # insert_files=1 suits the common daily-delta ≪ table case; a
+    # bulk backfill passes more and each becomes its own
+    # range-clustered, independently-pruned manifest row
+    ins = (
+        inserts.coalesce(1)
+        if insert_files <= 1
+        else inserts.repartitionByRange(insert_files, key)
+    )
+    writer = ins.write.mode("overwrite")
+    if partition_by:
+        # inserts land Hive-partitioned: partitionBy strips the
+        # partition columns from the files, matching the table layout
+        writer = writer.partitionBy(*partition_by)
+    # parquet writes a (schema-only) file even for an empty frame;
+    # an empty insert file would add a stats-less row the pruner
+    # must conservatively open forever — commit only parts with rows
+    new_paths += txn.stage(
+        writer.parquet,
+        root,
+        lambda i: f"{txn.name('merged')}-inserts-{i:05d}.parquet",
+        skip_empty=True,
+    )
+    if not new_paths and not intersecting:
+        raise ValueError(
+            "merge_through_manifest: empty delta — nothing to do"
+        )
+    # adds + removes land in ONE manifest file: a concurrent loser
+    # re-planning mid-commit must never see the rewritten files
+    # alongside the still-untombstoned originals
+    snap = txn.commit(
+        adds=new_paths,
+        columns=tracked,
+        removes=intersecting,
+        partition_by=partition_by,
+        extra=extra_commit_frames or (),
+    )
     return snap, len(intersecting), n_rewritten
 
 
@@ -1113,7 +1137,6 @@ def merge_evolve_through_manifest(
     cols: list[str],
     insert_files: int = 1,
     partition_by: tuple[str, ...] = (),
-    pre_commit=None,
 ) -> tuple[int, int, int, list[str]]:
     """MERGE **with schema evolution** in ONE snapshot — Delta's
     ``mergeSchema``-on-MERGE composition: a delta carrying columns the
@@ -1129,6 +1152,24 @@ def merge_evolve_through_manifest(
     is in ``cols`` but neither physically in the base files nor already
     declared. Returns (snapshot_id, n_intersecting, n_rewritten,
     evolved_columns)."""
+    with Transaction(spark, manifest_dir) as txn:
+        return merge_evolve_in(
+            txn, delta, key, cols, insert_files, partition_by
+        )
+
+
+def merge_evolve_in(
+    txn: Transaction,
+    delta: DataFrame,
+    key: str,
+    cols: list[str],
+    insert_files: int = 1,
+    partition_by: tuple[str, ...] = (),
+) -> tuple[int, int, int, list[str]]:
+    """:func:`merge_evolve_through_manifest`'s body, planned from
+    ``txn.man`` and committed in ``txn``."""
+    import pyarrow.parquet as _pq
+
     from aws_seismic_data_pipeline_spark.sources.table.evolution import (
         schema_add_rows,
     )
@@ -1136,15 +1177,13 @@ def merge_evolve_through_manifest(
     # the evolved-column decision: the physical schema of the first
     # visible file (a footer read that raises on failure) plus the
     # declared adds (commit-scale)
-    import pyarrow.parquet as _pq
-
-    txn = Transaction(spark, manifest_dir)
-    lman = localman.load(manifest_dir)
-    sample = localman.first_visible_path(spark, manifest_dir, None, lman)
+    sample = localman.first_visible_path(
+        txn.spark, txn.manifest_dir, None, txn.man
+    )
     physical = set(_pq.read_schema(sample).names)
     declared = set(
         localman.commit_rows(
-            manifest_dir, ("schema_add",), ("column_name",), lman
+            txn.manifest_dir, ("schema_add",), ("column_name",), txn.man
         )["column_name"]
     )
     dtypes = dict(delta.dtypes)
@@ -1153,22 +1192,16 @@ def merge_evolve_through_manifest(
         for c in cols
         if c not in physical and c not in declared
     }
-    with txn:
-        extra = None
-        if evolved:
-            extra = [schema_add_rows(manifest_dir, evolved, txn.snapshot_id)]
-        s, n_int, n_rw = merge_through_manifest(
-            spark,
-            manifest_dir,
-            delta,
-            key,
-            cols,
-            insert_files=insert_files,
-            txn=txn,
-            partition_by=partition_by,
-            extra_commit_frames=extra,
-            pre_commit=pre_commit,
-        )
+    extra = [schema_add_rows(txn, evolved)] if evolved else None
+    s, n_int, n_rw = merge_in(
+        txn,
+        delta,
+        key,
+        cols,
+        insert_files,
+        partition_by,
+        extra_commit_frames=extra,
+    )
     return s, n_int, n_rw, sorted(evolved)
 
 
@@ -1638,9 +1671,14 @@ def expire_manifest_history(
     floor is bit-identical to pre-expire (pytest-pinned). Cost is one
     read+rewrite of the MANIFEST (metadata-scale), never of data.
 
-    Concurrency contract: the swap runs under a CAS commit claim on the
-    next snapshot id, so every committing WRITER is excluded — a
-    concurrent claim loses to this lease (in-flight error). The swap
+    Concurrency contract: the rewrite reads the frame of expire's own
+    transaction and lands in a private tmp dir
+    (``<manifest>.expiring-<tag>``); the swap then runs under a CAS
+    claim on the next snapshot id, so every committing WRITER is
+    excluded — a concurrent claim loses to this lease (in-flight
+    error), and a commit that landed after the frame load fails this
+    claim instead of being dropped from the rewrite. The claim is
+    released once the swap is done (expire adds no snapshot). The swap
     itself publishes the shrunken manifest as the next GENERATION and
     atomically flips the ``_GENERATION`` pointer (see
     :mod:`.logstore`): lock-free READERS resolve a complete manifest —
@@ -1652,42 +1690,31 @@ def expire_manifest_history(
     Returns (rows_before, rows_after)."""
     import shutil as _shutil
 
-    recover_interrupted_expire(manifest_dir)
-    e = int(expire_below)
-    # the expire floor's inputs are a file-scale aggregate (each
-    # partition's tip and row count, combined by max and sum); the
-    # rewrite itself scales with the table, so above the localman gate
-    # it is a Spark rewrite, not a question
     import pandas as _pd
 
-    lman = localman.load(manifest_dir)
+    recover_interrupted_expire(manifest_dir)
+    e = int(expire_below)
+    with Transaction(spark, manifest_dir) as txn:
+        # the expire floor's inputs are a file-scale aggregate (each
+        # partition's tip and row count, combined by max and sum); the
+        # rewrite itself scales with the table, so above the localman
+        # gate it is a Spark rewrite, not a question
+        def fn(m):
+            return _pd.DataFrame(
+                {"tip": [float(m["snapshot_id"].max())], "n": [len(m)]}
+            )
 
-    def fn(m):
-        return _pd.DataFrame(
-            {"tip": [float(m["snapshot_id"].max())], "n": [len(m)]}
+        stats = localman.answer(
+            spark, manifest_dir, fn, "tip double, n long", txn.man
         )
-
-    stats = localman.answer(
-        spark, manifest_dir, fn, "tip double, n long", lman
-    )
-    tip = stats["tip"].max()
-    cur_max = None if _pd.isna(tip) else int(tip)
-    rows_before = int(stats["n"].sum())
-    if cur_max is None or e > cur_max:
-        raise ValueError(
-            f"expire_below={e} exceeds max snapshot {cur_max} — refusing "
-            "to expire the current state"
-        )
-    # exclude every committing writer for the whole rewrite + swap: a
-    # CAS lease on the next id (writers claim ids sequentially, so
-    # holding cur_max+1 blocks them all). Also closes the lost-commit
-    # race the bare swap had — rows committed at cur_max+1 between the
-    # stats read above and the swap would have been silently dropped
-    # from the rewritten manifest; now either that writer's claim or
-    # this one fails loudly. The transaction never publishes, so its
-    # exit releases the lease; a crashed expire blocks writers only
-    # until the token goes stale (claim takeover).
-    with Transaction(spark, manifest_dir, parent=int(cur_max)):
+        tip = stats["tip"].max()
+        cur_max = None if _pd.isna(tip) else int(tip)
+        rows_before = int(stats["n"].sum())
+        if cur_max is None or e > cur_max:
+            raise ValueError(
+                f"expire_below={e} exceeds max snapshot {cur_max} — "
+                "refusing to expire the current state"
+            )
         marker_fixed = {
             "path": "",
             "file_name": "",
@@ -1697,8 +1724,7 @@ def expire_manifest_history(
             "snapshot_id": int(e),
             "op": "expire",
         }
-        tmp = manifest_dir + ".expiring"
-        _shutil.rmtree(tmp, ignore_errors=True)
+        tmp = txn.track(f"{manifest_dir}.expiring-{txn.tag}")
         rows_after = localman.placed(
             manifest_dir,
             lambda man: _expire_rewrite_local(
@@ -1707,34 +1733,30 @@ def expire_manifest_history(
             lambda: _expire_rewrite_spark(
                 spark, manifest_dir, e, marker_fixed, tmp
             ),
-            lman,
+            txn.man,
         )
+        # exclude every committing writer for the swap: a claim on the
+        # id after the frame's tip (writers claim ids sequentially, so
+        # holding it blocks them all). Rows committed there after the
+        # frame load would be missing from the rewrite; that writer's
+        # claim or this one fails loudly instead. The transaction never
+        # publishes, so its exit releases the claim.
+        txn.claim()
         aside = manifest_dir + ".expired_old"
         _shutil.rmtree(aside, ignore_errors=True)
         store = log_store_for(manifest_dir)
-        # commit tokens SURVIVE the expire swap: an in-flight writer that
-        # claimed a snapshot above the committed tip must keep its lease
-        # (losing it would let a second writer re-claim the same id — the
-        # at-or-below-tip guard only covers committed ids). Tokens at or
-        # below the tip, and stale-takeover asides, are pruned so the
-        # token tree does not grow forever. Surviving tokens (including
-        # this expire's own cur_max+1 guard) are PRE-SEEDED into the
-        # replacement dir BEFORE the swap (round-12 advice): migrating
-        # them afterwards left a window where the new manifest was live
-        # with an EMPTY _commits, letting a concurrent claim win the
-        # guard's own id and then collide with the migration loop —
-        # which revoked the live writer's lease. Copy, not move: the
-        # live tree stays authoritative until the swap lands, and the
-        # guard lease excludes every writer so the set is stable.
-        live_commits = os.path.join(manifest_dir, "_commits")
-        # the swap publishes tmp as the next manifest GENERATION and
+        # commit tokens SURVIVE the expire swap: an in-flight writer
+        # that claimed a snapshot above the committed tip must keep its
+        # lease (losing it would let a second writer re-claim the same
+        # id — the at-or-below-tip guard only covers committed ids).
+        # The swap publishes tmp as the next manifest GENERATION and
         # atomically flips the _GENERATION pointer (logstore module
         # docstring): readers resolve a complete manifest at every
         # instant, and _commits sits OUTSIDE the generations so
-        # in-flight leases (including this expire's own guard) never
-        # move — the r12 empty-token-root window is gone by
-        # construction. Committed/stale ids are pruned in place so the
-        # token tree does not grow forever.
+        # in-flight leases (including this expire's own claim) never
+        # move. Tokens at or below the tip, and stale-takeover asides,
+        # are pruned in place so the token tree does not grow forever.
+        live_commits = os.path.join(manifest_dir, "_commits")
         store.replace_dir(tmp, manifest_dir, aside)
         for name in store.list_tokens(live_commits):
             try:
@@ -1752,8 +1774,8 @@ def recover_interrupted_expire(manifest_dir: str) -> bool:
     directory is ABSENT but the ``.expired_old`` aside exists, the
     previous expire died between its two renames — rename the aside
     back so the table is readable again (that expire simply never
-    happened; its ``.expiring`` output is leftover garbage the next run
-    rmtree's). When both directories exist the swap completed and the
+    happened; its ``.expiring-<tag>`` output is leftover garbage).
+    When both directories exist the swap completed and the
     aside is the about-to-be-deleted old manifest — left alone. Called
     automatically at the top of :func:`expire_manifest_history`; expose
     it for ops tooling that wants to heal a table without expiring.
@@ -1963,32 +1985,31 @@ def _optimize_curve(
     and commit add+remove at one snapshot. Planning metadata (visible
     files, tracked columns, global stats bounds) is file-scale
     (:func:`localman.visible_paths`, :func:`localman.column_bounds`),
-    read at the snapshot the transaction commits on top of."""
-    txn = Transaction(spark, manifest_dir)
-    lman = localman.load(manifest_dir)
-    visible = localman.visible_paths(spark, manifest_dir, None, lman)
-    bounds = localman.column_bounds(spark, manifest_dir, lman)
-    tracked = tuple(sorted(bounds))
-    if not visible:
-        raise ValueError(
-            f"optimize_{prefix}: no visible files in {manifest_dir}"
-        )
-    for c in cols:
-        if c not in bounds or bounds[c][0] is None:
+    read from the frame of the transaction the commit runs in."""
+    with Transaction(spark, manifest_dir) as txn:
+        visible = localman.visible_paths(spark, manifest_dir, None, txn.man)
+        bounds = localman.column_bounds(spark, manifest_dir, txn.man)
+        tracked = tuple(sorted(bounds))
+        if not visible:
             raise ValueError(
-                f"optimize_{prefix}: no stats for {c!r} in {manifest_dir} — "
-                "the clustering columns must be tracked by the manifest"
+                f"optimize_{prefix}: no visible files in {manifest_dir}"
+            )
+        for c in cols:
+            if c not in bounds or bounds[c][0] is None:
+                raise ValueError(
+                    f"optimize_{prefix}: no stats for {c!r} in "
+                    f"{manifest_dir} — the clustering columns must be "
+                    "tracked by the manifest"
+                )
+
+        def _bucket(col: str) -> str:
+            lo, hi = bounds[col]
+            span = max(hi - lo, 1e-12)
+            return (
+                f"CAST(least(greatest(({col} - {lo!r}) * 255.0 / {span!r},"
+                " 0.0), 255.0) AS INT)"
             )
 
-    def _bucket(col: str) -> str:
-        lo, hi = bounds[col]
-        span = max(hi - lo, 1e-12)
-        return (
-            f"CAST(least(greatest(({col} - {lo!r}) * 255.0 / {span!r},"
-            " 0.0), 255.0) AS INT)"
-        )
-
-    with txn:
         new_paths = _zcluster_rewrite(
             spark,
             visible,
@@ -2022,8 +2043,9 @@ def _zcluster_rewrite(
     partition-filtered scan (the same identity rule ``optimize_table``
     bins under). File counts split proportionally, min 1 per dir.
     Returns the new paths (landed directly at their final location
-    under ``<dir>/<prefix>-<snap>/``, each dir recorded by the caller's
-    transaction ``txn``, which commits them).
+    under ``<dir>/<prefix>-<snap>-<tag>/`` — :meth:`Transaction.name` —
+    each dir recorded by the caller's transaction ``txn``, which
+    commits them).
 
     Per-dir rewrites are submitted from a BOUNDED THREAD POOL — Spark's
     scheduler runs jobs from multiple threads concurrently, so OPTIMIZE
@@ -2043,11 +2065,13 @@ def _zcluster_rewrite(
     # the last run while the caller tombstones EVERY input path, so the
     # dropped files' rows would silently vanish from the snapshot.
     # The PARTITION dir strips trailing curve-output segments (a prior
-    # OPTIMIZE's 'zorder-<snap>'/'hilbert-<snap>' subdir): files from
-    # the previous layout and fresh appends in the same partition must
-    # rewrite as ONE group landing one level of nesting deep, never
-    # zorder-5/zorder-9/...
-    curve_seg = _re.compile(r"^(?:zorder|hilbert|zinc|hinc)-\d+$")
+    # OPTIMIZE's 'zorder-<snap>-<tag>' subdir, or the untagged
+    # 'zorder-<snap>' of older tables): files from the previous layout
+    # and fresh appends in the same partition must rewrite as ONE group
+    # landing one level of nesting deep, never zorder-5/zorder-9/...
+    curve_seg = _re.compile(
+        r"^(?:zorder|hilbert|zinc|hinc)-\d+(?:-[0-9a-f]+)?$"
+    )
 
     def _partition_dir(p: str) -> str:
         d = os.path.dirname(p)
@@ -2088,7 +2112,7 @@ def _zcluster_rewrite(
             .drop("_zkey")
             .write.mode("overwrite")
             .parquet(dst),
-            os.path.join(out_dir, f"{prefix}-{txn.snapshot_id}"),
+            os.path.join(out_dir, txn.name(prefix)),
         )
 
     items = sorted(by_dir.items())
@@ -2205,66 +2229,69 @@ def _optimize_curve_incremental(
     selection is two file-scale passes (:func:`localman.answer`): the
     global bounds (:func:`localman.column_bounds`), then per partition
     the scattered paths plus its count of selection members — never
-    the per-file rectangles. Both read the snapshot the transaction
-    commits on top of."""
+    the per-file rectangles. Both read the frame of the transaction
+    the commit runs in."""
     import pandas as _pd
 
-    txn = Transaction(spark, manifest_dir)
-    lman = localman.load(manifest_dir)
-    glo = localman.column_bounds(spark, manifest_dir, lman)
-    tracked = tuple(sorted(glo))
-    for c in (x_col, y_col):
-        if c not in glo or glo[c][0] is None:
-            raise ValueError(
-                f"optimize_{prefix}: no stats for {c!r} in {manifest_dir}"
+    with Transaction(spark, manifest_dir) as txn:
+        lman = txn.man
+        glo = localman.column_bounds(spark, manifest_dir, lman)
+        tracked = tuple(sorted(glo))
+        for c in (x_col, y_col):
+            if c not in glo or glo[c][0] is None:
+                raise ValueError(
+                    f"optimize_{prefix}: no stats for {c!r} in "
+                    f"{manifest_dir}"
+                )
+        spans = {
+            c: max(glo[c][1] - glo[c][0], 1e-12) for c in (x_col, y_col)
+        }
+
+        def fn(m):
+            # only paths with stats rows for either clustering column
+            # are selection members; a path missing stats for a
+            # dimension is conservatively full-width (1.0)
+            vis = localman.visible(m, None)
+            pf = (
+                vis[vis["column_name"].isin((x_col, y_col))]
+                .groupby(["path", "column_name"])
+                .agg(lo=("min_val", "min"), hi=("max_val", "max"))
+                .reset_index()
             )
-    spans = {c: max(glo[c][1] - glo[c][0], 1e-12) for c in (x_col, y_col)}
+            pf["w"] = (pf["hi"] - pf["lo"]) / pf["column_name"].map(spans)
+            w = (
+                pf.pivot(index="path", columns="column_name", values="w")
+                .reindex(columns=[x_col, y_col])
+                .fillna(1.0)
+            )
+            wide = w > coverage_threshold
+            hit = list(w.index[wide[x_col] & wide[y_col]])
+            return _pd.DataFrame(
+                {
+                    "path": _pd.Series([*hit, None], dtype=object),
+                    "n_files": [0] * len(hit) + [len(w)],
+                }
+            )
 
-    def fn(m):
-        # only paths with stats rows for either clustering column are
-        # selection members; a path missing stats for a dimension is
-        # conservatively full-width (1.0)
-        vis = localman.visible(m, None)
-        pf = (
-            vis[vis["column_name"].isin((x_col, y_col))]
-            .groupby(["path", "column_name"])
-            .agg(lo=("min_val", "min"), hi=("max_val", "max"))
-            .reset_index()
+        out = localman.answer(
+            spark, manifest_dir, fn, "path string, n_files long", lman
         )
-        pf["w"] = (pf["hi"] - pf["lo"]) / pf["column_name"].map(spans)
-        w = (
-            pf.pivot(index="path", columns="column_name", values="w")
-            .reindex(columns=[x_col, y_col])
-            .fillna(1.0)
-        )
-        wide = w > coverage_threshold
-        hit = list(w.index[wide[x_col] & wide[y_col]])
-        return _pd.DataFrame(
-            {
-                "path": _pd.Series([*hit, None], dtype=object),
-                "n_files": [0] * len(hit) + [len(w)],
-            }
-        )
+        scattered = sorted(out["path"].dropna())
+        n_untouched = int(out["n_files"].sum()) - len(scattered)
+        if not scattered:
+            raise ValueError(
+                f"optimize_{prefix}: every visible file is already "
+                f"clustered below coverage {coverage_threshold} — "
+                "nothing to do"
+            )
 
-    out = localman.answer(
-        spark, manifest_dir, fn, "path string, n_files long", lman
-    )
-    scattered = sorted(out["path"].dropna())
-    n_untouched = int(out["n_files"].sum()) - len(scattered)
-    if not scattered:
-        raise ValueError(
-            f"optimize_{prefix}: every visible file is already "
-            f"clustered below coverage {coverage_threshold} — nothing to do"
-        )
+        def _bucket(col: str) -> str:
+            lo, _hi = glo[col]
+            return (
+                f"CAST(least(greatest(({col} - {lo!r}) * 255.0 / "
+                f"{spans[col]!r}, 0.0), 255.0) AS INT)"
+            )
 
-    def _bucket(col: str) -> str:
-        lo, _hi = glo[col]
-        return (
-            f"CAST(least(greatest(({col} - {lo!r}) * 255.0 / "
-            f"{spans[col]!r}, 0.0), 255.0) AS INT)"
-        )
-
-    with txn:
         new_paths = _zcluster_rewrite(
             spark,
             scattered,
@@ -2629,14 +2656,15 @@ def optimize_table(
     derived like ``merge_through_manifest``'s — a key-only append
     would hide compacted files from scans probing other columns.
     Sizes come from driver-side stat of the visible path list
-    (metadata-scale). The bins are planned on one snapshot and commit
-    at the ids after it, in order: a commit by another writer in
-    between fails the next bin's claim. Returns (n_bins_compacted,
+    (metadata-scale). The bins are planned on one transaction's frame
+    and commit at the ids after it, in order, each in a transaction of
+    its own: a commit by another writer in between fails the next bin
+    (ConcurrentCommitError). Returns (n_bins_compacted,
     n_files_before, n_files_after)."""
     import itertools as _it
 
-    nxt = Transaction(spark, manifest_dir)
-    visible = localman.visible_paths(spark, manifest_dir, None)
+    txn = Transaction(spark, manifest_dir)
+    visible = localman.visible_paths(spark, manifest_dir, None, txn.man)
     n_before = len(visible)
     bins: list[list[str]] = []
     for _dirname, group_iter in _it.groupby(visible, key=os.path.dirname):
@@ -2650,18 +2678,16 @@ def optimize_table(
                 first_in_dir = False
             bins[-1].append(path)
             acc += size
-    compacted = 0
-    for group in bins:
-        if len(group) > 1:
-            with nxt as txn:
-                commit_data_compaction(
-                    spark,
-                    manifest_dir,
-                    group,
-                    partition_by=partition_by,
-                    txn=txn,
+    multi = [g for g in bins if len(g) > 1]
+    for i, group in enumerate(multi):
+        if i:
+            prev, txn = txn.snapshot_id, Transaction(spark, manifest_dir)
+            if txn.parent != prev:
+                raise ConcurrentCommitError(
+                    f"{manifest_dir} moved past snapshot {prev} between "
+                    "OPTIMIZE bins — re-plan and retry"
                 )
-            nxt = Transaction(spark, manifest_dir, parent=txn.snapshot_id)
-            compacted += 1
-    n_after = n_before - sum(len(g) - 1 for g in bins if len(g) > 1)
-    return compacted, n_before, n_after
+        with txn:
+            _compact(txn, group, partition_by=partition_by)
+    n_after = n_before - sum(len(g) - 1 for g in multi)
+    return len(multi), n_before, n_after

@@ -36,7 +36,6 @@ from aws_seismic_data_pipeline_spark.sources.footers import (
 )
 from aws_seismic_data_pipeline_spark.sources.table.commit import (
     Transaction,
-    joined,
     with_conflict_retry,
 )
 from aws_seismic_data_pipeline_spark.sources.table import localman
@@ -118,33 +117,23 @@ def append_stats_manifest(
     new_paths: list[str],
     manifest_dir: str,
     columns: tuple[str, ...] = _MANIFEST_COLS,
-    txn=None,
     partition_by: tuple[str, ...] = (),
-    pre_commit=None,
 ) -> int:
     """Incremental manifest maintenance: when new data files land
     (ingest batch, compaction output), footer-read ONLY them and append
     their stats rows — cost is new-batch-sized, mirroring
     ``llm/ivf.py: append_to_index`` / ``llm/dedup.py:
     promote_to_corpus``. Appended == rebuilt is pytest-pinned in
-    tests/test_catalog_scale.py. Each append commits in ``txn`` — the
-    caller's :class:`commit.Transaction`, else one of its own that
-    claims the next snapshot id, so concurrent writers can never stamp
-    the same id — and the manifest keeps its whole version
-    history — an as-of read (``manifest_pruned_scan(as_of=N)``) sees
-    exactly the files visible at snapshot N, the table-format
-    time-travel contract. ``pre_commit(snapshot_id)``, when given, runs
-    INSIDE the transaction, immediately before the manifest write — the
-    seam the facade's constraint gate uses to re-validate against
-    declarations that landed between its pre-claim read and this
-    commit (Delta enforces inside the transaction); a raise aborts the
-    commit. Returns the id written."""
-    with joined(spark, manifest_dir, txn) as txn:
+    tests/test_catalog_scale.py. Each append commits in a
+    :class:`commit.Transaction` of its own, which claims the next
+    snapshot id, so concurrent writers can never stamp the same id —
+    and the manifest keeps its whole version history — an as-of read
+    (``manifest_pruned_scan(as_of=N)``) sees exactly the files visible
+    at snapshot N, the table-format time-travel contract. Returns the
+    id written."""
+    with Transaction(spark, manifest_dir) as txn:
         return txn.commit(
-            adds=new_paths,
-            columns=columns,
-            partition_by=partition_by,
-            pre_commit=pre_commit,
+            adds=new_paths, columns=columns, partition_by=partition_by
         )
 
 
@@ -155,7 +144,6 @@ def append_stats_manifest_retry(
     columns: tuple[str, ...] = _MANIFEST_COLS,
     partition_by: tuple[str, ...] = (),
     max_retries: int = 5,
-    pre_commit=None,
 ) -> tuple[int, int]:
     """APPEND under optimistic concurrency: claim, commit, and on a
     lost CAS race back off and re-claim the NEXT id
@@ -169,16 +157,8 @@ def append_stats_manifest_retry(
     app.py:641-653``, SURVEY §3.2: no concurrency guard) closed.
     Returns (snapshot_id, n_retries); bounded retries fail loudly."""
     return with_conflict_retry(
-        spark,
-        manifest_dir,
-        lambda txn: append_stats_manifest(
-            spark,
-            new_paths,
-            manifest_dir,
-            columns,
-            txn=txn,
-            partition_by=partition_by,
-            pre_commit=pre_commit,
+        lambda: append_stats_manifest(
+            spark, new_paths, manifest_dir, columns, partition_by
         ),
         max_retries,
     )

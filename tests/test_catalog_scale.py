@@ -2694,7 +2694,7 @@ def test_partition_values_decode_hive_escapes(spark, tmp_path):
     ), "logical-value filter must actually prune the other partition"
 
 
-def test_revoked_claim_refuses_to_commit(spark, tmp_path):
+def test_revoked_claim_refuses_to_commit(spark, tmp_path, monkeypatch):
     """Lease revocation: a SLOW writer (not crashed) whose token was
     taken over as stale must fail loudly at commit time instead of
     interleaving its rows with the takeover-er's under one snapshot id."""
@@ -2703,27 +2703,37 @@ def test_revoked_claim_refuses_to_commit(spark, tmp_path):
 
     import pytest as _pytest
 
-    from aws_seismic_data_pipeline_spark.sources.table import _verbs as R
+    from aws_seismic_data_pipeline_spark.sources.table import commit
+    from aws_seismic_data_pipeline_spark.sources.table.commit import (
+        ConcurrentCommitError,
+    )
+    from aws_seismic_data_pipeline_spark.sources.table.manifest import (
+        append_stats_manifest,
+        write_stats_manifest,
+    )
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     data_dir = str(tmp_path / "docs")
     docs.repartition(2, "doc_id").write.parquet(data_dir)
     files = sorted(glob.glob(data_dir + "/*.parquet"))
     mpath = str(tmp_path / "manifest")
-    R.write_stats_manifest(spark, files[:1], mpath, ("doc_id",))
-    # writer A claims snapshot 1 and stalls mid-commit
-    with _pytest.raises(R.ConcurrentCommitError, match="revoked"):
-        with R.Transaction(spark, mpath) as txn_a:
-            assert txn_a.snapshot_id == 1
-            token = os.path.join(mpath, "_commits", "1")
-            old = time.time() - 1000
-            os.utime(token, (old, old))
-            # writer B (another process in production; simulated here)
-            # takes over the stale token and holds the fresh claim
-            assert R.claim_commit(spark, mpath, 0, stale_after=300.0) == 1
-            R.append_stats_manifest(
-                spark, files[1:], mpath, ("doc_id",), txn=txn_a
-            )
+    write_stats_manifest(spark, files[:1], mpath, ("doc_id",))
+    token = os.path.join(mpath, "_commits", "1")
+    real = commit.claim_commit
+
+    def stalled(*args, **kwargs):
+        # writer A claims snapshot 1 in its publish and stalls before
+        # the lease check; writer B (another process in production;
+        # simulated here) takes over the stale token and holds it
+        snap = real(*args, **kwargs)
+        old = time.time() - 1000
+        os.utime(token, (old, old))
+        assert real(spark, mpath, 0, stale_after=300.0) == 1
+        return snap
+
+    monkeypatch.setattr(commit, "claim_commit", stalled)
+    with _pytest.raises(ConcurrentCommitError, match="revoked"):
+        append_stats_manifest(spark, files[1:], mpath, ("doc_id",))
     # A's abort left B's token in place
     assert os.path.isdir(token)
     # the aside dir left by the takeover is prunable metadata, not a claim
@@ -2747,20 +2757,30 @@ def test_expire_preserves_inflight_tokens_prunes_committed(spark, tmp_path):
 
     import pytest as _pytest
 
-    from aws_seismic_data_pipeline_spark.sources.table import _verbs as R
+    from aws_seismic_data_pipeline_spark.sources.table.commit import (
+        ConcurrentCommitError,
+        claim_commit,
+    )
+    from aws_seismic_data_pipeline_spark.sources.table.maintenance import (
+        expire_manifest_history,
+    )
+    from aws_seismic_data_pipeline_spark.sources.table.manifest import (
+        append_stats_manifest,
+        write_stats_manifest,
+    )
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     data_dir = str(tmp_path / "docs")
     docs.repartition(4, "doc_id").write.parquet(data_dir)
     files = sorted(glob.glob(data_dir + "/*.parquet"))
     mpath = str(tmp_path / "manifest")
-    R.write_stats_manifest(spark, files[:2], mpath, ("doc_id",))
-    R.append_stats_manifest(spark, files[2:3], mpath, ("doc_id",))  # snap 1
-    R.append_stats_manifest(spark, files[3:4], mpath, ("doc_id",))  # snap 2
+    write_stats_manifest(spark, files[:2], mpath, ("doc_id",))
+    append_stats_manifest(spark, files[2:3], mpath, ("doc_id",))  # snap 1
+    append_stats_manifest(spark, files[3:4], mpath, ("doc_id",))  # snap 2
     # an in-flight claim ABOVE the expire guard (parent 3 -> claims 4;
     # expire's own guard takes 3)
-    assert R.claim_commit(spark, mpath, 3) == 4
-    R.expire_manifest_history(spark, mpath, expire_below=2)
+    assert claim_commit(spark, mpath, 3) == 4
+    expire_manifest_history(spark, mpath, expire_below=2)
     commits = os.path.join(mpath, "_commits")
     assert os.path.isdir(os.path.join(commits, "4")), (
         "in-flight token must survive the expire swap"
@@ -2773,10 +2793,10 @@ def test_expire_preserves_inflight_tokens_prunes_committed(spark, tmp_path):
     )
     assert not os.path.isdir(os.path.join(commits, "2"))
     # the surviving lease still guards id 4 against a second claimant
-    with _pytest.raises(R.ConcurrentCommitError, match="in-flight"):
-        R.claim_commit(spark, mpath, 3, stale_after=3600.0)
+    with _pytest.raises(ConcurrentCommitError, match="in-flight"):
+        claim_commit(spark, mpath, 3, stale_after=3600.0)
     # the released guard id is claimable again (writers resume)
-    assert R.claim_commit(spark, mpath, 2) == 3
+    assert claim_commit(spark, mpath, 2) == 3
 
 
 def test_expire_refuses_under_inflight_writer_and_recovers_crash(
@@ -2795,40 +2815,52 @@ def test_expire_refuses_under_inflight_writer_and_recovers_crash(
 
     import pytest as _pytest
 
-    from aws_seismic_data_pipeline_spark.sources.table import _verbs as R
+    from aws_seismic_data_pipeline_spark.sources.table.commit import (
+        ConcurrentCommitError,
+        claim_commit,
+        release_claim,
+    )
+    from aws_seismic_data_pipeline_spark.sources.table.maintenance import (
+        expire_manifest_history,
+        recover_interrupted_expire,
+    )
+    from aws_seismic_data_pipeline_spark.sources.table.manifest import (
+        append_stats_manifest,
+        write_stats_manifest,
+    )
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     data_dir = str(tmp_path / "docs")
     docs.repartition(4, "doc_id").write.parquet(data_dir)
     files = sorted(glob.glob(data_dir + "/*.parquet"))
     mpath = str(tmp_path / "manifest")
-    R.write_stats_manifest(spark, files[:2], mpath, ("doc_id",))
-    R.append_stats_manifest(spark, files[2:3], mpath, ("doc_id",))  # snap 1
-    R.append_stats_manifest(spark, files[3:4], mpath, ("doc_id",))  # snap 2
+    write_stats_manifest(spark, files[:2], mpath, ("doc_id",))
+    append_stats_manifest(spark, files[2:3], mpath, ("doc_id",))  # snap 1
+    append_stats_manifest(spark, files[3:4], mpath, ("doc_id",))  # snap 2
 
     # (a) in-flight writer at tip+1 blocks expire
-    assert R.claim_commit(spark, mpath, 2, owner="inflight") == 3
-    with _pytest.raises(R.ConcurrentCommitError, match="in-flight"):
-        R.expire_manifest_history(spark, mpath, expire_below=2)
-    R.release_claim(mpath, 3, "inflight")
+    assert claim_commit(spark, mpath, 2, owner="inflight") == 3
+    with _pytest.raises(ConcurrentCommitError, match="in-flight"):
+        expire_manifest_history(spark, mpath, expire_below=2)
+    release_claim(mpath, 3, "inflight")
 
     # (b) swap window: manifest dir absent -> retryable error, no mkdir
     aside = mpath + ".expired_old"
     os.rename(mpath, aside)
-    with _pytest.raises(R.ConcurrentCommitError, match="does not exist"):
-        R.claim_commit(spark, mpath, 2)
+    with _pytest.raises(ConcurrentCommitError, match="does not exist"):
+        claim_commit(spark, mpath, 2)
     assert not os.path.isdir(mpath), (
         "claim_commit must not resurrect the manifest dir mid-swap"
     )
 
     # (c) crash recovery restores the stranded manifest, expire works
-    assert R.recover_interrupted_expire(mpath) is True
+    assert recover_interrupted_expire(mpath) is True
     assert os.path.isdir(mpath) and not os.path.isdir(aside)
     n_before = spark.read.parquet(_mdd(mpath)).count()
-    before, after = R.expire_manifest_history(spark, mpath, expire_below=2)
+    before, after = expire_manifest_history(spark, mpath, expire_below=2)
     assert before == n_before and after <= before + 1  # +1 expire marker
     # idempotent no-op when the table is healthy
-    assert R.recover_interrupted_expire(mpath) is False
+    assert recover_interrupted_expire(mpath) is False
 
 
 def test_compound_commit_is_one_write_job(spark, tmp_path):
@@ -2841,16 +2873,21 @@ def test_compound_commit_is_one_write_job(spark, tmp_path):
     import glob
     import re
 
-    from aws_seismic_data_pipeline_spark.sources.table import _verbs as R
+    from aws_seismic_data_pipeline_spark.sources.table.maintenance import (
+        commit_data_compaction,
+    )
+    from aws_seismic_data_pipeline_spark.sources.table.manifest import (
+        write_stats_manifest,
+    )
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     data_dir = str(tmp_path / "docs")
     docs.repartition(4, "doc_id").write.parquet(data_dir)
     files = sorted(glob.glob(data_dir + "/*.parquet"))
     mpath = str(tmp_path / "manifest")
-    R.write_stats_manifest(spark, files, mpath, ("doc_id",))
+    write_stats_manifest(spark, files, mpath, ("doc_id",))
     before = set(glob.glob(os.path.join(mpath, "*.parquet")))
-    new_path, snap = R.commit_data_compaction(spark, mpath, files[:3])
+    new_path, snap = commit_data_compaction(spark, mpath, files[:3])
     added = sorted(set(glob.glob(os.path.join(mpath, "*.parquet"))) - before)
     assert added, "the commit must append manifest files"
     # atomicity holds in either landing form: the driver-side localman
@@ -3211,7 +3248,9 @@ def test_zcluster_rewrite_mixed_dir_and_subdir_loses_no_rows(spark, tmp_path):
     second, the first run's files were never rewritten, and the caller
     tombstoned every input path: silent data loss. Pins: every input
     row survives the rewrite, and each new file lands in its source
-    file's own directory."""
+    file's own directory — also for inputs inside a previous
+    OPTIMIZE's curve subdir, tagged (``zorder-<snap>-<tag>``) or not
+    (``zorder-<snap>``), which must never nest a new curve dir."""
     import glob
     import os as _os
 
@@ -3226,32 +3265,32 @@ def test_zcluster_rewrite_mixed_dir_and_subdir_loses_no_rows(spark, tmp_path):
 
     root = str(tmp_path / "data")
     late = _os.path.join(root, "late")
-    _os.makedirs(late)
     base = spark.range(0, 300).select(
         F.col("id").alias("k"), (F.col("id") * 7 % 100).alias("v")
     )
-    # names chosen so sorted(full paths) interleaves: root/aaa-… <
-    # root/late/… < root/zzz-…
-    base.filter("k < 100").coalesce(1).write.parquet(str(tmp_path / "s1"))
-    base.filter("k >= 100 and k < 200").coalesce(1).write.parquet(
-        str(tmp_path / "s2")
-    )
-    base.filter("k >= 200").coalesce(1).write.parquet(str(tmp_path / "s3"))
     import shutil as _shutil
 
-    def _one(src: str, dst: str) -> str:
+    def _one(lo: int, dst: str) -> str:
+        src = str(tmp_path / f"s{lo}")
+        rows = base.filter(f"k >= {lo} and k < {lo + 60}")
+        rows.coalesce(1).write.parquet(src)
+        _os.makedirs(_os.path.dirname(dst), exist_ok=True)
         part = glob.glob(_os.path.join(src, "part-*.parquet"))[0]
         _shutil.move(part, dst)
         return dst
 
+    # names chosen so sorted(full paths) interleaves: root/aaa-… <
+    # root/late/… < root/zorder-5/… < root/zzz-…
     paths = [
-        _one(str(tmp_path / "s1"), _os.path.join(root, "aaa-0.parquet")),
-        _one(str(tmp_path / "s2"), _os.path.join(late, "mid-0.parquet")),
-        _one(str(tmp_path / "s3"), _os.path.join(root, "zzz-0.parquet")),
+        _one(0, _os.path.join(root, "aaa-0.parquet")),
+        _one(60, _os.path.join(root, "zorder-5", "old-0.parquet")),
+        _one(120, _os.path.join(late, "mid-0.parquet")),
+        _one(180, _os.path.join(late, "zorder-6-0a1b2c3d4e5f", "old.parquet")),
+        _one(240, _os.path.join(root, "zzz-0.parquet")),
     ]
-    # the rewrite stages into the transaction holding snapshot 7 (its
-    # exit, unpublished, deletes the staged dirs)
-    with Transaction(spark, str(tmp_path / "m"), parent=6) as txn:
+    # the rewrite stages into a transaction (its exit, unpublished,
+    # deletes the staged dirs)
+    with Transaction(spark, str(tmp_path / "m")) as txn:
         new_paths = _zcluster_rewrite(
             spark,
             paths,
@@ -3269,14 +3308,14 @@ def test_zcluster_rewrite_mixed_dir_and_subdir_loses_no_rows(spark, tmp_path):
         # of its OWN partition dir (driver-light staging, r13)
         by_dir = {_os.path.dirname(p) for p in new_paths}
         assert by_dir == {
-            _os.path.join(root, "zorder-7"),
-            _os.path.join(late, "zorder-7"),
+            _os.path.join(root, txn.name("zorder")),
+            _os.path.join(late, txn.name("zorder")),
         }
         late_rows = spark.read.parquet(
             *[p for p in new_paths if p.startswith(late + _os.sep)]
         )
-        assert late_rows.count() == 100
-        assert late_rows.agg(F.min("k"), F.max("k")).first() == (100, 199)
+        assert late_rows.count() == 120
+        assert late_rows.agg(F.min("k"), F.max("k")).first() == (120, 239)
 
 
 def test_maintenance_rewrites_preserve_evolved_columns(spark, tmp_path):
@@ -3292,7 +3331,17 @@ def test_maintenance_rewrites_preserve_evolved_columns(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from aws_seismic_data_pipeline_spark.sources.table import _verbs as R
+    from aws_seismic_data_pipeline_spark.sources.table.evolution import (
+        evolve_schema_add,
+        read_evolved,
+    )
+    from aws_seismic_data_pipeline_spark.sources.table.maintenance import (
+        commit_data_compaction,
+    )
+    from aws_seismic_data_pipeline_spark.sources.table.manifest import (
+        append_stats_manifest,
+        write_stats_manifest,
+    )
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
         "doc_id", "n_chars"
@@ -3317,8 +3366,8 @@ def test_maintenance_rewrites_preserve_evolved_columns(spark, tmp_path):
         _shutil.move(part, dst)
         paths.append(dst)
     mpath = str(tmp_path / "manifest")
-    R.write_stats_manifest(spark, paths, mpath, ("doc_id",))
-    R.evolve_schema_add(spark, mpath, "score", "double")
+    write_stats_manifest(spark, paths, mpath, ("doc_id",))
+    evolve_schema_add(spark, mpath, "score", "double")
     # one evolved fragment that PHYSICALLY carries score
     evolved = spark.range(8_000_000, 8_000_050).select(
         F.col("id").alias("doc_id"),
@@ -3329,11 +3378,11 @@ def test_maintenance_rewrites_preserve_evolved_columns(spark, tmp_path):
     part = glob.glob(str(tmp_path / "s2" / "part-*.parquet"))[0]
     ev_path = _os.path.join(data_dir, "zz-evolved.parquet")
     _shutil.move(part, ev_path)
-    R.append_stats_manifest(spark, [ev_path], mpath, ("doc_id",))
+    append_stats_manifest(spark, [ev_path], mpath, ("doc_id",))
     want_score_sum = evolved.agg(F.sum("score")).first()[0]
 
     # compact the mixed set: evolved column must survive physically
-    new_path, _snap = R.commit_data_compaction(
+    new_path, _snap = commit_data_compaction(
         spark, mpath, paths + [ev_path], ("doc_id",)
     )
     compacted = spark.read.parquet(new_path)
@@ -3343,7 +3392,7 @@ def test_maintenance_rewrites_preserve_evolved_columns(spark, tmp_path):
     )
     assert compacted.agg(F.sum("score")).first()[0] == want_score_sum
     # the evolved read still sees every row and the surviving values
-    got = R.read_evolved(spark, mpath, "doc_id")
+    got = read_evolved(spark, mpath, "doc_id")
     assert got.count() == docs.count() + 50
     assert got.agg(F.sum("score")).first()[0] == want_score_sum
 
@@ -3359,7 +3408,15 @@ def test_merge_schema_evolution_one_snapshot_time_travels(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from aws_seismic_data_pipeline_spark.sources.table import _verbs as R
+    from aws_seismic_data_pipeline_spark.sources.table.evolution import (
+        read_evolved,
+    )
+    from aws_seismic_data_pipeline_spark.sources.table.maintenance import (
+        merge_evolve_through_manifest,
+    )
+    from aws_seismic_data_pipeline_spark.sources.table.manifest import (
+        write_stats_manifest,
+    )
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
         "doc_id", "lang"
@@ -3368,14 +3425,14 @@ def test_merge_schema_evolution_one_snapshot_time_travels(spark, tmp_path):
     docs.repartition(4, "doc_id").write.parquet(data_dir)
     files = sorted(glob.glob(data_dir + "/*.parquet"))
     mpath = str(tmp_path / "manifest")
-    R.write_stats_manifest(spark, files, mpath, ("doc_id",))
+    write_stats_manifest(spark, files, mpath, ("doc_id",))
     n0 = docs.count()
 
     delta = spark.createDataFrame(
         [(3, "aa", 0.5), (10**7, "nb", 0.9)],
         "doc_id long, lang string, score double",
     )
-    snap, n_int, n_rw, evolved = R.merge_evolve_through_manifest(
+    snap, n_int, n_rw, evolved = merge_evolve_through_manifest(
         spark, mpath, delta, "doc_id", ["lang", "score"]
     )
     assert evolved == ["score"] and n_int > 0
@@ -3392,13 +3449,13 @@ def test_merge_schema_evolution_one_snapshot_time_travels(spark, tmp_path):
     assert man.agg(F.max("snapshot_id")).first()[0] == snap
 
     # (b) below: old schema, old rows
-    before = R.read_evolved(spark, mpath, "doc_id", as_of=snap - 1)
+    before = read_evolved(spark, mpath, "doc_id", as_of=snap - 1)
     assert "score" not in before.columns
     assert before.count() == n0
     assert before.filter(F.col("doc_id") == 3).first().lang != "aa"
 
     # (c) at: evolved schema, merged rows, NULL elsewhere
-    after = R.read_evolved(spark, mpath, "doc_id", as_of=snap)
+    after = read_evolved(spark, mpath, "doc_id", as_of=snap)
     assert "score" in after.columns
     assert after.count() == n0 + 1
     got = {r.doc_id: (r.lang, r.score) for r in after.filter(
@@ -3412,11 +3469,11 @@ def test_merge_schema_evolution_one_snapshot_time_travels(spark, tmp_path):
     delta2 = spark.createDataFrame(
         [(5, "cc", 0.1)], "doc_id long, lang string, score double"
     )
-    snap2, _, _, evolved2 = R.merge_evolve_through_manifest(
+    snap2, _, _, evolved2 = merge_evolve_through_manifest(
         spark, mpath, delta2, "doc_id", ["lang", "score"]
     )
     assert evolved2 == [] and snap2 == snap + 1
-    final = R.read_evolved(spark, mpath, "doc_id")
+    final = read_evolved(spark, mpath, "doc_id")
     assert final.filter(F.col("score").isNotNull()).count() == 3
 
 
@@ -3432,30 +3489,36 @@ def test_rowgroup_pruning_beats_file_pruning_on_concat_layout(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from aws_seismic_data_pipeline_spark.sources.table import _verbs as R
+    from aws_seismic_data_pipeline_spark.sources.table.manifest import (
+        manifest_pruned_scan_multi,
+        manifest_pruned_scan_multi_rowgroup,
+        rowgroup_prune_report,
+        write_fragment_concat_layout,
+        write_stats_manifest,
+    )
     from aws_seismic_data_pipeline_spark.sources.table.manifest import (
         _run_width,
     )
 
     path = str(tmp_path / "concat")
     mpath = str(tmp_path / "manifest")
-    R.write_fragment_concat_layout(spark, SF_DIR, path)
+    write_fragment_concat_layout(spark, SF_DIR, path)
     files = sorted(
         glob.glob(_os.path.join(path, "**", "*.parquet"), recursive=True)
     )
     assert len(files) == 8
-    R.write_stats_manifest(spark, files, mpath, ("o_orderkey",))
+    write_stats_manifest(spark, files, mpath, ("o_orderkey",))
     w = _run_width(spark, SF_DIR)
     lo, hi = 8 * w + w // 4, 8 * w + w // 2
     preds = {"o_orderkey": (float(lo), float(hi))}
 
-    rep = R.rowgroup_prune_report(spark, mpath, preds)
+    rep = rowgroup_prune_report(spark, mpath, preds)
     assert rep["files_file_level"] == 8, rep  # file stats defeated
     assert rep["files_rowgroup_level"] < rep["files_file_level"], rep
     assert rep["rowgroups_matching"] < rep["rowgroups_total"], rep
 
-    a = R.manifest_pruned_scan_multi(spark, mpath, preds)
-    b = R.manifest_pruned_scan_multi_rowgroup(spark, mpath, preds)
+    a = manifest_pruned_scan_multi(spark, mpath, preds)
+    b = manifest_pruned_scan_multi_rowgroup(spark, mpath, preds)
     assert b.count() == a.count() > 0
     assert (
         b.agg(F.sum("o_orderkey")).first()[0]
@@ -3467,7 +3530,7 @@ def test_rowgroup_pruning_beats_file_pruning_on_concat_layout(spark, tmp_path):
 
     # conservative contract: a predicate on an untracked column keeps
     # every file on that axis (no silent elimination)
-    both = R.manifest_pruned_scan_multi_rowgroup(
+    both = manifest_pruned_scan_multi_rowgroup(
         spark,
         mpath,
         {"o_orderkey": (float(lo), float(hi)), "o_custkey": (0.0, 1e18)},
@@ -3488,7 +3551,14 @@ def test_optimize_hilbert_prunes_time_travels_matches_morton(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from aws_seismic_data_pipeline_spark.sources.table import _verbs as R
+    from aws_seismic_data_pipeline_spark.sources.table.maintenance import (
+        optimize_hilbert,
+        optimize_zorder,
+    )
+    from aws_seismic_data_pipeline_spark.sources.table.manifest import (
+        manifest_pruned_scan_multi,
+        write_stats_manifest,
+    )
 
     orders = spark.read.parquet(f"{SF_DIR}/orders.parquet").select(
         "o_orderkey", "o_custkey", "o_totalprice"
@@ -3506,7 +3576,7 @@ def test_optimize_hilbert_prunes_time_travels_matches_morton(spark, tmp_path):
         mpath = str(tmp_path / f"{tag}_m")
         orders.repartition(16).write.parquet(data_dir)
         files = sorted(glob.glob(_os.path.join(data_dir, "*.parquet")))
-        R.write_stats_manifest(
+        write_stats_manifest(
             spark, files, mpath, ("o_orderkey", "o_custkey")
         )
         snap, n_old, n_new = curve_fn(
@@ -3514,8 +3584,8 @@ def test_optimize_hilbert_prunes_time_travels_matches_morton(spark, tmp_path):
         )
         return data_dir, mpath, snap, len(files)
 
-    hd, hm, hsnap, n_before = build(R.optimize_hilbert, "h")
-    zd, zm, _zsnap, _ = build(R.optimize_zorder, "z")
+    hd, hm, hsnap, n_before = build(optimize_hilbert, "h")
+    zd, zm, _zsnap, _ = build(optimize_zorder, "z")
 
     want = orders.filter(
         F.col("o_orderkey").between(*box["o_orderkey"])
@@ -3523,7 +3593,7 @@ def test_optimize_hilbert_prunes_time_travels_matches_morton(spark, tmp_path):
     )
     n_want, sum_want = want.count(), want.agg(F.sum("o_orderkey")).first()[0]
 
-    got_h = R.manifest_pruned_scan_multi(spark, hm, box)
+    got_h = manifest_pruned_scan_multi(spark, hm, box)
     assert got_h.count() == n_want
     assert got_h.agg(F.sum("o_orderkey")).first()[0] == sum_want
     # (a) pruning collapse + the files are hilbert runs
@@ -3531,12 +3601,12 @@ def test_optimize_hilbert_prunes_time_travels_matches_morton(spark, tmp_path):
     assert 0 < len(h_files) < n_before
     assert all("hilbert-" in f for f in h_files), h_files[:3]
     # (c) same number of files opened as the Morton layout
-    got_z = R.manifest_pruned_scan_multi(spark, zm, box)
+    got_z = manifest_pruned_scan_multi(spark, zm, box)
     assert got_z.count() == n_want
     assert len(h_files) == len(got_z.inputFiles())
     # (b) time travel: below the optimize snapshot the scattered layout
     # answers identically (row set unchanged by a layout rewrite)
-    pre = R.manifest_pruned_scan_multi(spark, hm, box, as_of=hsnap - 1)
+    pre = manifest_pruned_scan_multi(spark, hm, box, as_of=hsnap - 1)
     assert pre.count() == n_want
     assert all("hilbert-" not in f for f in pre.inputFiles())
     assert len(pre.inputFiles()) == n_before  # hash layout: no skipping
@@ -3553,7 +3623,15 @@ def test_incremental_hilbert_touches_only_the_scattered_tail(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from aws_seismic_data_pipeline_spark.sources.table import _verbs as R
+    from aws_seismic_data_pipeline_spark.sources.table.maintenance import (
+        optimize_hilbert,
+        optimize_hilbert_incremental,
+    )
+    from aws_seismic_data_pipeline_spark.sources.table.manifest import (
+        append_stats_manifest,
+        manifest_pruned_scan,
+        write_stats_manifest,
+    )
 
     orders = spark.read.parquet(f"{SF_DIR}/orders.parquet").select(
         "o_orderkey", "o_custkey", "o_totalprice"
@@ -3564,8 +3642,8 @@ def test_incremental_hilbert_touches_only_the_scattered_tail(spark, tmp_path):
     bulk.repartition(8).write.parquet(data_dir)
     files = sorted(glob.glob(_os.path.join(data_dir, "*.parquet")))
     mpath = str(tmp_path / "m")
-    R.write_stats_manifest(spark, files, mpath, ("o_orderkey", "o_custkey"))
-    R.optimize_hilbert(spark, mpath, "o_orderkey", "o_custkey", n_files=8)
+    write_stats_manifest(spark, files, mpath, ("o_orderkey", "o_custkey"))
+    optimize_hilbert(spark, mpath, "o_orderkey", "o_custkey", n_files=8)
     clustered = sorted(
         glob.glob(_os.path.join(data_dir, "hilbert-*", "part-*.parquet"))
     )
@@ -3574,13 +3652,13 @@ def test_incremental_hilbert_touches_only_the_scattered_tail(spark, tmp_path):
     late_dir = _os.path.join(data_dir, "late")
     late.repartition(3).write.parquet(late_dir)
     late_files = sorted(glob.glob(_os.path.join(late_dir, "*.parquet")))
-    R.append_stats_manifest(spark, late_files, mpath, ("o_orderkey", "o_custkey"))
+    append_stats_manifest(spark, late_files, mpath, ("o_orderkey", "o_custkey"))
 
     # n_files=8: a Hilbert run of ~32 tiles has a ~6x6-tile bounding
     # box (~0.37 span) — safely below the 0.5 scattered threshold; 3
     # files would give ~85-tile runs whose ~0.57-span boxes re-classify
     # as scattered on the next pass
-    snap, n_scat, n_new, n_untouched = R.optimize_hilbert_incremental(
+    snap, n_scat, n_new, n_untouched = optimize_hilbert_incremental(
         spark, mpath, "o_orderkey", "o_custkey", n_files=8
     )
     assert n_scat == len(late_files) and n_untouched == len(clustered)
@@ -3592,7 +3670,7 @@ def test_incremental_hilbert_touches_only_the_scattered_tail(spark, tmp_path):
         recursive=True,
     )
     assert len(new) == n_new > 0
-    got = R.manifest_pruned_scan(spark, mpath, "o_orderkey", 0, 2**62)
+    got = manifest_pruned_scan(spark, mpath, "o_orderkey", 0, 2**62)
     assert got.count() == orders.count()
     assert (
         got.agg(F.sum("o_orderkey")).first()[0]
@@ -3602,7 +3680,7 @@ def test_incremental_hilbert_touches_only_the_scattered_tail(spark, tmp_path):
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="already"):
-        R.optimize_hilbert_incremental(
+        optimize_hilbert_incremental(
             spark, mpath, "o_orderkey", "o_custkey", n_files=8
         )
 
@@ -3618,7 +3696,13 @@ def test_optimize_zorder_3d_prunes_all_axes_and_time_travels(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from aws_seismic_data_pipeline_spark.sources.table import _verbs as R
+    from aws_seismic_data_pipeline_spark.sources.table.maintenance import (
+        optimize_zorder_n,
+    )
+    from aws_seismic_data_pipeline_spark.sources.table.manifest import (
+        manifest_pruned_scan_multi,
+        write_stats_manifest,
+    )
 
     orders = spark.read.parquet(f"{SF_DIR}/orders.parquet").select(
         "o_orderkey", "o_custkey", "o_totalprice"
@@ -3627,10 +3711,10 @@ def test_optimize_zorder_3d_prunes_all_axes_and_time_travels(spark, tmp_path):
     orders.repartition(16).write.parquet(data_dir)
     files = sorted(glob.glob(_os.path.join(data_dir, "*.parquet")))
     mpath = str(tmp_path / "m")
-    R.write_stats_manifest(
+    write_stats_manifest(
         spark, files, mpath, ("o_orderkey", "o_custkey", "o_totalprice")
     )
-    snap, n_old, n_new = R.optimize_zorder_n(
+    snap, n_old, n_new = optimize_zorder_n(
         spark,
         mpath,
         ["o_orderkey", "o_custkey", "o_totalprice"],
@@ -3653,22 +3737,22 @@ def test_optimize_zorder_3d_prunes_all_axes_and_time_travels(spark, tmp_path):
         & F.col("o_custkey").between(*box["o_custkey"])
         & F.col("o_totalprice").between(*box["o_totalprice"])
     )
-    got = R.manifest_pruned_scan_multi(spark, mpath, box)
+    got = manifest_pruned_scan_multi(spark, mpath, box)
     assert got.count() == want.count()
     n3 = len(got.inputFiles())
     assert 0 < n3 < len(files)
     # every axis contributes: any 2-predicate sub-box opens >= files
     for drop in box:
         sub = {k: v for k, v in box.items() if k != drop}
-        n2 = len(R.manifest_pruned_scan_multi(spark, mpath, sub).inputFiles())
+        n2 = len(manifest_pruned_scan_multi(spark, mpath, sub).inputFiles())
         assert n2 >= n3, (drop, n2, n3)
     assert any(
-        len(R.manifest_pruned_scan_multi(
+        len(manifest_pruned_scan_multi(
             spark, mpath, {k: v for k, v in box.items() if k != drop}
         ).inputFiles()) > n3
         for drop in box
     ), "at least one axis must strictly improve the 3-D conjunction"
     # time travel: pre-optimize layout opens everything
-    pre = R.manifest_pruned_scan_multi(spark, mpath, box, as_of=snap - 1)
+    pre = manifest_pruned_scan_multi(spark, mpath, box, as_of=snap - 1)
     assert pre.count() == want.count()
     assert len(pre.inputFiles()) == len(files)

@@ -278,7 +278,7 @@ def test_cdf_survives_percent_encoded_data_paths(spark, tmp_path):
     assert got == {"update_preimage": 7, "update_postimage": 7}
 
 
-def test_cdf_under_concurrent_merge_retry(spark, tmp_path):
+def test_cdf_under_concurrent_merge_retry(spark, tmp_path, monkeypatch):
     """r14 verdict item 6: two CONTENDING writers — writer B's claim
     loses to an in-flight writer A and replays via
     merge_with_conflict_retry — must leave a feed identical to the
@@ -289,11 +289,9 @@ def test_cdf_under_concurrent_merge_retry(spark, tmp_path):
     import threading
     import time as _time
 
+    from aws_seismic_data_pipeline_spark.sources.table import commit
     from aws_seismic_data_pipeline_spark.sources.table.cdf import (
         table_changes,
-    )
-    from aws_seismic_data_pipeline_spark.sources.table.commit import (
-        Transaction,
     )
     from aws_seismic_data_pipeline_spark.sources.table.deletes import (
         read_with_deletes,
@@ -340,16 +338,23 @@ def test_cdf_under_concurrent_merge_retry(spark, tmp_path):
         )
 
     tb = threading.Thread(target=writer_b)
-    # writer A claims snapshot 1 and holds it in flight; writer B
-    # starts concurrently, loses the claim, and replays
-    with Transaction(spark, mpath) as txn_a:
-        assert txn_a.snapshot_id == 1
-        tb.start()
-        _time.sleep(0.3)  # let B lose at least one claim to A's token
-        merge_through_manifest(
-            spark, mpath, delta_a, "doc_id", ["lang", "n_chars"],
-            txn=txn_a,
-        )
+    real_claim = commit.claim_commit
+
+    def claim_then_start_b(*args, **kwargs):
+        snap = real_claim(*args, **kwargs)
+        if tb.ident is None:
+            # writer A's claim of snapshot 1: writer B starts while A
+            # holds it in flight, plans on snapshot 0, loses its claim
+            # and replays
+            tb.start()
+            _time.sleep(0.3)
+        return snap
+
+    monkeypatch.setattr(commit, "claim_commit", claim_then_start_b)
+    snap_a, _ni, _nr = merge_through_manifest(
+        spark, mpath, delta_a, "doc_id", ["lang", "n_chars"]
+    )
+    assert snap_a == 1
     tb.join(timeout=300)
     assert "out" in b_result, "writer B never committed"
     snap_b, _ni, _nr, retries_b = b_result["out"]

@@ -570,7 +570,9 @@ def test_write_time_constraints_gate_and_leak_nothing(spark, tmp_path):
     import pytest as _pytest
     from pyspark.sql import functions as F
 
-    from aws_seismic_data_pipeline_spark.sources.table import _verbs as R
+    from aws_seismic_data_pipeline_spark.sources.table.constraints import (
+        ConstraintViolationError,
+    )
     from aws_seismic_data_pipeline_spark.sources.table.facade import (
         GovernedTable,
     )
@@ -591,7 +593,7 @@ def test_write_time_constraints_gate_and_leak_nothing(spark, tmp_path):
     # declaring a constraint the CURRENT table violates: rejected, and
     # the claim it briefly held is released (next declare succeeds at
     # the very next id)
-    with _pytest.raises(R.ConstraintViolationError, match="impossible"):
+    with _pytest.raises(ConstraintViolationError, match="impossible"):
         t.add_constraint("impossible", "n_chars > 1000000000")
     snap_c1 = t.add_constraint("chars_positive", "n_chars > 0")
     snap_c2 = t.add_not_null("lang")
@@ -614,7 +616,7 @@ def test_write_time_constraints_gate_and_leak_nothing(spark, tmp_path):
         ),
         "bad",
     )
-    with _pytest.raises(R.ConstraintViolationError, match="lang_not_null"):
+    with _pytest.raises(ConstraintViolationError, match="lang_not_null"):
         t.append([bad_append])
     # nothing landed, nothing leaked
     assert t.scan_with_deletes().count() == base_count
@@ -622,9 +624,9 @@ def test_write_time_constraints_gate_and_leak_nothing(spark, tmp_path):
     bad_delta = spark.createDataFrame(
         [(1, "xx", -5)], "doc_id long, lang string, n_chars long"
     )
-    with _pytest.raises(R.ConstraintViolationError, match="chars_positive"):
+    with _pytest.raises(ConstraintViolationError, match="chars_positive"):
         t.merge(bad_delta, ["lang", "n_chars"])
-    with _pytest.raises(R.ConstraintViolationError, match="chars_positive"):
+    with _pytest.raises(ConstraintViolationError, match="chars_positive"):
         t.merge_concurrent(bad_delta, ["lang", "n_chars"])
     assert t.scan_with_deletes().count() == base_count
 
@@ -643,7 +645,7 @@ def test_write_time_constraints_gate_and_leak_nothing(spark, tmp_path):
     # constraints survive expiry; drop retires the gate
     t.expire(snap_good)
     assert len(t.constraints()) == 2
-    with _pytest.raises(R.ConstraintViolationError):
+    with _pytest.raises(ConstraintViolationError):
         t.merge(bad_delta, ["lang", "n_chars"])
     t.drop_constraint("chars_positive")
     t.drop_constraint("lang_not_null")
@@ -791,7 +793,9 @@ def test_rename_remaps_live_constraints_drop_rejects(spark, tmp_path):
     import pytest as _pytest
     from pyspark.sql import functions as F
 
-    from aws_seismic_data_pipeline_spark.sources.table import _verbs as R
+    from aws_seismic_data_pipeline_spark.sources.table.constraints import (
+        ConstraintViolationError,
+    )
     from aws_seismic_data_pipeline_spark.sources.table.facade import (
         GovernedTable,
     )
@@ -846,7 +850,7 @@ def test_rename_remaps_live_constraints_drop_rejects(spark, tmp_path):
         ),
         "bad",
     )
-    with _pytest.raises(R.ConstraintViolationError, match="chars_positive"):
+    with _pytest.raises(ConstraintViolationError, match="chars_positive"):
         t.append([bad])
     # ...and a clean post-rename batch commits: the table is NOT wedged
     good = _land(
@@ -917,18 +921,23 @@ def test_rename_remaps_backquoted_constraint_exprs(spark, tmp_path):
     assert t.scan_evolved().count() == n0 + 3
 
 
-def test_constraint_recheck_inside_claim(spark, tmp_path):
-    """The write gate re-validates INSIDE the claim (ADVICE r13): a
-    constraint declared between the facade's pre-claim gate read and
-    the commit is enforced on that batch via the pre_commit seam, and
-    a pre_commit rejection releases the claim (the next writer takes
-    the immediately-next id — memory-rule leak trap)."""
+def test_constraint_recheck_inside_claim(spark, tmp_path, monkeypatch):
+    """The write gate checks a batch against the constraints in the
+    frame of the transaction that commits it (ADVICE r13): a
+    constraint declared between the facade's gate read and its publish
+    moves the tip, so the claim fails and the retry gates the batch
+    again from the new frame, which rejects it. The rejection commits
+    nothing, leaves no file and burns no id (the next writer takes the
+    immediately-next id — memory-rule leak trap)."""
     import glob as _glob
 
     import pytest as _pytest
     from pyspark.sql import functions as F
 
-    from aws_seismic_data_pipeline_spark.sources.table import _verbs as R
+    from aws_seismic_data_pipeline_spark.sources.table import commit
+    from aws_seismic_data_pipeline_spark.sources.table.constraints import (
+        ConstraintViolationError,
+    )
     from aws_seismic_data_pipeline_spark.sources.table.facade import (
         GovernedTable,
     )
@@ -945,75 +954,40 @@ def test_constraint_recheck_inside_claim(spark, tmp_path):
         n_files=3,
     )
     # a batch that violates a constraint NOT YET declared when the
-    # gate read ran: the recheck closure (what append/merge pass as
-    # pre_commit) must catch the concurrent declaration
+    # gate read its transaction's frame
     bad_batch = docs.limit(5).select(
         (F.col("doc_id") + 900000).alias("doc_id"),
         F.col("lang"),
         F.lit(-1).cast("long").alias("n_chars"),
     )
-    recheck = t._gate(bad_batch)  # no constraints live -> passes
-    t.add_constraint("pos", "n_chars > 0")  # lands AFTER the gate read
-    with _pytest.raises(R.ConstraintViolationError, match="pos"):
-        recheck(0)
+    real = commit.claim_commit
 
-    # verb-level: a pre_commit raise aborts the commit AND releases
-    # the claim taken in that call
-    def _land(df, name):
-        stage = str(tmp_path / f"stage_{name}")
-        df.coalesce(1).write.parquet(stage)
-        return sorted(_glob.glob(stage + "/*.parquet"))[0]
+    def declared_before_the_claim(*args, **kwargs):
+        monkeypatch.setattr(commit, "claim_commit", real)
+        t.add_constraint("pos", "n_chars > 0")
+        return real(*args, **kwargs)
 
-    ok = _land(
-        docs.limit(3).select(
-            (F.col("doc_id") + 910000).alias("doc_id"), "lang", "n_chars"
-        ),
-        "ok",
-    )
-
-    class _Abort(RuntimeError):
-        pass
-
-    def _veto(_snap):
-        raise _Abort("rejected inside the claim")
-
+    files = sorted(_glob.glob(t.data_dir + "/**/*.parquet", recursive=True))
     before = t.scan_with_deletes().count()
-    with _pytest.raises(_Abort):
-        R.append_stats_manifest(
-            spark, [ok], t.manifest_dir, ("doc_id",), pre_commit=_veto
-        )
+    monkeypatch.setattr(commit, "claim_commit", declared_before_the_claim)
+    with _pytest.raises(ConstraintViolationError, match="pos"):
+        t.merge(bad_batch, ["lang", "n_chars"])
     assert t.scan_with_deletes().count() == before, "abort commits nothing"
-    snap_next = t.append([ok])
+    assert t.constraints() == [("pos", "check", "n_chars > 0")]
+    assert (
+        sorted(_glob.glob(t.data_dir + "/**/*.parquet", recursive=True))
+        == files
+    ), "the rejected merge left staged files behind"
+
+    stage = str(tmp_path / "stage_ok")
+    docs.limit(3).select(
+        (F.col("doc_id") + 910000).alias("doc_id"), "lang", "n_chars"
+    ).coalesce(1).write.parquet(stage)
+    snap_next = t.append(sorted(_glob.glob(stage + "/*.parquet")))
     hist = [int(r.snapshot_id) for r in t.history().collect()]
     assert snap_next == max(h for h in hist if h < snap_next) + 1, (
-        "vetoed commit must not burn/block ids"
+        "rejected commit must not burn/block ids"
     )
-
-    # merge path: pre_commit veto releases the retry-loop's claim too
-    bad_delta = docs.limit(2).select(
-        "doc_id", "lang", F.lit(-7).cast("long").alias("n_chars")
-    )
-    with _pytest.raises(R.ConstraintViolationError):
-        # gate passes pre-claim only if constraint missing; here 'pos'
-        # is live so the PRE-claim gate already rejects — exercise the
-        # in-claim path directly instead
-        R.merge_with_conflict_retry(
-            spark,
-            t.manifest_dir,
-            bad_delta.withColumn("n_chars", F.lit(5).cast("long")),
-            "doc_id",
-            ["lang", "n_chars"],
-            pre_commit=lambda s: R.enforce_constraints(
-                spark, t.manifest_dir, bad_delta, [("pos", "check", "n_chars > 0")]
-            ),
-        )
-    snap_after = t.append([_land(
-        docs.limit(2).select(
-            (F.col("doc_id") + 920000).alias("doc_id"), "lang", "n_chars"
-        ),
-        "ok2",
-    )])
-    assert snap_after == snap_next + 1, "vetoed merge must not leak its claim"
 
 
 def test_clone_after_expire_reads_live_generation(spark, tmp_path):
@@ -1227,7 +1201,9 @@ def test_sql_write_face_gates_and_rejects(spark, tmp_path):
     import pytest as _pytest
     from pyspark.sql import functions as F
 
-    from aws_seismic_data_pipeline_spark.sources.table import _verbs as R
+    from aws_seismic_data_pipeline_spark.sources.table.constraints import (
+        ConstraintViolationError,
+    )
     from aws_seismic_data_pipeline_spark.sources.table.facade import (
         GovernedTable,
     )
@@ -1251,7 +1227,7 @@ def test_sql_write_face_gates_and_rejects(spark, tmp_path):
     tip0 = max(int(r.snapshot_id) for r in t.history().collect())
 
     # violating INSERT: raises, commits nothing
-    with _pytest.raises(R.ConstraintViolationError, match="chars_positive"):
+    with _pytest.raises(ConstraintViolationError, match="chars_positive"):
         governed_sql_write(
             spark,
             t,

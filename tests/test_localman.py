@@ -630,6 +630,14 @@ def _read_manifest(mpath):
     )
 
 
+#: the random parts of data file names: the uuid of a Spark part file
+#: and the transaction tag of a staged ``<prefix>-<snapshot>-<tag>``
+_RANDOM_NAME_PARTS = (
+    r"-[0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12}"
+    r"|(?<=\d)-[0-9a-f]{12}(?=[-./])"
+)
+
+
 def _commit_sequence(spark, template, root):
     """Copy the table under ``template`` to ``root`` and run every
     compound commit on it: build, append, MERGE, OPTIMIZE, data
@@ -714,8 +722,9 @@ def _commit_sequence(spark, template, root):
 
     import re
 
-    # OPTIMIZE keeps Spark's part-file names, which carry a random uuid
-    uuid = re.compile(r"-[0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12}")
+    # OPTIMIZE keeps Spark's part-file names, which carry a random uuid,
+    # and staged names carry their transaction's random tag
+    uuid = re.compile(_RANDOM_NAME_PARTS)
 
     def norm(v):
         if isinstance(v, dict):
@@ -822,7 +831,7 @@ def _write_side_sequence(spark, template, root):
     late = sorted(glob.glob(os.path.join(data_dir, "late-*.parquet")))
     append_stats_manifest(spark, late[:1], mpath, cols)
     append_stats_manifest(spark, late[1:], mpath, cols)
-    uuid = re.compile(r"-[0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12}")
+    uuid = re.compile(_RANDOM_NAME_PARTS)
 
     def norm(v):
         if isinstance(v, dict):

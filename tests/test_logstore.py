@@ -18,7 +18,12 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from aws_seismic_data_pipeline_spark.sources.table import _verbs as R
+from aws_seismic_data_pipeline_spark.sources.table import (
+    commit,
+    deletes,
+    maintenance,
+    manifest,
+)
 from aws_seismic_data_pipeline_spark.sources.table.logstore import (
     ObjectStoreLogStore,
     PosixLogStore,
@@ -56,7 +61,7 @@ def governed(spark, tmp_path, store_kind):
     mpath = str(tmp_path / "manifest")
     _use_store(store_kind, mpath)
     try:
-        R.write_stats_manifest(spark, files, mpath, ("doc_id",))
+        manifest.write_stats_manifest(spark, files, mpath, ("doc_id",))
         yield mpath, docs
     finally:
         set_log_store(mpath, None)
@@ -66,9 +71,9 @@ def test_cas_one_winner(spark, governed, store_kind):
     """Two claims of the same snapshot id: exactly one wins, the loser
     raises in-flight — on either substrate."""
     mpath, _docs = governed
-    assert R.claim_commit(spark, mpath, 0, owner="owner-a") == 1
-    with pytest.raises(R.ConcurrentCommitError, match="in-flight"):
-        R.claim_commit(spark, mpath, 0, stale_after=3600.0)
+    assert commit.claim_commit(spark, mpath, 0, owner="owner-a") == 1
+    with pytest.raises(commit.ConcurrentCommitError, match="in-flight"):
+        commit.claim_commit(spark, mpath, 0, stale_after=3600.0)
     token = os.path.join(mpath, "_commits", "1")
     store = log_store_for(mpath)
     # the object store's token is a single OBJECT carrying the owner —
@@ -79,11 +84,11 @@ def test_cas_one_winner(spark, governed, store_kind):
         assert os.path.isdir(token)
     assert store.read_token_owner(token) == "owner-a"
     # a release by anyone but the owner leaves the lease in place
-    R.release_claim(mpath, 1, "owner-b")
+    commit.release_claim(mpath, 1, "owner-b")
     assert store.read_token_owner(token) == "owner-a"
     # released leases are re-claimable
-    R.release_claim(mpath, 1, "owner-a")
-    assert R.claim_commit(spark, mpath, 0) == 1
+    commit.release_claim(mpath, 1, "owner-a")
+    assert commit.claim_commit(spark, mpath, 0) == 1
 
 
 def test_stale_takeover_revokes_old_owner(spark, governed):
@@ -92,18 +97,18 @@ def test_stale_takeover_revokes_old_owner(spark, governed):
     commit-time verify_claim fails loudly instead of interleaving two
     writers' rows under one id."""
     mpath, _docs = governed
-    assert R.claim_commit(spark, mpath, 0, owner="owner-a") == 1
-    R.verify_claim(mpath, 1, "owner-a")
+    assert commit.claim_commit(spark, mpath, 0, owner="owner-a") == 1
+    commit.verify_claim(mpath, 1, "owner-a")
     time.sleep(0.15)
     # second claimant: the 0.1s stale window lets it take over
     assert (
-        R.claim_commit(spark, mpath, 0, stale_after=0.1, owner="owner-b")
+        commit.claim_commit(spark, mpath, 0, stale_after=0.1, owner="owner-b")
         == 1
     )
     # A still BELIEVES it owns snapshot 1; its commit-time check fails
-    with pytest.raises(R.ConcurrentCommitError, match="revoked"):
-        R.verify_claim(mpath, 1, "owner-a")
-    R.verify_claim(mpath, 1, "owner-b")
+    with pytest.raises(commit.ConcurrentCommitError, match="revoked"):
+        commit.verify_claim(mpath, 1, "owner-a")
+    commit.verify_claim(mpath, 1, "owner-b")
     # the revoked token went ASIDE (auditable), not deleted
     asides = [
         n
@@ -125,19 +130,19 @@ def test_merge_conflict_retry_serializes(spark, governed):
     delta_b = spark.createDataFrame(
         [(3, "bb"), (10**7, "nb")], "doc_id long, lang string"
     )
-    snap_a, _, _, retries_a = R.merge_with_conflict_retry(
+    snap_a, _, _, retries_a = maintenance.merge_with_conflict_retry(
         spark, mpath, delta_a, "doc_id", ["lang"]
     )
     assert (snap_a, retries_a) == (1, 0)
-    with pytest.raises(R.ConcurrentCommitError):
-        R.claim_commit(spark, mpath, 0)
-    snap_b, _, _, retries_b = R.merge_with_conflict_retry(
+    with pytest.raises(commit.ConcurrentCommitError):
+        commit.claim_commit(spark, mpath, 0)
+    snap_b, _, _, retries_b = maintenance.merge_with_conflict_retry(
         spark, mpath, delta_b, "doc_id", ["lang"]
     )
     assert snap_b == snap_a + 1 and retries_b == 0
     final = {
         r.doc_id: r.lang
-        for r in R.read_with_deletes(spark, mpath, "doc_id").collect()
+        for r in deletes.read_with_deletes(spark, mpath, "doc_id").collect()
     }
     assert final[3] == "bb" and final[10**7] == "nb"
     assert len(final) == docs.count() + 1
@@ -155,7 +160,7 @@ def test_concurrent_append_threads_serialize(spark, tmp_path, store_kind):
     try:
         seed = str(tmp_path / "seed")
         docs.limit(0).coalesce(1).write.parquet(seed)
-        R.write_stats_manifest(
+        manifest.write_stats_manifest(
             spark, sorted(glob.glob(seed + "/*.parquet")), mpath, ("doc_id",)
         )
         batches = []
@@ -174,7 +179,7 @@ def test_concurrent_append_threads_serialize(spark, tmp_path, store_kind):
                     # load the winner's commit can outlast the default
                     # ~1.5s backoff budget and flake the loser out
                     results.append(
-                        R.append_stats_manifest_retry(
+                        manifest.append_stats_manifest_retry(
                             spark, files, mpath, ("doc_id",), max_retries=10
                         )
                     )
@@ -189,7 +194,7 @@ def test_concurrent_append_threads_serialize(spark, tmp_path, store_kind):
         snaps = sorted(s for s, _ in results)
         # all distinct and gap-free: the serial order of commits
         assert snaps == list(range(snaps[0], snaps[0] + 4))
-        got = R.manifest_pruned_scan(spark, mpath, "doc_id", 0, 10**12)
+        got = manifest.manifest_pruned_scan(spark, mpath, "doc_id", 0, 10**12)
         assert got.count() == docs.count()
         assert (
             got.select(F.sum("doc_id")).first()[0]
@@ -208,11 +213,11 @@ def test_expire_swap_under_lease(spark, governed, store_kind, tmp_path):
     the lease."""
     mpath, docs = governed
     ins = spark.createDataFrame([(10**7, "xx")], "doc_id long, lang string")
-    snap1, _, _ = R.merge_through_manifest(spark, mpath, ins, "doc_id", ["lang"])
+    snap1, _, _ = maintenance.merge_through_manifest(spark, mpath, ins, "doc_id", ["lang"])
     assert snap1 == 1
     # an exotic in-flight lease ABOVE the guard survives the swap
-    assert R.claim_commit(spark, mpath, 2) == 3
-    n_before = R.read_with_deletes(spark, mpath, "doc_id").count()
+    assert commit.claim_commit(spark, mpath, 2) == 3
+    n_before = deletes.read_with_deletes(spark, mpath, "doc_id").count()
     # lock-free readers DURING the swap see a complete manifest at every
     # instant on BOTH substrates (generation-pointer publish: rename-
     # install on posix, copy-install on the object store) — the r12
@@ -235,7 +240,7 @@ def test_expire_swap_under_lease(spark, governed, store_kind, tmp_path):
     rt = threading.Thread(target=_reader)
     rt.start()
     try:
-        before, after = R.expire_manifest_history(
+        before, after = maintenance.expire_manifest_history(
             spark, mpath, expire_below=1
         )
     finally:
@@ -247,16 +252,16 @@ def test_expire_swap_under_lease(spark, governed, store_kind, tmp_path):
     names = log_store_for(mpath).list_tokens(commits)
     assert "3" in names, "in-flight token must survive the swap"
     assert "2" not in names, "expire must release its swap guard"
-    assert R.read_with_deletes(spark, mpath, "doc_id").count() == n_before
+    assert deletes.read_with_deletes(spark, mpath, "doc_id").count() == n_before
     # swap window: claims fail retryably instead of recreating the dir
     aside = mpath + ".expired_old"
     log_store_for(mpath).move_dir(mpath, aside)
-    with pytest.raises(R.ConcurrentCommitError, match="does not exist"):
-        R.claim_commit(spark, mpath, 1)
+    with pytest.raises(commit.ConcurrentCommitError, match="does not exist"):
+        commit.claim_commit(spark, mpath, 1)
     assert not os.path.isdir(mpath)
     # crash recovery heals the stranded manifest on either substrate
-    assert R.recover_interrupted_expire(mpath) is True
-    assert R.read_with_deletes(spark, mpath, "doc_id").count() == n_before
+    assert maintenance.recover_interrupted_expire(mpath) is True
+    assert deletes.read_with_deletes(spark, mpath, "doc_id").count() == n_before
 
 
 def test_generation_swap_file_level_semantics(tmp_path):
@@ -312,17 +317,17 @@ def test_generation_pointer_expiry(spark, tmp_path, store_kind):
             manifest_data_dir,
         )
 
-        R.write_stats_manifest(spark, files[:2], mpath, ("doc_id",))
-        R.append_stats_manifest(spark, files[2:3], mpath, ("doc_id",))
-        R.append_stats_manifest(spark, files[3:4], mpath, ("doc_id",))
+        manifest.write_stats_manifest(spark, files[:2], mpath, ("doc_id",))
+        manifest.append_stats_manifest(spark, files[2:3], mpath, ("doc_id",))
+        manifest.append_stats_manifest(spark, files[3:4], mpath, ("doc_id",))
         # pre-expire: flat layout, no pointer
         assert manifest_data_dir(mpath) == mpath
-        n_before = R.read_with_deletes(spark, mpath, "doc_id").count()
+        n_before = deletes.read_with_deletes(spark, mpath, "doc_id").count()
         flat_parquet = [f for f in os.listdir(mpath) if f.endswith(".parquet")]
         assert flat_parquet, "creation writes flat until the first expire"
 
         # in-flight lease above the guard + a reader loop DURING expire
-        assert R.claim_commit(spark, mpath, 3, owner="inflight") == 4
+        assert commit.claim_commit(spark, mpath, 3, owner="inflight") == 4
         errors: list = []
         stop = threading.Event()
 
@@ -340,7 +345,7 @@ def test_generation_pointer_expiry(spark, tmp_path, store_kind):
         t = threading.Thread(target=reader)
         t.start()
         try:
-            R.expire_manifest_history(spark, mpath, expire_below=2)
+            maintenance.expire_manifest_history(spark, mpath, expire_below=2)
         finally:
             stop.set()
             t.join()
@@ -358,20 +363,20 @@ def test_generation_pointer_expiry(spark, tmp_path, store_kind):
         )
         assert "4" in names, "in-flight token must survive (never moved)"
         assert "3" not in names, "expire releases its guard"
-        assert R.read_with_deletes(spark, mpath, "doc_id").count() == n_before
+        assert deletes.read_with_deletes(spark, mpath, "doc_id").count() == n_before
 
         # a crashed mid-copy generation: unreferenced, reads unaffected
         partial = os.path.join(mpath, "gen-00000002")
         os.makedirs(partial)
         open(os.path.join(partial, "part-junk.parquet"), "w").write("")
         assert manifest_data_dir(mpath) == gen1
-        assert R.read_with_deletes(spark, mpath, "doc_id").count() == n_before
+        assert deletes.read_with_deletes(spark, mpath, "doc_id").count() == n_before
 
         # second expire: skips the burnt number, prunes the partial gen,
         # the pre-pointer flat objects, and everything older than the
         # superseded generation
-        R.release_claim(mpath, 4, "inflight")
-        R.expire_manifest_history(spark, mpath, expire_below=2)
+        commit.release_claim(mpath, 4, "inflight")
+        maintenance.expire_manifest_history(spark, mpath, expire_below=2)
         gen3 = manifest_data_dir(mpath)
         assert gen3 == os.path.join(mpath, "gen-00000003")
         assert not os.path.isdir(partial), "partial gen pruned"
@@ -379,6 +384,6 @@ def test_generation_pointer_expiry(spark, tmp_path, store_kind):
         assert not any(
             f.endswith(".parquet") for f in os.listdir(mpath)
         ), "pre-pointer flat objects pruned once unreachable"
-        assert R.read_with_deletes(spark, mpath, "doc_id").count() == n_before
+        assert deletes.read_with_deletes(spark, mpath, "doc_id").count() == n_before
     finally:
         set_log_store(mpath, None)

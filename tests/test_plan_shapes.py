@@ -209,7 +209,9 @@ def test_constraint_gate_is_one_map_side_pass(spark, tmp_path):
     becomes a per-commit tax at 100 TB."""
     from pyspark.sql import functions as F
 
-    from aws_seismic_data_pipeline_spark.sources.table import _verbs as R
+    from aws_seismic_data_pipeline_spark.sources.table.constraints import (
+        active_constraints,
+    )
     from aws_seismic_data_pipeline_spark.sources.table.facade import (
         GovernedTable,
     )
@@ -227,7 +229,7 @@ def test_constraint_gate_is_one_map_side_pass(spark, tmp_path):
     )
     t.add_constraint("pos", "n_chars >= 0", validate_existing=False)
     t.add_not_null("lang", validate_existing=False)
-    constraints = R.active_constraints(spark, t.manifest_dir)
+    constraints = active_constraints(spark, t.manifest_dir)
     assert len(constraints) == 2
     # the gate's aggregate plan over a batch
     aggs = []

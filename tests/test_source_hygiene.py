@@ -449,7 +449,7 @@ def test_commit_protocol_lives_in_transaction():
     """Claim, lease check and release belong to ``commit.Transaction``.
     A verb that calls one itself is growing a second copy of the
     protocol and of its abort path; run the verb in a transaction
-    instead. Imports (the ``_verbs`` re-exports) are not calls."""
+    instead. Imports are not calls."""
     offenders = []
     for p in _py_files():
         rel = _rel(p)
@@ -462,4 +462,61 @@ def test_commit_protocol_lives_in_transaction():
             name = getattr(func, "id", None) or getattr(func, "attr", None)
             if name in CLAIM_PRIMITIVES:
                 offenders.append(f"{rel}:{node.lineno} {name}")
+    assert not offenders, offenders
+
+
+#: the read verbs that load a manifest frame themselves; every
+#: committing verb plans from its transaction's frame (``txn.man``)
+FRAME_LOADERS = {
+    ("sources/table/cdf.py", "signed_rows"),
+    ("sources/table/deletes.py", "read_with_deletes"),
+    ("sources/table/evolution.py", "read_evolved"),
+}
+
+
+def test_manifest_frames_come_from_the_transaction():
+    """A committing verb plans from the frame its ``commit.Transaction``
+    loaded; a ``localman.load`` of its own reads the manifest again,
+    possibly at a newer snapshot than the one its claim follows. Only
+    ``localman``, ``commit`` and the listed read verbs load a frame
+    (keyed by top-level function; module-level code is
+    ``<module>``)."""
+    found = set()
+    for p in _py_files():
+        rel = _rel(p)
+        if rel in ("sources/table/localman.py", "sources/table/commit.py"):
+            continue
+        for top in ast.parse(open(p).read()).body:
+            name = getattr(top, "name", "<module>")
+            for node in ast.walk(top):
+                if (
+                    isinstance(node, ast.Call)
+                    and ast.unparse(node.func) == "localman.load"
+                ):
+                    found.add((rel, name))
+    assert found == FRAME_LOADERS, sorted(found ^ FRAME_LOADERS)
+
+
+def test_no_module_imports_the_verbs_aggregator():
+    """The facade and the tests import each verb from its defining
+    module; the flat ``_verbs`` re-export module is gone and must not
+    come back."""
+    root = os.path.dirname(PKG)
+    sources = list(_py_files()) + [
+        os.path.join(d, f)
+        for sub in ("tests", "scripts")
+        for d, _dirs, files in os.walk(os.path.join(root, sub))
+        for f in files
+        if f.endswith(".py")
+    ]
+    offenders = []
+    for p in sources:
+        for node in ast.walk(ast.parse(open(p).read())):
+            names = []
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                names = [node.module or ""] + [a.name for a in node.names]
+            if any(n.split(".")[-1] == "_verbs" for n in names):
+                offenders.append(f"{os.path.relpath(p, root)}:{node.lineno}")
     assert not offenders, offenders

@@ -1,11 +1,12 @@
 """The optimistic-commit protocol as one object (``commit.Transaction``):
-every committing verb that fails after its claim and before its publish
-must leave the table as it found it — the claim released, so the next
-commit lands at once at the same snapshot id, and no staged data file
-left beside the table; a verb that plans before it claims must fail
-its claim when another writer committed after its plan read the
-manifest; and a claimant whose token was taken over must never release
-the new owner's token."""
+every committing verb that fails in its publish must leave the table as
+it found it — the claim released, so the next commit lands at once at
+the same snapshot id, and no staged data file left beside the table; a
+verb plans from its transaction's frame and must fail its claim when
+another writer committed after that frame was loaded (the facade then
+re-plans); a claimant whose token was taken over must never release the
+new owner's token; and one transaction opens the manifest at most
+twice."""
 
 from __future__ import annotations
 
@@ -16,13 +17,20 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from aws_seismic_data_pipeline_spark.sources.table import _verbs as R
 from aws_seismic_data_pipeline_spark.sources.table import (
     commit,
+    constraints,
+    deletes,
+    evolution,
     localman,
+    maintenance,
+    manifest,
     sketches,
 )
 from aws_seismic_data_pipeline_spark.sources.table.facade import GovernedTable
+from aws_seismic_data_pipeline_spark.sources.table.logstore import (
+    log_store_for,
+)
 from aws_seismic_data_pipeline_spark.sources.table.sqlface import (
     governed_sql_write,
 )
@@ -44,7 +52,7 @@ class _Table:
         self.docs.repartition(4).write.parquet(self.data_dir)
         self.files = sorted(glob.glob(self.data_dir + "/*.parquet"))
         self.mpath = str(tmp_path / "manifest")
-        R.write_stats_manifest(spark, self.files, self.mpath, COLS)
+        manifest.write_stats_manifest(spark, self.files, self.mpath, COLS)
         batch_dir = str(tmp_path / "batch")
         self.docs.limit(5).select(
             (F.col("doc_id") + 10**6).alias("doc_id"), "lang", "n_chars"
@@ -91,72 +99,72 @@ def _merge(spark, t, verb):
 
 #: verb name -> setup(spark, table), returning the verb call to plant in
 CASES = {
-    "append": lambda s, t: lambda: R.append_stats_manifest(
+    "append": lambda s, t: lambda: manifest.append_stats_manifest(
         s, t.batch, t.mpath, COLS
     ),
-    "remove": lambda s, t: lambda: R.remove_from_manifest(
+    "remove": lambda s, t: lambda: manifest.remove_from_manifest(
         s, t.mpath, t.files[:1]
     ),
     "rollback": lambda s, t: (
-        R.append_stats_manifest(s, t.batch, t.mpath, COLS),
-        lambda: R.rollback_manifest(s, t.mpath, 0),
+        manifest.append_stats_manifest(s, t.batch, t.mpath, COLS),
+        lambda: maintenance.rollback_manifest(s, t.mpath, 0),
     )[1],
-    "equality_delete": lambda s, t: lambda: R.equality_delete(
+    "equality_delete": lambda s, t: lambda: deletes.equality_delete(
         s, t.mpath, "doc_id", [3, 100]
     ),
     "compact_equality_deletes": lambda s, t: (
-        R.equality_delete(s, t.mpath, "doc_id", [3, 100]),
-        lambda: R.compact_equality_deletes(s, t.mpath, "doc_id"),
+        deletes.equality_delete(s, t.mpath, "doc_id", [3, 100]),
+        lambda: deletes.compact_equality_deletes(s, t.mpath, "doc_id"),
     )[1],
-    "commit_data_compaction": lambda s, t: lambda: R.commit_data_compaction(
+    "commit_data_compaction": lambda s, t: lambda: maintenance.commit_data_compaction(
         s, t.mpath, t.files[:2]
     ),
-    "optimize_table": lambda s, t: lambda: R.optimize_table(
+    "optimize_table": lambda s, t: lambda: maintenance.optimize_table(
         s, t.mpath, target_bytes=1 << 30
     ),
     "merge_through_manifest": lambda s, t: _merge(
-        s, t, R.merge_through_manifest
+        s, t, maintenance.merge_through_manifest
     ),
     "merge_with_conflict_retry": lambda s, t: _merge(
-        s, t, R.merge_with_conflict_retry
+        s, t, maintenance.merge_with_conflict_retry
     ),
     "merge_evolve_through_manifest": lambda s, t: (
-        lambda: R.merge_evolve_through_manifest(
+        lambda: maintenance.merge_evolve_through_manifest(
             s, t.mpath, t.delta(extra=True), "doc_id", ["lang", "n_chars", "tag"]
         )
     ),
-    "optimize_zorder": lambda s, t: lambda: R.optimize_zorder(
+    "optimize_zorder": lambda s, t: lambda: maintenance.optimize_zorder(
         s, t.mpath, *COLS, n_files=2
     ),
-    "optimize_hilbert": lambda s, t: lambda: R.optimize_hilbert(
+    "optimize_hilbert": lambda s, t: lambda: maintenance.optimize_hilbert(
         s, t.mpath, *COLS, n_files=2
     ),
     "optimize_zorder_incremental": lambda s, t: (
-        lambda: R.optimize_zorder_incremental(s, t.mpath, *COLS, n_files=2)
+        lambda: maintenance.optimize_zorder_incremental(s, t.mpath, *COLS, n_files=2)
     ),
     "optimize_hilbert_incremental": lambda s, t: (
-        lambda: R.optimize_hilbert_incremental(s, t.mpath, *COLS, n_files=2)
+        lambda: maintenance.optimize_hilbert_incremental(s, t.mpath, *COLS, n_files=2)
     ),
-    "evolve_schema_add": lambda s, t: lambda: R.evolve_schema_add(
+    "evolve_schema_add": lambda s, t: lambda: evolution.evolve_schema_add(
         s, t.mpath, "tag", "string"
     ),
-    "evolve_schema_rename": lambda s, t: lambda: R.evolve_schema_rename(
+    "evolve_schema_rename": lambda s, t: lambda: evolution.evolve_schema_rename(
         s, t.mpath, "lang", "language"
     ),
-    "evolve_schema_drop": lambda s, t: lambda: R.evolve_schema_drop(
+    "evolve_schema_drop": lambda s, t: lambda: evolution.evolve_schema_drop(
         s, t.mpath, "lang"
     ),
-    "add_check_constraint": lambda s, t: lambda: R.add_check_constraint(
+    "add_check_constraint": lambda s, t: lambda: constraints.add_check_constraint(
         s, t.mpath, "pos", "n_chars >= 0", existing=t.docs
     ),
     "drop_constraint": lambda s, t: (
-        R.add_check_constraint(s, t.mpath, "pos", "n_chars >= 0"),
-        lambda: R.drop_constraint(s, t.mpath, "pos"),
+        constraints.add_check_constraint(s, t.mpath, "pos", "n_chars >= 0"),
+        lambda: constraints.drop_constraint(s, t.mpath, "pos"),
     )[1],
     "sql_insert": _sql_insert,
     "append_bloom_manifest": lambda s, t: (
-        R.build_bloom_manifest(s, t.files, t.bloom_dir, "doc_id"),
-        lambda: R.append_bloom_manifest(s, t.batch, t.bloom_dir, "doc_id"),
+        sketches.build_bloom_manifest(s, t.files, t.bloom_dir, "doc_id"),
+        lambda: sketches.append_bloom_manifest(s, t.batch, t.bloom_dir, "doc_id"),
     )[1],
 }
 
@@ -171,7 +179,7 @@ def test_failed_commit_releases_claim_and_staged_files(
     t = _Table(spark, tmp_path)
     run = CASES[verb](spark, t)
     mdir = t.bloom_dir if verb == "append_bloom_manifest" else t.mpath
-    planned = R._next_snapshot(spark, mdir)
+    planned = commit._next_snapshot(spark, mdir)
 
     def planted(*_a, **_k):
         raise RuntimeError("planted commit failure")
@@ -187,20 +195,20 @@ def test_failed_commit_releases_claim_and_staged_files(
     monkeypatch.undo()
 
     assert not os.path.exists(os.path.join(mdir, "_commits", str(planned)))
-    assert R._next_snapshot(spark, mdir) == planned, "nothing published"
+    assert commit._next_snapshot(spark, mdir) == planned, "nothing published"
     assert t.unreferenced() == []
     run()  # would raise ConcurrentCommitError on a leaked claim
-    assert R._next_snapshot(spark, mdir) - 1 == planned
+    assert commit._next_snapshot(spark, mdir) - 1 == planned
 
 
 def test_sql_insert_rejected_by_gate_leaves_no_file(spark, tmp_path):
     """A SQL INSERT that violates a constraint raises inside its
     transaction: nothing is committed and its staged files are gone."""
     t = _Table(spark, tmp_path)
-    R.add_check_constraint(spark, t.mpath, "pos", "n_chars > 0")
-    with pytest.raises(R.ConstraintViolationError, match="pos"):
+    constraints.add_check_constraint(spark, t.mpath, "pos", "n_chars > 0")
+    with pytest.raises(constraints.ConstraintViolationError, match="pos"):
         _sql_insert(spark, t, n_chars="CAST(-5 AS BIGINT)")()
-    assert R._next_snapshot(spark, t.mpath) == 2
+    assert commit._next_snapshot(spark, t.mpath) == 2
     assert t.unreferenced() == []
 
 
@@ -228,20 +236,21 @@ def test_commit_after_the_plan_fails_the_claim(
     one, no key is duplicated, and A left no file behind."""
     t = _Table(spark, tmp_path)
     run = CASES[verb](spark, t)
-    planned = R._next_snapshot(spark, t.mpath)
-    real = commit.Transaction.__enter__
+    planned = commit._next_snapshot(spark, t.mpath)
+    real = commit.claim_commit
 
-    def racing(txn):
-        monkeypatch.setattr(commit.Transaction, "__enter__", real)
-        _merge(spark, t, R.merge_through_manifest)()
-        return real(txn)
+    def racing(*args, **kwargs):
+        monkeypatch.setattr(commit, "claim_commit", real)
+        _merge(spark, t, maintenance.merge_through_manifest)()
+        return real(*args, **kwargs)
 
-    monkeypatch.setattr(commit.Transaction, "__enter__", racing)
-    with pytest.raises(R.ConcurrentCommitError):
+    # A's publish claims right after this hook: B lands first
+    monkeypatch.setattr(commit, "claim_commit", racing)
+    with pytest.raises(commit.ConcurrentCommitError):
         run()
-    assert R._next_snapshot(spark, t.mpath) == planned + 1
+    assert commit._next_snapshot(spark, t.mpath) == planned + 1
     dup = (
-        R.read_with_deletes(spark, t.mpath, "doc_id")
+        deletes.read_with_deletes(spark, t.mpath, "doc_id")
         .groupBy("doc_id")
         .count()
         .filter("count > 1")
@@ -250,24 +259,139 @@ def test_commit_after_the_plan_fails_the_claim(
     assert t.unreferenced() == []
 
 
-def test_aborted_claimant_keeps_the_takeover_token(spark, tmp_path):
-    """A's token is taken over as stale by B while A is still running;
-    A then aborts. A must not release B's token: B commits at the id,
-    and a third claim of it raises instead of handing the same snapshot
-    to a second writer."""
+def test_aborted_claimant_keeps_the_takeover_token(
+    spark, tmp_path, monkeypatch
+):
+    """B takes A's token over as stale inside A's publish, between A's
+    claim and its lease check; A's lease check then fails and A
+    aborts. A must delete what it staged but must not release B's
+    token: a third claim of the id raises while B is in flight, and B
+    commits at the id."""
     t = _Table(spark, tmp_path)
     token = os.path.join(t.mpath, "_commits", "1")
-    with pytest.raises(RuntimeError, match="A aborts"):
-        with R.Transaction(spark, t.mpath) as a:
-            assert a.snapshot_id == 1
-            old = time.time() - 1000
-            os.utime(token, (old, old))
-            b = R.Transaction(spark, t.mpath).__enter__()
-            assert b.snapshot_id == 1
-            raise RuntimeError("A aborts")
-    assert os.path.isdir(token), "A released B's token"
-    b.commit(adds=t.batch, columns=COLS)
-    b.__exit__(None, None, None)
-    assert R._next_snapshot(spark, t.mpath) == 2
-    with pytest.raises(R.ConcurrentCommitError):
-        R.claim_commit(spark, t.mpath, 0)
+    real = commit.claim_commit
+
+    def taken_over(*args, **kwargs):
+        snap = real(*args, **kwargs)
+        old = time.time() - 1000
+        os.utime(token, (old, old))
+        assert real(spark, t.mpath, 0, owner="writer-b") == 1
+        return snap
+
+    monkeypatch.setattr(commit, "claim_commit", taken_over)
+    with pytest.raises(commit.ConcurrentCommitError, match="revoked"):
+        _merge(spark, t, maintenance.merge_through_manifest)()
+    monkeypatch.undo()
+    assert t.unreferenced() == [], "A left its staged files behind"
+    assert log_store_for(t.mpath).read_token_owner(token) == "writer-b", (
+        "A released B's token"
+    )
+    with pytest.raises(commit.ConcurrentCommitError, match="in-flight"):
+        commit.claim_commit(spark, t.mpath, 0)
+    commit.verify_claim(t.mpath, 1, "writer-b")
+    manifest.commit_files(spark, t.mpath, 1, adds=t.batch, columns=COLS)
+    assert commit._next_snapshot(spark, t.mpath) == 2
+    with pytest.raises(commit.ConcurrentCommitError, match="committed"):
+        commit.claim_commit(spark, t.mpath, 0)
+
+
+def test_facade_merge_replans_after_a_lost_race(spark, tmp_path, monkeypatch):
+    """Writer B's MERGE commits between the facade MERGE's plan and its
+    publish. A's claim fails, and A re-plans from the new frame in a
+    fresh transaction: it lands two ids above the snapshot it first
+    planned on, B's rows are in, and no key is duplicated."""
+    t = _Table(spark, tmp_path)
+    table = GovernedTable(spark, t.data_dir, t.mpath, "doc_id")
+    tip = commit._next_snapshot(spark, t.mpath) - 1
+    mine = t.docs.filter(F.col("doc_id") % 50 == 7).withColumn(
+        "n_chars", F.col("n_chars") + 100
+    )
+    real = commit.claim_commit
+
+    def racing(*args, **kwargs):
+        monkeypatch.setattr(commit, "claim_commit", real)
+        _merge(spark, t, maintenance.merge_through_manifest)()
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(commit, "claim_commit", racing)
+    snap, _n_int, _n_rw = table.merge(mine, ["lang", "n_chars"])
+    assert snap == tip + 2
+    assert commit._next_snapshot(spark, t.mpath) == tip + 3
+    got = {
+        r.doc_id: r.n_chars
+        for r in deletes.read_with_deletes(spark, t.mpath, "doc_id").collect()
+    }
+    base = {r.doc_id: r.n_chars for r in t.docs.collect()}
+    assert len(got) == table.scan_with_deletes().count() == len(base) + 1
+    for r in t.delta().collect():  # B's updates and its insert
+        assert got[r.doc_id] == r.n_chars
+    for r in mine.collect():
+        assert got[r.doc_id] == r.n_chars
+    assert t.unreferenced() == []
+
+
+#: facade verb -> (setup(table), the verb call whose manifest opens
+#: are counted)
+OPEN_CASES = {
+    "merge_with_a_constraint": lambda tb, t: (
+        tb.add_constraint("pos", "n_chars >= 0", validate_existing=False),
+        lambda: tb.merge(t.delta(), ["lang", "n_chars"]),
+    )[1],
+    "optimize_one_bin": lambda tb, t: lambda: tb.optimize(1 << 30),
+    "compact_deletes": lambda tb, t: (
+        tb.delete_keys([3, 100]),
+        tb.compact_deletes,
+    )[1],
+    "delete_keys": lambda tb, t: lambda: tb.delete_keys([3, 100]),
+}
+
+
+@pytest.mark.parametrize("verb", sorted(OPEN_CASES))
+def test_a_transaction_opens_the_manifest_twice(
+    spark, tmp_path, monkeypatch, verb
+):
+    """One committing verb, one transaction: the manifest is opened
+    once for the transaction's frame and once for the claim's tip
+    check — the plan, the constraint gate and the commit read the
+    frame, never the manifest again."""
+    import pyarrow.dataset as pads
+
+    t = _Table(spark, tmp_path)
+    table = GovernedTable(spark, t.data_dir, t.mpath, "doc_id")
+    run = OPEN_CASES[verb](table, t)
+    real = pads.dataset
+    opens = []
+
+    def counting(source, *args, **kwargs):
+        if str(source).startswith(t.mpath):
+            opens.append(source)
+        return real(source, *args, **kwargs)
+
+    before = commit._next_snapshot(spark, t.mpath)
+    monkeypatch.setattr(pads, "dataset", counting)
+    run()
+    assert len(opens) <= 2, opens
+    monkeypatch.undo()
+    assert commit._next_snapshot(spark, t.mpath) == before + 1
+
+
+def test_compaction_of_files_no_longer_visible_raises(spark, tmp_path):
+    """A file list read before a MERGE rewrote those files is stale:
+    compacting it would re-add the old rows beside the rewrites (every
+    key of those files twice). The compaction raises ValueError naming
+    the paths its transaction's frame no longer shows, and the table is
+    left as it was."""
+    t = _Table(spark, tmp_path)
+    table = GovernedTable(spark, t.data_dir, t.mpath, "doc_id")
+    stale = table.visible_files()
+    table.merge(t.delta(), ["lang", "n_chars"])
+    gone = sorted(set(stale) - set(table.visible_files()))
+    assert gone, "the MERGE rewrote no file of the list"
+    n_rows, snap = table.row_count(), commit._next_snapshot(spark, t.mpath)
+    with pytest.raises(ValueError, match="not visible") as err:
+        table.compact_files(stale)
+    assert all(p in str(err.value) for p in gone)
+    assert table.row_count() == n_rows
+    assert table.scan_with_deletes().count() == t.docs.count() + 1
+    assert commit._next_snapshot(spark, t.mpath) == snap
+    assert t.unreferenced() == []
