@@ -138,8 +138,9 @@ def spread_dense(
     SQL job 0.12-0.18 s, at local[2]). Spreading a sub-MB embedding
     table across all cores therefore pays 32 forks per pass to
     parallelize microseconds of math — measured 6.3 s → 2.6 s on the
-    5-pass IVF build at sf0.1 by sizing tasks at ~256 KB of parquet
-    instead. Inputs big enough to want ≥ cores tasks keep the scan
+    IVF build at sf0.1 (then five corpus passes: seed, three k-means
+    iterations, probe) by sizing tasks at ~256 KB of parquet instead.
+    Inputs big enough to want ≥ cores tasks keep the scan
     layout (``spread`` gate): at real scale the scan yields thousands
     of splits and this function never reduces them."""
     want = spark.sparkContext.defaultParallelism

@@ -3,19 +3,19 @@
 ``sim_topk_bucketed`` (llm/similarity.py) demonstrates the IVF *search*
 shape using the fixture's label column as the coarse-quantizer cell.
 This module closes the loop: the quantizer itself is TRAINED — a
-distributed spherical k-means over the corpus — so the index needs no
-ground-truth labels, which is the real situation for a 100 TB embedding
-store.
+spherical k-means over the corpus — so the index needs no ground-truth
+labels, which is the real situation for a 100 TB embedding store.
 
-Scale shape per k-means iteration (the textbook distributed EM step):
+Scale shape (the Faiss recipe, Johnson et al., "Billion-scale
+similarity search with GPUs"):
 
+- **train** — one bounded collect draws at most 256 vectors per cell
+  in md5(vec_id) order (``vector.md5_sample``); the k-means iterates
+  on that sample on the driver (``vector.kmeans``), with no Spark job
+  per iteration. The training cost is fixed by k, not by the corpus.
 - **assign** — centroids (k × d floats, a few KB) ship in the task
   closure; one Arrow/numpy pass over the corpus computes ``argmax
   (C @ x)`` per vector. No shuffle.
-- **update** — fused into the SAME pass: each partition emits its
-  per-cell vector sums and counts (≤ k rows of d doubles), so
-  n_partitions × k × d values reach the driver, which reduces and
-  renormalizes. No shuffle anywhere in an iteration.
 
 Search = probe the ``nprobe`` nearest cells per query, brute-force only
 inside them with the same partial-top-k kernel as brute force
@@ -61,14 +61,6 @@ _ASSIGN_SCHEMA = T.StructType(
     ]
 )
 
-_PARTIAL_SCHEMA = T.StructType(
-    [
-        T.StructField("cell", T.IntegerType(), False),
-        T.StructField("n", T.LongType(), False),
-        T.StructField("sums", T.ArrayType(T.DoubleType()), False),
-    ]
-)
-
 
 def _assign_cells(
     corpus: DataFrame, centroids: np.ndarray, with_embedding: bool = False
@@ -95,9 +87,11 @@ def _assign_cells(
         for pdf in batches:
             if pdf.empty:
                 continue
-            X = as_matrix(pdf["embedding"])
-            cells = np.argmax(X @ C.T, axis=1).astype(np.int32)
-            out = {"vec_id": pdf["vec_id"].to_numpy(np.int64), "cell": cells}
+            cells = _nearest_cell(as_matrix(pdf["embedding"]), C)
+            out = {
+                "vec_id": pdf["vec_id"].to_numpy(np.int64),
+                "cell": cells.astype(np.int32),
+            }
             if with_embedding:
                 out["embedding"] = pdf["embedding"]
             yield pd.DataFrame(out)
@@ -105,52 +99,21 @@ def _assign_cells(
     return corpus.select("vec_id", "embedding").mapInPandas(assign, schema)
 
 
-def seed_centroids(corpus: DataFrame, k: int) -> np.ndarray:
-    """Deterministic init: the k corpus vectors with the smallest
-    ``md5(vec_id)`` — an order-stable pseudo-random draw. The LIMIT k is
-    the memory contract: exactly k rows ever reach the driver
-    (pinned in tests/test_ivf.py)."""
-    seed_rows = (
-        corpus.select("vec_id", "embedding")
-        .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-        .limit(k)
-        .collect()
-    )
-    from aws_seismic_data_pipeline_spark.llm.vector import as_matrix
-
-    return as_matrix([r["embedding"] for r in seed_rows])
+def _nearest_cell(X: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """Spherical assignment: each unit row's max-dot centroid."""
+    return np.argmax(X @ C.T, axis=1)
 
 
-def partials_pass(corpus: DataFrame, C: np.ndarray, k: int, d: int) -> DataFrame:
-    """The fused assign+partial-sum step of one k-means iteration: each
-    partition emits AT MOST k rows of (cell, count, component sums), so
-    the driver-side collect is bounded by n_partitions × k rows — never
-    corpus-sized (pinned in tests/test_ivf.py)."""
-    Cc = np.ascontiguousarray(C)
-
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from aws_seismic_data_pipeline_spark.llm.vector import as_matrix
-
-        acc = np.zeros((k, d))
-        cnt = np.zeros(k, dtype=np.int64)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            X = as_matrix(pdf["embedding"])
-            cells = np.argmax(X @ Cc.T, axis=1)
-            np.add.at(acc, cells, X)
-            cnt += np.bincount(cells, minlength=k)
-        hit = np.nonzero(cnt)[0]
-        if hit.size:
-            yield pd.DataFrame(
-                {
-                    "cell": hit.astype(np.int32),
-                    "n": cnt[hit],
-                    "sums": [acc[c] for c in hit],
-                }
-            )
-
-    return corpus.select("embedding").mapInPandas(partials, _PARTIAL_SCHEMA)
+def _unit_mean(sums: np.ndarray, counts: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """Spherical update: the renormalized cell sum; a cell whose sum
+    is the zero vector keeps its centroid."""
+    # row by row: norm(axis=1) sums the squares in another order and can
+    # move the last bit of a centroid
+    norms = np.array([np.linalg.norm(s) for s in sums])
+    nz = norms > 0
+    out = C.copy()
+    out[nz] = sums[nz] / norms[nz, None]
+    return out
 
 
 def train_centroids(
@@ -158,40 +121,20 @@ def train_centroids(
     k: int = N_CELLS,
     iters: int = N_ITERS,
 ) -> np.ndarray:
-    """Spherical k-means over unit vectors, fully deterministic.
+    """Spherical k-means over unit vectors, fully deterministic, on the
+    driver: one bounded collect (``vector.md5_sample``, at most
+    ``POINTS_PER_CENTROID`` × k rows in md5(vec_id) order) is both the
+    seed (its first k rows) and the training set, and
+    ``vector.kmeans`` iterates on it with no further Spark job. The
+    corpus is scanned once more, by the caller's assign pass."""
+    from aws_seismic_data_pipeline_spark.llm.vector import (
+        POINTS_PER_CENTROID,
+        kmeans,
+        md5_sample,
+    )
 
-    Init: md5-order seed draw (``seed_centroids``). Each iteration is
-    ONE no-shuffle pass: closure-broadcast centroids, per-partition
-    argmax assignment fused with per-cell partial sums
-    (``partials_pass``), driver-side reduce + renormalize. Empty cells
-    keep their previous centroid. Converged-centroid early stop: when
-    an iteration reproduces the previous centroids exactly (the
-    reduced sums are rounded, so fixpoints are bit-stable), remaining
-    iterations are skipped — at 100 TB each skipped iteration is a
-    full corpus pass; determinism is unaffected because the stop
-    depends only on the data."""
-    C = seed_centroids(corpus, k)
-    d = C.shape[1]
-    for _ in range(iters):
-        rows = partials_pass(corpus, C, k, d).collect()
-        acc = np.zeros((k, d))
-        cnt = np.zeros(k)
-        for r in rows:
-            acc[r["cell"]] += np.asarray(r["sums"])
-            cnt[r["cell"]] += r["n"]
-        # round the reduced sums: partial order varies with partitioning,
-        # and training must be layout-independent
-        acc = np.round(acc, 6)
-        nxt = C.copy()  # empty cells keep their previous centroid
-        for c in range(k):
-            if cnt[c] > 0:
-                norm = np.linalg.norm(acc[c])
-                if norm > 0:
-                    nxt[c] = acc[c] / norm  # spherical: renormalize the mean
-        if np.array_equal(nxt, C):
-            break  # fixpoint reached: skip the remaining corpus passes
-        C = nxt
-    return C
+    X = md5_sample(corpus, POINTS_PER_CENTROID * k)
+    return kmeans(X, X[:k], iters, _nearest_cell, _unit_mean)
 
 
 def probe_topk(
@@ -203,13 +146,14 @@ def probe_topk(
 ) -> DataFrame:
     """Partial top-k restricted to each query's ``nprobe`` nearest cells.
 
-    Same per-partition score/argpartition shape as
+    Same per-partition scoring and emitter (``vector.partial_topk``) as
     ``vector.topk_dots``, with the label mask generalized to a
     per-query allowed-cell set (the multi-probe matrix rides the
     closure: n_q × k booleans)."""
     from aws_seismic_data_pipeline_spark.llm.vector import (
         MAX_CLOSURE_QUERIES,
         as_matrix,
+        partial_topk,
     )
 
     assert len(queries) <= MAX_CLOSURE_QUERIES, (
@@ -235,29 +179,12 @@ def probe_topk(
         for pdf in batches:
             if pdf.empty:
                 continue
-            c_ids = pdf["vec_id"].to_numpy(np.int64)
             c_cells = pdf["cell"].to_numpy(np.int64)
-            c_mat = as_matrix(pdf["embedding"])
-            dots = q_mat @ c_mat.T
-            excluded = ~allowed[:, c_cells]
-            excluded |= c_ids[None, :] == q_ids[:, None]
-            dots[excluded] = -np.inf
-            n_q, n_c = dots.shape
-            kk = min(k + 16, n_c)
-            if n_c > kk:
-                part = np.argpartition(dots, -kk, axis=1)[:, -kk:]
-            else:
-                part = np.broadcast_to(np.arange(n_c), (n_q, n_c))
-            vals = np.take_along_axis(dots, part, axis=1).ravel()
-            keep = np.isfinite(vals)
-            if keep.any():
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.repeat(q_ids, part.shape[1])[keep],
-                        "neighbor_id": c_ids[part.ravel()][keep],
-                        "dot": vals[keep],
-                    }
-                )
+            dots = q_mat @ as_matrix(pdf["embedding"]).T
+            dots[~allowed[:, c_cells]] = -np.inf
+            yield from partial_topk(
+                dots, q_ids, pdf["vec_id"].to_numpy(np.int64), k
+            )
 
     return corpus_with_cell.select("vec_id", "embedding", "cell").mapInPandas(
         score, pair_schema
@@ -281,10 +208,10 @@ def build_and_search(
     from aws_seismic_data_pipeline_spark.llm.vector import rank_topk
 
     if corpus is None:
-        # eager checkpoint: the seed draw, every k-means iteration, and
-        # the probe each scan the corpus — without the lineage cut each
-        # pass would repeat the parquet decode AND the spread shuffle
-        # (5× at n_iters=3). At 100 TB this materialization is the IVF
+        # eager checkpoint: the training sample, the assign pass, the
+        # query collect and the probe each read the corpus — without the
+        # lineage cut each would repeat the parquet decode AND the
+        # spread shuffle. At 100 TB this materialization is the IVF
         # build's working set; the persisted index table plays this
         # role in a real deployment.
         corpus = spread_dense(
@@ -495,8 +422,8 @@ def build_index_from(
     arbitrary (vec_id, embedding) frame — the core ``write_index``
     wraps for the fixture table, reused by the streaming ingest whose
     initial corpus is a subset. Caller is responsible for the frame's
-    partitioning/materialization (training makes one pass per
-    iteration)."""
+    partitioning/materialization (the training sample and the assign
+    pass each read it once)."""
     centroids = train_centroids(corpus, k=n_cells)
     assigned = _assign_cells(corpus, centroids, with_embedding=True)
     # repartition by cell before the partitioned write: without it every

@@ -13,10 +13,10 @@ dot is M table lookups — no float vector is ever touched at probe time.
 
 Scale shape mirrors the IVF module exactly:
 
-- **train** — per-subspace k-means, ALL M subspaces fused into the same
-  no-shuffle pass: each partition emits at most M × k_sub partial-sum
-  rows (KBs), the driver reduces and recenters. Iterations stop at the
-  exact fixpoint.
+- **train** — per-subspace L2 k-means on the driver (``vector.kmeans``)
+  over one bounded md5(vec_id)-order sample of at most 256 vectors per
+  codebook entry (``vector.md5_sample``, the same draw IVF trains on);
+  no Spark job per iteration. Iterations stop at the exact fixpoint.
 - **encode** — one Arrow/numpy pass over the corpus emitting (vec_id,
   codes); the codes table is what persists, 32× smaller than its input.
 - **probe** — per-partition LUT scoring + partial top-k, then the same
@@ -44,7 +44,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from aws_seismic_data_pipeline_spark.catalog import load_table, spread_dense
 from aws_seismic_data_pipeline_spark.registry import register
@@ -56,15 +55,6 @@ M_SUB = 8
 K_SUB = 16
 PQ_ITERS = 3
 
-_PARTIAL_SCHEMA = T.StructType(
-    [
-        T.StructField("m", T.IntegerType(), False),
-        T.StructField("cell", T.IntegerType(), False),
-        T.StructField("n", T.LongType(), False),
-        T.StructField("sums", T.ArrayType(T.DoubleType()), False),
-    ]
-)
-
 _CODES_SCHEMA = "vec_id long, codes array<int>"
 
 
@@ -72,85 +62,41 @@ def _split(X: np.ndarray, m: int, d_sub: int) -> np.ndarray:
     return X[:, m * d_sub : (m + 1) * d_sub]
 
 
-def seed_codebooks(corpus: DataFrame, d: int) -> np.ndarray:
-    """Deterministic init, shape (M, k_sub, d_sub): the k_sub corpus
-    vectors with the smallest md5(vec_id) seed EVERY subspace's
-    codebook with their sub-vectors — the same order-stable draw as
-    ``ivf.seed_centroids``, bounded at k_sub driver rows."""
-    from aws_seismic_data_pipeline_spark.llm.vector import as_matrix
-
-    rows = (
-        corpus.select("vec_id", "embedding")
-        .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-        .limit(K_SUB)
-        .collect()
-    )
-    X = as_matrix([r["embedding"] for r in rows])
-    d_sub = d // M_SUB
-    return np.stack([_split(X, m, d_sub).copy() for m in range(M_SUB)])
+def _nearest_l2(Xm: np.ndarray, Cm: np.ndarray) -> np.ndarray:
+    """Each sub-vector's L2-nearest codebook entry:
+    argmin ||x - c||^2 = argmin ||c||^2 - 2 x.c"""
+    d2 = (Cm**2).sum(axis=1)[None, :] - 2.0 * (Xm @ Cm.T)
+    return np.argmin(d2, axis=1)
 
 
-def _codebook_partials(corpus: DataFrame, C: np.ndarray) -> DataFrame:
-    """One fused training pass: L2-assign every sub-vector in every
-    subspace and emit per-(subspace, cell) partial sums — at most
-    M × k_sub rows per partition, never corpus-sized."""
-    Cc = np.ascontiguousarray(C)
-    d_sub = C.shape[2]
-
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from aws_seismic_data_pipeline_spark.llm.vector import as_matrix
-
-        acc = np.zeros((M_SUB, K_SUB, d_sub))
-        cnt = np.zeros((M_SUB, K_SUB), dtype=np.int64)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            X = as_matrix(pdf["embedding"])
-            for m in range(M_SUB):
-                Xm = _split(X, m, d_sub)
-                # argmin ||x - c||^2 = argmin ||c||^2 - 2 x.c
-                d2 = (Cc[m] ** 2).sum(axis=1)[None, :] - 2.0 * (Xm @ Cc[m].T)
-                cells = np.argmin(d2, axis=1)
-                np.add.at(acc[m], cells, Xm)
-                cnt[m] += np.bincount(cells, minlength=K_SUB)
-        out = []
-        for m in range(M_SUB):
-            for c in np.nonzero(cnt[m])[0]:
-                out.append((m, int(c), int(cnt[m][c]), acc[m][c]))
-        if out:
-            yield pd.DataFrame(
-                out, columns=["m", "cell", "n", "sums"]
-            ).astype({"m": "int32", "cell": "int32"})
-
-    return corpus.select("embedding").mapInPandas(partials, _PARTIAL_SCHEMA)
+def _rounded_mean(sums: np.ndarray, counts: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """L2 update: the cell mean, rounded to 6 decimals like the sums."""
+    return np.round(sums / counts[:, None], 6)
 
 
 def train_codebooks(
     corpus: DataFrame, d: int, iters: int = PQ_ITERS
 ) -> np.ndarray:
-    """Per-subspace k-means, all subspaces per pass, deterministic:
-    rounded driver-side reduction (layout-independent), empty cells
-    keep their centroid, exact-fixpoint early stop — each skipped
-    iteration is a full corpus pass at 100 TB."""
-    C = seed_codebooks(corpus, d)
-    for _ in range(iters):
-        rows = _codebook_partials(corpus, C).collect()
-        acc = np.zeros_like(C)
-        cnt = np.zeros((M_SUB, K_SUB))
-        for r in rows:
-            acc[r["m"], r["cell"]] += np.asarray(r["sums"])
-            cnt[r["m"], r["cell"]] += r["n"]
-        acc = np.round(acc, 6)
-        nxt = C.copy()
-        for m in range(M_SUB):
-            for c in range(K_SUB):
-                if cnt[m, c] > 0:
-                    nxt[m, c] = acc[m, c] / cnt[m, c]
-        nxt = np.round(nxt, 6)
-        if np.array_equal(nxt, C):
-            break
-        C = nxt
-    return C
+    """Per-subspace k-means, deterministic, shape (M, k_sub, d_sub):
+    one bounded collect (``vector.md5_sample``, at most
+    ``POINTS_PER_CENTROID`` × k_sub rows in md5(vec_id) order) seeds
+    every subspace's codebook with the sub-vectors of its first k_sub
+    rows and is the training set of every subspace; ``vector.kmeans``
+    iterates on it with rounded means, no Spark job per iteration."""
+    from aws_seismic_data_pipeline_spark.llm.vector import (
+        POINTS_PER_CENTROID,
+        kmeans,
+        md5_sample,
+    )
+
+    X = md5_sample(corpus, POINTS_PER_CENTROID * K_SUB)
+    d_sub = d // M_SUB
+    return np.stack(
+        [
+            kmeans(Xm, Xm[:K_SUB].copy(), iters, _nearest_l2, _rounded_mean)
+            for Xm in (_split(X, m, d_sub) for m in range(M_SUB))
+        ]
+    )
 
 
 def encode_corpus(corpus: DataFrame, C: np.ndarray) -> DataFrame:
@@ -169,9 +115,7 @@ def encode_corpus(corpus: DataFrame, C: np.ndarray) -> DataFrame:
             X = as_matrix(pdf["embedding"])
             codes = np.empty((len(pdf), M_SUB), dtype=np.int32)
             for m in range(M_SUB):
-                Xm = _split(X, m, d_sub)
-                d2 = (Cc[m] ** 2).sum(axis=1)[None, :] - 2.0 * (Xm @ Cc[m].T)
-                codes[:, m] = np.argmin(d2, axis=1)
+                codes[:, m] = _nearest_l2(_split(X, m, d_sub), Cc[m])
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].to_numpy(dtype=np.int64),
@@ -196,7 +140,10 @@ def adc_topk(
     (vectorized gather-sum), and emits per-partition partial top-k;
     callers finish with the shared deterministic re-rank
     (``vector.rank_topk``). Corpus float vectors are never read."""
-    from aws_seismic_data_pipeline_spark.llm.vector import MAX_CLOSURE_QUERIES
+    from aws_seismic_data_pipeline_spark.llm.vector import (
+        MAX_CLOSURE_QUERIES,
+        partial_topk,
+    )
 
     assert len(queries) <= MAX_CLOSURE_QUERIES
     d_sub = C.shape[2]
@@ -222,27 +169,10 @@ def adc_topk(
                 continue
             c_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
             codes = np.stack(pdf["codes"].to_numpy())  # (n_c, M)
-            n_q, n_c = len(q_ids), len(c_ids)
-            dots = np.zeros((n_q, n_c))
+            dots = np.zeros((len(q_ids), len(c_ids)))
             for m in range(M_SUB):
                 dots += luts[:, m, :][:, codes[:, m]]
-            excluded = c_ids[None, :] == q_ids[:, None]
-            dots[excluded] = -np.inf
-            kk = min(k + 16, n_c)
-            if n_c > kk:
-                part = np.argpartition(dots, -kk, axis=1)[:, -kk:]
-            else:
-                part = np.broadcast_to(np.arange(n_c), (n_q, n_c)).copy()
-            vals = np.take_along_axis(dots, part, axis=1).ravel()
-            keep = np.isfinite(vals)
-            if keep.any():
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.repeat(q_ids, part.shape[1])[keep],
-                        "neighbor_id": c_ids[part.ravel()][keep],
-                        "dot": vals[keep],
-                    }
-                )
+            yield from partial_topk(dots, q_ids, c_ids, k)
 
     return codes_df.mapInPandas(score, schema)
 
@@ -279,11 +209,10 @@ def sim_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    # materialize the spread corpus ONCE (r16; the same shape the IVF
-    # build has had since r13): every k-means training pass, the
-    # encode pass, the re-rank pass and the exact recall baseline
-    # otherwise each re-read the parquet AND re-ran the spread shuffle
-    # — 6+ redundant corpus scans per invocation at 100 TB
+    # materialize the spread corpus ONCE (the same shape as the IVF
+    # build): the training sample, the encode pass, the re-rank pass
+    # and the exact recall baseline otherwise each re-read the parquet
+    # AND re-ran the spread shuffle
     corpus = spread_dense(emb, spark, sf_dir).localCheckpoint(eager=True)
     queries = [
         (r["vec_id"], np.asarray(r["embedding"], dtype=np.float64))
@@ -331,14 +260,25 @@ def pq_search_rerank(
     point-lookup path instead of scanning). Exact re-scoring runs
     JVM-side (zip_with + aggregate — no Python), and the final rank is
     the shared deterministic 6dp/id ordering."""
+    return _exact_rerank(
+        corpus, adc_topk(codes_df, queries, C, k=shortlist), queries, k, shortlist
+    )
+
+
+def _exact_rerank(
+    corpus: DataFrame,
+    candidates: DataFrame,
+    queries: list[tuple[int, np.ndarray]],
+    k: int,
+    shortlist: int,
+) -> DataFrame:
+    """Each query's ``shortlist`` best ADC candidates re-scored exactly
+    against the full corpus vectors (two broadcast joins, the dot in
+    the JVM), then the shared deterministic top-k rank."""
     from aws_seismic_data_pipeline_spark.llm.vector import rank_topk
 
-    spark = corpus.sparkSession
-    cand = (
-        rank_topk(adc_topk(codes_df, queries, C, k=shortlist), shortlist)
-        .select("query_id", "neighbor_id")
-    )
-    qdf = spark.createDataFrame(
+    cand = rank_topk(candidates, shortlist).select("query_id", "neighbor_id")
+    qdf = corpus.sparkSession.createDataFrame(
         [(int(qid), [float(v) for v in vec]) for qid, vec in queries],
         "query_id long, qvec array<double>",
     )
@@ -410,13 +350,14 @@ def _residual_frame(corpus: DataFrame, coarse: np.ndarray) -> DataFrame:
     schema = "vec_id long, cell int, embedding array<float>"
 
     def residuals(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from aws_seismic_data_pipeline_spark.llm.ivf import _nearest_cell
         from aws_seismic_data_pipeline_spark.llm.vector import as_matrix
 
         for pdf in batches:
             if pdf.empty:
                 continue
             X = as_matrix(pdf["embedding"])
-            cells = np.argmax(X @ C.T, axis=1)
+            cells = _nearest_cell(X, C)
             R = (X - C[cells]).astype(np.float32)
             yield pd.DataFrame(
                 {
@@ -446,6 +387,7 @@ def adc_topk_residual(
     from aws_seismic_data_pipeline_spark.llm.vector import (
         MAX_CLOSURE_QUERIES,
         as_matrix,
+        partial_topk,
     )
 
     assert len(queries) <= MAX_CLOSURE_QUERIES
@@ -472,24 +414,7 @@ def adc_topk_residual(
             dots = cell_terms[:, cells].copy()
             for m in range(M_SUB):
                 dots += luts[:, m, :][:, codes[:, m]]
-            excluded = c_ids[None, :] == q_ids[:, None]
-            dots[excluded] = -np.inf
-            n_q, n_c = dots.shape
-            kk = min(k + 16, n_c)
-            if n_c > kk:
-                part = np.argpartition(dots, -kk, axis=1)[:, -kk:]
-            else:
-                part = np.broadcast_to(np.arange(n_c), (n_q, n_c)).copy()
-            vals = np.take_along_axis(dots, part, axis=1).ravel()
-            keep = np.isfinite(vals)
-            if keep.any():
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.repeat(q_ids, part.shape[1])[keep],
-                        "neighbor_id": c_ids[part.ravel()][keep],
-                        "dot": vals[keep],
-                    }
-                )
+            yield from partial_topk(dots, q_ids, c_ids, k)
 
     return codes_df.mapInPandas(score, schema)
 
@@ -529,23 +454,4 @@ def ivfpq_residual_search(
     probe_cells = sorted({int(c) for row in cell_rank for c in row})
     pruned = codes.filter(F.col("cell").isin(probe_cells))
     cand = adc_topk_residual(pruned, queries, C, coarse, k=shortlist)
-
-    from aws_seismic_data_pipeline_spark.llm.vector import rank_topk
-
-    short = rank_topk(cand, shortlist).select("query_id", "neighbor_id")
-    qdf = spark.createDataFrame(
-        [(int(qid), [float(v) for v in vec]) for qid, vec in queries],
-        "query_id long, qvec array<double>",
-    )
-    exact_dot = F.expr(
-        "aggregate(zip_with(embedding, qvec,"
-        " (a, b) -> CAST(a AS DOUBLE) * b), CAST(0 AS DOUBLE),"
-        " (s, v) -> s + v)"
-    )
-    rescored = (
-        corpus.select(F.col("vec_id").alias("neighbor_id"), "embedding")
-        .join(F.broadcast(short), "neighbor_id")
-        .join(F.broadcast(qdf), "query_id")
-        .select("query_id", "neighbor_id", exact_dot.alias("dot"))
-    )
-    return rank_topk(rescored, k)
+    return _exact_rerank(corpus, cand, queries, k, shortlist)

@@ -9,7 +9,12 @@ to a numpy matrix and broadcast; each corpus partition streams through
 global merge is tiny (n_queries × k × n_partitions rows).
 
 This is the standard distributed ANN shape: per-partition scoring +
-partial top-k + small global re-rank. No shuffle of the corpus at all.
+partial top-k (``partial_topk``, shared by every scoring kernel) + small
+global re-rank. No shuffle of the corpus at all.
+
+The trained indexes (IVF centroids, PQ codebooks) share one k-means:
+``md5_sample`` draws at most ``POINTS_PER_CENTROID`` vectors per
+centroid in one bounded collect and ``kmeans`` iterates on the driver.
 """
 
 from __future__ import annotations
@@ -52,6 +57,85 @@ def as_matrix(values) -> np.ndarray:
 MAX_CLOSURE_QUERIES = 50
 
 
+def partial_topk(
+    dots: np.ndarray, q_ids: np.ndarray, c_ids: np.ndarray, k: int
+) -> Iterator[pd.DataFrame]:
+    """The per-partition emitter every scoring kernel ends in: mask
+    self-pairs to -inf (callers mask their own exclusions the same way
+    first), keep each query's ``k + 16`` best scores with ONE
+    argpartition across all queries, and yield at most one
+    (query_id, neighbor_id, dot) frame of the finite ones."""
+    dots[c_ids[None, :] == q_ids[:, None]] = -np.inf
+    n_q, n_c = dots.shape
+    # keep a margin past k: the global rank orders on round(dot, 6)
+    # with id tiebreak, so raw-dot boundary ties must not be cut
+    # exactly at k
+    kk = min(k + 16, n_c)
+    if n_c > kk:
+        part = np.argpartition(dots, -kk, axis=1)[:, -kk:]
+    else:
+        part = np.broadcast_to(np.arange(n_c), (n_q, n_c))
+    vals = np.take_along_axis(dots, part, axis=1).ravel()
+    keep = np.isfinite(vals)
+    if keep.any():
+        yield pd.DataFrame(
+            {
+                "query_id": np.repeat(q_ids, part.shape[1])[keep],
+                "neighbor_id": c_ids[part.ravel()][keep],
+                "dot": vals[keep],
+            }
+        )
+
+
+#: Training points per centroid (Faiss's ``max_points_per_centroid``,
+#: Johnson et al., "Billion-scale similarity search with GPUs"): every
+#: k-means here trains on at most this many vectors per cell, so the
+#: driver-side training set is bounded by 256 × k rows at any corpus
+#: size, and the corpus itself is only scanned by the assign pass.
+POINTS_PER_CENTROID = 256
+
+
+def md5_sample(corpus: DataFrame, n: int) -> np.ndarray:
+    """The first ``n`` corpus vectors in ``md5(vec_id)`` order — an
+    order-stable pseudo-random draw, one bounded collect — as an
+    (≤ n, d) matrix. Its first k rows are the k-means seed, the whole
+    draw the training set."""
+    rows = (
+        corpus.select("vec_id", "embedding")
+        .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
+        .limit(n)
+        .collect()
+    )
+    if not rows:
+        raise ValueError("k-means training: the corpus has no training vectors")
+    return as_matrix([r["embedding"] for r in rows])
+
+
+def kmeans(X: np.ndarray, C0: np.ndarray, iters: int, assign, update) -> np.ndarray:
+    """Deterministic Lloyd k-means on the driver.
+
+    ``assign(X, C)`` gives every row's cell; ``update(sums, counts,
+    C)`` gives the new centroids of the non-empty cells from their
+    vector sums, counts and current centroids. The sums are rounded to
+    6 decimals, so the result does not depend on the row order of the
+    sample and a fixpoint is bit-stable: the loop stops as soon as an
+    iteration reproduces its centroids exactly. An empty cell keeps its
+    centroid."""
+    C = C0
+    for _ in range(iters):
+        cells = assign(X, C)
+        sums = np.zeros_like(C)
+        np.add.at(sums, cells, X)
+        counts = np.bincount(cells, minlength=len(C))
+        hit = counts > 0
+        nxt = C.copy()
+        nxt[hit] = update(np.round(sums[hit], 6), counts[hit], C[hit])
+        if np.array_equal(nxt, C):
+            break
+        C = nxt
+    return C
+
+
 def topk_dots(
     corpus: DataFrame,
     queries: list[tuple[int, int | None, np.ndarray]],
@@ -88,34 +172,12 @@ def topk_dots(
             )
             c_mat = as_matrix(pdf["embedding"])
             dots = q_mat @ c_mat.T  # (n_q, n_c) float64
-            # mask excluded pairs to -inf, then ONE argpartition across
-            # all queries at once — no per-query Python loop
-            excluded = c_ids[None, :] == q_ids[:, None]
             if same_label_only:
-                excluded |= c_labels[None, :] != q_labels[:, None]
+                dots[c_labels[None, :] != q_labels[:, None]] = -np.inf
             if exclude_same_label:
                 # hard-negative mining: only DIFFERENT-label neighbors
-                excluded |= c_labels[None, :] == q_labels[:, None]
-            dots[excluded] = -np.inf
-            n_q, n_c = dots.shape
-            # keep a margin past k: the global rank orders on
-            # round(dot, 6) with id tiebreak, so raw-dot boundary
-            # ties must not be cut exactly at k
-            kk = min(k + 16, n_c)
-            if n_c > kk:
-                part = np.argpartition(dots, -kk, axis=1)[:, -kk:]
-            else:
-                part = np.broadcast_to(np.arange(n_c), (n_q, n_c))
-            vals = np.take_along_axis(dots, part, axis=1).ravel()
-            keep = np.isfinite(vals)
-            if keep.any():
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.repeat(q_ids, part.shape[1])[keep],
-                        "neighbor_id": c_ids[part.ravel()][keep],
-                        "dot": vals[keep],
-                    }
-                )
+                dots[c_labels[None, :] == q_labels[:, None]] = -np.inf
+            yield from partial_topk(dots, q_ids, c_ids, k)
 
     if same_label_only and exclude_same_label:
         raise ValueError("same_label_only and exclude_same_label conflict")

@@ -97,75 +97,110 @@ def test_ivf_equals_bruteforce_restricted_to_probed_cells(spark):
 
 def test_ivf_recall_on_planted_clusters(spark, tmp_path):
     """On genuinely clustered data (10 tight clusters around unit
-    centers), nprobe=2 IVF must recover nearly all true neighbors."""
+    centers), nprobe=2 IVF must recover nearly all true neighbors —
+    below the training-sample cap (400 vectors, the whole corpus
+    trains) and above it (3,000 vectors, 2,560 train)."""
     import numpy as np
     import os
 
-    rng = np.random.default_rng(7)
-    centers = rng.normal(size=(10, 32))
-    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
-    vecs, labels = [], []
-    for c in range(10):
-        pts = centers[c] + 0.15 * rng.normal(size=(40, 32))
-        pts /= np.linalg.norm(pts, axis=1, keepdims=True)
-        vecs.append(pts)
-        labels += [c] * 40
-    X = np.vstack(vecs)
-    d = str(tmp_path / "planted")
-    os.makedirs(d, exist_ok=True)
+    for per_cluster in (40, 300):
+        rng = np.random.default_rng(7)
+        centers = rng.normal(size=(10, 32))
+        centers /= np.linalg.norm(centers, axis=1, keepdims=True)
+        vecs, labels = [], []
+        for c in range(10):
+            pts = centers[c] + 0.15 * rng.normal(size=(per_cluster, 32))
+            pts /= np.linalg.norm(pts, axis=1, keepdims=True)
+            vecs.append(pts)
+            labels += [c] * per_cluster
+        X = np.vstack(vecs)
+        d = str(tmp_path / f"planted{len(X)}")
+        os.makedirs(d, exist_ok=True)
+        df = spark.createDataFrame(
+            [(i, X[i].tolist(), labels[i]) for i in range(len(X))],
+            "vec_id long, embedding array<float>, label int",
+        )
+        df.coalesce(1).write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
+
+        k, n_queries = 5, 30
+        approx: dict = {}
+        for r in build_and_search(spark, d, k=k, n_queries=n_queries).collect():
+            approx.setdefault(r.query_id, set()).add(r.neighbor_id)
+
+        # exact ground truth in numpy (corpus is small)
+        Xq = X.astype(np.float64)
+        D = Xq @ Xq.T
+        np.fill_diagonal(D, -np.inf)
+        hits = total = 0
+        for q in range(n_queries):
+            true = set(np.argsort(-np.round(D[q], 6))[:k].tolist())
+            hits += len(approx[q] & true)
+            total += k
+        recall = hits / total
+        assert recall >= 0.9, f"n={len(X)}: recall@{k} = {recall:.2f}"
+
+
+def test_training_sample_is_capped_per_centroid(spark, monkeypatch):
+    """Memory-posture pin: IVF and PQ each train on ONE driver-side
+    draw, exactly the first min(n, POINTS_PER_CENTROID × k) corpus
+    vectors in md5(vec_id) order, whose first k rows are the seed —
+    never corpus-sized, whatever the corpus."""
+    import hashlib
+
+    from aws_seismic_data_pipeline_spark.llm import vector
+    from aws_seismic_data_pipeline_spark.llm.pq import K_SUB, train_codebooks
+
+    n, d = 3000, 16
+    X = np.random.default_rng(3).normal(size=(n, d)).astype(np.float32)
     df = spark.createDataFrame(
-        [(i, X[i].tolist(), labels[i]) for i in range(len(X))],
-        "vec_id long, embedding array<float>, label int",
+        [(i, X[i].tolist()) for i in range(n)],
+        "vec_id long, embedding array<float>",
     )
-    df.coalesce(1).write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
+    md5_order = sorted(
+        range(n), key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i)
+    )
+    drawn = []
+    md5_sample = vector.md5_sample
 
-    k, n_queries = 5, 30
-    approx: dict = {}
-    for r in build_and_search(spark, d, k=k, n_queries=n_queries).collect():
-        approx.setdefault(r.query_id, set()).add(r.neighbor_id)
+    def spy(corpus, limit):
+        drawn.append(md5_sample(corpus, limit))
+        return drawn[-1]
 
-    # exact ground truth in numpy (corpus is tiny)
-    Xq = X.astype(np.float64)
-    D = Xq @ Xq.T
-    np.fill_diagonal(D, -np.inf)
-    hits = total = 0
-    for q in range(n_queries):
-        true = set(np.argsort(-np.round(D[q], 6))[:k].tolist())
-        hits += len(approx[q] & true)
-        total += k
-    recall = hits / total
-    assert recall >= 0.9, f"recall@{k} = {recall:.2f}"
+    monkeypatch.setattr(vector, "md5_sample", spy)
+
+    seed = train_centroids(df, k=N_CELLS, iters=0)
+    ivf_rows = vector.POINTS_PER_CENTROID * N_CELLS
+    assert ivf_rows == 2560 < n
+    assert np.array_equal(drawn[0], X[md5_order[:ivf_rows]])
+    assert np.array_equal(seed, X[md5_order[:N_CELLS]])
+
+    train_codebooks(df, d)
+    pq_rows = min(n, vector.POINTS_PER_CENTROID * K_SUB)
+    assert len(drawn) == 2
+    assert np.array_equal(drawn[1], X[md5_order[:pq_rows]])
 
 
-def test_ivf_driver_collects_are_bounded(spark):
-    """Memory-posture pin (VERDICT r3 item 8): every driver-side
-    materialization in the IVF build is provably bounded — a future
-    edit must not silently make one corpus-sized.
+def test_empty_corpus_has_no_training_vectors(spark, tmp_path):
+    """A 0-row embeddings table fails every trainer with one clear
+    error, not numpy's from inside the seed draw."""
+    import pyarrow.parquet as pq
+    import pytest
 
-    - seed draw: exactly k rows (LIMIT k)
-    - per-iteration partials: ≤ n_partitions × k rows, each carrying d
-      doubles — independent of corpus row count
-    """
     from aws_seismic_data_pipeline_spark.llm.ivf import (
-        partials_pass,
-        seed_centroids,
+        build_index_from,
+        sim_topk_ivf,
     )
+    from aws_seismic_data_pipeline_spark.llm.pq import train_codebooks
 
-    emb = load_table(spark, SF_DIR, "embeddings")
-    n_corpus = emb.count()
-
-    C = seed_centroids(emb, k=N_CELLS)
-    assert C.shape[0] == N_CELLS  # never more than k rows collected
-
-    d = C.shape[1]
-    partials = partials_pass(emb, C, k=N_CELLS, d=d)
-    n_partitions = emb.rdd.getNumPartitions()
-    n_rows = partials.count()
-    assert n_rows <= n_partitions * N_CELLS, (
-        f"partials collect is {n_rows} rows — exceeds the "
-        f"n_partitions×k = {n_partitions * N_CELLS} memory contract"
-    )
-    assert n_rows < n_corpus  # and is never corpus-shaped
+    table = pq.read_table(f"{SF_DIR}/embeddings.parquet")
+    pq.write_table(table.slice(0, 0), tmp_path / "embeddings.parquet")
+    empty = load_table(spark, str(tmp_path), "embeddings")
+    with pytest.raises(ValueError, match="no training vectors"):
+        sim_topk_ivf(spark, str(tmp_path))
+    with pytest.raises(ValueError, match="no training vectors"):
+        build_index_from(empty, str(tmp_path / "index"))
+    with pytest.raises(ValueError, match="no training vectors"):
+        train_codebooks(empty, 64)
 
 
 def test_persisted_index_matches_in_memory_path(spark, tmp_path):

@@ -32,7 +32,7 @@ def _rel(p: str) -> str:
 
 
 #: files allowed to contain driver-side .collect() — every site audited
-#: bounded (query-vector sets of 10-50 rows, k x d k-means partials,
+#: bounded (query-vector sets of 10-50 rows, <= 256 x k k-means samples,
 #: 1-row coverage aggs and the 1-row count-min sketch blob, dim tables,
 #: metadata-scale manifest/path frames, per-token bucket lookups, the
 #: 2-value star-contraction round fingerprint in llm/dedup.py, and
@@ -43,6 +43,7 @@ COLLECT_ALLOWED = {
     "llm/dedup.py",
     "llm/ivf.py",
     "llm/pq.py",
+    "llm/vector.py",  # k-means training sample: <= 256 x k rows
     "operators/aggregates.py",
     "llm/search.py",
     "llm/similarity.py",
