@@ -155,9 +155,17 @@ def spread_dense(
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one fixture table with engine-canonical types."""
+    """Load one fixture table with engine-canonical types. The schema
+    is pinned from the file's footer (``footers.read_data_files``), so
+    the load runs no schema-inference job; a footer the pin cannot
+    answer (e.g. a nanosecond ``ts``, read as long under
+    ``nanosAsLong``) keeps Spark's inference."""
+    from aws_seismic_data_pipeline_spark.sources.footers import (
+        read_data_files,
+    )
+
     prepare(spark, sf_dir)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_data_files(spark, [f"{sf_dir}/{name}.parquet"])
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # nanos → micros, truncating exactly like DuckDB's TIMESTAMP cast.
         df = df.withColumn(

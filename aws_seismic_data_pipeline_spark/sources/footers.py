@@ -140,14 +140,40 @@ def _as_nullable(dt):
     return dt
 
 
+def _arrow_pins(t) -> bool:
+    """Whether Spark's parquet inference reads a pyarrow-written leaf
+    of Arrow type ``t`` as exactly ``from_arrow_type(t)``: bool, signed
+    ints, float/double, string, date32, ``timestamp[us]`` (NTZ without
+    a zone), decimal128 and lists of these. Anything else — nanosecond
+    timestamps (read as long under ``nanosAsLong``), unsigned ints
+    (widened), binary, int96, large or dictionary types — is left to
+    inference."""
+    import pyarrow.types as pt
+
+    if pt.is_list(t):
+        return _arrow_pins(t.value_type)
+    return (
+        pt.is_boolean(t)
+        or pt.is_signed_integer(t)
+        or pt.is_float32(t)
+        or pt.is_float64(t)
+        or pt.is_string(t)
+        or pt.is_date32(t)
+        or (pt.is_timestamp(t) and t.unit == "us")
+        or pt.is_decimal128(t)
+    )
+
+
 def footer_schema(path: str):
-    """The Spark ``StructType`` one local data file's footer records
-    (Spark's row metadata, made nullable) — exactly what schema
-    inference derives from that footer, read with pyarrow on the
-    driver (the footer's KBs, no Spark job). None when the path is not
-    a plain local path, the footer carries no Spark row metadata
-    (files written by pyarrow or DuckDB: inference would convert the
-    parquet schema under session settings) or the read fails."""
+    """The Spark ``StructType`` one local data file's footer records,
+    made nullable — exactly what schema inference derives from that
+    footer, read with pyarrow on the driver (the footer's KBs, no Spark
+    job). A file Spark wrote carries its row schema in the footer's
+    Spark row metadata; a file without it (pyarrow, DuckDB) is
+    converted from its Arrow schema when every leaf type is one
+    inference reads as-is (:func:`_arrow_pins`). None when the path is
+    not a plain local path, a leaf type is outside that set or the
+    read fails."""
     import json
     import urllib.parse
 
@@ -155,24 +181,51 @@ def footer_schema(path: str):
         return None
     try:
         import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import from_arrow_schema
         from pyspark.sql.types import StructType
 
         raw = (pq.read_metadata(path).metadata or {}).get(_SPARK_ROW_METADATA)
-        if raw is None:
+        if raw is not None:
+            return _as_nullable(StructType.fromJson(json.loads(raw)))
+        arrow = pq.read_schema(path)
+        if not all(_arrow_pins(f.type) for f in arrow):
             return None
-        return _as_nullable(StructType.fromJson(json.loads(raw)))
+        return _as_nullable(from_arrow_schema(arrow, prefer_timestamp_ntz=True))
     except Exception:
         return None
+
+
+def one_split(spark: SparkSession, paths: list[str]) -> bool:
+    """Whether Spark scans ``paths`` as exactly one split: one local
+    file no larger than min(``spark.sql.files.maxPartitionBytes``,
+    ``spark.sql.files.openCostInBytes``), both read from the session's
+    SQLConf. Spark's ``FilePartition.maxSplitBytes`` is never below
+    that minimum, so such a file is never split and its scan is one
+    task whatever the session's parallelism. A caller may then declare
+    the scan one partition (``coalesce(1)``, a no-op for the scan)
+    so that a global aggregate, sort or limit over it plans no
+    exchange. More than one file, a URI path or a bigger file: False."""
+    import urllib.parse
+
+    if len(paths) != 1 or urllib.parse.urlparse(paths[0]).scheme:
+        return False
+    conf = spark._jsparkSession.sessionState().conf()
+    bound = min(conf.filesMaxPartitionBytes(), conf.filesOpenCostInBytes())
+    try:
+        return os.path.getsize(paths[0]) <= bound
+    except OSError:
+        return False
 
 
 def read_data_files(
     spark: SparkSession, paths: list[str], merge_schema: bool = False
 ) -> DataFrame:
-    """``spark.read.parquet(*paths)`` over table data files with the
-    data schema PINNED from their footers instead of inferred. Spark's
+    """``spark.read.parquet(*paths)`` over data files with the data
+    schema PINNED from their footers instead of inferred. Spark's
     inference runs a footer-reading job for every read (over one file
-    without ``mergeSchema``, over all of them with it); the table's
-    files already carry the answer.
+    without ``mergeSchema``, over all of them with it); the files
+    already carry the answer, whether Spark wrote them or pyarrow did
+    (:func:`footer_schema`).
 
     Without ``merge_schema`` inference reads the FIRST path's footer,
     so pinning that footer's schema is the same schema by construction.

@@ -31,6 +31,7 @@ from aws_seismic_data_pipeline_spark.sources.footers import (
     _decode_input_file,
     commit_scale,
     fan_out,
+    one_split,
     rangekey_write,
     read_data_files,
 )
@@ -387,7 +388,13 @@ def _pruned_scan(
     residual predicate pushed down. Only the surviving paths reach the
     driver. An empty result keeps the data schema from the smallest
     visible file, chosen BEFORE the partition filter (a filter that
-    matches nothing still has a table schema)."""
+    matches nothing still has a table schema). When the survivors are
+    one local file within min(maxPartitionBytes, openCostInBytes)
+    (:func:`footers.one_split`) the scan is one split anyway, and it is
+    declared one partition (``coalesce(1)`` after the residual
+    filters), so a global aggregate, sort or limit over it runs as one
+    job with no exchange; a bigger file or several keep the plain
+    scan."""
     lman = localman.frame(manifest_dir, lman)
     localman.check_floor(manifest_dir, as_of, lman)
 
@@ -407,6 +414,8 @@ def _pruned_scan(
     out = read_data_files(spark, matching, merge_schema)
     for column, (lo, hi) in predicates.items():
         out = out.filter(F.col(column).between(lo, hi))
+    if one_split(spark, matching):
+        out = out.coalesce(1)
     return out
 
 
@@ -456,7 +465,11 @@ def manifest_pruned_scan(
     (:func:`footers.read_data_files`), so opening them runs no
     schema-inference job; ``merge_schema`` (post-evolution tables mix
     physical schemas — pre-ADD files lack the new column) unions the
-    files' schemas instead whenever they disagree."""
+    files' schemas instead whenever they disagree. A scan pruned to one
+    local file no larger than min(``spark.sql.files.maxPartitionBytes``,
+    ``spark.sql.files.openCostInBytes``) — which Spark never splits —
+    is declared one partition (:func:`footers.one_split`), so a point
+    read plus a global aggregate is one Spark job with no shuffle."""
     return _pruned_scan(
         spark,
         manifest_dir,

@@ -1467,9 +1467,10 @@ def test_governed_scan_starts_no_spark_job(spark, tmp_path):
 
 
 def test_pyarrow_written_file_reads_through_fallback(spark, tmp_path):
-    """A table file written without Spark's row metadata (pyarrow,
-    DuckDB) cannot pin its schema; scans and the change feed fall back
-    to inference and still read it."""
+    """A table file written without Spark's row metadata whose Arrow
+    types inference does not read as-is (here an unsigned key, which
+    Spark widens) cannot pin its schema; scans and the change feed fall
+    back to inference and still read it."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -1483,7 +1484,7 @@ def test_pyarrow_written_file_reads_through_fallback(spark, tmp_path):
     pq.write_table(
         pa.table(
             {
-                "o_orderkey": pa.array([9_000_001, 9_000_002], pa.int64()),
+                "o_orderkey": pa.array([9_000_001, 9_000_002], pa.uint32()),
                 "o_orderstatus": ["P", "P"],
                 "o_totalprice": [1.5, 2.5],
             }
@@ -1502,6 +1503,187 @@ def test_pyarrow_written_file_reads_through_fallback(spark, tmp_path):
     # a merged read over files that disagree keeps the mergeSchema read
     mixed = read_data_files(spark, [t.visible_files()[0], path], True)
     assert mixed.count() == mixed.filter("o_orderkey > 0").count()
+
+
+def test_pyarrow_footer_derives_inferred_schema(spark, tmp_path):
+    """A footer without Spark row metadata pins the Arrow schema's
+    conversion exactly when every leaf type is one inference reads
+    as-is — and that conversion equals ``spark.read.parquet``'s schema
+    on every fixture table and on each pinned type. Unsigned ints,
+    nanosecond timestamps and binary fall back (None)."""
+    import datetime as dt
+    import decimal
+    import glob as _glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from aws_seismic_data_pipeline_spark.catalog import load_table
+    from aws_seismic_data_pipeline_spark.sources.footers import footer_schema
+
+    fixtures = sorted(_glob.glob(f"{SF_DIR}/*.parquet"))
+    assert fixtures
+    for p in fixtures:
+        assert footer_schema(p) == spark.read.parquet(p).schema, p
+    ts = dt.datetime(2024, 1, 2, 3, 4, 5, 6)
+    pinned = {
+        "b": pa.array([True], pa.bool_()),
+        "i8": pa.array([1], pa.int8()),
+        "i16": pa.array([1], pa.int16()),
+        "i32": pa.array([1], pa.int32()),
+        "i64": pa.array([1], pa.int64()),
+        "f32": pa.array([1.5], pa.float32()),
+        "f64": pa.array([1.5], pa.float64()),
+        "s": pa.array(["x"], pa.string()),
+        "d": pa.array([dt.date(2024, 1, 2)], pa.date32()),
+        "ts": pa.array([ts], pa.timestamp("us")),
+        "tsz": pa.array([ts], pa.timestamp("us", tz="UTC")),
+        "dec": pa.array([decimal.Decimal("1.25")], pa.decimal128(12, 2)),
+        "li": pa.array([[1, None]], pa.list_(pa.int64())),
+        "ls": pa.array([["a"]], pa.list_(pa.string())),
+    }
+    for name, col in pinned.items():
+        p = str(tmp_path / f"pin_{name}.parquet")
+        pq.write_table(pa.table({"k": pa.array([1], pa.int64()), name: col}), p)
+        got = footer_schema(p)
+        assert got is not None and got == spark.read.parquet(p).schema, name
+    inferred = {
+        "u32": pa.array([1], pa.uint32()),
+        "u64": pa.array([1], pa.uint64()),
+        "ns": pa.array([ts], pa.timestamp("ns")),
+        "bin": pa.array([b"x"], pa.binary()),
+        "lu": pa.array([[1]], pa.list_(pa.uint8())),
+    }
+    for name, col in inferred.items():
+        p = str(tmp_path / f"infer_{name}.parquet")
+        pq.write_table(pa.table({"k": pa.array([1], pa.int64()), name: col}), p)
+        assert footer_schema(p) is None, name
+    # load_table pins: loading a fixture table runs no Spark job
+    from perfbench.harness import StatusCounters
+
+    counters = StatusCounters(spark)
+    orders = load_table(spark, SF_DIR, "orders")
+    assert counters.delta()["jobs"] == 0
+    assert orders.schema == spark.read.parquet(f"{SF_DIR}/orders.parquet").schema
+
+
+def _write_random(path, n_rows, seed):
+    """One pyarrow file of incompressible doubles, about 8 bytes a row,
+    written in several row groups."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(seed)
+    pq.write_table(
+        pa.table({"x": rng.random(n_rows)}),
+        path,
+        row_group_size=max(1, n_rows // 8),
+        compression="none",
+    )
+    return path
+
+
+def test_one_split_agrees_with_spark_planner(spark, tmp_path):
+    """Whenever ``one_split`` says yes, Spark's own planner scans the
+    file as one partition — for single files on both sides of
+    min(maxPartitionBytes, openCostInBytes), with maxPartitionBytes
+    below and above the open cost (``prepare`` sets it as low as
+    1 MB). Two or more files are never one split."""
+    import os
+
+    from aws_seismic_data_pipeline_spark.sources.footers import (
+        one_split,
+        read_data_files,
+    )
+
+    mb = 1024 * 1024
+    files = [
+        _write_random(str(tmp_path / f"f{i}.parquet"), n, i)
+        for i, n in enumerate((20_000, 200_000, 400_000, 800_000))
+    ]
+    sizes = [os.path.getsize(f) for f in files]
+    keys = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+    saved = {k: spark.conf.get(k) for k in keys}
+    said_yes = said_no = 0
+    try:
+        for max_part, open_cost in (
+            (mb, 4 * mb),
+            (128 * mb, 4 * mb),
+            (2 * mb, 4 * mb),
+            (4 * mb, 2 * mb),
+            (128 * mb, 2 * mb),
+        ):
+            spark.conf.set(keys[0], str(max_part))
+            spark.conf.set(keys[1], str(open_cost))
+            bound = min(max_part, open_cost)
+            for f, size in zip(files, sizes):
+                yes = one_split(spark, [f])
+                assert yes == (size <= bound), (f, size, bound)
+                n = read_data_files(spark, [f]).rdd.getNumPartitions()
+                if yes:
+                    said_yes += 1
+                    assert n == 1, (size, max_part, open_cost)
+                else:
+                    said_no += 1
+                    if size > max_part:
+                        assert n > 1, (size, max_part, open_cost)
+            assert not one_split(spark, files[:2])
+            assert not one_split(spark, [files[0], files[0]])
+            assert not one_split(spark, ["file://" + files[0]])
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert said_yes and said_no
+
+
+def test_one_file_point_read_is_one_job(spark, tmp_path, monkeypatch):
+    """A point read pruned to one small file plus a global aggregate
+    runs as ONE Spark job with no shuffle, keeps the key predicate
+    pushed into the Parquet scan, and returns what the undeclared scan
+    returns; a 20 % range over several files keeps its exchange."""
+    from perfbench.harness import StatusCounters
+
+    from aws_seismic_data_pipeline_spark.sources.table import manifest
+
+    from .test_plan_shapes import _plan
+
+    orders, t = _orders_table(spark, tmp_path)
+    keys = sorted(r.o_orderkey for r in orders.select("o_orderkey").collect())
+    k = keys[len(keys) // 2]
+    aggs = (F.count(F.lit(1)).alias("n"), F.sum("o_totalprice").alias("s"))
+    counters = StatusCounters(spark)
+
+    point = t.scan(k, k)
+    assert len(point.inputFiles()) == 1
+    plan = _plan(point.agg(*aggs))
+    assert "Exchange" not in plan and "Coalesce 1" in plan
+    pushed = plan[plan.index("PushedFilters:") :].split("]")[0]
+    assert "o_orderkey" in pushed, plan
+    counters.mark()
+    got = point.agg(*aggs).collect()
+    d = counters.delta()
+    assert d["jobs"] == 1, d
+    assert d["shuffle_write_bytes"] == 0 == d["shuffle_read_bytes"], d
+
+    # the same read without the declaration
+    monkeypatch.setattr(manifest, "one_split", lambda spark, paths: False)
+    plain = t.scan(k, k)
+    assert "Coalesce" not in _plan(plain.agg(*aggs))
+    assert got == plain.agg(*aggs).collect()
+    assert got[0].n == 1
+    monkeypatch.undo()
+
+    lo, hi = keys[len(keys) // 10], keys[len(keys) * 3 // 10]
+    wide = t.scan(lo, hi)
+    assert len(wide.inputFiles()) > 1
+    wide_plan = _plan(wide.agg(*aggs))
+    assert "Exchange SinglePartition" in wide_plan
+    assert "Coalesce" not in wide_plan
+    counters.mark()
+    n = wide.agg(*aggs).collect()[0].n
+    assert counters.delta()["jobs"] >= 2
+    assert n == orders.filter(F.col("o_orderkey").between(lo, hi)).count()
 
 
 def test_read_evolved_unchanged_around_add_column(spark, tmp_path):

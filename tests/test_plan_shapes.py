@@ -245,3 +245,42 @@ def test_constraint_gate_is_one_map_side_pass(spark, tmp_path):
     # exactly the partial->final combine exchange, nothing else
     assert plan.count("Exchange") <= 1
     assert "HashAggregate" in plan
+
+
+def test_one_file_pruned_scan_plans_no_exchange(spark, tmp_path):
+    """A governed scan pruned to one small file is declared one
+    partition (``footers.one_split``), so a global aggregate, sort or
+    limit over it plans no exchange: the query is one job. A range
+    over several files keeps the plain scan and its exchange — the
+    declaration never funnels a multi-file frame through one task."""
+    from pyspark.sql import functions as F
+
+    from aws_seismic_data_pipeline_spark.sources.table.facade import (
+        GovernedTable,
+    )
+
+    orders = spark.read.parquet(f"{SF_DIR}/orders.parquet").select(
+        "o_orderkey", "o_totalprice"
+    )
+    t = GovernedTable.create(
+        spark,
+        orders,
+        str(tmp_path / "d"),
+        str(tmp_path / "m"),
+        "o_orderkey",
+        n_files=8,
+    )
+    k = orders.agg(F.min("o_orderkey")).first()[0]
+    point = t.scan(k, k)
+    for q in (
+        point.agg(F.sum("o_totalprice")),
+        point.orderBy("o_totalprice"),
+        point.limit(1),
+    ):
+        plan = _plan(q, "simple")
+        assert "Exchange" not in plan, plan
+        assert "Coalesce 1" in plan, plan
+    wide = t.scan(-(2**62), 2**62)
+    plan = _plan(wide.agg(F.sum("o_totalprice")), "simple")
+    assert "Exchange SinglePartition" in plan
+    assert "Coalesce" not in plan

@@ -205,10 +205,14 @@ def test_no_split_inside_sql_lambdas():
     assert not offenders, sorted(offenders)
 
 
-#: sources/table/ reads that are not table DATA files, so they never
-#: go through ``footers.read_data_files`` — besides the manifest
-#: reads, which open ``_mdd(...)`` and are recognised by that call
+#: sources/table/ and catalog.py reads that are not table DATA or
+#: fixture files, so they never go through ``footers.read_data_files``
+#: — besides the manifest reads, which open ``_mdd(...)`` and are
+#: recognised by that call
 NON_DATA_READS = {
+    # the engine's own artifact directories (indexes, manifests),
+    # possibly partitioned: the partition columns come from the paths
+    ("catalog.py", "compact_parquet_dir"),
     # sketch / bloom manifests: metadata tables of their own
     ("sources/table/sketches.py", "sketch_merged_ndv"),
     ("sources/table/sketches.py", "bloom_pruned_scan"),
@@ -256,17 +260,18 @@ def _parquet_reads(tree):
 
 
 def test_table_data_reads_pin_their_schema():
-    """Every read of governed-table data files goes through
-    ``footers.read_data_files``, which pins the data schema from the
-    files' footers instead of running Spark's schema inference per
-    read. Manifest reads (``_mdd(...)``) and the audited non-data
-    reads in NON_DATA_READS are exempt."""
+    """Every read of governed-table data files, and every fixture-table
+    load (``catalog.py``), goes through ``footers.read_data_files``,
+    which pins the data schema from the files' footers instead of
+    running Spark's schema inference per read. Manifest reads
+    (``_mdd(...)``) and the audited non-data reads in NON_DATA_READS
+    are exempt."""
     offenders = []
     for p in _py_files():
         rel = _rel(p)
         if not (
             rel.startswith("sources/table/")
-            or rel == "streaming/cdf_consumer.py"
+            or rel in ("streaming/cdf_consumer.py", "catalog.py")
         ):
             continue
         for func, arg in _parquet_reads(ast.parse(open(p).read())):
